@@ -36,6 +36,20 @@ object GraftConf {
   private def get(key: String): Option[String] =
     SparkSession.getActiveSession.flatMap(s => Option(s.conf.get(key, null)))
 
+  /** A Long conf value; a malformed one fails naming the key. */
+  private def long(key: String): Option[Long] = get(key).map { s =>
+    try s.toLong catch {
+      case _: NumberFormatException =>
+        throw new IllegalArgumentException(s"$key must be an integer, got '$s'")
+    }
+  }
+
+  /** A driver-tail edge threshold: 0 disables the tail, negatives fail. */
+  private def threshold(key: String): Option[Long] = long(key).map { n =>
+    require(n >= 0, s"$key must be >= 0 (0 disables the driver tail), got $n")
+    n
+  }
+
   /** `false` routes every iterative algorithm's lineage cut through a
    * reliable `checkpoint()` into `SparkContext.getCheckpointDir` (set it
    * first) instead of executor-local blocks. */
@@ -59,19 +73,20 @@ object GraftConf {
   def ccStorageLevel: Option[StorageLevel] =
     get(CcStorageLevelKey).map(s => StorageLevel.fromString(s.toUpperCase))
 
-  def ccSmallGraphThreshold: Option[Long] = get(CcSmallGraphThresholdKey).map(_.toLong)
+  def ccSmallGraphThreshold: Option[Long] = threshold(CcSmallGraphThresholdKey)
 
   /** Max degree of the canonical (undirected, simple) graph above which
    * triangleCount switches from full-neighbor-set intersection to the
    * degree-oriented skew-safe path (see lib/TriangleCount.scala). */
-  def triangleHubThreshold: Option[Long] = get(TriangleHubThresholdKey).map(_.toLong)
+  def triangleHubThreshold: Option[Long] = long(TriangleHubThresholdKey)
 
-  /** Edge count below which Hits/Katz finish their power iteration in one
-   * bounded driver job instead of per-round distributed supersteps (same
-   * pattern and rationale as the connected-components union-find tail;
-   * 0 disables; full bounded-path matrix: docs/THRESHOLDS.md). */
+  /** Edge count at or below which every link-analysis builder mixing in
+   * [[graft.lib.LocalTail]] finishes on the driver instead of per-round
+   * distributed supersteps (same pattern and rationale as the
+   * connected-components union-find tail; 0 disables; full bounded-path
+   * matrix: docs/THRESHOLDS.md). */
   def linkAnalysisSmallGraphThreshold: Option[Long] =
-    get(LinkAnalysisSmallGraphThresholdKey).map(_.toLong)
+    threshold(LinkAnalysisSmallGraphThresholdKey)
 
   /** Source count above which an EXACT (unsampled) distributed
    * Betweenness/Closeness/Eccentricity run fails loudly instead of
@@ -80,13 +95,13 @@ object GraftConf {
    * force the exact run. Default 100,000 sources
    * (docs/THRESHOLDS.md row 2). */
   def centralityRequireSampledAbove: Option[Long] =
-    get(CentralityRequireSampledAboveKey).map(_.toLong)
+    long(CentralityRequireSampledAboveKey)
 
   /** Fail-loud budget on SimRank's sparse pair state per round — all-pairs
    * similarity can approach O(V²) rows on dense structure; the guard
    * names the fix (minSim pruning or top-k similarity) instead of
    * melting the cluster. 0 disables (docs/THRESHOLDS.md). */
-  def simRankMaxPairs: Option[Long] = get(SimRankMaxPairsKey).map(_.toLong)
+  def simRankMaxPairs: Option[Long] = long(SimRankMaxPairsKey)
 
   /** Fail-loud cap on per-document token count for the exact LCE span
    * dedup ([[graft.pipeline.Text.dupSpansMaximal]]): per-pair extension
@@ -95,5 +110,5 @@ object GraftConf {
    * the fixes (split the document, or the shelved prefix-doubling
    * construction). 0 disables (docs/THRESHOLDS.md). */
   def dupSpansMaxDocTokens: Option[Long] =
-    get(DupSpansMaxDocTokensKey).map(_.toLong)
+    long(DupSpansMaxDocTokensKey)
 }

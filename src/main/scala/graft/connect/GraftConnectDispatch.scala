@@ -245,6 +245,14 @@ object GraftConnectDispatch {
       case JLong(l) if l.isValidInt => l.toInt
       case JDouble(d) if d.isWhole && d >= Int.MinValue && d <= Int.MaxValue => d.toInt
     }
+    def long(k: String): Option[Long] = typed(k, "a 64-bit integer") {
+      case JInt(i) if i.isValidLong => i.toLong
+      case JLong(l) => l
+      // every whole double in [-2^63, 2^63) converts exactly
+      case JDouble(d) if d.isWhole && d >= -9.223372036854775808e18 &&
+          d < 9.223372036854775808e18 => d.toLong
+    }
+    def bool(k: String): Option[Boolean] = typed(k, "a boolean") { case JBool(b) => b }
     def dbl(k: String): Option[Double] = typed(k, "a number") {
       case JDouble(d) => d
       case JInt(i) => i.toDouble
@@ -287,8 +295,7 @@ object GraftConnectDispatch {
           on = strList("on"), leftTs = required("leftTs"),
           rightTs = required("rightTs"), rightCols = strList("rightCols"),
           prefix = str("prefix").getOrElse("asof_"),
-          strict = typed("strict", "a boolean") { case JBool(b) => b }
-            .getOrElse(false),
+          strict = bool("strict").getOrElse(false),
           direction = str("direction").getOrElse("backward"))
       }
       if (algorithm == "pipe_range_join") {
@@ -403,11 +410,10 @@ object GraftConnectDispatch {
             maxBucket = int("maxBucket").getOrElse(256))
         case "pipe_segment_dedup" =>
           Dedup.segmentDedup(t, id, text,
-            sep = params.get("sep").collect { case JString(s) => s }.getOrElse("\n"),
+            sep = str("sep").getOrElse("\n"),
             windowWords = int("windowWords").getOrElse(0),
             maxDupCount = int("maxDupCount").getOrElse(1).toLong,
-            lowercase = params.get("lowercase")
-              .collect { case JBool(b) => b }.getOrElse(false))
+            lowercase = bool("lowercase").getOrElse(false))
         case "pipe_semantic_dedup" =>
           Dedup.semanticDedup(t, id, vec,
             threshold = dbl("threshold").getOrElse(throw new IllegalArgumentException(
@@ -427,19 +433,13 @@ object GraftConnectDispatch {
           Sampling.hashSample(t, id,
             fraction = dbl("fraction").getOrElse(throw new IllegalArgumentException(
               "pipe_hash_sample requires params_json key 'fraction'")),
-            seed = params.get("seed").collect {
-              case JInt(i) => i.toLong
-              case JLong(l) => l
-            }.getOrElse(42L))
+            seed = long("seed").getOrElse(42L))
         case "pipe_importance_sample" =>
           Sampling.importanceSample(t, id, required("weightCol"),
             targetFraction = dbl("targetFraction").getOrElse(
               throw new IllegalArgumentException(
                 "pipe_importance_sample requires params_json key 'targetFraction'")),
-            seed = params.get("seed").collect {
-              case JInt(i) => i.toLong
-              case JLong(l) => l
-            }.getOrElse(42L))
+            seed = long("seed").getOrElse(42L))
         case "pipe_mixture_sample" =>
           val fractions = params.get("fractions") match {
             case Some(JObject(kvs)) => kvs.map {
@@ -453,10 +453,7 @@ object GraftConnectDispatch {
                 "(object of stratum -> fraction)")
           }
           Sampling.mixtureSample(t, id, required("strataCol"), fractions,
-            seed = params.get("seed").collect {
-              case JInt(i) => i.toLong
-              case JLong(l) => l
-            }.getOrElse(42L))
+            seed = long("seed").getOrElse(42L))
         case "pipe_hash_split" =>
           val fractions = params.get("fractions") match {
             case Some(JObject(kvs)) => kvs.map {
@@ -470,19 +467,13 @@ object GraftConnectDispatch {
                 "(object of split -> fraction, summing to 1)")
           }
           Sampling.hashSplit(t, id, fractions,
-            seed = params.get("seed").collect {
-              case JInt(i) => i.toLong
-              case JLong(l) => l
-            }.getOrElse(42L))
+            seed = long("seed").getOrElse(42L))
         case "pipe_shuffle_shards" =>
           Sampling.shuffleShards(t, id,
             numShards = int("numShards").getOrElse(throw
               new IllegalArgumentException(
                 "pipe_shuffle_shards requires params_json key 'numShards'")),
-            seed = params.get("seed").collect {
-              case JInt(i) => i.toLong
-              case JLong(l) => l
-            }.getOrElse(42L))
+            seed = long("seed").getOrElse(42L))
         case "pipe_bigram_lm" =>
           Text.bigramLmScore(t, id, text, alpha = dbl("alpha").getOrElse(0.5))
         case "pipe_nb_classifier" =>
@@ -490,7 +481,7 @@ object GraftConnectDispatch {
             str("labelCol").getOrElse(throw new IllegalArgumentException(
               "pipe_nb_classifier requires params_json key 'labelCol'")),
             trainFraction = dbl("trainFraction").getOrElse(0.75),
-            seed = int("seed").map(_.toLong).getOrElse(42L))
+            seed = long("seed").getOrElse(42L))
         case "pipe_bpe_train" =>
           Tokenizer.bpeTrain(t, text, numMerges = int("numMerges").getOrElse(10))
         case "pipe_bpe_encode" =>
@@ -502,8 +493,7 @@ object GraftConnectDispatch {
           Similarity.topK(t, id, vec, k = int("k").getOrElse(10))
         case "pipe_knn_graph" =>
           Similarity.knnGraph(t, id, vec, k = int("k").getOrElse(10),
-            mutual = typed("mutual", "a boolean") { case JBool(b) => b }
-              .getOrElse(true))
+            mutual = bool("mutual").getOrElse(true))
         case "pipe_funnel" =>
           val steps = params.get("steps") match {
             case Some(JArray(vs)) => vs.map {
@@ -541,7 +531,7 @@ object GraftConnectDispatch {
               "pipe_cms_topk requires params_json key 'k'")),
             depth = int("depth").getOrElse(4),
             width = int("width").getOrElse(1024),
-            seed = int("seed").map(_.toLong).getOrElse(42L))
+            seed = long("seed").getOrElse(42L))
         case "pipe_fuzzy_pairs" =>
           // 'blockExprs' (array) takes the multi-pass blocking overload;
           // 'blockExpr' keeps the single-key path
@@ -575,10 +565,7 @@ object GraftConnectDispatch {
             buckets = int("buckets").getOrElse(1024),
             alpha = dbl("alpha").getOrElse(0.5))
         case "pipe_budget_select" =>
-          val budget = params.get("budget").collect {
-            case JInt(i) => i.toLong
-            case JLong(l) => l
-          }.getOrElse(throw new IllegalArgumentException(
+          val budget = long("budget").getOrElse(throw new IllegalArgumentException(
             "pipe_budget_select requires params_json key 'budget' (tokens per group)"))
           val tokenCol = required("tokenCol")
           Sampling.budgetSelect(t, id, required("groupCol"), tokenCol,
@@ -693,12 +680,12 @@ object GraftConnectDispatch {
             groupCol = required("groupCol"), idCol = required("idCol"),
             k = int("k").getOrElse(throw new IllegalArgumentException(
               "pipe_group_sample requires params_json key 'k'")),
-            seed = int("seed").map(_.toLong).getOrElse(42L))
+            seed = long("seed").getOrElse(42L))
         case "pipe_weighted_sample" =>
           Sampling.weightedSample(t, id, required("weightCol"),
             k = int("k").getOrElse(throw new IllegalArgumentException(
               "pipe_weighted_sample requires params_json key 'k'")),
-            seed = int("seed").map(_.toLong).getOrElse(42L),
+            seed = long("seed").getOrElse(42L),
             maxWeight = int("maxWeight").getOrElse(4096))
         case "pipe_rate_spikes" =>
           // batch twin of the streaming spike detector: hourly per-type
@@ -720,7 +707,7 @@ object GraftConnectDispatch {
               "pipe_label_spread requires params_json key 'labelCol'")),
             k = int("k").getOrElse(5), rounds = int("rounds").getOrElse(3),
             seedFraction = dbl("seedFraction").getOrElse(0.5),
-            seed = int("seed").map(_.toLong).getOrElse(42L))
+            seed = long("seed").getOrElse(42L))
         case "pipe_ann_ivf_hier" =>
           Similarity.ivfTopKHier(t, id, vec, k = int("k").getOrElse(10),
             nsuper = int("nsuper").getOrElse(16),
@@ -815,8 +802,7 @@ object GraftConnectDispatch {
         str("stoppingCondition").map(expr).foreach(an.setStoppingCondition)
         str("targetCondition").map(expr).foreach(an.setTargetCondition)
         str("edgeFilter").map(expr).foreach(an.setEdgeFilter)
-        typed("removeLoops", "a boolean") { case JBool(b) => b }
-          .foreach(an.setRemoveLoops)
+        bool("removeLoops").foreach(an.setRemoveLoops)
         strList("requiredVertexAttributes").foreach(an.setRequiredVertexAttributes)
         strList("requiredEdgeAttributes").foreach(an.setRequiredEdgeAttributes)
         an.run()
@@ -854,16 +840,14 @@ object GraftConnectDispatch {
         }
         val sp = g.shortestPaths.landmarks(ls)
         int("maxIter").foreach(sp.maxIter)
-        typed("isDirected", "a boolean") { case JBool(b) => b }
-          .foreach(sp.setDirected)
+        bool("isDirected").foreach(sp.setDirected)
         str("weightCol").foreach(sp.weightCol)
         sp.run()
       case "label_propagation" =>
         val lp = g.labelPropagation
         int("maxIter").foreach(lp.maxIter)
         str("algorithm").foreach(lp.setAlgorithm)
-        typed("isDirected", "a boolean") { case JBool(b) => b }
-          .foreach(lp.setDirected)
+        bool("isDirected").foreach(lp.setDirected)
         lp.run()
       case "triangle_count" =>
         val tc = g.triangleCount
@@ -891,7 +875,7 @@ object GraftConnectDispatch {
         dbl("p").foreach(ic.p)
         int("hashSeed").foreach(s => ic.hashSeed(s.toLong))
         int("maxIter").foreach(ic.maxIter)
-        int("smallGraphThreshold").foreach(n => ic.setSmallGraphThreshold(n.toLong))
+        long("smallGraphThreshold").foreach(ic.setSmallGraphThreshold)
         val icSeeds = params.get("seeds") match {
           case Some(JArray(vs)) => vs.map(idValue)
           case _ => throw new IllegalArgumentException(
@@ -902,8 +886,7 @@ object GraftConnectDispatch {
         graft.sources.GraphLoader.toDotLines(g, str("name").getOrElse("g"))
       case "to_graphml" =>
         graft.sources.GraphLoader.toGraphMLLines(g,
-          directed = typed("directed", "a boolean") { case JBool(b) => b }
-            .getOrElse(true))
+          directed = bool("directed").getOrElse(true))
       case "temporal_reachability" =>
         val tr = new graft.lib.TemporalReachability(g)
         params.get("source").foreach {
@@ -917,16 +900,16 @@ object GraftConnectDispatch {
         str("timeCol").foreach(tr.timeCol)
         str("durationCol").foreach(tr.durationCol)
         int("maxIter").foreach(tr.maxIter)
-        int("smallGraphThreshold").foreach(n => tr.setSmallGraphThreshold(n.toLong))
+        long("smallGraphThreshold").foreach(tr.setSmallGraphThreshold)
         tr.run()
       case "triangles" => graft.lib.Cliques.triangles(g)
       case "cliques4" => graft.lib.Cliques.cliques4(g)
       case "maximal_matching" =>
         val mm = g.maximalMatching
         int("maxIter").foreach(mm.maxIter)
-        int("seed").foreach(s => mm.seed(s.toLong))
+        long("seed").foreach(mm.seed)
         str("weightCol").foreach(mm.weightCol)
-        int("smallGraphThreshold").foreach(n => mm.setSmallGraphThreshold(n.toLong))
+        long("smallGraphThreshold").foreach(mm.setSmallGraphThreshold)
         mm.run()
       case "voronoi" =>
         val vseeds = params.get("seeds") match {
@@ -939,9 +922,8 @@ object GraftConnectDispatch {
         val ns = new graft.embeddings.NegativeSampling(g)
         int("k").foreach(ns.setK)
         int("candidates").foreach(ns.setCandidates)
-        int("seed").foreach(s => ns.setSeed(s.toLong))
-        typed("undirected", "a boolean") { case JBool(b) => b }
-          .foreach(ns.setUndirected)
+        long("seed").foreach(ns.setSeed)
+        bool("undirected").foreach(ns.setUndirected)
         ns.run()
       case "katz" =>
         val kz = g.katz
@@ -964,8 +946,7 @@ object GraftConnectDispatch {
         val bc = g.betweenness
         int("sampleK").foreach(bc.sampleSources)
         str("weightCol").foreach(bc.weightCol)
-        typed("normalized", "a boolean") { case JBool(b) => b }
-          .foreach(bc.normalized)
+        bool("normalized").foreach(bc.normalized)
         bc.run()
       case "closeness" =>
         val cl = g.closeness
@@ -1020,7 +1001,7 @@ object GraftConnectDispatch {
         sw.run()
       case "bridges" | "articulation_points" | "two_edge_components" =>
         val tc = g.twoConnectivity
-        int("smallGraphThreshold").foreach(n => tc.setSmallGraphThreshold(n.toLong))
+        long("smallGraphThreshold").foreach(tc.setSmallGraphThreshold)
         int("maxAncestorRows").foreach(n => tc.setMaxAncestorRows(n.toLong))
         algorithm match {
           case "bridges" => tc.bridges()
@@ -1052,11 +1033,11 @@ object GraftConnectDispatch {
       // part=vertices — a remote client fetches both with two calls
       case "sample_vertices" =>
         val sg = g.sampleVertices(dbl("fraction").getOrElse(0.1),
-          int("seed").map(_.toLong).getOrElse(42L))
+          long("seed").getOrElse(42L))
         if (str("part").contains("vertices")) sg.vertices else sg.edges
       case "sample_edges" =>
         val sg = g.sampleEdges(dbl("fraction").getOrElse(0.1),
-          int("seed").map(_.toLong).getOrElse(42L))
+          long("seed").getOrElse(42L))
         if (str("part").contains("vertices")) sg.vertices else sg.edges
       case "ktruss" =>
         val kt = g.kTruss
@@ -1076,7 +1057,7 @@ object GraftConnectDispatch {
         val gc = g.greedyColoring
         int("maxColors").foreach(gc.maxColors)
         int("maxIter").foreach(gc.maxIter)
-        int("seed").foreach(n => gc.seed(n.toLong))
+        long("seed").foreach(gc.seed)
         str("hashMode").foreach(gc.setHashMode)
         gc.run()
       case "kcore" =>
@@ -1100,13 +1081,7 @@ object GraftConnectDispatch {
         dbl("returnParam").foreach(rw.setReturnParam)
         dbl("inOutParam").foreach(rw.setInOutParam)
         str("weightCol").foreach(rw.setWeightCol)
-        params.get("seed").foreach { v =>
-          rw.setSeed(v match {
-            case JInt(i) => i.toLong
-            case JLong(l) => l
-            case other => throw new IllegalArgumentException(s"seed must be integral: $other")
-          })
-        }
+        long("seed").foreach(rw.setSeed)
         str("hashMode").foreach(rw.setHashMode)
         rw.run()
       case "power_iteration_clustering" =>
@@ -1131,17 +1106,12 @@ object GraftConnectDispatch {
           .setDim(int("dim").getOrElse(32))
           .setWalkLength(int("walkLength").getOrElse(5))
           .setNumWalksPerNode(int("walksPerVertex").getOrElse(4))
-          .setSeed(params.get("seed").collect {
-            case JInt(i) => i.toLong
-            case JLong(l) => l
-          }.getOrElse(42L))
+          .setSeed(long("seed").getOrElse(42L))
         str("sequenceModel").foreach(rwe.setSequenceModel)
         dbl("restartProbability").foreach(rwe.setRestartProbability)
         int("rwMaxNbrs").foreach(rwe.setRwMaxNbrs)
-        typed("useEdgeDirection", "a boolean") { case JBool(b) => b }
-          .foreach(rwe.setUseEdgeDirections)
-        typed("aggregateNeighbors", "a boolean") { case JBool(b) => b }
-          .foreach(rwe.setAggregateNeighbors)
+        bool("useEdgeDirection").foreach(rwe.setUseEdgeDirections)
+        bool("aggregateNeighbors").foreach(rwe.setAggregateNeighbors)
         int("aggregateNeighborsMaxNbrs").foreach(rwe.setMaxNbrs)
         int("word2vecMaxIter").foreach(rwe.setWord2VecMaxIter)
         int("word2vecWindowSize").foreach(rwe.setWord2VecWindowSize)
@@ -1150,10 +1120,8 @@ object GraftConnectDispatch {
         int("hash2vecContextSize").foreach(rwe.setHash2VecContextSize)
         str("hash2vecDecayFunction").foreach(rwe.setHash2VecDecayFunction)
         dbl("hash2vecGaussianSigma").foreach(rwe.setHash2VecGaussianSigma)
-        typed("hash2vecDoL2Norm", "a boolean") { case JBool(b) => b }
-          .foreach(rwe.setHash2VecDoL2Norm)
-        typed("hash2vecSafeL2", "a boolean") { case JBool(b) => b }
-          .foreach(rwe.setHash2VecSafeL2)
+        bool("hash2vecDoL2Norm").foreach(rwe.setHash2VecDoL2Norm)
+        bool("hash2vecSafeL2").foreach(rwe.setHash2VecSafeL2)
         rwe.run()
       case other =>
         throw new IllegalArgumentException(

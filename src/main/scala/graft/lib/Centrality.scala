@@ -160,14 +160,12 @@ private[graft] object MultiSourceBFS {
 
 /** Brandes betweenness centrality — see [[MultiSourceBFS]] for the
  * execution design. Returns vertices + `betweenness: double`. */
-class Betweenness(g: GraphFrame) {
+class Betweenness(g: GraphFrame) extends LocalTail {
   import GraphFrame.{ID, SRC, DST}
 
   private var sampleKV: Int = 0 // 0 = exact (every vertex a source)
   private var normalizedV: Boolean = false
   private var weightColV: Option[String] = None
-  private var smallGraphThresholdV: Long =
-    graft.GraftConf.linkAnalysisSmallGraphThreshold.getOrElse(100000L)
 
   /** Estimate from k deterministic sources (md5-ordered — replayable, no
    * RNG state) with the standard Brandes n/k scale-up; 0 = exact. */
@@ -185,8 +183,6 @@ class Betweenness(g: GraphFrame) {
    * on a shortest path; σ counts it once, matching the unweighted
    * distinct()). Composes with [[sampleSources]]. */
   def weightCol(c: String): this.type = { weightColV = Some(c); this }
-  /** Same bounded-driver-tail knob as [[Hits]]; docs/THRESHOLDS.md. */
-  def setSmallGraphThreshold(n: Long): this.type = { smallGraphThresholdV = n; this }
 
   def run(): DataFrame = {
     weightColV.foreach { w =>
@@ -195,15 +191,15 @@ class Betweenness(g: GraphFrame) {
         s"betweenness weightCol '$w' must be non-null and > 0 on every edge")
       return runWeighted(w)
     }
-    val e = g.edges.select(col(SRC), col(DST)).distinct().persist()
+    val e = g.edges.select(col(SRC), col(DST)).distinct()
     val n = g.vertices.count()
     val scale = if (sampleKV > 0 && sampleKV < n) n.toDouble / sampleKV else 1.0
     val norm = if (normalizedV && n > 2) 1.0 / ((n - 1.0) * (n - 2.0)) else 1.0
-    if (smallGraphThresholdV > 0 && e.count() <= smallGraphThresholdV) {
-      val r = runLocal(e, scale * norm)
-      e.unpersist(false)
-      return r
-    }
+    gate(e, pinForDistributed = true)(runLocal(_, scale * norm))(
+      runDistributed(_, n, scale * norm))
+  }
+
+  private def runDistributed(e: DataFrame, n: Long, factor: Double): DataFrame = {
     if (!(sampleKV > 0 && sampleKV < n))
       MultiSourceBFS.guardExactSources("betweenness", n)
 
@@ -240,11 +236,10 @@ class Betweenness(g: GraphFrame) {
           .withColumnRenamed("id", "_c_id")
         g.vertices.join(btw, col(ID) === col("_c_id"), "left_outer")
           .select(g.vertices.columns.map(c => g.vertices(GraphFrame.quoteName(c))) :+
-            (coalesce(col("_b"), lit(0.0)) * lit(scale * norm)).as("betweenness"): _*)
+            (coalesce(col("_b"), lit(0.0)) * lit(factor)).as("betweenness"): _*)
           .localCheckpoint(true)
       }
     (levels ++ cut).foreach(IterationManager.release)
-    e.unpersist(false)
     result
   }
 
@@ -262,14 +257,14 @@ class Betweenness(g: GraphFrame) {
   def runEdges(): DataFrame = {
     require(weightColV.isEmpty,
       "edge betweenness is unweighted-only (weightCol is not supported)")
-    val e = g.edges.select(col(SRC), col(DST)).distinct().persist()
+    val e = g.edges.select(col(SRC), col(DST)).distinct()
     val n = g.vertices.count()
     val scale = if (sampleKV > 0 && sampleKV < n) n.toDouble / sampleKV else 1.0
-    if (smallGraphThresholdV > 0 && e.count() <= smallGraphThresholdV) {
-      val r = runLocalEdges(e, scale)
-      e.unpersist(false)
-      return r
-    }
+    gate(e, pinForDistributed = true)(runLocalEdges(_, scale))(
+      runEdgesDistributed(_, scale))
+  }
+
+  private def runEdgesDistributed(e: DataFrame, scale: Double): DataFrame = {
     val sources = sampledSources()
     val levels = MultiSourceBFS.levels(e, sources)
     val maxLevel = levels.size - 1
@@ -309,7 +304,6 @@ class Betweenness(g: GraphFrame) {
       joined.localCheckpoint(true)
     }
     (levels ++ cut).foreach(IterationManager.release)
-    e.unpersist(false)
     result
   }
 
@@ -317,7 +311,7 @@ class Betweenness(g: GraphFrame) {
    * [[runLocal]] with the edge-dependency credit accumulated inside the
    * backward sweep. */
   private def runLocalEdges(e: DataFrame, factor: Double): DataFrame = {
-    val (edges, _) = LocalLinkAnalysis.collectGraph(e, g)
+    val (edges, _) = LocalTail.collectGraph(e, g)
     val allSources = g.vertices.select(col(ID)).collect().map(_.get(0))
       .sortBy(String.valueOf(_))
     val sources: Array[Any] =
@@ -387,15 +381,14 @@ class Betweenness(g: GraphFrame) {
     val e = g.edges
       .groupBy(col(SRC), col(DST))
       .agg(min(col(GraphFrame.quoteName(w)).cast("double")).as("_bw"))
-      .persist()
     val n = g.vertices.count()
     val scale = if (sampleKV > 0 && sampleKV < n) n.toDouble / sampleKV else 1.0
     val norm = if (normalizedV && n > 2) 1.0 / ((n - 1.0) * (n - 2.0)) else 1.0
-    if (smallGraphThresholdV > 0 && e.count() <= smallGraphThresholdV) {
-      val r = runLocalWeighted(e, scale * norm)
-      e.unpersist(false)
-      return r
-    }
+    gate(e, pinForDistributed = true)(runLocalWeighted(_, scale * norm))(
+      runWeightedDistributed(_, n, scale * norm))
+  }
+
+  private def runWeightedDistributed(e: DataFrame, n: Long, factor: Double): DataFrame = {
     if (!(sampleKV > 0 && sampleKV < n))
       MultiSourceBFS.guardExactSources("betweenness", n)
     val cuts = ArrayBuffer.empty[DataFrame]
@@ -453,10 +446,9 @@ class Betweenness(g: GraphFrame) {
       .withColumnRenamed("id", "_c_id")
     val result = g.vertices.join(btw, col(ID) === col("_c_id"), "left_outer")
       .select(g.vertices.columns.map(c => g.vertices(GraphFrame.quoteName(c))) :+
-        (coalesce(col("_b"), lit(0.0)) * lit(scale * norm)).as("betweenness"): _*)
+        (coalesce(col("_b"), lit(0.0)) * lit(factor)).as("betweenness"): _*)
       .localCheckpoint(true)
     cuts.foreach(IterationManager.release)
-    e.unpersist(false)
     result
   }
 
@@ -522,12 +514,12 @@ class Betweenness(g: GraphFrame) {
         if (v != s) btw(v) = btw.getOrElse(v, 0.0) + delta.getOrElse(v, 0.0)
       }
     }
-    LocalLinkAnalysis.joinBack(g, btw.keys.toArray.sortBy(String.valueOf(_)),
+    LocalTail.joinBack(g, btw.keys.toArray.sortBy(String.valueOf(_)),
       Seq(("betweenness", (v: Any) => btw(v) * factor, 0.0)))
   }
 
   private def runLocal(e: DataFrame, factor: Double): DataFrame = {
-    val (edges, _) = LocalLinkAnalysis.collectGraph(e, g)
+    val (edges, _) = LocalTail.collectGraph(e, g)
     val allSources = g.vertices.select(col(ID)).collect().map(_.get(0))
       .sortBy(String.valueOf(_))
     val sources: Array[Any] =
@@ -563,7 +555,7 @@ class Betweenness(g: GraphFrame) {
         if (v != s) btw(v) = btw.getOrElse(v, 0.0) + delta.getOrElse(v, 0.0)
       }
     }
-    LocalLinkAnalysis.joinBack(g, btw.keys.toArray.sortBy(String.valueOf(_)),
+    LocalTail.joinBack(g, btw.keys.toArray.sortBy(String.valueOf(_)),
       Seq(("betweenness", (v: Any) => btw(v) * factor, 0.0)))
   }
 
@@ -576,12 +568,10 @@ class Betweenness(g: GraphFrame) {
  * restriction is stated, not hidden). Graph radius/diameter are the
  * min/max of the non-isolated rows. Same [[MultiSourceBFS]] forward
  * phase and bounded driver tail as [[Closeness]]. */
-class Eccentricity(g: GraphFrame) {
+class Eccentricity(g: GraphFrame) extends LocalTail {
   import GraphFrame.{ID, SRC, DST}
 
   private var sampleKV: Int = 0 // 0 = exact (every vertex a BFS source)
-  private var smallGraphThresholdV: Long =
-    graft.GraftConf.linkAnalysisSmallGraphThreshold.getOrElse(100000L)
 
   /** Landmark estimate from k deterministic md5-ordered landmarks:
    * ecc(v) becomes `max over sampled landmarks l of d(v, l)` — a LOWER
@@ -601,8 +591,6 @@ class Eccentricity(g: GraphFrame) {
    * with [[sampleSources]] (landmark lower bound). Exactness contract
    * as [[Betweenness.weightCol]]. */
   def weightCol(c: String): this.type = { weightColV = Some(c); this }
-  /** Same bounded-driver-tail knob as [[Hits]]; docs/THRESHOLDS.md. */
-  def setSmallGraphThreshold(n: Long): this.type = { smallGraphThresholdV = n; this }
 
   def run(): DataFrame = {
     weightColV.foreach { w =>
@@ -611,14 +599,14 @@ class Eccentricity(g: GraphFrame) {
         s"eccentricity weightCol '$w' must be non-null and > 0 on every edge")
       return runWeighted(w)
     }
-    val e = g.edges.select(col(SRC), col(DST)).distinct().persist()
+    val e = g.edges.select(col(SRC), col(DST)).distinct()
     val n = g.vertices.count()
     val sampled = sampleKV > 0 && sampleKV < n
-    if (smallGraphThresholdV > 0 && e.count() <= smallGraphThresholdV) {
-      val r = runLocal(e, sampled)
-      e.unpersist(false)
-      return r
-    }
+    gate(e, pinForDistributed = true)(runLocal(_, sampled))(
+      runDistributed(_, n, sampled))
+  }
+
+  private def runDistributed(e: DataFrame, n: Long, sampled: Boolean): DataFrame = {
     if (!sampled) MultiSourceBFS.guardExactSources("eccentricity", n)
     // exact: forward BFS from every vertex, scored at the source.
     // sampled: BFS from the landmarks over reversed edges (so the level
@@ -638,7 +626,6 @@ class Eccentricity(g: GraphFrame) {
         coalesce(col("_ec"), lit(0)).cast("int").as("eccentricity"): _*)
       .localCheckpoint(true)
     levels.foreach(IterationManager.release)
-    e.unpersist(false)
     result
   }
 
@@ -648,7 +635,7 @@ class Eccentricity(g: GraphFrame) {
 
   private def runLocal(e: DataFrame, sampled: Boolean): DataFrame = {
     import scala.collection.mutable
-    val (edges, _) = LocalLinkAnalysis.collectGraph(e, g)
+    val (edges, _) = LocalTail.collectGraph(e, g)
     val ids = g.vertices.select(col(ID)).collect().map(_.get(0))
       .sortBy(String.valueOf(_))
     val sources: Array[Any] =
@@ -675,7 +662,7 @@ class Eccentricity(g: GraphFrame) {
           ecc(v) = math.max(ecc.getOrElse(v, 0.0), d.toDouble)
       else ecc(s) = dist.values.max.toDouble
     }
-    LocalLinkAnalysis.joinBack(g, ecc.keys.toArray.sortBy(String.valueOf(_)),
+    LocalTail.joinBack(g, ecc.keys.toArray.sortBy(String.valueOf(_)),
       Seq(("eccD", (v: Any) => ecc(v), 0.0)))
       .withColumn("eccentricity", col("eccD").cast("int")).drop("eccD")
   }
@@ -686,14 +673,13 @@ class Eccentricity(g: GraphFrame) {
     val e = g.edges
       .groupBy(col(SRC), col(DST))
       .agg(min(col(GraphFrame.quoteName(w)).cast("double")).as("_bw"))
-      .persist()
     val n = g.vertices.count()
     val sampled = sampleKV > 0 && sampleKV < n
-    if (smallGraphThresholdV > 0 && e.count() <= smallGraphThresholdV) {
-      val r = runLocalWeighted(e, sampled)
-      e.unpersist(false)
-      return r
-    }
+    gate(e, pinForDistributed = true)(runLocalWeighted(_, sampled))(
+      runWeightedDistributed(_, n, sampled))
+  }
+
+  private def runWeightedDistributed(e: DataFrame, n: Long, sampled: Boolean): DataFrame = {
     if (!sampled) MultiSourceBFS.guardExactSources("eccentricity", n)
     val cuts = ArrayBuffer.empty[DataFrame]
     def cut(df: DataFrame): DataFrame = {
@@ -712,7 +698,6 @@ class Eccentricity(g: GraphFrame) {
         coalesce(col("_ec"), lit(0.0)).as("eccentricity"): _*)
       .localCheckpoint(true)
     cuts.foreach(IterationManager.release)
-    e.unpersist(false)
     result
   }
 
@@ -744,7 +729,7 @@ class Eccentricity(g: GraphFrame) {
         for ((v, d) <- dist) ecc(v) = math.max(ecc.getOrElse(v, 0.0), d)
       else ecc(s) = dist.values.max
     }
-    LocalLinkAnalysis.joinBack(g, ecc.keys.toArray.sortBy(String.valueOf(_)),
+    LocalTail.joinBack(g, ecc.keys.toArray.sortBy(String.valueOf(_)),
       Seq(("eccentricity", (v: Any) => ecc(v), 0.0)))
   }
 }
@@ -753,12 +738,10 @@ class Eccentricity(g: GraphFrame) {
  * harmonic centrality, over outgoing distances — see [[MultiSourceBFS]].
  * Returns vertices + `closeness: double`, `harmonic: double`;
  * zero-out-reach vertices score 0 on both. */
-class Closeness(g: GraphFrame) {
+class Closeness(g: GraphFrame) extends LocalTail {
   import GraphFrame.{ID, SRC, DST}
 
   private var sampleKV: Int = 0 // 0 = exact (every vertex a BFS source)
-  private var smallGraphThresholdV: Long =
-    graft.GraftConf.linkAnalysisSmallGraphThreshold.getOrElse(100000L)
 
   /** Standard landmark (Eppstein–Wang) estimate from k deterministic
    * md5-ordered landmarks: the per-vertex reachable count, distance sum
@@ -781,8 +764,6 @@ class Closeness(g: GraphFrame) {
    * [[sampleSources]] (the landmark Bellman-Ford runs over reversed
    * edges). Exactness contract as [[Betweenness.weightCol]]. */
   def weightCol(c: String): this.type = { weightColV = Some(c); this }
-  /** Same bounded-driver-tail knob as [[Hits]]; docs/THRESHOLDS.md. */
-  def setSmallGraphThreshold(n: Long): this.type = { smallGraphThresholdV = n; this }
 
   def run(): DataFrame = {
     weightColV.foreach { w =>
@@ -791,15 +772,15 @@ class Closeness(g: GraphFrame) {
         s"closeness weightCol '$w' must be non-null and > 0 on every edge")
       return runWeighted(w)
     }
-    val e = g.edges.select(col(SRC), col(DST)).distinct().persist()
+    val e = g.edges.select(col(SRC), col(DST)).distinct()
     val n = g.vertices.count()
     val sampled = sampleKV > 0 && sampleKV < n
     val scale = if (sampled) n.toDouble / sampleKV else 1.0
-    if (smallGraphThresholdV > 0 && e.count() <= smallGraphThresholdV) {
-      val r = runLocal(e, n, sampled, scale)
-      e.unpersist(false)
-      return r
-    }
+    gate(e, pinForDistributed = true)(runLocal(_, n, sampled, scale))(
+      runDistributed(_, n, sampled, scale))
+  }
+
+  private def runDistributed(e: DataFrame, n: Long, sampled: Boolean, scale: Double): DataFrame = {
     if (!sampled) MultiSourceBFS.guardExactSources("closeness", n)
     // exact: forward BFS from every vertex, scored at the source.
     // sampled: BFS from the landmarks over reversed edges (level distance
@@ -827,12 +808,11 @@ class Closeness(g: GraphFrame) {
         coalesce(lit(scale) * col("h"), lit(0.0)).as("harmonic"): _*)
       .localCheckpoint(true)
     levels.foreach(IterationManager.release)
-    e.unpersist(false)
     result
   }
 
   private def runLocal(e: DataFrame, n: Long, sampled: Boolean, scale: Double): DataFrame = {
-    val (edges, _) = LocalLinkAnalysis.collectGraph(e, g)
+    val (edges, _) = LocalTail.collectGraph(e, g)
     val ids = g.vertices.select(col(ID)).collect().map(_.get(0))
       .sortBy(String.valueOf(_))
     val sources: Array[Any] =
@@ -877,7 +857,7 @@ class Closeness(g: GraphFrame) {
       if (rAcc.contains(v))
         scale * rAcc(v) / math.max(n - 1.0, 1.0) * rAcc(v) / tAcc(v)
       else 0.0
-    LocalLinkAnalysis.joinBack(g, rAcc.keys.toArray.sortBy(String.valueOf(_)),
+    LocalTail.joinBack(g, rAcc.keys.toArray.sortBy(String.valueOf(_)),
       Seq(("closeness", clo, 0.0),
         ("harmonic", (v: Any) => scale * hAcc.getOrElse(v, 0.0), 0.0)))
   }
@@ -890,15 +870,14 @@ class Closeness(g: GraphFrame) {
     val e = g.edges
       .groupBy(col(SRC), col(DST))
       .agg(min(col(GraphFrame.quoteName(w)).cast("double")).as("_bw"))
-      .persist()
     val n = g.vertices.count()
     val sampled = sampleKV > 0 && sampleKV < n
     val scale = if (sampled) n.toDouble / sampleKV else 1.0
-    if (smallGraphThresholdV > 0 && e.count() <= smallGraphThresholdV) {
-      val r = runLocalWeighted(e, n, sampled, scale)
-      e.unpersist(false)
-      return r
-    }
+    gate(e, pinForDistributed = true)(runLocalWeighted(_, n, sampled, scale))(
+      runWeightedDistributed(_, n, sampled, scale))
+  }
+
+  private def runWeightedDistributed(e: DataFrame, n: Long, sampled: Boolean, scale: Double): DataFrame = {
     if (!sampled) MultiSourceBFS.guardExactSources("closeness", n)
     val cuts = ArrayBuffer.empty[DataFrame]
     def cut(df: DataFrame): DataFrame = {
@@ -923,7 +902,6 @@ class Closeness(g: GraphFrame) {
         coalesce(lit(scale) * col("h"), lit(0.0)).as("harmonic"): _*)
       .localCheckpoint(true)
     cuts.foreach(IterationManager.release)
-    e.unpersist(false)
     result
   }
 
@@ -972,7 +950,7 @@ class Closeness(g: GraphFrame) {
       if (rAcc.contains(v))
         scale * rAcc(v) / math.max(n - 1.0, 1.0) * rAcc(v) / tAcc(v)
       else 0.0
-    LocalLinkAnalysis.joinBack(g, rAcc.keys.toArray.sortBy(String.valueOf(_)),
+    LocalTail.joinBack(g, rAcc.keys.toArray.sortBy(String.valueOf(_)),
       Seq(("closeness", clo, 0.0),
         ("harmonic", (v: Any) => scale * hAcc.getOrElse(v, 0.0), 0.0)))
   }

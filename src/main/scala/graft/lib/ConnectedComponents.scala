@@ -21,7 +21,7 @@ import graft.GraphFrame
  * Output: original vertices + `component: long` (surrogate Long ids are
  * mapped back for non-integral id types).
  */
-class ConnectedComponents(g: GraphFrame) {
+class ConnectedComponents(g: GraphFrame) extends LocalTail {
   import GraphFrame.{ID, SRC, DST, LONG_ID, LONG_SRC, LONG_DST}
   import graft.GraftConf
 
@@ -64,24 +64,20 @@ class ConnectedComponents(g: GraphFrame) {
    * lib/ConnectedComponents.scala:40-42 `useLabelsAsComponents`). */
   def setUseLabelsAsComponents(b: Boolean): this.type = { labelsAsComponents = b; this }
 
-  private var smallGraphThresholdV: Long =
+  /** The union-find tail's threshold is compared against the remaining
+   * parent-pointer edge frame's count. Driver cost at the 1M default:
+   * ~32 bytes/edge for the typed collect (~32 MB) plus the per-vertex
+   * label hash map and the toSeq.toDF local relation shipped back —
+   * bounded by #distinct endpoints ≤ 2×edges, so order ~100 MB transient
+   * worst case, far under the driver heap. The winners are tiny LSH pair
+   * graphs and, above all, the TAIL of star contraction: after one round
+   * the remainder is at most one parent pointer per non-root vertex, so a
+   * remainder under 1M EDGES finishes in one driver job instead of ~5-8
+   * more supersteps of fixed scheduling overhead (measured 2.1x on the
+   * 1.19M-edge baseline trade graph). At 100 TB the distributed rounds
+   * still do all contraction work until the remainder fits. */
+  override protected def defaultSmallGraphThreshold: Long =
     GraftConf.ccSmallGraphThreshold.getOrElse(1000000L)
-  /** EDGE-count threshold below which components are finished with a
-   * single driver-side union-find instead of distributed supersteps
-   * (0 disables; compared against the remaining parent-pointer edge
-   * frame's count). Driver cost at the 1M default: ~32 bytes/edge for
-   * the typed collect (~32 MB) plus the per-vertex label hash map and
-   * the toSeq.toDF local relation shipped back — bounded by #distinct
-   * endpoints ≤ 2×edges, so order ~100 MB transient worst case, far
-   * under the driver heap. The winners are tiny LSH pair graphs and,
-   * above all, the TAIL of star contraction: after one round the
-   * remainder is at most one parent pointer per non-root vertex, so a
-   * remainder under 1M EDGES finishes in one driver job instead of
-   * ~5-8 more supersteps of fixed scheduling overhead (measured 2.1x
-   * on the 1.19M-edge baseline trade graph). At 100 TB the distributed
-   * rounds still do all contraction work until the remainder fits.
-   * Full bounded-path matrix: docs/THRESHOLDS.md. */
-  def setSmallGraphThreshold(n: Long): this.type = { smallGraphThresholdV = n; this }
 
   def run(): DataFrame = {
     val raw =
@@ -101,6 +97,11 @@ class ConnectedComponents(g: GraphFrame) {
   private def runTwoPhase(): DataFrame = {
     val mgr = IterationManager.withReliableDir(g.spark, reliableDirV,
       checkpointIntervalV, storageLevelV)
+    // a failed run releases what it pinned so far (surrogate-id table, cuts)
+    try twoPhase(mgr) catch { case e: Throwable => mgr.close(); throw e }
+  }
+
+  private def twoPhase(mgr: IterationManager): DataFrame = {
     // surrogate-id table feeds both the edge translation and the final
     // label join — for non-integral ids it costs a shuffle+sort (the
     // row_number mint), so it must be evaluated exactly ONCE. Translating
@@ -124,27 +125,29 @@ class ConnectedComponents(g: GraphFrame) {
       }
 
     // canonical undirected edge list on surrogate longs: src > dst, no loops
-    var ee = rawEdges
+    val canon = rawEdges
       .filter(col("s") =!= col("d"))
       .select(greatest(col("s"), col("d")).as("src"), least(col("s"), col("d")).as("dst"))
       .distinct()
 
     // one job finishes any graph already under the union-find threshold
     // (e.g. LSH dedup pair graphs: dozens of edges, full label fidelity).
-    // Probe on a plain persist BEFORE the round-0 lineage cut: the fast
-    // path then skips the eager localCheckpoint job entirely, and the
-    // distributed path cycles the already-cached frame at no extra cost.
-    if (smallGraphThresholdV > 0) {
-      val p = ee.persist()
-      if (p.count() <= smallGraphThresholdV) {
-        val r = finishWithUnionFind(p, iv, mgr)
-        p.unpersist(false)
-        return r
-      }
-      ee = mgr.cycle(p, 0)
-      p.unpersist(false)
-    } else ee = mgr.cycle(ee, 0)
+    // Probe on a plain pin BEFORE the round-0 lineage cut: the fast path
+    // then skips the eager localCheckpoint job entirely, and the
+    // distributed path cycles the already-cached frame at no extra cost
+    // (the pin is released right after that cut). With the tail disabled
+    // there is no probe, and the cut reads the frame unpinned.
+    gate[Either[DataFrame, DataFrame]](canon, pinForDistributed = tailEnabled)(
+      p => Left(finishWithUnionFind(p, iv, mgr)))(p => Right(mgr.cycle(p, 0))) match {
+      case Left(labeled) => labeled
+      case Right(cut) => runRounds(cut, iv, mgr)
+    }
+  }
 
+  /** Large-star / small-star supersteps from the round-0 cut `ee0`, with
+   * the union-find tail once the remainder fits the threshold. */
+  private def runRounds(ee0: DataFrame, iv: DataFrame, mgr: IterationManager): DataFrame = {
+    var ee = ee0
     var prevChecksum: Option[Row] = None
     var converged = false
     var iter = 1
@@ -182,8 +185,7 @@ class ConnectedComponents(g: GraphFrame) {
       // tail rounds: once contraction shrinks the remainder under the
       // threshold, one union-find job beats O(log diameter) more supersteps
       // (the star-contracted remainder has the same components)
-      if (!converged && smallGraphThresholdV > 0 &&
-          cs.getLong(1) <= smallGraphThresholdV)
+      if (!converged && tailFits(cs.getLong(1)))
         return finishWithUnionFind(ee, iv, mgr)
     }
 

@@ -16,35 +16,24 @@ import graft.GraphFrame
  * Output: one row per cycle, `found_cycles: array<idType>` listing the
  * cycle's vertices starting at its minimum.
  */
-class DetectingCycles(g: GraphFrame) {
+class DetectingCycles(g: GraphFrame) extends LocalTail {
   import GraphFrame.{ID, SRC, DST}
 
   private var maxIterV: Int = 50
-  private var smallGraphThresholdV: Long =
-    graft.GraftConf.linkAnalysisSmallGraphThreshold.getOrElse(100000L)
 
   def maxIter(n: Int): this.type = { maxIterV = n; this }
-  /** Same bounded driver tail as [[Hits]]/[[PageRank]] (0 disables;
-   * docs/THRESHOLDS.md row 2). Sound because the enumerated SET is
-   * schedule-independent: exactly the simple directed cycles with ≤
-   * maxIter vertices, each reported once as the rotation starting at its
-   * minimum vertex — the head-vertex propagation guard makes every
-   * non-head vertex strictly greater than the head, which the local DFS
-   * replays with the id type's Spark ordering (types without a faithful
-   * driver ordering always run distributed). */
-  def setSmallGraphThreshold(n: Long): this.type = { smallGraphThresholdV = n; this }
 
-  def run(): DataFrame = {
-    val ordOpt = UnionFind.sparkOrdering(g.vertices.schema(ID).dataType)
-    if (smallGraphThresholdV > 0 && ordOpt.isDefined) {
-      val e = g.edges.select(col(SRC), col(DST)).persist()
-      if (e.count() <= smallGraphThresholdV) {
-        val r = runLocal(e, ordOpt.get)
-        e.unpersist(false)
-        return r
-      }
-      e.unpersist(false)
-    }
+  /** The driver tail (docs/THRESHOLDS.md row 2) is sound because the
+   * enumerated SET is schedule-independent: exactly the simple directed
+   * cycles with ≤ maxIter vertices, each reported once as the rotation
+   * starting at its minimum vertex — the head-vertex propagation guard
+   * makes every non-head vertex strictly greater than the head, which the
+   * local DFS replays with the id type's Spark ordering. */
+  def run(): DataFrame =
+    gateOrdered(g.edges.select(col(SRC), col(DST)), g.vertices.schema(ID).dataType)(
+      runLocal)(_ => runDistributed())
+
+  private def runDistributed(): DataFrame = {
     // empty array<array<idType>> literal, valid for any id type
     val emptyPaths = slice(array(array(col(ID))), 1, 0)
 
@@ -79,7 +68,7 @@ class DetectingCycles(g: GraphFrame) {
    * matching the distributed array_union + distinct. */
   private def runLocal(e: DataFrame, ord: Ordering[Any]): DataFrame = {
     import scala.collection.mutable
-    val (edges, vids) = LocalLinkAnalysis.collectGraph(e, g)
+    val (edges, vids) = LocalTail.collectGraph(e, g)
     val valid = vids.toSet
     val adj = edges.iterator
       .filter { case (s, d) => valid(s) && valid(d) }

@@ -25,14 +25,12 @@ import graft.GraphFrame
  * shape as a PageRank round — with rounds through the
  * [[IterationManager]].
  */
-class Eigenvector(g: GraphFrame) {
+class Eigenvector(g: GraphFrame) extends LocalTail {
   import GraphFrame.{ID, SRC, DST}
 
   private var maxIterV: Int = 10
   private var weightColV: Option[String] = None
   private var roundsPerCycleV: Int = 2
-  private var smallGraphThresholdV: Long =
-    graft.GraftConf.linkAnalysisSmallGraphThreshold.getOrElse(100000L)
 
   /** Power-iteration rounds CHAINED LAZILY per lineage cut (default 2).
    * The recurrence is a fixed linear map, so k rounds compose into one
@@ -64,26 +62,21 @@ class Eigenvector(g: GraphFrame) {
     require(n >= 1, s"eigenvector maxIter must be >= 1, got $n")
     maxIterV = n; this
   }
-  /** EDGE-count threshold for the bounded driver-side tail (0 disables);
-   * see [[Hits.setSmallGraphThreshold]] for the cost math — identical.
-   * Full bounded-path matrix: docs/THRESHOLDS.md. */
-  def setSmallGraphThreshold(n: Long): this.type = { smallGraphThresholdV = n; this }
-
   /** Returns vertices + `eigenvector: double` (sup-norm 1; all-zero —
    * e.g. a vertex with no in-links on a DAG's source layer after enough
-   * rounds — stays 0). */
+   * rounds — stays 0). Driver tail cost: see [[Hits.run]]. */
   def run(): DataFrame = {
-    // pinned: re-joined every round, and possibly an expensive upstream
-    // query. The unweighted path rides the same x·w plan with w = 1.0 —
-    // float-identical to a bare sum (x·1.0 == x bit-exactly).
+    // pinned on both paths: re-joined every round, and possibly an
+    // expensive upstream query. The unweighted path rides the same x·w
+    // plan with w = 1.0 — float-identical to a bare sum (x·1.0 == x
+    // bit-exactly).
     val wCol = weightColV.map(w => col(graft.GraphFrame.quoteName(w))
       .cast("double")).getOrElse(lit(1.0))
-    val e = g.edges.select(col(SRC), col(DST), wCol.as("_w")).persist()
-    if (smallGraphThresholdV > 0 && e.count() <= smallGraphThresholdV) {
-      val r = runLocal(e)
-      e.unpersist(false)
-      return r
-    }
+    gate(g.edges.select(col(SRC), col(DST), wCol.as("_w")),
+      pinForDistributed = true)(runLocal)(runDistributed)
+  }
+
+  private def runDistributed(e: DataFrame): DataFrame = {
     // interval 1: every chunk of roundsPerCycle lazily-chained rounds is
     // one cut, and cycleObserved fuses the guard max / final sup-norm
     // into the cut's own job — zero separate driver actions in the loop
@@ -120,12 +113,10 @@ class Eigenvector(g: GraphFrame) {
           (col("x") / lit(math.max(m, 1.0))).as("x"))
       else state = next
     }
-    val result = mgr.finish(g.vertices.join(
+    mgr.finish(g.vertices.join(
       state.select(col(ID),
         (if (norm > 0) col("x") / norm else lit(0.0)).as("eigenvector")),
       Seq(ID), "left_outer"))
-    e.unpersist(false)
-    result
   }
 
   /** Driver-side tail: identical recurrence (raw sums, one final sup-norm
@@ -163,7 +154,7 @@ class Eigenvector(g: GraphFrame) {
       }
     }
     val norm = vids.iterator.map(v => math.abs(x(v))).foldLeft(0.0)(math.max)
-    LocalLinkAnalysis.joinBack(g, vids, Seq(
+    LocalTail.joinBack(g, vids, Seq(
       ("eigenvector", (v: Any) => if (norm > 0) x(v) / norm else 0.0, 0.0)))
   }
 }

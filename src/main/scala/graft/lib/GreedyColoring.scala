@@ -30,15 +30,13 @@ import graft.GraphFrame
  *
  * Returns vertices + `color: int` (isolated vertices take color 0).
  */
-class GreedyColoring(g: GraphFrame) {
+class GreedyColoring(g: GraphFrame) extends LocalTail {
   import GraphFrame.{ID, SRC, DST}
 
   private var maxColorsV: Int = 100
   private var maxIterV: Int = 100
   private var seedV: Long = 42L
   private var hashModeV: String = "xxhash64"
-  private var smallGraphThresholdV: Long =
-    graft.GraftConf.linkAnalysisSmallGraphThreshold.getOrElse(100000L)
 
   /** Color cap; vertices still uncolored when it is reached get color -1
    * (loud in the output rather than an endless loop on a bug). */
@@ -56,21 +54,18 @@ class GreedyColoring(g: GraphFrame) {
     require(m == "xxhash64" || m == "md5", s"unknown hash mode $m")
     hashModeV = m; this
   }
-  /** Same bounded-driver-tail knob as [[Hits]] (md5 mode only). */
-  def setSmallGraphThreshold(n: Long): this.type = { smallGraphThresholdV = n; this }
 
+  /** The driver tail (docs/THRESHOLDS.md row 11) runs in md5 mode only. */
   def run(): DataFrame = {
     val und = g.edges
       .filter(col(SRC) =!= col(DST))
       .select(least(col(SRC), col(DST)).as(SRC), greatest(col(SRC), col(DST)).as(DST))
       .distinct()
-      .persist()
-    if (hashModeV == "md5" && smallGraphThresholdV > 0 &&
-        und.count() <= smallGraphThresholdV) {
-      val r = runLocal(und)
-      und.unpersist(false)
-      return r
-    }
+    gate(und, eligible = hashModeV == "md5", pinForDistributed = true)(
+      runLocal)(runDistributed)
+  }
+
+  private def runDistributed(und: DataFrame): DataFrame = {
 
     // every loop-carried frame is eagerly lineage-cut and RETAINED until
     // the result is handed out: the IterationManager queue frees older
@@ -131,7 +126,6 @@ class GreedyColoring(g: GraphFrame) {
       .join(colorFrames.reduce(_ unionAll _), Seq(ID), "left_outer")
       .localCheckpoint(true)
     toRelease.foreach(IterationManager.release)
-    und.unpersist(false)
     out
   }
 
@@ -141,7 +135,7 @@ class GreedyColoring(g: GraphFrame) {
    * and the SQL oracle — over sorted adjacency, so the coloring is a
    * pure function of the graph value. */
   private def runLocal(und: DataFrame): DataFrame = {
-    val (edges, _) = LocalLinkAnalysis.collectGraph(und, g)
+    val (edges, _) = LocalTail.collectGraph(und, g)
     val ids = g.vertices.select(col(ID)).collect().map(_.get(0))
       .sortBy(String.valueOf(_))
     val adj = mutable.HashMap.empty[Any, mutable.ArrayBuffer[Any]]
@@ -173,7 +167,7 @@ class GreedyColoring(g: GraphFrame) {
       color += 1
     }
     for (v <- uncolored) colorOf(v) = -1
-    LocalLinkAnalysis.joinBack(g, ids,
+    LocalTail.joinBack(g, ids,
       Seq(("colorD", (v: Any) => colorOf.getOrElse(v, 0).toDouble, 0.0)))
       .withColumn("color", col("colorD").cast("int")).drop("colorD")
   }

@@ -25,12 +25,10 @@ import graft.GraphFrame
  * state is (id, hub, authority) with rounds through the
  * [[IterationManager]].
  */
-class Hits(g: GraphFrame) {
+class Hits(g: GraphFrame) extends LocalTail {
   import GraphFrame.{ID, SRC, DST}
 
   private var maxIterV: Int = 10
-  private var smallGraphThresholdV: Long =
-    graft.GraftConf.linkAnalysisSmallGraphThreshold.getOrElse(100000L)
 
   def maxIter(n: Int): this.type = { maxIterV = n; this }
   /** Rounds chained lazily per lineage cut (default 2; ≤ 8) — see
@@ -42,30 +40,22 @@ class Hits(g: GraphFrame) {
     roundsPerCycleV = k; this
   }
   private var roundsPerCycleV: Int = 2
-  /** EDGE-count threshold below which the power iteration finishes in one
-   * bounded driver loop instead of per-round distributed supersteps (same
-   * pattern as ConnectedComponents' union-find tail; 0 disables). Driver
-   * cost at the 100k default: one ~2x32-byte-per-edge collect plus
-   * O(maxIter x edges) float adds — microseconds where the superstep path
-   * pays ~0.4 s of scheduling per lineage-cut job (measured 3.2 s → 1.5 s
-   * on the 25-vertex nations graph). At scale the probe count doubles as
-   * the cache warm the distributed rounds need anyway.
-   * Full bounded-path matrix: docs/THRESHOLDS.md. */
-  def setSmallGraphThreshold(n: Long): this.type = { smallGraphThresholdV = n; this }
-
-  /** Returns vertices + `hub: double`, `authority: double` (L2-unit each). */
-  def run(): DataFrame = {
-    // pinned: re-joined every half-round, and possibly an expensive
-    // upstream query (e.g. a multi-join edge derivation)
-    val e = g.edges.select(col(SRC), col(DST)).persist()
+  /** Returns vertices + `hub: double`, `authority: double` (L2-unit each).
+   * Driver tail cost at the 100k-edge default: one ~2x32-byte-per-edge
+   * collect plus O(maxIter x edges) float adds — microseconds where the
+   * superstep path pays ~0.4 s of scheduling per lineage-cut job
+   * (measured 3.2 s → 1.5 s on the 25-vertex nations graph). At scale
+   * the probe count doubles as the cache warm the distributed rounds
+   * need anyway. */
+  def run(): DataFrame =
+    // pinned on both paths: re-joined every half-round, and possibly an
+    // expensive upstream query (e.g. a multi-join edge derivation).
     // maxIter=0 normalizes the all-ones init over ALL vertices, which the
     // endpoints-only local loop cannot see — distributed handles it
-    if (smallGraphThresholdV > 0 && maxIterV >= 1 &&
-        e.count() <= smallGraphThresholdV) {
-      val r = runLocal(e)
-      e.unpersist(false)
-      return r
-    }
+    gate(g.edges.select(col(SRC), col(DST)), eligible = maxIterV >= 1,
+      pinForDistributed = true)(runLocal)(runDistributed)
+
+  private def runDistributed(e: DataFrame): DataFrame = {
     // interval 1: each chunk of roundsPerCycle lazily-chained rounds is
     // one cut, with the guard maxes and the final L2 norms fused into the
     // cut's own job via cycleObserved — zero separate loop actions
@@ -140,13 +130,11 @@ class Hits(g: GraphFrame) {
         sum(col("authority") * col("authority")).as("a2")).head()
       (math.sqrt(norms.getDouble(0)), math.sqrt(norms.getDouble(1)))
     }
-    val result = mgr.finish(g.vertices.join(
+    mgr.finish(g.vertices.join(
       state.select(col(ID),
         (if (hNorm > 0) col("hub") / hNorm else lit(0.0)).as("hub"),
         (if (aNorm > 0) col("authority") / aNorm else lit(0.0)).as("authority")),
       Seq(ID), "left_outer"))
-    e.unpersist(false)
-    result
   }
 
   /** Driver-side tail: identical recurrence (raw sums, one final L2
@@ -155,7 +143,7 @@ class Hits(g: GraphFrame) {
    * round 1 on — filled in closed form by the join-back. */
   private def runLocal(e: DataFrame): DataFrame = {
     import scala.collection.mutable
-    val (edges, vids) = LocalLinkAnalysis.collectGraph(e, g)
+    val (edges, vids) = LocalTail.collectGraph(e, g)
     val valid = vids.toSet
     var hub = mutable.HashMap.empty[Any, Double]
     var auth = mutable.HashMap.empty[Any, Double]
@@ -188,7 +176,7 @@ class Hits(g: GraphFrame) {
     }
     val hNorm = math.sqrt(vids.iterator.map(v => hub(v) * hub(v)).sum)
     val aNorm = math.sqrt(vids.iterator.map(v => auth(v) * auth(v)).sum)
-    LocalLinkAnalysis.joinBack(g, vids, Seq(
+    LocalTail.joinBack(g, vids, Seq(
       ("hub", (v: Any) => if (hNorm > 0) hub(v) / hNorm else 0.0, 0.0),
       ("authority", (v: Any) => if (aNorm > 0) auth(v) / aNorm else 0.0, 0.0)))
   }

@@ -27,14 +27,12 @@ import graft.GraphFrame
  * non-dyadic p works but pins the cascade to this engine's nearest
  * double (stated; the oracle embeds the same Long literal either way).
  */
-class IndependentCascade(g: GraphFrame) {
+class IndependentCascade(g: GraphFrame) extends LocalTail {
   import GraphFrame.{ID, SRC, DST}
 
   private var pV: Double = 0.1
   private var hashSeedV: Long = 42L
   private var maxIterV: Int = 50
-  private var smallGraphThresholdV: Long =
-    graft.GraftConf.linkAnalysisSmallGraphThreshold.getOrElse(100000L)
 
   /** Per-edge activation probability (default 0.1). */
   def p(x: Double): this.type = {
@@ -45,13 +43,6 @@ class IndependentCascade(g: GraphFrame) {
   def maxIter(n: Int): this.type = {
     require(n >= 1, s"maxIter must be >= 1: $n"); maxIterV = n; this
   }
-  /** EDGE-count threshold for the bounded driver tail (0 disables).
-   * Activation round is the unique live-edge BFS level, so the tail and
-   * the distributed rounds agree exactly. */
-  def setSmallGraphThreshold(n: Long): this.type = {
-    smallGraphThresholdV = n; this
-  }
-
   /** BFS levels CHAINED LAZILY per materialized round (default 1). The
    * activation round of a vertex is the unique live-edge BFS level — a
    * pure function of the coins — so k frontier expansions compose into
@@ -71,6 +62,8 @@ class IndependentCascade(g: GraphFrame) {
   /** 60-bit threshold: coin fires iff draw < p·2⁶⁰ (exact for dyadic p). */
   private def threshold: Long = (pV * (1L << 60).toDouble).toLong
 
+  /** Activation round is the unique live-edge BFS level, so the driver
+   * tail and the distributed rounds agree exactly. */
   def run(seeds: Seq[Any]): DataFrame = {
     require(seeds.nonEmpty, "independentCascade requires a non-empty seed set")
     val coin = conv(substring(md5(concat_ws("|", lit(hashSeedV),
@@ -80,12 +73,10 @@ class IndependentCascade(g: GraphFrame) {
       .filter(col(SRC) =!= col(DST))
       .filter(coin < threshold)
       .distinct()
-      .persist()
-    if (smallGraphThresholdV > 0 && live.count() <= smallGraphThresholdV) {
-      val r = runLocal(live, seeds)
-      live.unpersist(false)
-      return r
-    }
+    gate(live, pinForDistributed = true)(runLocal(_, seeds))(runDistributed(_, seeds))
+  }
+
+  private def runDistributed(live: DataFrame, seeds: Seq[Any]): DataFrame = {
     // interval 1: every cycle cuts, with the growth count fused into the
     // cut's own job via cycleCounted — no separate limit/count action
     val mgr = new IterationManager(1)
@@ -119,9 +110,7 @@ class IndependentCascade(g: GraphFrame) {
       grew = lastLevel > 0
       state = next
     }
-    val result = mgr.finish(state)
-    live.unpersist(false)
-    result
+    mgr.finish(state)
   }
 
   /** Driver tail: plain BFS over the collected live edges — the level

@@ -124,8 +124,8 @@ private[graft] class IterationManager(
   // keep analysis linear; the per-cut job (~0.4 s at local[16] scheduler
   // floor) is the cheap part. Small-graph latency is instead handled
   // where it belongs: bounded driver-side tails in the algorithms
-  // themselves (ConnectedComponents.finishWithUnionFind, Hits/Katz
-  // localIterate), same pattern, measured 2-6x on the nations graphs.
+  // themselves, all behind the one LocalTail gate, measured 2-6x on the
+  // nations graphs.
 
   private def free(e: Entry): Unit = {
     if (e.viaDatasetPersist) e.df.unpersist(false)

@@ -18,20 +18,17 @@ import graft.GraphFrame
  *
  * Output: `id, kcore: int` (+ original vertex attributes).
  */
-class KCore(g: GraphFrame) {
+class KCore(g: GraphFrame) extends LocalTail {
   import GraphFrame.ID
 
   private var maxIterV: Int = Int.MaxValue
-  private var smallGraphThresholdV: Long =
-    graft.GraftConf.linkAnalysisSmallGraphThreshold.getOrElse(100000L)
 
   def maxIter(n: Int): this.type = { maxIterV = n; this }
-  /** Same bounded driver tail as [[Hits]]/[[PageRank]] (0 disables;
-   * docs/THRESHOLDS.md row 2) — identical synchronous capped-h-index
-   * rounds with the same all-changed stop and maxIter cap, so even a
-   * cap-truncated mid-convergence state matches the distributed one. */
-  def setSmallGraphThreshold(n: Long): this.type = { smallGraphThresholdV = n; this }
 
+  /** The driver tail (docs/THRESHOLDS.md row 2) runs identical
+   * synchronous capped-h-index rounds with the same all-changed stop and
+   * maxIter cap, so even a cap-truncated mid-convergence state matches
+   * the distributed one. */
   def run(): DataFrame = {
     // undirected simple graph
     val canon = g.edges
@@ -39,16 +36,10 @@ class KCore(g: GraphFrame) {
       .select(least(col(GraphFrame.SRC), col(GraphFrame.DST)).as(GraphFrame.SRC),
         greatest(col(GraphFrame.SRC), col(GraphFrame.DST)).as(GraphFrame.DST))
       .distinct()
+    gate(canon)(runLocal)(runDistributed)
+  }
 
-    if (smallGraphThresholdV > 0) {
-      val canonP = canon.persist()
-      if (canonP.count() <= smallGraphThresholdV) {
-        val r = runLocal(canonP)
-        canonP.unpersist(false)
-        return r
-      }
-      canonP.unpersist(false)
-    }
+  private def runDistributed(canon: DataFrame): DataFrame = {
     val gU = GraphFrame(g.vertices, canon)
     val deg = gU.degrees
     val v = g.vertices.join(deg, Seq(ID), "left_outer").na.fill(0, Seq("degree"))
@@ -83,7 +74,7 @@ class KCore(g: GraphFrame) {
    * no edge stay at core 0 via the join-back fill. */
   private def runLocal(canon: DataFrame): DataFrame = {
     import scala.collection.mutable
-    val (edges, vids) = LocalLinkAnalysis.collectGraph(canon, g)
+    val (edges, vids) = LocalTail.collectGraph(canon, g)
     val valid = vids.toSet
     val adj = mutable.HashMap.empty[Any, mutable.ArrayBuffer[Any]]
     edges.iterator.filter { case (s, d) => valid(s) && valid(d) }.foreach {
@@ -117,7 +108,7 @@ class KCore(g: GraphFrame) {
       core = next
       round += 1
     }
-    LocalLinkAnalysis.joinBack(g, vids,
+    LocalTail.joinBack(g, vids,
       Seq(("kcoreD", (v: Any) => core(v).toDouble, 0.0)))
       .withColumn("kcore", col("kcoreD").cast("int")).drop("kcoreD")
   }

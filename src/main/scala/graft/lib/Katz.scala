@@ -16,14 +16,12 @@ import graft.GraphFrame
  * shape as a PageRank round — with rounds through the
  * [[IterationManager]].
  */
-class Katz(g: GraphFrame) {
+class Katz(g: GraphFrame) extends LocalTail {
   import GraphFrame.{ID, SRC, DST}
 
   private var alphaV: Double = 0.1
   private var betaV: Double = 1.0
   private var maxIterV: Int = 10
-  private var smallGraphThresholdV: Long =
-    graft.GraftConf.linkAnalysisSmallGraphThreshold.getOrElse(100000L)
 
   def alpha(a: Double): this.type = { alphaV = a; this }
   def beta(b: Double): this.type = { betaV = b; this }
@@ -36,20 +34,14 @@ class Katz(g: GraphFrame) {
     roundsPerCycleV = k; this
   }
   private var roundsPerCycleV: Int = 2
-  /** EDGE-count threshold for the bounded driver-side tail (0 disables);
-   * see [[Hits.setSmallGraphThreshold]] for the cost math — identical.
-   * Full bounded-path matrix: docs/THRESHOLDS.md. */
-  def setSmallGraphThreshold(n: Long): this.type = { smallGraphThresholdV = n; this }
+  /** Returns vertices + `katz: double`. Driver tail cost: see [[Hits.run]]. */
+  def run(): DataFrame =
+    // pinned on both paths: re-joined every round, and possibly an
+    // expensive upstream query
+    gate(g.edges.select(col(SRC), col(DST)), pinForDistributed = true)(
+      runLocal)(runDistributed)
 
-  /** Returns vertices + `katz: double`. */
-  def run(): DataFrame = {
-    // pinned: re-joined every round, and possibly an expensive upstream query
-    val e = g.edges.select(col(SRC), col(DST)).persist()
-    if (smallGraphThresholdV > 0 && e.count() <= smallGraphThresholdV) {
-      val r = runLocal(e)
-      e.unpersist(false)
-      return r
-    }
+  private def runDistributed(e: DataFrame): DataFrame = {
     // interval 1: each chunk of roundsPerCycle lazily-chained rounds is
     // one cut/job (no convergence probe, no overflow guard — the series
     // is geometrically damped for sensible α)
@@ -73,9 +65,7 @@ class Katz(g: GraphFrame) {
       round += k
       state = mgr.cycle(cur, cycleIdx)
     }
-    val result = mgr.finish(g.vertices.join(state, Seq(ID), "left_outer"))
-    e.unpersist(false)
-    result
+    mgr.finish(g.vertices.join(state, Seq(ID), "left_outer"))
   }
 
   /** Driver-side tail: identical recurrence, sorted-edge accumulation
@@ -83,7 +73,7 @@ class Katz(g: GraphFrame) {
    * in closed form by the join-back. */
   private def runLocal(e: DataFrame): DataFrame = {
     import scala.collection.mutable
-    val (edges, vids) = LocalLinkAnalysis.collectGraph(e, g)
+    val (edges, vids) = LocalTail.collectGraph(e, g)
     val valid = vids.toSet
     var x = mutable.HashMap.empty[Any, Double]
     vids.foreach(v => x(v) = betaV)
@@ -97,6 +87,6 @@ class Katz(g: GraphFrame) {
       vids.foreach(v => nx(v) = betaV + alphaV * in(v))
       x = nx
     }
-    LocalLinkAnalysis.joinBack(g, vids, Seq(("katz", (v: Any) => x(v), betaV)))
+    LocalTail.joinBack(g, vids, Seq(("katz", (v: Any) => x(v), betaV)))
   }
 }

@@ -19,22 +19,15 @@ import graft.GraphFrame
  * Deterministic mode returns the smallest among equally-frequent values —
  * exactly the LDBC tie-break.
  */
-class LabelPropagation(g: GraphFrame) {
+class LabelPropagation(g: GraphFrame) extends LocalTail {
   import GraphFrame.{ID, SRC, DST}
 
   private var maxIterV: Int = 5
   private var directed: Boolean = true
-  private var smallGraphThresholdV: Long =
-    graft.GraftConf.linkAnalysisSmallGraphThreshold.getOrElse(100000L)
 
   def maxIter(n: Int): this.type = { maxIterV = n; this }
   /** Undirected mode sends labels across edges in both directions. */
   def setDirected(d: Boolean): this.type = { directed = d; this }
-  /** Same bounded driver tail as [[Hits]]/[[PageRank]] (0 disables;
-   * docs/THRESHOLDS.md row 2). The local histogram replays mode's
-   * deterministic smallest-tie-break with the id type's Spark ordering —
-   * id types without a faithful driver ordering always run distributed. */
-  def setSmallGraphThreshold(n: Long): this.type = { smallGraphThresholdV = n; this }
 
   /** "graphframes" (the only backend) — reference
    * lib/LabelPropagation.scala:58-70 parity; "graphx" is rejected like
@@ -50,17 +43,13 @@ class LabelPropagation(g: GraphFrame) {
     }
   }
 
-  def run(): DataFrame = {
-    val ordOpt = UnionFind.sparkOrdering(g.vertices.schema(ID).dataType)
-    if (smallGraphThresholdV > 0 && ordOpt.isDefined) {
-      val e = g.edges.select(col(SRC), col(DST)).persist()
-      if (e.count() <= smallGraphThresholdV) {
-        val r = runLocal(e, ordOpt.get)
-        e.unpersist(false)
-        return r
-      }
-      e.unpersist(false)
-    }
+  /** The driver tail (docs/THRESHOLDS.md row 2) replays mode's
+   * deterministic smallest-tie-break with the id type's Spark ordering. */
+  def run(): DataFrame =
+    gateOrdered(g.edges.select(col(SRC), col(DST)), g.vertices.schema(ID).dataType)(
+      runLocal)(_ => runDistributed())
+
+  private def runDistributed(): DataFrame = {
     // mode() ignores nulls and returns null on an empty group; a vertex
     // with no mail sees a null msg and keeps its label
     val newLabel = when(Pregel.msg.isNull, col("label")).otherwise(Pregel.msg)
@@ -82,7 +71,7 @@ class LabelPropagation(g: GraphFrame) {
    * ordering — exactly mode(deterministic = true). */
   private def runLocal(e: DataFrame, ord: Ordering[Any]): DataFrame = {
     import scala.collection.mutable
-    val (edges, vids) = LocalLinkAnalysis.collectGraph(e, g)
+    val (edges, vids) = LocalTail.collectGraph(e, g)
     val valid = vids.toSet
     // per-edge-row votes: directed sends src→dst; undirected both ways
     val sends: Array[(Any, Any)] = {

@@ -67,14 +67,12 @@ import graft.GraphFrame
  * small-graph threshold a bounded driver tail replays the identical
  * trajectory (docs/THRESHOLDS.md row 2b).
  */
-class Louvain(g: GraphFrame) {
+class Louvain(g: GraphFrame) extends LocalTail {
   import GraphFrame.{ID, SRC, DST}
 
   private var maxIterV: Int = 4
   private var levelsV: Int = 1
   private var gainModeV: String = "auto"
-  private var smallGraphThresholdV: Long =
-    graft.GraftConf.linkAnalysisSmallGraphThreshold.getOrElse(100000L)
 
   def maxIter(n: Int): this.type = { maxIterV = n; this }
   /** Number of coarsening levels (local-moving passes), ≥ 1. Level 1 is
@@ -94,13 +92,10 @@ class Louvain(g: GraphFrame) {
       s"louvain: gainMode must be auto|long|decimal, got '$m'")
     gainModeV = m; this
   }
-  /** EDGE-count threshold for the bounded driver tail (0 disables);
-   * docs/THRESHOLDS.md row 2b. The tail replays the exact distributed
-   * trajectory (same integer gains, same smallest-community tie rule
-   * via the id type's Spark ordering) including every coarse level. */
-  def setSmallGraphThreshold(n: Long): this.type = { smallGraphThresholdV = n; this }
-
-  /** Returns vertices + `community` (typed like `id`). */
+  /** Returns vertices + `community` (typed like `id`). The driver tail
+   * (docs/THRESHOLDS.md row 2b) replays the exact distributed trajectory
+   * (same integer gains, same smallest-community tie rule via the id
+   * type's Spark ordering) including every coarse level. */
   def run(): DataFrame = {
     val und = g.edges.select(col(SRC), col(DST))
       .filter(col(SRC).isNotNull && col(DST).isNotNull && col(SRC) =!= col(DST))
@@ -109,12 +104,13 @@ class Louvain(g: GraphFrame) {
       // endpoints absent from the vertex table carry no state: drop the edge
       .join(g.vertices.select(col(ID).as("a")), Seq("a"), "left_semi")
       .join(g.vertices.select(col(ID).as("b")), Seq("b"), "left_semi")
-      .persist()
+    // pinned on every path; the edge count also picks the gain mode, so
+    // this gate tests the threshold itself instead of going through `gate`
+    LocalTail.pinned(und)(runPinned)
+  }
+
+  private def runPinned(und: DataFrame): DataFrame = {
     val m = und.count()
-    if (m == 0) {
-      und.unpersist(false)
-      return g.vertices.withColumn("community", col(ID))
-    }
     val decimalGains = gainModeV match {
       case "decimal" => true
       case "long" =>
@@ -126,17 +122,12 @@ class Louvain(g: GraphFrame) {
       case _ => 2 * m > 1500000000L
     }
     val ordOpt = UnionFind.sparkOrdering(g.vertices.schema(ID).dataType)
-    if (smallGraphThresholdV > 0 && m <= smallGraphThresholdV && ordOpt.isDefined) {
-      // tail only triggers at m ≤ threshold ≤ ~1e5 ≪ 1.5e9: Long gains are
-      // exact there regardless of gainMode (decimal and Long agree bit-for-
-      // bit on exact integers, proven by the decimal/long differential spec)
-      val r = runLocal(und, ordOpt.get)
-      und.unpersist(false)
-      return r
-    }
-    val r = runDistributed(und, m, decimalGains)
-    und.unpersist(false)
-    r
+    // tail only triggers at m ≤ threshold ≤ ~1e5 ≪ 1.5e9: Long gains are
+    // exact there regardless of gainMode (decimal and Long agree bit-for-
+    // bit on exact integers, proven by the decimal/long differential spec)
+    if (m == 0) g.vertices.withColumn("community", col(ID))
+    else if (tailFits(m) && ordOpt.isDefined) runLocal(und, ordOpt.get)
+    else runDistributed(und, m, decimalGains)
   }
 
   /** One level's synchronous rounds over weighted bidirectional edges

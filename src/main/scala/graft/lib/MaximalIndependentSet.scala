@@ -19,7 +19,7 @@ import graft.GraphFrame
  * its `rand()`-dependent logic; hash-randomness sidesteps the hazard,
  * cf. reference RandomWalkBase.scala:322-325).
  */
-class MaximalIndependentSet(g: GraphFrame) {
+class MaximalIndependentSet(g: GraphFrame) extends LocalTail {
   import GraphFrame.{ID, SRC, DST}
 
   private var maxIterV: Int = 100
@@ -36,28 +36,18 @@ class MaximalIndependentSet(g: GraphFrame) {
     hashModeV = m; this
   }
 
-  private var smallGraphThresholdV: Long =
-    graft.GraftConf.linkAnalysisSmallGraphThreshold.getOrElse(100000L)
-  /** Same bounded driver tail as [[GreedyColoring]] — md5 mode only (the
-   * local loop replays md5 hex ordering; xxhash64 is a Tungsten
-   * internal). 0 disables; docs/THRESHOLDS.md row 11. */
-  def setSmallGraphThreshold(n: Long): this.type = { smallGraphThresholdV = n; this }
-
+  /** The driver tail (same as [[GreedyColoring]]'s; docs/THRESHOLDS.md
+   * row 11) runs in md5 mode only: the local loop replays md5 hex
+   * ordering, and xxhash64 is a Tungsten internal. */
   def run(): DataFrame = {
     val und = g.edges
       .filter(col(SRC) =!= col(DST))
       .select(least(col(SRC), col(DST)).as(SRC), greatest(col(SRC), col(DST)).as(DST))
       .distinct()
+    gate(und, eligible = hashModeV == "md5")(runLocal)(runDistributed)
+  }
 
-    if (hashModeV == "md5" && smallGraphThresholdV > 0) {
-      val undPre = und.persist()
-      if (undPre.count() <= smallGraphThresholdV) {
-        val r = runLocal(undPre)
-        undPre.unpersist(false)
-        return r
-      }
-      undPre.unpersist(false)
-    }
+  private def runDistributed(und: DataFrame): DataFrame = {
 
     val mgr = IterationManager.withReliableDir(g.spark, None)
     var remaining = mgr.persistOnly(g.vertices.select(ID))
@@ -120,7 +110,7 @@ class MaximalIndependentSet(g: GraphFrame) {
    * oracle. Pure function of the graph value (sorted adjacency). */
   private def runLocal(und: DataFrame): DataFrame = {
     import scala.collection.mutable
-    val (edges, _) = LocalLinkAnalysis.collectGraph(und, g)
+    val (edges, _) = LocalTail.collectGraph(und, g)
     val ids = g.vertices.select(col(ID)).collect().map(_.get(0))
       .sortBy(String.valueOf(_))
     val adj = mutable.HashMap.empty[Any, mutable.ArrayBuffer[Any]]

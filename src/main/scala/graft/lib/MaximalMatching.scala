@@ -38,14 +38,12 @@ import graft.GraphFrame
  * Parallel/antiparallel duplicates collapse to the canonical pair with
  * their MAX weight; `(src, dst, weight, round)` is returned.
  */
-class MaximalMatching(g: GraphFrame) {
+class MaximalMatching(g: GraphFrame) extends LocalTail {
   import GraphFrame.{ID, SRC, DST}
 
   private var maxIterV: Int = 100
   private var seedV: Long = 42L
   private var weightColV: Option[String] = None
-  private var smallGraphThresholdV: Long =
-    graft.GraftConf.linkAnalysisSmallGraphThreshold.getOrElse(100000L)
 
   def maxIter(n: Int): this.type = {
     require(n >= 1, s"maxIter must be >= 1: $n"); maxIterV = n; this
@@ -57,10 +55,9 @@ class MaximalMatching(g: GraphFrame) {
     require(g.edges.columns.contains(c), s"edges have no column '$c'")
     weightColV = Some(c); this
   }
-  /** EDGE-count threshold for the bounded driver tail (0 disables). The
-   * tail replays the identical md5 rounds, so the paths agree exactly. */
-  def setSmallGraphThreshold(n: Long): this.type = { smallGraphThresholdV = n; this }
 
+  /** The driver tail replays the identical md5 rounds, so the paths agree
+   * exactly. */
   def run(): DataFrame = {
     // canonical simple undirected edges; parallel/antiparallel duplicates
     // collapse with their MAX weight (deterministic, favors the dominant
@@ -82,12 +79,10 @@ class MaximalMatching(g: GraphFrame) {
       .select(least(col(SRC), col(DST)).as("ea"),
         greatest(col(SRC), col(DST)).as("eb"), (wExpr + lit(0.0)).as("_w"))
       .groupBy("ea", "eb").agg(max(col("_w")).as("_w"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    if (smallGraphThresholdV > 0 && und.count() <= smallGraphThresholdV) {
-      val r = runLocal(und)
-      und.unpersist(false)
-      return r
-    }
+    gate(und, pinForDistributed = true)(runLocal)(runDistributed)
+  }
+
+  private def runDistributed(und: DataFrame): DataFrame = {
     val mgr = IterationManager.withReliableDir(g.spark, None)
     var er = mgr.cycle(und, 0)
     var matched: Option[DataFrame] = None
@@ -143,7 +138,6 @@ class MaximalMatching(g: GraphFrame) {
     // the finish cut copied the matched rows — release the per-round
     // winner cuts' RDD blocks eagerly
     winnerCuts.foreach(IterationManager.release)
-    und.unpersist(false)
     out
   }
 

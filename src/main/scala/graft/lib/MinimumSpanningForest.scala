@@ -2,7 +2,7 @@ package graft.lib
 
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{DoubleType, StructField, StructType}
+import org.apache.spark.sql.types.{DataType, DoubleType, StructField, StructType}
 import graft.GraphFrame
 
 /**
@@ -29,24 +29,19 @@ import graft.GraphFrame
  * are compared as doubles: integral weights above 2^53 would collide —
  * use pre-scaled weights if you have them.
  */
-class MinimumSpanningForest(g: GraphFrame) {
+class MinimumSpanningForest(g: GraphFrame) extends LocalTail {
   import GraphFrame.{ID, SRC, DST}
 
   private var weightColV: String = ""
-  private var smallGraphThresholdV: Long =
-    graft.GraftConf.linkAnalysisSmallGraphThreshold.getOrElse(100000L)
 
   /** REQUIRED: numeric edge column to minimize. Null-weighted edges are
    * ignored (an edge with no cost is an edge you cannot rank). */
   def weightCol(c: String): this.type = { weightColV = c; this }
-  /** EDGE-count threshold for the bounded driver-side Kruskal tail
-   * (0 disables); the collect is ≤ threshold (a, b, w) triples. Full
-   * bounded-path matrix: docs/THRESHOLDS.md. */
-  def setSmallGraphThreshold(n: Long): this.type = { smallGraphThresholdV = n; this }
 
   /** Returns the forest's edges: `(src, dst, weight: double)` with
    * `src < dst` (canonical order). Exactly V − C rows for V edge-touching
-   * vertices in C components; isolated vertices contribute nothing. */
+   * vertices in C components; isolated vertices contribute nothing. The
+   * driver-side Kruskal tail collects ≤ threshold (a, b, w) triples. */
   def run(): DataFrame = {
     require(weightColV.nonEmpty, "minimumSpanningForest requires weightCol(...)")
     val idType = g.edges.schema(SRC).dataType
@@ -58,14 +53,10 @@ class MinimumSpanningForest(g: GraphFrame) {
         greatest(col(SRC), col(DST)).as("b"),
         col(weightColV).cast("double").as("w"))
       .groupBy("a", "b").agg(min("w").as("w"))
-      .persist()
-    val localOrd = UnionFind.sparkOrdering(idType)
-    if (smallGraphThresholdV > 0 && localOrd.isDefined &&
-        e.count() <= smallGraphThresholdV) {
-      val r = runLocal(e, localOrd.get)
-      e.unpersist(false)
-      return r
-    }
+    gateOrdered(e, idType, pinForDistributed = true)(runLocal)(runDistributed(_, idType))
+  }
+
+  private def runDistributed(e: DataFrame, idType: DataType): DataFrame = {
     // checkpointInterval 1: comp appears TWICE in every round's candidate
     // join and the hooking table self-joins on top — without a lineage cut
     // per round the analyzed plan tree multiplies ~16× per round and the
@@ -156,7 +147,6 @@ class MinimumSpanningForest(g: GraphFrame) {
     // the finish cut copied the forest rows — release the per-round cuts'
     // RDD blocks (each cut's plan is only its own LogicalRDD)
     forest.foreach(IterationManager.release)
-    e.unpersist(false)
     out
   }
 

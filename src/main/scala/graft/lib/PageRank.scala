@@ -15,7 +15,7 @@ import graft.GraphFrame
  * Returns a GraphFrame: vertices + `pagerank: double`,
  * edges + `weight: double` (1/outDegree of src).
  */
-class PageRank(g: GraphFrame) {
+class PageRank(g: GraphFrame) extends LocalTail {
   import GraphFrame.{ID, SRC, DST}
 
   private var resetProb: Double = 0.15
@@ -46,40 +46,31 @@ class PageRank(g: GraphFrame) {
     reliableDirV = Some(dir); this
   }
 
-  private var smallGraphThresholdV: Long =
-    graft.GraftConf.linkAnalysisSmallGraphThreshold.getOrElse(100000L)
-  /** EDGE-count threshold below which the power iteration finishes in one
-   * bounded driver loop instead of per-round Pregel supersteps — the same
-   * tail as [[Hits]]/[[Katz]] (0 disables; docs/THRESHOLDS.md row 2).
-   * Identical trajectory by construction: same init/teleport/weighted
-   * contribution expressions, same 100-round cap and all-vertices
-   * |Δ| < tol stop probe in tolerance mode (tol mode does NOT gate
-   * messages on activity, so it IS plain power iteration plus the stop
-   * probe — including the isolated vertices, whose one-round
-   * 1.0 → resetProb move participates in the probe). */
-  def setSmallGraphThreshold(n: Long): this.type = { smallGraphThresholdV = n; this }
-
+  /** The driver tail (docs/THRESHOLDS.md row 2) follows the identical
+   * trajectory by construction: same init/teleport/weighted contribution
+   * expressions, same 100-round cap and all-vertices |Δ| < tol stop probe
+   * in tolerance mode (tol mode does NOT gate messages on activity, so it
+   * IS plain power iteration plus the stop probe — including the isolated
+   * vertices, whose one-round 1.0 → resetProb move participates in the
+   * probe). */
   def run(): GraphFrame = {
     weightColV.foreach { w =>
       val wc = col(GraphFrame.quoteName(w))
       require(g.edges.filter(wc.isNull || wc < 0).isEmpty,
         s"pageRank weightCol '$w' must be non-null and >= 0 on every edge")
     }
+    val eNarrow = weightColV match {
+      case Some(w) => g.edges.select(col(SRC), col(DST),
+        col(GraphFrame.quoteName(w)).cast("double").as("_w"))
+      case None => g.edges.select(col(SRC), col(DST), lit(1.0).as("_w"))
+    }
     // maxIter 0 reports the init ranks via the Pregel path's zero-round
     // contract — the tail assumes at least one round
-    if (smallGraphThresholdV > 0 && (tolV.isDefined || maxIterV >= 1)) {
-      val eNarrow = (weightColV match {
-        case Some(w) => g.edges.select(col(SRC), col(DST),
-          col(GraphFrame.quoteName(w)).cast("double").as("_w"))
-        case None => g.edges.select(col(SRC), col(DST), lit(1.0).as("_w"))
-      }).persist()
-      if (eNarrow.count() <= smallGraphThresholdV) {
-        val r = runLocal(eNarrow)
-        eNarrow.unpersist(false)
-        return r
-      }
-      eNarrow.unpersist(false)
-    }
+    gate(eNarrow, eligible = tolV.isDefined || maxIterV >= 1)(runLocal)(
+      _ => runDistributed())
+  }
+
+  private def runDistributed(): GraphFrame = {
     // uniform: per-vertex out-degree; weighted: out-weight sum
     val outDeg = weightColV match {
       case Some(w) => g.edges
@@ -224,7 +215,7 @@ class PageRank(g: GraphFrame) {
     }
 
     val fill = if (personalized) 0.0 else alpha
-    val ranks = LocalLinkAnalysis.joinBack(g, ids,
+    val ranks = LocalTail.joinBack(g, ids,
       Seq(("pagerank", (v: Any) => rank(v), fill)))
     val outDeg = weightColV match {
       case Some(w) => g.edges

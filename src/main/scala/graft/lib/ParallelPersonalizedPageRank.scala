@@ -18,7 +18,7 @@ import graft.GraphFrame
  * `pageranks: array<double>` (the reference uses an ml SparseVector —
  * documented divergence), edges + `weight: double` = 1/outDegree(src).
  */
-class ParallelPersonalizedPageRank(g: GraphFrame) {
+class ParallelPersonalizedPageRank(g: GraphFrame) extends LocalTail {
   import GraphFrame.ID
 
   private var resetProb: Double = 0.15
@@ -29,29 +29,21 @@ class ParallelPersonalizedPageRank(g: GraphFrame) {
   def maxIter(n: Int): this.type = { maxIterV = Some(n); this }
   def sourceIds(ids: Seq[Any]): this.type = { sourcesV = ids; this }
 
-  private var smallGraphThresholdV: Long =
-    graft.GraftConf.linkAnalysisSmallGraphThreshold.getOrElse(100000L)
-  /** Same bounded driver tail as [[PageRank]] (0 disables;
-   * docs/THRESHOLDS.md row 2) — identical per-lane trajectory, with the
-   * lane membership of each vertex resolved by ONE SQL job so numeric
-   * coercion in `id === lit(source)` matches the distributed init. */
-  def setSmallGraphThreshold(n: Long): this.type = { smallGraphThresholdV = n; this }
-
+  /** The driver tail (same as [[PageRank]]'s; docs/THRESHOLDS.md row 2)
+   * follows the identical per-lane trajectory, with the lane membership
+   * of each vertex resolved by ONE SQL job so numeric coercion in
+   * `id === lit(source)` matches the distributed init. */
   def run(): GraphFrame = {
     // both knobs are mandatory, like the reference's builder
     // (ParallelPersonalizedPageRank.scala:69-77 check() requires maxIter
     // and a non-empty sourceIds before running)
     require(maxIterV.nonEmpty, "parallelPersonalizedPageRank: maxIter required")
     require(sourcesV.nonEmpty, "parallelPersonalizedPageRank: sourceIds required")
-    if (smallGraphThresholdV > 0 && maxIterV.get >= 1) {
-      val e = g.edges.select(col(GraphFrame.SRC), col(GraphFrame.DST)).persist()
-      if (e.count() <= smallGraphThresholdV) {
-        val r = runLocal(e)
-        e.unpersist(false)
-        return r
-      }
-      e.unpersist(false)
-    }
+    gate(g.edges.select(col(GraphFrame.SRC), col(GraphFrame.DST)),
+      eligible = maxIterV.get >= 1)(runLocal)(_ => runDistributed())
+  }
+
+  private def runDistributed(): GraphFrame = {
     val outDeg = g.outDegrees
     val v = g.vertices.join(outDeg, Seq(ID), "left_outer")
       .na.fill(0, Seq("outDegree"))

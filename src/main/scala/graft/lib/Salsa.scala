@@ -33,19 +33,15 @@ import graft.GraphFrame
  * below the link-analysis threshold a bounded driver tail runs the same
  * recurrence in sorted-edge order (docs/THRESHOLDS.md row 2 family).
  */
-class Salsa(g: GraphFrame) {
+class Salsa(g: GraphFrame) extends LocalTail {
   import GraphFrame.{ID, SRC, DST}
 
   private var maxIterV: Int = 5
-  private var smallGraphThresholdV: Long =
-    graft.GraftConf.linkAnalysisSmallGraphThreshold.getOrElse(100000L)
 
   def maxIter(n: Int): this.type = {
     require(n >= 1, s"SALSA needs maxIter >= 1, got $n")
     maxIterV = n; this
   }
-  /** EDGE-count threshold for the bounded driver tail (0 disables). */
-  def setSmallGraphThreshold(n: Long): this.type = { smallGraphThresholdV = n; this }
   /** Rounds chained lazily per lineage cut (default 2; ≤ 8) — see
    * [[Eigenvector.roundsPerCycle]] for the cost model. No overflow guard
    * to clamp to: the walk normalization keeps scores bounded. */
@@ -69,12 +65,10 @@ class Salsa(g: GraphFrame) {
     val e = e0.join(od, SRC).join(idg, DST)
       .select(col(SRC), col(DST),
         (lit(1.0) / col("_od")).as("_wout"), (lit(1.0) / col("_id")).as("_win"))
-      .persist()
-    if (smallGraphThresholdV > 0 && e.count() <= smallGraphThresholdV) {
-      val r = runLocal(e)
-      e.unpersist(false)
-      return r
-    }
+    gate(e, pinForDistributed = true)(runLocal)(runDistributed)
+  }
+
+  private def runDistributed(e: DataFrame): DataFrame = {
     // interval 1: each chunk of roundsPerCycle lazily-chained rounds is
     // one cut, with the final L1 sums fused into the last chunk's job
     val mgr = new IterationManager(1)
@@ -113,13 +107,11 @@ class Salsa(g: GraphFrame) {
         sh = dbl(obs(0)); sa = dbl(obs(1))
       } else state = mgr.cycle(cur, cycleIdx)
     }
-    val result = mgr.finish(g.vertices.join(
+    mgr.finish(g.vertices.join(
       state.select(col(ID),
         (if (sh > 0) col("hub") / sh else lit(0.0)).as("hub"),
         (if (sa > 0) col("authority") / sa else lit(0.0)).as("authority")),
       Seq(ID), "left_outer"))
-    e.unpersist(false)
-    result
   }
 
   /** Driver tail: identical recurrence and weight products, sorted-edge
@@ -149,7 +141,7 @@ class Salsa(g: GraphFrame) {
     }
     val sh = vids.iterator.map(hub).sum
     val sa = vids.iterator.map(auth).sum
-    LocalLinkAnalysis.joinBack(g, vids, Seq(
+    LocalTail.joinBack(g, vids, Seq(
       ("hub", (v: Any) => if (sh > 0) hub(v) / sh else 0.0, 0.0),
       ("authority", (v: Any) => if (sa > 0) auth(v) / sa else 0.0, 0.0)))
   }

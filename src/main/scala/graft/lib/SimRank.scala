@@ -38,7 +38,7 @@ import graft.GraphFrame
  * the rounds finish in a bounded driver tail — same contribution
  * multiset, sorted accumulation order (docs/THRESHOLDS.md).
  */
-class SimRank(g: GraphFrame) {
+class SimRank(g: GraphFrame) extends LocalTail {
   import GraphFrame.{ID, SRC, DST}
 
   private var cV: Double = 0.8
@@ -46,8 +46,6 @@ class SimRank(g: GraphFrame) {
   private var minSimV: Double = 0.0
   private var maxPairsV: Long =
     graft.GraftConf.simRankMaxPairs.getOrElse(100000000L)
-  private var smallGraphThresholdV: Long =
-    graft.GraftConf.linkAnalysisSmallGraphThreshold.getOrElse(100000L)
   private val tailVertexBound = 2000L
 
   def setC(c: Double): this.type = {
@@ -60,14 +58,11 @@ class SimRank(g: GraphFrame) {
     require(t >= 0, s"minSim must be >= 0: $t"); minSimV = t; this }
   /** Fail-loud pair-state budget per round (0 disables). */
   def setMaxPairs(n: Long): this.type = { maxPairsV = n; this }
-  /** EDGE-count threshold for the bounded driver tail (0 disables);
-   * the tail additionally requires ≤ 2000 vertices so the local pair
-   * map stays bounded. Full matrix: docs/THRESHOLDS.md. */
-  def setSmallGraphThreshold(n: Long): this.type = { smallGraphThresholdV = n; this }
 
   /** Returns canonical vertex pairs `(a, b, simrank)` with a < b and
    * simrank > minSim after `maxIter` rounds (the diagonal, identically
-   * 1, is omitted). */
+   * 1, is omitted). Besides the edge threshold, the driver tail requires
+   * ≤ 2000 vertices so the local pair map stays bounded. */
   def run(): DataFrame = {
     val e = g.edges.select(col(SRC), col(DST))
       .filter(col(SRC).isNotNull && col(DST).isNotNull)
@@ -77,15 +72,11 @@ class SimRank(g: GraphFrame) {
       // USING-joins move the key column first — restore (src, dst) order
       // because the tail's collectGraph reads edge tuples positionally
       .select(col(SRC), col(DST))
-      .persist()
-    val ordOpt = UnionFind.sparkOrdering(g.vertices.schema(ID).dataType)
-    if (smallGraphThresholdV > 0 && ordOpt.isDefined &&
-        e.count() <= smallGraphThresholdV &&
-        g.vertices.count() <= tailVertexBound) {
-      val r = runLocal(e, ordOpt.get)
-      e.unpersist(false)
-      return r
-    }
+    gateOrdered(e, g.vertices.schema(ID).dataType, pinForDistributed = true,
+      andIf = g.vertices.count() <= tailVertexBound)(runLocal)(runDistributed)
+  }
+
+  private def runDistributed(e: DataFrame): DataFrame = {
     val ind = e.groupBy(col(DST).as("_v")).agg(count(lit(1)).as("_d")).persist()
     val vv = g.vertices.select(col(ID))
     val mgr = new IterationManager(1)
@@ -116,7 +107,6 @@ class SimRank(g: GraphFrame) {
     }
     val result = mgr.finish(state.select(col("a"), col("b"), col("s").as("simrank")))
     ind.unpersist(false)
-    e.unpersist(false)
     result
   }
 
@@ -126,7 +116,7 @@ class SimRank(g: GraphFrame) {
    * same total order the distributed `na < nb` comparison uses. */
   private def runLocal(e: DataFrame, ord: Ordering[Any]): DataFrame = {
     import scala.collection.mutable
-    val (edges, vids) = LocalLinkAnalysis.collectGraph(e, g)
+    val (edges, vids) = LocalTail.collectGraph(e, g)
     val valid = vids.toSet
     val kept = edges.filter { case (s, d) => valid(s) && valid(d) }
     val out = mutable.HashMap.empty[Any, mutable.ArrayBuffer[Any]]

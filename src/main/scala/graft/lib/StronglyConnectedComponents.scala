@@ -20,47 +20,37 @@ import graft.GraphFrame
  *
  * Output: original vertices + `component: long`.
  */
-class StronglyConnectedComponents(g: GraphFrame) {
+class StronglyConnectedComponents(g: GraphFrame) extends LocalTail {
   import GraphFrame.{ID, LONG_ID, LONG_SRC, LONG_DST}
 
   private var maxIterV: Int = 100
   private var reliableDirV: Option[String] = None
-  private var smallGraphThresholdV: Long =
-    graft.GraftConf.linkAnalysisSmallGraphThreshold.getOrElse(100000L)
 
   def maxIter(n: Int): this.type = { maxIterV = n; this }
   /** Reliable checkpointing under `dir` (see ConnectedComponents). */
   def setUseReliableCheckpoint(dir: String): this.type = {
     reliableDirV = Some(dir); this
   }
-  /** Same bounded driver tail as [[Hits]]/[[PageRank]] (0 disables;
-   * docs/THRESHOLDS.md row 2). The tail SIMULATES the distributed
-   * algorithm (trim fixpoint → max-color fixpoint → root sweeps → peel,
-   * capped at maxIter outer rounds) rather than substituting Tarjan —
-   * both fixpoints are schedule-independent, so the labels are identical
-   * even when the outer-round cap truncates assignment. */
-  def setSmallGraphThreshold(n: Long): this.type = { smallGraphThresholdV = n; this }
 
   private def newMgr(): IterationManager =
     IterationManager.withReliableDir(g.spark, reliableDirV)
 
+  /** The driver tail (docs/THRESHOLDS.md row 2) SIMULATES the
+   * distributed algorithm (trim fixpoint → max-color fixpoint → root
+   * sweeps → peel, capped at maxIter outer rounds) rather than
+   * substituting Tarjan — both fixpoints are schedule-independent, so the
+   * labels are identical even when the outer-round cap truncates
+   * assignment. */
   def run(): DataFrame = {
     val iv = g.indexedVertices.select(col(LONG_ID).as("vid"), col(ID))
     val e0 = g.indexedEdges
       .select(col(LONG_SRC).as("src"), col(LONG_DST).as("dst"))
       .filter(col("src") =!= col("dst"))
       .distinct()
+    gate(e0)(runLocal(iv, _))(runDistributed(iv, _))
+  }
 
-    if (smallGraphThresholdV > 0) {
-      val eP = e0.persist()
-      if (eP.count() <= smallGraphThresholdV) {
-        val r = runLocal(iv, eP)
-        eP.unpersist(false)
-        return r
-      }
-      eP.unpersist(false)
-    }
-
+  private def runDistributed(iv: DataFrame, e0: DataFrame): DataFrame = {
     val remMgr = newMgr()
     val reMgr = newMgr()
     var rem = remMgr.persistOnly(iv.select(col("vid")))
@@ -204,7 +194,7 @@ class StronglyConnectedComponents(g: GraphFrame) {
   }
 
   /** Driver tail: simulates the exact distributed schedule on the
-   * collected long-id edge set (see setSmallGraphThreshold). Vertices
+   * collected long-id edge set (see [[run]]). Vertices
    * the loop never assigns — trimmed singletons, isolates beyond the
    * peel, anything past the outer cap — are labeled with their own vid
    * by the same coalesce the distributed path uses. */

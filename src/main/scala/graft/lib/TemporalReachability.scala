@@ -28,7 +28,7 @@ import graft.GraphFrame
  * Returns (id, arrival): earliest arrival time per vertex, null when
  * unreachable within `maxIter` hops; the source arrives at `startTime`.
  */
-class TemporalReachability(g: GraphFrame) {
+class TemporalReachability(g: GraphFrame) extends LocalTail {
   import GraphFrame.{ID, SRC, DST}
 
   private var sourceV: Any = _
@@ -36,8 +36,6 @@ class TemporalReachability(g: GraphFrame) {
   private var timeColV: String = "time"
   private var durationColV: Option[String] = None
   private var maxIterV: Int = 50
-  private var smallGraphThresholdV: Long =
-    graft.GraftConf.linkAnalysisSmallGraphThreshold.getOrElse(100000L)
 
   /** Source vertex id (required). */
   def source(id: Any): this.type = { sourceV = id; this }
@@ -51,18 +49,6 @@ class TemporalReachability(g: GraphFrame) {
   def maxIter(n: Int): this.type = {
     require(n >= 1, s"maxIter must be >= 1: $n"); maxIterV = n; this
   }
-  /** EDGE-count threshold below which the label-correcting loop runs as
-   * one bounded driver pass (the link-analysis family tail; 0 disables).
-   * The tail is LEVEL-SYNCHRONOUS (each sweep reads only the previous
-   * sweep's arrivals), so it agrees with the distributed rounds exactly
-   * even when `maxIter` binds before the fixpoint — round k holds the
-   * best ≤ k-hop journey on both paths. (At the fixpoint any relaxation
-   * order agrees anyway: earliest arrival is the unique monotone
-   * fixpoint.) */
-  def setSmallGraphThreshold(n: Long): this.type = {
-    smallGraphThresholdV = n; this
-  }
-
   /** Relaxation hops CHAINED LAZILY per materialized round (default 1 —
    * one hop per lineage cut). Earliest arrival is a monotone fixpoint, so
    * k level-synchronous sweeps compose into one plan with the per-vertex
@@ -83,6 +69,12 @@ class TemporalReachability(g: GraphFrame) {
   }
   private var hopsPerCycleV: Int = 1
 
+  /** The driver tail runs the label-correcting loop as one bounded pass.
+   * It is LEVEL-SYNCHRONOUS (each sweep reads only the previous sweep's
+   * arrivals), so it agrees with the distributed rounds exactly even when
+   * `maxIter` binds before the fixpoint — round k holds the best ≤ k-hop
+   * journey on both paths. (At the fixpoint any relaxation order agrees
+   * anyway: earliest arrival is the unique monotone fixpoint.) */
   def run(): DataFrame = {
     require(sourceV != null, "temporalReachability requires source(id)")
     require(g.edges.columns.contains(timeColV),
@@ -92,12 +84,10 @@ class TemporalReachability(g: GraphFrame) {
         col(timeColV).cast("double").as("_t"),
         (col(timeColV).cast("double") + dur).as("_arr"))
       .filter(col("_t").isNotNull)
-      .persist()
-    if (smallGraphThresholdV > 0 && e.count() <= smallGraphThresholdV) {
-      val r = runLocal(e)
-      e.unpersist(false)
-      return r
-    }
+    gate(e, pinForDistributed = true)(runLocal)(runDistributed)
+  }
+
+  private def runDistributed(e: DataFrame): DataFrame = {
     // interval 1: every cycle cuts, and cycleCounted fuses the
     // convergence count into the cut's own job — no separate action
     val mgr = new IterationManager(1)
@@ -140,9 +130,7 @@ class TemporalReachability(g: GraphFrame) {
       improved = imp
       state = next
     }
-    val result = mgr.finish(state.select(col(ID), col("arrival")))
-    e.unpersist(false)
-    result
+    mgr.finish(state.select(col(ID), col("arrival")))
   }
 
   /** Driver tail: LEVEL-SYNCHRONOUS relaxation over the collected edge

@@ -56,15 +56,10 @@ import graft.GraphFrame
  * articulation points and min-id 2ECC labels are graph INVARIANTS, so
  * the two paths agree exactly (no float, no tie ambiguity).
  */
-class TwoConnectivity(g: GraphFrame) {
+class TwoConnectivity(g: GraphFrame) extends LocalTail {
   import GraphFrame.{ID, SRC, DST}
 
-  private var smallGraphThresholdV: Long =
-    graft.GraftConf.linkAnalysisSmallGraphThreshold.getOrElse(100000L)
   private var maxAncestorRowsV: Long = 2000000000L
-
-  /** EDGE-count threshold for the bounded driver tail (0 disables). */
-  def setSmallGraphThreshold(n: Long): this.type = { smallGraphThresholdV = n; this }
 
   /** Fail-loud budget on Σ(depth(v)+1) ancestor rows (0 disables). */
   def setMaxAncestorRows(n: Long): this.type = {
@@ -106,13 +101,9 @@ class TwoConnectivity(g: GraphFrame) {
   private def runFor(mode: Mode.Value): DataFrame = runModes(Set(mode))(mode)
 
   private def runModes(modes: Set[Mode.Value]): Map[Mode.Value, DataFrame] = {
-    val und = canonical.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val results =
-      if (smallGraphThresholdV > 0 && und.count() <= smallGraphThresholdV) {
-        val r = modes.iterator.map(m => m -> runLocal(und, m)).toMap
-        und.unpersist(false)
-        r
-      } else runDistributed(und, modes)
+    val results = gate(canonical, pinForDistributed = true)(
+      und => modes.iterator.map(m => m -> runLocal(und, m)).toMap)(
+      runDistributed(_, modes))
     results.map { case (m, result) =>
       m -> (if (m == Mode.Bridges)
         result.select(col("ea").as(SRC), col("eb").as(DST), col("is_bridge"))
@@ -414,7 +405,6 @@ class TwoConnectivity(g: GraphFrame) {
     val keys = readouts.keys.toSeq
     val cut = mgr.finishAll(keys.map(readouts))
     mgrD.close()
-    und.unpersist(false)
     keys.zip(cut).toMap
   }
 }

@@ -159,6 +159,117 @@ class CacheHygieneSpec extends TestBase {
     }
   }
 
+  // Every builder with a bounded driver tail goes through the one
+  // LocalTail gate. (a) Its probe of a caller-cached edge frame reads that
+  // cache and never evicts it — `edges.select(src, dst)` canonicalizes
+  // `sameResult` with cached (src, dst) edges, so unpersisting the probe
+  // used to uncache the caller's frame — on the tail (threshold high) and
+  // the distributed (threshold 0) path alike. (b) When the probe's count
+  // throws, whatever the gate pinned is released again: no persisted RDD
+  // and no CacheManager entry is left behind.
+  private case class TailCase(name: String, edgeCols: Seq[String],
+      run: (GraphFrame, Long) => org.apache.spark.sql.DataFrame)
+
+  private val tailCases = Seq(
+    TailCase("connectedComponents", Nil,
+      (g, t) => g.connectedComponents.setSmallGraphThreshold(t).run()),
+    TailCase("stronglyConnectedComponents", Nil,
+      (g, t) => g.stronglyConnectedComponents.maxIter(3).setSmallGraphThreshold(t).run()),
+    TailCase("labelPropagation", Nil,
+      (g, t) => g.labelPropagation.maxIter(2).setSmallGraphThreshold(t).run()),
+    TailCase("pageRank", Nil,
+      (g, t) => g.pageRank.maxIter(2).setSmallGraphThreshold(t).run().vertices),
+    TailCase("parallelPersonalizedPageRank", Nil,
+      (g, t) => g.parallelPersonalizedPageRank.sourceIds(Seq("a")).maxIter(2)
+        .setSmallGraphThreshold(t).run().vertices),
+    TailCase("kCore", Nil, (g, t) => g.kCore.setSmallGraphThreshold(t).run()),
+    TailCase("hits", Nil, (g, t) => g.hits.maxIter(2).setSmallGraphThreshold(t).run()),
+    TailCase("katz", Nil, (g, t) => g.katz.maxIter(2).setSmallGraphThreshold(t).run()),
+    TailCase("eigenvector", Nil,
+      (g, t) => g.eigenvector.maxIter(2).setSmallGraphThreshold(t).run()),
+    TailCase("salsa", Nil, (g, t) => g.salsa.maxIter(2).setSmallGraphThreshold(t).run()),
+    TailCase("simRank", Nil,
+      (g, t) => g.simRank.maxIter(1).setSmallGraphThreshold(t).run()),
+    TailCase("twoConnectivity", Nil,
+      (g, t) => g.twoConnectivity.setSmallGraphThreshold(t).bridges()),
+    TailCase("minimumSpanningForest", Seq("w"),
+      (g, t) => g.minimumSpanningForest.weightCol("w").setSmallGraphThreshold(t).run()),
+    TailCase("betweenness", Nil, (g, t) => g.betweenness.setSmallGraphThreshold(t).run()),
+    TailCase("betweenness edges", Nil,
+      (g, t) => g.betweenness.setSmallGraphThreshold(t).runEdges()),
+    TailCase("betweenness weighted", Seq("w"),
+      (g, t) => g.betweenness.weightCol("w").setSmallGraphThreshold(t).run()),
+    TailCase("closeness", Nil, (g, t) => g.closeness.setSmallGraphThreshold(t).run()),
+    TailCase("closeness weighted", Seq("w"),
+      (g, t) => g.closeness.weightCol("w").setSmallGraphThreshold(t).run()),
+    TailCase("eccentricity", Nil, (g, t) => g.eccentricity.setSmallGraphThreshold(t).run()),
+    TailCase("eccentricity weighted", Seq("w"),
+      (g, t) => g.eccentricity.weightCol("w").setSmallGraphThreshold(t).run()),
+    TailCase("detectingCycles", Nil,
+      (g, t) => g.detectingCycles.maxIter(3).setSmallGraphThreshold(t).run()),
+    TailCase("maximalIndependentSet", Nil,
+      (g, t) => g.maximalIndependentSet.setHashMode("md5").setSmallGraphThreshold(t).run()),
+    TailCase("maximalMatching", Nil,
+      (g, t) => g.maximalMatching.setSmallGraphThreshold(t).run()),
+    TailCase("greedyColoring", Nil,
+      (g, t) => g.greedyColoring.setHashMode("md5").setSmallGraphThreshold(t).run()),
+    TailCase("louvain", Nil, (g, t) => g.louvain.maxIter(2).setSmallGraphThreshold(t).run()),
+    TailCase("independentCascade", Nil,
+      (g, t) => new lib.IndependentCascade(g).p(1.0).maxIter(2)
+        .setSmallGraphThreshold(t).run(Seq("a"))),
+    TailCase("temporalReachability", Seq("time"),
+      (g, t) => new lib.TemporalReachability(g).source("a").maxIter(2)
+        .setSmallGraphThreshold(t).run()))
+
+  /** The friends graph's edges narrowed to (src, dst) plus `extra` columns;
+   * `src` is wrapped in `wrapSrc`. Built over an RDD, not a local
+   * relation, so the optimizer cannot evaluate `wrapSrc` while planning:
+   * it runs in the first job that reads the edges. */
+  private def tailEdges(extra: Seq[String],
+      wrapSrc: org.apache.spark.sql.Column => org.apache.spark.sql.Column = c => c) = {
+    val base = spark.createDataFrame(friends.edges.rdd, friends.edges.schema)
+    val cols = Seq(wrapSrc(col("src")).as("src"), col("dst")) ++ extra.map {
+      case "w" => lit(1.0).as("w")
+      case "time" => lit(1.0).as("time")
+    }
+    base.select(cols: _*)
+  }
+
+  test("driver-tail gate keeps a caller-cached edge frame cached on both paths") {
+    val evicted = for (c <- tailCases; t <- Seq(100000L, 0L)) yield {
+      spark.catalog.clearCache()
+      val edges = tailEdges(c.edgeCols).persist()
+      edges.count()
+      c.run(GraphFrame(friends.vertices, edges), t).count()
+      val kept = edges.storageLevel != org.apache.spark.storage.StorageLevel.NONE
+      edges.unpersist(true)
+      if (kept) None else Some(s"${c.name} (threshold $t)")
+    }
+    assert(evicted.flatten.isEmpty, "evicted the caller's cached edges")
+  }
+
+  test("driver-tail gate releases its pin when the probe count throws") {
+    val leaks = tailCases.flatMap { c =>
+      spark.catalog.clearCache()
+      spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(true))
+      val edges = tailEdges(c.edgeCols,
+        s => when(s === "a", raise_error(lit("probe failure"))).otherwise(s))
+      val before = leftoverIds()
+      val err = intercept[Exception] {
+        c.run(GraphFrame(friends.vertices, edges), 100000L).count()
+      }
+      assert(String.valueOf(err.getMessage).contains("probe failure"),
+        s"${c.name} failed elsewhere: $err")
+      val rdds = leftoverIds() -- before
+      // a frame persisted but never materialized holds no RDD yet: its
+      // CacheManager entry must be gone too
+      val entries = !org.apache.spark.sql.graftshim.CacheProbe.isEmpty(spark)
+      if (rdds.isEmpty && !entries) None
+      else Some(s"${c.name}: RDDs ${rdds.toSeq.sorted}, cache entries left: $entries")
+    }
+    assert(leaks.isEmpty, "left pinned frames after a failed probe")
+  }
+
   // r15 (ADVICE item): hostRank's host-edge pin is operator-internal —
   // the result must be self-contained on BOTH PageRank paths (the local
   // tail's join-back used to reference the cached edges, pinning a

@@ -719,6 +719,41 @@ class ConnectPluginSpec extends TestBase {
       gr.filter("n_words >= 1").count() == 4, gr.count().toString)
   }
 
+  test("pipe_hash_sample seed: typed, range-checked, and honored") {
+    val docs = spark.sql(docSql)
+    def run(params: String) =
+      GraftConnectDispatch.run(scala.None, docs, "pipe_hash_sample", params)
+    val viaConnect = run("""{"idCol": "doc_id", "fraction": 0.5, "seed": 7}""")
+    val direct = pipeline.Sampling.hashSample(docs, "doc_id", 0.5, seed = 7L)
+    assert(rows(viaConnect) == rows(direct))
+    assert(rows(run("""{"idCol": "doc_id", "fraction": 0.5, "seed": 7.0}""")) == rows(direct))
+    for (bad <- Seq("\"7\"", "7.5", "18446744073709551616")) {
+      val err = intercept[IllegalArgumentException] {
+        run(s"""{"idCol": "doc_id", "fraction": 0.5, "seed": $bad}""")
+      }
+      assert(err.getMessage.contains("'seed'") && err.getMessage.contains("64-bit"),
+        s"seed $bad: ${err.getMessage}")
+    }
+  }
+
+  test("rw_embeddings and random_walks seeds: typed and range-checked") {
+    val v = spark.sql("SELECT * FROM VALUES (0L),(1L),(2L) AS t(id)")
+    val e = spark.sql("SELECT * FROM VALUES (0L,1L),(1L,2L),(2L,0L) AS t(src, dst)")
+    def run(alg: String, params: String) =
+      GraftConnectDispatch.run(Some(v), e, alg, params)
+    val emb = """"dim": 4, "walkLength": 2, "walksPerVertex": 1"""
+    assert(run("rw_embeddings", s"""{$emb, "seed": 9223372036854775807}""").count() == 3)
+    for ((alg, base) <- Seq("rw_embeddings" -> emb,
+        "random_walks" -> """"walkLength": 2, "walksPerVertex": 1""");
+        bad <- Seq("\"7\"", "-9223372036854775809")) {
+      val err = intercept[IllegalArgumentException] {
+        run(alg, s"""{$base, "seed": $bad}""")
+      }
+      assert(err.getMessage.contains("'seed'") && err.getMessage.contains("64-bit"),
+        s"$alg seed $bad: ${err.getMessage}")
+    }
+  }
+
   test("pipeline op with a vertices relation fails loudly") {
     val docs = spark.sql(docSql)
     val err = intercept[IllegalArgumentException] {

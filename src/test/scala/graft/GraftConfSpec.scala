@@ -67,6 +67,32 @@ class GraftConfSpec extends TestBase {
     }
   }
 
+  test("a negative small-graph threshold is rejected, not read as 'disabled'") {
+    val builders: Seq[Long => Any] = Seq(
+      friends.connectedComponents.setSmallGraphThreshold(_),
+      friends.hits.setSmallGraphThreshold(_),
+      friends.louvain.setSmallGraphThreshold(_))
+    for (set <- builders) {
+      val e = intercept[IllegalArgumentException] { set(-1L) }
+      assert(e.getMessage.contains("-1"))
+      set(0L) // 0 still disables the tail
+    }
+  }
+
+  test("malformed or negative small-graph threshold confs name their key") {
+    val readers: Seq[(String, () => Any)] = Seq(
+      GraftConf.CcSmallGraphThresholdKey -> (() => friends.connectedComponents),
+      GraftConf.LinkAnalysisSmallGraphThresholdKey -> (() => friends.pageRank))
+    for ((key, build) <- readers; bad <- Seq("lots", "1e5", "-1")) {
+      withConf(key -> bad) {
+        val e = intercept[IllegalArgumentException] { build() }
+        assert(!e.isInstanceOf[NumberFormatException], s"$key=$bad: bare $e")
+        assert(e.getMessage.contains(key) && e.getMessage.contains(bad.stripPrefix("-")),
+          s"$key=$bad: ${e.getMessage}")
+      }
+    }
+  }
+
   test("cc checkpoint interval + small-graph threshold confs parse and run") {
     withConf(GraftConf.CcCheckpointIntervalKey -> "3",
         GraftConf.CcSmallGraphThresholdKey -> "0") {
