@@ -58,12 +58,18 @@ class GraphFrameMethods:
     def pregel(self, vertexColName: str, initExpr: str, updateExpr: str,
                aggMsgs: str, sendToDst: Optional[str] = None,
                sendToSrc: Optional[str] = None, maxIter: Optional[int] = None,
-               checkpointInterval: Optional[int] = None):
+               checkpointInterval: Optional[int] = None,
+               requiredSrcColumns: Optional[str] = None,
+               requiredDstColumns: Optional[str] = None):
+        """``requiredSrcColumns``/``requiredDstColumns``: comma-joined
+        vertex columns the messages read, as in the reference proto."""
         return self._call(
             "pregel", vertexColName=vertexColName, initExpr=initExpr,
             updateExpr=updateExpr, aggMsgs=aggMsgs, sendToDst=sendToDst,
             sendToSrc=sendToSrc, maxIter=maxIter,
-            checkpointInterval=checkpointInterval)
+            checkpointInterval=checkpointInterval,
+            requiredSrcColumns=requiredSrcColumns,
+            requiredDstColumns=requiredDstColumns)
 
     def aggregateMessages(self, aggCol: str, sendToDst: Optional[str] = None,
                           sendToSrc: Optional[str] = None):
@@ -125,20 +131,29 @@ class GraphFrameMethods:
                           maxIter=maxIter, isDirected=isDirected,
                           weightCol=weightCol)
 
-    def labelPropagation(self, maxIter: Optional[int] = None):
-        return self._call("label_propagation", maxIter=maxIter)
+    def labelPropagation(self, maxIter: Optional[int] = None,
+                         algorithm: Optional[str] = None,
+                         isDirected: Optional[bool] = None):
+        return self._call("label_propagation", maxIter=maxIter,
+                          algorithm=algorithm, isDirected=isDirected)
 
-    def triangleCount(self):
-        return self._call("triangle_count")
+    def triangleCount(self, algorithm: Optional[str] = None,
+                      lgNomEntries: Optional[int] = None):
+        return self._call("triangle_count", algorithm=algorithm,
+                          lgNomEntries=lgNomEntries)
 
-    def hits(self, maxIter: Optional[int] = None):
+    def hits(self, maxIter: Optional[int] = None,
+             roundsPerCycle: Optional[int] = None):
         """HITS hubs/authorities (engine extension)."""
-        return self._call("hits", maxIter=maxIter)
+        return self._call("hits", maxIter=maxIter,
+                          roundsPerCycle=roundsPerCycle)
 
-    def salsa(self, maxIter: Optional[int] = None):
+    def salsa(self, maxIter: Optional[int] = None,
+              roundsPerCycle: Optional[int] = None):
         """SALSA stochastic hubs/authorities: HITS with per-edge
         1/outdeg, 1/indeg weights (walk-normalized; L1 output)."""
-        return self._call("salsa", maxIter=maxIter)
+        return self._call("salsa", maxIter=maxIter,
+                          roundsPerCycle=roundsPerCycle)
 
     def influenceMax(self, k: Optional[int] = None,
                      mode: Optional[str] = None, p: Optional[float] = None):
@@ -172,7 +187,8 @@ class GraphFrameMethods:
 
     def maximalMatching(self, maxIter: Optional[int] = None,
                         seed: Optional[int] = None,
-                        weightCol: Optional[str] = None):
+                        weightCol: Optional[str] = None,
+                        smallGraphThreshold: Optional[int] = None):
         """Maximal matching by locally-minimum md5 edge priorities (the
         edge-centric Luby sibling of maximalIndependentSet): rows
         (src, dst, round) with src < dst; deterministic per seed.
@@ -180,7 +196,8 @@ class GraphFrameMethods:
         md5 tie-break) — the Preis greedy 1/2-approximation of maximum
         weight matching; rows gain a ``weight`` column."""
         return self._call("maximal_matching", maxIter=maxIter, seed=seed,
-                          weightCol=weightCol)
+                          weightCol=weightCol,
+                          smallGraphThreshold=smallGraphThreshold)
 
     def voronoi(self, seeds: list):
         """Closest-seed (Voronoi) partition: every vertex assigned to the
@@ -201,37 +218,45 @@ class GraphFrameMethods:
 
     def independentCascade(self, seeds: list, p: Optional[float] = None,
                            hashSeed: Optional[int] = None,
-                           maxIter: Optional[int] = None):
+                           maxIter: Optional[int] = None,
+                           smallGraphThreshold: Optional[int] = None):
         """Deterministic Independent-Cascade spread (live-edge
         formulation, one md5 coin per edge): rows (id, round) —
         activation round, 0 = seed, null = never. Vary hashSeed for
         Monte-Carlo repeats; each run replays bit-identically."""
         return self._call("independent_cascade", seeds=seeds, p=p,
-                          hashSeed=hashSeed, maxIter=maxIter)
+                          hashSeed=hashSeed, maxIter=maxIter,
+                          smallGraphThreshold=smallGraphThreshold)
 
     def temporalReachability(self, source, startTime: Optional[float] = None,
                              timeCol: Optional[str] = None,
                              durationCol: Optional[str] = None,
-                             maxIter: Optional[int] = None):
+                             maxIter: Optional[int] = None,
+                             smallGraphThreshold: Optional[int] = None):
         """Earliest-arrival over a temporal graph (edge traversable only
         when its time >= arrival at its source): rows (id, arrival),
         null arrival = not time-respecting-reachable."""
         return self._call("temporal_reachability", source=source,
                           startTime=startTime, timeCol=timeCol,
-                          durationCol=durationCol, maxIter=maxIter)
+                          durationCol=durationCol, maxIter=maxIter,
+                          smallGraphThreshold=smallGraphThreshold)
 
     def katz(self, maxIter: Optional[int] = None,
-             alpha: Optional[float] = None, beta: Optional[float] = None):
+             alpha: Optional[float] = None, beta: Optional[float] = None,
+             roundsPerCycle: Optional[int] = None):
         """Katz centrality (engine extension)."""
-        return self._call("katz", maxIter=maxIter, alpha=alpha, beta=beta)
+        return self._call("katz", maxIter=maxIter, alpha=alpha, beta=beta,
+                          roundsPerCycle=roundsPerCycle)
 
     def eigenvector(self, maxIter: Optional[int] = None,
-                    weightCol: Optional[str] = None):
+                    weightCol: Optional[str] = None,
+                    roundsPerCycle: Optional[int] = None):
         """Eigenvector centrality (engine extension): fixed-round power
         iteration x <- A^T x, sup-normalized once at the end (top vertex
         scores exactly 1.0); weightCol scales each in-neighbor's score by
         the edge weight."""
-        return self._call("eigenvector", maxIter=maxIter, weightCol=weightCol)
+        return self._call("eigenvector", maxIter=maxIter, weightCol=weightCol,
+                          roundsPerCycle=roundsPerCycle)
 
     def minimumSpanningForest(self, weightCol: str):
         """Minimum spanning forest (engine extension): distributed

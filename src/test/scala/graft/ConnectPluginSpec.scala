@@ -754,6 +754,79 @@ class ConnectPluginSpec extends TestBase {
     }
   }
 
+  test("Long-typed keys take 64-bit values; ids out of 64-bit range fail naming the key") {
+    val v = spark.sql("SELECT * FROM VALUES (0L),(1L),(2L) AS t(id)")
+    val e = spark.sql(
+      "SELECT * FROM VALUES (0L,1L,1.0),(1L,2L,2.0) AS t(src, dst, time)")
+    def run(alg: String, params: String) = GraftConnectDispatch.run(Some(v), e, alg, params)
+    // 2^32 is a valid hash seed; the 32-bit reader used to reject it
+    val ic = run("independent_cascade", """{"seeds": [0], "hashSeed": 4294967296}""")
+    assert(ic.columns.toSeq == Seq("id", "round") && ic.count() >= 1)
+    // 2^64 + 1 used to wrap to id 1 and run silently
+    for ((alg, params, key) <- Seq(
+        ("shortest_paths", """{"landmarks": [18446744073709551617]}""", "'landmarks'"),
+        ("temporal_reachability", """{"source": 18446744073709551617}""", "'source'"))) {
+      val err = intercept[IllegalArgumentException](run(alg, params))
+      assert(err.getMessage.contains(key) && err.getMessage.contains("64-bit"),
+        s"$alg: ${err.getMessage}")
+    }
+  }
+
+  test("part accepts only its one recognised value on butterfly and sampling") {
+    val v = spark.sql("SELECT * FROM VALUES (1L),(2L),(10L),(11L) AS t(id)")
+    val e = spark.sql("SELECT * FROM VALUES (1L,10L),(1L,11L),(2L,10L),(2L,11L) AS t(src, dst)")
+    def run(alg: String, params: String) = GraftConnectDispatch.run(Some(v), e, alg, params)
+    for ((alg, bad, accepted) <- Seq(("butterfly", "vertices", "vertex"),
+        ("sample_vertices", "vertex", "vertices"), ("sample_edges", "vertex", "vertices"))) {
+      val err = intercept[IllegalArgumentException](run(alg, s"""{"part": "$bad"}"""))
+      assert(err.getMessage.contains("'part'") && err.getMessage.contains(s""""$accepted""""),
+        s"$alg: ${err.getMessage}")
+    }
+  }
+
+  test("an unknown key is rejected before any Spark job runs") {
+    val docs = spark.sql(docSql)
+    val group = "connect-unknown-key-probe"
+    val jobs = new java.util.concurrent.atomic.AtomicInteger()
+    @volatile var marker = new java.util.concurrent.CountDownLatch(1)
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(js: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        Option(js.properties).map(_.getProperty("spark.jobGroup.id")).orNull match {
+          case `group` => jobs.incrementAndGet()
+          case g if g == group + "-marker" => marker.countDown()
+          case _ =>
+        }
+    }
+    val sc = spark.sparkContext
+    def inGroup[T](g: String)(body: => T): T = {
+      sc.setJobGroup(g, g)
+      try body finally sc.clearJobGroup()
+    }
+    // runs the op in `group`, then one marker job: listener events arrive
+    // in order, so once the marker is seen every earlier job is counted
+    def jobsOf(params: String): Int = {
+      jobs.set(0)
+      marker = new java.util.concurrent.CountDownLatch(1)
+      inGroup(group)(scala.util.Try(
+        GraftConnectDispatch.run(scala.None, docs, "pipe_bpe_train", params)))
+      inGroup(group + "-marker")(spark.range(1).count())
+      assert(marker.await(60, java.util.concurrent.TimeUnit.SECONDS))
+      jobs.get()
+    }
+    sc.addSparkListener(listener)
+    try {
+      assert(jobsOf("""{"textCol": "text", "numMerge": 1}""") == 0)
+      // pipe_bpe_train is eager: spelled right it runs jobs inside run(),
+      // so the probe can see them
+      assert(jobsOf("""{"textCol": "text", "numMerges": 1}""") > 0)
+    } finally sc.removeSparkListener(listener)
+    val err = intercept[IllegalArgumentException] {
+      GraftConnectDispatch.run(scala.None, docs, "pipe_bpe_train",
+        """{"textCol": "text", "numMerge": 1}""")
+    }
+    assert(err.getMessage.contains("numMerge") && err.getMessage.contains("accepted"))
+  }
+
   test("pipeline op with a vertices relation fails loudly") {
     val docs = spark.sql(docSql)
     val err = intercept[IllegalArgumentException] {
@@ -770,6 +843,85 @@ class ConnectPluginSpec extends TestBase {
         """{"idCol": "doc_id", "textCol": "text", "bitz": 8}""")
     }
     assert(err.getMessage.contains("bitz") && err.getMessage.contains("accepted"))
+  }
+
+  test("dispatch covers the ops no other case names (output columns)") {
+    val v = spark.sql(
+      "SELECT * FROM VALUES (0L, 0),(1L, 0),(2L, 1),(3L, 1) AS t(id, comm)")
+    val e = spark.sql("""SELECT * FROM VALUES (0L,1L,2.0,1.0),(1L,2L,3.0,2.0),
+      (2L,0L,4.0,3.0),(2L,3L,1.0,4.0) AS t(src, dst, weight, time)""")
+    val docs = spark.sql(docSql)
+    val events = spark.sql(
+      """SELECT * FROM VALUES (1L, TIMESTAMP '2024-01-01 00:00:00', 7L, 'view', 0.0, ''),
+        |(2L, TIMESTAMP '2024-01-01 00:05:00', 7L, 'purchase', 9.5, '')
+        |AS t(event_id, ts, user_id, event_type, value, props)""".stripMargin)
+    val img = new java.awt.image.BufferedImage(4, 4,
+      java.awt.image.BufferedImage.TYPE_INT_RGB)
+    val ibos = new java.io.ByteArrayOutputStream()
+    javax.imageio.ImageIO.write(img, "png", ibos)
+    import spark.implicits._
+    val media = Seq((1L, ibos.toByteArray)).toDF("id", "payload")
+    val points = spark.sql("SELECT 1 AS k, TIMESTAMP '2024-01-01 00:30:00' AS ts")
+    val intervals = spark.sql("SELECT 1 AS k, TIMESTAMP '2024-01-01 00:00:00' AS s, " +
+      "TIMESTAMP '2024-01-01 01:00:00' AS e, 7 AS rid")
+    val textIds = """"idCol": "doc_id", "textCol": "text""""
+    // (op, vertices slot, edges slot, params_json, expected output columns)
+    val cases: Seq[(String, Option[DataFrame], DataFrame, String, Seq[String])] = Seq(
+      ("conductance", Some(v), e, """{"attrCol": "comm"}""",
+        Seq("community", "volume", "cut_edges", "internal_edges", "conductance")),
+      ("graph_stats", Some(v), e, "{}",
+        Seq("n_vertices", "n_edges", "n_distinct_edges", "n_self_loops",
+          "max_out_degree", "max_in_degree", "n_isolated", "avg_out_degree")),
+      ("greedy_coloring", Some(v), e, "{}", Seq("id", "comm", "color")),
+      ("hits", Some(v), e, """{"maxIter": 3}""", Seq("id", "comm", "hub", "authority")),
+      ("independent_cascade", Some(v), e, """{"seeds": [0], "p": 0.5}""",
+        Seq("id", "round")),
+      ("influence_max", Some(v), e, """{"k": 1}""", Seq("id", "round", "score")),
+      ("salsa", Some(v), e, """{"maxIter": 3}""", Seq("id", "comm", "hub", "authority")),
+      ("sample_edges", Some(v), e, """{"fraction": 1.0}""",
+        Seq("src", "dst", "weight", "time")),
+      ("sample_vertices", Some(v), e, """{"fraction": 1.0}""",
+        Seq("src", "dst", "weight", "time")),
+      ("sample_vertices", Some(v), e, """{"fraction": 1.0, "part": "vertices"}""",
+        Seq("id", "comm")),
+      ("temporal_reachability", Some(v), e, """{"source": 0}""", Seq("id", "arrival")),
+      ("to_dot", Some(v), e, "{}", Seq("section", "sort_key", "line")),
+      ("pipe_attribution_linear", scala.None, events, "{}",
+        Seq("event_id", "user_id", "n_conversions", "credit")),
+      ("pipe_chunk", scala.None, docs,
+        s"""{$textIds, "chunkWords": 4, "overlapWords": 1}""",
+        Seq("doc_id", "chunk_idx", "chunk_text", "n_words")),
+      ("pipe_contaminated_spans", Some(docs.filter("doc_id = 0")),
+        docs.filter("doc_id <> 0"), s"""{$textIds, "seedTokens": 4}""",
+        Seq("doc_id", "pos", "len", "span")),
+      ("pipe_dedup_quality", scala.None, docs, s"{$textIds}",
+        Seq("n_true", "n_cand", "n_hit", "recall", "precision")),
+      ("pipe_hash_split", scala.None, docs,
+        """{"idCol": "doc_id", "fractions": {"train": 0.5, "test": 0.5}}""",
+        Seq("doc_id", "text", "split")),
+      ("pipe_image_ahash", scala.None, media,
+        """{"idCol": "id", "binCol": "payload", "grid": 2}""",
+        Seq("id", "ahash", "decoded")),
+      ("pipe_nb_classifier", scala.None,
+        docs.selectExpr("doc_id", "text", "CAST(doc_id % 2 AS STRING) AS label"),
+        s"""{$textIds, "labelCol": "label"}""", Seq("doc_id", "predicted", "score")),
+      ("pipe_normalize", scala.None, docs, s"{$textIds}",
+        Seq("doc_id", "norm_text", "n_chars", "n_chars_norm")),
+      ("pipe_range_join", Some(points), intervals,
+        """{"on": ["k"], "leftTs": "ts", "rightStart": "s", "rightEnd": "e",
+          |"rightCols": ["rid"]}""".stripMargin, Seq("k", "ts", "r_rid")),
+      ("pipe_rfm", scala.None, events, "{}",
+        Seq("user_id", "recency_day", "frequency", "monetary_cents", "r", "f", "m")),
+      ("pipe_shuffle_shards", scala.None, docs,
+        """{"idCol": "doc_id", "numShards": 2}""", Seq("doc_id", "shard", "pos")),
+      ("pipe_video_demux", scala.None, media,
+        """{"idCol": "id", "binCol": "payload"}""",
+        Seq("id", "stream", "kind", "frame_idx", "frame")))
+    val wrong = cases.flatMap { case (op, vs, es, params, want) =>
+      val got = GraftConnectDispatch.run(vs, es, op, params).columns.toSeq
+      if (got == want) scala.None else Some(s"$op: got ${got.mkString(", ")}")
+    }
+    assert(wrong.isEmpty, wrong.mkString("\n"))
   }
 
   test("dispatch covers every method of the reference proto surface") {

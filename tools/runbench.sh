@@ -68,5 +68,9 @@ if ! awk -v a="$best_steal" -v m="$MAX_STEAL" 'BEGIN{exit !(a<0 || a<=m)}'; then
   echo "   window to supersede. Copy also parked at tools/bench_quarantine.json. ==" >&2
 fi
 cp "$best" tools/bench_last_run.json
+# stamp the promoted sweep so no consumer compares a polluted one silently:
+# "contended" is true when its steal_cores exceeds MAX_STEAL
+contended=$(awk -v a="$best_steal" -v m="$MAX_STEAL" 'BEGIN{print (a > m) ? "true" : "false"}')
+sed -i '$ s/}[[:space:]]*$/,"contended":'"$contended"'}/' tools/bench_last_run.json
 rm -f tools/bench_attempt_*.json
-echo "== kept sweep: steal_cores=$best_steal total=$(total_of tools/bench_last_run.json)s ==" >&2
+echo "== kept sweep: steal_cores=$best_steal contended=$contended total=$(total_of tools/bench_last_run.json)s ==" >&2
