@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Benchmark main: times every SparkEntry query on SPARK_GRAFT_SF_DIR and
  * prints one JSON line. Protocol mirrors the reference's JMH setup
  * (reference benchmarks/.../LDBCBenchmarkBase.scala:26-36): one warmup
@@ -20,19 +18,8 @@ import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val reps = math.max(1, sys.env.getOrElse("SPARK_GRAFT_BENCH_REPS", "2").toInt)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // baseline harness parity (reference LDBCBenchmarkBase.scala:26-36)
-      .config("spark.serializer", "org.apache.spark.serializer.KryoSerializer")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = SparkEntry.harnessSession(defaultCpus = 32)
 
     // hypervisor steal bookkeeping: co-tenant load inflated whole sweeps
     // 2-7x in rounds 11-12 — recording (steal jiffies / wall) makes a

@@ -1,18 +1,10 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Scratch: print the formatted physical plan of named driver queries. */
 object PlanAudit {
   def main(args: Array[String]): Unit = {
     val sfDir = "/root/testdata/sf0.001"
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
+    val spark = SparkEntry.harnessSession(defaultCpus = 4)
     spark.sparkContext.setLogLevel("ERROR")
     for (name <- args) {
       println(s"===== PLAN $name =====")

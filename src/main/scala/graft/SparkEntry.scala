@@ -1,6221 +1,45 @@
 package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.expressions.Window
-import org.apache.spark.sql.functions._
 
 /**
  * Driver contract: one `queries` entry per implemented operator (SURVEY §2)
  * plus the data-pipeline operators, each with a DuckDB oracle where the
- * semantics are SQL-expressible. Graphs are built from the TPC-H-ish
- * driver testdata:
- *
- *  - graph A (string ids, exercises surrogate indexing): customers and
- *    orders as vertices ("c<key>" / "o<key>"), one edge per order;
- *  - graph B (int ids): nation co-occurrence — an edge src→dst when a
- *    customer of nation src bought from a supplier of nation dst;
- *  - event-type transition graph: consecutive events per user.
+ * semantics are SQL-expressible. Both maps are views of the gate table,
+ * [[gate.GateTable]], whose per-family files state each row's query next
+ * to its oracle.
  */
 object SparkEntry {
-  import GraphFrame.{ID, SRC, DST}
-
-  private def load(s: SparkSession, dir: String, t: String): DataFrame =
-    s.read.parquet(s"$dir/$t.parquet")
-
-  /** customer→order bipartite graph with namespaced string ids and a `val`
-   * payload (acctbal for customers, totalprice for orders). */
-  private def graphA(s: SparkSession, dir: String): GraphFrame = {
-    val cust = load(s, dir, "customer")
-    val ord = load(s, dir, "orders")
-    val v = cust.select(concat(lit("c"), col("c_custkey")).as(ID), col("c_acctbal").as("val"))
-      .unionByName(ord.select(concat(lit("o"), col("o_orderkey")).as(ID),
-        col("o_totalprice").as("val")))
-    val e = ord.select(concat(lit("c"), col("o_custkey")).as(SRC),
-      concat(lit("o"), col("o_orderkey")).as(DST))
-    GraphFrame(v, e)
-  }
-
-  /** Distinct nation→nation trade edges (customer nation → supplier nation).
-   * PERSISTED (r14 optimization): ~50 graph queries build on this edge
-   * list, and the iterative/local-tail algorithms they feed run SEVERAL
-   * actions over it (threshold probes, edge collects, vertex joins, the
-   * final readout) — unpersisted, every action re-paid the 4-table
-   * lineitem join (~0.3-0.5 s at sf0.1, × 2-6 actions per query). The
-   * post-distinct frame is ≤ n_nations² rows, so the cache is a few KB;
-   * the first action in each query still pays the join once (nothing is
-   * precomputed across bench reps — Bench clears the cache per attempt). */
-  private def nationEdges(s: SparkSession, dir: String): DataFrame =
-    load(s, dir, "lineitem")
-      .join(load(s, dir, "orders"), col("l_orderkey") === col("o_orderkey"))
-      .join(load(s, dir, "customer"), col("o_custkey") === col("c_custkey"))
-      .join(load(s, dir, "supplier"), col("l_suppkey") === col("s_suppkey"))
-      .select(col("c_nationkey").as(SRC), col("s_nationkey").as(DST))
-      .filter(col(SRC) =!= col(DST))
-      .distinct()
-      .persist()
-
-  private def graphB(s: SparkSession, dir: String): GraphFrame =
-    GraphFrame(
-      load(s, dir, "nation").select(col("n_nationkey").as(ID), col("n_name")),
-      nationEdges(s, dir))
-
-  /** Irregular cycle+chords graph over the 25 nations: id → (id+7) % 25,
-   * plus id → (3·id+1) % 25 for id % 3 = 0 (out-degrees 1-2, diameter ~8
-   * — real path structure where the trade graph is near-complete). */
-  private def circulantGraph(s: SparkSession, dir: String): GraphFrame = {
-    val v = load(s, dir, "nation").select(col("n_nationkey").as(ID))
-    val e = v.select(col(ID).as(SRC), pmod(col(ID) + 7, lit(25)).as(DST))
-      .unionByName(v.filter(col(ID) % 3 === 0)
-        .select(col(ID).as(SRC), pmod(col(ID) * 3 + 1, lit(25)).as(DST)))
-      .filter(col(SRC) =!= col(DST))
-      .distinct()
-    GraphFrame(v, e)
-  }
-
-  /** Circulant-graph ANF table, computed FRESH per call (r15: the old
-   * module-level memo keyed on `dir` survived across bench ATTEMPTS —
-   * best-of-N reps of g_neighborhood / g_avg_distance /
-   * g_effective_diameter were timing a driver-Seq replay instead of the
-   * superstep loop, which is exactly the cross-run result caching the
-   * bench contract forbids; removed). run() collects the ≤ diameter+1
-   * (d, n_pairs) rows, so the per-row cost is the honest HyperANF run. */
-  private def circulantNf(s: SparkSession, dir: String): DataFrame = {
-    import s.implicits._
-    // 2 partitions: 25-vertex fixture, ~diameter supersteps whose cost is
-    // pure task scheduling at the session's 32 (the proof-row idiom);
-    // HyperANF register merges are max-ops — partition-count invariant
-    withShufflePartitions(s, 2) {
-      circulantGraph(s, dir).neighborhoodFunction.run()
-        .orderBy("d").collect()
-        .map(x => (x.getInt(0), x.getLong(1))).toSeq
-    }.toDF("d", "n_pairs")
-  }
-
-  /** Binary-tree-plus-chords graph over the 25 nations: tree edges
-   * id → id div 2 (so every edge is a bridge a priori) plus chord edges
-   * id → (5·id + 2) % 25 for id % 7 = 3 — the chords close cycles through
-   * tree paths AND create BFS cross edges, the shape that distinguishes
-   * bridges/articulation logic from a naive DFS-lowpoint port. Connected
-   * (the tree spans all 25), which the articulation oracle relies on. */
-  /** Run `body` (which must EXECUTE its heavy work, e.g. an eager
-   * iterative `run()`) under a reduced shuffle-partition count, restoring
-   * the session value after. The forced-distributed proof rows iterate
-   * dozens of per-round jobs over 25-vertex fixtures: at 32 shuffle
-   * partitions each tiny job pays ~32 empty-task schedulings per stage,
-   * which WAS the whole cost of those rows (same class as the streaming
-   * rows' resize and the r12 2-connectivity fix). Output-invariant: the
-   * operators are deterministic under any partitioning (md5 priorities /
-   * monotone fixpoints); a production job sizes this to its data. */
-  private val shufflePartLock = new Object
-  private def withShufflePartitions[T](s: SparkSession, n: Int)(body: => T): T =
-    // serialized: the save/set/restore of a SESSION-GLOBAL conf is not
-    // atomic, and two interleaved wrappers would strand the session at
-    // n partitions (B saves A's temporary value and restores it last)
-    // while replanning every concurrent query at n. The proof rows are
-    // the only users; serializing them costs nothing (they'd contend on
-    // the scheduler anyway) and keeps the rest of the map safe to run
-    // concurrently.
-    shufflePartLock.synchronized {
-      val old = s.conf.get("spark.sql.shuffle.partitions")
-      s.conf.set("spark.sql.shuffle.partitions", n.toString)
-      try body finally s.conf.set("spark.sql.shuffle.partitions", old)
-    }
-
-  /** ISOLATED session for one streaming row's whole lifecycle (r15 —
-   * replaces the r14 session-global `withShufflePartitions(s, 8)` lock
-   * on the e_stream family): `newSession()` shares the SparkContext,
-   * cached data and the SparkConf defaults but carries its own SQLConf
-   * and temp-view catalog, so the stream's shuffle-partition setting can
-   * never leak into a concurrently-planned batch query, and concurrent
-   * streaming rows no longer serialize behind one mutex (the r14 ADVICE
-   * item). Build the WHOLE pipeline — source, operators, memory-sink
-   * table reads — against the returned session.
-   *
-   * The partition count tracks MICRO-BATCH VOLUME, not core count: every
-   * stateful operator materializes one state store per shuffle partition
-   * per micro-batch, so a 2 MB gate replay at the session's 32 partitions
-   * paid 32 store inits + commits per operator, which dominated the whole
-   * family (r14 measurement; outputs are partition-count invariant —
-   * keyed aggregations/joins/dedup/state). Derivation: replayed source
-   * bytes / `targetKiB` (default 256 KiB per partition — the r14-measured
-   * optimum, 8 partitions at the 2 MB events replay), clamped to
-   * [2, defaultParallelism]. A production stream sizes this to its own
-   * batch volume via SPARK_GRAFT_STREAM_SHUFFLE (takes precedence) or by
-   * passing its source files. */
-  private def streamSession(s: SparkSession, dir: String,
-      sourceFiles: Seq[String], targetKiB: Long = 256L): SparkSession = {
-    val parts = sys.env.get("SPARK_GRAFT_STREAM_SHUFFLE") match {
-      case Some(v) => v.toInt
-      case None =>
-        val bytes = sourceFiles.map(f => new java.io.File(dir, f).length()).sum
-        val target = targetKiB << 10
-        val p = ((bytes + target - 1) / target).toInt
-        math.max(2, math.min(s.sparkContext.defaultParallelism, p))
-    }
-    val ss = s.newSession()
-    ss.conf.set("spark.sql.shuffle.partitions", parts.toString)
-    ss
-  }
-
-  /** Deterministic URL fixture over `documents` (no table carries URLs):
-   * doc_id % 3 picks http-with-www-port-tracking-fragment, https-with-
-   * userinfo-and-unsorted-params, or a schemeless non-URL (null-output
-   * case). Shared by p_url_canonical and p_host_stats; the oracle
-   * replays the same CASE. */
-  private def urlFixture(s: SparkSession, dir: String): DataFrame = {
-    val m = pmod(col("doc_id"), lit(3))
-    val url = when(m === 0, concat(
-        lit("HTTP://WWW.Site"), pmod(col("doc_id"), lit(7)),
-        lit(".COM:80/Dir/Page/?utm_source=feed&b="),
-        pmod(col("doc_id"), lit(5)), lit("&a=1&gclid=g#frag")))
-      .when(m === 1, concat(
-        lit("https://user:pw@Sub.site"), pmod(col("doc_id"), lit(7)),
-        lit(".com:443/p"), pmod(col("doc_id"), lit(11)), lit("?z=2&a=3")))
-      .otherwise(concat(lit("doc "), col("doc_id").cast("string")))
-    load(s, dir, "documents").select(col("doc_id"), url.as("url"))
-  }
-
-  /** Deterministic crawl-page fixture over `documents`: each page links
-   * to the next two hosts on the 5-host ring (one double-quoted
-   * uppercase-host href, one single-quoted www+default-port href), plus
-   * a site-relative link and a fragment link; the page's own URL is
-   * http://h{doc_id%5}.com/p{doc_id}. Shared by p_extract_links and
-   * p_host_graph; the oracles replay the same construction. */
-  private def pageFixtureCols(docs: DataFrame): DataFrame = {
-    val page = concat(
-      lit("<p><a href=\"http://H"), pmod(col("doc_id") + 1, lit(5)),
-      lit(".com/a\">x</a> <A HREF='https://www.h"),
-      pmod(col("doc_id") + 2, lit(5)),
-      lit(".com:443/b'>y</A> <a href=\"/local/page\">z</a> " +
-        "<a href=\"#s\">w</a></p>"))
-    val url = concat(lit("http://h"), pmod(col("doc_id"), lit(5)),
-      lit(".com/p"), col("doc_id"))
-    docs.select(col("doc_id"), url.as("url"), page.as("html"))
-  }
-
-  private def pageFixture(s: SparkSession, dir: String): DataFrame =
-    pageFixtureCols(load(s, dir, "documents"))
-
-  private def treeChordGraph(s: SparkSession, dir: String): GraphFrame = {
-    val v = load(s, dir, "nation").select(col("n_nationkey").cast("long").as(ID))
-    val tree = v.filter(col(ID) >= 1)
-      .select(col(ID).as(SRC), expr(s"$ID div 2").as(DST))
-    val chord = v.filter(pmod(col(ID), lit(7)) === 3)
-      .select(col(ID).as(SRC), pmod(col(ID) * 5 + 2, lit(25)).as(DST))
-    GraphFrame(v, tree.unionByName(chord))
-  }
-
-  // r15: the old treeChordTwoConnDist helper memoized BOTH forced-
-  // distributed 2-connectivity readouts in a module-level cache keyed on
-  // `dir`, which survived across bench ATTEMPTS — best-of-N reps of
-  // g_bridges_dist / g_articulation_dist timed a driver-Seq replay
-  // instead of the superstep pipeline, the cross-run result caching the
-  // bench contract forbids. Each row now runs its own single-mode
-  // readout fresh (runModes computes only the requested projections;
-  // callers needing both in ONE program should use
-  // twoConnectivity.bridgesAndArticulationPoints()).
-
-  /** Planted-community graph over the 25 nations: the five regions form
-   * 5-cliques (dense intra-community structure), plus the sparse
-   * id → (id+7) % 25 chord ring crossing them — the shape community
-   * detection should mostly undo. */
-  private def communityGraph(s: SparkSession, dir: String): GraphFrame = {
-    val n = load(s, dir, "nation")
-      .select(col("n_nationkey").as(ID), col("n_regionkey"))
-    val same = n.as("x").join(n.as("y"),
-        col("x.n_regionkey") === col("y.n_regionkey") &&
-          col(s"x.$ID") < col(s"y.$ID"))
-      .select(col(s"x.$ID").as(SRC), col(s"y.$ID").as(DST))
-    val chord = n.select(col(ID).as(SRC), pmod(col(ID) + 7, lit(25)).as(DST))
-    // persisted for the same reason as nationEdges: community algorithms
-    // run multiple actions (round loops, modularity readouts) over these
-    // ≤ 25·24 edges, each otherwise re-paying the region self-join
-    GraphFrame(n.select(col(ID)),
-      same.unionByName(chord).filter(col(SRC) =!= col(DST)).distinct()
-        .persist())
-  }
-
-  /** Event-type transition graph: edge t1→t2 when some user's consecutive
-   * events are typed t1 then t2. */
-  private def eventTypeGraph(s: SparkSession, dir: String): GraphFrame = {
-    val ev = load(s, dir, "events")
-    val w = Window.partitionBy("user_id").orderBy(col("ts"), col("event_id"))
-    val e = ev.select(col("event_type").as(SRC),
-        lead(col("event_type"), 1).over(w).as(DST))
-      .filter(col(DST).isNotNull)
-      .distinct()
-      // persisted: fromEdges re-derives vertices from edges, so even a
-      // single-pass consumer pays the events window twice unpersisted
-      .persist()
-    GraphFrame.fromEdges(e)
-  }
-
-  /** Skew-stress composite (CC component stats + exact triangle total) on
-   * a synthetic supplier graph from lineitem. With `hub = true` every 7th
-   * edge row is redirected to vertex 0 — one vertex receives ~14% of all
-   * edge rows, so the first shuffle (distinct), the CC message exchange
-   * and the neighbor-set aggregation all see a hot key. The de-skewed
-   * twin (`hub = false`) differs only in that redirect; comparing their
-   * bench rows measures what the AQE-first skew stance actually costs. */
-  /** supplier—part property graph over lineitem for the bipartite
-   * projection queries. */
-  private def suppliesGraph(s: SparkSession, dir: String): propertygraph.PropertyGraphFrame = {
-    import graft.propertygraph._
-    val supplier = VertexPropertyGroup("supplier", load(s, dir, "supplier"), "s_suppkey")
-    val part = VertexPropertyGroup("part", load(s, dir, "part"), "p_partkey")
-    PropertyGraphFrame(Seq(supplier, part),
-      Seq(EdgePropertyGroup("supplies", load(s, dir, "lineitem"), supplier, part,
-        isDirected = true, "l_suppkey", "l_partkey", lit(1.0))))
-  }
-
-  private def skewStats(s: SparkSession, dir: String, hub: Boolean): DataFrame = {
-    val li = load(s, dir, "lineitem")
-    val base = pmod(col("l_suppkey") * 7 + col("l_partkey"), lit(997))
-    val dstCol = if (hub) when(col("l_orderkey") % 7 === 0, lit(0)).otherwise(base)
-      else base
-    val e0 = li.select(col("l_suppkey").cast("long").as(SRC),
-      dstCol.cast("long").as(DST))
-    // vertices from ALL endpoints (pre-self-loop-filter) so a vertex seen
-    // only in self-loops still counts as a singleton component
-    val v = e0.select(explode(array(col(SRC), col(DST))).as(ID)).distinct()
-    val g = GraphFrame(v, e0.filter(col(SRC) =!= col(DST)))
-    // CC and triangle count both consume the same derived graph — persist
-    // it once so the lineitem scan + hash projection + distinct don't run
-    // twice (the r6 cold-cache bench protocol stopped hiding that)
-    g.persist()
-    val cc = g.connectedComponents.run()
-    val cs = cc.groupBy("component").agg(count(lit(1)).as("sz"))
-      .agg(count(lit(1)).cast("long").as("_nc"), max("sz").cast("long").as("_mx"))
-    val tri = g.triangleCount.run().agg((sum("count") / 3).cast("long").as("_t"))
-    // materialize each single-row aggregate under its OWN adaptive plan
-    // before combining: inside a crossJoin the non-probe side compiles as a
-    // broadcast subtree where AQE cannot re-plan, and static size estimates
-    // picked an array-shuffling SortMergeJoin for the triangle pipeline
-    // (measured 20s vs 0.3s for the identical subtree planned adaptively)
-    val csm = cs.localCheckpoint()
-    val trim = tri.localCheckpoint()
-    // stack() emits the three metric rows from the two 1-row checkpoints
-    csm.crossJoin(trim).selectExpr(
-      "stack(3, 'n_components', _nc, 'max_component', _mx, 'triangles', _t) " +
-        "as (metric, value)")
-  }
 
   /** Flagship query (driver smoke-checks rows > 0 on sf0.001). */
   def entry(spark: SparkSession): DataFrame =
     queries("g_out_degrees")(spark, "/root/testdata/sf0.001")
 
-  // -------------------------------------------------------------------
-  // Queries
-  // -------------------------------------------------------------------
+  def queries: Map[String, (SparkSession, String) => DataFrame] = gate.GateTable.queries
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    // --- graph structure / degrees ---
-    "g_out_degrees" -> ((s, dir) =>
-      graphA(s, dir).outDegrees
-        .select(col(ID), col("outDegree").cast("long").as("out_degree"))),
-    "g_in_degrees" -> ((s, dir) => {
-      val li = load(s, dir, "lineitem")
-      GraphFrame.fromEdges(li.select(
-          concat(lit("s"), col("l_suppkey")).as(SRC),
-          concat(lit("p"), col("l_partkey")).as(DST)))
-        .inDegrees
-        .select(col(ID), col("inDegree").cast("long").as("in_degree"))
-    }),
-    "g_degrees" -> ((s, dir) =>
-      graphA(s, dir).degrees
-        .select(col(ID), col("degree").cast("long").as("degree"))),
-    "g_triplets" -> ((s, dir) =>
-      graphB(s, dir).triplets
-        .select(col(s"$SRC.$ID").as("src_id"), col(s"$SRC.n_name").as("src_name"),
-          col(s"$DST.$ID").as("dst_id"))),
-    "g_filter_vertices" -> ((s, dir) =>
-      // high-balance subgraph of graph A: customers with acctbal > 5000
-      // (every order vertex survives the filter; edges to dropped customers go)
-      graphA(s, dir).filterVertices(col("val") > 5000 || substring(col(ID), 1, 1) === "o")
-        .edges.select(col(SRC), col(DST))),
+  def oracleSql: Map[String, String] = gate.GateTable.oracleSql
 
-    "g_graph_io" -> ((s, dir) => {
-      // driver-gate coverage for the §2.1 source/sink surface: parquet
-      // graph save/load round-trip, LDBC .e (space-delimited CSV) reader,
-      // and the edge-list text loader — degrees from all three load paths
-      // must coincide with the SQL oracle's degree count
-      val g = graphB(s, dir)
-      val tmp = s"/tmp/graft_io_${dir.replaceAll("[^A-Za-z0-9]", "_")}"
-      sources.GraphLoader.saveParquetGraph(g, s"$tmp/pq")
-      val gPq = sources.GraphLoader.parquetGraph(s, s"$tmp/pq")
-      g.edges.select(concat_ws(" ", col(SRC), col(DST)).as("value"))
-        .write.mode("overwrite").text(s"$tmp/graph.e")
-      val eLdbc = sources.GraphLoader.ldbcEdges(s, s"$tmp/graph.e")
-      val gTxt = sources.GraphLoader.edgeListFile(s, s"$tmp/graph.e")
-      gPq.degrees.select(col(ID), col("degree").cast("long").as("deg_pq"))
-        .join(GraphFrame.fromEdges(eLdbc).degrees
-          .select(col(ID).cast("int").as(ID), col("degree").cast("long").as("deg_ldbc")), ID)
-        .join(gTxt.degrees
-          .select(col(ID).cast("int").as(ID), col("degree").cast("long").as("deg_txt")), ID)
-    }),
-
-    // --- motifs ---
-    "g_motif_undirected" -> ((s, dir) =>
-      graphB(s, dir).find("(a)-[e]-(b)")
-        .select(col(s"a.$ID").as("a_id"), col(s"b.$ID").as("b_id"), col("_direction"))),
-    "g_motif_varlen" -> ((s, dir) =>
-      graphB(s, dir).find("(a)-[e*1..2]->(b)")
-        .select(col(s"a.$ID").as("a_id"), col(s"b.$ID").as("b_id"), col("_hop"))),
-    "g_motif_mutual" -> ((s, dir) =>
-      graphB(s, dir).find("(a)-[e]->(b); (b)-[e2]->(a)")
-        .select(col(s"a.$ID").as("a_id"), col(s"b.$ID").as("b_id"))),
-    "g_motif_bidi" -> ((s, dir) =>
-      graphB(s, dir).find("(a)<-[e]->(b)")
-        .select(col(s"a.$ID").as("a_id"), col(s"b.$ID").as("b_id"))),
-    "g_motif_open_triangle" -> ((s, dir) =>
-      graphB(s, dir).find("(a)-[]->(b); (b)-[]->(c); !(a)-[]->(c)")
-        .select(col(s"a.$ID").as("a_id"), col(s"b.$ID").as("b_id"), col(s"c.$ID").as("c_id"))),
-    "g_motif_fixed2" -> ((s, dir) => // fixed-length chain expansion (a)-[e*2]->(b)
-      graphB(s, dir).find("(a)-[e*2]->(b)")
-        .select(col(s"a.$ID").as("a_id"), col(s"b.$ID").as("b_id"))),
-    "g_motif_undirected_fixed" -> ((s, dir) => // starred UNDIRECTED chain:
-      // each hop matches either orientation, per-hop tags ';'-joined
-      graphB(s, dir).find("(a)-[e*2]-(b)")
-        .select(col(s"a.$ID").as("a_id"), col(s"_ab1.$ID").as("mid_id"),
-          col(s"b.$ID").as("b_id"), col("_direction"))),
-    "g_type_degrees" -> ((s, dir) => {
-      // per-edge-type pivot degrees on the customer→order graph typed by
-      // order status (struct flattened for the driver canonicalizer)
-      val ord = load(s, dir, "orders")
-      val e = ord.select(concat(lit("c"), col("o_custkey")).as(SRC),
-        concat(lit("o"), col("o_orderkey")).as(DST), col("o_orderstatus").as("status"))
-      GraphFrame.fromEdges(e).typeOutDegree("status", Seq("F", "O", "P"))
-        .select(col(ID), col("outDegrees.F").as("deg_f"),
-          col("outDegrees.O").as("deg_o"), col("outDegrees.P").as("deg_p"))
-    }),
-    "g_sampling_convolution" -> ((s, dir) => {
-      // 1-hop mean-aggregation GNN layer over a deterministic 2-out-regular
-      // chain graph on the embeddings table; sampleSize exceeds the fan-out
-      // so the k-min sample keeps every neighbor and values are exact.
-      // Edges come from id arithmetic (vec_ids are contiguous) semi-joined
-      // back to existing ids — a narrow equi-join, not the single-partition
-      // global-sort window an unpartitioned lead() would need at scale.
-      import graft.expressions.ArrayDotProduct.dotProduct
-      val emb = load(s, dir, "embeddings")
-        .select(col("vec_id").as(ID), col("embedding").cast("array<double>").as("embedding"))
-      val ids = emb.select(col(ID).as(DST))
-      def shifted(k: Int) = emb.select(col(ID).as(SRC), (col(ID) + k).as(DST))
-        .join(ids, Seq(DST), "left_semi")
-      val e = shifted(1).unionAll(shifted(2)).select(col(SRC), col(DST))
-      val g = GraphFrame(emb.select(ID), e)
-      embeddings.Embeddings.samplingConvolution(g, emb, sampleSize = 16)
-        .select(col(ID).as("vec_id"),
-          size(col("conv_embedding")).as("conv_dim"),
-          round(sqrt(dotProduct(col("conv_embedding"), col("conv_embedding"))), 4)
-            .as("conv_norm"))
-    }),
-
-    // --- message passing ---
-    "g_aggregate_messages" -> ((s, dir) => {
-      import graft.lib.AggregateMessages
-      graphA(s, dir).aggregateMessages
-        .sendToSrc(AggregateMessages.dst("val"))
-        .sendToDst(AggregateMessages.src("val"))
-        .agg(round(sum(AggregateMessages.msg), 2).as("total"))
-    }),
-
-    // --- algorithms ---
-    "g_connected_components" -> ((s, dir) => {
-      val cc = graphA(s, dir).connectedComponents.run()
-      cc.select(col(ID), min(ID).over(Window.partitionBy("component")).as("rep"))
-    }),
-    "g_cc_nations" -> ((s, dir) =>
-      graphB(s, dir).connectedComponents.run().select(col(ID), col("component"))),
-    "g_cc_rc" -> ((s, dir) => {
-      // randomized-contraction variant; labels canonicalized to the
-      // component minimum so the recursive-CTE oracle applies
-      val cc = graphB(s, dir).connectedComponents
-        .setAlgorithm("randomized_contraction").run()
-      cc.select(col(ID),
-        min(col(ID).cast("long")).over(Window.partitionBy("component")).as("component"))
-    }),
-    "g_hash_embeddings" -> ((s, dir) => // oracle: coverage + width only
-      embeddings.HashEmbeddings.forGraph(graphB(s, dir), dim = 8, walkLength = 3)
-        .select(col(ID), size(col("embedding")).as("dim"))),
-    "g_hash2vec" -> ((s, dir) => {
-      // faithful Hash2Vec (context windows + signed hash lanes,
-      // arXiv:1608.08940) over document token sequences; constant decay +
-      // md5 lanes → integer lane sums the SQL oracle replays exactly
-      val seqs = load(s, dir, "documents")
-        .select(pipeline.Text.tokens(col("text")).as("seq"))
-      embeddings.Hash2Vec.embedSequences(seqs, "seq", dim = 8, contextSize = 2,
-          decay = "constant", doNorm = false, hashMode = "md5", seed = 42L)
-        .select(col("id"),
-          array_join(transform(col("vector"), x => x.cast("long").cast("string")), ",")
-            .as("vec"))
-    }),
-    "g_scc_nations" -> ((s, dir) =>
-      graphB(s, dir).stronglyConnectedComponents.run().select(col(ID), col("component"))),
-    "g_shortest_paths" -> ((s, dir) =>
-      graphB(s, dir).shortestPaths.landmarks(Seq(0)).run()
-        .select(col(ID), element_at(col("distances"), lit(0)).as("dist"))),
-    "g_voronoi" -> ((s, dir) => // closest-seed (Voronoi) partition: ONE
-      // multi-source BFS for all seeds + struct-min argmin, ties to the
-      // smaller seed id; unreachable vertices keep (null, null)
-      graphB(s, dir).voronoi(Seq(0, 12))),
-    "g_katz" -> ((s, dir) => // damped all-walks centrality, 8 rounds
-      graphB(s, dir).katz.alpha(0.05).beta(1.0).maxIter(8).run()
-        .select(col(ID), round(col("katz"), 6).as("katz"))),
-    "g_eigenvector" -> ((s, dir) => // raw power iteration, 10 rounds, one
-      // final sup-norm division (top vertex exactly 1.0); the near-complete
-      // trade graph has spectral gap, so 10 rounds are already stable
-      graphB(s, dir).eigenvector.maxIter(10).run()
-        .select(col(ID), round(col("eigenvector"), 6).as("eigenvector"))),
-    "g_eigenvector_weighted" -> ((s, dir) => { // x ← AᵀWx with the same
-      // deterministic integer weights as g_shortest_paths_weighted
-      val g0 = graphB(s, dir)
-      val we = g0.edges.withColumn("w",
-        pmod(col(SRC) * 7 + col(DST) * 3, lit(5)) + lit(1))
-      GraphFrame(g0.vertices, we).eigenvector.weightCol("w").maxIter(10).run()
-        .select(col(ID), round(col("eigenvector"), 6).as("eigenvector"))
-    }),
-    "g_mst" -> ((s, dir) => { // unique MSF of the trade-count-weighted
-      // nation graph: engine runs Borůvka (distributed) / Kruskal (tail)
-      // over the (w, a, b) total key order; the oracle uses the CYCLE RULE
-      // (edge in MSF iff endpoints not connected by strictly lighter-keyed
-      // edges) — three algorithm families, one uniqueness theorem
-      val base = load(s, dir, "lineitem")
-        .join(load(s, dir, "orders"), col("l_orderkey") === col("o_orderkey"))
-        .join(load(s, dir, "customer"), col("o_custkey") === col("c_custkey"))
-        .join(load(s, dir, "supplier"), col("l_suppkey") === col("s_suppkey"))
-        .select(col("c_nationkey").as(SRC), col("s_nationkey").as(DST))
-        .filter(col(SRC) =!= col(DST))
-      val e = base.groupBy(least(col(SRC), col(DST)).as(SRC),
-          greatest(col(SRC), col(DST)).as(DST))
-        .agg(count(lit(1)).cast("double").as("w"))
-      GraphFrame(load(s, dir, "nation").select(col("n_nationkey").as(ID)), e)
-        .minimumSpanningForest.weightCol("w").run()
-        .select(col(SRC), col(DST), col("weight"))
-    }),
-    "g_hits" -> ((s, dir) => // hubs/authorities, 5 L2-normalized rounds
-      graphB(s, dir).hits.maxIter(5).run()
-        .select(col(ID), round(col("hub"), 6).as("hub"),
-          round(col("authority"), 6).as("authority"))),
-    "g_salsa" -> ((s, dir) => // SALSA: walk-normalized HITS (per-edge
-      // 1/outdeg, 1/indeg weights fixed once), 5 rounds, L1 output
-      graphB(s, dir).salsa.maxIter(5).run()
-        .select(col(ID), round(col("hub"), 6).as("hub"),
-          round(col("authority"), 6).as("authority"))),
-    "g_influence_seeds" -> ((s, dir) => // degree-discount influence max:
-      // 5 sequential argmax picks (raw-score order, id tie-break) with
-      // neighbor discounting; oracle unrolls every round
-      communityGraph(s, dir).influenceMax.k(5).mode("degree").p(0.1).run()
-        .select(col(ID), col("round"), round(col("score"), 6).as("score"))),
-    "g_shortest_paths_weighted" -> ((s, dir) => { // Bellman-Ford extension:
-      // deterministic integer weights derived from the endpoint keys
-      val g0 = graphB(s, dir)
-      val ge = GraphFrame(g0.vertices, g0.edges.withColumn("w",
-        (col(SRC) * 7 + col(DST) * 3) % 5 + 1))
-      ge.shortestPaths.landmarks(Seq(0)).weightCol("w").run()
-        .select(col(ID), element_at(col("distances"), lit(0)).as("dist"))
-    }),
-    "g_pagerank" -> ((s, dir) =>
-      graphB(s, dir).pageRank.resetProbability(0.15).maxIter(10).run()
-        .vertices.select(col(ID), round(col("pagerank"), 5).as("pagerank"))),
-    "g_pagerank_tol" -> ((s, dir) =>
-      // tolerance mode: vertices vote to halt when their rank moves < tol;
-      // the trade graph is near-regular (converges in 1 round), so the
-      // harness builds an irregular cycle+chords graph over the 25 nations
-      // (out-degrees 1-2, converges at round 25 for tol=1e-3). The oracle
-      // unrolls the rounds AND replays the stop rule itself.
-      circulantGraph(s, dir).pageRank.resetProbability(0.15).tol(0.001).run()
-        .vertices.select(col(ID), round(col("pagerank"), 5).as("pagerank"))),
-    "g_sample_subgraph" -> ((s, dir) => {
-      // deterministic md5 vertex sample + induced degrees (the dev-scale
-      // subsample path; the oracle replays the 16-bit draw)
-      val sg = graphB(s, dir).sampleVertices(0.5, 7L)
-      sg.vertices.select(col(ID))
-        .join(sg.degrees, Seq(ID), "left_outer")
-        .select(col(ID), coalesce(col("degree"), lit(0L)).as("degree"))
-    }),
-    "g_graph_stats" -> ((s, dir) => graphA(s, dir).stats),
-    "g_graph_dot" -> ((s, dir) => // Graphviz DOT export as line rows —
-      // pure projections; the oracle rebuilds every line string
-      sources.GraphLoader.toDotLines(graphB(s, dir), "trade")),
-    "g_graphml" -> ((s, dir) => // GraphML export, same line-row contract
-      // as DOT — XML-escaped ids, header/nodes/edges/footer sections
-      sources.GraphLoader.toGraphMLLines(graphB(s, dir))),
-    "g_neg_sampling" -> ((s, dir) => // uniform non-edge draws for
-      // embedding training: md5-keyed rank probes against the dense-rank
-      // vertex table, anti-joined vs both edge directions; the oracle
-      // replays every draw and the keep-first-k cut
-      new embeddings.NegativeSampling(circulantGraph(s, dir))
-        .setK(3).setSeed(42L).run()),
-    "g_rmat" -> ((s, dir) => // deterministic R-MAT generator: md5 draws
-      // keyed (seed, edge, level), exact 60-bit integer thresholds —
-      // the oracle replays every quadrant decision
-      sources.GraphGenerators.rmat(s, scale = 6, numEdges = 200, seed = 7)),
-    "g_rmat_source" -> ((s, dir) => // the SAME graph through the DSv2
-      // table provider (range-sliced planInputPartitions, JVM-side md5
-      // replay) — one oracle pins both generation paths to each other
-      s.read.format("graft.rmat").option("scale", 6).option("numEdges", 200)
-        .option("seed", 7).option("numPartitions", 4).load()),
-    "g_triangle_list" -> ((s, dir) => // every triangle ONCE via
-      // (degree, id)-ordered edge orientation — listing, not counting
-      lib.Cliques.triangles(graphB(s, dir))),
-    "g_cliques4" -> ((s, dir) => // 4-clique listing by ordered extension
-      // of the oriented triangles; output id-sorted tuples
-      lib.Cliques.cliques4(graphB(s, dir))),
-    "g_ic_spread" -> ((s, dir) => // deterministic Independent-Cascade
-      // spread: md5 live-edge coins (dyadic p = exact threshold), BFS
-      // levels over the live subgraph; the oracle replays every coin
-      new lib.IndependentCascade(circulantGraph(s, dir))
-        .p(0.5).hashSeed(9L).run(Seq(0, 12))),
-    "g_ic_spread_dist" -> ((s, dir) => // the DISTRIBUTED live-edge BFS
-      // rounds forced (threshold 0) on the SAME coin-replay oracle — the
-      // spread is a deterministic function of the coins, so the driver
-      // tail and the distributed path must agree exactly; 2 partitions:
-      // the fixture is 25 vertices, the cost is pure task scheduling
-      withShufflePartitions(s, 2) {
-        new lib.IndependentCascade(circulantGraph(s, dir))
-          .p(0.5).hashSeed(9L).setSmallGraphThreshold(0)
-          .hopsPerCycle(2).run(Seq(0, 12))
-      }),
-    "g_temporal_bfs" -> ((s, dir) => { // earliest-arrival over temporal
-      // edges (t >= arrival to traverse): plain BFS would overstate
-      // reachability; the oracle walks the (vertex, time) state space.
-      // Time formula (2·src + dst) % 7 + 1 (r13): leaves 15 of the 25
-      // BFS-reachable vertices temporally UNREACHABLE — the old
-      // (7·src + 3·dst) % 5 + 1 fixture reached everything, proving
-      // nothing plain BFS wouldn't — and converges in 6 sweeps, not 25
-      val g0 = circulantGraph(s, dir)
-      val e = g0.edges.withColumn("time",
-        (pmod(col(SRC) * 2 + col(DST), lit(7)) + 1).cast("double"))
-      new lib.TemporalReachability(GraphFrame(g0.vertices, e))
-        .source(0).startTime(0.0).timeCol("time").run()
-    }),
-    "g_temporal_bfs_dist" -> ((s, dir) => { // the label-correcting
-      // DISTRIBUTED rounds forced (threshold 0) on the SAME oracle —
-      // earliest arrival is the unique monotone fixpoint, and the tail is
-      // level-synchronous, so the paths agree even under a maxIter bound;
-      // 2 partitions: 25-vertex fixture, the cost is task scheduling
-      val g0 = circulantGraph(s, dir)
-      val e = g0.edges.withColumn("time",
-        (pmod(col(SRC) * 2 + col(DST), lit(7)) + 1).cast("double"))
-      withShufflePartitions(s, 2) {
-        new lib.TemporalReachability(GraphFrame(g0.vertices, e))
-          .source(0).startTime(0.0).timeCol("time")
-          .setSmallGraphThreshold(0).hopsPerCycle(2).run()
-      }
-    }),
-    "g_pagerank_weighted" -> ((s, dir) => {
-      // mass distributed proportionally to a deterministic edge weight
-      // (same synthesized weights as g_shortest_paths_weighted)
-      val g0 = circulantGraph(s, dir)
-      val e = g0.edges.withColumn("w",
-        (pmod(col(SRC) * 7 + col(DST) * 3, lit(5)) + 1).cast("double"))
-      GraphFrame(g0.vertices, e).pageRank
-        .resetProbability(0.15).maxIter(10).weightCol("w").run()
-        .vertices.select(col(ID), round(col("pagerank"), 5).as("pagerank"))
-    }),
-    "g_edge_betweenness" -> ((s, dir) => // Girvan–Newman edge credit; the
-      // oracle uses the PAIR-COUNTING identity (σ_su·σ_vt/σ_st summed over
-      // pairs with d(s,u)+1+d(v,t) = d(s,t)) — a different formulation
-      // from the engine's Brandes edge-dependency accumulation
-      circulantGraph(s, dir).betweenness.runEdges()
-        .select(col(SRC), col(DST),
-          round(col("edge_betweenness"), 5).as("edge_betweenness"))),
-    "g_betweenness" -> ((s, dir) =>
-      // exact Brandes on the cycle+chords graph (real path structure — the
-      // trade graph is near-complete and would score ~flat); oracle
-      // enumerates the shortest-path DAG with recursive CTEs
-      circulantGraph(s, dir).betweenness.run()
-        .select(col(ID), round(col("betweenness"), 5).as("betweenness"))),
-    "g_closeness" -> ((s, dir) =>
-      circulantGraph(s, dir).closeness.run()
-        .select(col(ID), round(col("closeness"), 5).as("closeness"),
-          round(col("harmonic"), 5).as("harmonic"))),
-    "g_eccentricity" -> ((s, dir) =>
-      circulantGraph(s, dir).eccentricity.run()
-        .select(col(ID), col("eccentricity"))),
-    "g_betweenness_weighted" -> ((s, dir) => { // Dijkstra-Brandes: integer
-      // weights keep the strict dist(u)+w = dist(v) DAG test and every
-      // CTE sum exact in double
-      val g0 = circulantGraph(s, dir)
-      val ge = GraphFrame(g0.vertices, g0.edges.withColumn("w",
-        ((col(SRC) * 7 + col(DST) * 3) % 5 + 1).cast("double")))
-      ge.betweenness.weightCol("w").run()
-        .select(col(ID), round(col("betweenness"), 5).as("betweenness"))
-    }),
-    "g_betweenness_sampled" -> ((s, dir) =>
-      // Brandes estimator from 9 md5-ordered sources with the n/k
-      // scale-up; the oracle restricts the shortest-path-DAG triple join
-      // to the same landmark set and applies the same 25/9 factor
-      circulantGraph(s, dir).betweenness.sampleSources(9).run()
-        .select(col(ID), round(col("betweenness"), 5).as("betweenness"))),
-    "g_closeness_sampled" -> ((s, dir) =>
-      // landmark (Eppstein–Wang) estimator: 9 md5-ordered landmarks,
-      // reversed-edge multi-source BFS, n/k scale-up — the O(V·k) path
-      // the exact O(V²) all-sources BFS can't take at 100x scale; the
-      // oracle replays the same md5 draw and the same estimator
-      circulantGraph(s, dir).closeness.sampleSources(9).run()
-        .select(col(ID), round(col("closeness"), 5).as("closeness"),
-          round(col("harmonic"), 5).as("harmonic"))),
-    "g_eccentricity_sampled" -> ((s, dir) =>
-      // sampled eccentricity = max distance to the 9 landmarks — a
-      // documented LOWER bound (no scale-up: max is not an average)
-      circulantGraph(s, dir).eccentricity.sampleSources(9).run()
-        .select(col(ID), col("eccentricity"))),
-    "g_closeness_weighted" -> ((s, dir) => { // Wasserman–Faust + harmonic
-      // over shortest WEIGHTED distances (integer weights = exact sums)
-      val g0 = circulantGraph(s, dir)
-      val ge = GraphFrame(g0.vertices, g0.edges.withColumn("w",
-        ((col(SRC) * 7 + col(DST) * 3) % 5 + 1).cast("double")))
-      ge.closeness.weightCol("w").run()
-        .select(col(ID), round(col("closeness"), 5).as("closeness"),
-          round(col("harmonic"), 5).as("harmonic"))
-    }),
-    "g_eccentricity_weighted" -> ((s, dir) => { // max weighted out-distance
-      // (double in weighted mode)
-      val g0 = circulantGraph(s, dir)
-      val ge = GraphFrame(g0.vertices, g0.edges.withColumn("w",
-        ((col(SRC) * 7 + col(DST) * 3) % 5 + 1).cast("double")))
-      ge.eccentricity.weightCol("w").run()
-        .select(col(ID), round(col("eccentricity"), 5).as("eccentricity"))
-    }),
-    "g_ktruss" -> ((s, dir) =>
-      // k=12 exercises the full cascade at sf0.001 (support-9 shell drops,
-      // undercutting the 10-clique -> empty) and the stable complete-graph
-      // truss at sf0.01; the oracle unrolls the peeling rounds
-      graphB(s, dir).kTruss.setK(12).run()),
-    "g_neighborhood" -> ((s, dir) =>
-      // ANF: 25-vertex balls stay far below the 2^12 nominal entries, so
-      // the sketch estimates are exact and the recursive-CTE pair counts
-      // oracle applies (same contract as g_triangle_approx)
-      circulantNf(s, dir)),
-    "g_avg_distance" -> ((s, dir) => { // mean shortest-path length over
-      // connected ordered pairs (self-pairs excluded) — a readout of its
-      // own ANF run: Σ d·Δnf(d) / (nf_max − nf(0)), computed on
-      // the diameter-row driver table (exact at this sketch width)
-      val nf = circulantNf(s, dir)
-      val w = Window.orderBy(col("d"))
-      nf.withColumn("delta",
-          col("n_pairs") - coalesce(lag(col("n_pairs"), 1).over(w), lit(0L)))
-        .agg(sum(col("d") * col("delta")).as("num"),
-          (max(col("n_pairs")) -
-            sum(when(col("d") === 0, col("n_pairs")).otherwise(lit(0L)))).as("den"))
-        .select(round(col("num").cast("double") / col("den").cast("double"), 6)
-            .as("avg_distance"),
-          col("den").cast("long").as("n_pairs_connected"))
-    }),
-    "g_effective_diameter" -> ((s, dir) => // 0.9-quantile interpolated
-      // ANF readout over the exact-at-this-size neighborhood function
-      circulantGraph(s, dir).neighborhoodFunction
-        .effectiveDiameterReport(circulantNf(s, dir), 0.9)
-        .select(round(col("effective_diameter"), 6).as("effective_diameter"),
-          col("effective_diameter_int").cast("long").as("effective_diameter_int"),
-          col("diameter").cast("long").as("diameter"), col("n_pairs_total"))),
-    "g_link_prediction" -> ((s, dir) =>
-      circulantGraph(s, dir).linkPrediction.run()
-        .select(col(SRC), col(DST), col("cn"),
-          round(col("jaccard"), 5).as("jaccard"),
-          round(col("adamic_adar"), 5).as("adamic_adar"),
-          col("pref_attach"))),
-    "g_simrank" -> ((s, dir) => // Jeh–Widom structural similarity, 3
-      // synchronous rounds on the cycle+chords graph; sparse canonical
-      // pair state, diagonal implicit — the oracle unrolls every round
-      circulantGraph(s, dir).simRank.setC(0.8).maxIter(3).run()
-        .select(col("a"), col("b"), round(col("simrank"), 5).as("simrank"))),
-    "g_simrank_dist" -> ((s, dir) => // the DISTRIBUTED pair-join path
-      // forced (threshold 0) must reproduce the driver tail bit-for-bit
-      // at the oracle's rounding — same replay verbatim; 2-partition
-      // proof-row idiom (r15)
-      withShufflePartitions(s, 2) {
-        circulantGraph(s, dir).simRank.setC(0.8).maxIter(3)
-          .setSmallGraphThreshold(0).run()
-      }.select(col("a"), col("b"), round(col("simrank"), 5).as("simrank"))),
-    "g_coloring" -> ((s, dir) => // md5 priorities => Luby color rounds
-      // replay exactly in SQL (oracle unrolls colors x rounds; hashes are
-      // keyed by (color, round) so the engine's early exits don't matter)
-      circulantGraph(s, dir).greedyColoring.setHashMode("md5").run()
-        .select(col(ID), col("color"))),
-    "g_louvain" -> ((s, dir) => // oracle: 4 unrolled synchronous rounds of
-      // the exact-integer modularity-gain argmax (no floats anywhere in
-      // the winner rule, so the replay is bit-exact)
-      communityGraph(s, dir).louvain.run()
-        .select(col(ID), col("community"))),
-    "g_louvain_coarse" -> ((s, dir) => // phase-2 coarsening: the level-1
-      // communities aggregate into a weighted super-graph (intra edges →
-      // super-loops) and the same rounds re-run there; oracle unrolls
-      // BOTH levels including the coarsen step — still all-integer
-      communityGraph(s, dir).louvain.setLevels(2).run()
-        .select(col(ID), col("community"))),
-    "g_louvain_decimal" -> ((s, dir) => // the >1.5e9-edge scale mode forced
-      // on the DISTRIBUTED path (threshold 0): DECIMAL(38,0) gain scoring
-      // must pick bit-identical winners to the Long fast path, so the
-      // oracle is g_louvain's replay verbatim; 2-partition proof-row
-      // idiom (r15): 25-vertex fixture, per-round cost is task scheduling
-      withShufflePartitions(s, 2) {
-        communityGraph(s, dir).louvain.setGainMode("decimal")
-          .setSmallGraphThreshold(0).run()
-      }.select(col(ID), col("community"))),
-    "g_ppr_sweep" -> ((s, dir) => // PageRank-Nibble local community: PPR
-      // from nation 0 on the undirected community graph, degree-normalized
-      // sweep order, exact integer cut/vol per prefix (one max-rank edge
-      // histogram — no per-prefix rescans); the oracle replays the 10 PPR
-      // rounds and the whole sweep
-      communityGraph(s, dir).pprSweep.source(0).maxIter(10).sweepK(15).run()
-        .select(col("rank"), col(ID), round(col("ppr"), 5).as("ppr"),
-          col("vol"), col("cut"),
-          round(col("conductance"), 6).as("conductance"), col("best"))),
-    "g_modularity" -> ((s, dir) => { // one-row Q of the louvain partition;
-      // integer numerator (4m·intra − Σtot²), the division is the only
-      // float op — oracle computes the identical expression
-      val g = communityGraph(s, dir)
-      g.modularity(g.louvain.run().select(col(ID), col("community")))
-        .select(round(col("modularity"), 6).as("modularity"),
-          col("n_communities"), col("m_edges"))
-    }),
-    "g_assortativity" -> ((s, dir) => // exact integer degree sums; the
-      // only float op is one division both engines take identically
-      graphB(s, dir).assortativity
-        .select(round(col("assortativity"), 6).as("assortativity"),
-          col("m_edges"))),
-    "g_conductance" -> ((s, dir) => { // community quality of the region
-      // partition of the trade graph: cut / min(vol, 2m - vol), exact
-      // integer cut/volume counts, one division per community
-      val v = load(s, dir, "nation")
-        .select(col("n_nationkey").as(ID), col("n_regionkey"))
-      GraphFrame(v, nationEdges(s, dir)).conductance("n_regionkey")
-    }),
-    "g_attr_assortativity" -> ((s, dir) => { // region homophily of the
-      // trade graph: Newman's categorical mixing coefficient, exact
-      // integer mixing counts, one double division
-      val v = load(s, dir, "nation")
-        .select(col("n_nationkey").as(ID), col("n_regionkey"))
-      GraphFrame(v, nationEdges(s, dir))
-        .attributeAssortativity("n_regionkey")
-        .select(round(col("assortativity"), 6).as("assortativity"),
-          col("m_edges"), col("n_categories"))
-    }),
-    "g_reciprocity" -> ((s, dir) => // exact mutual/total counts; the
-      // division is the only float op, identical in the oracle
-      graphB(s, dir).reciprocity
-        .select(round(col("reciprocity"), 6).as("reciprocity"),
-          col("m_mutual"), col("m_edges"))),
-    "g_transitivity" -> ((s, dir) => // 3T/W with exact integer operands;
-      // triangle counts via the skew-adaptive kernel, one float division
-      graphB(s, dir).transitivity
-        .select(round(col("transitivity"), 6).as("transitivity"),
-          col("n_triangles"), col("n_wedges"))),
-    "g_triad_census" -> ((s, dir) => { // 16-class Holland–Leinhardt triad
-      // census on a mixed motif graph (asym ring + chords + mutual dyads
-      // + planted 030/120/210/300 motifs — every class nonzero); the
-      // engine enumerates only triples with >=2 connected pairs (wedge
-      // joins + exact BigInt subtraction for 012/102/003), the oracle
-      // brute-forces ALL C(25,3) triples with an independent CASE
-      // classifier
-      val n = load(s, dir, "nation")
-      val key = col("n_nationkey").cast("long")
-      val base = n.select(key.as(SRC), pmod(key + 1, lit(25)).as(DST))
-        .unionByName(n.filter(key % 2 === 0)
-          .select(key.as(SRC), pmod(key + 7, lit(25)).as(DST)))
-        .unionByName(n.filter(key % 5 < 2 && key < 20)
-          .select(key.as(SRC), (key + 5).as(DST)))
-        .unionByName(n.filter(key % 5 < 2 && key < 20)
-          .select((key + 5).as(SRC), key.as(DST)))
-      import s.implicits._
-      val extra = Seq((2L, 9L), (9L, 16L), (16L, 2L), (3L, 10L), (3L, 17L),
-        (10L, 17L), (4L, 11L), (11L, 4L), (4L, 18L), (18L, 4L), (11L, 18L),
-        (18L, 11L), (6L, 13L), (13L, 6L), (13L, 20L), (20L, 13L), (6L, 20L),
-        (8L, 21L), (21L, 8L), (14L, 8L), (14L, 21L), (1L, 12L), (12L, 1L),
-        (1L, 19L), (12L, 19L), (7L, 22L), (22L, 7L), (7L, 24L), (24L, 22L))
-        .toDF(SRC, DST)
-      val e = base.unionByName(extra).filter(col(SRC) =!= col(DST)).distinct()
-      GraphFrame(n.select(key.as(ID)), e).triadCensus.run()
-        .select(col("triad"), col("count").cast("long").as("count"))
-    }),
-    "g_rich_club" -> ((s, dir) => // exact N_k/E_k club counts per degree
-      // threshold; the one float division per row is the identical
-      // nearest-double path the oracle takes
-      graphB(s, dir).richClub(Seq(2, 8, 14, 20))
-        .select(col("k"), col("n_k"), col("e_k"),
-          round(col("phi"), 6).as("phi"))),
-    "g_butterfly" -> ((s, dir) => // bipartite 4-cycle (2x2 biclique)
-      // global count over the supplier-part incidence: B = sum C(c,2)
-      // over co-neighbor pairs — wedge join on the part pivot, no
-      // 4-cycle enumeration; all-Long arithmetic
-      lib.Butterflies.globalCounts(load(s, dir, "lineitem"),
-        "l_suppkey", "l_partkey")),
-    "g_butterfly_vertex" -> ((s, dir) => // per-supplier butterfly support
-      // b(v) = sum_{pairs containing v} C(c,2), zero-filled
-      lib.Butterflies.perVertex(load(s, dir, "lineitem"),
-        "l_suppkey", "l_partkey")),
-    "g_bridges" -> ((s, dir) => // cut edges of the tree+chords graph
-      // (driver-tail Tarjan); oracle: per-edge removal reachability
-      treeChordGraph(s, dir).twoConnectivity.bridges()),
-    "g_bridges_dist" -> ((s, dir) => // the DISTRIBUTED BFS-forest +
-      // cover-marking path forced (threshold 0) on the SAME oracle —
-      // bridges are graph invariants, so the paths must agree exactly.
-      // 2 partitions: 25-vertex fixture, dozens of supersteps whose cost
-      // is task scheduling (the proof-row idiom); run() is eager so the
-      // whole pipeline executes inside the wrapper
-      withShufflePartitions(s, 2) {
-        treeChordGraph(s, dir).twoConnectivity
-          .setSmallGraphThreshold(0).bridges()
-      }),
-    "g_articulation" -> ((s, dir) => // cut vertices; oracle: per-vertex
-      // removal reachability (connected fixture)
-      treeChordGraph(s, dir).twoConnectivity.articulationPoints()),
-    "g_articulation_dist" -> ((s, dir) => // forced distributed: child
-      // grouping over sibling cross edges, not DFS lowpoints; 2-partition
-      // proof-row idiom (see g_bridges_dist)
-      withShufflePartitions(s, 2) {
-        treeChordGraph(s, dir).twoConnectivity
-          .setSmallGraphThreshold(0).articulationPoints()
-      }),
-    "g_2ecc" -> ((s, dir) => // 2-edge-connected components = CC minus
-      // bridges, min-id labels
-      treeChordGraph(s, dir).twoConnectivity.twoEdgeComponents()),
-    "g_triangle_count" -> ((s, dir) =>
-      graphB(s, dir).triangleCount.run()
-        .select(col(ID), col("count").as("tri_count"))),
-    "g_clustering_coeff" -> ((s, dir) =>
-      graphB(s, dir).clusteringCoefficient.run()
-        .select(col(ID), col("tri_count"),
-          round(col("clustering_coeff"), 5).as("clustering_coeff"))),
-    "g_bfs" -> ((s, dir) =>
-      graphB(s, dir).bfs
-        .fromExpr(col(ID) === 0)
-        .toExpr(col("n_name").isin("NATION_7", "NATION_13"))
-        .run()
-        .select(col(s"from.$ID").as("from_id"), col(s"to.$ID").as("to_id"))
-        .distinct()),
-    "g_label_propagation" -> ((s, dir) => // oracle: 5 unrolled CDLP rounds
-      graphB(s, dir).labelPropagation.maxIter(5).run().select(col(ID), col("label"))),
-    "g_kcore" -> ((s, dir) => // oracle: unrolled capped-h-index Jacobi fixpoint
-      graphB(s, dir).kCore.run().select(col(ID), col("kcore"))),
-    "g_mis" -> ((s, dir) => // md5 priorities => Luby rounds replay exactly in SQL
-      graphB(s, dir).maximalIndependentSet.setHashMode("md5").run().select(col(ID))),
-    "g_matching" -> ((s, dir) => // maximal matching by locally-minimum md5
-      // edge priorities (edge-centric Luby); the oracle replays each round
-      graphB(s, dir).maximalMatching.seed(42L).run()),
-    "g_matching_dist" -> ((s, dir) => // the distributed per-round
-      // agg/join rounds forced (threshold 0) on the SAME replay oracle;
-      // 2 partitions: 25-vertex fixture, the cost is task scheduling
-      withShufflePartitions(s, 2) {
-        graphB(s, dir).maximalMatching.seed(42L)
-          .setSmallGraphThreshold(0).run()
-      }),
-    "g_matching_weighted" -> ((s, dir) => { // locally-DOMINANT edges
-      // (weight desc, md5 asc): Preis greedy 1/2-approx max-weight
-      // matching; canonical pairs take the MAX over directed duplicates
-      val e = nationEdges(s, dir).withColumn("w",
-        (pmod(col(SRC) * 7 + col(DST) * 3, lit(5)) + 1).cast("double"))
-      GraphFrame(load(s, dir, "nation").select(col("n_nationkey").as(ID)), e)
-        .maximalMatching.seed(42L).weightCol("w").run()
-    }),
-    "g_cycles" -> ((s, dir) =>
-      // array columns break the driver's pandas canonicalizer: ship the
-      // cycle as a joined string (oracle uses array_to_string likewise)
-      eventTypeGraph(s, dir).detectingCycles.run()
-        .select(array_join(col("found_cycles").cast("array<string>"), ",")
-          .as("found_cycles"))),
-
-    "g_graph_ops" -> ((s, dir) => {
-      // §2.2 composition through the driver gate: filterEdges keeps only
-      // high-value order edges, dropIsolatedVertices sheds customers left
-      // with no qualifying orders, and the surviving edges reach their
-      // nation through the manual skewedJoin escape hatch (customers with
-      // > 8 qualifying orders ride the broadcast leg, the tail shuffles —
-      // both legs union to exactly the plain-join result the oracle states).
-      val cust = load(s, dir, "customer")
-      val ord = load(s, dir, "orders")
-      val v = cust.select(concat(lit("c"), col("c_custkey")).as(ID))
-        .unionByName(ord.select(concat(lit("o"), col("o_orderkey")).as(ID)))
-      val e = ord.select(concat(lit("c"), col("o_custkey")).as(SRC),
-        concat(lit("o"), col("o_orderkey")).as(DST), col("o_totalprice"))
-      val g2 = GraphFrame(v, e)
-        .filterEdges(col("o_totalprice") > 150000.0)
-        .dropIsolatedVertices()
-      val custDim = cust.select(concat(lit("c"), col("c_custkey")).as(SRC),
-        col("c_nationkey"))
-      val perNation = g2.skewedJoin(g2.edges, custDim, SRC, threshold = 8L)
-        .groupBy("c_nationkey")
-        .agg(count(lit(1)).as("n_orders"),
-          round(sum("o_totalprice"), 2).as("total_val"))
-      val survivors = g2.vertices.filter(col(ID).startsWith("c"))
-        .join(custDim.withColumnRenamed(SRC, ID), Seq(ID))
-        .groupBy("c_nationkey").agg(count(lit(1)).as("n_cust"))
-      perNation.join(survivors, Seq("c_nationkey"))
-        .select(col("c_nationkey").as("nation_key"), col("n_cust"),
-          col("n_orders"), col("total_val"))
-    }),
-    "g_reversed_undirected" -> ((s, dir) => {
-      // the last unit-only §2.2 rows through the gate, pinned by degree
-      // identities: in-degrees of the REVERSED graph equal original
-      // out-degrees, and out-degrees of the UNDIRECTED graph equal total
-      // degrees — both checkable by the oracle from the edge list alone
-      val g = graphB(s, dir)
-      val rev = g.asReversed().inDegrees
-        .withColumnRenamed("inDegree", "rev_in")
-      val und = g.asUndirected().outDegrees
-        .withColumnRenamed("outDegree", "und_out")
-      rev.join(und, Seq(ID))
-    }),
-    "g_agg_neighbors" -> ((s, dir) => {
-      import graft.lib.AggregateNeighbors
-      graphB(s, dir).aggregateNeighbors
-        .agg(count(lit(1)).as("n"), sum(AggregateNeighbors.nbr(ID)).as("sum_nbr"))
-        .setMaxHops(2)
-        .run()
-    }),
-    "g_agg_paths" -> ((s, dir) => {
-      // path-accumulator mode (reference AggregateNeighbors' primary
-      // surface): every trade path nation 0 → … → nation 3 within 2 hops,
-      // carrying the id path and the nation-name path. Target semantics:
-      // a path reaching 3 is saved AND stops — so no 2-hop path may pass
-      // THROUGH 3 (the oracle encodes the same exclusion). Arrays ship as
-      // joined strings (driver canonicalizer contract, cf. g_cycles).
-      import graft.lib.AggregateNeighbors
-      graphB(s, dir).aggregateNeighbors
-        .setStartingVertices(col(ID) === 0)
-        .setMaxHops(2)
-        .setTargetCondition(AggregateNeighbors.dstAttr(ID) === 3)
-        .addAccumulator("path", array(col(ID)),
-          array_append(col("path"), AggregateNeighbors.dstAttr(ID)))
-        .addAccumulator("names", array(col("n_name")),
-          array_append(col("names"), AggregateNeighbors.dstAttr("n_name")))
-        .run()
-        .select(array_join(col("path").cast("array<string>"), ",").as("path"),
-          array_join(col("names"), ",").as("names"),
-          col(ID).cast("int").as(ID), col("hop"))
-    }),
-    "g_triangle_approx" -> ((s, dir) =>
-      // theta sketches are exact below nominal entries, so the exact-count
-      // oracle applies at this scale
-      graphB(s, dir).triangleCount.runApprox(lgNomEntries = 12)
-        .select(col(ID), col("count").as("tri_count"))),
-    "g_pic" -> ((s, dir) => {
-      // label values are arbitrary, so the ORACLED output is the label-
-      // invariant CO-MEMBERSHIP relation on a separable fixture: two
-      // nation cliques (0..11 | 12..24) with no cross edges. Degree init
-      // makes Spark ML's PIC fully deterministic (its internal k-means
-      // seed is a class-name constant), and any correct 2-clustering of
-      // two disconnected cliques is the block partition — so all 300
-      // ordered pairs, positive AND negative co-membership, are exact.
-      val n = load(s, dir, "nation")
-      val key = col("n_nationkey").cast("int")
-      val v = n.select(key.as(ID), col("n_name"))
-      val e = n.select(key.as("a")).join(n.select(key.as("b")), col("a") < col("b"))
-        .filter((col("a") < 12 && col("b") < 12) ||
-          (col("a") >= 12 && col("b") >= 12))
-        .select(col("a").as(SRC), col("b").as(DST))
-      val labels = GraphFrame(v, e)
-        .powerIterationClustering(k = 2, maxIter = 20, initMode = "degree")
-      labels.select(col(ID).as("a"), col("cluster").as("ca"))
-        .join(labels.select(col(ID).as("b"), col("cluster").as("cb")),
-          col("a") < col("b"))
-        .select(col("a"), col("b"),
-          (col("ca") === col("cb")).cast("int").as("same_cluster"))
-    }),
-    "g_skew_hub" -> ((s, dir) => skewStats(s, dir, hub = true)),
-    "g_skew_flat" -> ((s, dir) => skewStats(s, dir, hub = false)),
-    "g_belief_prop" -> ((s, dir) => { // sum-product BP (log-odds messages,
-      // checkerboard schedule) on a 5x5 Ising grid keyed by nation, with
-      // deterministic a/b fields; the oracle unrolls the same 2 sweeps ×
-      // 2 colors of message updates as chained CTEs
-      import graft.examples.BeliefPropagation
-      val n = load(s, dir, "nation")
-      val key = col("n_nationkey").cast("int")
-      val v = n.select(key.as("id"),
-        ((key * 37 % 21 - 10) / lit(10.0)).as("a"),
-        pmod((key / lit(5)).cast("int") + pmod(key, lit(5)), lit(2)).as("color"))
-      val right = n.filter(pmod(key, lit(5)) < 4)
-        .select(key.as("src"), (key + 1).as("dst"))
-      val down = n.filter((key / lit(5)).cast("int") < 4)
-        .select(key.as("src"), (key + 5).as("dst"))
-      val e = right.unionByName(down)
-        .withColumn("b", ((col("src") * 31 + col("dst") * 17) % 19 - 9) / lit(10.0))
-      BeliefPropagation.sumProduct(GraphFrame(v, e), sweeps = 2)
-        .select(col("id"), round(col("belief"), 6).as("belief"))
-    }),
-    "g_pppr" -> ((s, dir) =>
-      graphB(s, dir).parallelPersonalizedPageRank
-        .sourceIds(Seq(0, 5)).maxIter(10).run().vertices
-        .select(col(ID), round(element_at(col("pageranks"), 1), 5).as("r0"),
-          round(element_at(col("pageranks"), 2), 5).as("r1"))),
-    "g_svdpp" -> ((s, dir) => { // deterministic variant: md5 factor init +
-      // synchronous epochs — the DuckDB oracle replays both epochs exactly
-      val li = load(s, dir, "lineitem")
-      val e = li.select(concat(lit("s"), col("l_suppkey")).as(SRC),
-        concat(lit("p"), col("l_partkey")).as(DST),
-        col("l_quantity").as(GraphFrame.WEIGHT))
-      GraphFrame.fromEdges(e).svdPlusPlus.setRank(2).maxIter(2)
-        .setMinValue(1.0).setMaxValue(50.0).runDeterministic()
-        .select(col(ID), round(col("bias"), 5).as("bias"))
-    }),
-    "g_rw_embeddings" -> ((s, dir) => // oracle: coverage + width only
-      // (Word2Vec factor values are randomly initialized — unoracleable)
-      embeddings.Embeddings.randomWalkEmbeddings(graphB(s, dir), dim = 8,
-        walkLength = 3, walksPerVertex = 2)
-        .select(col(ID), size(col("embedding")).as("dim"))),
-    "g_random_walks" -> ((s, dir) => // md5 draws => walks replay exactly in SQL;
-      // string-joined path (pandas-canon-safe)
-      graphB(s, dir).randomWalks.setWalkLength(4).setWalksPerVertex(2)
-        .setHashMode("md5").run()
-        .select(col("walk_id"),
-          array_join(col("random_walk").cast("array<string>"), ",")
-            .as("random_walk"))),
-    "g_node2vec" -> ((s, dir) => // biased second-order walks; power-of-two
-      // p/q make the threshold-scan prefix sums dyadic-exact in SQL
-      graphB(s, dir).randomWalks.setWalkLength(3).setWalksPerVertex(2)
-        .setHashMode("md5").setReturnParam(0.5).setInOutParam(4.0).run()
-        .select(col("walk_id"),
-          array_join(col("random_walk").cast("array<string>"), ",")
-            .as("random_walk"))),
-    "g_random_walks_weighted" -> ((s, dir) => { // edge-weight-biased picks:
-      // integer weights + md5 draws keep every threshold-scan prefix sum
-      // exact in double, so the SQL replay is bit-exact
-      val g0 = graphB(s, dir)
-      val ge = GraphFrame(g0.vertices, g0.edges.withColumn("w",
-        ((col(SRC) * 7 + col(DST) * 3) % 5 + 1).cast("double")))
-      ge.randomWalks.setWalkLength(3).setWalksPerVertex(2)
-        .setHashMode("md5").setWeightCol("w").run()
-        .select(col("walk_id"),
-          array_join(col("random_walk").cast("array<string>"), ",")
-            .as("random_walk"))
-    }),
-    "p_bipartite_projection" -> ((s, dir) =>
-      suppliesGraph(s, dir).bipartiteProjection("supplies")),
-    "p_bipartite_capped" -> ((s, dir) =>
-      // hub-capped projection: parts supplied by > 20 suppliers are
-      // excluded before the self-join (the 100-TB-scale guard; weight
-      // becomes a lower bound that ignores hub-mediated co-occurrence)
-      suppliesGraph(s, dir).bipartiteProjection("supplies", maxDegree = 20)),
-    "m_media_meta" -> ((s, dir) => {
-      // fixture: frame each doc's text as a REAL media payload — doc_id%3
-      // picks PNG (full signature + IHDR), JPEG (SOI + APP0 + COM + SOF0,
-      // so the marker walk must skip two segments), or raw text — with
-      // dimensions derived from doc_id. attachMeta must parse the actual
-      // header bytes to recover them; the oracle recomputes them
-      // analytically, so a wrong parse (endianness, offset, walk) fails
-      // the hash.
-      import graft.multimodal.Multimodal
-      val docs = load(s, dir, "documents")
-      val wd = (pmod(col("doc_id"), lit(800)) + 16).cast("int")
-      val ht = (pmod(col("doc_id") * 7, lit(600)) + 16).cast("int")
-      val body = hex(encode(col("text"), "UTF-8"))
-      val pngHex = concat(lit("89504E470D0A1A0A0000000D49484452"),
-        lpad(hex(wd), 8, "0"), lpad(hex(ht), 8, "0"),
-        lit("080600000000000000"), body)
-      val jpgHex = concat(
-        lit("FFD8" + "FFE00010" + "4A46494600010100000100010000" +
-          "FFFE0008" + "677261667421" + "FFC00011" + "08"),
-        lpad(hex(ht), 4, "0"), lpad(hex(wd), 4, "0"),
-        lit("03011100021101031101"), body)
-      val payload = when(pmod(col("doc_id"), lit(3)) === 0, unhex(pngHex))
-        .when(pmod(col("doc_id"), lit(3)) === 1, unhex(jpgHex))
-        .otherwise(col("text").cast("binary"))
-      Multimodal.attachMeta(docs.withColumn("payload", payload), "doc_id", "payload")
-        .select(col("doc_id"), col("media_meta.format").as("format"),
-          col("media_meta.n_bytes").as("n_bytes"),
-          col("media_meta.width").as("width"),
-          col("media_meta.height").as("height"))
-    }),
-    "m_image_decode" -> ((s, dir) => {
-      // REAL codec round-trip: the fixture ENCODES a valid two-tone
-      // vertical-split PNG per doc (see twoTonePngs) with the JDK's
-      // ImageIO, and decodeImageStats DECODES it back with the same real
-      // codec. PNG is lossless, so the oracle predicts the exact integer
-      // channel sums analytically without ever touching bytes — a fake
-      // decode (or any pixel-addressing bug in encode or decode) breaks
-      // the hash.
-      multimodal.Multimodal.decodeImageStats(twoTonePngs(s, dir), "doc_id", "payload")
-        .toDF().select(col("id").as("doc_id"), col("width"), col("height"),
-          col("sum_r"), col("sum_g"), col("sum_b"))
-    }),
-    "m_image_ahash" -> ((s, dir) => // perceptual fingerprint of the REAL
-      // decoded pixels: 8x8 block-luma bits by exact integer cross-
-      // multiplication — the oracle predicts all 64 bits analytically
-      multimodal.Multimodal.imageAHash(twoTonePngs(s, dir), "doc_id", "payload")
-        .select(col("doc_id"), col("ahash"))),
-    "m_image_dhash" -> ((s, dir) => // gradient fingerprint of the REAL
-      // decoded pixels: 8x9 adjacent-block luma compares, exact integer
-      // cross-multiplication — the oracle predicts all 64 bits
-      multimodal.Multimodal.imageDHash(twoTonePngs(s, dir), "doc_id", "payload")
-        .select(col("doc_id"), col("dhash"))),
-    "m_image_dedup" -> ((s, dir) => { // perceptual near-dup groups: docs
-      // sharing an aHash keep the minimum doc_id (aHash is deliberately
-      // coarse — structural copies collide; that is the dedup contract)
-      // persist the hashes (r14): h feeds both the probe side and the
-      // groupBy — unpersisted, the REAL PNG encode+decode ran twice per doc
-      val h = multimodal.Multimodal.imageAHash(twoTonePngs(s, dir), "doc_id", "payload")
-        .select(col("doc_id"), col("ahash"))
-        .persist()
-      h.join(h.groupBy("ahash").agg(min(col("doc_id")).as("keep_id")), "ahash")
-        .select(col("doc_id"), col("ahash"), col("keep_id"))
-    }),
-    "m_audio_decode" -> ((s, dir) => {
-      // REAL audio round trip: the fixture writes a valid 16-bit mono PCM
-      // WAV per doc (sample i = ((doc_id*31 + i*7919) mod 65536) - 32768,
-      // n = doc_id%100+50 frames) via the JDK's javax.sound.sampled, and
-      // decodeAudioStats parses it back with the same real reader. PCM is
-      // lossless, so the oracle predicts the exact integer |sample| sum
-      // and peak analytically.
-      import s.implicits._
-      // repartitioned before the codec mapPartitions — see twoTonePngs
-      val ids = load(s, dir, "documents").select(col("doc_id").cast("long")).as[Long]
-        .repartition(s.sparkContext.defaultParallelism)
-      val payloads = ids.mapPartitions { it =>
-        it.map { id =>
-          val n = (id % 100 + 50).toInt
-          val pcm = new Array[Byte](n * 2)
-          var i = 0
-          while (i < n) {
-            val v = (((id * 31 + i.toLong * 7919) % 65536) - 32768).toInt
-            pcm(2 * i) = (v & 0xff).toByte
-            pcm(2 * i + 1) = ((v >> 8) & 0xff).toByte
-            i += 1
-          }
-          val fmt = new javax.sound.sampled.AudioFormat(16000f, 16, 1, true, false)
-          val ais = new javax.sound.sampled.AudioInputStream(
-            new java.io.ByteArrayInputStream(pcm), fmt, n.toLong)
-          val bos = new java.io.ByteArrayOutputStream()
-          javax.sound.sampled.AudioSystem.write(ais,
-            javax.sound.sampled.AudioFileFormat.Type.WAVE, bos)
-          (id, bos.toByteArray)
-        }
-      }.toDF("doc_id", "payload")
-      multimodal.Multimodal.decodeAudioStats(payloads, "doc_id", "payload")
-        .toDF().select(col("id").as("doc_id"), col("sample_rate"),
-          col("channels"), col("bits"), col("n_frames"), col("sum_abs"), col("peak"))
-    }),
-    "m_video_demux" -> ((s, dir) => {
-      // REAL container demux: the fixture assembles a minimal valid
-      // RIFF/AVI per doc (LIST movi with n = doc_id%5+2 '00dc' frame
-      // chunks; frame i is doc_id%20+4+i bytes of id-derived data, odd
-      // sizes exercising the even-padding rule), demuxRiffFrames walks
-      // the actual chunk structure back out, and the oracle predicts
-      // each frame's length and exact byte sum analytically.
-      import s.implicits._
-      // repartitioned before the codec mapPartitions — see twoTonePngs
-      val ids = load(s, dir, "documents").select(col("doc_id").cast("long")).as[Long]
-        .repartition(s.sparkContext.defaultParallelism)
-      val payloads = ids.mapPartitions { it =>
-        it.map { id =>
-          val nf = (id % 5 + 2).toInt
-          val frames = (0 until nf).map { i =>
-            val len = (id % 20 + 4 + i).toInt
-            Array.tabulate[Byte](len)(j => ((id * 7 + i * 13 + j) % 256).toByte)
-          }
-          def le32(v: Int): Array[Byte] =
-            Array[Byte]((v & 0xff).toByte, ((v >> 8) & 0xff).toByte,
-              ((v >> 16) & 0xff).toByte, ((v >> 24) & 0xff).toByte)
-          val bos = new java.io.ByteArrayOutputStream()
-          val movi = new java.io.ByteArrayOutputStream()
-          movi.write("movi".getBytes("US-ASCII"))
-          frames.foreach { f =>
-            movi.write("00dc".getBytes("US-ASCII"))
-            movi.write(le32(f.length))
-            movi.write(f)
-            if (f.length % 2 == 1) movi.write(0) // RIFF even padding
-          }
-          val moviBytes = movi.toByteArray
-          bos.write("RIFF".getBytes("US-ASCII"))
-          bos.write(le32(4 + 8 + moviBytes.length)) // "AVI " + LIST hdr + body
-          bos.write("AVI ".getBytes("US-ASCII"))
-          bos.write("LIST".getBytes("US-ASCII"))
-          bos.write(le32(moviBytes.length))
-          bos.write(moviBytes)
-          (id, bos.toByteArray)
-        }
-      }.toDF("doc_id", "payload")
-      multimodal.Multimodal.demuxRiffFrames(payloads, "doc_id", "payload")
-        .map(f => (f.id, f.frame_idx, f.frame.length,
-          f.frame.map(b => (b & 0xff).toLong).sum))
-        .toDF("doc_id", "frame_idx", "frame_len", "byte_sum")
-    }),
-    "m_frame_sample" -> ((s, dir) => {
-      // every 4th 64-byte frame of the payload; frames shipped as hex so the
-      // oracle can slice the same BYTES (DuckDB hex(encode(text)) at 2-char
-      // offsets) — byte-exact parity even for multi-byte UTF-8 text
-      import graft.multimodal.Multimodal
-      val docs = load(s, dir, "documents").withColumn("payload", col("text").cast("binary"))
-      Multimodal.sampleFrames(docs, "doc_id", "payload", frameSize = 64, everyK = 4)
-        .select(col("doc_id"), col("frame_idx"), lower(hex(col("frame"))).as("frame_hex"))
-    }),
-
-    // --- pipeline: dedup ---
-    "p_dedup_exact" -> ((s, dir) =>
-      pipeline.Dedup.exact(load(s, dir, "documents"), "doc_id", Seq("text"))),
-    "p_chunk" -> ((s, dir) => // RAG chunking: 32-word chunks, 8 overlap
-      pipeline.Text.chunk(load(s, dir, "documents"), "doc_id", "text",
-        chunkWords = 32, overlapWords = 8)),
-    "p_normalize" -> ((s, dir) => // ASCII-safe cleanup: lower, controls
-      // to spaces, whitespace collapsed, trimmed — pure projections
-      pipeline.Text.normalize(load(s, dir, "documents"), "doc_id", "text")),
-    "p_strip_markup" -> ((s, dir) => { // HTML boilerplate strip (CCNet/
-      // RefinedWeb front step): the fixture wraps each document in a
-      // page skeleton with script/style bodies, a comment, and the
-      // seven decoded entities — everything the extractor must remove
-      val page = concat(
-        lit("<html><head><STYLE type=\"text/css\">p{color:red}</STYLE>" +
-          "<script>var x = 1 < 2;</script></head>\n<body><h1>Title</h1><p>"),
-        col("text"),
-        lit("</p><!-- nav\nboilerplate --><p>tail &amp;amp; &lt;x&gt; " +
-          "&quot;q&quot; &#39;a&#39;&nbsp;end</p></body></html>"))
-      pipeline.Web.stripMarkup(load(s, dir, "documents")
-        .select(col("doc_id"), page.as("html")), "doc_id", "html")
-    }),
-    "p_url_canonical" -> ((s, dir) => // URL canonicalization + dedup
-      // keys: three deterministic URL shapes per corpus (http with www +
-      // default port + tracking params + fragment; https with sorted-out
-      // param order; a schemeless non-URL that must produce nulls)
-      pipeline.Web.urlCanonical(urlFixture(s, dir), "doc_id", "url")),
-    "p_host_stats" -> ((s, dir) => // domain-level crawl stats over the
-      // SAME URL fixture: per canonical host, rows vs distinct pages and
-      // the within-host exact-dup ratio (the blocklist-prep table);
-      // non-URL rows drop, the http shape dups heavily (5 query values
-      // per host), the https shape is near-unique (11 paths x 2 params)
-      pipeline.Web.hostStats(urlFixture(s, dir), "doc_id", "url")),
-    "p_extract_links" -> ((s, dir) => // raw href extraction (double- AND
-      // single-quoted, case-insensitive): absolute, site-relative and
-      // fragment links all surface — resolution is linkGraph's job
-      pipeline.Web.extractLinks(pageFixture(s, dir), "doc_id", "html")),
-    "p_host_graph" -> ((s, dir) => // host-level web graph: absolute
-      // links by canonical host key (uppercase H, www., :443 all
-      // normalize), site-relative links to the source host, fragments
-      // dropped — (src_host, dst_host, n_links) ready for fromEdges
-      pipeline.Web.linkGraph(pageFixture(s, dir), "doc_id", "url", "html")),
-    "p_extract_links_capped" -> ((s, dir) => // crawler-trap guard: first
-      // 2 non-empty links per page in document order, truncation COUNTED
-      // in n_links_dropped (the fixture has 4 links/page → 2 dropped)
-      pipeline.Web.extractLinks(pageFixture(s, dir), "doc_id", "html",
-        maxLinksPerPage = 2)),
-    "p_host_graph_capped" -> ((s, dir) => // the same cap bounding the
-      // link-graph explode: only each page's first 2 links feed the
-      // (src_host, dst_host) aggregation
-      pipeline.Web.linkGraph(pageFixture(s, dir), "doc_id", "url", "html",
-        maxLinksPerPage = 2)),
-    "p_host_rank" -> ((s, dir) => // the crawl→rank composition gate:
-      // linkGraph → fromEdges → n_links-weighted PageRank, the oracle
-      // unrolls the full weighted trajectory over the replayed host graph
-      pipeline.Web.hostRank(pageFixture(s, dir), "doc_id", "url", "html")
-        .select(col("host"), round(col("pagerank"), 5).as("pagerank"))),
-    "p_quality_quantiles" -> ((s, dir) => // per-language EXACT quantile
-      // thresholds (rank ceil(q*n), a value that occurs — approx sketches
-      // are engine-specific and these thresholds gate permanent cuts)
-      pipeline.Sampling.groupQuantiles(load(s, dir, "documents")
-          .select(col("lang"), col("n_chars").cast("double").as("score")),
-        "lang", "score", Seq(0.1, 0.5, 0.9))),
-    "p_quality_cut" -> ((s, dir) => // the threshold-table workflow
-      // end-to-end: per-language 0.8-quantile of the score, broadcast
-      // the tiny threshold table, keep rows at or above — the permanent
-      // cut p_quality_quantiles' thresholds exist to gate
-      pipeline.Sampling.quantileCut(load(s, dir, "documents")
-          .select(col("doc_id"), col("lang"),
-            col("n_chars").cast("double").as("score")),
-        "lang", "score", 0.8)),
-    "p_keep_best" -> ((s, dir) => // best-of-cluster dedup keep: one row
-      // per cluster by (score desc, id asc) — the near-dup finisher that
-      // keeps the best-quality member instead of an arbitrary one
-      pipeline.Dedup.keepBest(load(s, dir, "documents")
-          .select(pmod(col("doc_id"), lit(40)).as("cluster"), col("doc_id"),
-            col("n_chars").cast("double").as("score")),
-        "cluster", "doc_id", "score")),
-    "p_corpus_diff" -> ((s, dir) => { // incremental-crawl snapshot diff:
-      // old = doc_id < 400, new = doc_id >= 100 with every doc_id%10==3
-      // re-crawled (text + ' v2') — exercises all four statuses
-      val docs = load(s, dir, "documents")
-      val oldSnap = docs.filter(col("doc_id") < 400)
-        .select(col("doc_id"), col("text"))
-      val newSnap = docs.filter(col("doc_id") >= 100)
-        .select(col("doc_id"),
-          when(pmod(col("doc_id"), lit(10)) === 3,
-            concat(col("text"), lit(" v2"))).otherwise(col("text")).as("text"))
-      pipeline.Dedup.corpusDiff(oldSnap, newSnap, "doc_id", "text")
-    }),
-    "p_segment_dedup" -> ((s, dir) => // CCNet-style paragraph dedup; the
-      // word-soup fixture has no line structure, so segment = 4-word window
-      pipeline.Dedup.segmentDedup(load(s, dir, "documents"), "doc_id", "text",
-        windowWords = 4, maxDupCount = 2)),
-    "p_incremental_dedup" -> ((s, dir) => { // steady-state dedup: new batch
-      // (doc_id >= 400) vs the corpus index (doc_id < 400) + within-batch
-      val docs = load(s, dir, "documents")
-      // persisted like the e_stream_incremental_dedup twin (r15): the
-      // index is consumed by the width-validation scan, the bucket join
-      // and the estimate signatures — unpersisted, each consumer re-ran
-      // the corpus minhash (in production this frame is READ from parquet)
-      val index = pipeline.Dedup.minhashIndex(
-        docs.filter(col("doc_id") < 400), "doc_id", "text").persist()
-      pipeline.Dedup.incrementalNearDups(
-        docs.filter(col("doc_id") >= 400), "doc_id", "text", index)
-    }),
-    "p_minhash_lsh" -> ((s, dir) =>
-      pipeline.Dedup.minhashLsh(load(s, dir, "documents"), "doc_id", "text",
-        n = 3, bands = 8, rowsPerBand = 2)),
-    "p_dedup_clusters" -> ((s, dir) =>
-      pipeline.Dedup.nearDupClusters(load(s, dir, "documents"), "doc_id", "text")),
-    "p_clean_corpus" -> ((s, dir) => {
-      // composed training-data pipeline: quality gate + near-dup removal.
-      // `documents` feeds three branches (quality scan, LSH shingling,
-      // final join) — persist so the parquet scan + decode runs once.
-      val docs = load(s, dir, "documents").persist()
-      val quality = pipeline.Text.quality(docs, "doc_id", "text")
-        .filter(col("n_tokens") >= 20 && col("stop_ratio") <= 0.2)
-        .select("doc_id")
-      val keep = pipeline.Dedup.nearDupClusters(docs, "doc_id", "text")
-        .filter(col("keep_id") === col("doc_id"))
-        .select("doc_id")
-      docs.join(quality, "doc_id").join(keep, "doc_id")
-        .select(col("doc_id"), col("lang"), col("n_chars"))
-    }),
-    "p_dedup_recall" -> ((s, dir) =>
-      // measured LSH quality vs COMPLETE exact-Jaccard ground truth
-      // (threshold 0.3); the oracle recomputes both sides independently
-      pipeline.Dedup.lshDedupQuality(load(s, dir, "documents"), "doc_id", "text",
-        threshold = 0.3)),
-    "p_simhash" -> ((s, dir) =>
-      pipeline.Dedup.simhash(load(s, dir, "documents"), "doc_id", "text", bits = 16)),
-    "p_ngram_jaccard" -> ((s, dir) =>
-      pipeline.Dedup.ngramJaccard(load(s, dir, "documents"), "doc_id", "text",
-        n = 3, minShared = 3, maxDocFreq = 1000)),
-    "p_containment" -> ((s, dir) => // asymmetric small-in-large dedup:
-      // C(a->b) = |S(a) n S(b)| / |S(a)| — catches quoted/embedded docs
-      // whole-doc Jaccard misses; both orientations of each pair
-      pipeline.Dedup.containmentPairs(load(s, dir, "documents"), "doc_id", "text",
-        n = 3, minShared = 2, threshold = 0.4, maxDocFreq = 1000)),
-
-    // --- pipeline: similarity ---
-    "p_cosine_pairs" -> ((s, dir) =>
-      pipeline.Similarity.bruteForcePairs(load(s, dir, "embeddings"), "vec_id", "embedding", 0.35)),
-    "p_ann_topk" -> ((s, dir) =>
-      pipeline.Similarity.topK(load(s, dir, "embeddings"), "vec_id", "embedding",
-        k = 3, queryFilter = col("vec_id") < 20)),
-    "p_ann_mips" -> ((s, dir) => // max-inner-product retrieval: rank by
-      // RAW dot (norm carries signal); cosine indexes apply via the
-      // norm-augmentation reduction at scale
-      pipeline.Similarity.mipsTopK(load(s, dir, "embeddings"), "vec_id", "embedding",
-        k = 3, queryFilter = col("vec_id") < 20)),
-    "p_ann_lsh" -> ((s, dir) => // approximate by construction; oracle mirrors
-      // the banded bucket candidates exactly (md5-derived plane weights)
-      pipeline.Similarity.lshTopK(load(s, dir, "embeddings"), "vec_id", "embedding",
-        k = 3, bands = 2, planesPerBand = 4, dim = 64)),
-    "p_knn_graph" -> ((s, dir) => // mutual-kNN graph: canonical (src<dst)
-      // edge iff each endpoint is in the other's exact top-5
-      pipeline.Similarity.knnGraph(load(s, dir, "embeddings"), "vec_id",
-        "embedding", k = 5)),
-    "p_pmi_bigrams" -> ((s, dir) => // collocations: top-20 adjacent pairs
-      // by PMI over exact corpus counts; one ln per surviving pair
-      pipeline.Text.pmiBigrams(load(s, dir, "documents"), "doc_id", "text",
-          minCount = 3, topK = 20)
-        .select(col("w1"), col("w2"), col("pair_count"),
-          round(col("pmi"), 6).as("pmi"))),
-    "p_group_sample" -> ((s, dir) => // k docs per source, smallest
-      // md5(seed|doc_id) draws — deterministic, replayed by the oracle
-      pipeline.Sampling.groupSample(load(s, dir, "documents"),
-          "source", "doc_id", k = 5)
-        .select(col("doc_id"), col("source"))),
-    "p_contaminated_spans" -> ((s, dir) => { // decontamination detection:
-      // exact maximal TRAIN spans appearing verbatim in the BENCH split
-      // (doc_id % 10 == 0); cross-corpus form of p_dup_spans_maximal
-      val docs = load(s, dir, "documents")
-      pipeline.Text.contaminatedSpans(
-        docs.filter(col("doc_id") % 10 =!= 0),
-        docs.filter(col("doc_id") % 10 === 0), "doc_id", "text",
-        seedTokens = 4)
-    }),
-    "p_cut_contaminated" -> ((s, dir) => { // the cut: every contaminated
-      // occurrence removed (no keep-first winner — contamination all
-      // goes), train corpus rebuilt in position order
-      val docs = load(s, dir, "documents")
-      pipeline.Text.cutContaminated(
-        docs.filter(col("doc_id") % 10 =!= 0),
-        docs.filter(col("doc_id") % 10 === 0), "doc_id", "text",
-        seedTokens = 4)
-    }),
-    "p_weighted_sample" -> ((s, dir) => // 50 docs ∝ ⌊n_chars/16⌋ tickets,
-      // min-of-draws race (no pow/ln anywhere) — the oracle replays every
-      // ticket, the per-doc min and the (key, id) top-50
-      pipeline.Sampling.weightedSample(
-          load(s, dir, "documents")
-            .withColumn("w", greatest(lit(1L), floor(col("n_chars") / 16).cast("long"))),
-          "doc_id", "w", k = 50)
-        .select(col("doc_id"), col("n_chars"), col("sample_rank"))),
-    "p_approx_distinct" -> ((s, dir) => { // KMV sketch: per-language
-      // approximate distinct token count, (k-1)/h_k over the 16 smallest
-      // 60-bit md5 fractions — the estimate itself replays bit-identically
-      val toks = load(s, dir, "documents")
-        .select(col("lang"), explode(split(col("text"), " ")).as("tok"))
-        .filter(length(col("tok")) > 0)
-      pipeline.Sampling.approxDistinct(toks, "lang", "tok", k = 16)
-        .select(col("lang"), round(col("approx_distinct"), 4).as("approx_distinct"))
-    }),
-    "p_random_projection" -> ((s, dir) => // JL ±1 projection 64 → 16 dims;
-      // rows (vec_id, d, val) so the float compare rounds per scalar
-      pipeline.Similarity.randomProjection(load(s, dir, "embeddings"),
-          "vec_id", "embedding", dOut = 16)
-        .select(col("vec_id"), posexplode(col("reduced")).as(Seq("d", "val")))
-        .select(col("vec_id"), col("d"), round(col("val"), 6).as("val"))),
-    "p_knn_label_spread" -> ((s, dir) => // semi-supervised: md5-clamped
-      // 50% seeds, 3 synchronous mode-of-neighbors rounds over the
-      // mutual-kNN graph; the oracle replays draw, graph and every round
-      pipeline.Similarity.labelSpread(load(s, dir, "embeddings"), "vec_id",
-        "embedding", "label", k = 5, rounds = 3, seedFraction = 0.5)),
-    "p_knn_clusters" -> ((s, dir) => { // semantic clusters: CC over the
-      // mutual-kNN graph — the pipeline→graph bridge (vectors that only a
-      // hub connects stay apart; mutual cliques merge)
-      val emb = load(s, dir, "embeddings")
-      val edges = pipeline.Similarity.knnGraph(emb, "vec_id", "embedding", k = 5)
-      GraphFrame(emb.select(col("vec_id").as(ID)), edges)
-        .connectedComponents.run().select(col(ID), col("component"))
-    }),
-    "p_ann_ivf" -> ((s, dir) => // oracle mirrors the md5-sampled quantizer
-      // AND its two Lloyd refinement steps (assignment + per-cell means)
-      pipeline.Similarity.ivfTopK(load(s, dir, "embeddings"), "vec_id", "embedding",
-        k = 3, nlist = 16, nprobe = 4, lloydIters = 2)),
-    "p_ann_ivfpq" -> ((s, dir) => // IVF-PQ with exact re-rank of the ADC
-      // shortlist (FAISS IndexRefine shape); oracle replays the md5-seeded
-      // codebooks, the per-subspace code argmin, the ADC sum and the refine
-      pipeline.Similarity.ivfPqTopK(load(s, dir, "embeddings"), "vec_id", "embedding",
-        k = 3, nlist = 16, nprobe = 4, m = 8, ksub = 16, refine = 10)),
-    "p_ann_pq_index" -> ((s, dir) => { // steady-state ANN: a query batch
-      // scored against the PERSISTED model+index — corpus vectors touched
-      // only by the refine shortlist join; same oracle replay as ivfpq
-      // restricted to the query batch
-      val emb = load(s, dir, "embeddings")
-      // persist the 1-row model (r14): it is consumed once by modelParams'
-      // head(), once broadcast into the index build and once into the
-      // search — unpersisted, each consumer re-ran the centroid+codebook
-      // aggregations over the corpus (a production pipeline reads the
-      // SAVED model parquet, which this stands in for)
-      val model = pipeline.Similarity.ivfPqModel(emb, "vec_id", "embedding",
-        nlist = 16, m = 8, ksub = 16).persist()
-      val index = pipeline.Similarity.ivfPqIndex(emb, "vec_id", "embedding", model)
-      pipeline.Similarity.ivfPqSearchIndexed(
-        emb.filter(col("vec_id") % 25 === 0), "vec_id", "embedding",
-        model, index, k = 3, nprobe = 4, refineWith = Some(emb), refine = 10)
-    }),
-    "p_ann_incremental" -> ((s, dir) => { // incremental indexing: index a
-      // corpus slice, APPEND the rest as a new batch (overlapping ids
-      // exercise the re-ingestion dedupe), search the appended index.
-      // Append ≡ from-scratch against the same frozen model, so the
-      // oracle is the full-index replay with this query filter — any
-      // duplicate or dropped index row breaks the hash
-      val emb = load(s, dir, "embeddings")
-      // persisted 1-row model — see p_ann_pq_index (here it feeds FOUR
-      // consumers: corpus index, append coding, modelParams, search)
-      val model = pipeline.Similarity.ivfPqModel(emb, "vec_id", "embedding",
-        nlist = 16, m = 8, ksub = 16).persist()
-      val corpusIdx = pipeline.Similarity.ivfPqIndex(
-        emb.filter(col("vec_id") < 420), "vec_id", "embedding", model)
-      val appended = pipeline.Similarity.ivfPqIndexAppend(
-        emb.filter(col("vec_id") >= 400), "vec_id", "embedding", model, corpusIdx)
-      pipeline.Similarity.ivfPqSearchIndexed(
-        emb.filter(col("vec_id") % 25 === 5), "vec_id", "embedding",
-        model, appended, k = 3, nprobe = 4, refineWith = Some(emb), refine = 10)
-    }),
-    "p_ann_ivf_hier" -> ((s, dir) => // two-level coarse quantizer (the
-      // scale path past the flat nlist<=65536 broadcast bound): 4 md5-
-      // seeded super-cells x 4 sub-cells, probe 2 branches / 4 cells;
-      // oracle replays the seed routing (super seeds anchor their own
-      // branch), data top-1 assignment and the global probe ranking
-      pipeline.Similarity.ivfTopKHier(load(s, dir, "embeddings"), "vec_id",
-        "embedding", k = 3, nsuper = 4, nlistPer = 4, wprobe = 2, nprobe = 4)),
-    "p_ann_recall_hier" -> ((s, dir) => { // measured recall@k of the
-      // hierarchical two-level path — the number the (wprobe, nprobe)
-      // knobs control, against the exact top-k
-      val e = load(s, dir, "embeddings")
-      pipeline.Similarity.recallAtK(
-        pipeline.Similarity.ivfTopKHier(e, "vec_id", "embedding", k = 3,
-          nsuper = 4, nlistPer = 4, wprobe = 2, nprobe = 4),
-        pipeline.Similarity.topK(e, "vec_id", "embedding", k = 3))
-    }),
-    "p_ann_recall_pq" -> ((s, dir) => { // measured recall@k of the IVF-PQ
-      // path with the refine re-rank — the number (nprobe, m, ksub,
-      // refine) control, against the exact top-k
-      val e = load(s, dir, "embeddings")
-      pipeline.Similarity.recallAtK(
-        pipeline.Similarity.ivfPqTopK(e, "vec_id", "embedding", k = 3,
-          nlist = 16, nprobe = 4, m = 8, ksub = 16, refine = 10),
-        pipeline.Similarity.topK(e, "vec_id", "embedding", k = 3))
-    }),
-    "p_ann_recall" -> ((s, dir) => { // measured recall@k of the LSH path
-      // against the exact top-k — the number the bands knob controls
-      val e = load(s, dir, "embeddings")
-      pipeline.Similarity.recallAtK(
-        pipeline.Similarity.lshTopK(e, "vec_id", "embedding",
-          k = 3, bands = 2, planesPerBand = 4, dim = 64),
-        pipeline.Similarity.topK(e, "vec_id", "embedding", k = 3))
-    }),
-
-    // --- pipeline: text analysis ---
-    "p_token_count" -> ((s, dir) =>
-      pipeline.Text.tokenCount(load(s, dir, "documents"), "doc_id", "text")),
-    "p_bpe_tokens" -> ((s, dir) =>
-      pipeline.Text.regexTokenCount(load(s, dir, "documents"), "doc_id", "text")),
-    "p_bpe_train" -> ((s, dir) => // word-level BPE: 3 most-frequent-adjacent-
-      // pair merges, deterministic (count desc, pair asc) tie-break
-      pipeline.Tokenizer.bpeTrain(load(s, dir, "documents"), "text", 3)),
-    "p_bpe_encode" -> ((s, dir) => // re-tokenize with the learned merges
-      pipeline.Tokenizer.bpeTrainEncode(
-        load(s, dir, "documents"), "doc_id", "text", 3)._2),
-    "p_unigram_train" -> ((s, dir) => // SentencePiece-style unigram LM,
-      // deterministic hard-EM: seed = chars + top-40 substrings, 2
-      // Viterbi-count/re-estimate rounds, fixed-point micro-nat costs
-      pipeline.Tokenizer.unigramTrain(load(s, dir, "documents"), "text",
-        vocabSize = 40, maxPieceLen = 4, iterations = 2)),
-    "p_unigram_encode" -> ((s, dir) => // Viterbi segmentation of every
-      // doc under the trained vocab: exact integer path costs, skipped
-      // (unsegmentable/over-long) words counted, never silently costed
-      pipeline.Tokenizer.unigramTrainEncode(load(s, dir, "documents"),
-        "doc_id", "text", vocabSize = 40, maxPieceLen = 4,
-        iterations = 2)._2),
-    "p_wordpiece_vocab" -> ((s, dir) => // BERT-style WordPiece vocab by
-      // frequency: all single chars (initial + ## continuation forms) +
-      // top-30 longer pieces, ties to the smaller piece
-      pipeline.Tokenizer.wordpieceVocab(load(s, dir, "documents"), "text",
-        vocabSize = 30, maxPieceLen = 3, maxWordLen = 16)),
-    "p_wordpiece_encode" -> ((s, dir) => // greedy longest-match-first
-      // segmentation of every doc; [UNK] words counted, never silently
-      // costed as one token
-      pipeline.Tokenizer.wordpieceVocabEncode(load(s, dir, "documents"),
-        "doc_id", "text", vocabSize = 30, maxPieceLen = 3,
-        maxWordLen = 16)._2),
-    "p_gopher_rules" -> ((s, dir) => { // Gopher-composite quality rules on
-      // a fixture with injected bullet/ellipsis lines and symbol runs
-      // (doc_id % 5 / % 7 / % 11) so every flag fires both ways; all
-      // ratio tests are exact integer cross-multiplications
-      val t2 = concat(col("text"),
-        when(pmod(col("doc_id"), lit(5)) === 0,
-          lit(" \n• promo one \n• promo two \n• promo three"))
-          .otherwise(lit("")),
-        when(pmod(col("doc_id"), lit(7)) === 0,
-          lit(" \nto be continued...")).otherwise(lit("")),
-        when(pmod(col("doc_id"), lit(11)) === 0,
-          lit(" ## ## ## ## ## ## ##")).otherwise(lit("")))
-      pipeline.Text.gopherRules(
-        load(s, dir, "documents").select(col("doc_id"), t2.as("text")),
-        "doc_id", "text", minWords = 40, maxWords = 80,
-        maxBulletPct = 50, minStopwords = 1)
-    }),
-    "p_embedding_dedup" -> ((s, dir) =>
-      pipeline.Dedup.embeddingDupClusters(load(s, dir, "embeddings"), "vec_id",
-        "embedding", threshold = 0.4)),
-    "p_lang_id" -> ((s, dir) =>
-      pipeline.Text.languageId(load(s, dir, "documents"), "doc_id", "text")),
-    "p_quality" -> ((s, dir) =>
-      pipeline.Text.quality(load(s, dir, "documents"), "doc_id", "text")),
-    "p_fingerprint" -> ((s, dir) =>
-      pipeline.Text.fingerprint(load(s, dir, "documents"), "doc_id", "text")),
-    "p_repetition" -> ((s, dir) =>
-      pipeline.Text.repetitionRatio(load(s, dir, "documents"), "doc_id", "text", n = 2)),
-    "p_contamination" -> ((s, dir) => {
-      // eval-set contamination: every 50th doc plays the benchmark set;
-      // n=3 shingles (the corpus has no long verbatim overlaps)
-      val docs = load(s, dir, "documents")
-      val bench = docs.filter(col("doc_id") % 50 === 0)
-      pipeline.Text.contamination(docs, "doc_id", "text", bench, "doc_id", "text", n = 3)
-        .filter(col("doc_id") =!= col("bench_id"))
-    }),
-    "p_redact_pii" -> ((s, dir) => {
-      // the driver's customer table carries no contact columns, so the
-      // PII is synthesized deterministically from c_custkey (same
-      // construction in the oracle) — the operator under test is the
-      // redaction itself
-      val k = col("c_custkey")
-      val piiText = concat_ws(" ", col("c_name"), lit("reach me at"),
-        concat(lit("c"), k, lit("@example.com")), lit("phone"),
-        concat(lit("25-"), lpad(pmod(k, lit(1000)).cast("string"), 3, "0"),
-          lit("-555-"), lpad(pmod(k, lit(10000)).cast("string"), 4, "0")),
-        lit("ip"),
-        concat(lit("10.0."), pmod(k, lit(256)), lit("."), pmod(k, lit(250))),
-        col("c_mktsegment"))
-      pipeline.Text.redactPii(
-        load(s, dir, "customer").select(k, piiText.as("pii_text")),
-        "c_custkey", "pii_text")
-        .select(col("c_custkey").as("cust_id"), col("clean_text"), col("n_redactions"))
-    }),
-    "p_entropy" -> ((s, dir) =>
-      pipeline.Text.charEntropy(load(s, dir, "documents"), "doc_id", "text")),
-    "p_length_stats" -> ((s, dir) =>
-      pipeline.Text.lengthStats(load(s, dir, "documents"), "lang", "text")),
-    "p_tfidf" -> ((s, dir) =>
-      pipeline.Text.tfidfTopTerms(load(s, dir, "documents"), "doc_id", "text", topN = 5)),
-    "p_pack_shards" -> ((s, dir) =>
-      // token-budget shard packing via the distributed prefix sum;
-      // output depends only on (data, budget), not partition count
-      pipeline.Sampling.packShards(
-        pipeline.Text.tokenCount(load(s, dir, "documents"), "doc_id", "text"),
-        "doc_id", "n_tokens", budget = 2000L)),
-    "p_entity_resolution" -> ((s, dir) =>
-      // blocked fuzzy matching: 16-char name-prefix blocks, exact
-      // Levenshtein <= 1 verify inside each block
-      pipeline.Dedup.fuzzyPairs(load(s, dir, "customer"), "c_custkey",
-        "c_name", substring(col("c_name"), 1, 16), maxDist = 1,
-        maxBlock = 1000)),
-    "p_entity_resolution_multi" -> ((s, dir) =>
-      // multi-PASS blocking: candidates from the name-prefix key UNION a
-      // (nation, name-SUFFIX) key, deduped before ONE verify per pair.
-      // The suffix key rescues pairs whose single edit falls inside the
-      // 16-char prefix (verified: the same rescued-pair set as the
-      // r12 (nation, length) key at every SF — names share one length,
-      // so that key degenerated to nation-wide blocks and 6.6x the
-      // verify fan-out for identical recall)
-      pipeline.Dedup.fuzzyPairs(load(s, dir, "customer"), "c_custkey",
-        "c_name", Seq(substring(col("c_name"), 1, 16),
-          concat_ws("|", col("c_nationkey"), substring(col("c_name"), -2, 2))),
-        maxDist = 1, maxBlock = 1000)),
-    "p_ngram_novelty" -> ((s, dir) =>
-      // boilerplate-vs-original quality cut: share of each doc's distinct
-      // 3-shingles appearing in no other document
-      pipeline.Text.ngramNovelty(load(s, dir, "documents"), "doc_id", "text")),
-    "p_tf_cosine" -> ((s, dir) =>
-      // sparse bag-of-words similarity join: exact-integer dot/norms,
-      // one cosine per surviving pair, stop terms cut at df > 200
-      pipeline.Text.tfCosinePairs(load(s, dir, "documents"), "doc_id", "text",
-        minCosine = 0.8, maxDocFreq = 200)),
-    "p_cms_topk" -> ((s, dir) =>
-      // Count-Min heavy hitters over the corpus vocabulary: 4x512
-      // sketch, top-20 terms by estimate (collisions overestimate
-      // deterministically; the oracle replays every counter)
-      pipeline.Sketches.cmsTopK(
-        load(s, dir, "documents")
-          .select(explode(pipeline.Text.tokens(col("text"))).as("term")),
-        "term", k = 20, depth = 4, width = 512)),
-    "p_pack_windows" -> ((s, dir) =>
-      // GPT-style concat-and-chunk packing: documents split across fixed
-      // 512-token training windows via the same distributed prefix sum
-      pipeline.Sampling.packContextWindows(
-        pipeline.Text.tokenCount(load(s, dir, "documents"), "doc_id", "text"),
-        "doc_id", "n_tokens", window = 512L)),
-    "p_sample_stratified" -> ((s, dir) =>
-      pipeline.Sampling.stratifiedHashSample(load(s, dir, "documents"), "doc_id", "lang",
-        fraction = 0.5)
-        .select(col("doc_id"), col("lang"))),
-    "p_mixture_sample" -> ((s, dir) => // data-mixing: per-source fractions;
-      // src2 unlisted -> excluded by contract
-      pipeline.Sampling.mixtureSample(load(s, dir, "documents"), "doc_id", "source",
-        Map("src0" -> 0.75, "src1" -> 0.25))
-        .select(col("doc_id"), col("source"))),
-    "p_importance_sample" -> ((s, dir) => // DSIR-style: keep ∝ weight,
-      // expected mass 0.3·N; n_chars as the importance weight
-      pipeline.Sampling.importanceSample(load(s, dir, "documents"),
-        "doc_id", "n_chars", targetFraction = 0.3)
-        .select(col("doc_id"), col("n_chars"))),
-    "p_bigram_lm" -> ((s, dir) => // corpus-trained bigram LM quality score
-      pipeline.Text.bigramLmScore(load(s, dir, "documents"), "doc_id", "text",
-        alpha = 0.5)),
-    "p_dsir" -> ((s, dir) => // DSIR importance weights: hashed-bigram
-      // target-vs-raw log-likelihood ratio (target = the 'en' slice);
-      // rank/resample on log_weight downstream
-      pipeline.Text.dsirWeights(load(s, dir, "documents"), "doc_id", "text",
-        col("lang") === "en", buckets = 1024, alpha = 0.5)),
-    "p_shuffle" -> ((s, dir) => // deterministic pre-training shuffle:
-      // shard = 60-bit md5 draw mod 8, pos = (draw, id) rank in shard —
-      // no global sort, no RNG state; the draw IS the shuffle order
-      pipeline.Sampling.shuffleShards(load(s, dir, "documents"), "doc_id",
-        numShards = 8)),
-    "p_hash_split" -> ((s, dir) => // deterministic train/val/test split:
-      // 16-bit md5 fraction of (seed, id) against cumulative thresholds
-      // (name order) — stable under corpus growth, unlike modulo splits
-      pipeline.Sampling.hashSplit(load(s, dir, "documents"), "doc_id",
-        Map("train" -> 0.8, "val" -> 0.1, "test" -> 0.1))
-        .select(col("doc_id"), col("split"))),
-    "p_budget_select" -> ((s, dir) => // per-language token-budget prefix
-      // cut: rank by (n_chars desc, doc_id), keep while the running sum
-      // stays within 20k chars — the data-mixing selection step
-      pipeline.Sampling.budgetSelect(load(s, dir, "documents"), "doc_id",
-        "lang", "n_chars", "n_chars", budgetPerGroup = 20000L)),
-    "p_vocab_oov" -> ((s, dir) => // top-100 vocabulary, per-doc OOV rate
-      pipeline.Text.vocabOovRate(load(s, dir, "documents"), "doc_id", "text",
-        vocabSize = 100)),
-    "p_nb_classifier" -> ((s, dir) => // fastText-style curation gate as
-      // closed-form multinomial NB: md5 75/25 split, fixed-point 1e-6
-      // log-likelihoods so the per-doc sum is an exact integer — the
-      // oracle retrains and rescores bit-identically in SQL. (The
-      // synthetic corpus's langs share one vocabulary, so accuracy sits
-      // near the class prior — the gate checks the exact train/score
-      // pipeline, not model quality; ClassifySpec shows 100% on a
-      // separable corpus.)
-      pipeline.Classify.naiveBayesTrainPredict(load(s, dir, "documents"),
-        "doc_id", "text", "lang", trainFraction = 0.75, seed = 42L)),
-    "p_semantic_dedup" -> ((s, dir) => // SemDeDup: IVF cells + within-cell cosine
-      pipeline.Dedup.semanticDedup(load(s, dir, "embeddings"), "vec_id",
-        "embedding", threshold = 0.4, nlist = 8, lloydIters = 1)),
-    "p_dup_spans" -> ((s, dir) => // cross-doc duplicated 3-token spans
-      pipeline.Text.dupSpans(load(s, dir, "documents"), "doc_id", "text",
-        n = 3, minDocs = 2)),
-    "p_dup_spans_maximal" -> ((s, dir) => // EXACT maximal repeats: capped
-      // 4-token seed buckets + per-pair longest-common-extension; lengths
-      // exact with no quantization, oracle replays every stage
-      pipeline.Text.dupSpansMaximal(load(s, dir, "documents"), "doc_id",
-        "text", seedTokens = 4, maxBucket = 256)),
-    "p_cut_dup_spans" -> ((s, dir) => // the cut half: corpus rebuilt with
-      // every maximal-span occurrence removed except the globally first
-      // (smallest (doc, pos) per span text) — oracle replays the winner
-      // rule, the union-of-cuts removal, and the ordered rebuild
-      pipeline.Text.cutDupSpans(load(s, dir, "documents"), "doc_id",
-        "text", seedTokens = 4, maxBucket = 256)),
-    "p_top_ngrams" -> ((s, dir) => // corpus boilerplate mining: top bigrams
-      pipeline.Text.topNgrams(load(s, dir, "documents"), "doc_id", "text",
-        n = 2, k = 50)),
-
-    // --- pipeline: events ---
-    "e_window_agg" -> ((s, dir) =>
-      pipeline.Events.hourlyAgg(load(s, dir, "events"))),
-    "e_sessionize" -> ((s, dir) =>
-      pipeline.Events.sessionize(load(s, dir, "events"), gapMinutes = 30)
-        .select(col("user_id"), col("session_idx").cast("long").as("session_idx"),
-          col("n_events"), col("duration_ms"))),
-    "e_asof_attribution" -> ((s, dir) => { // each purchase -> the user's
-      // latest view at or before it (one union+window pass, no range join)
-      val ev0 = load(s, dir, "events")
-      val ev = ev0.withColumn("ts_ms", pipeline.Events.tsMillis(ev0))
-      val views = ev.filter(col("event_type") === "view")
-        .select(col("user_id"), col("event_id"), col("ts_ms"))
-      val purchases = ev.filter(col("event_type") === "purchase")
-        .select(col("user_id"), col("event_id"), col("ts_ms"))
-      pipeline.Events.asofJoin(purchases, views, Seq("user_id"),
-          "ts_ms", "ts_ms", Seq("event_id", "ts_ms"), prefix = "view_")
-        .select(col("event_id"), col("user_id"), col("view_event_id"),
-          (col("ts_ms") - col("view_ts_ms")).as("gap_ms"))
-    }),
-
-    "e_asof_forward" -> ((s, dir) => { // each view -> the user's NEXT
-      // purchase at-or-after it (forward as-of: same one-pass scan in
-      // descending time order)
-      val ev0 = load(s, dir, "events")
-      val ev = ev0.withColumn("ts_ms", pipeline.Events.tsMillis(ev0))
-      val purchases = ev.filter(col("event_type") === "purchase")
-        .select(col("user_id"), col("event_id"), col("ts_ms"))
-      val views = ev.filter(col("event_type") === "view")
-        .select(col("user_id"), col("event_id"), col("ts_ms"))
-      pipeline.Events.asofJoin(views, purchases, Seq("user_id"),
-          "ts_ms", "ts_ms", Seq("event_id", "ts_ms"), prefix = "next_",
-          direction = "forward")
-        .select(col("event_id"), col("user_id"), col("next_event_id"),
-          (col("next_ts_ms") - col("ts_ms")).as("gap_ms"))
-    }),
-
-    // --- streaming (run to completion through a memory sink: the driver
-    // gate then hash-checks streaming output against the BATCH oracle,
-    // turning the unit-level batch-parity claim into an oracled row) ---
-    "e_stream_range_join" -> ((s, dir) => {
-      // the SAME rangeJoin operator composed with a STREAMING points
-      // side: stream-static inner equi-join on (user, bucket) — stateless
-      // (no watermark, no join buffer), so the finite replay equals the
-      // batch row and shares its oracle.
-      // isolated volume-sized session for the whole lifecycle — see
-      // streamSession (r15, family-wide)
-      val ss = streamSession(s, dir, Seq("events"))
-      val ev = load(ss, dir, "events")
-      val startMs = pipeline.Events.tsMillis(ev)
-      val iv = ev.filter(col("event_type") === "error")
-        .select(col("user_id"), col("event_id"),
-          timestamp_millis(startMs).as("w_start"),
-          timestamp_millis(startMs + 1800000L).as("w_end"))
-      val pts = streaming.EventStreams.readEvents(ss, dir)
-        .filter(col("event_type") === "purchase")
-        .select(col("user_id"), col("ts"), col("event_id"))
-      val out = pipeline.Events.rangeJoin(pts, iv, Seq("user_id"), "ts",
-          "w_start", "w_end", rightCols = Seq("event_id"), prefix = "err_")
-        .select(col("user_id"), col("event_id").as("purchase_id"),
-          col("err_event_id").as("error_id"))
-      val q = out.writeStream.format("memory")
-        .queryName("graft_stream_rangejoin").outputMode("append").start()
-      q.processAllAvailable(); q.stop()
-      ss.table("graft_stream_rangejoin")
-    }),
-    "e_stream_cms" -> ((s, dir) => {
-      // streaming heavy hitters with BOUNDED state: the Count-Min counter
-      // table is the streaming aggregate (state <= depth x width cells
-      // FOREVER, however many distinct keys flow past — the sketch
-      // contract), run to completion; the deterministic batch finisher
-      // reads estimates for the observed key set
-      // isolated volume-sized session — see streamSession (r15)
-      val ss = streamSession(s, dir, Seq("events"))
-      val counters = pipeline.Sketches.cmsCounters(
-        streaming.EventStreams.readEvents(ss, dir).select(col("event_type")),
-        "event_type", depth = 4, width = 64)
-      val q = counters.writeStream.format("memory").queryName("graft_stream_cms")
-        .outputMode("complete").start()
-      q.processAllAvailable(); q.stop()
-      pipeline.Sketches.cmsEstimate(ss.table("graft_stream_cms"),
-        load(ss, dir, "events").select(col("event_type")), "event_type",
-        depth = 4, width = 64)
-    }),
-    "e_stream_window" -> ((s, dir) => {
-      // isolated volume-sized session — see streamSession (r15)
-      val ss = streamSession(s, dir, Seq("events"))
-      val stream = streaming.EventStreams.hourlyAggStream(
-        streaming.EventStreams.readEvents(ss, dir),
-        watermark = "0 seconds", complete = true)
-      val q = stream.writeStream.format("memory").queryName("graft_stream_window")
-        .outputMode("complete").start()
-      q.processAllAvailable(); q.stop()
-      ss.table("graft_stream_window")
-        .select(col("event_type"), col("window_start"), col("n_events"), col("sum_value"))
-    }),
-    "e_funnel" -> ((s, dir) => // view→click→purchase within one week of
-      // the first view; per-step min-match chaining, exact counts, one
-      // float division per row
-      pipeline.Events.funnel(load(s, dir, "events"),
-          Seq("view", "click", "purchase"), windowMinutes = 10080)
-        .select(col("step"), col("event_type"), col("n_users"),
-          round(col("conversion"), 6).as("conversion"))),
-    "e_cohort" -> ((s, dir) => // epoch-week cohort retention: exact
-      // integer week math, no calendar dependency
-      pipeline.Events.cohortRetention(load(s, dir, "events"))),
-    "e_paths" -> ((s, dir) => // top-12 session paths: first 5 event types
-      // per 30-min-gap session, '>'-joined; (count desc, path asc) cut
-      pipeline.Events.topPaths(load(s, dir, "events"), gapMinutes = 30,
-        maxSteps = 5, k = 12)),
-    "e_attribution_linear" -> ((s, dir) => // equal-split multi-touch:
-      // each purchase spreads 1 unit over the user's views in the prior
-      // 12 h (inclusive bounds, ms floor); credit = sum of 1/n shares
-      pipeline.Events.linearAttribution(load(s, dir, "events"),
-        touchType = "view", convType = "purchase", windowMinutes = 720)),
-    "e_rfm" -> ((s, dir) => // RFM segmentation: exact integer metrics
-      // (epoch-day recency, count, cent sum), quintile scores, user_id
-      // tie-break — deterministic under any partitioning
-      pipeline.Events.rfm(load(s, dir, "events"), buckets = 5)
-        .select(col("user_id"), col("recency_day"), col("frequency"),
-          col("monetary_cents"), col("r").cast("long").as("r"),
-          col("f").cast("long").as("f"), col("m").cast("long").as("m"))),
-    "e_markov" -> ((s, dir) => // first-order Markov transition matrix over
-      // 30-min gap sessions: exact integer counts, one division per row
-      pipeline.Events.transitionMatrix(load(s, dir, "events"), gapMinutes = 30)),
-    "e_copurchase" -> ((s, dir) => // item-item collaborative filtering:
-      // top-3 "also bought" per part from order-basket co-occurrence
-      pipeline.Recommend.alsoBought(
-        pipeline.Recommend.coOccurrence(load(s, dir, "lineitem"),
-          "l_orderkey", "l_partkey", maxBasket = 100), k = 3)),
-    "e_range_join" -> ((s, dir) => { // bucketized point-in-interval join:
-      // purchases inside each user's 10-min error windows — an EQUI-join
-      // on (user, hour-bucket) with the range predicate as residual,
-      // never a nested loop
-      val ev = load(s, dir, "events")
-      val pts = ev.filter(col("event_type") === "purchase")
-        .select(col("user_id"), col("ts"), col("event_id"))
-      val startMs = pipeline.Events.tsMillis(ev)
-      val iv = ev.filter(col("event_type") === "error")
-        .select(col("user_id"), col("event_id"),
-          timestamp_millis(startMs).as("w_start"),
-          timestamp_millis(startMs + 1800000L).as("w_end"))
-      pipeline.Events.rangeJoin(pts, iv, Seq("user_id"), "ts",
-          "w_start", "w_end", rightCols = Seq("event_id"), prefix = "err_")
-        .select(col("user_id"), col("event_id").as("purchase_id"),
-          col("err_event_id").as("error_id"))
-    }),
-    "e_stream_funnel" -> ((s, dir) => {
-      // conversion tracking in a stream: 3-long state per user, emits a
-      // row the moment the final step matches; equals the batch funnel's
-      // converted users under in-order arrival (one file = one in-order
-      // batch here; the oracle is the batch s1→s2→s3 chain)
-      // isolated volume-sized session — see streamSession (r15)
-      val ss = streamSession(s, dir, Seq("events"))
-      val q = streaming.EventStreams.funnelStream(
-          streaming.EventStreams.readEvents(ss, dir),
-          Seq("view", "click", "purchase"), windowMinutes = 10080)
-        .toDF()
-        .writeStream.format("memory").queryName("graft_stream_funnel")
-        .outputMode("append").start()
-      q.processAllAvailable(); q.stop()
-      ss.table("graft_stream_funnel")
-        .select(col("user_id"), col("anchor_ms"), col("converted_ms"),
-          col("duration_ms"))
-    }),
-    "e_stream_topk" -> ((s, dir) => {
-      // windowed heavy hitters: streaming per-hour (type, user) counts run
-      // to completion, then the deterministic batch finisher cuts top-3
-      // per (window, type) — count desc, user_id asc tie-break.
-      // isolated volume-sized session: a stateful micro-batch
-      // materializes one state store PER PARTITION, so 32 partitions pay
-      // 32 store inits + commits for a 2 MB replay — see streamSession
-      // (r15; aggregation results are partition-count invariant)
-      val ss = streamSession(s, dir, Seq("events"))
-      val stream = streaming.EventStreams.userCountsStream(
-        streaming.EventStreams.readEvents(ss, dir), complete = true)
-      val q = stream.writeStream.format("memory").queryName("graft_stream_topk")
-        .outputMode("complete").start()
-      q.processAllAvailable(); q.stop()
-      streaming.EventStreams.topK(ss.table("graft_stream_topk"), 3)
-        .select(col("window_start"), col("event_type"), col("user_id"),
-          col("n_events"), col("rank").cast("long").as("rank"))
-    }),
-    "e_stream_kmv_distinct" -> ((s, dir) => {
-      // approximate distinct users per (hour, type) as ONE streaming
-      // aggregation: O(k) KMV state per group (duplicate-insensitive
-      // k-min buffer), no second stateful distinct; the (k-1)/h_k
-      // estimate replays bit-identically from the md5 hashes
-      // isolated volume-sized session — see streamSession (r15)
-      val ss = streamSession(s, dir, Seq("events"))
-      val stream = streaming.EventStreams.kmvDistinctStream(
-        streaming.EventStreams.readEvents(ss, dir), k = 16, complete = true)
-      val q = stream.writeStream.format("memory")
-        .queryName("graft_stream_kmv").outputMode("complete").start()
-      q.processAllAvailable(); q.stop()
-      ss.table("graft_stream_kmv")
-        .select(col("window_start"), col("event_type"),
-          round(col("approx_distinct"), 4).as("approx_distinct"))
-    }),
-    "e_stream_latest" -> ((s, dir) => {
-      // CDC upsert view: keep-latest-per-user as one streaming
-      // max(struct) aggregation, run to completion; oracle is the
-      // batch argmax over (ts desc, event_id desc)
-      // isolated volume-sized session — see streamSession (r15)
-      val ss = streamSession(s, dir, Seq("events"))
-      val stream = streaming.EventStreams.latestPerKeyStream(
-        streaming.EventStreams.readEvents(ss, dir))
-      val q = stream.writeStream.format("memory")
-        .queryName("graft_stream_latest").outputMode("complete").start()
-      q.processAllAvailable(); q.stop()
-      ss.table("graft_stream_latest")
-        .select(col("user_id"), col("last_ms"), col("last_event_id"),
-          col("last_event_type"), col("last_value")) // raw parquet double:
-          // both sides read the identical bits, no arithmetic — no rounding
-    }),
-    "e_stream_anomaly" -> ((s, dir) => {
-      // rate-spike detection: streaming hourly per-type counts run to
-      // completion, then the exact-integer finisher flags windows whose
-      // count beats 3/2 x the mean of the type's previous 3 observed
-      // windows — n·3·2 > 3·Σprev, no float anywhere
-      // isolated volume-sized session — see streamSession (r15)
-      val ss = streamSession(s, dir, Seq("events"))
-      val stream = streaming.EventStreams.hourlyAggStream(
-        streaming.EventStreams.readEvents(ss, dir), complete = true)
-      val q = stream.writeStream.format("memory")
-        .queryName("graft_stream_anomaly").outputMode("complete").start()
-      q.processAllAvailable(); q.stop()
-      streaming.EventStreams.rateSpikes(ss.table("graft_stream_anomaly"),
-          lookback = 3, num = 3L, den = 2L)
-        .select(col("window_start"), col("event_type"), col("n_events"),
-          col("prev_sum"), col("spike"))
-    }),
-    "e_stream_sessionize" -> ((s, dir) => {
-      // stateful gap sessionization with NoTimeout: every session CLOSED
-      // by a later event emits; each user's final session stays open in
-      // state forever — so the deterministic output is the batch result
-      // minus each user's last session, which the oracle states directly
-      // isolated volume-sized session — see streamSession (r15)
-      val ss = streamSession(s, dir, Seq("events"))
-      val q = streaming.EventStreams.sessionizeStream(
-          streaming.EventStreams.readEvents(ss, dir), gapMinutes = 30,
-          timeout = org.apache.spark.sql.streaming.GroupStateTimeout.NoTimeout)
-        .writeStream.format("memory").queryName("graft_stream_sessionize")
-        .outputMode("append").start()
-      q.processAllAvailable(); q.stop()
-      ss.table("graft_stream_sessionize")
-        .select(col("user_id"), col("session_start_ms"),
-          col("n_events"), col("duration_ms"))
-    }),
-    "e_stream_dedup" -> ((s, dir) => {
-      // dropDuplicatesWithinWatermark keeps an arbitrary first arrival, so
-      // the oracle-safe output is the key columns themselves — the stream
-      // must emit exactly the DISTINCT (user_id, event_type) pairs. The
-      // watermark horizon must COVER the table's event-time span: a
-      // 0-second watermark would match DISTINCT only while the file source
-      // happens to deliver everything in one micro-batch — any future
-      // multi-file/multi-batch read would re-emit batch-1 keys in batch 2
-      // isolated volume-sized session — see streamSession (r15)
-      val ss = streamSession(s, dir, Seq("events"))
-      val ev = streaming.EventStreams.readEvents(ss, dir)
-      val dd = streaming.EventStreams.dedupStream(ev,
-        Seq("user_id", "event_type"), watermark = "365 days")
-        .select(col("user_id"), col("event_type"))
-      val q = dd.writeStream.format("memory").queryName("graft_stream_dedup")
-        .outputMode("append").start()
-      q.processAllAvailable(); q.stop()
-      ss.table("graft_stream_dedup")
-    }),
-    "e_stream_segment_dedup" -> ((s, dir) => {
-      // single-replay determinism: one micro-batch, so arrivals are the
-      // (doc_id, pos)-sorted corpus and "first maxDupCount pass" is
-      // exactly a row_number() predicate the oracle replays
-      // isolated volume-sized session — see streamSession (r15)
-      val ss = streamSession(s, dir, Seq("documents"))
-      val docs = ss.read.parquet(s"$dir/documents.parquet")
-      val schema = docs.schema
-      val stream = ss.readStream.schema(schema)
-        .option("pathGlobFilter", "documents.parquet").parquet(dir)
-      val out = streaming.EventStreams.segmentDedupStream(
-        stream, "doc_id", "text", windowWords = 4, maxDupCount = 2)
-      val q = out.writeStream.format("memory").queryName("graft_stream_segdedup")
-        .outputMode("append").start()
-      q.processAllAvailable(); q.stop()
-      ss.table("graft_stream_segdedup")
-        .select(col("doc_id"), col("pos"), col("segment"), col("kept"))
-    }),
-    "e_stream_link_graph" -> ((s, dir) => {
-      // the crawl→graph bridge on an UNBOUNDED page stream: linkGraph's
-      // projection + explode are stateless, so the ONLY streaming state
-      // is the running (src_host, dst_host) count table — bounded by
-      // host-pair cardinality, never by pages crawled. Identical code to
-      // the batch path (Web.linkGraph builds on a streaming frame
-      // unchanged); a one-file replay is one micro-batch and complete
-      // mode re-emits the table → equals p_host_graph row-for-row,
-      // same oracle
-      // isolated volume-sized session — see streamSession (r15)
-      val ss = streamSession(s, dir, Seq("documents"))
-      val schema = ss.read.parquet(s"$dir/documents.parquet").schema
-      val stream = ss.readStream.schema(schema)
-        .option("pathGlobFilter", "documents.parquet").parquet(dir)
-      val out = pipeline.Web.linkGraph(pageFixtureCols(stream),
-        "doc_id", "url", "html")
-      val q = out.writeStream.format("memory").queryName("graft_stream_linkgraph")
-        .outputMode("complete").start()
-      q.processAllAvailable(); q.stop()
-      ss.table("graft_stream_linkgraph")
-        .select(col("src_host"), col("dst_host"), col("n_links"))
-    }),
-    "e_stream_incremental_dedup" -> ((s, dir) => {
-      // steady-state streaming ingest: the corpus index (doc_id < 400) is
-      // batch-built (in production: loaded from parquet); new docs
-      // (doc_id >= 400) arrive as a stream and match via foreachBatch of
-      // the BATCH incrementalNearDups. A single-file replay is one
-      // micro-batch, so the streamed output equals p_incremental_dedup
-      // row-for-row — same oracle SQL
-      // isolated volume-sized session — see streamSession (r15): the
-      // per-micro-batch LSH chain runs half a dozen joins over a few
-      // thousand rows, so the partition count tracks the batch volume
-      val ss = streamSession(s, dir, Seq("documents"))
-      val docs = load(ss, dir, "documents")
-      val index = pipeline.Dedup.minhashIndex(
-        docs.filter(col("doc_id") < 400), "doc_id", "text").persist()
-      val schemaDocs = ss.read.parquet(s"$dir/documents.parquet").schema
-      // the gate row pins a FIXED-SIZE ingest batch (≤1000 docs, like
-      // incdedup_grow's 100-doc staging) — a production stream sizes its
-      // micro-batches the same way; the FULL ≥400 corpus path stays
-      // covered by the batch twin p_incremental_dedup at every SF
-      val stream = ss.readStream.schema(schemaDocs)
-        .option("pathGlobFilter", "documents.parquet").parquet(dir)
-        .filter(col("doc_id") >= 400 && col("doc_id") < 1400)
-      val buf = scala.collection.mutable.ArrayBuffer.empty[org.apache.spark.sql.Row]
-      var outSchema: org.apache.spark.sql.types.StructType = null
-      val q = streaming.EventStreams.incrementalNearDupStream(
-          stream, "doc_id", "text", index,
-          (pairs, _) => { outSchema = pairs.schema; buf ++= pairs.collect() })
-        .queryName("graft_stream_incdedup").start()
-      q.processAllAvailable(); q.stop()
-      index.unpersist(false)
-      s.createDataFrame(s.sparkContext.parallelize(buf.toSeq, 1), outSchema)
-    }),
-    "e_stream_incdedup_grow" -> ((s, dir) => {
-      // grow-mode streaming ingest: TWO deterministic micro-batches
-      // (docs 400-449, then 450-499) against the corpus index (<400).
-      // Batch 2 must also match batch 1's docs — the r9 cross-batch
-      // blind window, now closed by appending each batch's fingerprints
-      // to the live index after matching. The oracle replays both
-      // batches: batch-1 rows match corpus + earlier-in-batch, batch-2
-      // rows match corpus + ALL of batch 1 + earlier-in-batch.
-      // isolated volume-sized session — see streamSession (r15)
-      val ss = streamSession(s, dir, Seq("documents"))
-      import ss.implicits._
-      val docs = load(ss, dir, "documents")
-      val index = pipeline.Dedup.minhashIndex(
-        docs.filter(col("doc_id") < 400), "doc_id", "text").persist()
-      // bounded driver staging: exactly the 100 docs with 400 <= id < 500
-      // (fixed regardless of SF), fed as two MemoryStream batches
-      val staged = docs.filter(col("doc_id") >= 400 && col("doc_id") < 500)
-        .select(col("doc_id").cast("long"), col("text"))
-        .as[(Long, String)].collect().sortBy(_._1)
-      implicit val sqlCtx: org.apache.spark.sql.SQLContext = ss.sqlContext
-      val in = org.apache.spark.sql.execution.streaming.runtime.MemoryStream[(Long, String)]
-      val buf = scala.collection.mutable.ArrayBuffer.empty[org.apache.spark.sql.Row]
-      var outSchema: org.apache.spark.sql.types.StructType = null
-      val q = streaming.EventStreams.incrementalNearDupStream(
-          in.toDF().toDF("doc_id", "text"), "doc_id", "text", index,
-          (pairs, _) => { outSchema = pairs.schema; buf ++= pairs.collect() },
-          growIndex = true)
-        .queryName("graft_stream_incdedup_grow").start()
-      val (b1, b2) = staged.partition(_._1 < 450)
-      in.addData(b1.toSeq); q.processAllAvailable()
-      in.addData(b2.toSeq); q.processAllAvailable()
-      q.stop()
-      index.unpersist(false)
-      s.createDataFrame(s.sparkContext.parallelize(buf.toSeq, 1), outSchema)
-    }),
-    "e_stream_ann_ingest" -> ((s, dir) => {
-      // streaming ANN index ingest: two micro-batches of new vectors
-      // (400-449, then 450-499; 400-419 re-ingests over the corpus
-      // index) coded against the FROZEN model and appended to the live
-      // index — newest row wins, so the grown index equals the
-      // from-scratch index over corpus ∪ batches EXACTLY, and searching
-      // it replays the p_ann_incremental oracle row-for-row
-      // isolated volume-sized session — see streamSession (r15)
-      val ss = streamSession(s, dir, Seq("embeddings"))
-      import ss.implicits._
-      val emb = load(ss, dir, "embeddings")
-      // persisted 1-row model — see p_ann_pq_index (here it feeds the
-      // corpus index, EVERY micro-batch's coding, modelParams and the
-      // final search; unpersisted it re-ran the centroid+codebook aggs
-      // per consumer)
-      val model = pipeline.Similarity.ivfPqModel(emb, "vec_id", "embedding",
-        nlist = 16, m = 8, ksub = 16).persist()
-      val corpusIdx = pipeline.Similarity.ivfPqIndex(
-        emb.filter(col("vec_id") < 420), "vec_id", "embedding", model)
-        .localCheckpoint(true)
-      // bounded driver staging: exactly the 100 vectors with id >= 400
-      // (fixed regardless of SF), fed as two MemoryStream batches
-      val staged = emb.filter(col("vec_id") >= 400)
-        .select(col("vec_id").cast("long"), col("embedding"))
-        .as[(Long, Seq[Float])].collect().sortBy(_._1)
-      implicit val sqlCtx: org.apache.spark.sql.SQLContext = ss.sqlContext
-      val in = org.apache.spark.sql.execution.streaming.runtime.MemoryStream[(Long, Seq[Float])]
-      var live: DataFrame = null
-      val q = streaming.EventStreams.annIngestStream(
-          in.toDF().toDF("vec_id", "embedding"), "vec_id", "embedding",
-          model, corpusIdx, (idx, _) => live = idx)
-        .queryName("graft_stream_ann_ingest").start()
-      val (b1, b2) = staged.partition(_._1 < 450)
-      in.addData(b1.toSeq); q.processAllAvailable()
-      in.addData(b2.toSeq); q.processAllAvailable()
-      q.stop()
-      pipeline.Similarity.ivfPqSearchIndexed(
-        emb.filter(col("vec_id") % 25 === 5), "vec_id", "embedding",
-        model, live, k = 3, nprobe = 4, refineWith = Some(emb), refine = 10)
-    }),
-    "e_stream_enrich" -> ((s, dir) => {
-      // stream-static broadcast enrichment (stateless — no watermark, no
-      // join buffer) feeding a running per-nation aggregate in complete
-      // mode; the finite replay equals the batch join+group the oracle
-      // states
-      // isolated volume-sized session — see streamSession (r15)
-      val ss = streamSession(s, dir, Seq("events"))
-      val dim = load(ss, dir, "customer")
-        .select(col("c_custkey"), col("c_nationkey"))
-      val enriched = streaming.EventStreams.enrichStream(
-        streaming.EventStreams.readEvents(ss, dir), dim, "user_id", "c_custkey")
-      val agg = enriched.groupBy(col("c_nationkey").as("nation_key"))
-        .agg(count(lit(1)).as("n_events"), round(sum("value"), 4).as("sum_value"))
-      val q = agg.writeStream.format("memory").queryName("graft_stream_enrich")
-        .outputMode("complete").start()
-      q.processAllAvailable(); q.stop()
-      ss.table("graft_stream_enrich")
-    }),
-    "e_stream_join" -> ((s, dir) => {
-      // stream-stream interval join: purchases within 30 min of a click by
-      // the same user; inner join output is watermark-independent, so the
-      // finite replay equals the batch join the oracle states. The join
-      // keeps FOUR state stores per side per partition, so it targets
-      // partitions twice the family default (512 KiB → 4 at the 2 MB gate
-      // replay, the r12-measured optimum: 7.2 s → ~2 s vs 32 partitions);
-      // the partition count only shards (never changes) the inner-join
-      // output. Isolated volume-sized session — see streamSession (r15).
-      val ss = streamSession(s, dir, Seq("events"), targetKiB = 512L)
-      val stream = streaming.EventStreams.intervalJoinStream(
-        streaming.EventStreams.readEvents(ss, dir), "click", "purchase")
-      val q = stream.writeStream.format("memory").queryName("graft_stream_join")
-        .outputMode("append").start()
-      q.processAllAvailable(); q.stop()
-      ss.table("graft_stream_join")
-        .select(col("left_id").as("click_id"), col("right_id").as("purchase_id"),
-          col("user_id"), col("lag_ms"))
-    })
-  )
-
-  // -------------------------------------------------------------------
-  // DuckDB oracle SQL (same semantics, same column names & types)
-  // -------------------------------------------------------------------
-
-  /** nation trade-edge CTE body reused across graph-B oracles. */
-  private val NE =
-    """SELECT DISTINCT c.c_nationkey AS src, s.s_nationkey AS dst
-      |FROM lineitem l
-      |JOIN orders o ON l.l_orderkey = o.o_orderkey
-      |JOIN customer c ON o.o_custkey = c.c_custkey
-      |JOIN supplier s ON l.l_suppkey = s.s_suppkey
-      |WHERE c.c_nationkey <> s.s_nationkey""".stripMargin
-
-  /** DuckDB word-token list (mirrors graft.pipeline.Text.tokens). */
-  private val W = "list_filter(string_split(text, ' '), x -> len(x) > 0)"
-
-  /** DuckDB replay of the unigram-LM tokenizer
-   * (pipeline/Tokenizer.scala unigram family): seed vocab = all single
-   * chars + top-K multi-char substrings; per hard-EM iteration, the
-   * Viterbi DP is UNROLLED BY TOKEN COUNT (f_t(pos) = min cost to reach
-   * pos with t pieces — words are bounded, so maxTok CTEs cover every
-   * path), best(pos) = lexicographic min (cost, t), backpointers via the
-   * same (cost+edge, t+1, start) argmin, and the segmentation walk is
-   * unrolled too (one CTE per step). Counts re-estimate with the same
-   * +1-smoothed fixed-point micro-nat costs. `train` emits the final
-   * vocab; `!train` adds one more DP block under the final costs and
-   * aggregates per document. */
-  private def unigramSql(train: Boolean, vocabSize: Int = 40,
-      maxPieceLen: Int = 4, iterations: Int = 2, maxWordLen: Int = 32,
-      maxTok: Int = 12): String = {
-    val cost = (cnt: String, si: String) =>
-      s"CAST(-round(ln(CAST($cnt + 1 AS DOUBLE) / $si.den) * 1e6, 0) AS BIGINT)"
-    // one DP block under costs c$i: candidates, token-count-unrolled
-    // minima, per-position best, backpointers
-    def dp(i: Int): String = {
-      val fs = (1 to maxTok).map { t =>
-        s"""f${i}_$t AS MATERIALIZED (SELECT f.word, c.en AS pos, MIN(f.cost + c.cost) AS cost
-           |  FROM f${i}_${t - 1} f JOIN cd$i c ON c.word = f.word AND c.st = f.pos
-           |  GROUP BY 1, 2)""".stripMargin
-      }.mkString(",\n")
-      val af = (0 to maxTok).map(t =>
-        s"SELECT word, pos, cost, $t AS nt FROM f${i}_$t").mkString("\n  UNION ALL ")
-      s"""cd$i AS MATERIALIZED (SELECT w.word, s - 1 AS st, s - 1 + l AS en, c.cost
-         |  FROM w, range(1, ${maxWordLen + 1}) rs(s), range(1, ${maxPieceLen + 1}) rl(l), c$i c
-         |  WHERE s + l - 1 <= len(w.word) AND substr(w.word, s, l) = c.piece),
-         |f${i}_0 AS MATERIALIZED (SELECT word, 0 AS pos, CAST(0 AS BIGINT) AS cost FROM w),
-         |$fs,
-         |af$i AS MATERIALIZED ($af),
-         |b$i AS MATERIALIZED (SELECT word, pos, cost, nt FROM (SELECT *,
-         |    ROW_NUMBER() OVER (PARTITION BY word, pos ORDER BY cost, nt) AS rn
-         |  FROM af$i) WHERE rn = 1),
-         |bp$i AS MATERIALIZED (SELECT word, pos, st FROM (SELECT b.word, c.en AS pos, c.st,
-         |    ROW_NUMBER() OVER (PARTITION BY b.word, c.en
-         |      ORDER BY b.cost + c.cost, b.nt + 1, c.st) AS rn
-         |  FROM b$i b JOIN cd$i c ON c.word = b.word AND c.st = b.pos)
-         |  WHERE rn = 1)""".stripMargin
-    }
-    // the unrolled backpointer walk + piece counting of one E-step
-    def walk(i: Int): String = {
-      val wks = (2 to maxTok).map { j =>
-        s"""wk${i}_$j AS MATERIALIZED (SELECT p.word, p.startp AS endp, bp.st AS startp
-           |  FROM wk${i}_${j - 1} p JOIN bp$i bp
-           |    ON bp.word = p.word AND bp.pos = p.startp WHERE p.startp > 0)""".stripMargin
-      }.mkString(",\n")
-      val pc = (1 to maxTok).map(j =>
-        s"SELECT word, substr(word, startp + 1, endp - startp) AS piece FROM wk${i}_$j")
-        .mkString("\n  UNION ALL ")
-      s"""wk${i}_1 AS MATERIALIZED (SELECT b.word, b.pos AS endp, bp.st AS startp
-         |  FROM b$i b JOIN bp$i bp ON bp.word = b.word AND bp.pos = b.pos
-         |  JOIN w ON w.word = b.word AND b.pos = len(w.word)),
-         |$wks,
-         |pc$i AS MATERIALIZED ($pc),
-         |u$i AS MATERIALIZED (SELECT piece, CAST(SUM(freq) AS BIGINT) AS used
-         |  FROM pc$i JOIN w USING (word) GROUP BY piece),
-         |v$i AS MATERIALIZED (SELECT v.piece, CAST(COALESCE(u.used, 0) AS BIGINT) AS cnt
-         |  FROM v${i - 1} v LEFT JOIN u$i u ON u.piece = v.piece)""".stripMargin
-    }
-    def costs(i: Int): String =
-      s"""s$i AS MATERIALIZED (SELECT CAST(SUM(cnt) + COUNT(*) AS DOUBLE) AS den FROM v${i - 1}),
-         |c$i AS MATERIALIZED (SELECT piece, ${cost("cnt", s"s$i")} AS cost FROM v${i - 1}, s$i)""".stripMargin
-    val emBlocks = (1 to iterations)
-      .map(i => s"${costs(i)},\n${dp(i)},\n${walk(i)}").mkString(",\n")
-    val fin = iterations + 1
-    val prefix =
-      s"""WITH w AS MATERIALIZED (SELECT word, CAST(COUNT(*) AS BIGINT) AS freq FROM (
-         |    SELECT unnest($W) AS word FROM documents)
-         |  WHERE len(word) <= $maxWordLen GROUP BY word),
-         |sp AS MATERIALIZED (SELECT piece, CAST(SUM(freq) AS BIGINT) AS cnt FROM (
-         |    SELECT substr(word, s, l) AS piece, freq
-         |    FROM w, range(1, ${maxWordLen + 1}) rs(s), range(1, ${maxPieceLen + 1}) rl(l)
-         |    WHERE s + l - 1 <= len(word)) GROUP BY piece),
-         |v0 AS MATERIALIZED (SELECT piece, cnt FROM (SELECT piece, cnt FROM sp
-         |    WHERE len(piece) > 1 ORDER BY cnt DESC, piece LIMIT $vocabSize)
-         |  UNION ALL SELECT piece, cnt FROM sp WHERE len(piece) = 1),
-         |$emBlocks""".stripMargin
-    if (train)
-      s"""$prefix,
-         |s$fin AS MATERIALIZED (SELECT CAST(SUM(cnt) + COUNT(*) AS DOUBLE) AS den FROM v$iterations)
-         |SELECT piece, cnt AS count, ${cost("cnt", s"s$fin")} AS cost_micro_nats
-         |FROM v$iterations, s$fin""".stripMargin
-    else
-      s"""$prefix,
-         |${costs(fin)},
-         |${dp(fin)},
-         |bb AS MATERIALIZED (SELECT b.word, b.cost, b.nt FROM b$fin b
-         |  JOIN w ON w.word = b.word AND b.pos = len(w.word)),
-         |dw AS MATERIALIZED (SELECT doc_id, unnest($W) AS word FROM documents)
-         |SELECT dw.doc_id, CAST(COUNT(*) AS BIGINT) AS n_words,
-         |  CAST(COALESCE(SUM(bb.nt), 0) AS BIGINT) AS n_tokens_unigram,
-         |  CAST(COALESCE(SUM(bb.cost), 0) AS BIGINT) AS cost_micro_nats,
-         |  CAST(COUNT(*) - COUNT(bb.nt) AS BIGINT) AS n_words_skipped
-         |FROM dw LEFT JOIN bb ON bb.word = dw.word
-         |GROUP BY dw.doc_id""".stripMargin
+  /** The one session the gate harnesses (Verify, Bench, TimeOne,
+   * PlanAudit) run in, so the gate verifies the configuration the sweep
+   * times: local[SPARK_GRAFT_CPUS] with as many shuffle partitions. */
+  def harnessSession(defaultCpus: Int): SparkSession = {
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", defaultCpus.toString)
+    val spark = SparkSession.builder()
+      .master(s"local[$cpus]")
+      .config("spark.sql.shuffle.partitions", cpus)
+      .config("spark.ui.enabled", "false")
+      .config("spark.sql.session.timeZone", "UTC")
+      // AQE coalesces the shuffles of the tiny fixture graphs — every
+      // query result is value-deterministic by design, so runtime
+      // re-planning is safe
+      .config("spark.sql.adaptive.enabled", "true")
+      // driver testdata writes TIMESTAMP(NANOS) parquet, unsupported by
+      // Spark's reader — surface it as Long nanos instead
+      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
+      // baseline harness parity (reference LDBCBenchmarkBase.scala:26-36)
+      .config("spark.serializer", "org.apache.spark.serializer.KryoSerializer")
+      .getOrCreate()
+    spark.sparkContext.setLogLevel("WARN")
+    spark
   }
-  /** WordPiece replay: vocab = all content-length-1 pieces (initial +
-   * `##` continuation forms) UNION the top-`vocabSize` longer pieces by
-   * word-frequency-weighted substring counts; encode = the greedy
-   * longest-match walk unrolled `maxWordLen` steps (each step consumes
-   * ≥ 1 character, and a finished/stuck word drops out of the join). */
-  private def wordpieceSql(encode: Boolean, vocabSize: Int = 30,
-      maxPieceLen: Int = 3, maxWordLen: Int = 16): String = {
-    val clen = "CASE WHEN piece LIKE '##%' THEN len(piece) - 2 ELSE len(piece) END"
-    val gs = (1 to maxWordLen).map { j =>
-      s"""g$j AS MATERIALIZED (SELECT g.word, be.en AS pos, g.nt + 1 AS nt
-         |  FROM g${j - 1} g JOIN be ON be.word = g.word AND be.st = g.pos)""".stripMargin
-    }.mkString(",\n")
-    val gu = (1 to maxWordLen).map(j => s"SELECT * FROM g$j").mkString("\n  UNION ALL ")
-    val prefix =
-      s"""WITH wf AS MATERIALIZED (SELECT word, CAST(COUNT(*) AS BIGINT) AS freq FROM (
-         |    SELECT unnest($W) AS word FROM documents)
-         |  WHERE len(word) <= $maxWordLen GROUP BY word),
-         |cand AS MATERIALIZED (SELECT word, freq, s - 1 AS st, s - 1 + l AS en,
-         |    CASE WHEN s = 1 THEN substr(word, s, l)
-         |         ELSE '##' || substr(word, s, l) END AS piece
-         |  FROM wf, range(1, ${maxWordLen + 1}) rs(s), range(1, ${maxPieceLen + 1}) rl(l)
-         |  WHERE s + l - 1 <= len(word)),
-         |vc AS MATERIALIZED (SELECT piece, CAST(SUM(freq) AS BIGINT) AS cnt
-         |  FROM cand GROUP BY piece),
-         |v AS MATERIALIZED (
-         |  SELECT piece, cnt FROM (SELECT piece, cnt FROM vc WHERE $clen > 1
-         |    ORDER BY cnt DESC, piece LIMIT $vocabSize)
-         |  UNION ALL SELECT piece, cnt FROM vc WHERE $clen = 1)""".stripMargin
-    if (!encode) s"$prefix\nSELECT piece, cnt AS count FROM v"
-    else
-      s"""$prefix,
-         |be AS MATERIALIZED (SELECT c.word, c.st, MAX(c.en) AS en
-         |  FROM cand c JOIN v ON v.piece = c.piece GROUP BY 1, 2),
-         |g0 AS (SELECT word, 0 AS pos, CAST(0 AS BIGINT) AS nt FROM wf),
-         |$gs,
-         |fin AS MATERIALIZED (SELECT word, nt FROM ($gu) WHERE pos = len(word)),
-         |dw AS (SELECT doc_id, unnest($W) AS word FROM documents)
-         |SELECT dw.doc_id, CAST(COUNT(*) AS BIGINT) AS n_words,
-         |  CAST(COALESCE(SUM(f.nt), 0) AS BIGINT) AS n_tokens_wordpiece,
-         |  CAST(COUNT(*) - COUNT(f.nt) AS BIGINT) AS n_words_unk
-         |FROM dw LEFT JOIN fin f ON f.word = dw.word
-         |GROUP BY dw.doc_id""".stripMargin
-  }
-
-  /** 3-word shingles over w (mirrors Text.wordShingles(n=3)). */
-  private val SH3 = "[array_to_string(w[i:i+2], ' ') for i in range(1, len(w) - 1)]"
-
-  /** Incremental near-dup oracle (new batch doc_id >= 400 vs the
-   * doc_id < 400 corpus index, plus within-batch pairs) — shared by the
-   * batch query and its single-micro-batch streaming twin. */
-  private lazy val incrementalDedupSql: String = incrementalDedupSqlTo(None)
-
-  /** `hi` bounds the new-batch slice (the streaming gate row pins a
-   * fixed-size ingest batch; None = the full ≥400 corpus). */
-  private def incrementalDedupSqlTo(hi: Option[Long]): String = {
-    val nbFilter = hi.map(h => s"doc_id >= 400 AND doc_id < $h")
-      .getOrElse("doc_id >= 400")
-    s"""WITH t AS (SELECT doc_id, $W AS w FROM documents),
-       |s AS (SELECT doc_id, $SH3 AS sh FROM t WHERE len(w) >= 3),
-       |sig AS MATERIALIZED (SELECT doc_id, list_transform(range(0, 16), h ->
-       |   list_min(list_transform(sh, x -> md5(CAST(h AS VARCHAR) || '|' || x)))) AS mh
-       |   FROM s),
-       |bands AS MATERIALIZED (SELECT doc_id, r.b AS band,
-       |   md5(array_to_string(mh[2 * r.b + 1:2 * r.b + 2], '|')) AS bh
-       |   FROM sig, range(0, 8) r(b)),
-       |nb AS (SELECT * FROM bands WHERE $nbFilter),
-       |cb AS (SELECT * FROM bands WHERE doc_id < 400),
-       |p AS (SELECT DISTINCT nb.doc_id AS id, cb.doc_id AS mid
-       |   FROM nb JOIN cb ON nb.band = cb.band AND nb.bh = cb.bh
-       |  UNION
-       |  SELECT DISTINCT x.doc_id, y.doc_id
-       |   FROM nb x JOIN nb y ON x.band = y.band AND x.bh = y.bh
-       |   AND x.doc_id > y.doc_id)
-       |SELECT p.id AS doc_id, p.mid AS match_id,
-       |  ROUND(CAST(len(list_filter(range(1, 17), i -> a.mh[i] = b.mh[i])) AS DOUBLE) / 16,
-       |    4) AS est_jaccard
-       |FROM p JOIN sig a ON a.doc_id = p.id JOIN sig b ON b.doc_id = p.mid""".stripMargin
-  }
-
-  /** Exact maximal duplicated spans replay (mirrors Text.dupSpansMaximal):
-   * md5'd `seedTokens`-token windows, capped cross-doc seed buckets,
-   * per-pair longest-common-extension (first aligned mismatch), per-
-   * position max, predecessor maximality filter, span rebuild. */
-  private def dupSpansMaximalSql(seedTokens: Int, maxBucket: Int): String =
-    s"""${dupSpansMaximalCtes(seedTokens, maxBucket)}
-       |SELECT mx.d AS doc_id, CAST(mx.pos AS INT) AS pos, CAST(mx.len AS INT) AS len,
-       |  array_to_string(t.w[mx.pos + 1 : mx.pos + mx.len], ' ') AS span
-       |FROM mx JOIN t ON t.doc_id = mx.d""".stripMargin
-
-  /** Cut replay (mirrors Text.cutDupSpans): group the maximal spans by
-   * text, keep the smallest (doc, pos) occurrence, drop every token
-   * covered by a losing occurrence, rebuild in position order. */
-  private def cutDupSpansSql(seedTokens: Int, maxBucket: Int): String =
-    s"""${dupSpansMaximalCtes(seedTokens, maxBucket)},
-       |sp AS (SELECT mx.d, mx.pos, mx.len,
-       |    array_to_string(t.w[mx.pos + 1 : mx.pos + mx.len], ' ') AS span
-       |  FROM mx JOIN t ON t.doc_id = mx.d),
-       |lose AS (SELECT d, pos, len FROM (
-       |  SELECT sp.*, ROW_NUMBER() OVER (PARTITION BY md5(span) ORDER BY d, pos) AS rn
-       |  FROM sp) WHERE rn > 1),
-       |rem AS (SELECT DISTINCT d, unnest(range(pos, pos + len)) AS tp FROM lose),
-       |tok AS (SELECT doc_id AS d, unnest(range(0, len(w))) AS pos, unnest(w) AS tk FROM t),
-       |keep AS (SELECT tok.* FROM tok LEFT JOIN rem ON rem.d = tok.d AND rem.tp = tok.pos
-       |  WHERE rem.tp IS NULL),
-       |reb AS (SELECT d, string_agg(tk, ' ' ORDER BY pos) AS clean_text FROM keep GROUP BY d),
-       |cnt AS (SELECT d, COUNT(*) AS n FROM rem GROUP BY d)
-       |SELECT t.doc_id, COALESCE(reb.clean_text, '') AS clean_text,
-       |  CAST(COALESCE(cnt.n, 0) AS BIGINT) AS n_removed_tokens
-       |FROM t LEFT JOIN reb ON reb.d = t.doc_id LEFT JOIN cnt ON cnt.d = t.doc_id""".stripMargin
-
-  /** Cross-corpus decontamination CTEs (mirrors Text.contaminatedSpans
-   * with train = doc_id % 10 <> 0, bench = doc_id % 10 = 0): two-sided
-   * seed windows, both-sides bucket rule, train×bench pairs, LCE,
-   * per-TRAIN-position max, predecessor maximality. */
-  private def contaminatedCtes(seedTokens: Int, maxBucket: Int): String = {
-    val n = seedTokens
-    s"""WITH tt AS MATERIALIZED (SELECT doc_id, $W AS w FROM documents
-       |  WHERE doc_id % 10 <> 0),
-       |tb AS MATERIALIZED (SELECT doc_id, $W AS w FROM documents
-       |  WHERE doc_id % 10 = 0),
-       |s0t AS (SELECT doc_id AS d, w, unnest(range(0, len(w) - ${n - 1})) AS pos
-       |  FROM tt WHERE len(w) >= $n),
-       |sdt AS MATERIALIZED (SELECT d, CAST(pos AS INT) AS pos,
-       |  md5(array_to_string(w[pos + 1 : pos + $n], ' ')) AS k FROM s0t),
-       |s0b AS (SELECT doc_id AS d, w, unnest(range(0, len(w) - ${n - 1})) AS pos
-       |  FROM tb WHERE len(w) >= $n),
-       |sdb AS MATERIALIZED (SELECT d, CAST(pos AS INT) AS pos,
-       |  md5(array_to_string(w[pos + 1 : pos + $n], ' ')) AS k FROM s0b),
-       |ok AS (SELECT k FROM (
-       |  SELECT k, SUM(t) AS nt, SUM(b) AS nb FROM (
-       |    SELECT k, 1 AS t, 0 AS b FROM sdt
-       |    UNION ALL SELECT k, 0, 1 FROM sdb) GROUP BY k)
-       |  WHERE nt >= 1 AND nb >= 1 AND nt + nb <= $maxBucket),
-       |px AS MATERIALIZED (SELECT x.d AS d1, x.pos AS p1, y.d AS d2, y.pos AS p2
-       |  FROM sdt x JOIN ok ON ok.k = x.k JOIN sdb y ON y.k = x.k),
-       |pw AS (SELECT px.*, a.w AS w1, b.w AS w2,
-       |    LEAST(len(a.w) - px.p1, len(b.w) - px.p2) AS lmax
-       |  FROM px JOIN tt a ON a.doc_id = px.d1 JOIN tb b ON b.doc_id = px.d2),
-       |pl AS MATERIALIZED (SELECT d1, p1,
-       |    CAST(CASE WHEN fm IS NULL OR fm = 0 THEN lmax ELSE fm - 1 END AS INT) AS len FROM (
-       |  SELECT *, list_position(list_transform(range(1, lmax + 1),
-       |      i -> w1[p1 + i] = w2[p2 + i]), false) AS fm
-       |  FROM pw)),
-       |pp AS MATERIALIZED (SELECT d1 AS d, p1 AS pos, MAX(len) AS len
-       |  FROM pl GROUP BY 1, 2),
-       |mx AS (SELECT c.d, c.pos, c.len FROM pp c
-       |  LEFT JOIN pp l ON l.d = c.d AND l.pos = c.pos - 1
-       |  WHERE l.len IS NULL OR l.len < c.len + 1)""".stripMargin
-  }
-
-  private def dupSpansMaximalCtes(seedTokens: Int, maxBucket: Int): String = {
-    val n = seedTokens
-    s"""WITH t AS MATERIALIZED (SELECT doc_id, $W AS w FROM documents),
-       |s0 AS (SELECT doc_id AS d, w, unnest(range(0, len(w) - ${n - 1})) AS pos
-       |  FROM t WHERE len(w) >= $n),
-       |sd AS MATERIALIZED (SELECT d, CAST(pos AS INT) AS pos,
-       |  md5(array_to_string(w[pos + 1 : pos + $n], ' ')) AS k FROM s0),
-       |ok AS (SELECT k FROM sd GROUP BY k
-       |  HAVING COUNT(DISTINCT d) >= 2 AND COUNT(*) <= $maxBucket),
-       |cand AS MATERIALIZED (SELECT sd.d, sd.pos, sd.k FROM sd JOIN ok ON ok.k = sd.k),
-       |px AS MATERIALIZED (SELECT x.d AS d1, x.pos AS p1, y.d AS d2, y.pos AS p2
-       |  FROM cand x JOIN cand y ON x.k = y.k AND x.d < y.d),
-       |pw AS (SELECT px.*, a.w AS w1, b.w AS w2,
-       |    LEAST(len(a.w) - px.p1, len(b.w) - px.p2) AS lmax
-       |  FROM px JOIN t a ON a.doc_id = px.d1 JOIN t b ON b.doc_id = px.d2),
-       |pl AS MATERIALIZED (SELECT d1, p1, d2, p2,
-       |    CAST(CASE WHEN fm IS NULL OR fm = 0 THEN lmax ELSE fm - 1 END AS INT) AS len FROM (
-       |  SELECT *, list_position(list_transform(range(1, lmax + 1),
-       |      i -> w1[p1 + i] = w2[p2 + i]), false) AS fm
-       |  FROM pw)),
-       |pp AS MATERIALIZED (SELECT d, pos, MAX(len) AS len FROM (
-       |  SELECT d1 AS d, p1 AS pos, len FROM pl
-       |  UNION ALL SELECT d2, p2, len FROM pl) GROUP BY 1, 2),
-       |mx AS (SELECT c.d, c.pos, c.len FROM pp c
-       |  LEFT JOIN pp l ON l.d = c.d AND l.pos = c.pos - 1
-       |  WHERE l.len IS NULL OR l.len < c.len + 1)""".stripMargin
-  }
-
-  /** Two-micro-batch GROW-mode replay (mirrors e_stream_incdedup_grow):
-   * batch 1 = docs [400, 450) matches corpus (<400) + earlier-in-batch;
-   * batch 2 = docs [450, 500) matches corpus + ALL of batch 1 (the live
-   * index grew) + earlier-in-batch. */
-  private lazy val incrementalDedupGrowSql: String =
-    s"""WITH t AS (SELECT doc_id, $W AS w FROM documents WHERE doc_id < 500),
-       |s AS (SELECT doc_id, $SH3 AS sh FROM t WHERE len(w) >= 3),
-       |sig AS MATERIALIZED (SELECT doc_id, list_transform(range(0, 16), h ->
-       |   list_min(list_transform(sh, x -> md5(CAST(h AS VARCHAR) || '|' || x)))) AS mh
-       |   FROM s),
-       |bands AS MATERIALIZED (SELECT doc_id, r.b AS band,
-       |   md5(array_to_string(mh[2 * r.b + 1:2 * r.b + 2], '|')) AS bh
-       |   FROM sig, range(0, 8) r(b)),
-       |n1 AS (SELECT * FROM bands WHERE doc_id >= 400 AND doc_id < 450),
-       |n2 AS (SELECT * FROM bands WHERE doc_id >= 450),
-       |cb AS (SELECT * FROM bands WHERE doc_id < 400),
-       |lb AS (SELECT * FROM bands WHERE doc_id < 450),
-       |p AS (SELECT DISTINCT n1.doc_id AS id, cb.doc_id AS mid
-       |   FROM n1 JOIN cb ON n1.band = cb.band AND n1.bh = cb.bh
-       |  UNION
-       |  SELECT DISTINCT x.doc_id, y.doc_id
-       |   FROM n1 x JOIN n1 y ON x.band = y.band AND x.bh = y.bh
-       |   AND x.doc_id > y.doc_id
-       |  UNION
-       |  SELECT DISTINCT n2.doc_id, lb.doc_id
-       |   FROM n2 JOIN lb ON n2.band = lb.band AND n2.bh = lb.bh
-       |  UNION
-       |  SELECT DISTINCT x.doc_id, y.doc_id
-       |   FROM n2 x JOIN n2 y ON x.band = y.band AND x.bh = y.bh
-       |   AND x.doc_id > y.doc_id)
-       |SELECT p.id AS doc_id, p.mid AS match_id,
-       |  ROUND(CAST(len(list_filter(range(1, 17), i -> a.mh[i] = b.mh[i])) AS DOUBLE) / 16,
-       |    4) AS est_jaccard
-       |FROM p JOIN sig a ON a.doc_id = p.id JOIN sig b ON b.doc_id = p.mid""".stripMargin
-
-  /** Unrolled Katz replay: x ← beta + alpha · (in-sum of x). */
-  private def katzSql(iters: Int, alpha: Double, beta: Double): String = {
-    val steps = (1 to iters).map { k =>
-      s"""x${k}r AS MATERIALIZED (SELECT e.dst AS id, SUM(x${k - 1}.k) AS s
-         |  FROM e JOIN x${k - 1} ON x${k - 1}.id = e.src GROUP BY 1),
-         |x$k AS MATERIALIZED (SELECT v.id,
-         |    CAST($beta AS DOUBLE) + CAST($alpha AS DOUBLE) * COALESCE(x${k}r.s, 0.0) AS k
-         |  FROM v LEFT JOIN x${k}r ON x${k}r.id = v.id)""".stripMargin
-    }.mkString(",\n")
-    s"""WITH e AS MATERIALIZED ($NE),
-       |v AS MATERIALIZED (SELECT n_nationkey AS id FROM nation),
-       |x0 AS (SELECT id, CAST($beta AS DOUBLE) AS k FROM v),
-       |$steps
-       |SELECT id, round(k, 6) AS katz FROM x$iters""".stripMargin
-  }
-
-  /** Unrolled eigenvector-centrality replay: raw power iteration
-   * x ← Aᵀx from all-ones, ONE sup-norm division at the end — the exact
-   * trajectory graft.lib.Eigenvector computes (its 1e100 overflow guard
-   * cannot trigger at 10 rounds on a 25-vertex graph). */
-  private def eigenvectorSql(iters: Int, weighted: Boolean = false): String = {
-    val term = if (weighted) "p.x * e.w" else "p.x"
-    val eCte = if (weighted)
-      s"(SELECT src, dst, CAST((src * 7 + dst * 3) % 5 + 1 AS DOUBLE) AS w FROM ($NE))"
-    else s"($NE)"
-    val steps = (1 to iters).map { k =>
-      s"""ev$k AS MATERIALIZED (
-         |  SELECT v.id, COALESCE(SUM($term), 0.0) AS x
-         |  FROM v LEFT JOIN e ON e.dst = v.id
-         |  LEFT JOIN ev${k - 1} p ON p.id = e.src
-         |  GROUP BY v.id)""".stripMargin
-    }.mkString(",\n")
-    s"""WITH e AS MATERIALIZED $eCte,
-       |v AS MATERIALIZED (SELECT n_nationkey AS id FROM nation),
-       |ev0 AS (SELECT id, CAST(1.0 AS DOUBLE) AS x FROM v),
-       |$steps,
-       |mx AS (SELECT MAX(ABS(x)) AS m FROM ev$iters)
-       |SELECT id, ROUND(CASE WHEN m > 0 THEN x / m ELSE 0.0 END, 6)
-       |  AS eigenvector FROM ev$iters, mx""".stripMargin
-  }
-
-  /** Unrolled HITS replay: raw power iteration (authority = in-sum of
-   * hubs, hub = out-sum of NEW authorities) with one L2 normalization of
-   * each score at the END — per-round normalization only rescales, and
-   * graft.lib.Hits skips it for one-job-per-window lazy rounds. */
-  private def hitsSql(iters: Int): String = {
-    val steps = (1 to iters).map { k =>
-      s"""a${k}r AS MATERIALIZED (SELECT e.dst AS id, SUM(h${k - 1}.hub) AS a
-         |  FROM e JOIN h${k - 1} ON h${k - 1}.id = e.src GROUP BY 1),
-         |a$k AS MATERIALIZED (SELECT v.id, h${k - 1}.hub,
-         |    COALESCE(a${k}r.a, 0.0) AS auth
-         |  FROM v JOIN h${k - 1} ON h${k - 1}.id = v.id
-         |  LEFT JOIN a${k}r ON a${k}r.id = v.id),
-         |b${k}r AS MATERIALIZED (SELECT e.src AS id, SUM(a$k.auth) AS h
-         |  FROM e JOIN a$k ON a$k.id = e.dst GROUP BY 1),
-         |h$k AS MATERIALIZED (SELECT v.id, COALESCE(b${k}r.h, 0.0) AS hub, a$k.auth
-         |  FROM v JOIN a$k ON a$k.id = v.id
-         |  LEFT JOIN b${k}r ON b${k}r.id = v.id)""".stripMargin
-    }.mkString(",\n")
-    s"""WITH e AS MATERIALIZED ($NE),
-       |v AS MATERIALIZED (SELECT n_nationkey AS id FROM nation),
-       |h0 AS (SELECT id, 1.0 AS hub FROM v),
-       |$steps,
-       |nz AS (SELECT sqrt(SUM(hub * hub)) AS hn, sqrt(SUM(auth * auth)) AS an
-       |       FROM h$iters)
-       |SELECT id,
-       |  round(CASE WHEN hn > 0 THEN hub / hn ELSE 0.0 END, 6) AS hub,
-       |  round(CASE WHEN an > 0 THEN auth / an ELSE 0.0 END, 6) AS authority
-       |FROM h$iters, nz""".stripMargin
-  }
-
-  /** Unrolled SALSA replay: HITS with per-edge 1/outdeg / 1/indeg weights
-   * computed once (the identical float products the engine reuses each
-   * round), L1-normalized at the end. */
-  private def salsaSql(iters: Int): String = {
-    val steps = (1 to iters).map { k =>
-      s"""a${k}r AS MATERIALIZED (SELECT ew.dst AS id, SUM(h${k - 1}.hub * ew.wout) AS a
-         |  FROM ew JOIN h${k - 1} ON h${k - 1}.id = ew.src GROUP BY 1),
-         |a$k AS MATERIALIZED (SELECT v.id, h${k - 1}.hub,
-         |    COALESCE(a${k}r.a, 0.0) AS auth
-         |  FROM v JOIN h${k - 1} ON h${k - 1}.id = v.id
-         |  LEFT JOIN a${k}r ON a${k}r.id = v.id),
-         |b${k}r AS MATERIALIZED (SELECT ew.src AS id, SUM(a$k.auth * ew.win) AS h
-         |  FROM ew JOIN a$k ON a$k.id = ew.dst GROUP BY 1),
-         |h$k AS MATERIALIZED (SELECT v.id, COALESCE(b${k}r.h, 0.0) AS hub, a$k.auth
-         |  FROM v JOIN a$k ON a$k.id = v.id
-         |  LEFT JOIN b${k}r ON b${k}r.id = v.id)""".stripMargin
-    }.mkString(",\n")
-    s"""WITH e AS MATERIALIZED ($NE),
-       |v AS MATERIALIZED (SELECT n_nationkey AS id FROM nation),
-       |od AS (SELECT src, COUNT(*) AS c FROM e GROUP BY 1),
-       |ig AS (SELECT dst, COUNT(*) AS c FROM e GROUP BY 1),
-       |ew AS MATERIALIZED (SELECT e.src, e.dst,
-       |    1.0 / od.c AS wout, 1.0 / ig.c AS win
-       |  FROM e JOIN od ON od.src = e.src JOIN ig ON ig.dst = e.dst),
-       |h0 AS (SELECT id, 1.0 AS hub FROM v),
-       |$steps,
-       |nz AS (SELECT SUM(hub) AS hn, SUM(auth) AS an FROM h$iters)
-       |SELECT id,
-       |  round(CASE WHEN hn > 0 THEN hub / hn ELSE 0.0 END, 6) AS hub,
-       |  round(CASE WHEN an > 0 THEN auth / an ELSE 0.0 END, 6) AS authority
-       |FROM h$iters, nz""".stripMargin
-  }
-
-  /** Unrolled 3-merge word-level BPE replay (mirrors
-   * graft.pipeline.Tokenizer: `⟨sym⟩` boundary encoding, greedy
-   * left-to-right `replace`, count-desc/pair-asc tie-break). `finalSelect`
-   * reads any of m1..m3 (the merge picks) or c3 (the final corpus). */
-  private def bpeSql(finalSelect: String): String = {
-    def pick(k: Int, field: String) = s"(SELECT $field FROM m$k)"
-    val steps = (1 to 3).map { k =>
-      s"""p$k AS (SELECT ts[i] AS l, ts[i+1] AS r
-         |  FROM (SELECT string_split(s[2:-2], '⟩⟨') AS ts FROM c${k - 1}),
-         |       range(1, 100000) t(i) WHERE i < len(ts)),
-         |m$k AS (SELECT l, r, count(*) AS n FROM p$k GROUP BY 1, 2
-         |  ORDER BY n DESC, l, r LIMIT 1),
-         |c$k AS (SELECT doc_id, nraw,
-         |  replace(s, '⟨' || ${pick(k, "l")} || '⟩⟨' || ${pick(k, "r")} || '⟩',
-         |             '⟨' || ${pick(k, "l")} || ' ' || ${pick(k, "r")} || '⟩') AS s
-         |  FROM c${k - 1})""".stripMargin
-    }.mkString(",\n")
-    s"""WITH c0 AS (
-       |  SELECT doc_id, len(ws) AS nraw,
-       |    '⟨' || array_to_string(ws, '⟩⟨') || '⟩' AS s
-       |  FROM (SELECT doc_id, $W AS ws FROM documents) WHERE len(ws) > 0),
-       |$steps
-       |$finalSelect""".stripMargin
-  }
-
-  private def pagerankSql(iters: Int): String = {
-    val steps = (1 to iters).map { k =>
-      s"""pr$k AS (
-         |  SELECT v.id, 0.15 + 0.85 * COALESCE(SUM(p.r / o.od), 0) AS r
-         |  FROM v LEFT JOIN e ON e.dst = v.id
-         |  LEFT JOIN pr${k - 1} p ON p.id = e.src
-         |  LEFT JOIN od o ON o.src = e.src
-         |  GROUP BY v.id)""".stripMargin
-    }.mkString(",\n")
-    s"""WITH e AS ($NE),
-       |od AS (SELECT src, count(*) AS od FROM e GROUP BY src),
-       |v AS (SELECT n_nationkey AS id FROM nation),
-       |pr0 AS (SELECT id, CAST(1.0 AS DOUBLE) AS r FROM v),
-       |$steps
-       |SELECT id, ROUND(r, 5) AS pagerank FROM pr$iters""".stripMargin
-  }
-
-  /** Tolerance-mode PageRank oracle over the cycle+chords nation graph:
-   * unrolls `maxRounds` power-iteration rounds, then REPLAYS the voting
-   * stop rule — the reported ranks are those of the first round whose
-   * max |Δrank| over all vertices drops below `tol`, exactly when the
-   * Pregel active-vertex loop stops. */
-  /** Circulant cycle+chords CTEs shared by the centrality oracles: the
-   * graph (cv/ce), all-pairs BFS distances (dist), and shortest-path
-   * counts (csig — each `csp` row is one distinct shortest path, extended
-   * only along DAG edges dist(s, next) = d+1, so COUNT(*) = sigma). */
-  private val CIRC_DIST_SIGMA =
-    """cv AS (SELECT n_nationkey AS id FROM nation),
-      |ce AS (SELECT DISTINCT src, dst FROM (
-      |    SELECT id AS src, (id + 7) % 25 AS dst FROM cv
-      |    UNION ALL
-      |    SELECT id, (3 * id + 1) % 25 FROM cv WHERE id % 3 = 0)
-      |  WHERE src <> dst),
-      |cwalk AS (SELECT id AS s, id AS v, 0 AS d FROM cv
-      |  UNION SELECT w.s, ce.dst, w.d + 1 FROM cwalk w
-      |    JOIN ce ON ce.src = w.v WHERE w.d < 25),
-      |cdist AS (SELECT s, v, MIN(d) AS d FROM cwalk GROUP BY s, v),
-      |csp AS (SELECT id AS s, id AS v, 0 AS d FROM cv
-      |  UNION ALL SELECT p.s, ce.dst, p.d + 1 FROM csp p
-      |    JOIN ce ON ce.src = p.v
-      |    JOIN cdist dd ON dd.s = p.s AND dd.v = ce.dst AND dd.d = p.d + 1),
-      |csig AS (SELECT s, v, CAST(COUNT(*) AS DOUBLE) AS sig
-      |  FROM csp GROUP BY s, v)""".stripMargin
-
-  /** Weighted circulant CTEs: the graph with integer weights
-   * (src*7 + dst*3) % 5 + 1 and all-pairs weighted distances (cwalk
-   * dedups (s, v, d) triples; weights 1..5 bound d <= 130 so the
-   * recursion is finite without a hop column). */
-  private val CIRC_DIST_W =
-    """cv AS (SELECT n_nationkey AS id FROM nation),
-      |ce AS (SELECT src, dst, CAST((src * 7 + dst * 3) % 5 + 1 AS DOUBLE) AS w
-      |  FROM (SELECT DISTINCT src, dst FROM (
-      |      SELECT id AS src, (id + 7) % 25 AS dst FROM cv
-      |      UNION ALL
-      |      SELECT id, (3 * id + 1) % 25 FROM cv WHERE id % 3 = 0)
-      |    WHERE src <> dst)),
-      |cwalk AS (SELECT id AS s, id AS v, CAST(0 AS DOUBLE) AS d FROM cv
-      |  UNION SELECT w2.s, ce.dst, w2.d + ce.w FROM cwalk w2
-      |    JOIN ce ON ce.src = w2.v WHERE w2.d < 130),
-      |cdistw AS (SELECT s, v, MIN(d) AS d FROM cwalk GROUP BY s, v)""".stripMargin
-
-  /** Two-tone vertical-split PNG per document, REAL-encoded with the
-   * JDK's ImageIO: width = id%24+8, height = id·7%24+8, left ⌈w/2⌉
-   * columns tone (id%256, id·3%256, id·7%256), right columns the
-   * 255-complement. Lossless, so decoded stats / block hashes are
-   * analytically predictable from doc_id alone. */
-  private def twoTonePngs(s: SparkSession, dir: String): DataFrame = {
-    import s.implicits._
-    // repartition BEFORE the codec mapPartitions (r14): the testdata
-    // parquet is one row group → a 1-partition scan, so the real
-    // ImageIO encode (and every decode downstream, which inherits this
-    // partitioning narrowly) ran single-threaded however many cores the
-    // session has. The JDK-codec seam is exactly the per-row work that
-    // should spread; one tiny (id)-only shuffle buys codec parallelism.
-    val ids = load(s, dir, "documents").select(col("doc_id").cast("long")).as[Long]
-      .repartition(s.sparkContext.defaultParallelism)
-    ids.mapPartitions { it =>
-      it.map { id =>
-        val w = (id % 24 + 8).toInt
-        val h = (id * 7 % 24 + 8).toInt
-        val wl = (w + 1) / 2
-        val (ra, ga, ba) = ((id % 256).toInt, (id * 3 % 256).toInt, (id * 7 % 256).toInt)
-        val (rb, gb, bb) = (255 - ra, 255 - ga, 255 - ba)
-        val img = new java.awt.image.BufferedImage(w, h,
-          java.awt.image.BufferedImage.TYPE_INT_RGB)
-        var y = 0
-        while (y < h) {
-          var x = 0
-          while (x < w) {
-            val (r, g, b) = if (x < wl) (ra, ga, ba) else (rb, gb, bb)
-            img.setRGB(x, y, (r << 16) | (g << 8) | b)
-            x += 1
-          }
-          y += 1
-        }
-        val bos = new java.io.ByteArrayOutputStream()
-        javax.imageio.ImageIO.write(img, "png", bos)
-        (id, bos.toByteArray)
-      }
-    }.toDF("doc_id", "payload")
-  }
-
-  /** Analytic aHash replay of the two-tone PNG fixture: every row of the
-   * image is identical, so block (by,bx) has luma sum
-   * (nA·lumaA + (nx−nA)·lumaB)·ny with nA the overlap of the block's
-   * x-range with the left tone region — the oracle evaluates the SAME
-   * integer cross-multiplication bit rule over all 64 blocks. */
-  private val AHASH_BITS =
-    """p AS (SELECT CAST(doc_id AS BIGINT) AS doc_id,
-      |    doc_id % 24 + 8 AS w, (doc_id * 7) % 24 + 8 AS h,
-      |    (doc_id % 24 + 9) // 2 AS wl,
-      |    (doc_id % 256) + ((doc_id * 3) % 256) + ((doc_id * 7) % 256) AS la
-      |  FROM documents),
-      |blk AS (SELECT doc_id, w, h, wl, la, 765 - la AS lb,
-      |    byy.i AS by, bxx.i AS bx,
-      |    (bxx.i * w) // 8 AS x0, ((bxx.i + 1) * w) // 8 AS x1,
-      |    (byy.i * h) // 8 AS y0, ((byy.i + 1) * h) // 8 AS y1
-      |  FROM p, range(0, 8) byy(i), range(0, 8) bxx(i)),
-      |bits AS (SELECT doc_id, by, bx,
-      |    CASE WHEN
-      |      ((GREATEST(0, LEAST(x1, wl) - x0) * la
-      |        + (x1 - x0 - GREATEST(0, LEAST(x1, wl) - x0)) * lb)
-      |       * (y1 - y0)) * (w * h)
-      |      > ((wl * la + (w - wl) * lb) * h) * ((x1 - x0) * (y1 - y0))
-      |    THEN '1' ELSE '0' END AS bit
-      |  FROM blk),
-      |hs AS (SELECT doc_id, string_agg(bit, '' ORDER BY by, bx) AS ahash
-      |  FROM bits GROUP BY 1)""".stripMargin
-
-  /** Analytic dHash replay of the same fixture: 8 rows × 9 columns of
-   * blocks, bit (by,bx) = mean(block bx) > mean(block bx+1) by the exact
-   * integer cross-multiplication the engine uses (rows are identical, so
-   * each block's luma sum is closed-form). */
-  private val DHASH_BITS =
-    """p AS (SELECT CAST(doc_id AS BIGINT) AS doc_id,
-      |    doc_id % 24 + 8 AS w, (doc_id * 7) % 24 + 8 AS h,
-      |    (doc_id % 24 + 9) // 2 AS wl,
-      |    (doc_id % 256) + ((doc_id * 3) % 256) + ((doc_id * 7) % 256) AS la
-      |  FROM documents),
-      |dblk AS (SELECT doc_id, w, h, wl, la, 765 - la AS lb,
-      |    byy.i AS by, bxx.i AS bx,
-      |    (bxx.i * w) // 9 AS x0, ((bxx.i + 1) * w) // 9 AS x1,
-      |    (byy.i * h) // 8 AS y0, ((byy.i + 1) * h) // 8 AS y1
-      |  FROM p, range(0, 8) byy(i), range(0, 9) bxx(i)),
-      |dsum AS (SELECT doc_id, by, bx,
-      |    (GREATEST(0, LEAST(x1, wl) - x0) * la
-      |      + (x1 - x0 - GREATEST(0, LEAST(x1, wl) - x0)) * lb) * (y1 - y0) AS sm,
-      |    (x1 - x0) * (y1 - y0) AS np
-      |  FROM dblk),
-      |bits AS (SELECT a.doc_id, a.by, a.bx,
-      |    CASE WHEN a.sm * b.np > b.sm * a.np THEN '1' ELSE '0' END AS bit
-      |  FROM dsum a JOIN dsum b
-      |    ON b.doc_id = a.doc_id AND b.by = a.by AND b.bx = a.bx + 1
-      |  WHERE a.bx < 8),
-      |hs AS (SELECT doc_id, string_agg(bit, '' ORDER BY by, bx) AS dhash
-      |  FROM bits GROUP BY 1)""".stripMargin
-
-  /** Tree+chords fixture CTEs shared by the 2-connectivity oracles:
-   * vertices (tv), directed raw edges (te), canonical simple undirected
-   * edges (tce) and the both-ways adjacency (tadj). */
-  private val TREE_CHORD =
-    """tv AS (SELECT CAST(n_nationkey AS BIGINT) AS id FROM nation),
-      |te AS (SELECT id AS src, id // 2 AS dst FROM tv WHERE id >= 1
-      |  UNION ALL SELECT id, (id * 5 + 2) % 25 FROM tv WHERE id % 7 = 3),
-      |tce AS (SELECT DISTINCT LEAST(src, dst) AS a, GREATEST(src, dst) AS b
-      |  FROM te WHERE src <> dst),
-      |tadj AS (SELECT a AS u, b AS v FROM tce UNION ALL SELECT b, a FROM tce)""".stripMargin
-
-  /** Per-edge-removal reachability: for every canonical edge (a,b), walk
-   * from a over every OTHER edge (the UNION dedups (edge, vertex) states,
-   * so the recursion is finite); the edge is a bridge iff b is never
-   * reached. `sel` renders the output row. */
-  private def bridgesSql(sel: String): String =
-    s"""WITH RECURSIVE $TREE_CHORD,
-       |reach AS (SELECT a AS ra, b AS rb, a AS v FROM tce
-       |  UNION
-       |  SELECT r.ra, r.rb, t.v FROM reach r JOIN tadj t ON t.u = r.v
-       |  WHERE NOT (LEAST(t.u, t.v) = r.ra AND GREATEST(t.u, t.v) = r.rb))
-       |SELECT $sel
-       |FROM tce t LEFT JOIN reach x
-       |  ON x.ra = t.a AND x.rb = t.b AND x.v = t.b""".stripMargin
-
-  /** Per-vertex-removal reachability on the CONNECTED fixture: walk from
-   * the minimum remaining vertex avoiding the removed one; articulation
-   * iff fewer than the other 24 vertices are reached. */
-  private val articulationSql =
-    s"""WITH RECURSIVE $TREE_CHORD,
-       |seeds AS (SELECT rv.id AS rem, MIN(o.id) AS v
-       |  FROM tv rv JOIN tv o ON o.id <> rv.id GROUP BY 1),
-       |areach AS (SELECT rem, v FROM seeds
-       |  UNION
-       |  SELECT r.rem, t.v FROM areach r JOIN tadj t ON t.u = r.v
-       |  WHERE t.v <> r.rem),
-       |cnt AS (SELECT rem, COUNT(DISTINCT v) AS n FROM areach GROUP BY 1)
-       |SELECT tv.id, (cnt.n < 24) AS is_articulation
-       |FROM tv JOIN cnt ON cnt.rem = tv.id""".stripMargin
-
-  /** SimRank replay on the circulant graph: `iters` unrolled synchronous
-   * rounds of s_k(a,b) = (c·Σ s_{k-1}(i,j)) / (|I(a)|·|I(b)|) over ordered
-   * in-neighbor pairs, each round's table carrying both pair orders plus
-   * the constant-1 diagonal (the engine stores the canonical sparse half;
-   * identical multiset of contributions per output group, same
-   * (c·SUM)/(da·db) float association). */
-  private def simRankSql(iters: Int, c: Double = 0.8): String = {
-    val cv = """cv AS (SELECT n_nationkey AS id FROM nation),
-      |ce AS (SELECT DISTINCT src, dst FROM (
-      |    SELECT id AS src, (id + 7) % 25 AS dst FROM cv
-      |    UNION ALL
-      |    SELECT id, (3 * id + 1) % 25 FROM cv WHERE id % 3 = 0)
-      |  WHERE src <> dst),
-      |ind AS (SELECT dst AS v, COUNT(*) AS d FROM ce GROUP BY 1),
-      |s0 AS (SELECT id AS a, id AS b, 1.0 AS s FROM cv)""".stripMargin
-    val rounds = (1 to iters).map { k =>
-      s"""s$k AS (
-         |  SELECT ea.dst AS a, eb.dst AS b,
-         |    ($c * SUM(p.s)) / (da.d * db.d) AS s
-         |  FROM s${k - 1} p
-         |  JOIN ce ea ON ea.src = p.a
-         |  JOIN ce eb ON eb.src = p.b
-         |  JOIN ind da ON da.v = ea.dst
-         |  JOIN ind db ON db.v = eb.dst
-         |  WHERE ea.dst <> eb.dst
-         |  GROUP BY ea.dst, eb.dst, da.d, db.d
-         |  UNION ALL
-         |  SELECT id, id, 1.0 FROM cv)""".stripMargin
-    }.mkString(",\n")
-    s"""WITH $cv,
-       |$rounds
-       |SELECT a, b, ROUND(s, 5) AS simrank FROM s$iters
-       |WHERE a < b AND s > 0""".stripMargin
-  }
-
-  /** PPR-sweep replay on the undirected community graph: `iters` unrolled
-   * single-lane personalized-PageRank rounds (same recurrence as
-   * [[ppprSql]], on the symmetrized edge list), then the full sweep —
-   * degree-normalized rank order, prefix degree sums, the
-   * max(rank_a, rank_b) internal-edge histogram, and the one float
-   * division per row in the engine's exact association. */
-  private def pprSweepSql(iters: Int, src: Int, k: Int): String = {
-    val steps = (1 to iters).map { i =>
-      s"""pr$i AS (
-         |  SELECT v.id,
-         |    (CASE WHEN v.id = $src THEN 0.15 ELSE 0 END) + 0.85 * COALESCE(SUM(p.r / o.od), 0) AS r
-         |  FROM v LEFT JOIN sym e ON e.dst = v.id
-         |  LEFT JOIN pr${i - 1} p ON p.id = e.src
-         |  LEFT JOIN od o ON o.src = e.src
-         |  GROUP BY v.id)""".stripMargin
-    }.mkString(",\n")
-    s"""WITH eu AS MATERIALIZED (SELECT DISTINCT LEAST(src, dst) AS a,
-       |    GREATEST(src, dst) AS b
-       |  FROM ($NE_COMM) WHERE src <> dst),
-       |sym AS MATERIALIZED (SELECT a AS src, b AS dst FROM eu
-       |  UNION ALL SELECT b, a FROM eu),
-       |od AS (SELECT src, COUNT(*) AS od FROM sym GROUP BY 1),
-       |v AS (SELECT n_nationkey AS id FROM nation),
-       |mm AS (SELECT COUNT(*) AS m FROM eu),
-       |pr0 AS (SELECT id, CAST(CASE WHEN id = $src THEN 1.0 ELSE 0.0 END AS DOUBLE) AS r FROM v),
-       |$steps,
-       |rk AS (SELECT * FROM (
-       |    SELECT p.id, p.r, o.od AS d,
-       |      ROW_NUMBER() OVER (ORDER BY ROUND(p.r / o.od, 12) DESC, p.id ASC) AS rank
-       |    FROM pr$iters p JOIN od o ON o.src = p.id WHERE p.r > 0)
-       |  WHERE rank <= $k),
-       |einat AS (SELECT GREATEST(x.rank, y.rank) AS rank, COUNT(*) AS c
-       |  FROM eu JOIN rk x ON x.id = eu.a JOIN rk y ON y.id = eu.b GROUP BY 1),
-       |sw AS (SELECT r.rank, r.id, r.r,
-       |    SUM(r.d) OVER (ORDER BY r.rank) AS vol,
-       |    SUM(COALESCE(e.c, 0)) OVER (ORDER BY r.rank) AS ein
-       |  FROM rk r LEFT JOIN einat e ON e.rank = r.rank),
-       |fin AS (SELECT rank, id, r, vol, vol - 2 * ein AS cut,
-       |    CASE WHEN LEAST(vol, 2 * (SELECT m FROM mm) - vol) > 0
-       |      THEN CAST(vol - 2 * ein AS DOUBLE)
-       |        / LEAST(vol, 2 * (SELECT m FROM mm) - vol) END AS cond
-       |  FROM sw)
-       |SELECT CAST(rank AS INT) AS rank, id, ROUND(r, 5) AS ppr,
-       |  CAST(vol AS BIGINT) AS vol, CAST(cut AS BIGINT) AS cut,
-       |  ROUND(cond, 6) AS conductance,
-       |  COALESCE(cond = MIN(cond) OVER (), FALSE) AS best
-       |FROM fin""".stripMargin
-  }
-
-  /** Brandes identity: btw(v) = Σ_{s≠v≠t} σ_sv · σ_vt / σ_st over pairs
-   * with d(s,v) + d(v,t) = d(s,t). */
-  private def betweennessSql: String =
-    s"""WITH RECURSIVE $CIRC_DIST_SIGMA,
-       |btw AS (SELECT sv.v AS id, SUM(sv.sig * vt.sig / st.sig) AS b
-       |  FROM csig sv
-       |  JOIN csig vt ON vt.s = sv.v
-       |  JOIN csig st ON st.s = sv.s AND st.v = vt.v
-       |  JOIN cdist d1 ON d1.s = sv.s AND d1.v = sv.v
-       |  JOIN cdist d2 ON d2.s = vt.s AND d2.v = vt.v
-       |  JOIN cdist d3 ON d3.s = st.s AND d3.v = st.v
-       |  WHERE sv.v <> sv.s AND sv.v <> vt.v AND sv.s <> vt.v
-       |    AND d1.d + d2.d = d3.d
-       |  GROUP BY 1)
-       |SELECT n_nationkey AS id, ROUND(COALESCE(b, 0), 5) AS betweenness
-       |FROM nation LEFT JOIN btw ON btw.id = n_nationkey""".stripMargin
-
-  private def closenessSql: String =
-    s"""WITH RECURSIVE $CIRC_DIST_SIGMA,
-       |agg AS (SELECT s, COUNT(*) AS r, SUM(d) AS total, SUM(1.0 / d) AS h
-       |  FROM cdist WHERE v <> s GROUP BY s)
-       |SELECT n_nationkey AS id,
-       |  ROUND(COALESCE((r * 1.0 / 24.0) * r / total, 0), 5) AS closeness,
-       |  ROUND(COALESCE(h, 0), 5) AS harmonic
-       |FROM nation LEFT JOIN agg ON agg.s = n_nationkey""".stripMargin
-
-  /** Greedy coloring by iterated Luby MIS, unrolled (md5 mode) on the
-   * circulant graph: `colors` color blocks of `rounds` Luby rounds each;
-   * priorities are keyed by (color, round) so rounds the engine never ran
-   * (its inner loop exits on an empty pool) drop out as empty winner sets
-   * here too. Both caps must cover the actual schedule. */
-  private def coloringSql(colors: Int, rounds: Int, seed: Long): String = {
-    def p(x: String, c: Int, r: Int) = s"md5(CAST($x AS VARCHAR) || '|$seed|$c|$r')"
-    val blocks = (0 until colors).map { c =>
-      val lubys = (0 until rounds).map { r =>
-        s"""eu${c}_$r AS MATERIALIZED (SELECT u.s, u.d FROM u
-           |  JOIN pool${c}_$r a ON a.id = u.s JOIN pool${c}_$r b ON b.id = u.d),
-           |nm${c}_$r AS MATERIALIZED (SELECT s AS id, MIN(${p("d", c, r)}) AS m
-           |  FROM eu${c}_$r GROUP BY s),
-           |w${c}_$r AS MATERIALIZED (SELECT q.id FROM pool${c}_$r q
-           |  LEFT JOIN nm${c}_$r n ON n.id = q.id
-           |  WHERE n.m IS NULL OR ${p("q.id", c, r)} < n.m),
-           |pool${c}_${r + 1} AS MATERIALIZED (SELECT id FROM pool${c}_$r
-           |  WHERE id NOT IN (SELECT id FROM w${c}_$r)
-           |  AND id NOT IN (SELECT DISTINCT x.d FROM eu${c}_$r x
-           |    JOIN w${c}_$r w ON w.id = x.s))""".stripMargin
-      }.mkString(",\n")
-      val wins = (0 until rounds).map(r => s"SELECT id FROM w${c}_$r")
-        .mkString(" UNION ALL ")
-      s"""pool${c}_0 AS MATERIALIZED (SELECT id FROM un$c),
-         |$lubys,
-         |wc$c AS MATERIALIZED (SELECT id FROM ($wins)),
-         |un${c + 1} AS MATERIALIZED (SELECT id FROM un$c
-         |  WHERE id NOT IN (SELECT id FROM wc$c))""".stripMargin
-    }.mkString(",\n")
-    val out = (0 until colors).map(c => s"SELECT id, $c AS color FROM wc$c")
-      .mkString(" UNION ALL ")
-    s"""WITH cv AS (SELECT n_nationkey AS id FROM nation),
-       |ce AS (SELECT DISTINCT src, dst FROM (
-       |    SELECT id AS src, (id + 7) % 25 AS dst FROM cv
-       |    UNION ALL SELECT id, (3 * id + 1) % 25 FROM cv WHERE id % 3 = 0)
-       |  WHERE src <> dst),
-       |canon AS MATERIALIZED (SELECT DISTINCT LEAST(src, dst) AS a,
-       |  GREATEST(src, dst) AS b FROM ce),
-       |u AS MATERIALIZED (SELECT a AS s, b AS d FROM canon
-       |  UNION ALL SELECT b, a FROM canon),
-       |un0 AS MATERIALIZED (SELECT id FROM cv),
-       |$blocks
-       |SELECT CAST(id AS INTEGER) AS id, CAST(color AS INTEGER) AS color
-       |FROM ($out)""".stripMargin
-  }
-
-  /** node2vec walks, unrolled (md5 mode, restart 0): the same md5-ordered
-   * neighbor lists as [[randomWalksSql]], but the pick is a cumulative
-   * threshold scan over prev-distance weights (1/p return, 1 adjacent,
-   * 1/q otherwise, uniform when prev is NULL). p/q are powers of two so
-   * every prefix sum is a dyadic rational — exact in both engines
-   * regardless of summation order. */
-  private def node2vecSql(steps: Int, walksPerVertex: Int, seed: Long,
-      p: Double, q: Double): String = {
-    val stepCtes = (1 to steps).map { k =>
-      val h = duckHex4(s"md5(s.walk_id || '|$k|${seed + 1}')")
-      s"""s$k AS MATERIALIZED (
-         |  SELECT walk_id, nxt AS cur,
-         |    CASE WHEN nxt IS NULL THEN path
-         |         ELSE list_append(path, CAST(nxt AS VARCHAR)) END AS path,
-         |    CASE WHEN nxt IS NULL THEN NULL ELSE oldcur END AS prev
-         |  FROM (
-         |    SELECT walk_id, path, oldcur,
-         |      CASE WHEN nbrs IS NULL OR len(nbrs) = 0 THEN NULL
-         |           ELSE nbrs[LEAST(len(list_filter(
-         |             [list_sum(w[1:i]) for i in range(1, len(w) + 1)],
-         |             y -> y <= (h16 / 65536.0) * list_sum(w))) + 1, len(nbrs))]
-         |      END AS nxt
-         |    FROM (
-         |      SELECT s.walk_id, s.path, s.cur AS oldcur, nb.nbrs,
-         |        ($h) AS h16,
-         |        list_transform(nb.nbrs, x -> CASE
-         |          WHEN s.prev IS NULL THEN 1.0
-         |          WHEN x = s.prev THEN ${1.0 / p}
-         |          WHEN list_contains(pnb.nbrs, x) THEN 1.0
-         |          ELSE ${1.0 / q} END) AS w
-         |      FROM s${k - 1} s
-         |      LEFT JOIN nb ON nb.src = s.cur
-         |      LEFT JOIN nb pnb ON pnb.src = s.prev)))""".stripMargin
-    }.mkString(",\n")
-    s"""WITH e AS MATERIALIZED ($NE),
-       |nb AS MATERIALIZED (SELECT src, list(dst
-       |    ORDER BY substr(md5(CAST(src AS VARCHAR) || '|' || CAST(dst AS VARCHAR) || '|$seed'), 1, 15), dst) AS nbrs
-       |  FROM e GROUP BY src),
-       |s0 AS MATERIALIZED (SELECT CAST(n_nationkey AS VARCHAR) || '#' || CAST(t.k AS VARCHAR) AS walk_id,
-       |    n_nationkey AS cur, [CAST(n_nationkey AS VARCHAR)] AS path,
-       |    CAST(NULL AS INTEGER) AS prev
-       |  FROM nation, range(0, $walksPerVertex) t(k)),
-       |$stepCtes
-       |SELECT walk_id, array_to_string(path, ',') AS random_walk FROM s$steps""".stripMargin
-  }
-
-  /** Unrolled k-truss peeling: per round, per-edge triangle support via
-   * the doubled edge list self-join, then drop edges under k-2;
-   * `rounds` must cover the cascade depth (engine iterates to fixpoint). */
-  private def ktrussSql(k: Int, rounds: Int): String = {
-    val steps = (0 until rounds).map { i =>
-      s"""u$i AS (SELECT src AS a, dst AS b FROM e$i
-         |  UNION ALL SELECT dst, src FROM e$i),
-         |s$i AS MATERIALIZED (
-         |  SELECT e.src, e.dst, COUNT(*) AS sup FROM e$i e
-         |  JOIN u$i x ON x.a = e.src
-         |  JOIN u$i y ON y.a = e.dst AND y.b = x.b
-         |  GROUP BY 1, 2),
-         |e${i + 1} AS MATERIALIZED (
-         |  SELECT src, dst FROM s$i WHERE sup >= ${k - 2})""".stripMargin
-    }.mkString(",\n")
-    s"""WITH ne AS ($NE),
-       |e0 AS MATERIALIZED (SELECT DISTINCT LEAST(src, dst) AS src,
-       |  GREATEST(src, dst) AS dst FROM ne),
-       |$steps
-       |SELECT src, dst, sup AS support FROM s${rounds - 1}
-       |WHERE sup >= ${k - 2}""".stripMargin
-  }
-
-  /** Weighted PageRank on the circulant graph, `iters` unrolled rounds:
-   * r = α + (1-α)·Σ r_u·w/W_u with the g_shortest_paths_weighted weight
-   * formula. */
-  private def pagerankWeightedSql(iters: Int): String = {
-    val steps = (1 to iters).map { k =>
-      s"""pw$k AS MATERIALIZED (
-         |  SELECT v.id, 0.15 + 0.85 * COALESCE(SUM(p.r * e.w / o.wsum), 0) AS r
-         |  FROM v LEFT JOIN e ON e.dst = v.id
-         |  LEFT JOIN pw${k - 1} p ON p.id = e.src
-         |  LEFT JOIN ow o ON o.src = e.src
-         |  GROUP BY v.id)""".stripMargin
-    }.mkString(",\n")
-    s"""WITH v AS (SELECT n_nationkey AS id FROM nation),
-       |e0 AS (SELECT DISTINCT src, dst FROM (
-       |    SELECT id AS src, (id + 7) % 25 AS dst FROM v
-       |    UNION ALL SELECT id, (3 * id + 1) % 25 FROM v WHERE id % 3 = 0)
-       |  WHERE src <> dst),
-       |e AS (SELECT src, dst, CAST((src * 7 + dst * 3) % 5 + 1 AS DOUBLE) AS w FROM e0),
-       |ow AS (SELECT src, SUM(w) AS wsum FROM e GROUP BY src),
-       |pw0 AS (SELECT id, CAST(1.0 AS DOUBLE) AS r FROM v),
-       |$steps
-       |SELECT id, ROUND(r, 5) AS pagerank FROM pw$iters""".stripMargin
-  }
-
-  private def pagerankTolSql(tol: Double, maxRounds: Int): String = {
-    // every pr$k is referenced three times (next round, delta check, final
-    // select) — MATERIALIZED stops DuckDB's CTE inlining from expanding the
-    // chain into a 3^maxRounds expression tree
-    val steps = (1 to maxRounds).map { k =>
-      s"""pr$k AS MATERIALIZED (
-         |  SELECT v.id, 0.15 + 0.85 * COALESCE(SUM(p.r / o.od), 0) AS r
-         |  FROM v LEFT JOIN e ON e.dst = v.id
-         |  LEFT JOIN pr${k - 1} p ON p.id = e.src
-         |  LEFT JOIN od o ON o.src = e.src
-         |  GROUP BY v.id)""".stripMargin
-    }.mkString(",\n")
-    val deltas = (1 to maxRounds).map { k =>
-      s"SELECT $k AS k, MAX(ABS(a.r - b.r)) AS md FROM pr$k a JOIN pr${k - 1} b USING (id)"
-    }.mkString("\nUNION ALL\n")
-    val rounds = (1 to maxRounds).map { k =>
-      s"SELECT $k AS k, id, r FROM pr$k"
-    }.mkString("\nUNION ALL\n")
-    s"""WITH v AS (SELECT n_nationkey AS id FROM nation),
-       |e AS (SELECT DISTINCT src, dst FROM (
-       |    SELECT id AS src, (id + 7) % 25 AS dst FROM v
-       |    UNION ALL
-       |    SELECT id, (3 * id + 1) % 25 FROM v WHERE id % 3 = 0)
-       |  WHERE src <> dst),
-       |od AS (SELECT src, count(*) AS od FROM e GROUP BY src),
-       |pr0 AS (SELECT id, CAST(1.0 AS DOUBLE) AS r FROM v),
-       |$steps,
-       |d AS ($deltas),
-       |ks AS (SELECT MIN(k) AS k FROM d WHERE md < $tol),
-       |allr AS ($rounds)
-       |SELECT id, ROUND(r, 5) AS pagerank FROM allr JOIN ks USING (k)""".stripMargin
-  }
-
-  private def simhashSql(bits: Int): String = {
-    val terms = (0 until bits).map { b =>
-      val nib = b / 4 + 1
-      val m = 1 << (b % 4 + 1)
-      val h = 1 << (b % 4)
-      s"""(CASE WHEN list_sum(list_transform(w, t ->
-         | CASE WHEN (strpos('0123456789abcdef', substr(md5(t), $nib, 1)) - 1) % $m >= $h
-         | THEN 1 ELSE -1 END)) > 0 THEN ${1L << b} ELSE 0 END)""".stripMargin
-    }.mkString(" + ")
-    s"""WITH t AS (SELECT doc_id, $W AS w FROM documents)
-       |SELECT doc_id, CAST($terms AS BIGINT) AS simhash FROM t""".stripMargin
-  }
-
-  private def langIdSql: String = {
-    val langs = pipeline.Text.defaultMarkers.toSeq.sortBy(_._1)
-    val scoreRows = langs.map { case (lang, kws) =>
-      val cnt = kws.map { k =>
-        val kw = s" $k "
-        s"CAST((len(p) - len(replace(p, '$kw', ''))) / ${kw.length} AS INT)"
-      }.mkString(" + ")
-      s"SELECT doc_id, '$lang' AS lang, $cnt AS score FROM padded"
-    }.mkString("\nUNION ALL\n")
-    s"""WITH padded AS (SELECT doc_id, ' ' || text || ' ' AS p FROM documents),
-       |s AS ($scoreRows)
-       |SELECT doc_id, lang AS pred_lang FROM (
-       |  SELECT doc_id, lang,
-       |    ROW_NUMBER() OVER (PARTITION BY doc_id ORDER BY score DESC, lang ASC) AS rn
-       |  FROM s) WHERE rn = 1""".stripMargin
-  }
-
-  private def ppprSql(iters: Int, s0: Int, s1: Int): String = {
-    val steps = (1 to iters).map { k =>
-      s"""pr$k AS (
-         |  SELECT v.id,
-         |    (CASE WHEN v.id = $s0 THEN 0.15 ELSE 0 END) + 0.85 * COALESCE(SUM(p.r0 / o.od), 0) AS r0,
-         |    (CASE WHEN v.id = $s1 THEN 0.15 ELSE 0 END) + 0.85 * COALESCE(SUM(p.r1 / o.od), 0) AS r1
-         |  FROM v LEFT JOIN e ON e.dst = v.id
-         |  LEFT JOIN pr${k - 1} p ON p.id = e.src
-         |  LEFT JOIN od o ON o.src = e.src
-         |  GROUP BY v.id)""".stripMargin
-    }.mkString(",\n")
-    s"""WITH e AS ($NE),
-       |od AS (SELECT src, count(*) AS od FROM e GROUP BY src),
-       |v AS (SELECT n_nationkey AS id FROM nation),
-       |pr0 AS (SELECT id,
-       |  CAST(CASE WHEN id = $s0 THEN 1.0 ELSE 0.0 END AS DOUBLE) AS r0,
-       |  CAST(CASE WHEN id = $s1 THEN 1.0 ELSE 0.0 END AS DOUBLE) AS r1 FROM v),
-       |$steps
-       |SELECT id, ROUND(r0, 5) AS r0, ROUND(r1, 5) AS r1 FROM pr$iters""".stripMargin
-  }
-
-  private val cosExpr =
-    "list_dot_product(x.v, y.v) / (sqrt(list_dot_product(x.v, x.v)) * sqrt(list_dot_product(y.v, y.v)))"
-
-  /** Community-graph edge list (mirrors [[communityGraph]]: region
-   * 5-cliques + the (id+7) % 25 chord ring). */
-  private val NE_COMM =
-    """SELECT x.n_nationkey AS src, y.n_nationkey AS dst
-      |FROM nation x JOIN nation y
-      |  ON x.n_regionkey = y.n_regionkey AND x.n_nationkey < y.n_nationkey
-      |UNION
-      |SELECT n_nationkey, (n_nationkey + 7) % 25 FROM nation""".stripMargin
-
-  /** Unrolled degree-discount influence-max replay on the community
-   * graph: per seed round, argmax of d − 2t − (d−t)·t·p over unpicked
-   * vertices (RAW-score order, id tie-break), then t += 1 on the pick's
-   * neighbors — the identical float expression the engine evaluates. */
-  private def influenceSql(k: Int, p: Double): String = {
-    val rounds = (1 to k).map { r =>
-      s"""p$r AS (SELECT id, d - 2*t - (d - t)*t*$p AS s
-         |  FROM s${r - 1} WHERE NOT picked
-         |  ORDER BY d - 2*t - (d - t)*t*$p DESC, id LIMIT 1),
-         |s$r AS (SELECT x.id, x.d,
-         |    x.t + CASE WHEN n.v IS NOT NULL THEN 1 ELSE 0 END AS t,
-         |    x.picked OR x.id = (SELECT id FROM p$r) AS picked
-         |  FROM s${r - 1} x LEFT JOIN cadj n
-         |    ON n.u = (SELECT id FROM p$r) AND n.v = x.id)""".stripMargin
-    }.mkString(",\n")
-    val out = (1 to k).map(r =>
-      s"SELECT id, CAST($r AS INT) AS round, ROUND(s, 6) AS score FROM p$r")
-      .mkString("\n UNION ALL ")
-    s"""WITH cce AS MATERIALIZED (SELECT DISTINCT LEAST(src, dst) AS a,
-       |    GREATEST(src, dst) AS b FROM ($NE_COMM) WHERE src <> dst),
-       |cadj AS MATERIALIZED (SELECT a AS u, b AS v FROM cce
-       |  UNION ALL SELECT b, a FROM cce),
-       |s0 AS (SELECT n_nationkey AS id, COALESCE(dg.c, 0) AS d, 0 AS t,
-       |    FALSE AS picked
-       |  FROM nation LEFT JOIN (SELECT u, COUNT(*) AS c FROM cadj GROUP BY 1) dg
-       |    ON dg.u = n_nationkey),
-       |$rounds
-       |$out""".stripMargin
-  }
-
-  /** Synchronous Louvain local-moving on the community graph, `rounds`
-   * unrolled rounds (mirrors lib/Louvain): canonical simple undirected
-   * edges, every vertex starts in its own community, each round every
-   * vertex adopts the candidate community (neighbors' plus its own)
-   * maximizing the exact integer gain 2m·e(i,c) − deg(i)·(tot(c) −
-   * [c=own]·deg(i)), ties to the smallest community id; odd rounds
-   * admit only candidates ≤ own, even rounds ≥ own (the engine's
-   * oscillation-breaking alternation). All-integer — the replay is
-   * bit-exact. Ends at CTE `l<rounds>` (id, deg, community). */
-  private def louvainCtes(rounds: Int): String = {
-    s"""WITH e AS MATERIALIZED ($NE_COMM),
-       |c AS MATERIALIZED (SELECT DISTINCT LEAST(src, dst) AS a, GREATEST(src, dst) AS b FROM e WHERE src <> dst),
-       |u AS MATERIALIZED (SELECT a AS s, b AS d, 1 AS w FROM c UNION ALL SELECT b, a, 1 FROM c),
-       |mm AS MATERIALIZED (SELECT COUNT(*) AS m FROM c),
-       |l0 AS MATERIALIZED (SELECT n.n_nationkey AS id,
-       |    CAST(COALESCE(dg.c, 0) AS BIGINT) AS deg, n.n_nationkey AS community
-       |  FROM nation n LEFT JOIN (SELECT s, COUNT(*) AS c FROM u GROUP BY s) dg
-       |    ON dg.s = n.n_nationkey),
-       |${louvainRoundSteps(rounds, "u", "l", "")}""".stripMargin
-  }
-
-  /** `rounds` unrolled weighted local-moving rounds over edge CTE
-   * `$u(s, d, w)` from state CTE `$st 0(id, deg, community)` (states
-   * `$st k`, scratch CTEs prefixed `$p`) — weighted generalization of
-   * the level-1 replay (e_ic sums edge WEIGHT; super-loops never enter
-   * `$u`, so they shape deg only, mirroring lib/Louvain). */
-  private def louvainRoundSteps(rounds: Int, u: String, st: String, p: String): String =
-    (1 to rounds).map { k =>
-      val dir = if (k % 2 == 1) "<=" else ">=" // alternating-direction rule
-      s"""${p}t$k AS MATERIALIZED (SELECT community AS nc, SUM(deg) AS tot FROM $st${k - 1} GROUP BY 1),
-         |${p}cd$k AS MATERIALIZED (SELECT s, nc, SUM(cnt) AS e_ic FROM (
-         |  SELECT $u.s AS s, p.community AS nc, $u.w AS cnt FROM $u JOIN $st${k - 1} p ON p.id = $u.d
-         |  UNION ALL SELECT id, community, 0 FROM $st${k - 1}) GROUP BY 1, 2),
-         |${p}sc$k AS MATERIALIZED (SELECT cd.s, cd.nc, me.deg,
-         |    2 * (SELECT m FROM mm) * cd.e_ic
-         |      - me.deg * (t.tot - CASE WHEN cd.nc = me.community THEN me.deg ELSE 0 END) AS gain
-         |  FROM ${p}cd$k cd JOIN ${p}t$k t ON t.nc = cd.nc JOIN $st${k - 1} me ON me.id = cd.s
-         |  WHERE cd.nc $dir me.community),
-         |$st$k AS MATERIALIZED (SELECT s AS id, deg, nc AS community FROM (
-         |  SELECT s, deg, nc, ROW_NUMBER() OVER (PARTITION BY s ORDER BY gain DESC, nc ASC) AS rn
-         |  FROM ${p}sc$k) WHERE rn = 1)""".stripMargin
-    }.mkString(",\n")
-
-  /** Two-level Louvain replay (mirrors lib/Louvain setLevels(2)): after
-   * the level-1 rounds, communities aggregate into super-vertices
-   * (intra edges → super-loops contributing 2w to degree and nothing to
-   * any e_ic; inter edges → weighted super-edges), the SAME weighted
-   * rounds re-run on the super-graph with m conserved, and the labels
-   * compose back down. All-integer — bit-exact. */
-  private def louvainCoarseSql(rounds: Int): String =
-    s"""${louvainCtes(rounds)},
-       |a1 AS MATERIALIZED (SELECT id, community FROM l$rounds),
-       |ce2 AS MATERIALIZED (SELECT LEAST(x.community, y.community) AS a,
-       |    GREATEST(x.community, y.community) AS b, COUNT(*) AS w
-       |  FROM c JOIN a1 x ON x.id = c.a JOIN a1 y ON y.id = c.b GROUP BY 1, 2),
-       |u2 AS MATERIALIZED (SELECT a AS s, b AS d, w FROM ce2 WHERE a <> b
-       |  UNION ALL SELECT b, a, w FROM ce2 WHERE a <> b),
-       |lo2 AS MATERIALIZED (SELECT a AS id, w FROM ce2 WHERE a = b),
-       |z0 AS MATERIALIZED (SELECT v.id,
-       |    CAST(COALESCE(dw.wd, 0) + 2 * COALESCE(lo.w, 0) AS BIGINT) AS deg,
-       |    v.id AS community
-       |  FROM (SELECT DISTINCT community AS id FROM a1) v
-       |  LEFT JOIN (SELECT s, SUM(w) AS wd FROM u2 GROUP BY 1) dw ON dw.s = v.id
-       |  LEFT JOIN lo2 lo ON lo.id = v.id),
-       |${louvainRoundSteps(rounds, "u2", "z", "z")}
-       |SELECT a1.id, z.community FROM a1 JOIN z$rounds z ON z.id = a1.community""".stripMargin
-
-  /** Synchronous CDLP, `iters` unrolled rounds: most frequent incoming
-   * label, ties to the smallest label; no-inbox vertices keep their label
-   * (mirrors lib/LabelPropagation). */
-  private def lpaSql(iters: Int): String = {
-    val steps = (1 to iters).map { k =>
-      s"""c$k AS MATERIALIZED (SELECT e.dst AS id, p.label, count(*) AS cnt
-         |  FROM e JOIN l${k - 1} p ON p.id = e.src GROUP BY 1, 2),
-         |b$k AS MATERIALIZED (SELECT id, label FROM (
-         |  SELECT id, label,
-         |    ROW_NUMBER() OVER (PARTITION BY id ORDER BY cnt DESC, label ASC) AS rn
-         |  FROM c$k) WHERE rn = 1),
-         |l$k AS MATERIALIZED (SELECT l.id, COALESCE(b.label, l.label) AS label
-         |  FROM l${k - 1} l LEFT JOIN b$k b ON b.id = l.id)""".stripMargin
-    }.mkString(",\n")
-    s"""WITH e AS MATERIALIZED ($NE),
-       |l0 AS MATERIALIZED (SELECT n_nationkey AS id, n_nationkey AS label FROM nation),
-       |$steps
-       |SELECT id, label FROM l$iters""".stripMargin
-  }
-
-  /** K-core via `rounds` unrolled Jacobi steps of the capped h-index
-   * operator (mirrors expressions/KCoreMerge + lib/KCore); the fixpoint is
-   * the coreness, and extra rounds past convergence are no-ops. */
-  private def kcoreSql(rounds: Int): String = {
-    val steps = (1 to rounds).map { k =>
-      s"""h$k AS MATERIALIZED (
-         |  SELECT id, MAX(CASE WHEN LEAST(nc, core) >= r THEN r ELSE 0 END) AS h FROM (
-         |    SELECT u.s AS id, p0.core AS core, pn.core AS nc,
-         |      ROW_NUMBER() OVER (PARTITION BY u.s ORDER BY pn.core DESC) AS r
-         |    FROM u JOIN k${k - 1} p0 ON p0.id = u.s
-         |    JOIN k${k - 1} pn ON pn.id = u.d) GROUP BY id),
-         |k$k AS MATERIALIZED (SELECT p.id, CAST(COALESCE(h.h, p.core) AS INT) AS core
-         |  FROM k${k - 1} p LEFT JOIN h$k h ON h.id = p.id)""".stripMargin
-    }.mkString(",\n")
-    s"""WITH e AS MATERIALIZED ($NE),
-       |c AS MATERIALIZED (SELECT DISTINCT LEAST(src, dst) AS a, GREATEST(src, dst) AS b FROM e),
-       |u AS MATERIALIZED (SELECT a AS s, b AS d FROM c UNION ALL SELECT b, a FROM c),
-       |k0 AS MATERIALIZED (SELECT n_nationkey AS id, CAST(COALESCE(dg.c, 0) AS INT) AS core
-       |  FROM nation LEFT JOIN (SELECT s, count(*) AS c FROM u GROUP BY s) dg
-       |  ON dg.s = n_nationkey),
-       |$steps
-       |SELECT id, core AS kcore FROM k$rounds""".stripMargin
-  }
-
-  /** Luby MIS with md5 priorities, `rounds` unrolled rounds (mirrors
-   * lib/MaximalIndependentSet in md5 hash mode, seed 42). */
-  /** Maximal-matching replay (mirrors lib/MaximalMatching): per round,
-   * edge priority md5(a|b|seed|k); an edge wins when its priority is the
-   * per-vertex minimum at BOTH endpoints; matched vertices drop with all
-   * incident edges. Extra unrolled rounds past the fixpoint are no-ops
-   * over empty sets, so a generous round count is safe. */
-  private def matchingSql(rounds: Int, seed: Long): String = {
-    def p(k: Int) =
-      s"md5(CAST(a AS VARCHAR) || '|' || CAST(b AS VARCHAR) || '|$seed|$k')"
-    val steps = (0 until rounds).map { k =>
-      s"""p$k AS MATERIALIZED (SELECT a, b, ${p(k)} AS p FROM e$k),
-         |vm$k AS MATERIALIZED (SELECT v, MIN(p) AS m FROM (
-         |    SELECT a AS v, p FROM p$k UNION ALL SELECT b, p FROM p$k)
-         |  GROUP BY v),
-         |w$k AS MATERIALIZED (SELECT q.a, q.b FROM p$k q
-         |  JOIN vm$k x ON x.v = q.a AND x.m = q.p
-         |  JOIN vm$k y ON y.v = q.b AND y.m = q.p),
-         |mv$k AS MATERIALIZED (SELECT a AS v FROM w$k UNION SELECT b FROM w$k),
-         |e${k + 1} AS MATERIALIZED (SELECT a, b FROM e$k
-         |  WHERE a NOT IN (SELECT v FROM mv$k)
-         |  AND b NOT IN (SELECT v FROM mv$k))""".stripMargin
-    }.mkString(",\n")
-    val wins = (0 until rounds)
-      .map(k => s"SELECT a AS src, b AS dst, CAST($k AS INT) AS round FROM w$k")
-      .mkString(" UNION ALL ")
-    s"""WITH e AS MATERIALIZED ($NE),
-       |e0 AS MATERIALIZED (SELECT DISTINCT LEAST(src, dst) AS a,
-       |  GREATEST(src, dst) AS b FROM e),
-       |$steps
-       |SELECT src, dst, round FROM ($wins)""".stripMargin
-  }
-
-  /** Weighted (locally-dominant) matching replay: winner rule
-   * (weight desc, md5 asc) per endpoint via ROW_NUMBER; canonical pairs
-   * take MAX weight over directed duplicates. */
-  private def weightedMatchingSql(rounds: Int, seed: Long): String = {
-    def p(k: Int) =
-      s"md5(CAST(a AS VARCHAR) || '|' || CAST(b AS VARCHAR) || '|$seed|$k')"
-    val steps = (0 until rounds).map { k =>
-      s"""p$k AS MATERIALIZED (SELECT a, b, w, ${p(k)} AS p FROM e$k),
-         |x$k AS MATERIALIZED (SELECT a AS v, a, b, w, p FROM p$k
-         |  UNION ALL SELECT b, a, b, w, p FROM p$k),
-         |r$k AS MATERIALIZED (SELECT *, ROW_NUMBER() OVER (PARTITION BY v
-         |  ORDER BY w DESC, p ASC) AS rn FROM x$k),
-         |w$k AS MATERIALIZED (SELECT r1.a, r1.b, r1.w FROM r$k r1
-         |  JOIN r$k r2 ON r1.a = r2.a AND r1.b = r2.b
-         |    AND r1.v = r1.a AND r2.v = r2.b
-         |  WHERE r1.rn = 1 AND r2.rn = 1),
-         |mv$k AS MATERIALIZED (SELECT a AS v FROM w$k UNION SELECT b FROM w$k),
-         |e${k + 1} AS MATERIALIZED (SELECT a, b, w FROM e$k
-         |  WHERE a NOT IN (SELECT v FROM mv$k)
-         |  AND b NOT IN (SELECT v FROM mv$k))""".stripMargin
-    }.mkString(",\n")
-    val wins = (0 until rounds)
-      .map(k => s"SELECT a AS src, b AS dst, w AS weight, " +
-        s"CAST($k AS INT) AS round FROM w$k")
-      .mkString(" UNION ALL ")
-    s"""WITH e AS MATERIALIZED ($NE),
-       |e0 AS MATERIALIZED (SELECT LEAST(src, dst) AS a,
-       |  GREATEST(src, dst) AS b,
-       |  MAX(CAST((src * 7 + dst * 3) % 5 + 1 AS DOUBLE)) AS w
-       |  FROM e GROUP BY 1, 2),
-       |$steps
-       |SELECT src, dst, weight, round FROM ($wins)""".stripMargin
-  }
-
-  private def misSql(rounds: Int, seed: Long): String = {
-    def p(x: String, r: Int) = s"md5(CAST($x AS VARCHAR) || '|$seed|$r')"
-    val steps = (0 until rounds).map { k =>
-      s"""eu$k AS MATERIALIZED (SELECT u.s, u.d FROM u
-         |  JOIN r$k a ON a.id = u.s JOIN r$k b ON b.id = u.d),
-         |nm$k AS MATERIALIZED (SELECT s AS id, MIN(${p("d", k)}) AS m FROM eu$k GROUP BY s),
-         |w$k AS MATERIALIZED (SELECT r.id FROM r$k r LEFT JOIN nm$k n ON n.id = r.id
-         |  WHERE n.m IS NULL OR ${p("r.id", k)} < n.m),
-         |nb$k AS MATERIALIZED (SELECT DISTINCT x.d AS id FROM eu$k x JOIN w$k w ON w.id = x.s),
-         |r${k + 1} AS MATERIALIZED (SELECT id FROM r$k WHERE id NOT IN (SELECT id FROM w$k)
-         |  AND id NOT IN (SELECT id FROM nb$k))""".stripMargin
-    }.mkString(",\n")
-    val wins = (0 until rounds).map(k => s"SELECT id FROM w$k").mkString(" UNION ALL ")
-    s"""WITH e AS MATERIALIZED ($NE),
-       |c AS MATERIALIZED (SELECT DISTINCT LEAST(src, dst) AS a, GREATEST(src, dst) AS b FROM e),
-       |u AS MATERIALIZED (SELECT a AS s, b AS d FROM c UNION ALL SELECT b, a FROM c),
-       |r0 AS MATERIALIZED (SELECT n_nationkey AS id FROM nation),
-       |$steps
-       |SELECT id FROM ($wins)""".stripMargin
-  }
-
-  /** One SELECT per LSH band: bucket = planesPerBand-bit signature, each
-   * bit the sign of a dot product against the ±1 md5-derived weight
-   * literal (mirrors Similarity.hyperplaneSignature / planeSign). Expects
-   * a CTE `e(vec_id, v)` with v already DOUBLE[]. */
-  private def duckBandRows(bands: Int, planesPerBand: Int, dim: Int): String =
-    (0 until bands).map { b =>
-      val bits = (0 until planesPerBand).map { p =>
-        val w = "[" + (0 until dim).map(i =>
-          if (pipeline.Similarity.planeSign(b * planesPerBand + p, i) > 0) "1.0"
-          else "-1.0").mkString(", ") + "]"
-        s"(CASE WHEN list_dot_product(v, $w) > 0 THEN ${1L << p} ELSE 0 END)"
-      }.mkString(" + ")
-      s"SELECT vec_id, $b AS band, $bits AS bucket FROM e"
-    }.mkString("\nUNION ALL\n")
-
-  /** Mutual-kNN-graph CTEs (k = 5, mirrors Similarity.knnGraph): exact
-   * per-vector top-5 by cosine (ties → neighbor id asc), then the mutual
-   * self-join keeps canonical (src < dst) edges. `tail` is appended after
-   * the `mu` CTE — either the final SELECT, or ", more CTEs… SELECT". */
-  private def knnGraphSql(tail: String): String =
-    s"""WITH RECURSIVE e AS MATERIALIZED (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
-       |sc AS (SELECT x.vec_id AS qid, y.vec_id AS nid,
-       |    list_dot_product(x.v, y.v) /
-       |      (sqrt(list_dot_product(x.v, x.v)) * sqrt(list_dot_product(y.v, y.v))) AS c
-       |  FROM e x JOIN e y ON y.vec_id <> x.vec_id),
-       |tk AS MATERIALIZED (SELECT qid, nid FROM (
-       |  SELECT qid, nid, ROW_NUMBER() OVER (PARTITION BY qid ORDER BY c DESC, nid ASC) AS rnk
-       |  FROM sc) WHERE rnk <= 5),
-       |mu AS (SELECT f.qid AS src, f.nid AS dst FROM tk f
-       |  JOIN tk r ON f.qid = r.nid AND f.nid = r.qid WHERE f.qid < f.nid)
-       |$tail""".stripMargin
-
-  /** Label-spreading tail for [[knnGraphSql]]: the md5 16-bit seed draw
-   * (seed 42, fraction 0.5 → threshold 32768), then `rounds` unrolled
-   * synchronous mode-of-neighbors rounds (count desc, label asc), seeds
-   * clamped, non-seeds recomputed from scratch each round — the exact
-   * trajectory of pipeline.Similarity.labelSpread. */
-  private def labelSpreadTail(rounds: Int): String = {
-    val h = duckHex4("md5('42|' || CAST(vec_id AS VARCHAR))")
-    val steps = (1 to rounds).map { r =>
-      s"""v$r AS (SELECT u.vv AS id, l.lab, count(*) AS n
-         |  FROM u JOIN l${r - 1} l ON l.id = u.uu
-         |  WHERE l.lab IS NOT NULL GROUP BY 1, 2),
-         |w$r AS (SELECT id, lab FROM (
-         |  SELECT id, lab, ROW_NUMBER() OVER (PARTITION BY id
-         |    ORDER BY n DESC, lab ASC) AS rk FROM v$r) WHERE rk = 1),
-         |l$r AS (SELECT p.id, CASE WHEN p.is_seed THEN p.lab ELSE w$r.lab END AS lab,
-         |    p.is_seed
-         |  FROM l${r - 1} p LEFT JOIN w$r ON w$r.id = p.id)""".stripMargin
-    }.mkString(",\n")
-    s""",
-       |seeds AS (SELECT vec_id AS id, label, (($h) < 32768) AS is_seed FROM embeddings),
-       |l0 AS (SELECT id, CASE WHEN is_seed THEN label END AS lab, is_seed FROM seeds),
-       |u AS (SELECT src AS uu, dst AS vv FROM mu UNION ALL SELECT dst, src FROM mu),
-       |$steps
-       |SELECT id AS vec_id, lab AS label, is_seed FROM l$rounds""".stripMargin
-  }
-
-  private def annLshSql(k: Int, bands: Int, planesPerBand: Int, dim: Int): String =
-    s"""WITH e AS MATERIALIZED (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
-       |bk AS MATERIALIZED (${duckBandRows(bands, planesPerBand, dim)}),
-       |cand AS MATERIALIZED (SELECT DISTINCT x.vec_id AS qid, y.vec_id AS nid
-       |  FROM bk x JOIN bk y ON x.band = y.band AND x.bucket = y.bucket
-       |  AND x.vec_id <> y.vec_id),
-       |sc AS (SELECT cand.qid AS query_id, cand.nid AS neighbor_id,
-       |    list_dot_product(q.v, n.v) /
-       |      (sqrt(list_dot_product(q.v, q.v)) * sqrt(list_dot_product(n.v, n.v))) AS c
-       |  FROM cand JOIN e q ON q.vec_id = cand.qid JOIN e n ON n.vec_id = cand.nid)
-       |SELECT query_id, neighbor_id, CAST(rnk AS INT) AS rnk FROM (
-       |  SELECT query_id, neighbor_id,
-       |    ROW_NUMBER() OVER (PARTITION BY query_id ORDER BY c DESC, neighbor_id ASC) AS rnk
-       |  FROM sc) WHERE rnk <= $k""".stripMargin
-
-  /** Shared IVF cell CTEs, ending in `asg` (every vector × centroid,
-   * ranked) and `dat` (each vector's winning cell): md5-sampled seed
-   * centroids, `lloydIters` Lloyd steps (assign to best cell by cosine,
-   * recompute per-cell position means — mirrors Similarity.ivfRanked). */
-  private def ivfCellCtes(nlist: Int, lloydIters: Int): String = {
-    def assignCte(name: String, centTable: String) =
-      s"""$name AS MATERIALIZED (SELECT vec_id, v, cid,
-         |    ROW_NUMBER() OVER (PARTITION BY vec_id ORDER BY sim DESC, cid ASC) AS r
-         |  FROM (SELECT e.vec_id, e.v, c.cid,
-         |      list_dot_product(e.v, c.cv) /
-         |        (sqrt(list_dot_product(e.v, e.v)) * sqrt(list_dot_product(c.cv, c.cv))) AS sim
-         |    FROM e CROSS JOIN $centTable c))""".stripMargin
-    val lloyd = (1 to lloydIters).map { i =>
-      s"""${assignCte(s"asg_l$i", s"cent${i - 1}")},
-         |dat_l$i AS (SELECT vec_id, v, cid FROM asg_l$i WHERE r = 1),
-         |mx$i AS (SELECT cid, p, AVG(v[p]) AS m
-         |  FROM dat_l$i, range(1, 65) t(p) GROUP BY cid, p),
-         |cent$i AS MATERIALIZED (SELECT cid, list(m ORDER BY p) AS cv FROM mx$i GROUP BY cid)""".stripMargin
-    }.mkString(",\n")
-    val lloydBlock = if (lloydIters == 0) "" else lloyd + ",\n"
-    s"""e AS MATERIALIZED (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
-       |cent0 AS MATERIALIZED (SELECT vec_id AS cid, v AS cv FROM e
-       |  ORDER BY md5(CAST(vec_id AS VARCHAR)), vec_id LIMIT $nlist),
-       |$lloydBlock${assignCte("asg", s"cent$lloydIters")},
-       |dat AS (SELECT vec_id, v, cid FROM asg WHERE r = 1)""".stripMargin
-  }
-
-  /** IVF oracle: cells via [[ivfCellCtes]], then probe-and-rank. */
-  private def annIvfSql(k: Int, nlist: Int, nprobe: Int, lloydIters: Int = 0): String = {
-    s"""WITH ${ivfCellCtes(nlist, lloydIters)},
-       |q AS (SELECT vec_id AS qid, v AS qv, cid FROM asg WHERE r <= $nprobe),
-       |sc AS (SELECT q.qid AS query_id, d.vec_id AS neighbor_id,
-       |    list_dot_product(q.qv, d.v) /
-       |      (sqrt(list_dot_product(q.qv, q.qv)) * sqrt(list_dot_product(d.v, d.v))) AS c
-       |  FROM q JOIN dat d ON d.cid = q.cid AND d.vec_id <> q.qid)
-       |SELECT query_id, neighbor_id, CAST(rnk AS INT) AS rnk FROM (
-       |  SELECT query_id, neighbor_id,
-       |    ROW_NUMBER() OVER (PARTITION BY query_id ORDER BY c DESC, neighbor_id ASC) AS rnk
-       |  FROM sc) WHERE rnk <= $k""".stripMargin
-  }
-
-  /** Hierarchical-IVF oracle: exact replay of Similarity.ivfTopKHier —
-   * md5-prefix super seeds and sub-seeds, sub-seed routing to the top-1
-   * super branch (super seeds anchor their own branch), data top-1
-   * super→sub assignment, and the global top-`nprobe` probe across
-   * `wprobe` branches. */
-  private def annIvfHierSql(k: Int, nsuper: Int, nlistPer: Int,
-      wprobe: Int, nprobe: Int): String =
-    s"""WITH ${annIvfHierCtes(k, nsuper, nlistPer, wprobe, nprobe)}
-       |SELECT query_id, neighbor_id, rnk FROM hier_out""".stripMargin
-
-  /** Measured recall@k of the hierarchical path vs the exact top-k — the
-   * same contract as `p_ann_recall` / `p_ann_recall_pq`, composed from
-   * the shared [[annIvfHierCtes]] block. */
-  private def annRecallHierSql(k: Int, nsuper: Int, nlistPer: Int,
-      wprobe: Int, nprobe: Int): String =
-    s"""WITH ${annIvfHierCtes(k, nsuper, nlistPer, wprobe, nprobe)},
-       |esc AS (SELECT q.vec_id AS query_id, y.vec_id AS neighbor_id,
-       |    list_dot_product(q.v, y.v) /
-       |      (sqrt(list_dot_product(q.v, q.v)) * sqrt(list_dot_product(y.v, y.v))) AS c
-       |  FROM e q JOIN e y ON y.vec_id <> q.vec_id),
-       |exact AS MATERIALIZED (SELECT query_id, neighbor_id FROM (
-       |  SELECT query_id, neighbor_id,
-       |    ROW_NUMBER() OVER (PARTITION BY query_id ORDER BY c DESC, neighbor_id ASC) AS rnk
-       |  FROM esc) WHERE rnk <= $k),
-       |j AS (SELECT exact.query_id,
-       |    CASE WHEN a.neighbor_id IS NULL THEN 0 ELSE 1 END AS hit
-       |  FROM exact LEFT JOIN hier_out a
-       |    ON a.query_id = exact.query_id AND a.neighbor_id = exact.neighbor_id)
-       |SELECT query_id, CAST(COUNT(*) AS BIGINT) AS n_exact,
-       |  CAST(SUM(hit) AS BIGINT) AS n_hit,
-       |  ROUND(CAST(SUM(hit) AS DOUBLE) / COUNT(*), 4) AS recall
-       |FROM j GROUP BY query_id""".stripMargin
-
-  /** The hierarchical-IVF replay as a reusable CTE block ending in
-   * `hier_out` (query_id, neighbor_id, rnk) — shared by the result
-   * oracle and the measured-recall oracle. */
-  private def annIvfHierCtes(k: Int, nsuper: Int, nlistPer: Int,
-      wprobe: Int, nprobe: Int): String = {
-    val cos = (a: String, b: String) =>
-      s"list_dot_product($a, $b) / (sqrt(list_dot_product($a, $a)) * sqrt(list_dot_product($b, $b)))"
-    s"""e AS MATERIALIZED (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
-       |sup AS MATERIALIZED (SELECT vec_id AS sid, v AS sv FROM e
-       |  ORDER BY md5(CAST(vec_id AS VARCHAR)), vec_id LIMIT $nsuper),
-       |seeds AS MATERIALIZED (SELECT vec_id AS cid, v AS cv FROM e
-       |  ORDER BY md5(CAST(vec_id AS VARCHAR)), vec_id LIMIT ${nsuper * nlistPer}),
-       |seedrank AS MATERIALIZED (SELECT cid, cv, sid,
-       |    ROW_NUMBER() OVER (PARTITION BY cid ORDER BY sim DESC, sid ASC) AS r
-       |  FROM (SELECT s.cid, s.cv, p.sid, ${cos("s.cv", "p.sv")} AS sim
-       |    FROM seeds s CROSS JOIN sup p)),
-       |seedasg AS MATERIALIZED (
-       |  SELECT sr.cid, sr.cv, COALESCE(self.sid, sr.sid) AS bid
-       |  FROM seedrank sr LEFT JOIN sup self ON self.sid = sr.cid
-       |  WHERE sr.r = 1),
-       |vsup AS MATERIALIZED (SELECT vec_id, v, sid,
-       |    ROW_NUMBER() OVER (PARTITION BY vec_id ORDER BY sim DESC, sid ASC) AS r
-       |  FROM (SELECT e.vec_id, e.v, p.sid, ${cos("e.v", "p.sv")} AS sim
-       |    FROM e CROSS JOIN sup p)),
-       |dat AS MATERIALIZED (SELECT vec_id, v, cid FROM (
-       |  SELECT w.vec_id, w.v, sa.cid,
-       |    ROW_NUMBER() OVER (PARTITION BY w.vec_id
-       |      ORDER BY ${cos("w.v", "sa.cv")} DESC, sa.cid ASC) AS r
-       |  FROM (SELECT vec_id, v, sid FROM vsup WHERE r = 1) w
-       |  JOIN seedasg sa ON sa.bid = w.sid) WHERE r = 1),
-       |qcell AS MATERIALIZED (SELECT vec_id AS qid, cid FROM (
-       |  SELECT w.vec_id, sa.cid,
-       |    ROW_NUMBER() OVER (PARTITION BY w.vec_id
-       |      ORDER BY ${cos("w.v", "sa.cv")} DESC, sa.cid ASC) AS r
-       |  FROM (SELECT vec_id, v, sid FROM vsup WHERE r <= $wprobe) w
-       |  JOIN seedasg sa ON sa.bid = w.sid) WHERE r <= $nprobe),
-       |sc AS (SELECT q.qid AS query_id, d.vec_id AS neighbor_id,
-       |    ${cos("qv.v", "d.v")} AS c
-       |  FROM qcell q JOIN e qv ON qv.vec_id = q.qid
-       |  JOIN dat d ON d.cid = q.cid AND d.vec_id <> q.qid),
-       |hier_out AS MATERIALIZED (
-       |  SELECT query_id, neighbor_id, CAST(rnk AS INT) AS rnk FROM (
-       |    SELECT query_id, neighbor_id,
-       |      ROW_NUMBER() OVER (PARTITION BY query_id ORDER BY c DESC, neighbor_id ASC) AS rnk
-       |    FROM sc) WHERE rnk <= $k)""".stripMargin
-  }
-
-  /** IVF-PQ oracle: IVF cells via [[ivfCellCtes]], then an exact replay of
-   * Similarity.ivfPqTopK — unit-normalized vectors, md5-ordered codebook
-   * seeds (code c = seed c's subvector, in (md5, id) order), per-subspace
-   * argmin codes (ties to the lowest code), ADC = sum over subspaces of
-   * the query's distance to the candidate's codebook entry, and the
-   * `refine`-deep exact-cosine re-rank of the ADC shortlist. */
-  private def annIvfPqSql(k: Int, nlist: Int, nprobe: Int, m: Int, ksub: Int,
-      refine: Int, dim: Int = 64, queryWhere: String = ""): String =
-    s"""WITH ${annIvfPqCtes(k, nlist, nprobe, m, ksub, refine, dim, queryWhere)}
-       |SELECT query_id, neighbor_id, rnk FROM pq_out""".stripMargin
-
-  /** The IVF-PQ replay as a reusable CTE block ending in `pq_out`
-   * (query_id, neighbor_id, rnk) — shared by the result oracle and the
-   * measured-recall oracle. */
-  private def annIvfPqCtes(k: Int, nlist: Int, nprobe: Int, m: Int, ksub: Int,
-      refine: Int, dim: Int = 64, queryWhere: String = ""): String = {
-    val dsub = dim / m
-    s"""${ivfCellCtes(nlist, 0)},
-       |en AS MATERIALIZED (SELECT vec_id,
-       |    CASE WHEN sqrt(list_dot_product(v, v)) > 0
-       |         THEN list_transform(v, x -> x / sqrt(list_dot_product(v, v)))
-       |         ELSE v END AS nv
-       |  FROM e),
-       |sd AS MATERIALIZED (
-       |  SELECT ROW_NUMBER() OVER (ORDER BY h, vec_id) - 1 AS c, nv
-       |  FROM (SELECT md5(CAST(vec_id AS VARCHAR)) AS h, en.vec_id, en.nv FROM en
-       |        ORDER BY 1, 2 LIMIT $ksub)),
-       |cb AS MATERIALIZED (
-       |  SELECT j.j, sd.c, sd.nv[j.j*$dsub+1 : j.j*$dsub+$dsub] AS cv
-       |  FROM sd, range(0, $m) j(j)),
-       |vs AS MATERIALIZED (
-       |  SELECT en.vec_id, j.j, en.nv[j.j*$dsub+1 : j.j*$dsub+$dsub] AS sv
-       |  FROM en, range(0, $m) j(j)),
-       |sdist AS MATERIALIZED (
-       |  SELECT vs.vec_id, vs.j, cb.c,
-       |    list_sum(list_transform(list_zip(vs.sv, cb.cv),
-       |      p -> (p[1] - p[2]) * (p[1] - p[2]))) AS d
-       |  FROM vs JOIN cb ON cb.j = vs.j),
-       |codes AS MATERIALIZED (
-       |  SELECT vec_id, j, c FROM (
-       |    SELECT vec_id, j, c,
-       |      ROW_NUMBER() OVER (PARTITION BY vec_id, j ORDER BY d ASC, c ASC) AS rn
-       |    FROM sdist) WHERE rn = 1),
-       |q AS (SELECT vec_id AS qid, cid FROM asg WHERE r <= $nprobe$queryWhere),
-       |cand AS MATERIALIZED (
-       |  SELECT q.qid, d.vec_id AS nid
-       |  FROM q JOIN dat d ON d.cid = q.cid AND d.vec_id <> q.qid),
-       |adc AS MATERIALIZED (
-       |  SELECT c.qid, c.nid, SUM(sq.d) AS adc
-       |  FROM cand c JOIN codes k2 ON k2.vec_id = c.nid
-       |    JOIN sdist sq ON sq.vec_id = c.qid AND sq.j = k2.j AND sq.c = k2.c
-       |  GROUP BY 1, 2),
-       |short AS (
-       |  SELECT qid, nid FROM (
-       |    SELECT qid, nid,
-       |      ROW_NUMBER() OVER (PARTITION BY qid ORDER BY adc ASC, nid ASC) AS rn
-       |    FROM adc) WHERE rn <= ${math.max(refine, k)}),
-       |resc AS (
-       |  SELECT s.qid AS query_id, s.nid AS neighbor_id,
-       |    CASE WHEN list_dot_product(qe.nv, qe.nv) > 0
-       |          AND list_dot_product(ne.nv, ne.nv) > 0
-       |         THEN list_dot_product(qe.nv, ne.nv) END AS c
-       |  FROM short s JOIN en qe ON qe.vec_id = s.qid JOIN en ne ON ne.vec_id = s.nid),
-       |pq_out AS MATERIALIZED (
-       |  SELECT query_id, neighbor_id, CAST(rnk AS INT) AS rnk FROM (
-       |    SELECT query_id, neighbor_id,
-       |      ROW_NUMBER() OVER (PARTITION BY query_id
-       |        ORDER BY c DESC NULLS LAST, neighbor_id ASC) AS rnk
-       |    FROM resc) WHERE rnk <= $k)""".stripMargin
-  }
-
-  /** Measured recall@k of the IVF-PQ path vs the exact top-k — the same
-   * contract as the LSH `p_ann_recall` row, composed from the shared
-   * [[annIvfPqCtes]] block. */
-  /** Replay of [[skewStats]]: distinct-edge recursive-CTE CC + ordered
-   * triangle join over the same synthetic supplier graph. */
-  private def skewStatsSql(hub: Boolean): String = {
-    val dst = if (hub)
-      "CASE WHEN l_orderkey % 7 = 0 THEN 0 ELSE (l_suppkey * 7 + l_partkey) % 997 END"
-    else "(l_suppkey * 7 + l_partkey) % 997"
-    s"""WITH RECURSIVE e0 AS (
-       |  SELECT CAST(l_suppkey AS BIGINT) AS src, CAST($dst AS BIGINT) AS dst FROM lineitem),
-       |e AS (SELECT DISTINCT src, dst FROM e0 WHERE src <> dst),
-       |ue AS (SELECT DISTINCT least(src, dst) AS a, greatest(src, dst) AS b FROM e),
-       |u AS (SELECT a AS s, b AS d FROM ue UNION SELECT b, a FROM ue),
-       |verts AS (SELECT DISTINCT s AS id FROM u
-       |          UNION SELECT DISTINCT src FROM e0 UNION SELECT DISTINCT dst FROM e0),
-       |r AS (SELECT id, id AS comp FROM verts
-       |      UNION SELECT u.d, r.comp FROM r JOIN u ON u.s = r.id),
-       |lab AS (SELECT id, MIN(comp) AS comp FROM r GROUP BY id),
-       |cs AS (SELECT comp, count(*) AS sz FROM lab GROUP BY comp),
-       |cstat AS (SELECT CAST(count(*) AS BIGINT) AS n_components, CAST(max(sz) AS BIGINT) AS mx FROM cs),
-       |tri AS (SELECT CAST(count(*) AS BIGINT) AS t FROM ue e1
-       |        JOIN ue e2 ON e2.a = e1.b JOIN ue e3 ON e3.a = e1.a AND e3.b = e2.b)
-       |SELECT 'n_components' AS metric, n_components AS value FROM cstat
-       |UNION ALL SELECT 'max_component', mx FROM cstat
-       |UNION ALL SELECT 'triangles', t FROM tri""".stripMargin
-  }
-
-  /** Unrolled replay of [[graft.lib.SVDPlusPlus.runDeterministic]] on the
-   * supplier→part quantity graph: rank 2 as scalar columns (p1/p2, q1/q2,
-   * y1/y2), one CTE block per synchronous epoch (s = Σy over rated items,
-   * per-edge clamped prediction error, per-vertex gradient sums), md5
-   * factor init identical to Spark's `conv(substr(md5,1,4),16,10)`.
-   * Prototyped against a numpy replica that matched Spark bit-for-bit
-   * (round-6, /tmp pattern per the oracle workflow). */
-  private def svdppSql(epochs: Int): String = {
-    def hcol(tag: String, idc: String, k: Int): String =
-      s"(${duckHex4(s"md5('$tag|' || $idc || '|$k')")}) / 65536.0 * 0.1"
-    def epoch(n: Int): String = {
-      val p = n - 1
-      s"""s$n AS MATERIALIZED (SELECT e.u, sum(t.y1) AS s1, sum(t.y2) AS s2
-         |  FROM e JOIN it$p t USING (i) GROUP BY e.u),
-         |t$n AS MATERIALIZED (
-         |  SELECT e.u, e.i, us.nu, it.q1, it.q2,
-         |    us.p1 + us.nu*s.s1 AS z1, us.p2 + us.nu*s.s2 AS z2,
-         |    e.r - least(greatest((SELECT m FROM mu) + us.bu + it.bi
-         |      + it.q1*(us.p1+us.nu*s.s1) + it.q2*(us.p2+us.nu*s.s2), 1.0), 50.0) AS err
-         |  FROM e JOIN us$p us USING (u) JOIN it$p it USING (i) JOIN s$n s USING (u)),
-         |us$n AS MATERIALIZED (
-         |  SELECT us.u, us.du, us.nu,
-         |    us.bu + 0.007*(a.se - us.du*0.005*us.bu) AS bu,
-         |    us.p1 + 0.007*(a.eq1 - us.du*0.015*us.p1) AS p1,
-         |    us.p2 + 0.007*(a.eq2 - us.du*0.015*us.p2) AS p2
-         |  FROM us$p us JOIN (SELECT u, sum(err) AS se, sum(err*q1) AS eq1,
-         |    sum(err*q2) AS eq2 FROM t$n GROUP BY u) a USING (u)),
-         |it$n AS MATERIALIZED (
-         |  SELECT it.i, it.di,
-         |    it.bi + 0.007*(a.se - it.di*0.005*it.bi) AS bi,
-         |    it.q1 + 0.007*(a.ez1 - it.di*0.015*it.q1) AS q1,
-         |    it.q2 + 0.007*(a.ez2 - it.di*0.015*it.q2) AS q2,
-         |    it.y1 + 0.007*(a.ey1 - it.di*0.015*it.y1) AS y1,
-         |    it.y2 + 0.007*(a.ey2 - it.di*0.015*it.y2) AS y2
-         |  FROM it$p it JOIN (SELECT i, sum(err) AS se, sum(err*z1) AS ez1,
-         |    sum(err*z2) AS ez2, sum(err*nu*q1) AS ey1, sum(err*nu*q2) AS ey2
-         |    FROM t$n GROUP BY i) a USING (i))""".stripMargin
-    }
-    s"""WITH e AS MATERIALIZED (
-       |  SELECT 's' || l_suppkey AS u, 'p' || l_partkey AS i,
-       |    CAST(l_quantity AS DOUBLE) AS r FROM lineitem),
-       |mu AS MATERIALIZED (SELECT avg(r) AS m FROM e),
-       |us0 AS MATERIALIZED (
-       |  SELECT u, count(*) AS du, avg(r) - (SELECT m FROM mu) AS bu,
-       |    1.0/sqrt(count(*)) AS nu,
-       |    ${hcol("p", "u", 0)} AS p1, ${hcol("p", "u", 1)} AS p2
-       |  FROM e GROUP BY u),
-       |it0 AS MATERIALIZED (
-       |  SELECT i, count(*) AS di, avg(r) - (SELECT m FROM mu) AS bi,
-       |    ${hcol("q", "i", 0)} AS q1, ${hcol("q", "i", 1)} AS q2,
-       |    ${hcol("y", "i", 0)} AS y1, ${hcol("y", "i", 1)} AS y2
-       |  FROM e GROUP BY i),
-       |${(1 to epochs).map(epoch).mkString(",\n")}
-       |SELECT u AS id, round(bu, 5) AS bias FROM us$epochs
-       |UNION ALL SELECT i AS id, round(bi, 5) AS bias FROM it$epochs""".stripMargin
-  }
-
-  /** Unrolled sum-product BP replay for [[graft.examples.BeliefPropagation]]
-   * on the nation-keyed 5x5 Ising grid: one chained CTE per (sweep, color)
-   * message update — λ' = atanh(tanh(b)·tanh(a_i + Σλ_in - λ_rev)) written
-   * with the exp identity (this DuckDB lacks tanh/atanh) — then the belief
-   * read-out σ(2·(a + Σλ)). 6-dp rounding on both sides absorbs the
-   * last-ulp tanh-vs-exp difference. */
-  private def beliefPropSql(sweeps: Int): String = {
-    def upd(prev: String, nxt: String, c: Int): String =
-      s"""$nxt AS (SELECT i, j, b,
-         |  CASE WHEN colorj = $c
-         |    THEN 0.5 * ln((1 + tb * tx) / (1 - tb * tx)) ELSE lam END AS lam
-         |  FROM (SELECT m.i, m.j, m.b, m.lam, vj.color AS colorj,
-         |      (exp(2 * m.b) - 1) / (exp(2 * m.b) + 1) AS tb,
-         |      (exp(2 * (vi.a + coalesce(s.si, 0) - r.lam)) - 1) /
-         |      (exp(2 * (vi.a + coalesce(s.si, 0) - r.lam)) + 1) AS tx
-         |    FROM $prev m
-         |    JOIN $prev r ON r.i = m.j AND r.j = m.i
-         |    LEFT JOIN (SELECT j AS i, sum(lam) AS si FROM $prev GROUP BY 1) s ON s.i = m.i
-         |    JOIN v vi ON vi.id = m.i
-         |    JOIN v vj ON vj.id = m.j))""".stripMargin
-    val steps = (0 until sweeps).flatMap(sw => Seq(0, 1).map(c =>
-      (sw * 2 + c, c))).map { case (t, c) => upd(s"m$t", s"m${t + 1}", c) }
-    val tFinal = sweeps * 2
-    s"""WITH v AS (SELECT CAST(n_nationkey AS INT) AS id,
-       |    ((n_nationkey * 37) % 21 - 10) / 10.0 AS a,
-       |    CAST((n_nationkey // 5 + n_nationkey % 5) % 2 AS INT) AS color FROM nation),
-       |e AS (SELECT src, dst, ((src * 31 + dst * 17) % 19 - 9) / 10.0 AS b FROM (
-       |  SELECT CAST(n_nationkey AS INT) AS src, CAST(n_nationkey + 1 AS INT) AS dst
-       |    FROM nation WHERE n_nationkey % 5 < 4
-       |  UNION ALL SELECT CAST(n_nationkey AS INT), CAST(n_nationkey + 5 AS INT)
-       |    FROM nation WHERE n_nationkey // 5 < 4)),
-       |m0 AS (SELECT i, j, b, 0.0 AS lam FROM
-       |  (SELECT src AS i, dst AS j, b FROM e UNION ALL SELECT dst, src, b FROM e)),
-       |${steps.mkString(",\n")}
-       |SELECT v.id, ROUND(1.0 / (1.0 + exp(-2 * (v.a + coalesce(sf.s, 0)))), 6) AS belief
-       |FROM v LEFT JOIN (SELECT j, sum(lam) AS s FROM m$tFinal GROUP BY 1) sf ON sf.j = v.id""".stripMargin
-  }
-
-  private def annRecallPqSql(k: Int, nlist: Int, nprobe: Int, m: Int,
-      ksub: Int, refine: Int): String =
-    s"""WITH ${annIvfPqCtes(k, nlist, nprobe, m, ksub, refine)},
-       |esc AS (SELECT q.vec_id AS query_id, y.vec_id AS neighbor_id,
-       |    list_dot_product(q.v, y.v) /
-       |      (sqrt(list_dot_product(q.v, q.v)) * sqrt(list_dot_product(y.v, y.v))) AS c
-       |  FROM e q JOIN e y ON y.vec_id <> q.vec_id),
-       |exact AS MATERIALIZED (SELECT query_id, neighbor_id FROM (
-       |  SELECT query_id, neighbor_id,
-       |    ROW_NUMBER() OVER (PARTITION BY query_id ORDER BY c DESC, neighbor_id ASC) AS rnk
-       |  FROM esc) WHERE rnk <= $k),
-       |j AS (SELECT exact.query_id,
-       |    CASE WHEN a.neighbor_id IS NULL THEN 0 ELSE 1 END AS hit
-       |  FROM exact LEFT JOIN pq_out a
-       |    ON a.query_id = exact.query_id AND a.neighbor_id = exact.neighbor_id)
-       |SELECT query_id, CAST(COUNT(*) AS BIGINT) AS n_exact,
-       |  CAST(SUM(hit) AS BIGINT) AS n_hit,
-       |  ROUND(CAST(SUM(hit) AS DOUBLE) / COUNT(*), 4) AS recall
-       |FROM j GROUP BY query_id""".stripMargin
-
-  /** SemDeDup oracle: IVF cells via [[ivfCellCtes]], within-cell cosine
-   * pairs (4dp) above `threshold`, connected components by recursive
-   * min-label, keep_id = component minimum (itself for singletons). */
-  private def semanticDedupSql(threshold: Double, nlist: Int, lloydIters: Int): String =
-    s"""WITH RECURSIVE ${ivfCellCtes(nlist, lloydIters)},
-       |pairs AS MATERIALIZED (SELECT a, b FROM (
-       |  SELECT x.vec_id AS a, y.vec_id AS b,
-       |    ROUND(list_dot_product(x.v, y.v) /
-       |      (sqrt(list_dot_product(x.v, x.v)) * sqrt(list_dot_product(y.v, y.v))), 4) AS cos
-       |  FROM dat x JOIN dat y ON x.cid = y.cid AND x.vec_id < y.vec_id)
-       |  WHERE cos >= $threshold),
-       |u AS (SELECT a AS s1, b AS d1 FROM pairs UNION SELECT b, a FROM pairs),
-       |r AS (SELECT DISTINCT s1 AS id, s1 AS comp FROM u
-       |      UNION SELECT u.d1, r.comp FROM r JOIN u ON u.s1 = r.id),
-       |m AS (SELECT id, MIN(comp) AS keep FROM r GROUP BY id)
-       |SELECT vec_id, COALESCE(m.keep, vec_id) AS keep_id
-       |FROM embeddings LEFT JOIN m ON m.id = vec_id""".stripMargin
-
-  /** R-MAT replay shared by g_rmat (expression generator) and
-   * g_rmat_source (DSv2 provider): every quadrant decision from its
-   * md5 draw, exact 60-bit thresholds. */
-  private lazy val rmatSql: String = {
-    val (ta, tab, tabc) =
-      sources.GraphGenerators.rmatThresholds(0.57, 0.19, 0.19)
-    val h = duckHex15("md5('7|' || CAST(i AS VARCHAR) || '|' || CAST(l AS VARCHAR))")
-    s"""WITH lv AS (SELECT e.i, lv.l FROM range(0, 200) e(i), range(0, 6) lv(l)),
-       |d AS (SELECT i, l, CAST($h AS BIGINT) AS draw FROM lv)
-       |SELECT i AS edge_id,
-       |  CAST(SUM(CASE WHEN draw >= $tab THEN CAST(1 AS BIGINT) << (5 - l)
-       |    ELSE 0 END) AS BIGINT) AS src,
-       |  CAST(SUM(CASE WHEN (draw >= $ta AND draw < $tab) OR draw >= $tabc
-       |    THEN CAST(1 AS BIGINT) << (5 - l) ELSE 0 END) AS BIGINT) AS dst
-       |FROM d GROUP BY 1""".stripMargin
-  }
-
-  /** Point-in-interval replay shared by the batch range join and its
-   * stateless stream-static twin: purchases inside each user's 30-min
-   * error window, [start, end) bounds. */
-  private val rangeJoinSql: String =
-    """WITH p AS (SELECT user_id, event_id, epoch_ms(ts) AS ms FROM events
-      |  WHERE event_type = 'purchase'),
-      |er AS (SELECT user_id, event_id, epoch_ms(ts) AS s FROM events
-      |  WHERE event_type = 'error')
-      |SELECT p.user_id, p.event_id AS purchase_id, er.event_id AS error_id
-      |FROM p JOIN er ON er.user_id = p.user_id
-      |  AND p.ms >= er.s AND p.ms < er.s + 1800000""".stripMargin
-
-  /** First 16 bits of an md5 hex string as an integer, nibble by nibble
-   * (DuckDB has no hex→int conv; mirrors Spark `conv(substr(md5,1,4),16,10)`). */
-  private def duckHex4(md5expr: String): String =
-    (1 to 4).map(i =>
-      s"(strpos('0123456789abcdef', substr($md5expr, $i, 1)) - 1) * ${1 << (4 * (4 - i))}")
-      .mkString(" + ")
-
-  /** First 60 bits (15 nibbles) of an md5 hex string as a BIGINT —
-   * mirrors Spark `conv(substr(md5, 1, 15), 16, 10) :: long`. */
-  private def duckHex15(md5expr: String): String =
-    (1 to 15).map(i =>
-      s"(strpos('0123456789abcdef', substr($md5expr, $i, 1)) - 1) * ${1L << (4 * (15 - i))}")
-      .mkString(" + ")
-
-  /** Independent-Cascade live-edge replay (shared by the driver-tail and
-   * forced-distributed rows): coin < p·2^60 per edge, BFS min level from
-   * the seed set over the surviving edges. */
-  private lazy val icSpreadSql: String = {
-    val h = duckHex15(
-      "md5('9|' || CAST(src AS VARCHAR) || '|' || CAST(dst AS VARCHAR))")
-    val thr = (0.5 * (1L << 60).toDouble).toLong
-    s"""WITH RECURSIVE cv AS (SELECT n_nationkey AS id FROM nation),
-       |ce AS (SELECT DISTINCT src, dst FROM (
-       |    SELECT id AS src, (id + 7) % 25 AS dst FROM cv
-       |    UNION ALL
-       |    SELECT id, (3 * id + 1) % 25 FROM cv WHERE id % 3 = 0)
-       |  WHERE src <> dst),
-       |live AS (SELECT src, dst FROM ce WHERE ($h) < $thr),
-       |walk AS (SELECT unnest([0, 12]) AS v, 0 AS r
-       |  UNION SELECT live.dst, walk.r + 1 FROM walk
-       |    JOIN live ON live.src = walk.v WHERE walk.r < 30),
-       |m AS (SELECT v, MIN(r) AS r FROM walk GROUP BY v)
-       |SELECT cv.id, CAST(m.r AS INT) AS round
-       |FROM cv LEFT JOIN m ON m.v = cv.id""".stripMargin
-  }
-
-  /** Earliest-arrival (vertex, time) state walk (shared by the driver-tail
-   * and forced-distributed rows). */
-  /** Shared DuckDB CTE chain replaying [[pipeline.Web.urlCanonical]] over
-   * the [[urlFixture]] URLs — p3 exposes (doc_id, scheme, host, ok, tail)
-   * for the p_url_canonical and p_host_stats oracles. Plain (non-
-   * interpolated) string: the regexes anchor with `$`. */
-  private lazy val urlCanonCtes: String =
-    """WITH u AS (SELECT doc_id,
-      |  CASE WHEN doc_id % 3 = 0 THEN 'HTTP://WWW.Site' ||
-      |      CAST(doc_id % 7 AS VARCHAR) ||
-      |      '.COM:80/Dir/Page/?utm_source=feed&b=' ||
-      |      CAST(doc_id % 5 AS VARCHAR) || '&a=1&gclid=g#frag'
-      |    WHEN doc_id % 3 = 1 THEN 'https://user:pw@Sub.site' ||
-      |      CAST(doc_id % 7 AS VARCHAR) || '.com:443/p' ||
-      |      CAST(doc_id % 11 AS VARCHAR) || '?z=2&a=3'
-      |    ELSE 'doc ' || CAST(doc_id AS VARCHAR) END AS url
-      |  FROM documents),
-      |p AS (SELECT doc_id,
-      |  lower(regexp_extract(url, '^([a-zA-Z][a-zA-Z0-9+.-]*)://', 1))
-      |    AS scheme,
-      |  regexp_replace(lower(regexp_extract(url,
-      |    '^[a-zA-Z][a-zA-Z0-9+.-]*://([^/?#]*)', 1)), '^[^@]*@', '')
-      |    AS nouser,
-      |  regexp_extract(url,
-      |    '^[a-zA-Z][a-zA-Z0-9+.-]*://[^/?#]*([^?#]*)', 1) AS path0,
-      |  regexp_extract(url, '^[^#?]*\?([^#]*)', 1) AS q0 FROM u),
-      |p2 AS (SELECT doc_id, scheme,
-      |  CASE WHEN scheme = 'http' THEN regexp_replace(nouser, ':80$', '')
-      |    WHEN scheme = 'https' THEN regexp_replace(nouser, ':443$', '')
-      |    ELSE nouser END AS host,
-      |  CASE WHEN regexp_replace(path0, '/+$', '') = '' THEN '/'
-      |    ELSE regexp_replace(path0, '/+$', '') END AS path,
-      |  array_to_string(list_sort(list_filter(string_split(q0, '&'),
-      |    x -> len(x) > 0 AND NOT regexp_matches(x,
-      |      '^(utm_[^=]*|gclid|fbclid|msclkid|mc_eid|igshid)(=.*)?$'))),
-      |    '&') AS query
-      |  FROM p),
-      |p3 AS (SELECT doc_id, scheme, host,
-      |  len(scheme) > 0 AND len(host) > 0 AS ok,
-      |  path || CASE WHEN len(query) > 0 THEN '?' || query ELSE '' END
-      |    AS tail FROM p2)""".stripMargin
-
-  /** DuckDB replay of [[pageFixture]] as CTE `pg0(doc_id, url, html)`. */
-  private lazy val pageFixtureCte: String =
-    """WITH pg0 AS (SELECT doc_id,
-      |  'http://h' || CAST(doc_id % 5 AS VARCHAR) || '.com/p' ||
-      |    CAST(doc_id AS VARCHAR) AS url,
-      |  '<p><a href="http://H' || CAST((doc_id + 1) % 5 AS VARCHAR) ||
-      |  '.com/a">x</a> <A HREF=''https://www.h' ||
-      |  CAST((doc_id + 2) % 5 AS VARCHAR) ||
-      |  '.com:443/b''>y</A> <a href="/local/page">z</a> ' ||
-      |  '<a href="#s">w</a></p>' AS html
-      |  FROM documents)""".stripMargin
-
-  /** DuckDB scalar replaying [[pipeline.Web.urlHostKey]] over column
-   * `c`: lowercased host, userinfo/default-port dropped, www. stripped,
-   * NULL when there is no scheme://host. */
-  private def hostKeySql(c: String): String = {
-    val scheme = s"lower(regexp_extract($c, '^([a-zA-Z][a-zA-Z0-9+.-]*)://', 1))"
-    val noUser = s"regexp_replace(lower(regexp_extract($c, " +
-      s"'^[a-zA-Z][a-zA-Z0-9+.-]*://([^/?#]*)', 1)), '^[^@]*@', '')"
-    val host = s"(CASE WHEN $scheme = 'http' " +
-      s"THEN regexp_replace($noUser, ':80$$', '') " +
-      s"WHEN $scheme = 'https' THEN regexp_replace($noUser, ':443$$', '') " +
-      s"ELSE $noUser END)"
-    s"(CASE WHEN len($scheme) > 0 AND len($host) > 0 " +
-      s"THEN regexp_replace($host, '^www\\.', '') END)"
-  }
-
-  private lazy val temporalBfsSql: String =
-    """WITH RECURSIVE cv AS (SELECT n_nationkey AS id FROM nation),
-      |ce AS (SELECT src, dst, CAST((src * 2 + dst) % 7 + 1 AS DOUBLE) AS t
-      |  FROM (SELECT DISTINCT src, dst FROM (
-      |      SELECT id AS src, (id + 7) % 25 AS dst FROM cv
-      |      UNION ALL
-      |      SELECT id, (3 * id + 1) % 25 FROM cv WHERE id % 3 = 0)
-      |    WHERE src <> dst)),
-      |reach AS (SELECT 0 AS v, CAST(0 AS DOUBLE) AS t
-      |  UNION SELECT ce.dst, ce.t FROM reach r
-      |    JOIN ce ON ce.src = r.v AND ce.t >= r.t)
-      |SELECT cv.id, m.t AS arrival
-      |FROM cv LEFT JOIN (SELECT v, MIN(t) AS t FROM reach GROUP BY v) m
-      |  ON m.v = cv.id""".stripMargin
-
-  /** Deterministic random walks, `steps` unrolled steps (mirrors
-   * rw/RandomWalks in md5 hash mode: neighbor lists ordered by
-   * md5(src|dst|seed) — 15 fixed-width hex chars order identically to the
-   * 60-bit numeric weight — and the step pick is 16 md5 bits mod fan-out). */
-  /** Edge-weight-biased walk replay: same md5 draws and sampled-neighbor
-   * order as [[randomWalksSql]], with the node2vec-style cumulative
-   * threshold scan driven by per-edge integer weights (exact prefix
-   * sums). Weight expr mirrors the query: (src*7 + dst*3) % 5 + 1. */
-  private def weightedWalksSql(steps: Int, walksPerVertex: Int, seed: Long): String = {
-    val ord = s"substr(md5(CAST(src AS VARCHAR) || '|' || CAST(dst AS VARCHAR) || '|$seed'), 1, 15), dst"
-    val stepCtes = (1 to steps).map { k =>
-      val h = duckHex4(s"md5(s.walk_id || '|$k|${seed + 1}')")
-      s"""s$k AS MATERIALIZED (
-         |  SELECT walk_id, nxt AS cur,
-         |    CASE WHEN nxt IS NULL THEN path
-         |         ELSE list_append(path, CAST(nxt AS VARCHAR)) END AS path
-         |  FROM (
-         |    SELECT walk_id, path,
-         |      CASE WHEN nbrs IS NULL OR len(nbrs) = 0 THEN NULL
-         |           ELSE nbrs[LEAST(len(list_filter(
-         |             [list_sum(w[1:i]) for i in range(1, len(w) + 1)],
-         |             y -> y <= (h16 / 65536.0) * list_sum(w))) + 1, len(nbrs))]
-         |      END AS nxt
-         |    FROM (
-         |      SELECT s.walk_id, s.path, nb.nbrs, nb.wts AS w, ($h) AS h16
-         |      FROM s${k - 1} s LEFT JOIN nb ON nb.src = s.cur)))""".stripMargin
-    }.mkString(",\n")
-    s"""WITH e AS MATERIALIZED ($NE),
-       |ew AS MATERIALIZED (SELECT src, dst,
-       |    CAST((src * 7 + dst * 3) % 5 + 1 AS DOUBLE) AS w FROM e),
-       |nb AS MATERIALIZED (SELECT src,
-       |    list(dst ORDER BY $ord) AS nbrs,
-       |    list(w ORDER BY $ord) AS wts
-       |  FROM ew GROUP BY src),
-       |s0 AS MATERIALIZED (SELECT CAST(n_nationkey AS VARCHAR) || '#' || CAST(t.k AS VARCHAR) AS walk_id,
-       |    n_nationkey AS cur, [CAST(n_nationkey AS VARCHAR)] AS path
-       |  FROM nation, range(0, $walksPerVertex) t(k)),
-       |$stepCtes
-       |SELECT walk_id, array_to_string(path, ',') AS random_walk FROM s$steps""".stripMargin
-  }
-
-  private def randomWalksSql(steps: Int, walksPerVertex: Int, seed: Long): String = {
-    val stepCtes = (1 to steps).map { k =>
-      val h = duckHex4(s"md5(s.walk_id || '|$k|${seed + 1}')")
-      s"""s$k AS MATERIALIZED (
-         |  SELECT walk_id, nxt AS cur,
-         |    CASE WHEN nxt IS NULL THEN path
-         |         ELSE list_append(path, CAST(nxt AS VARCHAR)) END AS path
-         |  FROM (
-         |    SELECT s.walk_id, s.path,
-         |      CASE WHEN nb.nbrs IS NULL OR len(nb.nbrs) = 0 THEN NULL
-         |           ELSE nb.nbrs[(($h) % len(nb.nbrs)) + 1] END AS nxt
-         |    FROM s${k - 1} s LEFT JOIN nb ON nb.src = s.cur))""".stripMargin
-    }.mkString(",\n")
-    s"""WITH e AS MATERIALIZED ($NE),
-       |nb AS MATERIALIZED (SELECT src, list(dst
-       |    ORDER BY substr(md5(CAST(src AS VARCHAR) || '|' || CAST(dst AS VARCHAR) || '|$seed'), 1, 15), dst) AS nbrs
-       |  FROM e GROUP BY src),
-       |s0 AS MATERIALIZED (SELECT CAST(n_nationkey AS VARCHAR) || '#' || CAST(t.k AS VARCHAR) AS walk_id,
-       |    n_nationkey AS cur, [CAST(n_nationkey AS VARCHAR)] AS path
-       |  FROM nation, range(0, $walksPerVertex) t(k)),
-       |$stepCtes
-       |SELECT walk_id, array_to_string(path, ',') AS random_walk FROM s$steps""".stripMargin
-  }
-
-  def oracleSql: Map[String, String] = Map(
-    "g_out_degrees" ->
-      """SELECT 'c' || CAST(o_custkey AS VARCHAR) AS id, count(*) AS out_degree
-        |FROM orders GROUP BY 1""".stripMargin,
-    "g_in_degrees" ->
-      """SELECT 'p' || CAST(l_partkey AS VARCHAR) AS id, count(*) AS in_degree
-        |FROM lineitem GROUP BY 1""".stripMargin,
-    "g_degrees" ->
-      """WITH e AS (SELECT 'c' || CAST(o_custkey AS VARCHAR) AS s,
-        |                  'o' || CAST(o_orderkey AS VARCHAR) AS d FROM orders),
-        |b AS (SELECT s AS id FROM e UNION ALL SELECT d FROM e)
-        |SELECT id, count(*) AS degree FROM b GROUP BY 1""".stripMargin,
-    "g_triplets" ->
-      s"""WITH e AS ($NE)
-         |SELECT e.src AS src_id, n.n_name AS src_name, e.dst AS dst_id
-         |FROM e JOIN nation n ON n.n_nationkey = e.src""".stripMargin,
-    "g_filter_vertices" ->
-      """SELECT 'c' || CAST(o_custkey AS VARCHAR) AS src,
-        |       'o' || CAST(o_orderkey AS VARCHAR) AS dst
-        |FROM orders JOIN customer ON c_custkey = o_custkey
-        |WHERE c_acctbal > 5000""".stripMargin,
-    "g_motif_mutual" ->
-      s"""WITH e AS ($NE)
-         |SELECT e1.src AS a_id, e1.dst AS b_id
-         |FROM e e1 JOIN e e2 ON e2.src = e1.dst AND e2.dst = e1.src""".stripMargin,
-    "g_motif_bidi" ->
-      s"""WITH e AS ($NE)
-         |SELECT e1.src AS a_id, e1.dst AS b_id
-         |FROM e e1 JOIN e e2 ON e2.src = e1.dst AND e2.dst = e1.src""".stripMargin,
-    "g_motif_undirected" ->
-      s"""WITH e AS ($NE)
-         |SELECT src AS a_id, dst AS b_id, 'fwd' AS _direction FROM e
-         |UNION ALL
-         |SELECT dst, src, 'rev' FROM e""".stripMargin,
-    "g_motif_varlen" ->
-      s"""WITH e AS ($NE)
-         |SELECT src AS a_id, dst AS b_id, 1 AS _hop FROM e
-         |UNION ALL
-         |SELECT e1.src, e2.dst, 2 FROM e e1 JOIN e e2 ON e2.src = e1.dst""".stripMargin,
-    "g_motif_fixed2" ->
-      s"""WITH e AS ($NE)
-         |SELECT e1.src AS a_id, e2.dst AS b_id
-         |FROM e e1 JOIN e e2 ON e2.src = e1.dst""".stripMargin,
-    "g_motif_undirected_fixed" ->
-      s"""WITH e AS ($NE),
-         |u AS (SELECT src AS x, dst AS y, 'fwd' AS d FROM e
-         |      UNION ALL SELECT dst, src, 'rev' FROM e)
-         |SELECT u1.x AS a_id, u1.y AS mid_id, u2.y AS b_id,
-         |       u1.d || ';' || u2.d AS _direction
-         |FROM u u1 JOIN u u2 ON u2.x = u1.y""".stripMargin,
-    "g_type_degrees" ->
-      """SELECT 'c' || CAST(o_custkey AS VARCHAR) AS id,
-        |  CAST(SUM(CASE WHEN o_orderstatus = 'F' THEN 1 ELSE 0 END) AS INT) AS deg_f,
-        |  CAST(SUM(CASE WHEN o_orderstatus = 'O' THEN 1 ELSE 0 END) AS INT) AS deg_o,
-        |  CAST(SUM(CASE WHEN o_orderstatus = 'P' THEN 1 ELSE 0 END) AS INT) AS deg_p
-        |FROM orders GROUP BY 1""".stripMargin,
-    "g_sampling_convolution" ->
-      """WITH ev AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
-        |e0 AS (SELECT ev.vec_id, ev.v,
-        |    (SELECT x.vec_id FROM ev x WHERE x.vec_id = ev.vec_id + 1) AS n1,
-        |    (SELECT x.vec_id FROM ev x WHERE x.vec_id = ev.vec_id + 2) AS n2
-        |  FROM ev),
-        |nb AS (SELECT e0.vec_id, e0.v, a.v AS v1, b.v AS v2
-        |  FROM e0 LEFT JOIN e0 a ON a.vec_id = e0.n1
-        |  LEFT JOIN e0 b ON b.vec_id = e0.n2),
-        |m AS (SELECT vec_id, v,
-        |  CASE WHEN v1 IS NULL AND v2 IS NULL THEN NULL
-        |       WHEN v2 IS NULL THEN v1
-        |       ELSE list_transform(range(1, 65), i -> (v1[i] + v2[i]) / 2.0)
-        |  END AS mean FROM nb)
-        |SELECT vec_id, CAST(128 AS INT) AS conv_dim,
-        |  ROUND(sqrt(list_dot_product(v, v) +
-        |    COALESCE(list_dot_product(mean, mean), 0.0)), 4) AS conv_norm
-        |FROM m""".stripMargin,
-    "g_agg_neighbors" ->
-      s"""WITH e AS ($NE)
-         |SELECT src AS id, 1 AS hop, count(*) AS n, CAST(SUM(dst) AS BIGINT) AS sum_nbr
-         |FROM e GROUP BY src
-         |UNION ALL
-         |SELECT e1.src, 2, count(*), CAST(SUM(e2.dst) AS BIGINT)
-         |FROM e e1 JOIN e e2 ON e2.src = e1.dst
-         |WHERE e2.dst <> e1.src
-         |GROUP BY e1.src""".stripMargin,
-    "g_agg_paths" ->
-      s"""WITH e AS ($NE),
-         |n AS (SELECT n_nationkey AS k, n_name AS nm FROM nation)
-         |SELECT CAST(e.src AS VARCHAR) || ',' || CAST(e.dst AS VARCHAR) AS path,
-         |       n0.nm || ',' || n1.nm AS names, CAST(e.dst AS INT) AS id, 1 AS hop
-         |FROM e JOIN n n0 ON n0.k = e.src JOIN n n1 ON n1.k = e.dst
-         |WHERE e.src = 0 AND e.dst = 3
-         |UNION ALL
-         |SELECT CAST(e1.src AS VARCHAR) || ',' || CAST(e1.dst AS VARCHAR)
-         |         || ',' || CAST(e2.dst AS VARCHAR),
-         |       n0.nm || ',' || n1.nm || ',' || n2.nm, CAST(e2.dst AS INT), 2
-         |FROM e e1 JOIN e e2 ON e2.src = e1.dst
-         |JOIN n n0 ON n0.k = e1.src JOIN n n1 ON n1.k = e1.dst
-         |JOIN n n2 ON n2.k = e2.dst
-         |WHERE e1.src = 0 AND e1.dst <> 3 AND e2.dst = 3""".stripMargin,
-    "p_bipartite_projection" ->
-      """WITH d AS (SELECT DISTINCT l_suppkey AS a, l_partkey AS b FROM lineitem)
-        |SELECT x.a AS src, y.a AS dst, count(*) AS weight
-        |FROM d x JOIN d y ON x.b = y.b AND x.a < y.a
-        |GROUP BY 1, 2""".stripMargin,
-    "p_bipartite_capped" ->
-      """WITH d AS MATERIALIZED (
-        |  SELECT DISTINCT l_suppkey AS a, l_partkey AS b FROM lineitem),
-        |f AS MATERIALIZED (
-        |  SELECT a, b FROM d
-        |  WHERE b IN (SELECT b FROM d GROUP BY b HAVING count(*) <= 20))
-        |SELECT x.a AS src, y.a AS dst, count(*) AS weight
-        |FROM f x JOIN f y ON x.b = y.b AND x.a < y.a
-        |GROUP BY 1, 2""".stripMargin,
-    "m_media_meta" ->
-      // recompute the fixture's embedded header fields analytically — the
-      // Spark side must PARSE them back out of the payload bytes
-      """SELECT doc_id,
-        |  CASE CAST(doc_id % 3 AS INT) WHEN 0 THEN 'png' WHEN 1 THEN 'jpeg'
-        |    ELSE 'unknown' END AS format,
-        |  CAST(octet_length(encode(text)) + CASE CAST(doc_id % 3 AS INT)
-        |    WHEN 0 THEN 33 WHEN 1 THEN 49 ELSE 0 END AS BIGINT) AS n_bytes,
-        |  CAST(CASE WHEN doc_id % 3 = 2 THEN NULL
-        |    ELSE doc_id % 800 + 16 END AS INT) AS width,
-        |  CAST(CASE WHEN doc_id % 3 = 2 THEN NULL
-        |    ELSE (doc_id * 7) % 600 + 16 END AS INT) AS height
-        |FROM documents""".stripMargin,
-    "m_image_decode" ->
-      // predict the decoded stats of the two-tone split PNG analytically:
-      // the Spark side must run a REAL encode+decode round trip (JDK
-      // ImageIO) to reproduce these exact integer channel sums
-      """WITH p AS (SELECT doc_id,
-        |    doc_id % 24 + 8 AS w, (doc_id * 7) % 24 + 8 AS h,
-        |    (doc_id % 24 + 9) // 2 AS wl,
-        |    doc_id % 256 AS ra, (doc_id * 3) % 256 AS ga, (doc_id * 7) % 256 AS ba
-        |  FROM documents)
-        |SELECT doc_id, CAST(w AS INT) AS width, CAST(h AS INT) AS height,
-        |  CAST(h * (wl * ra + (w - wl) * (255 - ra)) AS BIGINT) AS sum_r,
-        |  CAST(h * (wl * ga + (w - wl) * (255 - ga)) AS BIGINT) AS sum_g,
-        |  CAST(h * (wl * ba + (w - wl) * (255 - ba)) AS BIGINT) AS sum_b
-        |FROM p""".stripMargin,
-    // all 64 aHash bits predicted analytically — the Spark side must run
-    // the REAL decode + block-luma integer rule to reproduce them
-    "m_image_ahash" ->
-      s"""WITH $AHASH_BITS
-         |SELECT doc_id, ahash FROM hs""".stripMargin,
-    "m_image_dhash" ->
-      s"""WITH $DHASH_BITS
-         |SELECT doc_id, dhash FROM hs""".stripMargin,
-    "m_image_dedup" ->
-      s"""WITH $AHASH_BITS
-         |SELECT doc_id, ahash,
-         |  MIN(doc_id) OVER (PARTITION BY ahash) AS keep_id FROM hs""".stripMargin,
-    "m_audio_decode" ->
-      // predict the decoded PCM aggregates analytically: the Spark side
-      // must run a REAL WAV write+parse round trip to reproduce them
-      """WITH p AS (SELECT doc_id, doc_id % 100 + 50 AS n FROM documents),
-        |s AS (SELECT p.doc_id, abs(((p.doc_id*31 + t.i*7919) % 65536) - 32768) AS a
-        |      FROM p JOIN range(0, 150) t(i) ON t.i < p.n)
-        |SELECT doc_id, CAST(16000 AS INT) AS sample_rate, CAST(1 AS INT) AS channels,
-        |  CAST(16 AS INT) AS bits, CAST(count(*) AS BIGINT) AS n_frames,
-        |  CAST(sum(a) AS BIGINT) AS sum_abs, CAST(max(a) AS INT) AS peak
-        |FROM s GROUP BY doc_id""".stripMargin,
-    "m_video_demux" ->
-      // predict each demuxed frame's length and byte sum analytically:
-      // the Spark side must walk the actual RIFF chunk structure
-      """WITH p AS (SELECT doc_id, doc_id % 5 + 2 AS nf, doc_id % 20 + 4 AS base
-        |  FROM documents),
-        |fr AS (SELECT p.doc_id, t.i AS frame_idx, p.base + t.i AS len
-        |       FROM p JOIN range(0, 7) t(i) ON t.i < p.nf),
-        |b AS (SELECT fr.doc_id, fr.frame_idx, fr.len,
-        |        (fr.doc_id*7 + fr.frame_idx*13 + u.j) % 256 AS v
-        |      FROM fr JOIN range(0, 31) u(j) ON u.j < fr.len)
-        |SELECT doc_id, CAST(frame_idx AS INT) AS frame_idx,
-        |  CAST(len AS INT) AS frame_len, CAST(sum(v) AS BIGINT) AS byte_sum
-        |FROM b GROUP BY doc_id, frame_idx, len""".stripMargin,
-    "m_frame_sample" ->
-      // byte-based framing: slice hex(utf8 bytes) at 2-hex-chars-per-byte
-      // offsets, so both sides frame the same octets regardless of
-      // multi-byte characters
-      """WITH f AS (SELECT doc_id,
-        |  [{'idx': i, 'h': lower(substr(lower(hex(encode(text))), CAST(i * 128 + 1 AS INT), 128))}
-        |   for i in range(0, CAST(ceil(octet_length(encode(text)) / 64.0) AS BIGINT))
-        |   if i % 4 = 0] AS frames
-        |  FROM documents),
-        |u AS (SELECT doc_id, unnest(frames) AS fr FROM f)
-        |SELECT doc_id, CAST(fr.idx AS INT) AS frame_idx, fr.h AS frame_hex FROM u""".stripMargin,
-    "g_motif_open_triangle" ->
-      s"""WITH e AS ($NE)
-         |SELECT e1.src AS a_id, e1.dst AS b_id, e2.dst AS c_id
-         |FROM e e1 JOIN e e2 ON e2.src = e1.dst
-         |WHERE NOT EXISTS (SELECT 1 FROM e e3 WHERE e3.src = e1.src AND e3.dst = e2.dst)""".stripMargin,
-    "g_aggregate_messages" ->
-      """WITH m AS (
-        |  SELECT 'c' || CAST(o_custkey AS VARCHAR) AS id, o_totalprice AS v FROM orders
-        |  UNION ALL
-        |  SELECT 'o' || CAST(o_orderkey AS VARCHAR), c_acctbal
-        |  FROM orders JOIN customer ON c_custkey = o_custkey)
-        |SELECT id, ROUND(SUM(v), 2) AS total FROM m GROUP BY id""".stripMargin,
-    "g_connected_components" ->
-      """SELECT 'c' || CAST(c_custkey AS VARCHAR) AS id,
-        |       'c' || CAST(c_custkey AS VARCHAR) AS rep FROM customer
-        |UNION ALL
-        |SELECT 'o' || CAST(o_orderkey AS VARCHAR),
-        |       'c' || CAST(o_custkey AS VARCHAR) FROM orders""".stripMargin,
-    "g_graph_io" ->
-      s"""WITH e AS ($NE),
-         |d AS (SELECT id, CAST(count(*) AS BIGINT) AS deg FROM (
-         |   SELECT src AS id FROM e UNION ALL SELECT dst FROM e) GROUP BY id)
-         |SELECT id, deg AS deg_pq, deg AS deg_ldbc, deg AS deg_txt FROM d""".stripMargin,
-    "g_cc_nations" ->
-      s"""WITH RECURSIVE e AS ($NE),
-         |u AS (SELECT src AS s, dst AS d FROM e UNION SELECT dst, src FROM e),
-         |r AS (SELECT n_nationkey AS id, CAST(n_nationkey AS BIGINT) AS comp FROM nation
-         |      UNION SELECT u.d, r.comp FROM r JOIN u ON u.s = r.id)
-         |SELECT id, MIN(comp) AS component FROM r GROUP BY id""".stripMargin,
-    "g_cc_rc" ->
-      s"""WITH RECURSIVE e AS ($NE),
-         |u AS (SELECT src AS s, dst AS d FROM e UNION SELECT dst, src FROM e),
-         |r AS (SELECT n_nationkey AS id, CAST(n_nationkey AS BIGINT) AS comp FROM nation
-         |      UNION SELECT u.d, r.comp FROM r JOIN u ON u.s = r.id)
-         |SELECT id, MIN(comp) AS component FROM r GROUP BY id""".stripMargin,
-    "g_scc_nations" ->
-      s"""WITH RECURSIVE e AS ($NE),
-         |r AS (SELECT src AS s, dst AS d FROM e
-         |      UNION SELECT r.s, e.dst FROM r JOIN e ON e.src = r.d)
-         |SELECT n.n_nationkey AS id,
-         |  CAST(COALESCE(MAX(CASE WHEN r2.s IS NOT NULL THEN r.d END), n.n_nationkey) AS BIGINT) AS component
-         |FROM nation n
-         |LEFT JOIN r ON r.s = n.n_nationkey
-         |LEFT JOIN r r2 ON r2.s = r.d AND r2.d = n.n_nationkey
-         |GROUP BY n.n_nationkey""".stripMargin,
-    "g_shortest_paths" ->
-      s"""WITH RECURSIVE e AS ($NE),
-         |b AS (SELECT 0 AS id, 0 AS d
-         |      UNION SELECT e.src, b.d + 1 FROM b JOIN e ON e.dst = b.id WHERE b.d < 50)
-         |SELECT n_nationkey AS id, CAST(MIN(b.d) AS INT) AS dist
-         |FROM nation LEFT JOIN b ON b.id = n_nationkey GROUP BY 1""".stripMargin,
-    // closest seed by (hop distance, seed id): the walk follows the same
-    // direction convention as g_shortest_paths (dist from v TO the seed)
-    "g_voronoi" ->
-      s"""WITH RECURSIVE e AS ($NE),
-         |sd AS (SELECT unnest([0, 12]) AS s),
-         |b AS (SELECT s, s AS id, 0 AS d FROM sd
-         |  UNION SELECT b.s, e.src, b.d + 1 FROM b
-         |    JOIN e ON e.dst = b.id WHERE b.d < 50),
-         |m AS (SELECT id, s, MIN(d) AS d FROM b GROUP BY 1, 2),
-         |a AS (SELECT id, s, d,
-         |  ROW_NUMBER() OVER (PARTITION BY id ORDER BY d, s) AS rn FROM m)
-         |SELECT n.n_nationkey AS id, a.s AS seed, CAST(a.d AS INT) AS dist
-         |FROM nation n LEFT JOIN a ON a.id = n.n_nationkey AND a.rn = 1""".stripMargin,
-    "g_katz" -> katzSql(8, 0.05, 1.0),
-    "g_eigenvector" -> eigenvectorSql(10),
-    "g_eigenvector_weighted" -> eigenvectorSql(10, weighted = true),
-    // Cycle-rule MSF: an edge joins the unique MSF iff its endpoints are
-    // NOT connected using only strictly smaller-keyed edges; k is the
-    // rank of the engine's (w, a, b) total key order, so "k smaller"
-    // IS "key smaller". Deliberately a different algorithm family from
-    // both engine paths (Borůvka distributed, Kruskal tail).
-    "g_mst" ->
-      """WITH RECURSIVE base AS (
-        |  SELECT LEAST(c.c_nationkey, s.s_nationkey) AS a,
-        |         GREATEST(c.c_nationkey, s.s_nationkey) AS b
-        |  FROM lineitem l
-        |  JOIN orders o ON l.l_orderkey = o.o_orderkey
-        |  JOIN customer c ON o.o_custkey = c.c_custkey
-        |  JOIN supplier s ON l.l_suppkey = s.s_suppkey
-        |  WHERE c.c_nationkey <> s.s_nationkey),
-        |ek AS (SELECT a, b, CAST(COUNT(*) AS DOUBLE) AS w,
-        |    ROW_NUMBER() OVER (ORDER BY COUNT(*), a, b) AS k
-        |  FROM base GROUP BY a, b),
-        |reach AS (
-        |  SELECT k AS qk, a AS v FROM ek
-        |  UNION
-        |  SELECT r.qk, CASE WHEN x.a = r.v THEN x.b ELSE x.a END AS v
-        |  FROM reach r JOIN ek x ON (x.a = r.v OR x.b = r.v) AND x.k < r.qk)
-        |SELECT e.a AS src, e.b AS dst, e.w AS weight FROM ek e
-        |WHERE NOT EXISTS (SELECT 1 FROM reach r WHERE r.qk = e.k AND r.v = e.b)""".stripMargin,
-    "g_hits" -> hitsSql(5),
-    "g_salsa" -> salsaSql(5),
-    "g_influence_seeds" -> influenceSql(5, 0.1),
-    "g_shortest_paths_weighted" ->
-      s"""WITH RECURSIVE e0 AS ($NE),
-         |e AS (SELECT src, dst, (src * 7 + dst * 3) % 5 + 1 AS w FROM e0),
-         |b AS (SELECT 0 AS id, 0 AS d
-         |      UNION SELECT e.src, b.d + e.w FROM b JOIN e ON e.dst = b.id WHERE b.d < 150)
-         |SELECT n_nationkey AS id, CAST(MIN(b.d) AS DOUBLE) AS dist
-         |FROM nation LEFT JOIN b ON b.id = n_nationkey GROUP BY 1""".stripMargin,
-    "g_pagerank" -> pagerankSql(10),
-    "g_pagerank_tol" -> pagerankTolSql(0.001, 40),
-    "g_sample_subgraph" -> {
-      val h = duckHex4("md5('7|' || CAST(n_nationkey AS VARCHAR))")
-      s"""WITH e AS ($NE),
-         |keep AS (SELECT n_nationkey AS id FROM nation WHERE ($h) < 32768),
-         |se AS (SELECT e.src, e.dst FROM e
-         |  JOIN keep a ON a.id = e.src JOIN keep b ON b.id = e.dst),
-         |d AS (SELECT id, count(*) AS deg FROM (
-         |  SELECT src AS id FROM se UNION ALL SELECT dst FROM se) GROUP BY id)
-         |SELECT keep.id, COALESCE(deg, 0) AS degree
-         |FROM keep LEFT JOIN d ON d.id = keep.id""".stripMargin
-    },
-    "g_graph_stats" ->
-      """WITH v AS (SELECT 'c' || CAST(c_custkey AS VARCHAR) AS id FROM customer
-        |  UNION ALL SELECT 'o' || CAST(o_orderkey AS VARCHAR) FROM orders),
-        |e AS (SELECT 'c' || CAST(o_custkey AS VARCHAR) AS src,
-        |  'o' || CAST(o_orderkey AS VARCHAR) AS dst FROM orders)
-        |SELECT (SELECT count(*) FROM v) AS n_vertices,
-        |  (SELECT count(*) FROM e) AS n_edges,
-        |  (SELECT count(*) FROM (SELECT DISTINCT src, dst FROM e)) AS n_distinct_edges,
-        |  (SELECT count(*) FROM e WHERE src = dst) AS n_self_loops,
-        |  (SELECT MAX(c) FROM (SELECT count(*) AS c FROM e GROUP BY src)) AS max_out_degree,
-        |  (SELECT MAX(c) FROM (SELECT count(*) AS c FROM e GROUP BY dst)) AS max_in_degree,
-        |  (SELECT count(*) FROM v WHERE id NOT IN (SELECT src FROM e)
-        |     AND id NOT IN (SELECT dst FROM e)) AS n_isolated,
-        |  ROUND((SELECT count(*) FROM e) * 1.0 /
-        |    (SELECT count(*) FROM v), 5) AS avg_out_degree""".stripMargin,
-    "g_pagerank_weighted" -> pagerankWeightedSql(10),
-    "g_rmat" -> rmatSql,
-    // same oracle: the DSv2 provider must produce the identical graph
-    "g_rmat_source" -> rmatSql,
-    // naive id-ordered enumeration over the canonical undirected trade
-    // edges — deliberately NOT the engine's degree-ordered orientation
-    "g_triangle_list" ->
-      s"""WITH e AS ($NE),
-         |ue AS (SELECT DISTINCT LEAST(src, dst) AS a, GREATEST(src, dst) AS b
-         |  FROM e WHERE src <> dst)
-         |SELECT e1.a AS v1, e1.b AS v2, e2.b AS v3
-         |FROM ue e1
-         |JOIN ue e2 ON e2.a = e1.a AND e2.b > e1.b
-         |JOIN ue e12 ON e12.a = e1.b AND e12.b = e2.b""".stripMargin,
-    "g_cliques4" ->
-      s"""WITH e AS ($NE),
-         |ue AS (SELECT DISTINCT LEAST(src, dst) AS a, GREATEST(src, dst) AS b
-         |  FROM e WHERE src <> dst)
-         |SELECT e1.a AS v1, e1.b AS v2, e2.b AS v3, e3.b AS v4
-         |FROM ue e1
-         |JOIN ue e2 ON e2.a = e1.a AND e2.b > e1.b
-         |JOIN ue e12 ON e12.a = e1.b AND e12.b = e2.b
-         |JOIN ue e3 ON e3.a = e1.a AND e3.b > e2.b
-         |JOIN ue e13 ON e13.a = e1.b AND e13.b = e3.b
-         |JOIN ue e23 ON e23.a = e2.b AND e23.b = e3.b""".stripMargin,
-    "g_graph_dot" ->
-      s"""WITH e AS ($NE)
-         |SELECT 0 AS section, '' AS sort_key, 'digraph trade {' AS line
-         |UNION ALL
-         |SELECT 1, CAST(n_nationkey AS VARCHAR),
-         |  '  "' || n_nationkey || '";' FROM nation
-         |UNION ALL
-         |SELECT 2, src || ' ' || dst,
-         |  '  "' || src || '" -> "' || dst || '";' FROM e
-         |UNION ALL
-         |SELECT 3, '', '}'""".stripMargin,
-    "g_graphml" ->
-      s"""WITH e AS ($NE)
-         |SELECT 0 AS section, '0' AS sort_key,
-         |  '<?xml version="1.0" encoding="UTF-8"?>' AS line
-         |UNION ALL
-         |SELECT 0, '1', '<graphml xmlns="http://graphml.graphdrawing.org/xmlns">'
-         |UNION ALL
-         |SELECT 0, '2', '  <graph id="G" edgedefault="directed">'
-         |UNION ALL
-         |SELECT 1, CAST(n_nationkey AS VARCHAR),
-         |  '    <node id="' || n_nationkey || '"/>' FROM nation
-         |UNION ALL
-         |SELECT 2, src || ' ' || dst,
-         |  '    <edge source="' || src || '" target="' || dst || '"/>' FROM e
-         |UNION ALL
-         |SELECT 3, '0', '  </graph>'
-         |UNION ALL
-         |SELECT 3, '1', '</graphml>'""".stripMargin,
-    "g_neg_sampling" -> {
-      val h = duckHex15("md5('42|' || CAST(r.id AS VARCHAR) || '|' || CAST(j.i AS VARCHAR))")
-      s"""WITH cv AS (SELECT n_nationkey AS id FROM nation),
-         |ce AS (SELECT DISTINCT src, dst FROM (
-         |    SELECT id AS src, (id + 7) % 25 AS dst FROM cv
-         |    UNION ALL
-         |    SELECT id, (3 * id + 1) % 25 FROM cv WHERE id % 3 = 0)
-         |  WHERE src <> dst),
-         |r AS (SELECT id, ROW_NUMBER() OVER (ORDER BY id) - 1 AS rnk FROM cv),
-         |tot AS (SELECT COUNT(*) AS n FROM cv),
-         |probes AS (SELECT r.id AS src, j.i AS draw,
-         |    ($h) % tot.n AS cr
-         |  FROM r CROSS JOIN tot CROSS JOIN range(1, 11) j(i)),
-         |cand AS (SELECT p.src, p.draw, r2.id AS dst
-         |  FROM probes p JOIN r r2 ON r2.rnk = p.cr WHERE r2.id <> p.src),
-         |rej AS (SELECT src, dst FROM ce UNION SELECT dst, src FROM ce),
-         |ne AS (SELECT c.src, c.dst, MIN(c.draw) AS draw FROM cand c
-         |  LEFT JOIN rej ON rej.src = c.src AND rej.dst = c.dst
-         |  WHERE rej.src IS NULL GROUP BY 1, 2)
-         |SELECT src, dst, CAST(draw AS INT) AS draw FROM (
-         |  SELECT src, dst, draw,
-         |    ROW_NUMBER() OVER (PARTITION BY src ORDER BY draw, dst) AS rn FROM ne)
-         |WHERE rn <= 3""".stripMargin
-    },
-    // live-edge replay: coin < p·2^60 per edge, then BFS min level from
-    // the seed set over the surviving edges; the _dist row forces the
-    // distributed rounds on the same replay
-    "g_ic_spread" -> icSpreadSql,
-    "g_ic_spread_dist" -> icSpreadSql,
-    // (vertex, time) state walk — UNION dedups, edge times are 1..5 so
-    // the recursion is finite; arrival = min over time-respecting paths;
-    // the _dist row forces the label-correcting rounds on the same oracle
-    "g_temporal_bfs" -> temporalBfsSql,
-    "g_temporal_bfs_dist" -> temporalBfsSql,
-    // stateless stream-static join: finite replay == the batch rangeJoin
-    "e_stream_range_join" -> rangeJoinSql,
-    "e_range_join" -> rangeJoinSql,
-    "g_betweenness" -> betweennessSql,
-    // Pair-counting edge betweenness: edge (u,v) lies on an s→t shortest
-    // path iff d(s,u)+1+d(v,t) = d(s,t), contributing σ_su·σ_vt/σ_st —
-    // deliberately NOT the engine's Brandes dependency recursion
-    "g_edge_betweenness" ->
-      s"""WITH RECURSIVE $CIRC_DIST_SIGMA,
-         |eb AS (SELECT x.src, x.dst, SUM(su.sig * vt.sig / st.sig) AS b
-         |  FROM ce x
-         |  JOIN cdist dsu ON dsu.v = x.src
-         |  JOIN csig su ON su.s = dsu.s AND su.v = x.src
-         |  JOIN cdist dvt ON dvt.s = x.dst
-         |  JOIN csig vt ON vt.s = x.dst AND vt.v = dvt.v
-         |  JOIN cdist dst2 ON dst2.s = dsu.s AND dst2.v = dvt.v
-         |  JOIN csig st ON st.s = dsu.s AND st.v = dvt.v
-         |  WHERE dsu.d + 1 + dvt.d = dst2.d
-         |  GROUP BY x.src, x.dst)
-         |SELECT e.src, e.dst, ROUND(COALESCE(eb.b, 0.0), 5) AS edge_betweenness
-         |FROM ce e LEFT JOIN eb ON eb.src = e.src AND eb.dst = e.dst""".stripMargin,
-    "g_closeness" -> closenessSql,
-    // weighted Brandes identity over the weighted circulant: cwalk dedups
-    // (s, v, d) triples (weights 1..5 bound d <= 130 so the recursion is
-    // finite without a hop column); cspw enumerates DAG paths exactly
-    "g_betweenness_weighted" ->
-      s"""WITH RECURSIVE $CIRC_DIST_W,
-        |cspw AS (SELECT id AS s, id AS v, CAST(0 AS DOUBLE) AS d FROM cv
-        |  UNION ALL SELECT p.s, ce.dst, p.d + ce.w FROM cspw p
-        |    JOIN ce ON ce.src = p.v
-        |    JOIN cdistw dd ON dd.s = p.s AND dd.v = ce.dst AND dd.d = p.d + ce.w),
-        |csigw AS (SELECT s, v, CAST(COUNT(*) AS DOUBLE) AS sig
-        |  FROM cspw GROUP BY s, v),
-        |btw AS (SELECT sv.v AS id, SUM(sv.sig * vt.sig / st.sig) AS b
-        |  FROM csigw sv
-        |  JOIN csigw vt ON vt.s = sv.v
-        |  JOIN csigw st ON st.s = sv.s AND st.v = vt.v
-        |  JOIN cdistw d1 ON d1.s = sv.s AND d1.v = sv.v
-        |  JOIN cdistw d2 ON d2.s = vt.s AND d2.v = vt.v
-        |  JOIN cdistw d3 ON d3.s = st.s AND d3.v = st.v
-        |  WHERE sv.v <> sv.s AND sv.v <> vt.v AND sv.s <> vt.v
-        |    AND d1.d + d2.d = d3.d
-        |  GROUP BY 1)
-        |SELECT n_nationkey AS id, ROUND(COALESCE(b, 0), 5) AS betweenness
-        |FROM nation LEFT JOIN btw ON btw.id = n_nationkey""".stripMargin,
-    "g_betweenness_sampled" ->
-      s"""WITH RECURSIVE $CIRC_DIST_SIGMA,
-         |lm AS (SELECT id FROM cv ORDER BY md5(CAST(id AS VARCHAR)), id LIMIT 9),
-         |btw AS (SELECT sv.v AS id, SUM(sv.sig * vt.sig / st.sig) AS b
-         |  FROM csig sv
-         |  JOIN lm ON lm.id = sv.s
-         |  JOIN csig vt ON vt.s = sv.v
-         |  JOIN csig st ON st.s = sv.s AND st.v = vt.v
-         |  JOIN cdist d1 ON d1.s = sv.s AND d1.v = sv.v
-         |  JOIN cdist d2 ON d2.s = vt.s AND d2.v = vt.v
-         |  JOIN cdist d3 ON d3.s = st.s AND d3.v = st.v
-         |  WHERE sv.v <> sv.s AND sv.v <> vt.v AND sv.s <> vt.v
-         |    AND d1.d + d2.d = d3.d
-         |  GROUP BY 1)
-         |SELECT n_nationkey AS id,
-         |  ROUND(COALESCE(b, 0) * 25.0 / 9.0, 5) AS betweenness
-         |FROM nation LEFT JOIN btw ON btw.id = n_nationkey""".stripMargin,
-    // landmark estimator: same md5-ordered draw as the engine, distances
-    // TO the landmarks (cdist.s = scored vertex, cdist.v = landmark),
-    // n/k = 25/9 scale-up on the reachable count and both sums
-    "g_closeness_sampled" ->
-      s"""WITH RECURSIVE $CIRC_DIST_SIGMA,
-         |lm AS (SELECT id FROM cv ORDER BY md5(CAST(id AS VARCHAR)), id LIMIT 9),
-         |agg AS (SELECT c.s AS id, COUNT(*) AS r, SUM(d) AS total, SUM(1.0 / d) AS h
-         |  FROM cdist c JOIN lm ON lm.id = c.v WHERE c.d > 0 GROUP BY 1)
-         |SELECT n_nationkey AS id,
-         |  ROUND(COALESCE((25.0 / 9.0) * r / 24.0 * r / total, 0), 5) AS closeness,
-         |  ROUND(COALESCE((25.0 / 9.0) * h, 0), 5) AS harmonic
-         |FROM nation LEFT JOIN agg ON agg.id = n_nationkey""".stripMargin,
-    "g_eccentricity_sampled" ->
-      s"""WITH RECURSIVE $CIRC_DIST_SIGMA,
-         |lm AS (SELECT id FROM cv ORDER BY md5(CAST(id AS VARCHAR)), id LIMIT 9),
-         |ec AS (SELECT c.s AS id, MAX(d) AS m FROM cdist c JOIN lm ON lm.id = c.v GROUP BY 1)
-         |SELECT n_nationkey AS id, CAST(COALESCE(m, 0) AS INT) AS eccentricity
-         |FROM nation LEFT JOIN ec ON ec.id = n_nationkey""".stripMargin,
-    "g_closeness_weighted" ->
-      s"""WITH RECURSIVE $CIRC_DIST_W,
-         |agg AS (SELECT s, COUNT(*) AS r, SUM(d) AS total, SUM(1.0 / d) AS h
-         |  FROM cdistw WHERE d > 0 GROUP BY s)
-         |SELECT n_nationkey AS id,
-         |  ROUND(COALESCE((r * 1.0 / 24.0) * r / total, 0), 5) AS closeness,
-         |  ROUND(COALESCE(h, 0), 5) AS harmonic
-         |FROM nation LEFT JOIN agg ON agg.s = n_nationkey""".stripMargin,
-    "g_eccentricity_weighted" ->
-      s"""WITH RECURSIVE $CIRC_DIST_W,
-         |ec AS (SELECT s, MAX(d) AS m FROM cdistw GROUP BY s)
-         |SELECT n_nationkey AS id,
-         |  ROUND(COALESCE(m, 0), 5) AS eccentricity
-         |FROM nation LEFT JOIN ec ON ec.s = n_nationkey""".stripMargin,
-    "g_eccentricity" ->
-      s"""WITH RECURSIVE $CIRC_DIST_SIGMA,
-         |ec AS (SELECT s, MAX(d) AS m FROM cdist GROUP BY s)
-         |SELECT n_nationkey AS id, CAST(COALESCE(m, 0) AS INT) AS eccentricity
-         |FROM nation LEFT JOIN ec ON ec.s = n_nationkey""".stripMargin,
-    "g_ktruss" -> ktrussSql(12, 6),
-    "g_neighborhood" ->
-      s"""WITH RECURSIVE $CIRC_DIST_SIGMA,
-         |ds AS (SELECT DISTINCT d FROM cdist),
-         |nf AS (SELECT ds.d, CAST(COUNT(*) AS BIGINT) AS n_pairs
-         |  FROM ds JOIN cdist c ON c.d <= ds.d GROUP BY ds.d)
-         |SELECT CAST(d AS INT) AS d, n_pairs FROM nf""".stripMargin,
-    // mean distance over connected ordered pairs, straight off the
-    // pair-distance table (Σd·Δnf/den == ΣD over pairs, identically)
-    "g_avg_distance" ->
-      s"""WITH RECURSIVE $CIRC_DIST_SIGMA
-         |SELECT ROUND(CAST(SUM(d) AS DOUBLE) / CAST(COUNT(*) AS DOUBLE), 6)
-         |    AS avg_distance,
-         |  CAST(COUNT(*) AS BIGINT) AS n_pairs_connected
-         |FROM cdist WHERE d >= 1""".stripMargin,
-    // same pair counts, then the interpolated ANF readout — identical
-    // float ops: tot*0.9 compare, one subtraction-ratio interpolation
-    "g_effective_diameter" ->
-      s"""WITH RECURSIVE $CIRC_DIST_SIGMA,
-         |ds AS (SELECT DISTINCT d FROM cdist),
-         |nf AS (SELECT ds.d, CAST(COUNT(*) AS BIGINT) AS n_pairs
-         |  FROM ds JOIN cdist c ON c.d <= ds.d GROUP BY ds.d),
-         |t AS (SELECT MAX(n_pairs) AS tot, MAX(d) AS diam FROM nf),
-         |x AS (SELECT d, n_pairs,
-         |    COALESCE(LAG(n_pairs) OVER (ORDER BY d), 0) AS prev
-         |  FROM nf),
-         |c0 AS (SELECT x.d, x.n_pairs, x.prev, t.tot, t.diam FROM x, t
-         |  WHERE x.n_pairs >= t.tot * 0.9 ORDER BY x.d LIMIT 1)
-         |SELECT ROUND((d - 1) + (tot * 0.9 - prev) / (n_pairs - prev), 6)
-         |    AS effective_diameter,
-         |  CAST(d AS BIGINT) AS effective_diameter_int,
-         |  CAST(diam AS BIGINT) AS diameter, tot AS n_pairs_total
-         |FROM c0""".stripMargin,
-    "g_link_prediction" ->
-      """WITH cv AS (SELECT n_nationkey AS id FROM nation),
-        |ce AS (SELECT DISTINCT src, dst FROM (
-        |    SELECT id AS src, (id + 7) % 25 AS dst FROM cv
-        |    UNION ALL SELECT id, (3 * id + 1) % 25 FROM cv WHERE id % 3 = 0)
-        |  WHERE src <> dst),
-        |canon AS (SELECT DISTINCT LEAST(src, dst) AS src,
-        |  GREATEST(src, dst) AS dst FROM ce),
-        |u AS (SELECT src AS w, dst AS n FROM canon
-        |  UNION ALL SELECT dst, src FROM canon),
-        |deg AS (SELECT w, COUNT(*) AS d FROM u GROUP BY w),
-        |cand AS (SELECT x.n AS u, y.n AS v, COUNT(*) AS cn,
-        |    SUM(1.0 / LN(dg.d)) AS aa
-        |  FROM u x JOIN u y ON x.w = y.w AND x.n < y.n
-        |  JOIN deg dg ON dg.w = x.w
-        |  GROUP BY 1, 2),
-        |nc AS (SELECT c.* FROM cand c LEFT JOIN canon e
-        |  ON e.src = c.u AND e.dst = c.v WHERE e.src IS NULL)
-        |SELECT nc.u AS src, nc.v AS dst, cn,
-        |  ROUND(cn * 1.0 / (du.d + dv.d - cn), 5) AS jaccard,
-        |  ROUND(aa, 5) AS adamic_adar,
-        |  du.d * dv.d AS pref_attach
-        |FROM nc JOIN deg du ON du.w = nc.u JOIN deg dv ON dv.w = nc.v""".stripMargin,
-    "g_reversed_undirected" ->
-      s"""WITH e AS ($NE),
-         |a AS (SELECT src AS id, count(*) AS c FROM e GROUP BY 1),
-         |b AS (SELECT dst AS id, count(*) AS c FROM e GROUP BY 1),
-         |j AS (SELECT COALESCE(a.id, b.id) AS id, COALESCE(a.c, 0) AS o,
-         |        COALESCE(b.c, 0) AS i
-         |      FROM a FULL OUTER JOIN b ON a.id = b.id)
-         |SELECT id, CAST(o AS INT) AS rev_in, CAST(o + i AS INT) AS und_out
-         |FROM j WHERE o > 0""".stripMargin,
-    "g_graph_ops" ->
-      """WITH he AS (SELECT o_custkey, o_totalprice FROM orders
-        |            WHERE o_totalprice > 150000.0),
-        |a AS (SELECT c_nationkey, COUNT(*) AS n_orders,
-        |        ROUND(SUM(o_totalprice), 2) AS total_val
-        |      FROM he JOIN customer ON c_custkey = o_custkey GROUP BY 1),
-        |b AS (SELECT c_nationkey, COUNT(*) AS n_cust
-        |      FROM (SELECT DISTINCT o_custkey FROM he) h
-        |      JOIN customer ON c_custkey = h.o_custkey GROUP BY 1)
-        |SELECT a.c_nationkey AS nation_key, b.n_cust, a.n_orders, a.total_val
-        |FROM a JOIN b ON a.c_nationkey = b.c_nationkey""".stripMargin,
-    "g_pppr" -> ppprSql(10, 0, 5),
-    "g_pic" ->
-      // co-membership on the two-clique fixture: any correct 2-clustering
-      // of two disconnected cliques is the block partition (0..11 | 12..24)
-      """SELECT x.n_nationkey AS a, y.n_nationkey AS b,
-        |  CAST((x.n_nationkey < 12) = (y.n_nationkey < 12) AS INT) AS same_cluster
-        |FROM nation x JOIN nation y ON x.n_nationkey < y.n_nationkey""".stripMargin,
-    "g_belief_prop" -> beliefPropSql(2),
-    "g_svdpp" -> svdppSql(2),
-    "g_skew_hub" -> skewStatsSql(hub = true),
-    "g_skew_flat" -> skewStatsSql(hub = false),
-    "g_label_propagation" -> lpaSql(5),
-    "g_louvain" ->
-      s"""${louvainCtes(4)}
-         |SELECT id, community FROM l4""".stripMargin,
-    "g_louvain_coarse" -> louvainCoarseSql(4),
-    "g_louvain_decimal" ->
-      s"""${louvainCtes(4)}
-         |SELECT id, community FROM l4""".stripMargin,
-    "g_assortativity" ->
-      s"""WITH e AS MATERIALIZED ($NE),
-         |c AS MATERIALIZED (SELECT DISTINCT LEAST(src, dst) AS a, GREATEST(src, dst) AS b
-         |  FROM e WHERE src <> dst),
-         |u AS MATERIALIZED (SELECT a AS s FROM c UNION ALL SELECT b FROM c),
-         |dg AS MATERIALIZED (SELECT s, COUNT(*) AS d FROM u GROUP BY 1),
-         |t AS MATERIALIZED (SELECT COUNT(*) AS m, SUM(x.d * y.d) AS sp,
-         |    SUM(x.d + y.d) AS s1, SUM(x.d * x.d + y.d * y.d) AS s2
-         |  FROM c JOIN dg x ON x.s = c.a JOIN dg y ON y.s = c.b)
-         |SELECT CASE WHEN 2 * m * s2 - s1 * s1 = 0 THEN NULL
-         |    ELSE ROUND(CAST(4 * m * sp - s1 * s1 AS DOUBLE)
-         |      / CAST(2 * m * s2 - s1 * s1 AS DOUBLE), 6) END AS assortativity,
-         |  CAST(m AS BIGINT) AS m_edges FROM t""".stripMargin,
-    // categorical mixing: both-orientation counts (sum 2m), category
-    // masses squared in exact HUGEINT, the same single double division
-    "g_conductance" ->
-      s"""WITH e0 AS ($NE),
-         |c AS (SELECT DISTINCT LEAST(src, dst) AS a, GREATEST(src, dst) AS b
-         |  FROM e0 WHERE src <> dst),
-         |lab AS (SELECT r1.n_regionkey AS ca, r2.n_regionkey AS cb FROM c
-         |  JOIN nation r1 ON r1.n_nationkey = c.a
-         |  JOIN nation r2 ON r2.n_nationkey = c.b),
-         |o AS (SELECT ca AS ci, cb AS cj FROM lab UNION ALL SELECT cb, ca FROM lab),
-         |g AS (SELECT ci AS community, COUNT(*) AS volume,
-         |    CAST(SUM(CASE WHEN ci <> cj THEN 1 ELSE 0 END) AS BIGINT) AS cut_edges,
-         |    CAST(SUM(CASE WHEN ci = cj THEN 1 ELSE 0 END) // 2 AS BIGINT)
-         |      AS internal_edges
-         |  FROM o GROUP BY 1),
-         |t AS (SELECT CAST(SUM(volume) AS BIGINT) AS m2 FROM g)
-         |SELECT community, volume, cut_edges, internal_edges,
-         |  CASE WHEN LEAST(volume, t.m2 - volume) = 0 THEN NULL
-         |    ELSE ROUND(cut_edges / LEAST(volume, t.m2 - volume), 6) END
-         |    AS conductance
-         |FROM g CROSS JOIN t""".stripMargin,
-    "g_attr_assortativity" ->
-      s"""WITH e0 AS ($NE),
-         |c AS (SELECT DISTINCT LEAST(src, dst) AS a, GREATEST(src, dst) AS b
-         |  FROM e0 WHERE src <> dst),
-         |lab AS (SELECT r1.n_regionkey AS ca, r2.n_regionkey AS cb FROM c
-         |  JOIN nation r1 ON r1.n_nationkey = c.a
-         |  JOIN nation r2 ON r2.n_nationkey = c.b),
-         |o AS (SELECT ca AS ci, cb AS cj FROM lab UNION ALL SELECT cb, ca FROM lab),
-         |g AS (SELECT ci, CAST(COUNT(*) AS HUGEINT) AS s,
-         |    CAST(SUM(CASE WHEN ci = cj THEN 1 ELSE 0 END) AS HUGEINT) AS dii
-         |  FROM o GROUP BY 1),
-         |t AS (SELECT SUM(s) AS m2, SUM(dii) AS diag, SUM(s * s) AS ss,
-         |  COUNT(*) AS ncat FROM g)
-         |SELECT CASE WHEN m2 * m2 - ss = 0 THEN NULL
-         |    ELSE ROUND(CAST(m2 * diag - ss AS DOUBLE)
-         |      / CAST(m2 * m2 - ss AS DOUBLE), 6) END AS assortativity,
-         |  CAST(m2 // 2 AS BIGINT) AS m_edges,
-         |  CAST(ncat AS BIGINT) AS n_categories FROM t""".stripMargin,
-    "g_modularity" ->
-      s"""${louvainCtes(4)},
-         |intra AS MATERIALIZED (SELECT COUNT(*) AS x FROM c
-         |  JOIN l4 p ON p.id = c.a JOIN l4 q ON q.id = c.b
-         |  WHERE p.community = q.community),
-         |tt AS MATERIALIZED (SELECT SUM(tot * tot) AS t2, COUNT(*) AS nc FROM (
-         |  SELECT community, SUM(deg) AS tot FROM l4 WHERE deg > 0 GROUP BY 1))
-         |SELECT ROUND((4.0 * (SELECT m FROM mm) * (SELECT x FROM intra) - (SELECT t2 FROM tt))
-         |    / (4.0 * (SELECT m FROM mm) * (SELECT m FROM mm)), 6) AS modularity,
-         |  (SELECT nc FROM tt) AS n_communities,
-         |  (SELECT m FROM mm) AS m_edges""".stripMargin,
-    "g_kcore" -> kcoreSql(12),
-    "g_mis" -> misSql(8, 42L),
-    // 14 rounds ≥ the 25-vertex fixture's max matching size (12), and
-    // post-fixpoint rounds are empty no-ops — never undershoots
-    "g_matching" -> matchingSql(14, 42L),
-    "g_matching_dist" -> matchingSql(14, 42L),
-    "g_matching_weighted" -> weightedMatchingSql(14, 42L),
-    "g_random_walks" -> randomWalksSql(4, 2, 42L),
-    "g_random_walks_weighted" -> weightedWalksSql(3, 2, 42L),
-    "g_node2vec" -> node2vecSql(3, 2, 42L, 0.5, 4.0),
-    "g_coloring" -> coloringSql(6, 6, 42L),
-    "g_simrank" -> simRankSql(3),
-    "g_simrank_dist" -> simRankSql(3),
-    "g_ppr_sweep" -> pprSweepSql(10, 0, 15),
-    "g_hash_embeddings" ->
-      "SELECT CAST(n_nationkey AS VARCHAR) AS id, CAST(8 AS INT) AS dim FROM nation",
-    "g_hash2vec" ->
-      // replays embedSequences in md5 mode: lane = first 16 md5 bits of
-      // 'i|tok|42' mod 8, sign = first-nibble parity of 's|tok|42';
-      // constant decay, window ±2, plus the per-center zero sentinel
-      s"""WITH t AS (SELECT $W AS w FROM documents),
-         |pr AS (SELECT unnest(flatten([
-         |    [{'cid': w[i], 'ln': 0, 'v': 0.0}] ||
-         |    [{'cid': w[i],
-         |      'ln': (${duckHex4("md5('i|' || w[j] || '|42')")}) % 8,
-         |      'v': CASE WHEN (strpos('0123456789abcdef', substr(md5('s|' || w[j] || '|42'), 1, 1)) - 1) % 2 = 0
-         |                THEN 1.0 ELSE -1.0 END}
-         |     for j in range(greatest(i - 2, 1), least(i + 2, len(w)) + 1) if j != i]
-         |    for i in range(1, len(w) + 1)])) AS p FROM t),
-         |agg AS (SELECT p.cid AS id, p.ln AS ln, SUM(p.v) AS s FROM pr GROUP BY 1, 2),
-         |m AS (SELECT id, map(list(ln ORDER BY ln), list(s ORDER BY ln)) AS mp FROM agg GROUP BY id)
-         |SELECT id, array_to_string(list_transform(range(0, 8),
-         |  x -> CAST(CAST(coalesce(element_at(mp, x)[1], 0) AS BIGINT) AS VARCHAR)), ',') AS vec
-         |FROM m""".stripMargin,
-    "g_rw_embeddings" ->
-      "SELECT CAST(n_nationkey AS VARCHAR) AS id, CAST(8 AS INT) AS dim FROM nation",
-    "g_triangle_approx" ->
-      s"""WITH e0 AS ($NE),
-         |canon AS (SELECT DISTINCT LEAST(src, dst) AS a, GREATEST(src, dst) AS b FROM e0),
-         |tri AS (SELECT e1.a AS x, e1.b AS y, e2.b AS z
-         |        FROM canon e1 JOIN canon e2 ON e2.a = e1.b
-         |        JOIN canon e3 ON e3.a = e1.a AND e3.b = e2.b),
-         |pv AS (SELECT v, count(*) AS c FROM (
-         |   SELECT x AS v FROM tri UNION ALL SELECT y FROM tri UNION ALL SELECT z FROM tri)
-         |   GROUP BY v)
-         |SELECT n_nationkey AS id, COALESCE(c, 0) AS tri_count
-         |FROM nation LEFT JOIN pv ON v = n_nationkey""".stripMargin,
-    "g_reciprocity" ->
-      s"""WITH e AS ($NE),
-         |m AS (SELECT count(*) AS m_edges FROM e),
-         |mu AS (SELECT count(*) AS m_mutual FROM e x
-         |  WHERE EXISTS (SELECT 1 FROM e y WHERE y.src = x.dst AND y.dst = x.src))
-         |SELECT ROUND(CAST(m_mutual AS DOUBLE) / CAST(m_edges AS DOUBLE), 6)
-         |  AS reciprocity, CAST(m_mutual AS BIGINT) AS m_mutual,
-         |  CAST(m_edges AS BIGINT) AS m_edges FROM m, mu""".stripMargin,
-    "g_triad_census" ->
-      // independent formulation: classify EVERY a<b<c triple directly
-      // from its six direction bits (the engine never enumerates 0/1-pair
-      // triples — it derives them by subtraction)
-      s"""WITH e AS MATERIALIZED (SELECT DISTINCT src, dst FROM (
-         |    SELECT n_nationkey AS src, (n_nationkey + 1) % 25 AS dst FROM nation
-         |    UNION ALL SELECT n_nationkey, (n_nationkey + 7) % 25 FROM nation
-         |      WHERE n_nationkey % 2 = 0
-         |    UNION ALL SELECT n_nationkey, n_nationkey + 5 FROM nation
-         |      WHERE n_nationkey % 5 < 2 AND n_nationkey < 20
-         |    UNION ALL SELECT n_nationkey + 5, n_nationkey FROM nation
-         |      WHERE n_nationkey % 5 < 2 AND n_nationkey < 20
-         |    UNION ALL SELECT * FROM (VALUES (2,9),(9,16),(16,2),(3,10),(3,17),
-         |      (10,17),(4,11),(11,4),(4,18),(18,4),(11,18),(18,11),(6,13),
-         |      (13,6),(13,20),(20,13),(6,20),(8,21),(21,8),(14,8),(14,21),
-         |      (1,12),(12,1),(1,19),(12,19),(7,22),(22,7),(7,24),(24,22))
-         |      t(src, dst)
-         |  ) WHERE src <> dst),
-         |v AS (SELECT n_nationkey AS id FROM nation),
-         |bits AS MATERIALIZED (SELECT
-         |    CAST(EXISTS(SELECT 1 FROM e WHERE src = x.id AND dst = y.id) AS INT) AS ab,
-         |    CAST(EXISTS(SELECT 1 FROM e WHERE src = y.id AND dst = x.id) AS INT) AS ba,
-         |    CAST(EXISTS(SELECT 1 FROM e WHERE src = x.id AND dst = z.id) AS INT) AS ac,
-         |    CAST(EXISTS(SELECT 1 FROM e WHERE src = z.id AND dst = x.id) AS INT) AS ca,
-         |    CAST(EXISTS(SELECT 1 FROM e WHERE src = y.id AND dst = z.id) AS INT) AS bc,
-         |    CAST(EXISTS(SELECT 1 FROM e WHERE src = z.id AND dst = y.id) AS INT) AS cb
-         |  FROM v x JOIN v y ON x.id < y.id JOIN v z ON y.id < z.id),
-         |st AS (SELECT *,
-         |    (CASE WHEN ab + ba = 2 THEN 1 ELSE 0 END)
-         |      + (CASE WHEN ac + ca = 2 THEN 1 ELSE 0 END)
-         |      + (CASE WHEN bc + cb = 2 THEN 1 ELSE 0 END) AS m,
-         |    (CASE WHEN ab + ba = 1 THEN 1 ELSE 0 END)
-         |      + (CASE WHEN ac + ca = 1 THEN 1 ELSE 0 END)
-         |      + (CASE WHEN bc + cb = 1 THEN 1 ELSE 0 END) AS a
-         |  FROM bits),
-         |cls AS (SELECT CASE
-         |    WHEN m = 0 AND a = 0 THEN '003'
-         |    WHEN m = 0 AND a = 1 THEN '012'
-         |    WHEN m = 1 AND a = 0 THEN '102'
-         |    WHEN m = 0 AND a = 2 THEN
-         |      CASE WHEN GREATEST(ab + ac, ba + bc, ca + cb) = 2 THEN '021D'
-         |           WHEN GREATEST(ba + ca, ab + cb, ac + bc) = 2 THEN '021U'
-         |           ELSE '021C' END
-         |    WHEN m = 1 AND a = 1 THEN
-         |      CASE WHEN ab + ba = 2 THEN CASE WHEN ca + cb = 1 THEN '111D' ELSE '111U' END
-         |           WHEN ac + ca = 2 THEN CASE WHEN ba + bc = 1 THEN '111D' ELSE '111U' END
-         |           ELSE CASE WHEN ab + ac = 1 THEN '111D' ELSE '111U' END END
-         |    WHEN m = 0 AND a = 3 THEN
-         |      CASE WHEN GREATEST(ab + ac, ba + bc, ca + cb) = 2 THEN '030T' ELSE '030C' END
-         |    WHEN m = 2 AND a = 0 THEN '201'
-         |    WHEN m = 1 AND a = 2 THEN
-         |      CASE WHEN ab + ba = 2 THEN
-         |             CASE ca + cb WHEN 2 THEN '120D' WHEN 0 THEN '120U' ELSE '120C' END
-         |           WHEN ac + ca = 2 THEN
-         |             CASE ba + bc WHEN 2 THEN '120D' WHEN 0 THEN '120U' ELSE '120C' END
-         |           ELSE
-         |             CASE ab + ac WHEN 2 THEN '120D' WHEN 0 THEN '120U' ELSE '120C' END END
-         |    WHEN m = 2 AND a = 1 THEN '210'
-         |    ELSE '300' END AS triad
-         |  FROM st),
-         |cnt AS (SELECT triad, COUNT(*) AS c FROM cls GROUP BY 1),
-         |names(triad) AS (VALUES ('003'),('012'),('102'),('021D'),('021U'),
-         |  ('021C'),('111D'),('111U'),('030T'),('030C'),('201'),('120D'),
-         |  ('120U'),('120C'),('210'),('300'))
-         |SELECT names.triad, CAST(COALESCE(c, 0) AS BIGINT) AS count
-         |FROM names LEFT JOIN cnt ON cnt.triad = names.triad""".stripMargin,
-    "g_rich_club" ->
-      s"""WITH e0 AS ($NE),
-         |canon AS MATERIALIZED (SELECT DISTINCT LEAST(src, dst) AS a,
-         |  GREATEST(src, dst) AS b FROM e0 WHERE src <> dst),
-         |deg AS MATERIALIZED (SELECT s, COUNT(*) AS d FROM (
-         |  SELECT a AS s FROM canon UNION ALL SELECT b FROM canon) GROUP BY 1),
-         |ks AS (SELECT unnest([2, 8, 14, 20]) AS k),
-         |nk AS (SELECT k, COUNT(*) AS n_k FROM ks JOIN deg ON d > k GROUP BY 1),
-         |ek AS (SELECT k, COUNT(*) AS e_k FROM ks
-         |  JOIN canon ON TRUE
-         |  JOIN deg x ON x.s = canon.a JOIN deg y ON y.s = canon.b
-         |  WHERE x.d > k AND y.d > k GROUP BY 1)
-         |SELECT ks.k AS k, CAST(COALESCE(n_k, 0) AS BIGINT) AS n_k,
-         |  CAST(COALESCE(e_k, 0) AS BIGINT) AS e_k,
-         |  CASE WHEN COALESCE(n_k, 0) >= 2
-         |    THEN ROUND(2.0 * COALESCE(e_k, 0) / (n_k * (n_k - 1)), 6) END AS phi
-         |FROM ks LEFT JOIN nk ON nk.k = ks.k LEFT JOIN ek ON ek.k = ks.k""".stripMargin,
-    // butterfly identity B = sum C(c,2) over left co-neighbor pair
-    // overlaps c — the oracle recomputes the pair overlaps from scratch
-    "g_butterfly" ->
-      """WITH e AS (SELECT DISTINCT l_suppkey AS l, l_partkey AS r FROM lineitem),
-        |p AS (SELECT x.l AS a, y.l AS b, COUNT(*) AS c
-        |  FROM e x JOIN e y ON x.r = y.r AND x.l < y.l GROUP BY 1, 2)
-        |SELECT CAST(COALESCE(SUM(c * (c - 1) // 2), 0) AS BIGINT) AS n_butterflies,
-        |  CAST(COALESCE(SUM(c), 0) AS BIGINT) AS n_wedges,
-        |  CAST(COALESCE(MAX(c), 0) AS BIGINT) AS max_copair
-        |FROM p""".stripMargin,
-    "g_butterfly_vertex" ->
-      """WITH e AS (SELECT DISTINCT l_suppkey AS l, l_partkey AS r FROM lineitem),
-        |p AS (SELECT x.l AS a, y.l AS b, COUNT(*) AS c
-        |  FROM e x JOIN e y ON x.r = y.r AND x.l < y.l GROUP BY 1, 2),
-        |bf AS (SELECT id, SUM(c * (c - 1) // 2) AS b FROM (
-        |  SELECT a AS id, c FROM p UNION ALL SELECT b, c FROM p) GROUP BY 1)
-        |SELECT u.id, CAST(COALESCE(bf.b, 0) AS BIGINT) AS butterflies
-        |FROM (SELECT DISTINCT l AS id FROM e) u
-        |LEFT JOIN bf ON bf.id = u.id""".stripMargin,
-    // removal-based connectivity oracles — deliberately NOT the engine's
-    // BFS-forest/Tarjan constructions: a bridge is an edge whose removal
-    // disconnects its endpoints, an articulation point a vertex whose
-    // removal strands part of its (connected) component, 2ECC labels the
-    // min id reachable over non-bridge edges
-    "g_bridges" -> bridgesSql("t.a AS src, t.b AS dst, (x.v IS NULL) AS is_bridge"),
-    "g_bridges_dist" -> bridgesSql("t.a AS src, t.b AS dst, (x.v IS NULL) AS is_bridge"),
-    "g_articulation" -> articulationSql,
-    "g_articulation_dist" -> articulationSql,
-    "g_2ecc" ->
-      s"""WITH RECURSIVE $TREE_CHORD,
-         |reach AS (SELECT a AS ra, b AS rb, a AS v FROM tce
-         |  UNION
-         |  SELECT r.ra, r.rb, t.v FROM reach r JOIN tadj t ON t.u = r.v
-         |  WHERE NOT (LEAST(t.u, t.v) = r.ra AND GREATEST(t.u, t.v) = r.rb)),
-         |br AS (SELECT t.a, t.b FROM tce t
-         |  LEFT JOIN reach x ON x.ra = t.a AND x.rb = t.b AND x.v = t.b
-         |  WHERE x.v IS NULL),
-         |nb AS (SELECT a, b FROM tce WHERE NOT EXISTS (
-         |  SELECT 1 FROM br WHERE br.a = tce.a AND br.b = tce.b)),
-         |nadj AS (SELECT a AS u, b AS v FROM nb UNION ALL SELECT b, a FROM nb),
-         |crel AS (SELECT id AS s, id AS v FROM tv
-         |  UNION SELECT c.s, n.v FROM crel c JOIN nadj n ON n.u = c.v)
-         |SELECT s AS id, MIN(v) AS component FROM crel GROUP BY 1""".stripMargin,
-    "g_transitivity" ->
-      s"""WITH e0 AS ($NE),
-         |canon AS (SELECT DISTINCT LEAST(src, dst) AS a, GREATEST(src, dst) AS b FROM e0),
-         |tri AS (SELECT count(*) AS t FROM canon e1
-         |  JOIN canon e2 ON e2.a = e1.b
-         |  JOIN canon e3 ON e3.a = e1.a AND e3.b = e2.b),
-         |w AS (SELECT SUM(d * (d - 1)) / 2 AS wedges FROM (
-         |  SELECT v, count(*) AS d FROM (
-         |    SELECT a AS v FROM canon UNION ALL SELECT b FROM canon) GROUP BY v))
-         |SELECT ROUND(CAST(3 * t AS DOUBLE) / CAST(wedges AS DOUBLE), 6)
-         |  AS transitivity, CAST(t AS BIGINT) AS n_triangles,
-         |  CAST(wedges AS BIGINT) AS n_wedges FROM tri, w""".stripMargin,
-    "g_triangle_count" ->
-      s"""WITH e0 AS ($NE),
-         |canon AS (SELECT DISTINCT LEAST(src, dst) AS a, GREATEST(src, dst) AS b FROM e0),
-         |tri AS (SELECT e1.a AS x, e1.b AS y, e2.b AS z
-         |        FROM canon e1 JOIN canon e2 ON e2.a = e1.b
-         |        JOIN canon e3 ON e3.a = e1.a AND e3.b = e2.b),
-         |pv AS (SELECT v, count(*) AS c FROM (
-         |   SELECT x AS v FROM tri UNION ALL SELECT y FROM tri UNION ALL SELECT z FROM tri)
-         |   GROUP BY v)
-         |SELECT n_nationkey AS id, COALESCE(c, 0) AS tri_count
-         |FROM nation LEFT JOIN pv ON v = n_nationkey""".stripMargin,
-    "g_clustering_coeff" ->
-      s"""WITH e0 AS ($NE),
-         |canon AS (SELECT DISTINCT LEAST(src, dst) AS a, GREATEST(src, dst) AS b FROM e0),
-         |tri AS (SELECT e1.a AS x, e1.b AS y, e2.b AS z
-         |        FROM canon e1 JOIN canon e2 ON e2.a = e1.b
-         |        JOIN canon e3 ON e3.a = e1.a AND e3.b = e2.b),
-         |pv AS (SELECT v, count(*) AS c FROM (
-         |   SELECT x AS v FROM tri UNION ALL SELECT y FROM tri UNION ALL SELECT z FROM tri)
-         |   GROUP BY v),
-         |deg AS (SELECT v, COUNT(*) AS d FROM (
-         |   SELECT a AS v FROM canon UNION ALL SELECT b FROM canon) GROUP BY v)
-         |SELECT n_nationkey AS id, COALESCE(c, 0) AS tri_count,
-         |  ROUND(CASE WHEN COALESCE(d, 0) < 2 THEN 0
-         |    ELSE 2.0 * COALESCE(c, 0) / (d * (d - 1)) END, 5) AS clustering_coeff
-         |FROM nation LEFT JOIN pv ON pv.v = n_nationkey
-         |LEFT JOIN deg ON deg.v = n_nationkey""".stripMargin,
-    "g_bfs" ->
-      s"""WITH RECURSIVE e AS ($NE),
-         |f AS (SELECT 0 AS id, 0 AS d
-         |      UNION SELECT e.dst, f.d + 1 FROM f JOIN e ON e.src = f.id WHERE f.d < 50),
-         |dmin AS (SELECT id, MIN(d) AS d FROM f GROUP BY id),
-         |t AS (SELECT n_nationkey AS tid FROM nation WHERE n_name IN ('NATION_7', 'NATION_13')),
-         |md AS (SELECT MIN(d) AS m FROM dmin JOIN t ON dmin.id = t.tid)
-         |SELECT 0 AS from_id, dmin.id AS to_id
-         |FROM dmin JOIN t ON dmin.id = t.tid CROSS JOIN md WHERE dmin.d = md.m""".stripMargin,
-    "g_cycles" ->
-      """WITH RECURSIVE ev AS (
-        |  SELECT event_type AS src,
-        |         LEAD(event_type) OVER (PARTITION BY user_id ORDER BY ts, event_id) AS dst
-        |  FROM events),
-        |e AS (SELECT DISTINCT src, dst FROM ev WHERE dst IS NOT NULL),
-        |p(start, curr, path) AS (
-        |  SELECT src, dst, [src, dst] FROM e WHERE dst > src
-        |  UNION ALL
-        |  SELECT p.start, e.dst, list_append(p.path, e.dst)
-        |  FROM p JOIN e ON e.src = p.curr
-        |  WHERE e.dst > p.start AND NOT list_contains(p.path, e.dst)),
-        |cyc AS (
-        |  SELECT DISTINCT p.path FROM p JOIN e ON e.src = p.curr AND e.dst = p.start
-        |  UNION SELECT [src] FROM e WHERE src = dst)
-        |SELECT array_to_string(path, ',') AS found_cycles FROM cyc""".stripMargin,
-    "p_dedup_exact" ->
-      """SELECT doc_id, md5(text) AS fp,
-        |  MIN(doc_id) OVER (PARTITION BY md5(text)) AS keep_id FROM documents""".stripMargin,
-    // same ASCII normalization pipeline; RE2's \x and \s classes match
-    // Java's on the ASCII fixture, 'g' for global
-    "p_normalize" ->
-      """SELECT doc_id,
-        |  trim(regexp_replace(regexp_replace(lower(text),
-        |    '[\x00-\x1f\x7f]', ' ', 'g'), '\s+', ' ', 'g')) AS norm_text,
-        |  CAST(length(text) AS BIGINT) AS n_chars,
-        |  CAST(length(trim(regexp_replace(regexp_replace(lower(text),
-        |    '[\x00-\x1f\x7f]', ' ', 'g'), '\s+', ' ', 'g'))) AS BIGINT)
-        |    AS n_chars_norm
-        |FROM documents""".stripMargin,
-    // same extraction pipeline: spans, comments, tags, entities (amp
-    // LAST), whitespace collapse; RE2 non-greedy + inline (?is) match
-    // Java's here, 'g' for global; fixture newlines spelled chr(10)
-    "p_strip_markup" ->
-      """WITH h AS (SELECT doc_id,
-        |  '<html><head><STYLE type="text/css">p{color:red}</STYLE>' ||
-        |  '<script>var x = 1 < 2;</script></head>' || chr(10) ||
-        |  '<body><h1>Title</h1><p>' || text || '</p><!-- nav' || chr(10) ||
-        |  'boilerplate --><p>tail &amp;amp; &lt;x&gt; &quot;q&quot; ' ||
-        |  '&#39;a&#39;&nbsp;end</p></body></html>' AS html FROM documents),
-        |s AS (SELECT doc_id, html,
-        |  regexp_replace(regexp_replace(regexp_replace(regexp_replace(html,
-        |    '(?is)<script[^>]*>.*?</script>', ' ', 'g'),
-        |    '(?is)<style[^>]*>.*?</style>', ' ', 'g'),
-        |    '(?s)<!--.*?-->', ' ', 'g'),
-        |    '(?s)<[^>]*>', ' ', 'g') AS t FROM h)
-        |SELECT doc_id,
-        |  trim(regexp_replace(
-        |    replace(replace(replace(replace(replace(replace(replace(t,
-        |      '&nbsp;', ' '), '&lt;', '<'), '&gt;', '>'), '&quot;', '"'),
-        |      '&#39;', ''''), '&apos;', ''''), '&amp;', '&'),
-        |    '[ \t\n\r]+', ' ', 'g')) AS text,
-        |  CAST(len(regexp_extract_all(html, '(?s)<[^>]*>')) AS BIGINT)
-        |    AS n_tags
-        |FROM s""".stripMargin,
-    // same parse + rules: lowercase scheme/host, drop userinfo / default
-    // port / fragment / tracking params, sort surviving params, trim
-    // trailing slashes; non-URLs (no scheme://) produce null outputs
-    "p_url_canonical" ->
-      s"""$urlCanonCtes
-        |SELECT doc_id,
-        |  CASE WHEN ok THEN scheme || '://' || host || tail END AS url_canon,
-        |  CASE WHEN ok THEN regexp_replace(host, '^www\\.', '') END AS host,
-        |  CASE WHEN ok THEN regexp_replace(host, '^www\\.', '') || tail END
-        |    AS url_key
-        |FROM p3""".stripMargin,
-    // hosts aggregated over the same canonicalization CTEs
-    "p_host_stats" ->
-      s"""$urlCanonCtes
-        |SELECT regexp_replace(host, '^www\\.', '') AS host,
-        |  CAST(COUNT(*) AS BIGINT) AS n_docs,
-        |  CAST(COUNT(DISTINCT regexp_replace(host, '^www\\.', '') || tail)
-        |    AS BIGINT) AS n_pages,
-        |  ROUND(1.0 - COUNT(DISTINCT regexp_replace(host, '^www\\.', '')
-        |    || tail) / CAST(COUNT(*) AS DOUBLE), 4) AS dup_ratio
-        |FROM p3 WHERE ok GROUP BY 1""".stripMargin,
-    // same two-pattern extraction (double- then single-quoted hrefs),
-    // same empty-link filter; fixture replayed inline
-    "p_extract_links" ->
-      s"""$pageFixtureCte
-        |SELECT doc_id, link FROM (SELECT doc_id, unnest(list_concat(
-        |    regexp_extract_all(html, '(?is)href\\s*=\\s*"([^"]*)"', 1),
-        |    regexp_extract_all(html, '(?is)href\\s*=\\s*''([^'']*)''', 1)))
-        |  AS link FROM pg0)
-        |WHERE len(link) > 0""".stripMargin,
-    // same host-key rules as p_url_canonical applied to source url and
-    // each link; site-relative links resolve to the source host
-    "p_host_graph" ->
-      s"""$pageFixtureCte,
-        |l AS (SELECT url, link FROM (SELECT url, unnest(list_concat(
-        |    regexp_extract_all(html, '(?is)href\\s*=\\s*"([^"]*)"', 1),
-        |    regexp_extract_all(html, '(?is)href\\s*=\\s*''([^'']*)''', 1)))
-        |  AS link FROM pg0) WHERE len(link) > 0),
-        |d AS (SELECT ${hostKeySql("url")} AS src_host,
-        |  CASE WHEN link LIKE '/%' AND link NOT LIKE '//%'
-        |    THEN ${hostKeySql("url")}
-        |    ELSE ${hostKeySql("link")} END AS dst_host FROM l)
-        |SELECT src_host, dst_host, CAST(COUNT(*) AS BIGINT) AS n_links
-        |FROM d WHERE src_host IS NOT NULL AND dst_host IS NOT NULL
-        |GROUP BY 1, 2""".stripMargin,
-    // same list in document order, non-empties first-2 sliced; dropped =
-    // count beyond the cap
-    "p_extract_links_capped" ->
-      s"""$pageFixtureCte,
-        |cl AS (SELECT doc_id, list_filter(list_concat(
-        |    regexp_extract_all(html, '(?is)href\\s*=\\s*"([^"]*)"', 1),
-        |    regexp_extract_all(html, '(?is)href\\s*=\\s*''([^'']*)''', 1)),
-        |  x -> len(x) > 0) AS l FROM pg0)
-        |SELECT doc_id, unnest(l[1:2]) AS link,
-        |  CAST(greatest(len(l) - 2, 0) AS BIGINT) AS n_links_dropped
-        |FROM cl""".stripMargin,
-    "p_host_graph_capped" ->
-      s"""$pageFixtureCte,
-        |cl AS (SELECT url, list_filter(list_concat(
-        |    regexp_extract_all(html, '(?is)href\\s*=\\s*"([^"]*)"', 1),
-        |    regexp_extract_all(html, '(?is)href\\s*=\\s*''([^'']*)''', 1)),
-        |  x -> len(x) > 0) AS l FROM pg0),
-        |ll AS (SELECT url, unnest(l[1:2]) AS link FROM cl),
-        |dd AS (SELECT ${hostKeySql("url")} AS src_host,
-        |  CASE WHEN link LIKE '/%' AND link NOT LIKE '//%'
-        |    THEN ${hostKeySql("url")}
-        |    ELSE ${hostKeySql("link")} END AS dst_host FROM ll)
-        |SELECT src_host, dst_host, CAST(COUNT(*) AS BIGINT) AS n_links
-        |FROM dd WHERE src_host IS NOT NULL AND dst_host IS NOT NULL
-        |GROUP BY 1, 2""".stripMargin,
-    // the crawl→rank composition: the p_host_graph edge replay feeds the
-    // same unrolled weighted-PageRank trajectory as g_pagerank_weighted
-    // (mass ∝ n_links/wsum, damping 0.15 + 0.85·Σ, 10 rounds from r=1)
-    "p_host_rank" -> {
-      val steps = (1 to 10).map { k =>
-        s"""hw$k AS MATERIALIZED (
-           |  SELECT hv.id, 0.15 + 0.85 * COALESCE(SUM(p.r * he.w / o.wsum), 0) AS r
-           |  FROM hv LEFT JOIN he ON he.dst = hv.id
-           |  LEFT JOIN hw${k - 1} p ON p.id = he.src
-           |  LEFT JOIN how o ON o.src = he.src
-           |  GROUP BY hv.id)""".stripMargin
-      }.mkString(",\n")
-      s"""$pageFixtureCte,
-        |hl AS (SELECT url, link FROM (SELECT url, unnest(list_concat(
-        |    regexp_extract_all(html, '(?is)href\\s*=\\s*"([^"]*)"', 1),
-        |    regexp_extract_all(html, '(?is)href\\s*=\\s*''([^'']*)''', 1)))
-        |  AS link FROM pg0) WHERE len(link) > 0),
-        |hd AS (SELECT ${hostKeySql("url")} AS src_host,
-        |  CASE WHEN link LIKE '/%' AND link NOT LIKE '//%'
-        |    THEN ${hostKeySql("url")}
-        |    ELSE ${hostKeySql("link")} END AS dst_host FROM hl),
-        |he AS (SELECT src_host AS src, dst_host AS dst,
-        |    CAST(COUNT(*) AS DOUBLE) AS w
-        |  FROM hd WHERE src_host IS NOT NULL AND dst_host IS NOT NULL
-        |  GROUP BY 1, 2),
-        |hv AS (SELECT DISTINCT h AS id FROM
-        |  (SELECT src AS h FROM he UNION ALL SELECT dst FROM he)),
-        |how AS (SELECT src, SUM(w) AS wsum FROM he GROUP BY src),
-        |hw0 AS (SELECT id, CAST(1.0 AS DOUBLE) AS r FROM hv),
-        |$steps
-        |SELECT id AS host, ROUND(r, 5) AS pagerank FROM hw10""".stripMargin
-    },
-    // same rank arithmetic: value at ceil(q*n), 1-indexed ascending;
-    // q literals cast to DOUBLE (a bare 0.1 is DECIMAL in DuckDB)
-    "p_quality_quantiles" ->
-      """WITH r AS (SELECT lang, CAST(n_chars AS DOUBLE) AS v,
-        |  ROW_NUMBER() OVER (PARTITION BY lang
-        |    ORDER BY CAST(n_chars AS DOUBLE) ASC) AS rk,
-        |  COUNT(*) OVER (PARTITION BY lang) AS n
-        |  FROM documents WHERE n_chars IS NOT NULL)
-        |SELECT lang, q, v AS value, CAST(n AS BIGINT) AS n
-        |FROM r, (SELECT unnest([CAST(0.1 AS DOUBLE), CAST(0.5 AS DOUBLE),
-        |  CAST(0.9 AS DOUBLE)]) AS q) qs
-        |WHERE rk = greatest(CAST(ceil(q * n) AS BIGINT), 1)""".stripMargin,
-    // same rank-⌈q·n⌉ threshold, then the gate: score >= threshold per
-    // language (null scores/langs drop through the join on both sides)
-    "p_quality_cut" ->
-      """WITH r AS (SELECT lang, CAST(n_chars AS DOUBLE) AS v,
-        |  ROW_NUMBER() OVER (PARTITION BY lang
-        |    ORDER BY CAST(n_chars AS DOUBLE) ASC) AS rk,
-        |  COUNT(*) OVER (PARTITION BY lang) AS n
-        |  FROM documents WHERE n_chars IS NOT NULL),
-        |t AS (SELECT lang, v AS thr FROM r
-        |  WHERE rk = greatest(CAST(ceil(CAST(0.8 AS DOUBLE) * n) AS BIGINT), 1))
-        |SELECT d.doc_id, d.lang, CAST(d.n_chars AS DOUBLE) AS score
-        |FROM documents d JOIN t ON d.lang = t.lang
-        |WHERE CAST(d.n_chars AS DOUBLE) >= t.thr""".stripMargin,
-    // same (score desc NULLS LAST, id asc) keep — DuckDB's DESC defaults
-    // to nulls-first, so the order is spelled out on both sides
-    "p_keep_best" ->
-      """WITH c AS (SELECT doc_id % 40 AS cluster, doc_id,
-        |    CAST(n_chars AS DOUBLE) AS score FROM documents),
-        |r AS (SELECT cluster, doc_id, score,
-        |  ROW_NUMBER() OVER (PARTITION BY cluster
-        |    ORDER BY score DESC NULLS LAST, doc_id ASC) AS rk,
-        |  COUNT(*) OVER (PARTITION BY cluster) AS n_members FROM c)
-        |SELECT cluster, doc_id, score, CAST(n_members AS BIGINT) AS n_members
-        |FROM r WHERE rk = 1""".stripMargin,
-    // same presence-flag full-outer diff; md5 hex matches Spark's
-    "p_corpus_diff" ->
-      """WITH o AS (SELECT doc_id, md5(text) AS h, TRUE AS p
-        |  FROM documents WHERE doc_id < 400),
-        |n AS (SELECT doc_id,
-        |  md5(CASE WHEN doc_id % 10 = 3 THEN text || ' v2' ELSE text END)
-        |    AS h, TRUE AS p
-        |  FROM documents WHERE doc_id >= 100)
-        |SELECT COALESCE(o.doc_id, n.doc_id) AS doc_id,
-        |  CASE WHEN o.p IS NULL THEN 'added'
-        |    WHEN n.p IS NULL THEN 'removed'
-        |    WHEN o.h IS NOT DISTINCT FROM n.h THEN 'unchanged'
-        |    ELSE 'changed' END AS status
-        |FROM o FULL OUTER JOIN n ON o.doc_id = n.doc_id""".stripMargin,
-    "p_chunk" -> // stride 24 = 32 - 8; last start reaches the text end
-      s"""WITH w AS (SELECT doc_id, $W AS ws FROM documents),
-         |c AS (SELECT doc_id, CAST(i AS INT) AS chunk_idx,
-         |        array_to_string(ws[i*24+1:i*24+32], ' ') AS chunk_text,
-         |        CAST(least(len(ws) - i*24, 32) AS BIGINT) AS n_words
-         |      FROM w, range(0, 100000) r(i)
-         |      WHERE i <= greatest((len(ws) - 1 - 8) // 24, 0))
-         |SELECT doc_id, chunk_idx, chunk_text, n_words FROM c""".stripMargin,
-    "p_segment_dedup" ->
-      """WITH w AS (SELECT doc_id, string_split(text, ' ') AS ws FROM documents),
-        |seg AS (SELECT doc_id, i, array_to_string(ws[(i-1)*4+1:i*4], ' ') AS s
-        |        FROM w, range(1, 100000) r(i) WHERE (i-1)*4 < len(ws)),
-        |f AS (SELECT s, count(*) AS n FROM seg GROUP BY 1),
-        |k AS (SELECT seg.doc_id, seg.i, seg.s, f.n <= 2 AS keep FROM seg JOIN f USING (s))
-        |SELECT doc_id,
-        |  coalesce(string_agg(CASE WHEN keep THEN s END, ' ' ORDER BY i), '') AS clean_text,
-        |  CAST(coalesce(sum(CASE WHEN keep THEN 1 ELSE 0 END), 0) AS BIGINT) AS kept,
-        |  CAST(coalesce(sum(CASE WHEN keep THEN 0 ELSE 1 END), 0) AS BIGINT) AS dropped
-        |FROM k GROUP BY doc_id""".stripMargin,
-    "p_incremental_dedup" -> incrementalDedupSql,
-    // single-file replay = one micro-batch, and the foreachBatch body IS
-    // the batch operator — same oracle family, bounded to the gate row's
-    // fixed-size ingest slice [400, 1400)
-    "e_stream_incremental_dedup" -> incrementalDedupSqlTo(Some(1400L)),
-    "e_stream_incdedup_grow" -> incrementalDedupGrowSql,
-    "p_minhash_lsh" ->
-      s"""WITH t AS (SELECT doc_id, $W AS w FROM documents),
-         |s AS (SELECT doc_id, $SH3 AS sh FROM t WHERE len(w) >= 3),
-         |sig AS (SELECT doc_id, list_transform(range(0, 16), h ->
-         |   list_min(list_transform(sh, x -> md5(CAST(h AS VARCHAR) || '|' || x)))) AS mh
-         |   FROM s),
-         |bands AS (SELECT doc_id, r.b AS band,
-         |   md5(array_to_string(mh[2 * r.b + 1:2 * r.b + 2], '|')) AS bh
-         |   FROM sig, range(0, 8) r(b))
-         |SELECT x.doc_id AS a, y.doc_id AS b
-         |FROM bands x JOIN bands y ON x.band = y.band AND x.bh = y.bh AND x.doc_id < y.doc_id
-         |GROUP BY 1, 2""".stripMargin,
-    "p_dedup_clusters" ->
-      s"""WITH RECURSIVE t AS (SELECT doc_id, $W AS w FROM documents),
-         |s AS (SELECT doc_id, $SH3 AS sh FROM t WHERE len(w) >= 3),
-         |sig AS (SELECT doc_id, list_transform(range(0, 16), h ->
-         |   list_min(list_transform(sh, x -> md5(CAST(h AS VARCHAR) || '|' || x)))) AS mh
-         |   FROM s),
-         |bands AS (SELECT doc_id, r.b AS band,
-         |   md5(array_to_string(mh[2 * r.b + 1:2 * r.b + 2], '|')) AS bh
-         |   FROM sig, range(0, 8) r(b)),
-         |pairs AS (SELECT DISTINCT x.doc_id AS a, y.doc_id AS b
-         |   FROM bands x JOIN bands y ON x.band = y.band AND x.bh = y.bh AND x.doc_id < y.doc_id),
-         |u AS (SELECT a AS s1, b AS d1 FROM pairs UNION SELECT b, a FROM pairs),
-         |r AS (SELECT DISTINCT s1 AS id, s1 AS comp FROM u
-         |      UNION SELECT u.d1, r.comp FROM r JOIN u ON u.s1 = r.id),
-         |m AS (SELECT id, MIN(comp) AS keep FROM r GROUP BY id)
-         |SELECT doc_id, COALESCE(m.keep, doc_id) AS keep_id
-         |FROM documents LEFT JOIN m ON m.id = doc_id""".stripMargin,
-    "p_clean_corpus" ->
-      s"""WITH RECURSIVE t AS (SELECT doc_id, $W AS w FROM documents),
-         |q AS (SELECT doc_id FROM t WHERE len(w) >= 20 AND
-         |  (len(list_filter(w, x -> x = 'the')) + len(list_filter(w, x -> x = 'a')) +
-         |   len(list_filter(w, x -> x = 'of')) + len(list_filter(w, x -> x = 'and')) +
-         |   len(list_filter(w, x -> x = 'is'))) /
-         |  CAST(GREATEST(len(w), 1) AS DOUBLE) <= 0.2),
-         |s AS (SELECT doc_id, $SH3 AS sh FROM t WHERE len(w) >= 3),
-         |sig AS (SELECT doc_id, list_transform(range(0, 16), h ->
-         |   list_min(list_transform(sh, x -> md5(CAST(h AS VARCHAR) || '|' || x)))) AS mh
-         |   FROM s),
-         |bands AS (SELECT doc_id, r.b AS band,
-         |   md5(array_to_string(mh[2 * r.b + 1:2 * r.b + 2], '|')) AS bh
-         |   FROM sig, range(0, 8) r(b)),
-         |pairs AS (SELECT DISTINCT x.doc_id AS a, y.doc_id AS b
-         |   FROM bands x JOIN bands y ON x.band = y.band AND x.bh = y.bh AND x.doc_id < y.doc_id),
-         |u AS (SELECT a AS s1, b AS d1 FROM pairs UNION SELECT b, a FROM pairs),
-         |r AS (SELECT DISTINCT s1 AS id, s1 AS comp FROM u
-         |      UNION SELECT u.d1, r.comp FROM r JOIN u ON u.s1 = r.id),
-         |m AS (SELECT id, MIN(comp) AS keep FROM r GROUP BY id),
-         |kept AS (SELECT doc_id FROM documents LEFT JOIN m ON m.id = doc_id
-         |         WHERE COALESCE(m.keep, doc_id) = doc_id)
-         |SELECT d.doc_id, d.lang, d.n_chars FROM documents d
-         |JOIN q ON q.doc_id = d.doc_id JOIN kept k ON k.doc_id = d.doc_id""".stripMargin,
-    "p_simhash" -> simhashSql(16),
-    "p_dedup_recall" ->
-      // truth: COMPLETE J >= 0.3 pairs via the shared-shingle join
-      // (minShared 1, uncapped); candidates: the 8x2 minhash banding
-      s"""WITH t AS (SELECT doc_id, $W AS w FROM documents),
-         |s AS (SELECT doc_id, unnest($SH3) AS sh FROM t WHERE len(w) >= 3),
-         |d AS (SELECT DISTINCT doc_id, sh FROM s),
-         |sz AS (SELECT doc_id, count(*) AS n FROM d GROUP BY 1),
-         |pr AS (SELECT x.doc_id AS a, y.doc_id AS b, count(*) AS shared
-         |       FROM d x JOIN d y ON x.sh = y.sh AND x.doc_id < y.doc_id
-         |       GROUP BY 1, 2),
-         |truth AS (SELECT a, b FROM pr
-         |  JOIN sz sa ON sa.doc_id = a JOIN sz sb ON sb.doc_id = b
-         |  WHERE ROUND(shared / CAST(sa.n + sb.n - shared AS DOUBLE), 4) >= 0.3),
-         |sg AS (SELECT doc_id, list_transform(range(0, 16), h ->
-         |   list_min(list_transform(sh, x -> md5(CAST(h AS VARCHAR) || '|' || x)))) AS mh
-         |   FROM (SELECT doc_id, $SH3 AS sh FROM t WHERE len(w) >= 3)),
-         |bands AS (SELECT doc_id, r.b AS band,
-         |   md5(array_to_string(mh[2 * r.b + 1:2 * r.b + 2], '|')) AS bh
-         |   FROM sg, range(0, 8) r(b)),
-         |cand AS (SELECT DISTINCT x.doc_id AS a, y.doc_id AS b
-         |   FROM bands x JOIN bands y ON x.band = y.band AND x.bh = y.bh
-         |    AND x.doc_id < y.doc_id),
-         |m AS (SELECT COALESCE(t2.a, c.a) AS a, COALESCE(t2.b, c.b) AS b,
-         |   t2.a IS NOT NULL AS is_t, c.a IS NOT NULL AS is_c
-         |   FROM truth t2 FULL OUTER JOIN cand c ON t2.a = c.a AND t2.b = c.b)
-         |SELECT CAST(SUM(CASE WHEN is_t THEN 1 ELSE 0 END) AS BIGINT) AS n_true,
-         |  CAST(SUM(CASE WHEN is_c THEN 1 ELSE 0 END) AS BIGINT) AS n_cand,
-         |  CAST(SUM(CASE WHEN is_t AND is_c THEN 1 ELSE 0 END) AS BIGINT) AS n_hit,
-         |  CASE WHEN SUM(CASE WHEN is_t THEN 1 ELSE 0 END) = 0 THEN 1.0
-         |    ELSE ROUND(SUM(CASE WHEN is_t AND is_c THEN 1 ELSE 0 END) /
-         |      CAST(SUM(CASE WHEN is_t THEN 1 ELSE 0 END) AS DOUBLE), 4) END AS recall,
-         |  CASE WHEN SUM(CASE WHEN is_c THEN 1 ELSE 0 END) = 0 THEN 1.0
-         |    ELSE ROUND(SUM(CASE WHEN is_t AND is_c THEN 1 ELSE 0 END) /
-         |      CAST(SUM(CASE WHEN is_c THEN 1 ELSE 0 END) AS DOUBLE), 4) END AS precision
-         |FROM m""".stripMargin,
-    "p_ngram_jaccard" ->
-      // mirrors the stop-shingle document-frequency cap (maxDocFreq=1000):
-      // shared counts use only cap-surviving shingles; sizes stay uncapped
-      s"""WITH t AS (SELECT doc_id, $W AS w FROM documents),
-         |s AS (SELECT doc_id, unnest($SH3) AS sh FROM t WHERE len(w) >= 3),
-         |d AS (SELECT DISTINCT doc_id, sh FROM s),
-         |sz AS (SELECT doc_id, count(*) AS n FROM d GROUP BY 1),
-         |rare AS (SELECT sh FROM d GROUP BY sh HAVING count(*) <= 1000),
-         |dc AS (SELECT d.doc_id, d.sh FROM d JOIN rare USING (sh)),
-         |pr AS (SELECT x.doc_id AS a, y.doc_id AS b, count(*) AS shared
-         |       FROM dc x JOIN dc y ON x.sh = y.sh AND x.doc_id < y.doc_id
-         |       GROUP BY 1, 2 HAVING count(*) >= 3)
-         |SELECT a, b, shared,
-         |  ROUND(shared / CAST(sa.n + sb.n - shared AS DOUBLE), 4) AS jaccard
-         |FROM pr JOIN sz sa ON sa.doc_id = a JOIN sz sb ON sb.doc_id = b""".stripMargin,
-    // containment is the same pair construction with the ASYMMETRIC
-    // normalizer |S(a)|; the `shared >= n * 0.4` float boundary is the
-    // identical IEEE compare the engine makes
-    "p_containment" ->
-      s"""WITH t AS (SELECT doc_id, $W AS w FROM documents),
-         |s AS (SELECT doc_id, unnest($SH3) AS sh FROM t WHERE len(w) >= 3),
-         |d AS (SELECT DISTINCT doc_id, sh FROM s),
-         |sz AS (SELECT doc_id, count(*) AS n FROM d GROUP BY 1),
-         |rare AS (SELECT sh FROM d GROUP BY sh HAVING count(*) <= 1000),
-         |dc AS (SELECT d.doc_id, d.sh FROM d JOIN rare USING (sh)),
-         |pr AS (SELECT x.doc_id AS u, y.doc_id AS v, count(*) AS shared
-         |       FROM dc x JOIN dc y ON x.sh = y.sh AND x.doc_id < y.doc_id
-         |       GROUP BY 1, 2 HAVING count(*) >= 2),
-         |bo AS (SELECT u AS a, v AS b, shared, su.n AS na FROM pr
-         |         JOIN sz su ON su.doc_id = u
-         |       UNION ALL
-         |       SELECT v, u, shared, sv.n FROM pr
-         |         JOIN sz sv ON sv.doc_id = v)
-         |SELECT a, b, shared,
-         |  ROUND(shared / CAST(na AS DOUBLE), 4) AS containment
-         |FROM bo WHERE shared >= na * 0.4""".stripMargin,
-    "p_length_stats" ->
-      s"""WITH t AS (SELECT lang, CAST(len($W) AS DOUBLE) AS n FROM documents)
-         |SELECT lang, CAST(count(*) AS BIGINT) AS n_docs,
-         |  ROUND(AVG(n), 4) AS mean_tokens,
-         |  ROUND(quantile_cont(n, 0.5), 4) AS median_tokens,
-         |  ROUND(quantile_cont(n, 0.95), 4) AS p95_tokens
-         |FROM t GROUP BY lang""".stripMargin,
-    "p_tfidf" ->
-      s"""WITH t AS (SELECT doc_id, $W AS w FROM documents),
-         |tm AS (SELECT doc_id, unnest(w) AS term FROM t),
-         |tf AS (SELECT doc_id, term, count(*) AS tf FROM tm GROUP BY 1, 2),
-         |dfq AS (SELECT term, count(*) AS dfc FROM tf GROUP BY 1),
-         |n AS (SELECT count(*) AS n FROM documents),
-         |wgt AS (SELECT tf.doc_id, tf.term,
-         |    tf.tf * (ln((n.n + 1.0) / (dfq.dfc + 1)) + 1.0) AS wv
-         |  FROM tf JOIN dfq ON dfq.term = tf.term CROSS JOIN n)
-         |SELECT doc_id, term, ROUND(wv, 4) AS tfidf, CAST(rnk AS INT) AS rnk FROM (
-         |  SELECT doc_id, term, wv,
-         |    ROW_NUMBER() OVER (PARTITION BY doc_id ORDER BY wv DESC, term ASC) AS rnk
-         |  FROM wgt) WHERE rnk <= 5""".stripMargin,
-    "p_pack_shards" ->
-      s"""WITH t AS (SELECT doc_id, CAST(len($W) AS BIGINT) AS n_tokens FROM documents)
-         |SELECT doc_id, n_tokens,
-         |  CAST(floor((COALESCE(SUM(n_tokens) OVER (ORDER BY doc_id
-         |    ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) * 1.0) / 2000
-         |    ) AS BIGINT) AS shard_id
-         |FROM t""".stripMargin,
-    "p_entity_resolution" ->
-      """WITH t AS (SELECT c_custkey AS id, c_name AS nm,
-        |    substr(c_name, 1, 16) AS blk FROM customer),
-        |kept AS (SELECT blk FROM t GROUP BY blk HAVING COUNT(*) <= 1000)
-        |SELECT a.id AS id_a, b.id AS id_b,
-        |  CAST(levenshtein(a.nm, b.nm) AS INT) AS dist
-        |FROM t a JOIN t b ON a.blk = b.blk AND a.id < b.id
-        |JOIN kept k ON k.blk = a.blk
-        |WHERE levenshtein(a.nm, b.nm) <= 1""".stripMargin,
-    "p_entity_resolution_multi" ->
-      """WITH t AS (SELECT c_custkey AS id, c_name AS nm,
-        |    substr(c_name, 1, 16) AS k0,
-        |    CAST(c_nationkey AS VARCHAR) || '|' ||
-        |      substr(c_name, length(c_name) - 1, 2) AS k1
-        |  FROM customer),
-        |e AS (SELECT id, 0 AS ki, k0 AS blk FROM t WHERE k0 IS NOT NULL
-        |  UNION ALL SELECT id, 1, k1 FROM t WHERE k1 IS NOT NULL),
-        |kept AS (SELECT ki, blk FROM e GROUP BY ki, blk
-        |  HAVING COUNT(*) <= 1000),
-        |cand AS (SELECT DISTINCT a.id AS id_a, b.id AS id_b
-        |  FROM e a JOIN e b ON a.ki = b.ki AND a.blk = b.blk AND a.id < b.id
-        |  JOIN kept k ON k.ki = a.ki AND k.blk = a.blk)
-        |SELECT c.id_a, c.id_b, CAST(levenshtein(ta.nm, tb.nm) AS INT) AS dist
-        |FROM cand c JOIN t ta ON ta.id = c.id_a JOIN t tb ON tb.id = c.id_b
-        |WHERE levenshtein(ta.nm, tb.nm) <= 1""".stripMargin,
-    "p_cms_topk" -> {
-      def bucket(key: String, row: String) = "(" + duckHex15(
-        s"md5('42|' || CAST($row AS VARCHAR) || '|' || $key)") + ") % 512"
-      s"""WITH occ AS (SELECT unnest($W) AS k FROM documents),
-         |cells AS (SELECT r.i AS row, ${bucket("k", "r.i")} AS bucket,
-         |    COUNT(*) AS cnt
-         |  FROM occ, range(0, 4) r(i) GROUP BY 1, 2),
-         |keys AS (SELECT DISTINCT k FROM occ),
-         |kc AS (SELECT keys.k, r.i AS row, ${bucket("keys.k", "r.i")} AS bucket
-         |  FROM keys, range(0, 4) r(i)),
-         |est AS (SELECT kc.k, MIN(COALESCE(cells.cnt, 0)) AS est
-         |  FROM kc LEFT JOIN cells
-         |    ON cells.row = kc.row AND cells.bucket = kc.bucket
-         |  GROUP BY 1)
-         |SELECT k AS key, CAST(est AS BIGINT) AS est, CAST(rn AS BIGINT) AS rank
-         |FROM (SELECT k, est,
-         |    ROW_NUMBER() OVER (ORDER BY est DESC, k ASC) AS rn FROM est)
-         |WHERE rn <= 20""".stripMargin
-    },
-    "p_ngram_novelty" ->
-      s"""WITH t AS (SELECT doc_id, $W AS w FROM documents),
-         |s0 AS (SELECT doc_id, $SH3 AS sh FROM t WHERE len(w) >= 3),
-         |shg AS (SELECT DISTINCT doc_id, unnest(sh) AS g FROM s0),
-         |dfq AS (SELECT g, COUNT(*) AS dfc FROM shg GROUP BY 1),
-         |per AS (SELECT shg.doc_id, COUNT(*) AS n_shingles,
-         |    CAST(SUM(CASE WHEN dfq.dfc = 1 THEN 1 ELSE 0 END) AS BIGINT)
-         |      AS n_unique
-         |  FROM shg JOIN dfq ON dfq.g = shg.g GROUP BY 1)
-         |SELECT d.doc_id,
-         |  CAST(COALESCE(per.n_shingles, 0) AS BIGINT) AS n_shingles,
-         |  CAST(COALESCE(per.n_unique, 0) AS BIGINT) AS n_unique,
-         |  ROUND(per.n_unique / per.n_shingles, 6) AS novelty
-         |FROM documents d LEFT JOIN per ON per.doc_id = d.doc_id""".stripMargin,
-    "p_tf_cosine" ->
-      s"""WITH tf AS (SELECT doc_id AS id, tok, COUNT(*) AS c
-         |  FROM (SELECT doc_id, unnest($W) AS tok FROM documents)
-         |  GROUP BY 1, 2),
-         |hot AS (SELECT tok FROM tf GROUP BY tok HAVING COUNT(*) > 200),
-         |kept AS (SELECT tf.* FROM tf LEFT JOIN hot ON hot.tok = tf.tok
-         |  WHERE hot.tok IS NULL),
-         |norms AS (SELECT id, CAST(SUM(c * c) AS BIGINT) AS n2 FROM kept
-         |  GROUP BY 1),
-         |dots AS (SELECT a.id AS id_a, b.id AS id_b,
-         |    CAST(SUM(a.c * b.c) AS BIGINT) AS dot
-         |  FROM kept a JOIN kept b ON a.tok = b.tok AND a.id < b.id
-         |  GROUP BY 1, 2)
-         |SELECT id_a, id_b, dot, ROUND(cos, 6) AS cosine FROM (
-         |  SELECT d.id_a, d.id_b, d.dot,
-         |    d.dot / (sqrt(na.n2) * sqrt(nb.n2)) AS cos
-         |  FROM dots d JOIN norms na ON na.id = d.id_a
-         |  JOIN norms nb ON nb.id = d.id_b)
-         |WHERE cos >= 0.8""".stripMargin,
-    "e_stream_cms" -> {
-      def bucket(key: String, row: String) = "(" + duckHex15(
-        s"md5('42|' || CAST($row AS VARCHAR) || '|' || $key)") + ") % 64"
-      s"""WITH occ AS (SELECT event_type AS k FROM events
-         |  WHERE event_type IS NOT NULL),
-         |cells AS (SELECT r.i AS row, ${bucket("k", "r.i")} AS bucket,
-         |    COUNT(*) AS cnt
-         |  FROM occ, range(0, 4) r(i) GROUP BY 1, 2),
-         |keys AS (SELECT DISTINCT k FROM occ),
-         |kc AS (SELECT keys.k, r.i AS row, ${bucket("keys.k", "r.i")} AS bucket
-         |  FROM keys, range(0, 4) r(i)),
-         |est AS (SELECT kc.k, MIN(COALESCE(cells.cnt, 0)) AS est
-         |  FROM kc LEFT JOIN cells
-         |    ON cells.row = kc.row AND cells.bucket = kc.bucket
-         |  GROUP BY 1)
-         |SELECT k AS key, CAST(est AS BIGINT) AS est FROM est""".stripMargin
-    },
-    "e_markov" ->
-      """WITH x AS (SELECT user_id, event_id, ts, event_type,
-        |  CASE WHEN epoch_ms(ts) - LAG(epoch_ms(ts)) OVER
-        |    (PARTITION BY user_id ORDER BY ts, event_id) > 1800000
-        |    THEN 1 ELSE 0 END AS nsess
-        |  FROM events),
-        |y AS (SELECT user_id, event_id, ts, event_type, SUM(nsess) OVER
-        |  (PARTITION BY user_id ORDER BY ts, event_id ROWS UNBOUNDED PRECEDING)
-        |  AS sess FROM x),
-        |pr AS (SELECT event_type AS src_type,
-        |    LEAD(event_type) OVER (PARTITION BY user_id, sess
-        |      ORDER BY ts, event_id) AS dst_type
-        |  FROM y),
-        |cnt AS (SELECT src_type, dst_type, COUNT(*) AS n FROM pr
-        |  WHERE dst_type IS NOT NULL GROUP BY 1, 2),
-        |tot AS (SELECT src_type, CAST(SUM(n) AS BIGINT) AS n_src FROM cnt
-        |  GROUP BY 1)
-        |SELECT cnt.src_type, cnt.dst_type, cnt.n, tot.n_src,
-        |  ROUND(cnt.n / tot.n_src, 6) AS p
-        |FROM cnt JOIN tot ON tot.src_type = cnt.src_type""".stripMargin,
-    "e_copurchase" ->
-      """WITH it AS (SELECT DISTINCT l_orderkey AS b, l_partkey AS i FROM lineitem),
-        |kept AS (SELECT b FROM it GROUP BY b HAVING COUNT(*) <= 100),
-        |pr AS (SELECT x.i AS item_a, y.i AS item_b, COUNT(*) AS n
-        |  FROM it x JOIN it y ON x.b = y.b AND x.i < y.i
-        |  JOIN kept k ON k.b = x.b GROUP BY 1, 2),
-        |bo AS (SELECT item_a AS item, item_b AS also_bought, n FROM pr
-        |  UNION ALL SELECT item_b, item_a, n FROM pr)
-        |SELECT item, also_bought, n AS n_baskets, CAST(rn AS BIGINT) AS rank
-        |FROM (SELECT item, also_bought, n,
-        |    ROW_NUMBER() OVER (PARTITION BY item
-        |      ORDER BY n DESC, also_bought ASC) AS rn FROM bo)
-        |WHERE rn <= 3""".stripMargin,
-    "p_pack_windows" ->
-      s"""WITH t AS (SELECT doc_id, CAST(len($W) AS BIGINT) AS n_tokens FROM documents),
-         |o AS (SELECT doc_id, n_tokens,
-         |    CAST(COALESCE(SUM(n_tokens) OVER (ORDER BY doc_id
-         |      ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS BIGINT) AS off
-         |  FROM t WHERE n_tokens > 0),
-         |x AS (SELECT doc_id, n_tokens, off,
-         |    unnest(range(off // 512, (off + n_tokens - 1) // 512 + 1)) AS wid
-         |  FROM o)
-         |SELECT doc_id, n_tokens, CAST(wid AS BIGINT) AS window_id,
-         |  CAST(GREATEST(wid * 512, off) - off AS BIGINT) AS start_tok,
-         |  CAST(LEAST((wid + 1) * 512, off + n_tokens)
-         |    - GREATEST(wid * 512, off) AS BIGINT) AS n_tok
-         |FROM x""".stripMargin,
-    "p_semantic_dedup" -> semanticDedupSql(0.4, 8, 1),
-    "p_dup_spans_maximal" -> dupSpansMaximalSql(seedTokens = 4, maxBucket = 256),
-    "p_contaminated_spans" ->
-      s"""${contaminatedCtes(4, 256)}
-         |SELECT mx.d AS doc_id, CAST(mx.pos AS INT) AS pos,
-         |  CAST(mx.len AS INT) AS len,
-         |  array_to_string(t.w[mx.pos + 1 : mx.pos + mx.len], ' ') AS span
-         |FROM mx JOIN tt t ON t.doc_id = mx.d""".stripMargin,
-    "p_cut_contaminated" ->
-      s"""${contaminatedCtes(4, 256)},
-         |rem AS (SELECT DISTINCT d, unnest(range(pos, pos + len)) AS tp FROM mx),
-         |tok AS (SELECT doc_id AS d, unnest(range(0, len(w))) AS pos,
-         |  unnest(w) AS tk FROM tt),
-         |keep AS (SELECT tok.* FROM tok LEFT JOIN rem
-         |  ON rem.d = tok.d AND rem.tp = tok.pos WHERE rem.tp IS NULL),
-         |reb AS (SELECT d, string_agg(tk, ' ' ORDER BY pos) AS clean_text
-         |  FROM keep GROUP BY d),
-         |cnt AS (SELECT d, COUNT(*) AS n FROM rem GROUP BY d)
-         |SELECT tt.doc_id, COALESCE(reb.clean_text, '') AS clean_text,
-         |  CAST(COALESCE(cnt.n, 0) AS BIGINT) AS n_removed_tokens
-         |FROM tt LEFT JOIN reb ON reb.d = tt.doc_id
-         |LEFT JOIN cnt ON cnt.d = tt.doc_id""".stripMargin,
-    "p_cut_dup_spans" -> cutDupSpansSql(seedTokens = 4, maxBucket = 256),
-    "p_dup_spans" ->
-      s"""WITH t AS (SELECT doc_id, $W AS w FROM documents),
-         |s AS (SELECT doc_id, unnest($SH3) AS sh FROM t WHERE len(w) >= 3)
-         |SELECT md5(sh) AS span_h,
-         |  CAST(count(DISTINCT doc_id) AS BIGINT) AS n_docs,
-         |  CAST(count(*) AS BIGINT) AS n_occ,
-         |  MIN(doc_id) AS first_doc
-         |FROM s GROUP BY 1 HAVING count(DISTINCT doc_id) >= 2""".stripMargin,
-    "p_top_ngrams" ->
-      s"""WITH t AS (SELECT doc_id, $W AS w FROM documents),
-         |s AS (SELECT doc_id,
-         |    unnest([array_to_string(w[i:i+1], ' ') for i in range(1, len(w))]) AS ngram
-         |  FROM t),
-         |c AS (SELECT ngram, CAST(count(*) AS BIGINT) AS n_occ,
-         |    CAST(count(DISTINCT doc_id) AS BIGINT) AS n_docs
-         |  FROM s GROUP BY 1),
-         |top AS (SELECT * FROM c ORDER BY n_occ DESC, ngram ASC LIMIT 50)
-         |SELECT ngram, n_occ, n_docs,
-         |  CAST(ROW_NUMBER() OVER (ORDER BY n_occ DESC, ngram ASC) AS INT) AS "rank"
-         |FROM top""".stripMargin,
-    "p_contamination" ->
-      s"""WITH t AS (SELECT doc_id, $W AS w FROM documents),
-         |s AS (SELECT doc_id, unnest($SH3) AS sh FROM t WHERE len(w) >= 3),
-         |d AS (SELECT DISTINCT doc_id, sh FROM s),
-         |b AS (SELECT doc_id AS bench_id, sh FROM d WHERE doc_id % 50 = 0)
-         |SELECT d.doc_id, b.bench_id, CAST(count(*) AS BIGINT) AS n_shared
-         |FROM d JOIN b USING (sh) WHERE d.doc_id <> b.bench_id
-         |GROUP BY 1, 2""".stripMargin,
-    "p_redact_pii" -> {
-      val email = "[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\\.[A-Za-z]{2,}"
-      val phone = "\\b[0-9]{2}-[0-9]{3}-[0-9]{3}-[0-9]{4}\\b"
-      val ip = "\\b[0-9]{1,3}\\.[0-9]{1,3}\\.[0-9]{1,3}\\.[0-9]{1,3}\\b"
-      s"""WITH t AS (SELECT c_custkey,
-         |  c_name || ' reach me at c' || CAST(c_custkey AS VARCHAR) || '@example.com phone 25-'
-         |  || lpad(CAST(c_custkey % 1000 AS VARCHAR), 3, '0') || '-555-'
-         |  || lpad(CAST(c_custkey % 10000 AS VARCHAR), 4, '0')
-         |  || ' ip 10.0.' || CAST(c_custkey % 256 AS VARCHAR) || '.' || CAST(c_custkey % 250 AS VARCHAR)
-         |  || ' ' || c_mktsegment AS txt FROM customer)
-         |SELECT c_custkey AS cust_id,
-         |  regexp_replace(regexp_replace(regexp_replace(txt,
-         |    '$email', '<EMAIL>', 'g'),
-         |    '$phone', '<PHONE>', 'g'),
-         |    '$ip', '<IP>', 'g') AS clean_text,
-         |  CAST(len(regexp_extract_all(txt, '$email'))
-         |     + len(regexp_extract_all(txt, '$phone'))
-         |     + len(regexp_extract_all(txt, '$ip')) AS BIGINT) AS n_redactions
-         |FROM t""".stripMargin
-    },
-    "p_entropy" ->
-      // identical summation order to Text.charEntropy: fold over SORTED
-      // distinct characters, so the IEEE double sum replays exactly
-      """WITH c AS (SELECT doc_id, string_split(text, '') AS cs FROM documents),
-        |u AS (SELECT doc_id, cs, CAST(len(cs) AS DOUBLE) AS n,
-        |       list_sort(list_distinct(cs)) AS uq FROM c)
-        |SELECT doc_id,
-        |  CASE WHEN len(cs) > 0 THEN ROUND(-list_reduce(
-        |    list_prepend(CAST(0.0 AS DOUBLE), list_transform(uq,
-        |      ch -> (CAST(len(list_filter(cs, x -> x = ch)) AS DOUBLE) / n)
-        |            * log2(CAST(len(list_filter(cs, x -> x = ch)) AS DOUBLE) / n))),
-        |    (a, t) -> a + t), 4)
-        |  ELSE 0.0 END AS char_entropy
-        |FROM u""".stripMargin,
-    "p_cosine_pairs" ->
-      s"""WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings)
-         |SELECT * FROM (
-         |  SELECT x.vec_id AS a, y.vec_id AS b, ROUND($cosExpr, 4) AS cos
-         |  FROM e x JOIN e y ON x.vec_id < y.vec_id)
-         |WHERE cos >= 0.35""".stripMargin,
-    "p_ann_topk" ->
-      s"""WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
-         |q AS (SELECT * FROM e WHERE vec_id < 20),
-         |sc AS (SELECT q.vec_id AS query_id, y.vec_id AS neighbor_id,
-         |   list_dot_product(q.v, y.v) / (sqrt(list_dot_product(q.v, q.v)) * sqrt(list_dot_product(y.v, y.v))) AS c
-         |   FROM q JOIN e y ON y.vec_id <> q.vec_id)
-         |SELECT query_id, neighbor_id, CAST(rnk AS INT) AS rnk FROM (
-         |  SELECT query_id, neighbor_id,
-         |    ROW_NUMBER() OVER (PARTITION BY query_id ORDER BY c DESC, neighbor_id ASC) AS rnk
-         |  FROM sc) WHERE rnk <= 3""".stripMargin,
-    "p_ann_mips" ->
-      s"""WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
-         |q AS (SELECT * FROM e WHERE vec_id < 20),
-         |sc AS (SELECT q.vec_id AS query_id, y.vec_id AS neighbor_id,
-         |   list_dot_product(q.v, y.v) AS d
-         |   FROM q JOIN e y ON y.vec_id <> q.vec_id)
-         |SELECT query_id, neighbor_id, CAST(rnk AS INT) AS rnk FROM (
-         |  SELECT query_id, neighbor_id,
-         |    ROW_NUMBER() OVER (PARTITION BY query_id ORDER BY d DESC, neighbor_id ASC) AS rnk
-         |  FROM sc) WHERE rnk <= 3""".stripMargin,
-    "p_knn_graph" -> knnGraphSql("SELECT src, dst FROM mu"),
-    "p_knn_label_spread" -> knnGraphSql(labelSpreadTail(3)),
-    "p_pmi_bigrams" ->
-      s"""WITH tk AS (SELECT $W AS ws FROM documents),
-         |t2 AS (SELECT ws FROM tk WHERE len(ws) > 0),
-         |bg AS (SELECT ws[i] AS w1, ws[i+1] AS w2
-         |  FROM t2, range(1, 100000) t(i) WHERE i < len(ws)),
-         |uni AS (SELECT tok, count(*) AS c
-         |  FROM (SELECT unnest(ws) AS tok FROM t2) GROUP BY 1),
-         |tot AS (SELECT (SELECT SUM(c) FROM uni) AS n, (SELECT count(*) FROM bg) AS m),
-         |pair AS (SELECT w1, w2, count(*) AS pair_count FROM bg
-         |  GROUP BY 1, 2 HAVING count(*) >= 3),
-         |sc AS (SELECT p.w1, p.w2, p.pair_count,
-         |    LN((CAST(p.pair_count AS DOUBLE) / m) /
-         |      ((CAST(u1.c AS DOUBLE) / n) * (CAST(u2.c AS DOUBLE) / n))) AS pmi
-         |  FROM pair p JOIN uni u1 ON u1.tok = p.w1
-         |  JOIN uni u2 ON u2.tok = p.w2, tot)
-         |SELECT w1, w2, pair_count, ROUND(pmi, 6) AS pmi FROM (
-         |  SELECT *, ROW_NUMBER() OVER (ORDER BY pmi DESC, w1, w2) AS rk FROM sc)
-         |WHERE rk <= 20""".stripMargin,
-    "p_group_sample" ->
-      """SELECT doc_id, source FROM (
-        |  SELECT doc_id, source, ROW_NUMBER() OVER (PARTITION BY source
-        |    ORDER BY md5('42|' || CAST(doc_id AS VARCHAR)), doc_id) AS rk
-        |  FROM documents) WHERE rk <= 5""".stripMargin,
-    "p_weighted_sample" -> {
-      val h = duckHex15(
-        "md5('42|' || CAST(doc_id AS VARCHAR) || '|' || CAST(j AS VARCHAR))")
-      s"""WITH t AS (SELECT doc_id, n_chars,
-         |    GREATEST(1, CAST(FLOOR(n_chars / 16.0) AS BIGINT)) AS w
-         |  FROM documents),
-         |tick AS (SELECT doc_id, unnest(range(1, w + 1)) AS j FROM t),
-         |keyd AS (SELECT doc_id, MIN($h) AS k FROM tick GROUP BY 1),
-         |top AS (SELECT doc_id,
-         |    CAST(ROW_NUMBER() OVER (ORDER BY k, doc_id) AS INT) AS sample_rank
-         |  FROM keyd ORDER BY k, doc_id LIMIT 50)
-         |SELECT t.doc_id, t.n_chars, top.sample_rank
-         |FROM top JOIN t ON t.doc_id = top.doc_id""".stripMargin
-    },
-    "p_approx_distinct" -> {
-      val h = duckHex15("md5(tok)")
-      s"""WITH t AS (SELECT lang, unnest($W) AS tok FROM documents),
-         |d AS (SELECT DISTINCT lang, ($h) AS h FROM t WHERE lang IS NOT NULL),
-         |r AS (SELECT lang, h,
-         |    ROW_NUMBER() OVER (PARTITION BY lang ORDER BY h) AS rk,
-         |    COUNT(*) OVER (PARTITION BY lang) AS nd
-         |  FROM d)
-         |SELECT lang, ROUND(CASE WHEN nd < 16 THEN CAST(nd AS DOUBLE)
-         |    ELSE 15.0 / (CAST(h AS DOUBLE) / 1152921504606846976.0) END, 4)
-         |  AS approx_distinct
-         |FROM r WHERE rk = CASE WHEN nd < 16 THEN 1 ELSE 16 END""".stripMargin
-    },
-    "p_random_projection" -> {
-      // one UNION ALL arm per output dim, the ±1 weights as SQL literals
-      // (identical md5 parity to the engine's planeWeights)
-      val arms = (0 until 16).map { p =>
-        val w = "[" + (0 until 64).map(i =>
-          if (pipeline.Similarity.planeSign(p, i) > 0) "1.0" else "-1.0")
-          .mkString(", ") + "]"
-        s"SELECT vec_id, CAST($p AS INT) AS d, " +
-          s"ROUND(list_dot_product(v, $w) / sqrt(16.0), 6) AS val FROM e"
-      }.mkString("\nUNION ALL\n")
-      s"""WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings)
-         |$arms""".stripMargin
-    },
-    "p_knn_clusters" -> knnGraphSql(
-      """,
-        |u AS (SELECT src AS s1, dst AS d1 FROM mu UNION SELECT dst, src FROM mu),
-        |r AS (SELECT vec_id AS id, vec_id AS comp FROM embeddings
-        |      UNION SELECT u.d1, r.comp FROM r JOIN u ON u.s1 = r.id)
-        |SELECT id, MIN(comp) AS component FROM r GROUP BY id""".stripMargin),
-    "p_token_count" ->
-      s"""SELECT doc_id, CAST(len($W) AS BIGINT) AS n_tokens FROM documents""".stripMargin,
-    "p_bpe_train" -> bpeSql(
-      """SELECT CAST(1 AS INT) AS rank, l AS "left", r AS "right", CAST(n AS BIGINT) AS pair_count FROM m1
-        |UNION ALL SELECT 2, l, r, CAST(n AS BIGINT) FROM m2
-        |UNION ALL SELECT 3, l, r, CAST(n AS BIGINT) FROM m3""".stripMargin),
-    "p_bpe_encode" -> bpeSql(
-      """SELECT c3.doc_id, CAST(c3.nraw AS BIGINT) AS n_tokens_raw,
-        |  CAST(len(string_split(c3.s[2:-2], '⟩⟨')) AS BIGINT) AS n_tokens_bpe
-        |FROM c3""".stripMargin),
-    "p_bpe_tokens" ->
-      """SELECT doc_id, CAST(len(regexp_extract_all(text, '[a-zA-Z]+|[0-9]+|[^a-zA-Z0-9 ]')) AS BIGINT)
-        |  AS n_bpe_tokens FROM documents""".stripMargin,
-    "p_unigram_train" -> unigramSql(train = true),
-    "p_unigram_encode" -> unigramSql(train = false),
-    "p_wordpiece_vocab" -> wordpieceSql(encode = false),
-    "p_wordpiece_encode" -> wordpieceSql(encode = true),
-    // same injected fixture as the query (bullet block % 5, ellipsis
-    // line % 7, symbol run % 11); every ratio flag is the identical
-    // integer cross-multiplication
-    "p_gopher_rules" ->
-      """WITH d0 AS (SELECT doc_id, text ||
-        |    CASE WHEN doc_id % 5 = 0 THEN ' ' || chr(10) || '• promo one ' ||
-        |      chr(10) || '• promo two ' || chr(10) || '• promo three' ELSE '' END ||
-        |    CASE WHEN doc_id % 7 = 0 THEN ' ' || chr(10) || 'to be continued...' ELSE '' END ||
-        |    CASE WHEN doc_id % 11 = 0 THEN ' ## ## ## ## ## ## ##' ELSE '' END AS t
-        |  FROM documents),
-        |c AS (SELECT doc_id, t,
-        |    list_filter(string_split(t, ' '), x -> len(x) > 0) AS w,
-        |    string_split(t, chr(10)) AS ln FROM d0),
-        |m AS (SELECT doc_id,
-        |  CAST(len(w) AS BIGINT) AS n_words,
-        |  CAST(COALESCE(list_sum(list_transform(w, x -> len(x))), 0) AS BIGINT) AS n_word_chars,
-        |  CAST(len(list_filter(w, x -> regexp_matches(x, '[A-Za-z]'))) AS BIGINT) AS n_alpha_words,
-        |  CAST((len(t) - len(replace(t, '#', ''))) +
-        |       ((len(t) - len(replace(t, '...', ''))) // 3) AS BIGINT) AS n_symbols,
-        |  CAST(len(ln) AS BIGINT) AS n_lines,
-        |  CAST(len(list_filter(ln, l -> starts_with(ltrim(l), '•') OR
-        |    starts_with(ltrim(l), '- ') OR starts_with(ltrim(l), '* '))) AS BIGINT) AS n_bullet_lines,
-        |  CAST(len(list_filter(ln, l -> ends_with(rtrim(l), '...') OR
-        |    ends_with(rtrim(l), '…'))) AS BIGINT) AS n_ellipsis_lines,
-        |  CAST((CASE WHEN list_contains(w, 'the') THEN 1 ELSE 0 END) +
-        |       (CASE WHEN list_contains(w, 'be') THEN 1 ELSE 0 END) +
-        |       (CASE WHEN list_contains(w, 'to') THEN 1 ELSE 0 END) +
-        |       (CASE WHEN list_contains(w, 'of') THEN 1 ELSE 0 END) +
-        |       (CASE WHEN list_contains(w, 'and') THEN 1 ELSE 0 END) +
-        |       (CASE WHEN list_contains(w, 'that') THEN 1 ELSE 0 END) +
-        |       (CASE WHEN list_contains(w, 'have') THEN 1 ELSE 0 END) +
-        |       (CASE WHEN list_contains(w, 'with') THEN 1 ELSE 0 END) AS BIGINT) AS n_stopwords_found
-        |FROM c)
-        |SELECT doc_id, n_words, n_word_chars, n_alpha_words, n_symbols, n_lines,
-        |  n_bullet_lines, n_ellipsis_lines, n_stopwords_found,
-        |  (n_words >= 40 AND n_words <= 80) AS ok_word_count,
-        |  (n_word_chars >= 3 * n_words AND n_word_chars <= 10 * n_words) AS ok_word_length,
-        |  (100 * n_symbols <= 10 * n_words) AS ok_symbol_ratio,
-        |  (100 * n_bullet_lines <= 50 * n_lines) AS ok_bullets,
-        |  (100 * n_ellipsis_lines <= 30 * n_lines) AS ok_ellipsis,
-        |  (100 * n_alpha_words >= 80 * n_words) AS ok_alpha_words,
-        |  (n_stopwords_found >= 1) AS ok_stopwords,
-        |  ((n_words >= 40 AND n_words <= 80) AND
-        |   (n_word_chars >= 3 * n_words AND n_word_chars <= 10 * n_words) AND
-        |   (100 * n_symbols <= 10 * n_words) AND
-        |   (100 * n_bullet_lines <= 50 * n_lines) AND
-        |   (100 * n_ellipsis_lines <= 30 * n_lines) AND
-        |   (100 * n_alpha_words >= 80 * n_words) AND
-        |   (n_stopwords_found >= 1)) AS keep
-        |FROM m""".stripMargin,
-    "p_embedding_dedup" ->
-      s"""WITH RECURSIVE e AS MATERIALIZED (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
-         |bk AS MATERIALIZED (${duckBandRows(8, 4, 64)}),
-         |cand AS MATERIALIZED (SELECT DISTINCT x.vec_id AS a, y.vec_id AS b
-         |  FROM bk x JOIN bk y ON x.band = y.band AND x.bucket = y.bucket
-         |  AND x.vec_id < y.vec_id),
-         |pairs AS MATERIALIZED (SELECT a, b FROM (
-         |  SELECT cand.a, cand.b, ROUND(list_dot_product(q.v, n.v) /
-         |    (sqrt(list_dot_product(q.v, q.v)) * sqrt(list_dot_product(n.v, n.v))), 4) AS cos
-         |  FROM cand JOIN e q ON q.vec_id = cand.a JOIN e n ON n.vec_id = cand.b)
-         |  WHERE cos >= 0.4),
-         |u AS (SELECT a AS s1, b AS d1 FROM pairs UNION SELECT b, a FROM pairs),
-         |r AS (SELECT DISTINCT s1 AS id, s1 AS comp FROM u
-         |      UNION SELECT u.d1, r.comp FROM r JOIN u ON u.s1 = r.id),
-         |m AS (SELECT id, MIN(comp) AS keep FROM r GROUP BY id)
-         |SELECT vec_id, COALESCE(m.keep, vec_id) AS keep_id
-         |FROM embeddings LEFT JOIN m ON m.id = vec_id""".stripMargin,
-    "p_ann_lsh" -> annLshSql(3, 2, 4, 64),
-    "p_ann_ivf" -> annIvfSql(3, 16, 4, lloydIters = 2),
-    "p_ann_ivf_hier" -> annIvfHierSql(3, 4, 4, 2, 4),
-    "p_ann_recall_hier" -> annRecallHierSql(3, 4, 4, 2, 4),
-    "p_ann_ivfpq" -> annIvfPqSql(3, 16, 4, m = 8, ksub = 16, refine = 10),
-    "p_ann_pq_index" -> annIvfPqSql(3, 16, 4, m = 8, ksub = 16, refine = 10,
-      queryWhere = " AND vec_id % 25 = 0"),
-    // append ≡ from-scratch (same frozen model): replay the full index
-    "p_ann_incremental" -> annIvfPqSql(3, 16, 4, m = 8, ksub = 16, refine = 10,
-      queryWhere = " AND vec_id % 25 = 5"),
-    // streaming ingest ≡ batch append ≡ from-scratch: the two-micro-batch
-    // grown index serves identical results, so the oracle is the same
-    // full-index replay
-    "e_stream_ann_ingest" -> annIvfPqSql(3, 16, 4, m = 8, ksub = 16,
-      refine = 10, queryWhere = " AND vec_id % 25 = 5"),
-    "p_ann_recall_pq" -> annRecallPqSql(3, 16, 4, m = 8, ksub = 16, refine = 10),
-    "p_ann_recall" ->
-      s"""WITH e AS MATERIALIZED (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
-         |bk AS MATERIALIZED (${duckBandRows(2, 4, 64)}),
-         |cand AS MATERIALIZED (SELECT DISTINCT x.vec_id AS qid, y.vec_id AS nid
-         |  FROM bk x JOIN bk y ON x.band = y.band AND x.bucket = y.bucket
-         |  AND x.vec_id <> y.vec_id),
-         |asc_ AS (SELECT cand.qid AS query_id, cand.nid AS neighbor_id,
-         |    list_dot_product(q.v, n.v) /
-         |      (sqrt(list_dot_product(q.v, q.v)) * sqrt(list_dot_product(n.v, n.v))) AS c
-         |  FROM cand JOIN e q ON q.vec_id = cand.qid JOIN e n ON n.vec_id = cand.nid),
-         |approx AS MATERIALIZED (SELECT query_id, neighbor_id FROM (
-         |  SELECT query_id, neighbor_id,
-         |    ROW_NUMBER() OVER (PARTITION BY query_id ORDER BY c DESC, neighbor_id ASC) AS rnk
-         |  FROM asc_) WHERE rnk <= 3),
-         |esc AS (SELECT q.vec_id AS query_id, y.vec_id AS neighbor_id,
-         |    list_dot_product(q.v, y.v) /
-         |      (sqrt(list_dot_product(q.v, q.v)) * sqrt(list_dot_product(y.v, y.v))) AS c
-         |  FROM e q JOIN e y ON y.vec_id <> q.vec_id),
-         |exact AS MATERIALIZED (SELECT query_id, neighbor_id FROM (
-         |  SELECT query_id, neighbor_id,
-         |    ROW_NUMBER() OVER (PARTITION BY query_id ORDER BY c DESC, neighbor_id ASC) AS rnk
-         |  FROM esc) WHERE rnk <= 3),
-         |j AS (SELECT exact.query_id,
-         |    CASE WHEN a.neighbor_id IS NULL THEN 0 ELSE 1 END AS hit
-         |  FROM exact LEFT JOIN approx a
-         |    ON a.query_id = exact.query_id AND a.neighbor_id = exact.neighbor_id)
-         |SELECT query_id, CAST(COUNT(*) AS BIGINT) AS n_exact,
-         |  CAST(SUM(hit) AS BIGINT) AS n_hit,
-         |  ROUND(CAST(SUM(hit) AS DOUBLE) / COUNT(*), 4) AS recall
-         |FROM j GROUP BY query_id""".stripMargin,
-    "p_lang_id" -> langIdSql,
-    "p_quality" ->
-      s"""WITH t AS (SELECT doc_id, text, $W AS w FROM documents)
-         |SELECT doc_id,
-         |  CAST(len(w) AS BIGINT) AS n_tokens,
-         |  CAST(len(text) AS BIGINT) AS n_chars,
-         |  ROUND(COALESCE(list_sum(list_transform(w, x -> len(x))), 0) /
-         |        CAST(GREATEST(len(w), 1) AS DOUBLE), 4) AS avg_token_len,
-         |  ROUND((len(list_filter(w, x -> x = 'the')) + len(list_filter(w, x -> x = 'a')) +
-         |         len(list_filter(w, x -> x = 'of')) + len(list_filter(w, x -> x = 'and')) +
-         |         len(list_filter(w, x -> x = 'is'))) /
-         |        CAST(GREATEST(len(w), 1) AS DOUBLE), 4) AS stop_ratio
-         |FROM t""".stripMargin,
-    "p_fingerprint" ->
-      s"""WITH t AS (SELECT doc_id, $W AS w FROM documents),
-         |s AS (SELECT doc_id, [md5(array_to_string(w[i:i+2], ' ')) for i in range(1, len(w) - 1)] AS hs FROM t)
-         |SELECT doc_id, md5(COALESCE(array_to_string(
-         |  list_sort(list_filter(hs, h -> substr(h, 32, 1) IN ('0', '1'))), ''), '')) AS fingerprint
-         |FROM s""".stripMargin,
-    "p_repetition" ->
-      s"""WITH t AS (SELECT doc_id, $W AS w FROM documents),
-         |s AS (SELECT doc_id, [array_to_string(w[i:i+1], ' ') for i in range(1, len(w))] AS sh FROM t)
-         |SELECT doc_id, ROUND(CASE WHEN len(sh) > 0
-         |  THEN 1.0 - len(list_distinct(sh)) / CAST(len(sh) AS DOUBLE)
-         |  ELSE 0.0 END, 4) AS rep_ratio
-         |FROM s""".stripMargin,
-    "p_sample_stratified" ->
-      s"""SELECT doc_id, lang FROM documents
-         |WHERE ${duckHex4("md5('42|' || lang || '|' || CAST(doc_id AS VARCHAR))")} < 32768""".stripMargin,
-    "p_mixture_sample" ->
-      s"""SELECT doc_id, source FROM documents
-         |WHERE ${duckHex4("md5('42|' || source || '|' || CAST(doc_id AS VARCHAR))")}
-         |  < CASE source WHEN 'src0' THEN 49152 WHEN 'src1' THEN 16384 END""".stripMargin,
-    "p_importance_sample" -> // waterfilling k replayed over 2 renorm rounds
-      s"""WITH z AS (SELECT SUM(CAST(n_chars AS DOUBLE)) AS zsum,
-         |                  COUNT(*) AS n FROM documents),
-         |k0 AS (SELECT (0.3 * n) AS t, ((0.3 * n) / zsum) AS k FROM z),
-         |r1 AS (SELECT SUM(CASE WHEN CAST(d.n_chars AS DOUBLE) * k0.k >= 1.0
-         |                       THEN 1.0 ELSE 0.0 END) AS c,
-         |              SUM(CASE WHEN CAST(d.n_chars AS DOUBLE) * k0.k >= 1.0
-         |                       THEN 0.0 ELSE CAST(d.n_chars AS DOUBLE) END) AS zu
-         |       FROM documents d, k0),
-         |k1 AS (SELECT k0.t, CASE WHEN r1.zu > 0.0 AND k0.t > r1.c
-         |                         THEN (k0.t - r1.c) / r1.zu ELSE k0.k END AS k
-         |       FROM k0, r1),
-         |r2 AS (SELECT SUM(CASE WHEN CAST(d.n_chars AS DOUBLE) * k1.k >= 1.0
-         |                       THEN 1.0 ELSE 0.0 END) AS c,
-         |              SUM(CASE WHEN CAST(d.n_chars AS DOUBLE) * k1.k >= 1.0
-         |                       THEN 0.0 ELSE CAST(d.n_chars AS DOUBLE) END) AS zu
-         |       FROM documents d, k1),
-         |k2 AS (SELECT CASE WHEN r2.zu > 0.0 AND k1.t > r2.c
-         |                   THEN (k1.t - r2.c) / r2.zu ELSE k1.k END AS k
-         |       FROM k1, r2)
-         |SELECT doc_id, n_chars FROM documents, k2
-         |WHERE ${duckHex4("md5('42|' || CAST(doc_id AS VARCHAR))")}
-         |  < least(1.0, k2.k * CAST(n_chars AS DOUBLE)) * 65536.0""".stripMargin,
-    "p_bigram_lm" ->
-      s"""WITH t AS (SELECT doc_id, $W AS w FROM documents),
-         |b AS (SELECT doc_id, unnest([array_to_string(w[i:i+1], ' ') for i in range(1, len(w))]) AS bg FROM t),
-         |c2 AS (SELECT bg, count(*) AS c2 FROM b GROUP BY 1),
-         |c1 AS (SELECT string_split(bg, ' ')[1] AS w1, SUM(c2) AS c1 FROM c2 GROUP BY 1),
-         |vv AS (SELECT count(*) AS v FROM c1),
-         |s AS (SELECT b.doc_id, ln((c2.c2 + 0.5) / (c1.c1 + 0.5 * vv.v)) AS lp
-         |      FROM b JOIN c2 USING (bg)
-         |      JOIN c1 ON string_split(b.bg, ' ')[1] = c1.w1 CROSS JOIN vv),
-         |a AS (SELECT doc_id, count(*) AS n_bigrams, avg(lp) AS sc FROM s GROUP BY 1)
-         |SELECT d.doc_id, CAST(COALESCE(a.n_bigrams, 0) AS BIGINT) AS n_bigrams,
-         |  ROUND(COALESCE(a.sc, 0.0), 4) AS lm_score
-         |FROM documents d LEFT JOIN a USING (doc_id)""".stripMargin,
-    // DSIR replay: hashed-bigram buckets (60-bit md5 fraction mod 1024),
-    // add-0.5 smoothed target/raw bucket estimates, per-doc n·log-ratio sum
-    "p_dsir" -> {
-      val hb = duckHex15("md5(bg)")
-      s"""WITH t AS (SELECT doc_id, (lang = 'en') AS tgt, $W AS w FROM documents),
-         |b AS (SELECT doc_id, tgt, unnest([array_to_string(w[i:i+1], ' ')
-         |    for i in range(1, len(w))]) AS bg FROM t),
-         |db AS (SELECT doc_id, tgt, ($hb) % 1024 AS bk, count(*) AS n
-         |  FROM b GROUP BY 1, 2, 3),
-         |hist AS (SELECT bk, SUM(CASE WHEN tgt THEN n ELSE 0 END) AS ct,
-         |    SUM(n) AS cr FROM db GROUP BY 1),
-         |tot AS (SELECT CAST(SUM(ct) AS DOUBLE) AS nt,
-         |    CAST(SUM(cr) AS DOUBLE) AS nr FROM hist),
-         |sc AS (SELECT db.doc_id, SUM(db.n) AS nb,
-         |    SUM(db.n * (ln((hist.ct + 0.5) / (tot.nt + 512.0)) -
-         |      ln((hist.cr + 0.5) / (tot.nr + 512.0)))) AS s
-         |  FROM db JOIN hist ON hist.bk = db.bk CROSS JOIN tot GROUP BY 1)
-         |SELECT d.doc_id, CAST(COALESCE(sc.nb, 0) AS BIGINT) AS n_bigrams,
-         |  ROUND(COALESCE(sc.s, 0.0), 6) AS log_weight
-         |FROM documents d LEFT JOIN sc USING (doc_id)""".stripMargin
-    },
-    // 60-bit md5 draw: shard = draw % 8, pos = (draw, id) rank per shard
-    "p_shuffle" -> {
-      val h = duckHex15("md5('42|' || CAST(doc_id AS VARCHAR))")
-      s"""WITH h AS (SELECT doc_id, ($h) AS hv FROM documents)
-         |SELECT doc_id, CAST(hv % 8 AS INT) AS shard,
-         |  CAST(ROW_NUMBER() OVER (PARTITION BY hv % 8
-         |    ORDER BY hv, doc_id) - 1 AS BIGINT) AS pos
-         |FROM h""".stripMargin
-    },
-    // 16-bit md5 split draw vs cumulative name-order thresholds:
-    // test 6554, train 6554+52429=58983, val absorbs the tail
-    "p_hash_split" ->
-      s"""SELECT doc_id, CASE
-         |  WHEN (${duckHex4("md5('42|' || CAST(doc_id AS VARCHAR))")}) < 6554
-         |    THEN 'test'
-         |  WHEN (${duckHex4("md5('42|' || CAST(doc_id AS VARCHAR))")}) < 58983
-         |    THEN 'train'
-         |  ELSE 'val' END AS split
-         |FROM documents""".stripMargin,
-    // prefix-cut budget selection: biggest docs first, running sum caps
-    // each language at 20k chars
-    "p_budget_select" ->
-      """WITH r AS (SELECT doc_id, lang, n_chars,
-        |    ROW_NUMBER() OVER (PARTITION BY lang
-        |      ORDER BY n_chars DESC, doc_id ASC) AS rank,
-        |    SUM(n_chars) OVER (PARTITION BY lang
-        |      ORDER BY n_chars DESC, doc_id ASC
-        |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS cum
-        |  FROM documents)
-        |SELECT doc_id, lang, n_chars, CAST(rank AS BIGINT) AS rank,
-        |  CAST(cum AS BIGINT) AS cum_tokens
-        |FROM r WHERE cum <= 20000""".stripMargin,
-    "p_vocab_oov" ->
-      s"""WITH t AS (SELECT doc_id, $W AS w FROM documents),
-         |tk AS (SELECT doc_id, unnest(w) AS tok FROM t),
-         |cnt AS (SELECT tok, count(*) AS tc FROM tk GROUP BY 1),
-         |voc AS (SELECT tok FROM cnt ORDER BY tc DESC, tok ASC LIMIT 100),
-         |r AS (SELECT tk.doc_id, count(*) AS n_tokens,
-         |        avg(CASE WHEN voc.tok IS NULL THEN 1.0 ELSE 0.0 END) AS orate
-         |      FROM tk LEFT JOIN voc ON tk.tok = voc.tok GROUP BY 1)
-         |SELECT d.doc_id, CAST(COALESCE(r.n_tokens, 0) AS BIGINT) AS n_tokens,
-         |  ROUND(COALESCE(r.orate, 0.0), 4) AS oov_rate
-         |FROM documents d LEFT JOIN r USING (doc_id)""".stripMargin,
-    "p_nb_classifier" -> // full NB retrain + rescore in SQL: md5 75/25
-      // split, Laplace (n+1)/(tot+V), fixed-point micro-nat BIGINT sums
-      s"""WITH tr AS (SELECT doc_id, lang, text FROM documents
-         |  WHERE ${duckHex4("md5('42|' || CAST(doc_id AS VARCHAR))")} < 49152),
-         |te AS (SELECT doc_id, text FROM documents
-         |  WHERE NOT (${duckHex4("md5('42|' || CAST(doc_id AS VARCHAR))")} < 49152)),
-         |tt AS (SELECT lang AS c, unnest($W) AS tok FROM tr),
-         |tc AS (SELECT tok, c, COUNT(*) AS n FROM tt GROUP BY 1, 2),
-         |ct AS (SELECT c, SUM(n) AS tot FROM tc GROUP BY 1),
-         |vv AS (SELECT COUNT(DISTINCT tok) AS v FROM tc),
-         |pr AS (SELECT dc.c,
-         |    CAST(ROUND(LN(CAST(dc.n AS DOUBLE) / (SELECT COUNT(*) FROM tr)) * 1e6) AS BIGINT) AS fp_prior,
-         |    CAST(ROUND(LN(1.0 / CAST(ct.tot + (SELECT v FROM vv) AS DOUBLE)) * 1e6) AS BIGINT) AS fp_unseen
-         |  FROM (SELECT lang AS c, COUNT(*) AS n FROM tr GROUP BY 1) dc
-         |  JOIN ct ON ct.c = dc.c),
-         |md AS (SELECT tc.tok, tc.c,
-         |    CAST(ROUND(LN(CAST(tc.n + 1 AS DOUBLE) / CAST(ct.tot + (SELECT v FROM vv) AS DOUBLE)) * 1e6) AS BIGINT) AS fp
-         |  FROM tc JOIN ct ON ct.c = tc.c),
-         |tk AS (SELECT doc_id AS d, unnest($W) AS tok FROM te),
-         |pc AS (SELECT tk.d, pr.c, SUM(COALESCE(md.fp, pr.fp_unseen)) AS s
-         |  FROM tk CROSS JOIN pr LEFT JOIN md ON md.tok = tk.tok AND md.c = pr.c
-         |  GROUP BY 1, 2),
-         |al AS (SELECT te.doc_id AS d, pr.c,
-         |    CAST(COALESCE(pc.s, 0) + pr.fp_prior AS BIGINT) AS score
-         |  FROM te CROSS JOIN pr LEFT JOIN pc ON pc.d = te.doc_id AND pc.c = pr.c)
-         |SELECT d AS doc_id, c AS predicted, score FROM (
-         |  SELECT d, c, score,
-         |    ROW_NUMBER() OVER (PARTITION BY d ORDER BY score DESC, c ASC) AS rn
-         |  FROM al) WHERE rn = 1""".stripMargin,
-    "e_window_agg" ->
-      """SELECT event_type,
-        |  strftime(date_trunc('hour', ts), '%Y-%m-%d %H') AS window_start,
-        |  count(*) AS n_events, ROUND(SUM(value), 4) AS sum_value
-        |FROM events GROUP BY 1, 2""".stripMargin,
-    // the streaming forms are checked against the BATCH oracles — that IS
-    // the parity claim (same results, incremental execution)
-    "e_stream_window" ->
-      """SELECT event_type,
-        |  strftime(date_trunc('hour', ts), '%Y-%m-%d %H') AS window_start,
-        |  count(*) AS n_events, ROUND(SUM(value), 4) AS sum_value
-        |FROM events GROUP BY 1, 2""".stripMargin,
-    "e_funnel" ->
-      """WITH ev AS (SELECT user_id, event_type, epoch_ms(ts) AS ms FROM events),
-        |s1 AS (SELECT user_id, MIN(ms) AS t1 FROM ev WHERE event_type = 'view' GROUP BY 1),
-        |s2 AS (SELECT e.user_id, MIN(e.ms) AS t2, MIN(s1.t1) AS t1
-        |  FROM ev e JOIN s1 ON s1.user_id = e.user_id
-        |  WHERE e.event_type = 'click' AND e.ms >= s1.t1
-        |    AND e.ms <= s1.t1 + 604800000 GROUP BY 1),
-        |s3 AS (SELECT e.user_id, MIN(e.ms) AS t3
-        |  FROM ev e JOIN s2 ON s2.user_id = e.user_id
-        |  WHERE e.event_type = 'purchase' AND e.ms >= s2.t2
-        |    AND e.ms <= s2.t1 + 604800000 GROUP BY 1),
-        |n AS (SELECT (SELECT count(*) FROM s1) AS n1,
-        |             (SELECT count(*) FROM s2) AS n2,
-        |             (SELECT count(*) FROM s3) AS n3)
-        |SELECT CAST(1 AS INT) AS step, 'view' AS event_type, n1 AS n_users,
-        |  ROUND(CAST(n1 AS DOUBLE) / CAST(n1 AS DOUBLE), 6) AS conversion FROM n
-        |UNION ALL SELECT 2, 'click', n2,
-        |  ROUND(CAST(n2 AS DOUBLE) / CAST(n1 AS DOUBLE), 6) FROM n
-        |UNION ALL SELECT 3, 'purchase', n3,
-        |  ROUND(CAST(n3 AS DOUBLE) / CAST(n1 AS DOUBLE), 6) FROM n""".stripMargin,
-    "e_cohort" ->
-      """WITH ev AS (SELECT user_id, epoch_ms(ts) // 604800000 AS wk FROM events),
-        |c AS (SELECT user_id, MIN(wk) AS cw FROM ev GROUP BY 1)
-        |SELECT cw AS cohort_week, wk - cw AS week_offset,
-        |  count(DISTINCT ev.user_id) AS n_users
-        |FROM ev JOIN c USING (user_id) GROUP BY 1, 2""".stripMargin,
-    // equal-split attribution: same join + 1/n share sum, 4dp
-    "e_attribution_linear" ->
-      """WITH t AS (SELECT event_id, user_id, epoch_ms(ts) AS tms
-        |  FROM events WHERE event_type = 'view'),
-        |c AS (SELECT event_id AS cid, user_id, epoch_ms(ts) AS cms
-        |  FROM events WHERE event_type = 'purchase'),
-        |p AS (SELECT t.event_id, t.user_id, c.cid FROM t
-        |  JOIN c ON c.user_id = t.user_id
-        |  AND t.tms <= c.cms AND t.tms >= c.cms - 43200000),
-        |n AS (SELECT cid, COUNT(*) AS n FROM p GROUP BY 1)
-        |SELECT p.event_id, p.user_id,
-        |  COUNT(*) AS n_conversions,
-        |  ROUND(SUM(1.0 / n.n), 4) AS credit
-        |FROM p JOIN n ON n.cid = p.cid
-        |GROUP BY 1, 2""".stripMargin,
-    // integer RFM metrics (cent sums — no order-dependent float adds),
-    // ntile over the identical (metric desc, user_id) total order
-    "e_rfm" ->
-      """WITH a AS (SELECT user_id,
-        |    MAX(epoch_ms(ts)) // 86400000 AS recency_day,
-        |    COUNT(*) AS frequency,
-        |    CAST(SUM(CAST(FLOOR(value * 100) AS BIGINT)) AS BIGINT) AS monetary_cents
-        |  FROM events GROUP BY 1)
-        |SELECT user_id, recency_day, frequency, monetary_cents,
-        |  CAST(NTILE(5) OVER (ORDER BY recency_day DESC, user_id) AS BIGINT) AS r,
-        |  CAST(NTILE(5) OVER (ORDER BY frequency DESC, user_id) AS BIGINT) AS f,
-        |  CAST(NTILE(5) OVER (ORDER BY monetary_cents DESC, user_id) AS BIGINT) AS m
-        |FROM a""".stripMargin,
-    // same sessionize rule as e_sessionize, path assembled by
-    // string_agg ORDER BY the in-session rank; (count desc, path asc)
-    // is a total order so the LIMIT cut is unambiguous on both sides
-    "e_paths" ->
-      """WITH x AS (SELECT user_id, event_id, ts, event_type,
-        |  CASE WHEN epoch_ms(ts) - LAG(epoch_ms(ts)) OVER
-        |    (PARTITION BY user_id ORDER BY ts, event_id) > 1800000 THEN 1 ELSE 0 END AS nsess
-        |  FROM events),
-        |y AS (SELECT user_id, event_type, ts, event_id, SUM(nsess) OVER
-        |  (PARTITION BY user_id ORDER BY ts, event_id ROWS UNBOUNDED PRECEDING) AS sess
-        |  FROM x),
-        |z AS (SELECT user_id, sess, event_type, ROW_NUMBER() OVER
-        |  (PARTITION BY user_id, sess ORDER BY ts, event_id) AS rn FROM y),
-        |p AS (SELECT user_id, sess,
-        |    string_agg(event_type, '>' ORDER BY rn) AS path
-        |  FROM z WHERE rn <= 5 GROUP BY 1, 2)
-        |SELECT path, count(*) AS n_sessions FROM p
-        |GROUP BY 1 ORDER BY n_sessions DESC, path LIMIT 12""".stripMargin,
-    "e_stream_funnel" ->
-      """WITH ev AS (SELECT user_id, event_type, epoch_ms(ts) AS ms FROM events),
-        |s1 AS (SELECT user_id, MIN(ms) AS t1 FROM ev WHERE event_type = 'view' GROUP BY 1),
-        |s2 AS (SELECT e.user_id, MIN(e.ms) AS t2, MIN(s1.t1) AS t1
-        |  FROM ev e JOIN s1 ON s1.user_id = e.user_id
-        |  WHERE e.event_type = 'click' AND e.ms >= s1.t1
-        |    AND e.ms <= s1.t1 + 604800000 GROUP BY 1),
-        |s3 AS (SELECT e.user_id, MIN(e.ms) AS t3, MIN(s2.t1) AS t1
-        |  FROM ev e JOIN s2 ON s2.user_id = e.user_id
-        |  WHERE e.event_type = 'purchase' AND e.ms >= s2.t2
-        |    AND e.ms <= s2.t1 + 604800000 GROUP BY 1)
-        |SELECT user_id, t1 AS anchor_ms, t3 AS converted_ms,
-        |  t3 - t1 AS duration_ms FROM s3""".stripMargin,
-    // keep-latest upsert view: batch argmax per user over the full-
-    // precision (ts, event_id) order the stream's max(struct) follows
-    "e_stream_latest" ->
-      """WITH r AS (SELECT user_id, epoch_ms(ts) AS ms, event_id, event_type, value,
-        |  ROW_NUMBER() OVER (PARTITION BY user_id
-        |    ORDER BY ts DESC, event_id DESC) AS rn FROM events)
-        |SELECT user_id, CAST(ms AS BIGINT) AS last_ms,
-        |  event_id AS last_event_id, event_type AS last_event_type,
-        |  value AS last_value
-        |FROM r WHERE rn = 1""".stripMargin,
-    "e_stream_anomaly" ->
-      """WITH c AS (
-        |  SELECT strftime(date_trunc('hour', ts), '%Y-%m-%d %H') AS window_start,
-        |    event_type, count(*) AS n_events
-        |  FROM events GROUP BY 1, 2),
-        |l AS (SELECT *,
-        |    lag(n_events, 1) OVER w + lag(n_events, 2) OVER w
-        |      + lag(n_events, 3) OVER w AS prev_sum
-        |  FROM c WINDOW w AS (PARTITION BY event_type ORDER BY window_start))
-        |SELECT window_start, event_type, n_events, prev_sum,
-        |  COALESCE(n_events * 6 > 3 * prev_sum, FALSE) AS spike
-        |FROM l""".stripMargin,
-    "e_stream_topk" ->
-      """WITH c AS (
-        |  SELECT strftime(date_trunc('hour', ts), '%Y-%m-%d %H') AS window_start,
-        |    event_type, user_id, count(*) AS n_events
-        |  FROM events GROUP BY 1, 2, 3)
-        |SELECT window_start, event_type, user_id, n_events, rank FROM (
-        |  SELECT *, ROW_NUMBER() OVER (PARTITION BY window_start, event_type
-        |    ORDER BY n_events DESC, user_id ASC) AS rank FROM c)
-        |WHERE rank <= 3""".stripMargin,
-    "e_stream_dedup" ->
-      "SELECT DISTINCT user_id, event_type FROM events",
-    // KMV replay: per (hour, type) the k-th smallest distinct 60-bit md5
-    // fraction of user_id; estimate (k-1)/(h_k/2^60), exact count below k
-    "e_stream_kmv_distinct" -> {
-      val hv = duckHex15("md5(CAST(user_id AS VARCHAR))")
-      s"""WITH h AS (
-         |  SELECT DISTINCT strftime(date_trunc('hour', ts), '%Y-%m-%d %H')
-         |      AS window_start,
-         |    event_type, ($hv) AS hv
-         |  FROM events WHERE user_id IS NOT NULL AND event_type IS NOT NULL),
-         |r AS (SELECT window_start, event_type, hv,
-         |    ROW_NUMBER() OVER (PARTITION BY window_start, event_type
-         |      ORDER BY hv) AS rn,
-         |    COUNT(*) OVER (PARTITION BY window_start, event_type) AS nd
-         |  FROM h)
-         |SELECT window_start, event_type,
-         |  ROUND(CASE WHEN nd < 16 THEN CAST(nd AS DOUBLE)
-         |    ELSE 15.0 / (CAST(hv AS DOUBLE) / 1152921504606846976.0) END, 4)
-         |    AS approx_distinct
-         |FROM r WHERE rn = CASE WHEN nd < 16 THEN 1 ELSE 16 END""".stripMargin
-    },
-    "e_stream_enrich" ->
-      """SELECT c.c_nationkey AS nation_key, count(*) AS n_events,
-        |  ROUND(SUM(e.value), 4) AS sum_value
-        |FROM events e JOIN customer c ON c.c_custkey = e.user_id
-        |GROUP BY 1""".stripMargin,
-    "e_stream_join" ->
-      """SELECT a.event_id AS click_id, b.event_id AS purchase_id, a.user_id,
-        |  epoch_ms(b.ts) - epoch_ms(a.ts) AS lag_ms
-        |FROM events a JOIN events b ON b.user_id = a.user_id
-        |WHERE a.event_type = 'click' AND b.event_type = 'purchase'
-        |  AND epoch_ms(b.ts) - epoch_ms(a.ts) BETWEEN 0 AND 1800000""".stripMargin,
-    "e_stream_segment_dedup" ->
-      """WITH w AS (SELECT doc_id, string_split(text, ' ') AS ws FROM documents),
-        |seg AS (SELECT doc_id, CAST(i - 1 AS INT) AS pos,
-        |          array_to_string(ws[(i-1)*4+1:i*4], ' ') AS segment
-        |        FROM w, range(1, 100000) r(i) WHERE (i-1)*4 < len(ws))
-        |SELECT doc_id, pos, segment,
-        |  row_number() OVER (PARTITION BY segment ORDER BY doc_id, pos) <= 2 AS kept
-        |FROM seg""".stripMargin,
-    // same computation as p_host_graph — the streaming row replays the
-    // one-file corpus as a single micro-batch, so complete-mode output
-    // equals the batch host graph row-for-row
-    "e_stream_link_graph" ->
-      s"""$pageFixtureCte,
-        |l AS (SELECT url, link FROM (SELECT url, unnest(list_concat(
-        |    regexp_extract_all(html, '(?is)href\\s*=\\s*"([^"]*)"', 1),
-        |    regexp_extract_all(html, '(?is)href\\s*=\\s*''([^'']*)''', 1)))
-        |  AS link FROM pg0) WHERE len(link) > 0),
-        |d AS (SELECT ${hostKeySql("url")} AS src_host,
-        |  CASE WHEN link LIKE '/%' AND link NOT LIKE '//%'
-        |    THEN ${hostKeySql("url")}
-        |    ELSE ${hostKeySql("link")} END AS dst_host FROM l)
-        |SELECT src_host, dst_host, CAST(COUNT(*) AS BIGINT) AS n_links
-        |FROM d WHERE src_host IS NOT NULL AND dst_host IS NOT NULL
-        |GROUP BY 1, 2""".stripMargin,
-    "e_stream_sessionize" ->
-      """WITH x AS (SELECT user_id, event_id, ts, epoch_ms(ts) AS ms,
-        |  CASE WHEN epoch_ms(ts) - LAG(epoch_ms(ts)) OVER
-        |    (PARTITION BY user_id ORDER BY ts, event_id) > 1800000 THEN 1 ELSE 0 END AS nsess
-        |  FROM events),
-        |y AS (SELECT user_id, ms, SUM(nsess) OVER
-        |  (PARTITION BY user_id ORDER BY ts, event_id ROWS UNBOUNDED PRECEDING) AS sess
-        |  FROM x),
-        |s AS (SELECT user_id, sess, CAST(MIN(ms) AS BIGINT) AS session_start_ms,
-        |    count(*) AS n_events, CAST(MAX(ms) - MIN(ms) AS BIGINT) AS duration_ms
-        |  FROM y GROUP BY 1, 2),
-        |m AS (SELECT user_id, MAX(sess) AS last_sess FROM s GROUP BY 1)
-        |SELECT s.user_id, s.session_start_ms, s.n_events, s.duration_ms
-        |FROM s JOIN m ON m.user_id = s.user_id AND s.sess < m.last_sess""".stripMargin,
-    "e_sessionize" ->
-      """WITH x AS (SELECT user_id, event_id, ts, epoch_ms(ts) AS ms,
-        |  CASE WHEN epoch_ms(ts) - LAG(epoch_ms(ts)) OVER
-        |    (PARTITION BY user_id ORDER BY ts, event_id) > 1800000 THEN 1 ELSE 0 END AS nsess
-        |  FROM events),
-        |y AS (SELECT user_id, ms, SUM(nsess) OVER
-        |  (PARTITION BY user_id ORDER BY ts, event_id ROWS UNBOUNDED PRECEDING) AS sess
-        |  FROM x)
-        |SELECT user_id, CAST(sess AS BIGINT) AS session_idx, count(*) AS n_events,
-        |  CAST(MAX(ms) - MIN(ms) AS BIGINT) AS duration_ms
-        |FROM y GROUP BY 1, 2""".stripMargin,
-    "e_asof_attribution" ->
-      """WITH u AS (
-        |  SELECT user_id, epoch_ms(ts) AS t, 0 AS side,
-        |         event_id AS pid, epoch_ms(ts) AS pts, NULL AS lid
-        |  FROM events WHERE event_type = 'view'
-        |  UNION ALL
-        |  SELECT user_id, epoch_ms(ts), 1, NULL, NULL, event_id
-        |  FROM events WHERE event_type = 'purchase'),
-        |w AS (SELECT user_id, t, side, lid,
-        |    last_value(pid IGNORE NULLS) OVER
-        |      (PARTITION BY user_id ORDER BY t, side, pid
-        |       ROWS UNBOUNDED PRECEDING) AS vid,
-        |    last_value(pts IGNORE NULLS) OVER
-        |      (PARTITION BY user_id ORDER BY t, side, pid
-        |       ROWS UNBOUNDED PRECEDING) AS vts
-        |  FROM u)
-        |SELECT CAST(lid AS BIGINT) AS event_id, user_id,
-        |  CAST(vid AS BIGINT) AS view_event_id,
-        |  CAST(t - vts AS BIGINT) AS gap_ms
-        |FROM w WHERE side = 1""".stripMargin,
-    // forward as-of: identical scan in DESCENDING time — the running
-    // last-ignore-nulls then carries the nearest LATER purchase
-    "e_asof_forward" ->
-      """WITH u AS (
-        |  SELECT user_id, epoch_ms(ts) AS t, 0 AS side,
-        |         event_id AS pid, epoch_ms(ts) AS pts, NULL AS lid
-        |  FROM events WHERE event_type = 'purchase'
-        |  UNION ALL
-        |  SELECT user_id, epoch_ms(ts), 1, NULL, NULL, event_id
-        |  FROM events WHERE event_type = 'view'),
-        |w AS (SELECT user_id, t, side, lid,
-        |    last_value(pid IGNORE NULLS) OVER
-        |      (PARTITION BY user_id ORDER BY t DESC, side, pid
-        |       ROWS UNBOUNDED PRECEDING) AS nid,
-        |    last_value(pts IGNORE NULLS) OVER
-        |      (PARTITION BY user_id ORDER BY t DESC, side, pid
-        |       ROWS UNBOUNDED PRECEDING) AS nts
-        |  FROM u)
-        |SELECT CAST(lid AS BIGINT) AS event_id, user_id,
-        |  CAST(nid AS BIGINT) AS next_event_id,
-        |  CAST(nts - t AS BIGINT) AS gap_ms
-        |FROM w WHERE side = 1""".stripMargin
-  )
 }

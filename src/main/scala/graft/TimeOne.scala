@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Scratch: time one named query (or a comma-separated sequence, timed
  * in order within ONE JVM — for cross-query interference probes) N times
  * at a given SF dir. */
@@ -10,16 +8,7 @@ object TimeOne {
     val names = args(0).split(",")
     val sfDir = if (args.length > 1) args(1) else "/root/testdata/sf0.1"
     val n = if (args.length > 2) args(2).toInt else 3
-    val spark = SparkSession.builder()
-      .master("local[16]")
-      .config("spark.sql.shuffle.partitions", "16")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.serializer", "org.apache.spark.serializer.KryoSerializer")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = SparkEntry.harnessSession(defaultCpus = 16)
     import org.apache.spark.sql.functions._
     spark.read.parquet(s"$sfDir/lineitem.parquet")
       .groupBy("l_returnflag").agg(count(md5(concat_ws("", col("l_orderkey"))))).count()

@@ -1,31 +1,21 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
   def main(args: Array[String]): Unit = {
     // optional 3rd arg: comma-separated query names (local iteration aid;
-    // the driver always runs the full set)
+    // the driver always runs the full set). A name that matches no row
+    // fails before any Spark job runs, instead of running nothing.
     val (sfDir, outDir, only) = args match {
       case Array(s, o) => (s, o, None)
       case Array(s, o, names) => (s, o, Some(names.split(",").toSet))
     }
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "16")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // match Bench (and production): AQE coalesces the 32-partition
-      // shuffles of the tiny fixture graphs — every query result is
-      // value-deterministic by design, so runtime re-planning is safe
-      .config("spark.sql.adaptive.enabled", "true")
-      // driver testdata writes TIMESTAMP(NANOS) parquet, unsupported by
-      // Spark's reader — surface it as Long nanos instead
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val unknown = only.getOrElse(Set.empty) -- SparkEntry.queries.keySet
+    if (unknown.nonEmpty)
+      throw new IllegalArgumentException(
+        s"unknown gate rows: ${unknown.toSeq.sorted.mkString(", ")}")
+    val spark = SparkEntry.harnessSession(defaultCpus = 16)
     new java.io.File(outDir).mkdirs()
     // a crashed query must be VISIBLE in the artifacts, not just stderr —
     // otherwise a failure reads as "not tested" in the correctness report
