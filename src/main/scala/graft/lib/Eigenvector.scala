@@ -125,16 +125,8 @@ class Eigenvector(g: GraphFrame) extends LocalTail {
    * from round 1 on — filled in closed form by the join-back. */
   private def runLocal(e: DataFrame): DataFrame = {
     import scala.collection.mutable
-    // (src, dst, w) with w in the sort key: parallel edges with distinct
-    // weights accumulate in a fixed order regardless of partitioning
-    val edges = e.collect().iterator
-      .filter(r => !r.isNullAt(0) && !r.isNullAt(1))
-      .map(r => (r.get(0), r.get(1), if (r.isNullAt(2)) 0.0 else r.getDouble(2)))
-      .toArray
-      .sortBy { case (s, d, w) => (String.valueOf(s), String.valueOf(d), w) }
-    val epDF = e.select(col(SRC).as(ID)).union(e.select(col(DST).as(ID))).distinct()
-    val vids = g.vertices.select(col(ID)).join(epDF, Seq(ID), "left_semi")
-      .collect().map(_.get(0)).sortBy(String.valueOf(_))
+    val edges = LocalTail.collectWeightedEdges(e)
+    val vids = LocalTail.endpointIds(e, g)
     val valid = vids.toSet
     var x = mutable.HashMap.empty[Any, Double]
     vids.foreach(v => x(v) = 1.0)

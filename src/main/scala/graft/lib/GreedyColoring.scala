@@ -135,9 +135,8 @@ class GreedyColoring(g: GraphFrame) extends LocalTail {
    * and the SQL oracle — over sorted adjacency, so the coloring is a
    * pure function of the graph value. */
   private def runLocal(und: DataFrame): DataFrame = {
-    val (edges, _) = LocalTail.collectGraph(und, g)
-    val ids = g.vertices.select(col(ID)).collect().map(_.get(0))
-      .sortBy(String.valueOf(_))
+    val edges = LocalTail.collectEdges(und)
+    val ids = LocalTail.vertexIds(g)
     val adj = mutable.HashMap.empty[Any, mutable.ArrayBuffer[Any]]
     for ((s, d) <- edges) {
       adj.getOrElseUpdate(s, mutable.ArrayBuffer.empty) += d

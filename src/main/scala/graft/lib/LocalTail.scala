@@ -81,8 +81,10 @@ trait LocalTail {
 /**
  * Semantics parity of the collect / join-back helpers with the
  * distributed joins is exact by construction:
- *  - edges whose endpoint is absent from the vertex table contribute
- *    nothing (the distributed state join drops them);
+ *  - in the vertex-state algorithms, edges whose endpoint is absent from
+ *    the vertex table contribute nothing (the distributed state join drops
+ *    them; the tails keep only [[endpointIds]]); path searches
+ *    (Centrality) traverse such an endpoint like their frontier joins do;
  *  - null endpoints contribute nothing (join keys never match null);
  *  - multi-edges are kept (the distributed sum counts duplicates);
  *  - accumulation runs in sorted-edge order, so the result is a pure
@@ -102,22 +104,40 @@ private[lib] object LocalTail {
     try body(df) finally if (pin) df.unpersist(false)
   }
 
-  /** Collect `(src, dst)` pairs (sorted, null-free) plus the endpoint ids
-   * that actually exist in the vertex table. Two bounded jobs: the edge
-   * collect reads the pinned probe; the endpoint filter is a semi-join
-   * of the (huge) vertex table against the (small) endpoint set. */
-  def collectGraph(e: DataFrame, g: GraphFrame): (Array[(Any, Any)], Array[Any]) = {
-    import GraphFrame.{ID, SRC, DST}
-    val edges = e.collect().iterator
+  /** `(src, dst)` pairs from the first two columns of `e`, null-free and
+   * sorted by their string forms: one bounded collect of the pinned probe. */
+  def collectEdges(e: DataFrame): Array[(Any, Any)] =
+    e.collect().iterator
       .filter(r => !r.isNullAt(0) && !r.isNullAt(1))
       .map(r => (r.get(0), r.get(1))).toArray
       .sortBy { case (s, d) => (String.valueOf(s), String.valueOf(d)) }
+
+  /** `(src, dst, w)` triples from the first three columns of `e`: null
+   * endpoints dropped, a null weight read as 0.0, sorted by `(src, dst, w)`
+   * so parallel edges with distinct weights accumulate in a fixed order. */
+  def collectWeightedEdges(e: DataFrame): Array[(Any, Any, Double)] =
+    e.collect().iterator
+      .filter(r => !r.isNullAt(0) && !r.isNullAt(1))
+      .map(r => (r.get(0), r.get(1), if (r.isNullAt(2)) 0.0 else r.getDouble(2)))
+      .toArray
+      .sortBy { case (s, d, w) => (String.valueOf(s), String.valueOf(d), w) }
+
+  /** The vertex-table ids that are endpoints of `e`, sorted: a semi-join
+   * of the (huge) vertex table against the (small) endpoint set. */
+  def endpointIds(e: DataFrame, g: GraphFrame): Array[Any] = {
+    import GraphFrame.{ID, SRC, DST}
     val epDF = e.select(col(SRC).as(ID)).union(e.select(col(DST).as(ID))).distinct()
-    val valid = g.vertices.select(col(ID)).join(epDF, Seq(ID), "left_semi")
-      .collect().map(_.get(0))
-      .sortBy(String.valueOf(_))
-    (edges, valid)
+    g.vertices.select(col(ID)).join(epDF, Seq(ID), "left_semi")
+      .collect().map(_.get(0)).sortBy(String.valueOf(_))
   }
+
+  /** Every vertex id, sorted by string form. */
+  def vertexIds(g: GraphFrame): Array[Any] =
+    g.vertices.select(col(GraphFrame.ID)).collect().map(_.get(0)).sortBy(String.valueOf(_))
+
+  /** [[collectEdges]] plus [[endpointIds]], for the tails that need both. */
+  def collectGraph(e: DataFrame, g: GraphFrame): (Array[(Any, Any)], Array[Any]) =
+    (collectEdges(e), endpointIds(e, g))
 
   /** Local relation `(id, <scores...>)` with the graph's own id type,
    * broadcast-joined back onto the full vertex table; `fill` supplies the

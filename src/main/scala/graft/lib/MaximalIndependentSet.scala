@@ -110,9 +110,8 @@ class MaximalIndependentSet(g: GraphFrame) extends LocalTail {
    * oracle. Pure function of the graph value (sorted adjacency). */
   private def runLocal(und: DataFrame): DataFrame = {
     import scala.collection.mutable
-    val (edges, _) = LocalTail.collectGraph(und, g)
-    val ids = g.vertices.select(col(ID)).collect().map(_.get(0))
-      .sortBy(String.valueOf(_))
+    val edges = LocalTail.collectEdges(und)
+    val ids = LocalTail.vertexIds(g)
     val adj = mutable.HashMap.empty[Any, mutable.ArrayBuffer[Any]]
     for ((s, d) <- edges) {
       adj.getOrElseUpdate(s, mutable.ArrayBuffer.empty) += d

@@ -125,12 +125,8 @@ class TwoConnectivity(g: GraphFrame) extends LocalTail {
     val idType = g.vertices.schema(ID).dataType
     val ord = UnionFind.sparkOrdering(idType).getOrElse(
       Ordering.by[Any, String](String.valueOf))
-    val edges = und.collect().iterator
-      .filter(r => !r.isNullAt(0) && !r.isNullAt(1))
-      .map(r => (r.get(0), r.get(1))).toArray
-      .sortBy { case (a, b) => (String.valueOf(a), String.valueOf(b)) }
-    val vids = g.vertices.select(col(ID)).collect().map(_.get(0))
-      .sortBy(String.valueOf(_))
+    val edges = LocalTail.collectEdges(und)
+    val vids = LocalTail.vertexIds(g)
     val adj = mutable.HashMap.empty[Any, mutable.ArrayBuffer[Any]]
     edges.foreach { case (a, b) =>
       adj.getOrElseUpdate(a, mutable.ArrayBuffer.empty) += b

@@ -11,7 +11,7 @@ import org.apache.spark.sql.functions._
  * Results themselves are lineage-cut (IterationManager.finish), so the
  * caller-side cleanup is `GraphFrame.release` (Dataset.unpersist kept
  * for any CacheManager-backed frames a result may still carry). */
-class CacheHygieneSpec extends TestBase {
+class CacheHygieneSpec extends TestBase with TailCases {
   import spark.implicits._
 
   private def leftoverIds(): Set[Int] =
@@ -166,75 +166,8 @@ class CacheHygieneSpec extends TestBase {
   // used to uncache the caller's frame — on the tail (threshold high) and
   // the distributed (threshold 0) path alike. (b) When the probe's count
   // throws, whatever the gate pinned is released again: no persisted RDD
-  // and no CacheManager entry is left behind.
-  private case class TailCase(name: String, edgeCols: Seq[String],
-      run: (GraphFrame, Long) => org.apache.spark.sql.DataFrame)
-
-  private val tailCases = Seq(
-    TailCase("connectedComponents", Nil,
-      (g, t) => g.connectedComponents.setSmallGraphThreshold(t).run()),
-    TailCase("stronglyConnectedComponents", Nil,
-      (g, t) => g.stronglyConnectedComponents.maxIter(3).setSmallGraphThreshold(t).run()),
-    TailCase("labelPropagation", Nil,
-      (g, t) => g.labelPropagation.maxIter(2).setSmallGraphThreshold(t).run()),
-    TailCase("pageRank", Nil,
-      (g, t) => g.pageRank.maxIter(2).setSmallGraphThreshold(t).run().vertices),
-    TailCase("parallelPersonalizedPageRank", Nil,
-      (g, t) => g.parallelPersonalizedPageRank.sourceIds(Seq("a")).maxIter(2)
-        .setSmallGraphThreshold(t).run().vertices),
-    TailCase("kCore", Nil, (g, t) => g.kCore.setSmallGraphThreshold(t).run()),
-    TailCase("hits", Nil, (g, t) => g.hits.maxIter(2).setSmallGraphThreshold(t).run()),
-    TailCase("katz", Nil, (g, t) => g.katz.maxIter(2).setSmallGraphThreshold(t).run()),
-    TailCase("eigenvector", Nil,
-      (g, t) => g.eigenvector.maxIter(2).setSmallGraphThreshold(t).run()),
-    TailCase("salsa", Nil, (g, t) => g.salsa.maxIter(2).setSmallGraphThreshold(t).run()),
-    TailCase("simRank", Nil,
-      (g, t) => g.simRank.maxIter(1).setSmallGraphThreshold(t).run()),
-    TailCase("twoConnectivity", Nil,
-      (g, t) => g.twoConnectivity.setSmallGraphThreshold(t).bridges()),
-    TailCase("minimumSpanningForest", Seq("w"),
-      (g, t) => g.minimumSpanningForest.weightCol("w").setSmallGraphThreshold(t).run()),
-    TailCase("betweenness", Nil, (g, t) => g.betweenness.setSmallGraphThreshold(t).run()),
-    TailCase("betweenness edges", Nil,
-      (g, t) => g.betweenness.setSmallGraphThreshold(t).runEdges()),
-    TailCase("betweenness weighted", Seq("w"),
-      (g, t) => g.betweenness.weightCol("w").setSmallGraphThreshold(t).run()),
-    TailCase("closeness", Nil, (g, t) => g.closeness.setSmallGraphThreshold(t).run()),
-    TailCase("closeness weighted", Seq("w"),
-      (g, t) => g.closeness.weightCol("w").setSmallGraphThreshold(t).run()),
-    TailCase("eccentricity", Nil, (g, t) => g.eccentricity.setSmallGraphThreshold(t).run()),
-    TailCase("eccentricity weighted", Seq("w"),
-      (g, t) => g.eccentricity.weightCol("w").setSmallGraphThreshold(t).run()),
-    TailCase("detectingCycles", Nil,
-      (g, t) => g.detectingCycles.maxIter(3).setSmallGraphThreshold(t).run()),
-    TailCase("maximalIndependentSet", Nil,
-      (g, t) => g.maximalIndependentSet.setHashMode("md5").setSmallGraphThreshold(t).run()),
-    TailCase("maximalMatching", Nil,
-      (g, t) => g.maximalMatching.setSmallGraphThreshold(t).run()),
-    TailCase("greedyColoring", Nil,
-      (g, t) => g.greedyColoring.setHashMode("md5").setSmallGraphThreshold(t).run()),
-    TailCase("louvain", Nil, (g, t) => g.louvain.maxIter(2).setSmallGraphThreshold(t).run()),
-    TailCase("independentCascade", Nil,
-      (g, t) => new lib.IndependentCascade(g).p(1.0).maxIter(2)
-        .setSmallGraphThreshold(t).run(Seq("a"))),
-    TailCase("temporalReachability", Seq("time"),
-      (g, t) => new lib.TemporalReachability(g).source("a").maxIter(2)
-        .setSmallGraphThreshold(t).run()))
-
-  /** The friends graph's edges narrowed to (src, dst) plus `extra` columns;
-   * `src` is wrapped in `wrapSrc`. Built over an RDD, not a local
-   * relation, so the optimizer cannot evaluate `wrapSrc` while planning:
-   * it runs in the first job that reads the edges. */
-  private def tailEdges(extra: Seq[String],
-      wrapSrc: org.apache.spark.sql.Column => org.apache.spark.sql.Column = c => c) = {
-    val base = spark.createDataFrame(friends.edges.rdd, friends.edges.schema)
-    val cols = Seq(wrapSrc(col("src")).as("src"), col("dst")) ++ extra.map {
-      case "w" => lit(1.0).as("w")
-      case "time" => lit(1.0).as("time")
-    }
-    base.select(cols: _*)
-  }
-
+  // and no CacheManager entry is left behind. The table of builders is
+  // [[TailCases]].
   test("driver-tail gate keeps a caller-cached edge frame cached on both paths") {
     val evicted = for (c <- tailCases; t <- Seq(100000L, 0L)) yield {
       spark.catalog.clearCache()
@@ -268,6 +201,31 @@ class CacheHygieneSpec extends TestBase {
       else Some(s"${c.name}: RDDs ${rdds.toSeq.sorted}, cache entries left: $entries")
     }
     assert(leaks.isEmpty, "left pinned frames after a failed probe")
+  }
+
+  // The distributed centrality bodies cut one frame per level and per
+  // fixpoint round; a join that throws mid-search must release every cut
+  // made so far, not only the gate's pin. The failure sits in one edge's
+  // dst, so it fires in the level-1 join, after the level-0 cut.
+  test("distributed centralities release their level frames when a level join throws") {
+    val centrality = Seq("betweenness", "closeness", "eccentricity")
+    val leaks = tailCases.filter(c => centrality.exists(c.name.startsWith)).flatMap { c =>
+      spark.catalog.clearCache()
+      spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(true))
+      val edges = tailEdges(c.edgeCols,
+        wrapDst = d => when(d === "b", raise_error(lit("level failure"))).otherwise(d))
+      val before = leftoverIds()
+      val err = intercept[Exception] {
+        c.run(GraphFrame(friends.vertices, edges), 0L).count()
+      }
+      assert(String.valueOf(err.getMessage).contains("level failure"),
+        s"${c.name} failed elsewhere: $err")
+      val rdds = leftoverIds() -- before
+      val entries = !org.apache.spark.sql.graftshim.CacheProbe.isEmpty(spark)
+      if (rdds.isEmpty && !entries) None
+      else Some(s"${c.name}: RDDs ${rdds.toSeq.sorted}, cache entries left: $entries")
+    }
+    assert(leaks.isEmpty, "left level frames after a failed join")
   }
 
   // r15 (ADVICE item): hostRank's host-edge pin is operator-internal —

@@ -299,6 +299,20 @@ class CentralitySpec extends TestBase {
       GraphFrame(v, e.withColumn("w", lit(0.0))).closeness.weightCol("w").run())
   }
 
+  test("weighted centralities traverse an endpoint missing from the vertex table") {
+    // vertices {a, b}, edges a->x->b: x is no vertex, but the distributed
+    // search still reaches b through it, and so must the driver tail
+    val g = GraphFrame(Seq("a", "b").toDF("id"),
+      Seq(("a", "x", 1.0), ("x", "b", 2.0)).toDF("src", "dst", "w"))
+    def scores(t: Long): Seq[Set[Seq[Any]]] = Seq(
+      rows(g.closeness.weightCol("w").setSmallGraphThreshold(t).run()),
+      rows(g.eccentricity.weightCol("w").setSmallGraphThreshold(t).run()),
+      rows(g.betweenness.weightCol("w").setSmallGraphThreshold(t).run()))
+    val local = scores(100000)
+    assert(local == scores(0))
+    assert(local(1) == Set(Seq("a", 3.0), Seq("b", 0.0)), local(1))
+  }
+
   test("centrality: parallel edges collapse, self-loops are inert") {
     val v = Seq(0L, 1L, 2L).toDF("id")
     val e = Seq((0L, 1L), (0L, 1L), (1L, 1L), (1L, 2L)).toDF("src", "dst")
@@ -325,7 +339,8 @@ class CentralitySpec extends TestBase {
         () => g.closeness.setSmallGraphThreshold(0).run(),
         () => wg.closeness.weightCol("w").setSmallGraphThreshold(0).run(),
         () => g.eccentricity.setSmallGraphThreshold(0).run(),
-        () => wg.eccentricity.weightCol("w").setSmallGraphThreshold(0).run())
+        () => wg.eccentricity.weightCol("w").setSmallGraphThreshold(0).run(),
+        () => g.betweenness.setSmallGraphThreshold(0).runEdges())
       for (f <- exact) {
         val ex = intercept[IllegalArgumentException](f().collect())
         assert(ex.getMessage.contains("sampleSources"), ex.getMessage)

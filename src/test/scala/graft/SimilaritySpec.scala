@@ -2,12 +2,40 @@ package graft
 
 import org.apache.spark.sql.functions._
 
-/** Round-15 optimization equivalence pins: every restructured operator
- * must produce bit-identical output to its previous spelling (the oracle
- * gate proves it end-to-end at the SFs; these pin the specific
- * equivalence arguments at operator granularity). */
-class Round15Spec extends TestBase {
+/** Vector similarity operators of pipeline.Similarity: kNN graphs, label
+ * spreading and the streaming ANN index ingest. */
+class SimilaritySpec extends TestBase {
   import spark.implicits._
+
+  test("streaming ANN ingest: grown index equals the from-scratch index (re-ingest idempotent)") {
+    val dim = 8
+    def vec(id: Long): Seq[Float] =
+      (0 until dim).map(j => ((id * 31 + j * 7) % 13).toFloat - 6f)
+    val all = (0L until 30L).map(id => (id, vec(id)))
+    val df = all.toDF("vec_id", "embedding")
+    val model = pipeline.Similarity.ivfPqModel(df, "vec_id", "embedding",
+      nlist = 4, m = 4, ksub = 4)
+    val corpusIdx = pipeline.Similarity.ivfPqIndex(
+      all.filter(_._1 < 14).toDF("vec_id", "embedding"),
+      "vec_id", "embedding", model).localCheckpoint(true)
+    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
+    val in = org.apache.spark.sql.execution.streaming.runtime.MemoryStream[(Long, Seq[Float])]
+    var live: org.apache.spark.sql.DataFrame = null
+    val q = streaming.EventStreams.annIngestStream(
+        in.toDF().toDF("vec_id", "embedding"), "vec_id", "embedding",
+        model, corpusIdx, (idx, _) => live = idx)
+      .queryName("r14_ann_ingest").start()
+    // batch 1 re-ingests 10-13 over the corpus index; batch 2 is novel
+    in.addData(all.filter(x => x._1 >= 10 && x._1 < 20)); q.processAllAvailable()
+    in.addData(all.filter(_._1 >= 20)); q.processAllAvailable()
+    q.stop()
+    val scratch = pipeline.Similarity.ivfPqIndex(df, "vec_id", "embedding", model)
+    def rows(d: org.apache.spark.sql.DataFrame) = d.collect()
+      .map(r => (r.getLong(0), r.getLong(1), r.getSeq[Any](2).toList))
+    val (l, s0) = (rows(live), rows(scratch))
+    assert(l.length == s0.length && l.toSet == s0.toSet,
+      s"live ${l.length} vs scratch ${s0.length}")
+  }
 
   private lazy val vecs = {
     // 12 deterministic 4-dim embeddings with some mutual-neighbor
@@ -31,20 +59,6 @@ class Round15Spec extends TestBase {
       .select(col("f.src").as("src"), col("f.dst").as("dst"))
     assert(rows(got) == rows(ref))
     assert(got.count() > 0, "fixture must exercise at least one mutual edge")
-  }
-
-  test("cmsTopK single-pass spelling equals the counter-build + estimate reference") {
-    val toks = spark.createDataFrame(
-      (0 until 300).map(i => Tuple1(s"tok${i % 17}"))).toDF("term")
-    val got = pipeline.Sketches.cmsTopK(toks, "term", k = 5, depth = 3, width = 16)
-    val counters = pipeline.Sketches.cmsCounters(toks, "term", depth = 3, width = 16)
-    val est = pipeline.Sketches.cmsEstimate(counters, toks.select(col("term")),
-      "term", depth = 3, width = 16)
-    val ref = est.orderBy(col("est").desc, col("key").asc).limit(5)
-      .select(col("key"), col("est"),
-        row_number().over(org.apache.spark.sql.expressions.Window
-          .orderBy(col("est").desc, col("key").asc)).cast("long").as("rank"))
-    assert(rows(got) == rows(ref))
   }
 
   test("labelSpread base-join restructure equals the state-join spelling") {
@@ -82,37 +96,5 @@ class Round15Spec extends TestBase {
       col("is_seed"))
     assert(rows(got) == rows(ref))
     und.unpersist(true)
-  }
-
-  test("bpeTrain lazy merge chain is exact across the lineage-cut boundary") {
-    // 5 identical docs of 12 zero-padded words: every adjacent pair counts
-    // 5, so ties resolve lexicographically and the first symbol grows one
-    // word per merge — 10 merges crosses the internal cutEvery=8 re-root
-    val words = (1 to 12).map(i => f"w$i%02d")
-    val docs = spark.createDataFrame(
-      (0 until 5).map(i => (i.toLong, words.mkString(" ")))).toDF("id", "text")
-    val got = pipeline.Tokenizer.bpeTrain(docs, "text", numMerges = 10)
-      .orderBy("rank").collect()
-      .map(r => (r.getInt(0), r.getString(1), r.getString(2), r.getLong(3)))
-    val expected = (1 to 10).map { r =>
-      (r, words.take(r).mkString(" "), words(r), 5L)
-    }
-    assert(got.toSeq == expected)
-  }
-
-  test("unigramTrain observed denominator matches the returned counts") {
-    val docs = spark.createDataFrame(
-      (0 until 20).map(i => (i.toLong, "abc abd bc bc ab"))).toDF("id", "text")
-    val v = pipeline.Tokenizer.unigramTrain(docs, "text", vocabSize = 6,
-      maxPieceLen = 3, iterations = 2).collect()
-    val denom = v.map(_.getLong(1)).sum + v.length
-    v.foreach { r =>
-      // Spark's round() is HALF_UP away from zero — mirror it exactly
-      val expect = -BigDecimal(
-        math.log((r.getLong(1) + 1).toDouble / denom) * 1e6)
-        .setScale(0, BigDecimal.RoundingMode.HALF_UP).toLong
-      assert(r.getLong(2) == expect,
-        s"piece ${r.getString(0)}: cost ${r.getLong(2)} != $expect")
-    }
   }
 }

@@ -9,9 +9,10 @@ import org.apache.spark.sql.functions._
  * paths (threshold high = local tail, threshold 0 = distributed
  * supersteps). This is the guard for the tails' core claim: not "same
  * answer at convergence" but same answer, period — including mid-
- * convergence caps exercised by the per-operator specs.
+ * convergence caps exercised by the per-operator specs. The last test
+ * runs every builder of [[TailCases]] through both paths.
  */
-class TailParitySpec extends TestBase {
+class TailParitySpec extends TestBase with TailCases {
   import spark.implicits._
 
   /** xorshift-ish deterministic edge list: no RNG state in the suite. */
@@ -93,5 +94,13 @@ class TailParitySpec extends TestBase {
         .setSmallGraphThreshold(0).run().select("id"))
       assert(l == d, s"graph $i")
     }
+  }
+
+  test("every driver tail == its distributed path on the weighted friends graph") {
+    val mismatched = tailCases.filter { c =>
+      val g = GraphFrame(friends.vertices, tailEdges(c.edgeCols))
+      canon(c.run(g, 100000L)) != canon(c.run(g, 0L))
+    }
+    assert(mismatched.isEmpty, s"tail != distributed: ${mismatched.map(_.name)}")
   }
 }

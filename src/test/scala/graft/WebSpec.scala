@@ -2,12 +2,10 @@ package graft
 
 import org.apache.spark.sql.functions._
 
-/** Round-13 additions: web-corpus preparation (markup strip, URL
- * canonicalization) and the hop-batched iterative paths. */
-class Round13Spec extends TestBase {
+/** Web-corpus preparation of pipeline.Web: markup stripping, URL
+ * canonicalization, link extraction, link graphs and host statistics. */
+class WebSpec extends TestBase {
   import spark.implicits._
-
-  // ---------------- stripMarkup ----------------
 
   test("stripMarkup removes spans, comments, tags; decodes entities once") {
     val rows = Seq(
@@ -49,8 +47,6 @@ class Round13Spec extends TestBase {
     // not an entity)
     assert(twice.getString(1) == "a & b" && twice.getLong(2) == 0L)
   }
-
-  // ---------------- urlCanonical ----------------
 
   private def canon(url: String): (String, String, String) = {
     val r = pipeline.Web.urlCanonical(
@@ -139,121 +135,35 @@ class Round13Spec extends TestBase {
       "b.org" -> ((1L, 1L, 0.0))), got.toString)
   }
 
-  test("corpusDiff classifies added/removed/changed/unchanged; null-safe") {
-    val oldSnap = Seq((1, "same"), (2, "orig"), (3, "gone"),
-      (5, null.asInstanceOf[String])).toDF("doc_id", "text")
-    val newSnap = Seq((1, "same"), (2, "edited"), (4, "new"),
-      (5, null.asInstanceOf[String])).toDF("doc_id", "text")
-    val got = pipeline.Dedup.corpusDiff(oldSnap, newSnap, "doc_id", "text")
-      .collect().map(r => r.getInt(0) -> r.getString(1)).toMap
-    // null text is PRESENT (unchanged vs null), never misread as absent
-    assert(got == Map(1 -> "unchanged", 2 -> "changed", 3 -> "removed",
-      4 -> "added", 5 -> "unchanged"), got.toString)
-  }
-
-  test("groupQuantiles: exact rank arithmetic, ties, q=0/1, null values") {
-    val rows = Seq(("a", Some(1.0)), ("a", Some(2.0)), ("a", Some(2.0)),
-      ("a", Some(10.0)), ("b", Some(5.0)), ("b", Option.empty[Double]))
-      .toDF("grp", "v")
-    val got = pipeline.Sampling.groupQuantiles(rows, "grp", "v",
-        Seq(0.0, 0.5, 0.75, 1.0)).collect()
-      .map(r => (r.getString(0), r.getDouble(1)) ->
-        (r.getDouble(2), r.getLong(3))).toMap
-    // a: sorted [1,2,2,10], n=4 — q0 -> rank1=1, q.5 -> rank2=2,
-    // q.75 -> rank3=2 (the tie value), q1 -> rank4=10
-    assert(got(("a", 0.0)) == ((1.0, 4L)) && got(("a", 0.5)) == ((2.0, 4L)) &&
-      got(("a", 0.75)) == ((2.0, 4L)) && got(("a", 1.0)) == ((10.0, 4L)))
-    // b: null excluded, n=1, every q lands on the single value
-    assert(got(("b", 0.5)) == ((5.0, 1L)) && got(("b", 1.0)) == ((5.0, 1L)))
-  }
-
-  test("keepBest keeps (score desc, id asc); null and NaN scores never win") {
-    val rows = Seq((1, 10, 0.5), (1, 11, 0.9), (1, 12, 0.9),
-      (2, 20, 0.1), (3, 30, Double.NaN), (4, 40, Double.NaN), (4, 41, 0.2))
-      .toDF("cl", "id", "sc")
-      .unionByName(Seq((3, 31)).toDF("cl", "id")
-        .withColumn("sc", lit(null).cast("double")))
-    val got = pipeline.Dedup.keepBest(rows, "cl", "id", "sc").collect()
-      .map(r => r.getInt(0) -> (r.getInt(1), r.getLong(3))).toMap
-    // cluster 1: score tie 0.9/0.9 -> smaller id 11; cluster 3 is
-    // all-NaN/null — both demote to null in the key, id asc keeps 30;
-    // cluster 4: NaN loses to a REAL score (Spark/DuckDB would sort NaN
-    // as the largest double — keepBest maps it to null in the order key
-    // so a failed quality computation never becomes the representative)
-    assert(got == Map(1 -> ((11, 3L)), 2 -> ((20, 1L)), 3 -> ((30, 2L)),
-      4 -> ((41, 2L))), got.toString)
-    // integer scores skip the isNaN guard but keep the same ordering
-    val ints = pipeline.Dedup.keepBest(
-      Seq((1, 10, 5), (1, 11, 7)).toDF("cl", "id", "sc"), "cl", "id", "sc")
-      .collect().map(r => r.getInt(0) -> r.getInt(1)).toMap
-    assert(ints == Map(1 -> 11), ints.toString)
-  }
-
-  // ---------------- hop-batched iterative paths ----------------
-
-  test("temporal reachability: hopsPerCycle never changes the fixpoint") {
-    val v = (0L until 25L).toDF(GraphFrame.ID)
-    val e = v.select(col(GraphFrame.ID).as(GraphFrame.SRC),
-        pmod(col(GraphFrame.ID) + 7, lit(25)).as(GraphFrame.DST))
-      .withColumn("time",
-        (pmod(col(GraphFrame.SRC) * 2 + col(GraphFrame.DST), lit(7)) + 1)
-          .cast("double"))
-    val runs = Seq(1, 3, 8).map { k =>
-      new lib.TemporalReachability(GraphFrame(v, e)).source(0L)
-        .timeCol("time").setSmallGraphThreshold(0).hopsPerCycle(k).run()
-        .collect().map(r => r.getLong(0) ->
-          (if (r.isNullAt(1)) null else r.getDouble(1))).toMap
+  test("extractLinks cap keeps first n non-empty links and counts the rest") {
+    val rows = Seq(
+      (1, "<a href=\"u1\">a</a><a href=''>e</a><a href='u2'>b</a>" +
+        "<a href=\"u3\">c</a>"),
+      (2, "<a href=\"only\">x</a>"),
+      (3, "no links here")).toDF("id", "html")
+    // NOTE: double-quoted matches extract before single-quoted ones, so
+    // document order within each quote style — u1, u3 then u2
+    val capped = pipeline.Web.extractLinks(rows, "id", "html",
+      maxLinksPerPage = 2).collect()
+      .map(r => (r.getInt(0), r.getString(1), r.getLong(2)))
+    assert(capped.toSet == Set((1, "u1", 1L), (1, "u3", 1L), (2, "only", 0L)),
+      capped.mkString(", "))
+    // uncapped output is the original (id, link) shape — no new column
+    assert(pipeline.Web.extractLinks(rows, "id", "html")
+      .columns.toSeq == Seq("id", "link"))
+    intercept[IllegalArgumentException] {
+      pipeline.Web.extractLinks(rows, "id", "html", maxLinksPerPage = -1)
     }
-    assert(runs.distinct.size == 1, runs.toString)
   }
 
-  test("independent cascade: hopsPerCycle never changes the activation rounds") {
-    val v = (0L until 25L).toDF(GraphFrame.ID)
-    val e = v.select(col(GraphFrame.ID).as(GraphFrame.SRC),
-      pmod(col(GraphFrame.ID) + 7, lit(25)).as(GraphFrame.DST))
-    val runs = Seq(1, 4).map { k =>
-      new lib.IndependentCascade(GraphFrame(v, e)).p(0.5).hashSeed(9L)
-        .setSmallGraphThreshold(0).hopsPerCycle(k).run(Seq(0L))
-        .collect().map(r => r.getLong(0) ->
-          (if (r.isNullAt(1)) -1 else r.getInt(1))).toMap
-    }
-    assert(runs.distinct.size == 1, runs.toString)
-  }
-
-  test("temporal reachability: binding maxIter = exactly maxIter sweeps under batching") {
-    val v = (0L until 6L).toDF(GraphFrame.ID)
-    // chain 0 -> 1 -> ... -> 5, all times 1: arrival 1 everywhere reachable
-    val e = v.filter(col(GraphFrame.ID) < 5)
-      .select(col(GraphFrame.ID).as(GraphFrame.SRC),
-        (col(GraphFrame.ID) + 1).as(GraphFrame.DST))
-      .withColumn("time", lit(1.0))
-    def reached(k: Int) =
-      new lib.TemporalReachability(GraphFrame(v, e)).source(0L)
-        .timeCol("time").maxIter(3).setSmallGraphThreshold(0)
-        .hopsPerCycle(k).run()
-        .filter(col("arrival").isNotNull).count()
-    // 3 sweeps reach exactly vertices 0..3, whatever the batch size
-    assert(reached(1) == 4 && reached(2) == 4 && reached(8) == 4)
-  }
-
-  test("maximal matching: NaN weights rejected, -0.0 equals 0.0") {
-    val v = (0L until 4L).toDF(GraphFrame.ID)
-    val bad = Seq((0L, 1L, Double.NaN)).toDF(
-      GraphFrame.SRC, GraphFrame.DST, "w")
-    val err = intercept[IllegalArgumentException] {
-      GraphFrame(v, bad).maximalMatching.weightCol("w").run()
-    }
-    assert(err.getMessage.contains("NaN"))
-    // -0.0 vs 0.0 must not flip the tail/distributed agreement
-    val mixed = Seq((0L, 1L, -0.0), (1L, 2L, 0.0), (2L, 3L, -0.0)).toDF(
-      GraphFrame.SRC, GraphFrame.DST, "w")
-    def pairs(g: org.apache.spark.sql.DataFrame) =
-      g.select(GraphFrame.SRC, GraphFrame.DST).collect()
-        .map(r => (r.getLong(0), r.getLong(1))).toSet
-    val tail = pairs(GraphFrame(v, mixed).maximalMatching.seed(7L)
-      .weightCol("w").run())
-    val dist = pairs(GraphFrame(v, mixed).maximalMatching.seed(7L)
-      .weightCol("w").setSmallGraphThreshold(0).run())
-    assert(tail == dist && tail.nonEmpty, s"tail=$tail dist=$dist")
+  test("linkGraph cap bounds the per-page fan-out before aggregation") {
+    val rows = Seq((1, "http://s.com/p",
+      "<a href=\"http://a.com/1\">1</a><a href=\"http://b.com/2\">2</a>" +
+        "<a href=\"http://c.com/3\">3</a>")).toDF("id", "url", "html")
+    val capped = pipeline.Web.linkGraph(rows, "id", "url", "html",
+      maxLinksPerPage = 2).collect()
+      .map(r => (r.getString(0), r.getString(1)) -> r.getLong(2)).toMap
+    assert(capped == Map(("s.com", "a.com") -> 1L, ("s.com", "b.com") -> 1L),
+      capped.toString)
   }
 }
