@@ -142,18 +142,14 @@ class GraphFrameMethods:
         return self._call("triangle_count", algorithm=algorithm,
                           lgNomEntries=lgNomEntries)
 
-    def hits(self, maxIter: Optional[int] = None,
-             roundsPerCycle: Optional[int] = None):
+    def hits(self, maxIter: Optional[int] = None):
         """HITS hubs/authorities (engine extension)."""
-        return self._call("hits", maxIter=maxIter,
-                          roundsPerCycle=roundsPerCycle)
+        return self._call("hits", maxIter=maxIter)
 
-    def salsa(self, maxIter: Optional[int] = None,
-              roundsPerCycle: Optional[int] = None):
+    def salsa(self, maxIter: Optional[int] = None):
         """SALSA stochastic hubs/authorities: HITS with per-edge
         1/outdeg, 1/indeg weights (walk-normalized; L1 output)."""
-        return self._call("salsa", maxIter=maxIter,
-                          roundsPerCycle=roundsPerCycle)
+        return self._call("salsa", maxIter=maxIter)
 
     def influenceMax(self, k: Optional[int] = None,
                      mode: Optional[str] = None, p: Optional[float] = None):
@@ -242,21 +238,17 @@ class GraphFrameMethods:
                           smallGraphThreshold=smallGraphThreshold)
 
     def katz(self, maxIter: Optional[int] = None,
-             alpha: Optional[float] = None, beta: Optional[float] = None,
-             roundsPerCycle: Optional[int] = None):
+             alpha: Optional[float] = None, beta: Optional[float] = None):
         """Katz centrality (engine extension)."""
-        return self._call("katz", maxIter=maxIter, alpha=alpha, beta=beta,
-                          roundsPerCycle=roundsPerCycle)
+        return self._call("katz", maxIter=maxIter, alpha=alpha, beta=beta)
 
     def eigenvector(self, maxIter: Optional[int] = None,
-                    weightCol: Optional[str] = None,
-                    roundsPerCycle: Optional[int] = None):
+                    weightCol: Optional[str] = None):
         """Eigenvector centrality (engine extension): fixed-round power
         iteration x <- A^T x, sup-normalized once at the end (top vertex
         scores exactly 1.0); weightCol scales each in-neighbor's score by
         the edge weight."""
-        return self._call("eigenvector", maxIter=maxIter, weightCol=weightCol,
-                          roundsPerCycle=roundsPerCycle)
+        return self._call("eigenvector", maxIter=maxIter, weightCol=weightCol)
 
     def minimumSpanningForest(self, weightCol: str):
         """Minimum spanning forest (engine extension): distributed

@@ -309,16 +309,14 @@ object GraftConnectDispatch {
       p.int("maxIter").foreach(kc.maxIter)
       kc.run()
     },
-    "hits" -> graph("maxIter", "roundsPerCycle") { (g, p) =>
+    "hits" -> graph("maxIter") { (g, p) =>
       val h = g.hits
       p.int("maxIter").foreach(h.maxIter)
-      p.int("roundsPerCycle").foreach(h.roundsPerCycle)
       h.run()
     },
-    "salsa" -> graph("maxIter", "roundsPerCycle") { (g, p) =>
+    "salsa" -> graph("maxIter") { (g, p) =>
       val sl = g.salsa
       p.int("maxIter").foreach(sl.maxIter)
-      p.int("roundsPerCycle").foreach(sl.roundsPerCycle)
       sl.run()
     },
     "influence_max" -> graph("k", "mode", "p") { (g, p) =>
@@ -362,19 +360,17 @@ object GraftConnectDispatch {
       p.long("smallGraphThreshold").foreach(tr.setSmallGraphThreshold)
       tr.run()
     },
-    "katz" -> graph("maxIter", "alpha", "beta", "roundsPerCycle") { (g, p) =>
+    "katz" -> graph("maxIter", "alpha", "beta") { (g, p) =>
       val kz = g.katz
       p.int("maxIter").foreach(kz.maxIter)
       p.dbl("alpha").foreach(kz.alpha)
       p.dbl("beta").foreach(kz.beta)
-      p.int("roundsPerCycle").foreach(kz.roundsPerCycle)
       kz.run()
     },
-    "eigenvector" -> graph("maxIter", "weightCol", "roundsPerCycle") { (g, p) =>
+    "eigenvector" -> graph("maxIter", "weightCol") { (g, p) =>
       val ev = g.eigenvector
       p.int("maxIter").foreach(ev.maxIter)
       p.str("weightCol").foreach(ev.weightCol)
-      p.int("roundsPerCycle").foreach(ev.roundsPerCycle)
       ev.run()
     },
     "minimum_spanning_forest" -> graph("weightCol") { (g, p) =>

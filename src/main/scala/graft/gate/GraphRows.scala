@@ -626,7 +626,7 @@ object GraphRows {
       // tail and the distributed path must agree exactly
       new lib.IndependentCascade(circulantGraph(s, dir))
         .p(0.5).hashSeed(9L).setSmallGraphThreshold(0)
-        .hopsPerCycle(2).run(Seq(0, 12))),
+        .run(Seq(0, 12))),
       gIcSpread.oracle, isolated = true),
     gTemporalBfs,
     GateRow("g_temporal_bfs_dist", ((s, dir) => { // the label-correcting
@@ -638,7 +638,7 @@ object GraphRows {
         (pmod(col(SRC) * 2 + col(DST), lit(7)) + 1).cast("double"))
       new lib.TemporalReachability(GraphFrame(g0.vertices, e))
         .source(0).startTime(0.0).timeCol("time")
-        .setSmallGraphThreshold(0).hopsPerCycle(2).run()
+        .setSmallGraphThreshold(0).run()
     }),
       gTemporalBfs.oracle, isolated = true),
     GateRow("g_pagerank_weighted", ((s, dir) => {

@@ -119,7 +119,9 @@ private[graft] object MultiSourceBFS {
       cut: DataFrame => DataFrame): ArrayBuffer[DataFrame] = {
     val out = ArrayBuffer(cut(sources.select(col("s"), col("s").as("id"), lit(1.0).as("sigma"))))
     var frontier = out.head
-    while (!frontier.isEmpty) {
+    // one emptiness probe per level, carried into the loop condition
+    var reached = !frontier.isEmpty
+    while (reached) {
       // candidates at this level: extend the frontier one hop, merge path
       // counts per (s, id), then drop (s, id) pairs settled at a shorter
       // distance. Aggregate BEFORE the anti-join: the agg shrinks the
@@ -129,7 +131,8 @@ private[graft] object MultiSourceBFS {
         .groupBy(col("s"), col(DST).as("id"))
         .agg(sum("sigma").as("sigma"))
         .join(settled, Seq("s", "id"), "left_anti"))
-      if (!frontier.isEmpty) out += frontier
+      reached = !frontier.isEmpty
+      if (reached) out += frontier
     }
     out
   }
@@ -223,19 +226,21 @@ private[lib] sealed abstract class PathCentrality(g: GraphFrame, op: String)
   protected def scale(n: Long): Double = if (sampled(n)) n.toDouble / sampleKV else 1.0
 
   /** The one run of every entry point: the edge table (weights checked
-   * first), the vertex count, then the one [[gate]] — `tail(edges, n)`
+   * first; null endpoints dropped, as the tails' collects drop them), the
+   * vertex count, then the one [[gate]] — `tail(edges, n)`
    * over the sorted driver edge collect (hop mode reads every weight as
    * 1), else `distributed(e, n, cut)` past the exact-source guard, with
    * every frame cut released on return and on error alike. */
   protected def runPaths(tail: (Array[(Any, Any, Double)], Long) => DataFrame)(
       distributed: (DataFrame, Long, DataFrame => DataFrame) => DataFrame): DataFrame = {
+    val linked = g.edges.filter(col(SRC).isNotNull && col(DST).isNotNull)
     val e = weightColV match {
-      case None => g.edges.select(col(SRC), col(DST)).distinct()
+      case None => linked.select(col(SRC), col(DST)).distinct()
       case Some(w) =>
         val wc = col(GraphFrame.quoteName(w))
         require(g.edges.filter(wc.isNull || wc <= 0).isEmpty,
           s"$op weightCol '$w' must be non-null and > 0 on every edge")
-        g.edges.groupBy(col(SRC), col(DST)).agg(min(wc.cast("double")).as("_bw"))
+        linked.groupBy(col(SRC), col(DST)).agg(min(wc.cast("double")).as("_bw"))
     }
     val n = g.vertices.count()
     gate(e, pinForDistributed = true)(p => tail(
@@ -432,11 +437,13 @@ class Betweenness(g: GraphFrame) extends PathCentrality(g, "betweenness") {
     val pLevels = ArrayBuffer.empty[DataFrame]
     var p = cut(sourceFrame(n).select(col("s"), col("s").as("id"), lit(1.0).as("p")))
     pLevels += p
-    while (!p.isEmpty) {
+    var reached = !p.isEmpty
+    while (reached) {
       p = cut(p.join(dagR, p("s") === dagR("s") && p("id") === dagR("_u"))
         .groupBy(dagR("s").as("s"), col("_v").as("id"))
         .agg(sum("p").as("p")))
-      if (!p.isEmpty) pLevels += p
+      reached = !p.isEmpty
+      if (reached) pLevels += p
     }
     val sig = cut(pLevels.reduce(_ unionByName _)
       .groupBy("s", "id").agg(sum("p").as("sigma")))

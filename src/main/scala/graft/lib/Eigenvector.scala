@@ -30,23 +30,6 @@ class Eigenvector(g: GraphFrame) extends LocalTail {
 
   private var maxIterV: Int = 10
   private var weightColV: Option[String] = None
-  private var roundsPerCycleV: Int = 2
-
-  /** Power-iteration rounds CHAINED LAZILY per lineage cut (default 2).
-   * The recurrence is a fixed linear map, so k rounds compose into one
-   * plan and each cut pays ONE job + plan compile for k rounds instead
-   * of k — the same batching as TemporalReachability.hopsPerCycle, minus
-   * the convergence probe (fixed-round loops need none). The state frame
-   * is referenced twice per round, so the logical tree holds 2^k copies
-   * of the previous CUT's constant-size leaf — keep small (≤ 8; k=4
-   * measured WORSE than 2 on the 25-vertex fixtures, bench notes r13
-   * §1). Chunks clamp at the every-8th-round overflow-guard boundary so
-   * the guard's cadence — and with it local==distributed float parity —
-   * is unchanged at any k. */
-  def roundsPerCycle(k: Int): this.type = {
-    require(k >= 1 && k <= 8, s"roundsPerCycle out of [1, 8]: $k")
-    roundsPerCycleV = k; this
-  }
 
   /** Numeric edge column: the recurrence becomes x ← Aᵀ W x (each
    * in-neighbor's score scaled by the edge weight; parallel edges each
@@ -77,46 +60,30 @@ class Eigenvector(g: GraphFrame) extends LocalTail {
   }
 
   private def runDistributed(e: DataFrame): DataFrame = {
-    // interval 1: every chunk of roundsPerCycle lazily-chained rounds is
-    // one cut, and cycleObserved fuses the guard max / final sup-norm
-    // into the cut's own job — zero separate driver actions in the loop
-    val mgr = new IterationManager(1)
-    var state = mgr.cycle(g.vertices.select(col(ID), lit(1.0).as("x")), 0)
-    var round = 0
-    var cycleIdx = 0
+    // the recurrence is a fixed linear map, so rounds chain lazily per
+    // cut with no convergence probe; the guard max / final sup-norm ride
+    // the cut's own job — zero separate driver actions in the loop
     var norm = 0.0
-    while (round < maxIterV) {
-      cycleIdx += 1
-      // never straddle a guard boundary: the every-8th-round check (same
-      // bound, cadence and rescale rule as Hits) must read a materialized
-      // frame, and rescale timing changes float rounding
-      val k = math.min(roundsPerCycleV,
-        math.min(maxIterV, ((round / 8) + 1) * 8) - round)
-      var cur = state
-      for (_ <- 1 to k) {
-        val in = e.join(cur.select(col(ID).as(SRC), col("x")), SRC)
-          .groupBy(col(DST).as(ID)).agg(sum(col("x") * col("_w")).as("_x"))
-        cur = cur.select(col(ID))
-          .join(in, Seq(ID), "left_outer")
-          .select(col(ID), coalesce(col("_x"), lit(0.0)).as("x"))
-      }
-      round += k
-      val (next, obs) = mgr.cycleObserved(cur, cycleIdx,
-        Seq(max(abs(col("x")))))
-      val m = obs.head match {
-        case d: java.lang.Double => d.doubleValue()
-        case _ => 0.0
-      }
-      if (round >= maxIterV) { state = next; norm = m }
-      else if (round % 8 == 0 && m > 1e100)
-        state = next.select(col(ID),
-          (col("x") / lit(math.max(m, 1.0))).as("x"))
-      else state = next
+    new IterationManager().chained(
+      g.vertices.select(col(ID), lit(1.0).as("x")), maxIterV,
+      observe = _ => Seq(max(abs(col("x")))),
+      // the every-8th-round guard (same bound, cadence and rescale rule
+      // as Hits) reads a cut's frame: rescale timing changes float rounding
+      after = (next, round, obs) =>
+        if (round >= maxIterV) { norm = obs(0); Some(next) }
+        else if (round % 8 == 0 && obs(0) > 1e100)
+          Some(next.select(col(ID), (col("x") / lit(math.max(obs(0), 1.0))).as("x")))
+        else Some(next),
+      result = state => g.vertices.join(
+        state.select(col(ID),
+          (if (norm > 0) col("x") / norm else lit(0.0)).as("eigenvector")),
+        Seq(ID), "left_outer")) { (cur, _) =>
+      val in = e.join(cur.select(col(ID).as(SRC), col("x")), SRC)
+        .groupBy(col(DST).as(ID)).agg(sum(col("x") * col("_w")).as("_x"))
+      cur.select(col(ID))
+        .join(in, Seq(ID), "left_outer")
+        .select(col(ID), coalesce(col("_x"), lit(0.0)).as("x"))
     }
-    mgr.finish(g.vertices.join(
-      state.select(col(ID),
-        (if (norm > 0) col("x") / norm else lit(0.0)).as("eigenvector")),
-      Seq(ID), "left_outer"))
   }
 
   /** Driver-side tail: identical recurrence (raw sums, one final sup-norm

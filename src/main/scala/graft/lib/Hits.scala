@@ -31,15 +31,6 @@ class Hits(g: GraphFrame) extends LocalTail {
   private var maxIterV: Int = 10
 
   def maxIter(n: Int): this.type = { maxIterV = n; this }
-  /** Rounds chained lazily per lineage cut (default 2; ≤ 8) — see
-   * [[Eigenvector.roundsPerCycle]] for the cost model. Chunks clamp at
-   * the every-8th-round overflow-guard boundary, so the guard cadence
-   * (and local==distributed float parity) is unchanged at any k. */
-  def roundsPerCycle(k: Int): this.type = {
-    require(k >= 1 && k <= 8, s"roundsPerCycle out of [1, 8]: $k")
-    roundsPerCycleV = k; this
-  }
-  private var roundsPerCycleV: Int = 2
   /** Returns vertices + `hub: double`, `authority: double` (L2-unit each).
    * Driver tail cost at the 100k-edge default: one ~2x32-byte-per-edge
    * collect plus O(maxIter x edges) float adds — microseconds where the
@@ -56,85 +47,65 @@ class Hits(g: GraphFrame) extends LocalTail {
       pinForDistributed = true)(runLocal)(runDistributed)
 
   private def runDistributed(e: DataFrame): DataFrame = {
-    // interval 1: each chunk of roundsPerCycle lazily-chained rounds is
-    // one cut, with the guard maxes and the final L2 norms fused into the
-    // cut's own job via cycleObserved — zero separate loop actions
-    val mgr = new IterationManager(1)
-    var state = mgr.cycle(
-      g.vertices.select(col(ID), lit(1.0).as("hub"), lit(1.0).as("authority")), 0)
-
-    var round = 0
-    var cycleIdx = 0
+    // The guard maxes and the final L2 norms ride the chunk cuts' own
+    // jobs — zero separate loop actions.
+    // Overflow guard: raw sums grow like (spectral radius)^round, and
+    // maxIter is user-settable (Connect/Python) with no bound — e.g. a
+    // 1e8-degree hub at maxIter 40 would hit Infinity and turn the final
+    // normalization into all-NaN. Every 8 rounds (a chunk end, see
+    // IterationManager.RoundsPerCut), if magnitudes left the comfortable
+    // range, divide both columns by their max — a pure projection the
+    // next chunk builds on, direction-preserving, so the final
+    // normalization is unchanged. Between checks a jump from 1e100 to
+    // 1e308 would need a per-round growth factor above 1e26 ~ degree^2,
+    // i.e. a 1e13-degree vertex — beyond any real edge count. Its timing
+    // is part of the float contract.
     var finalNorms: Option[(Double, Double)] = None
-    def dbl(a: Any): Double = a match {
-      case d: java.lang.Double => d.doubleValue()
-      case _ => 0.0
+    new IterationManager().chained(
+      g.vertices.select(col(ID), lit(1.0).as("hub"), lit(1.0).as("authority")),
+      maxIterV,
+      observe = round =>
+        if (round >= maxIterV)
+          Seq(sum(col("hub") * col("hub")), sum(col("authority") * col("authority")))
+        else if (round % 8 == 0) Seq(max(abs(col("hub"))), max(abs(col("authority"))))
+        else Nil,
+      after = (next, round, obs) =>
+        if (round >= maxIterV) {
+          finalNorms = Some((math.sqrt(obs(0)), math.sqrt(obs(1)))); Some(next)
+        } else if (obs.nonEmpty && (obs(0) > 1e100 || obs(1) > 1e100))
+          Some(next.select(col(ID),
+            (col("hub") / lit(math.max(obs(0), 1.0))).as("hub"),
+            (col("authority") / lit(math.max(obs(1), 1.0))).as("authority")))
+        else Some(next),
+      result = state => {
+        // maxIter = 0 skips the loop: normalize the all-ones init directly
+        val (hNorm, aNorm) = finalNorms.getOrElse {
+          val norms = state.agg(
+            sum(col("hub") * col("hub")).as("h2"),
+            sum(col("authority") * col("authority")).as("a2")).head()
+          (math.sqrt(norms.getDouble(0)), math.sqrt(norms.getDouble(1)))
+        }
+        g.vertices.join(
+          state.select(col(ID),
+            (if (hNorm > 0) col("hub") / hNorm else lit(0.0)).as("hub"),
+            (if (aNorm > 0) col("authority") / aNorm else lit(0.0)).as("authority")),
+          Seq(ID), "left_outer")
+      }) { (cur, _) =>
+      // authority(v) = Σ hub(u) over edges u→v (0 for no inlinks)
+      val authRaw = e.join(cur.select(col(ID).as(SRC), col("hub")), SRC)
+        .groupBy(col(DST).as(ID)).agg(sum("hub").as("_a"))
+      val authed = cur.select(col(ID), col("hub"))
+        .join(authRaw, Seq(ID), "left_outer")
+        .select(col(ID), col("hub"),
+          coalesce(col("_a"), lit(0.0)).as("authority"))
+      // hub(u) = Σ authority(v) over edges u→v, against the NEW authority
+      val hubRaw = e.join(authed.select(col(ID).as(DST), col("authority")), DST)
+        .groupBy(col(SRC).as(ID)).agg(sum("authority").as("_h"))
+      authed.select(col(ID), col("authority"))
+        .join(hubRaw, Seq(ID), "left_outer")
+        .select(col(ID), coalesce(col("_h"), lit(0.0)).as("hub"),
+          col("authority"))
     }
-    while (round < maxIterV) {
-      cycleIdx += 1
-      // clamp at the guard boundary — the every-8th-round check must read
-      // a materialized frame and its timing is part of the float contract
-      val k = math.min(roundsPerCycleV,
-        math.min(maxIterV, ((round / 8) + 1) * 8) - round)
-      var cur = state
-      for (_ <- 1 to k) {
-        // authority(v) = Σ hub(u) over edges u→v (0 for no inlinks)
-        val authRaw = e.join(cur.select(col(ID).as(SRC), col("hub")), SRC)
-          .groupBy(col(DST).as(ID)).agg(sum("hub").as("_a"))
-        val authed = cur.select(col(ID), col("hub"))
-          .join(authRaw, Seq(ID), "left_outer")
-          .select(col(ID), col("hub"),
-            coalesce(col("_a"), lit(0.0)).as("authority"))
-        // hub(u) = Σ authority(v) over edges u→v, against the NEW authority
-        val hubRaw = e.join(authed.select(col(ID).as(DST), col("authority")), DST)
-          .groupBy(col(SRC).as(ID)).agg(sum("authority").as("_h"))
-        cur = authed.select(col(ID), col("authority"))
-          .join(hubRaw, Seq(ID), "left_outer")
-          .select(col(ID), coalesce(col("_h"), lit(0.0)).as("hub"),
-            col("authority"))
-      }
-      round += k
-      if (round >= maxIterV) {
-        // last chunk: fuse the L2 norms the output normalization needs
-        val (next, obs) = mgr.cycleObserved(cur, cycleIdx, Seq(
-          sum(col("hub") * col("hub")), sum(col("authority") * col("authority"))))
-        state = next
-        finalNorms = Some((math.sqrt(dbl(obs(0))), math.sqrt(dbl(obs(1)))))
-      } else if (round % 8 == 0) {
-        // Overflow guard: raw sums grow like (spectral radius)^round, and
-        // maxIter is user-settable (Connect/Python) with no bound — e.g. a
-        // 1e8-degree hub at maxIter 40 would hit Infinity and turn the
-        // final normalization into all-NaN. Every 8 rounds, if magnitudes
-        // left the comfortable range, divide both columns by their max — a
-        // pure projection the next chunk builds on, direction-preserving,
-        // so the final normalization is unchanged. Between checks a jump
-        // from 1e100 to 1e308 would need a per-round growth factor above
-        // 1e26 ~ degree^2, i.e. a 1e13-degree vertex — beyond any real
-        // edge count. The maxes ride the chunk cut's own job (observe).
-        val (next, obs) = mgr.cycleObserved(cur, cycleIdx, Seq(
-          max(abs(col("hub"))), max(abs(col("authority")))))
-        val (mh, ma) = (dbl(obs(0)), dbl(obs(1)))
-        state =
-          if (mh > 1e100 || ma > 1e100)
-            next.select(col(ID),
-              (col("hub") / lit(math.max(mh, 1.0))).as("hub"),
-              (col("authority") / lit(math.max(ma, 1.0))).as("authority"))
-          else next
-      } else state = mgr.cycle(cur, cycleIdx)
-    }
-
-    // maxIter = 0 skips the loop: normalize the all-ones init directly
-    val (hNorm, aNorm) = finalNorms.getOrElse {
-      val norms = state.agg(
-        sum(col("hub") * col("hub")).as("h2"),
-        sum(col("authority") * col("authority")).as("a2")).head()
-      (math.sqrt(norms.getDouble(0)), math.sqrt(norms.getDouble(1)))
-    }
-    mgr.finish(g.vertices.join(
-      state.select(col(ID),
-        (if (hNorm > 0) col("hub") / hNorm else lit(0.0)).as("hub"),
-        (if (aNorm > 0) col("authority") / aNorm else lit(0.0)).as("authority")),
-      Seq(ID), "left_outer"))
   }
 
   /** Driver-side tail: identical recurrence (raw sums, one final L2

@@ -19,8 +19,8 @@ import graft.GraphFrame
  * Plan: one codegen filter derives the live subgraph (no
  * materialization — the coin rides the edge scan), then BFS-style
  * frontier rounds: frontier ⋈ live-edges, anti-join vs activated,
- * min-agg per new vertex. Rounds ≤ the live subgraph's diameter;
- * lineage cut per round by the shared [[IterationManager]]. Returns
+ * min-agg per new vertex. Rounds ≤ the live subgraph's diameter,
+ * chained per lineage cut by [[IterationManager.chained]]. Returns
  * (id, round): activation round (0 = seed), null = never activated.
  *
  * Dyadic `p` (0.5, 0.25, 0.375 …) makes the threshold p·2⁶⁰ exact —
@@ -43,22 +43,6 @@ class IndependentCascade(g: GraphFrame) extends LocalTail {
   def maxIter(n: Int): this.type = {
     require(n >= 1, s"maxIter must be >= 1: $n"); maxIterV = n; this
   }
-  /** BFS levels CHAINED LAZILY per materialized round (default 1). The
-   * activation round of a vertex is the unique live-edge BFS level — a
-   * pure function of the coins — so k frontier expansions compose into
-   * one plan; each cycle then pays ONE job + compile for k levels. Tree
-   * growth is bounded per cycle (2^k copies of the previous CUT's
-   * constant-size leaf; see TemporalReachability.hopsPerCycle for the
-   * full rationale and the round-8 counter-experiment). Keep small (≤ 8);
-   * the 25-vertex gate fixtures use 2 — k=4 MEASURED WORSE there (AQE
-   * schedules extra stage-jobs and plan compile grows with the 2^k
-   * tree; bench notes r13 §1). */
-  def hopsPerCycle(k: Int): this.type = {
-    require(k >= 1 && k <= 8, s"hopsPerCycle out of [1, 8]: $k")
-    hopsPerCycleV = k; this
-  }
-  private var hopsPerCycleV: Int = 1
-
   /** 60-bit threshold: coin fires iff draw < p·2⁶⁰ (exact for dyadic p). */
   private def threshold: Long = (pV * (1L << 60).toDouble).toLong
 
@@ -76,42 +60,29 @@ class IndependentCascade(g: GraphFrame) extends LocalTail {
     gate(live, pinForDistributed = true)(runLocal(_, seeds))(runDistributed(_, seeds))
   }
 
-  private def runDistributed(live: DataFrame, seeds: Seq[Any]): DataFrame = {
-    // interval 1: every cycle cuts, with the growth count fused into the
-    // cut's own job via cycleCounted — no separate limit/count action
-    val mgr = new IterationManager(1)
-    var state = mgr.cycle(g.vertices.select(col(ID),
-      when(col(ID).isInCollection(seeds), lit(0))
-        .otherwise(lit(null).cast("int")).as("round")), 0)
-    var round = 0
-    var grew = true
-    var cycleIdx = 0
-    while (round < maxIterV && grew) {
-      cycleIdx += 1
-      val k = math.min(hopsPerCycleV, maxIterV - round)
-      var cur = state
-      for (_ <- 1 to k) {
-        round += 1
-        val frontier = cur.filter(col("round") === (round - 1))
-          .select(col(ID).as(SRC))
-        val reached = live.join(frontier, SRC)
-          .select(col(DST).as(ID)).distinct()
-        cur = cur.join(reached.withColumn("_hit", lit(true)),
-            Seq(ID), "left_outer")
-          .select(col(ID),
-            when(col("round").isNotNull, col("round"))
-              .when(col("_hit"), lit(round))
-              .otherwise(lit(null).cast("int")).as("round"))
-      }
+  private def runDistributed(live: DataFrame, seeds: Seq[Any]): DataFrame =
+    // the activation round is the unique live-edge BFS level, so levels
+    // chain lazily per cut; the last level's growth count rides the cut's
+    // own job — no separate limit/count action
+    new IterationManager().chained(
+      g.vertices.select(col(ID),
+        when(col(ID).isInCollection(seeds), lit(0))
+          .otherwise(lit(null).cast("int")).as("round")),
+      maxIterV,
+      observe = round => Seq(count(when(col("round") === round, lit(1)))),
       // an empty LAST level means every later frontier is empty too —
-      // intermediate levels of the batch may still have grown
-      val (next, lastLevel) = mgr.cycleCounted(cur, cycleIdx,
-        count(when(col("round") === round, lit(1))))
-      grew = lastLevel > 0
-      state = next
+      // intermediate levels of the chunk may still have grown
+      after = (next, _, obs) => if (obs(0) > 0) Some(next) else None) { (cur, round) =>
+      val frontier = cur.filter(col("round") === (round - 1))
+        .select(col(ID).as(SRC))
+      val reached = live.join(frontier, SRC)
+        .select(col(DST).as(ID)).distinct()
+      cur.join(reached.withColumn("_hit", lit(true)), Seq(ID), "left_outer")
+        .select(col(ID),
+          when(col("round").isNotNull, col("round"))
+            .when(col("_hit"), lit(round))
+            .otherwise(lit(null).cast("int")).as("round"))
     }
-    mgr.finish(state)
-  }
 
   /** Driver tail: plain BFS over the collected live edges — the level
    * assignment is unique, so no ordering requirement. */

@@ -1,7 +1,7 @@
 package graft.lib
 
 import scala.collection.mutable
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.storage.StorageLevel
 
 /**
@@ -20,9 +20,22 @@ import org.apache.spark.storage.StorageLevel
  * Usage per round: `df = mgr.cycle(df, round)`. The returned frame is
  * persisted (and possibly checkpointed); the frame from the previous cycle
  * is unpersisted only after the new one is materialized, so recomputation
- * never cascades.
+ * never cascades. Fixed-step loops hand the whole loop to [[chained]].
  */
 private[graft] object IterationManager {
+  /** Rounds [[IterationManager.chained]] chains lazily per lineage cut.
+   * Each cut then pays ONE job + plan compile for this many rounds. The
+   * state frame is referenced up to twice per round, so the logical tree
+   * holds up to 2^k copies of the previous cut's constant-size leaf:
+   * bounded per cut, unlike the round-8 lazy-persist experiment (the
+   * NOTE on cadence in the class), and k = 4 measured WORSE than 2 on the
+   * 25-vertex gate fixtures (AQE schedules extra stage-jobs and plan
+   * compile grows with the tree; bench notes r13 §1). */
+  val RoundsPerCut = 2
+  // Hits and Eigenvector check their overflow guard every 8th round on
+  // the frame of a cut, so every 8th round must end a chunk
+  require(8 % RoundsPerCut == 0, "RoundsPerCut must divide the 8-round guard cadence")
+
   /** (scheme, normalized path) of a dir given as a plain path or a URI;
    * plain paths get scheme "file" so `/x` and `file:/x` compare equal. */
   private def uriParts(s: String): (String, String) =
@@ -135,46 +148,20 @@ private[graft] class IterationManager(
     }
   }
 
-  /** Persist + (on checkpoint rounds) truncate lineage and materialize.
-   * Non-checkpoint rounds persist lazily — the next materializing action
-   * computes through (and caches) them, so each `checkpointInterval`
-   * window costs ONE job instead of one per round. Older caches are only
-   * dropped once a newer frame has actually been materialized. */
-  /** [[cycle]] with a convergence metric FUSED into the materializing job:
-   * observes `metric` (an aggregate over the frame's rows, e.g.
-   * `count(when(improved, 1))`) via `Dataset.observe` so the cut's own
-   * action reports it — the caller's follow-up `count()`/`isEmpty` job,
-   * historically HALF the per-round job count of the small iterative
-   * operators, disappears. Always cuts (the metric must be backed by a
-   * completed action or `Observation.get` blocks), so callers pass
-   * `checkpointInterval = 1` and drop their separate convergence action.
-   * Eager `localCheckpoint`/`checkpoint` run through `Dataset.withAction`,
-   * which fires the SQL-execution events observations listen on — probed
-   * on Spark 4.1 before relying on it here. */
-  def cycleCounted(df: DataFrame, round: Int,
-      metric: org.apache.spark.sql.Column): (DataFrame, Long) = {
-    val obs = org.apache.spark.sql.Observation(s"graft_cycle_${round}_" +
-      java.util.UUID.randomUUID().toString)
-    val observed = df.observe(obs, metric.as("_m"))
-    val c = cycleAt(observed, round, force = true)
-    val m = obs.get("_m") match {
-      case null => 0L
-      case n: java.lang.Number => n.longValue()
-      case other => throw new IllegalStateException(
-        s"cycleCounted metric must be numeric, got $other")
-    }
-    (c, m)
-  }
-
-  /** [[cycleCounted]] generalized to SEVERAL metrics of any numeric type:
-   * observes each aggregate on the cut's own materializing job and
-   * returns their values in order (null where the frame was empty). The
-   * power-iteration family fuses its overflow-guard maxes and its final
-   * normalization statistics (L2/L1 norms, sup-norm) into the chunk cut
-   * this way — zero separate driver actions per loop beyond the cuts
-   * themselves. Always cuts, like [[cycleCounted]]. */
+  /** [[cycle]] with convergence or normalization metrics FUSED into the
+   * materializing job: observes each aggregate (e.g.
+   * `count(when(improved, 1))`, an L2 norm, a sup-norm) via
+   * `Dataset.observe` so the cut's own action reports it, and returns
+   * their values in order (null where the frame was empty). The caller's
+   * follow-up `count()`/`isEmpty` job, historically HALF the per-round
+   * job count of the small iterative operators, disappears. Always cuts
+   * (the metrics must be backed by a completed action or
+   * `Observation.get` blocks). Eager `localCheckpoint`/`checkpoint` run
+   * through `Dataset.withAction`, which fires the SQL-execution events
+   * observations listen on — probed on Spark 4.1 before relying on it
+   * here. */
   def cycleObserved(df: DataFrame, round: Int,
-      metrics: Seq[org.apache.spark.sql.Column]): (DataFrame, Seq[Any]) = {
+      metrics: Seq[Column]): (DataFrame, Seq[Any]) = {
     require(metrics.nonEmpty, "cycleObserved needs at least one metric")
     val obs = org.apache.spark.sql.Observation(s"graft_cycle_${round}_" +
       java.util.UUID.randomUUID().toString)
@@ -185,8 +172,55 @@ private[graft] class IterationManager(
     (c, metrics.indices.map(i => got(s"_m$i")))
   }
 
+  /** Persist + (on checkpoint rounds) truncate lineage and materialize.
+   * Non-checkpoint rounds persist lazily — the next materializing action
+   * computes through (and caches) them, so each `checkpointInterval`
+   * window costs ONE job instead of one per round. Older caches are only
+   * dropped once a newer frame has actually been materialized. */
   def cycle(df: DataFrame, round: Int): DataFrame =
     cycleAt(df, round, force = false)
+
+  /** The chained-round loop of the fixed-step iterative operators: cut
+   * `init`, then apply `step(state, r)` for rounds r = 1 to `maxRounds`,
+   * chaining [[IterationManager.RoundsPerCut]] rounds lazily per lineage
+   * cut (the last chunk is clamped to `maxRounds`). Each cut observes
+   * `observe(r)` on its own job (a plain cut when empty), where r is the
+   * round the chunk ended on; `after(cut, r, values)` then returns the
+   * state to continue from (the cut, or a rescaled projection of it) or
+   * None to stop at the cut. Returns `finish(result(state))`; when any
+   * round, cut or the result throws, every tracked frame is released
+   * before the exception propagates. Observed values arrive as doubles,
+   * 0.0 for a null (an empty frame's aggregate). */
+  def chained(init: DataFrame, maxRounds: Int,
+      observe: Int => Seq[Column] = _ => Nil,
+      after: (DataFrame, Int, Seq[Double]) => Option[DataFrame] = (s, _, _) => Some(s),
+      result: DataFrame => DataFrame = identity)(
+      step: (DataFrame, Int) => DataFrame): DataFrame =
+    try {
+      var state = cycleAt(init, 0, force = true)
+      var round = 0
+      var cut = 0
+      var going = true
+      while (going && round < maxRounds) {
+        val last = math.min(round + IterationManager.RoundsPerCut, maxRounds)
+        var cur = state
+        for (r <- round + 1 to last) cur = step(cur, r)
+        round = last
+        cut += 1
+        val metrics = observe(round)
+        val (next, values) =
+          if (metrics.isEmpty) (cycleAt(cur, cut, force = true), Nil)
+          else cycleObserved(cur, cut, metrics)
+        after(next, round, values.map {
+          case n: java.lang.Number => n.doubleValue()
+          case _ => 0.0
+        }) match {
+          case Some(s) => state = s
+          case None => state = next; going = false
+        }
+      }
+      finish(result(state))
+    } catch { case t: Throwable => close(); throw t }
 
   private def cycleAt(df: DataFrame, round: Int, force: Boolean): DataFrame = {
     val doCheckpoint = force ||

@@ -26,14 +26,6 @@ class Katz(g: GraphFrame) extends LocalTail {
   def alpha(a: Double): this.type = { alphaV = a; this }
   def beta(b: Double): this.type = { betaV = b; this }
   def maxIter(n: Int): this.type = { maxIterV = n; this }
-  /** Rounds chained lazily per lineage cut (default 2; ≤ 8) — see
-   * [[Eigenvector.roundsPerCycle]] for the cost model (identical: one
-   * job + plan compile per k rounds, 2^k-leaf bounded tree). */
-  def roundsPerCycle(k: Int): this.type = {
-    require(k >= 1 && k <= 8, s"roundsPerCycle out of [1, 8]: $k")
-    roundsPerCycleV = k; this
-  }
-  private var roundsPerCycleV: Int = 2
   /** Returns vertices + `katz: double`. Driver tail cost: see [[Hits.run]]. */
   def run(): DataFrame =
     // pinned on both paths: re-joined every round, and possibly an
@@ -41,32 +33,19 @@ class Katz(g: GraphFrame) extends LocalTail {
     gate(g.edges.select(col(SRC), col(DST)), pinForDistributed = true)(
       runLocal)(runDistributed)
 
-  private def runDistributed(e: DataFrame): DataFrame = {
-    // interval 1: each chunk of roundsPerCycle lazily-chained rounds is
-    // one cut/job (no convergence probe, no overflow guard — the series
-    // is geometrically damped for sensible α)
-    val mgr = new IterationManager(1)
-    var state = mgr.cycle(
-      g.vertices.select(col(ID), lit(betaV).as("katz")), 0)
-    var round = 0
-    var cycleIdx = 0
-    while (round < maxIterV) {
-      cycleIdx += 1
-      val k = math.min(roundsPerCycleV, maxIterV - round)
-      var cur = state
-      for (_ <- 1 to k) {
-        val in = e.join(cur.select(col(ID).as(SRC), col("katz")), SRC)
-          .groupBy(col(DST).as(ID)).agg(sum("katz").as("_k"))
-        cur = cur.select(col(ID))
-          .join(in, Seq(ID), "left_outer")
-          .select(col(ID),
-            (lit(betaV) + lit(alphaV) * coalesce(col("_k"), lit(0.0))).as("katz"))
-      }
-      round += k
-      state = mgr.cycle(cur, cycleIdx)
+  private def runDistributed(e: DataFrame): DataFrame =
+    // no convergence probe, no overflow guard — the series is
+    // geometrically damped for sensible α
+    new IterationManager().chained(
+      g.vertices.select(col(ID), lit(betaV).as("katz")), maxIterV,
+      result = g.vertices.join(_, Seq(ID), "left_outer")) { (cur, _) =>
+      val in = e.join(cur.select(col(ID).as(SRC), col("katz")), SRC)
+        .groupBy(col(DST).as(ID)).agg(sum("katz").as("_k"))
+      cur.select(col(ID))
+        .join(in, Seq(ID), "left_outer")
+        .select(col(ID),
+          (lit(betaV) + lit(alphaV) * coalesce(col("_k"), lit(0.0))).as("katz"))
     }
-    mgr.finish(g.vertices.join(state, Seq(ID), "left_outer"))
-  }
 
   /** Driver-side tail: identical recurrence, sorted-edge accumulation
    * order. A vertex touching no edge earns exactly β every round — filled

@@ -120,14 +120,14 @@ class MaximalMatching(g: GraphFrame) extends LocalTail {
       val mv = winners.select(col("ea").as("v"))
         .unionAll(winners.select(col("eb").as("v"))).distinct()
       // the remaining-edge count is FUSED into the cut's own job
-      // (cycleCounted observes it), so the round pays two jobs — winners
-      // cut + remainder cut — with no separate isEmpty action
-      val (erNext, remaining) = mgr.cycleCounted(
+      // (cycleObserved), so the round pays two jobs — winners cut +
+      // remainder cut — with no separate isEmpty action
+      val (erNext, remaining) = mgr.cycleObserved(
         er.join(mv.select(col("v").as("ea")), Seq("ea"), "left_anti")
           .join(mv.select(col("v").as("eb")), Seq("eb"), "left_anti"),
-        round + 1, count(lit(1)))
+        round + 1, Seq(count(lit(1))))
       er = erNext
-      done = remaining == 0L
+      done = remaining.head.asInstanceOf[Number].longValue() == 0L
       round += 1
     }
     val cols = Seq(col("ea").as(SRC), col("eb").as(DST)) ++

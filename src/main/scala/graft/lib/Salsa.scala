@@ -42,15 +42,6 @@ class Salsa(g: GraphFrame) extends LocalTail {
     require(n >= 1, s"SALSA needs maxIter >= 1, got $n")
     maxIterV = n; this
   }
-  /** Rounds chained lazily per lineage cut (default 2; ≤ 8) — see
-   * [[Eigenvector.roundsPerCycle]] for the cost model. No overflow guard
-   * to clamp to: the walk normalization keeps scores bounded. */
-  def roundsPerCycle(k: Int): this.type = {
-    require(k >= 1 && k <= 8, s"roundsPerCycle out of [1, 8]: $k")
-    roundsPerCycleV = k; this
-  }
-  private var roundsPerCycleV: Int = 2
-
   /** Returns vertices + `hub: double`, `authority: double` (each column
    * L1-normalized over all vertices; 0 when the column sums to 0). */
   def run(): DataFrame = {
@@ -69,49 +60,33 @@ class Salsa(g: GraphFrame) extends LocalTail {
   }
 
   private def runDistributed(e: DataFrame): DataFrame = {
-    // interval 1: each chunk of roundsPerCycle lazily-chained rounds is
-    // one cut, with the final L1 sums fused into the last chunk's job
-    val mgr = new IterationManager(1)
-    var state = mgr.cycle(
-      g.vertices.select(col(ID), lit(1.0).as("hub"), lit(0.0).as("authority")), 0)
-    var round = 0
-    var cycleIdx = 0
-    var sh = 0.0
-    var sa = 0.0
-    while (round < maxIterV) {
-      cycleIdx += 1
-      val k = math.min(roundsPerCycleV, maxIterV - round)
-      var cur = state
-      for (_ <- 1 to k) {
-        val aRaw = e.join(cur.select(col(ID).as(SRC), col("hub")), SRC)
-          .groupBy(col(DST).as(ID)).agg(sum(col("hub") * col("_wout")).as("_a"))
-        val authed = cur.select(col(ID), col("hub"))
-          .join(aRaw, Seq(ID), "left_outer")
-          .select(col(ID), col("hub"), coalesce(col("_a"), lit(0.0)).as("authority"))
-        val hRaw = e.join(authed.select(col(ID).as(DST), col("authority")), DST)
-          .groupBy(col(SRC).as(ID)).agg(sum(col("authority") * col("_win")).as("_h"))
-        cur = authed.select(col(ID), col("authority"))
-          .join(hRaw, Seq(ID), "left_outer")
-          .select(col(ID), coalesce(col("_h"), lit(0.0)).as("hub"),
-            col("authority"))
-      }
-      round += k
-      if (round >= maxIterV) {
-        val (next, obs) = mgr.cycleObserved(cur, cycleIdx,
-          Seq(sum("hub"), sum("authority")))
-        state = next
-        def dbl(a: Any): Double = a match {
-          case d: java.lang.Double => d.doubleValue()
-          case _ => 0.0
-        }
-        sh = dbl(obs(0)); sa = dbl(obs(1))
-      } else state = mgr.cycle(cur, cycleIdx)
+    // the final L1 sums ride the last chunk's cut
+    var sums = Seq(0.0, 0.0)
+    new IterationManager().chained(
+      g.vertices.select(col(ID), lit(1.0).as("hub"), lit(0.0).as("authority")),
+      maxIterV,
+      observe = round => if (round >= maxIterV) Seq(sum("hub"), sum("authority")) else Nil,
+      after = (next, _, obs) => { if (obs.nonEmpty) sums = obs; Some(next) },
+      result = state => {
+        val Seq(sh, sa) = sums
+        g.vertices.join(
+          state.select(col(ID),
+            (if (sh > 0) col("hub") / sh else lit(0.0)).as("hub"),
+            (if (sa > 0) col("authority") / sa else lit(0.0)).as("authority")),
+          Seq(ID), "left_outer")
+      }) { (cur, _) =>
+      val aRaw = e.join(cur.select(col(ID).as(SRC), col("hub")), SRC)
+        .groupBy(col(DST).as(ID)).agg(sum(col("hub") * col("_wout")).as("_a"))
+      val authed = cur.select(col(ID), col("hub"))
+        .join(aRaw, Seq(ID), "left_outer")
+        .select(col(ID), col("hub"), coalesce(col("_a"), lit(0.0)).as("authority"))
+      val hRaw = e.join(authed.select(col(ID).as(DST), col("authority")), DST)
+        .groupBy(col(SRC).as(ID)).agg(sum(col("authority") * col("_win")).as("_h"))
+      authed.select(col(ID), col("authority"))
+        .join(hRaw, Seq(ID), "left_outer")
+        .select(col(ID), coalesce(col("_h"), lit(0.0)).as("hub"),
+          col("authority"))
     }
-    mgr.finish(g.vertices.join(
-      state.select(col(ID),
-        (if (sh > 0) col("hub") / sh else lit(0.0)).as("hub"),
-        (if (sa > 0) col("authority") / sa else lit(0.0)).as("authority")),
-      Seq(ID), "left_outer"))
   }
 
   /** Driver tail: identical recurrence and weight products, sorted-edge
@@ -121,12 +96,7 @@ class Salsa(g: GraphFrame) extends LocalTail {
     val rows = e.collect().iterator
       .map(r => (r.get(0), r.get(1), r.getDouble(2), r.getDouble(3))).toArray
       .sortBy { case (s, d, _, _) => (String.valueOf(s), String.valueOf(d)) }
-    val vids = {
-      import org.apache.spark.sql.functions.{col => c}
-      val epDF = e.select(c(SRC).as(ID)).union(e.select(c(DST).as(ID))).distinct()
-      g.vertices.select(c(ID)).join(epDF, Seq(ID), "left_semi")
-        .collect().map(_.get(0)).sortBy(String.valueOf(_))
-    }
+    val vids = LocalTail.endpointIds(e, g)
     var hub = mutable.HashMap.empty[Any, Double]
     var auth = mutable.HashMap.empty[Any, Double]
     vids.foreach { v => hub(v) = 1.0; auth(v) = 0.0 }

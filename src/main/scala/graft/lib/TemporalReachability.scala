@@ -21,9 +21,9 @@ import graft.GraphFrame
  * MONOTONE (a smaller arrival at u never disables an edge a larger one
  * allowed, since the constraint is t ≥ arrival), so keeping only the
  * per-vertex minimum is exact, and rounds are bounded by the longest
- * foremost journey's hop count. Lineage is cut per round by the shared
- * [[IterationManager]]; convergence is one improved-count action per
- * round.
+ * foremost journey's hop count. Rounds run through the shared
+ * [[IterationManager.chained]] loop, which fuses the improved count into
+ * each lineage cut's own job.
  *
  * Returns (id, arrival): earliest arrival time per vertex, null when
  * unreachable within `maxIter` hops; the source arrives at `startTime`.
@@ -49,26 +49,6 @@ class TemporalReachability(g: GraphFrame) extends LocalTail {
   def maxIter(n: Int): this.type = {
     require(n >= 1, s"maxIter must be >= 1: $n"); maxIterV = n; this
   }
-  /** Relaxation hops CHAINED LAZILY per materialized round (default 1 —
-   * one hop per lineage cut). Earliest arrival is a monotone fixpoint, so
-   * k level-synchronous sweeps compose into one plan with the per-vertex
-   * min-merge between hops (no path explosion); each cycle then pays ONE
-   * job + plan compile for k hops instead of k. The state frame is
-   * referenced twice per hop, so the logical tree holds 2^k copies of the
-   * PREVIOUS CUT's constant-size `LogicalRDD` leaf — bounded per cycle,
-   * unlike the round-8 lazy-persist experiment whose tree grew with the
-   * whole iteration (IterationManager.scala cadence note); identical
-   * shuffle subtrees collapse via exchange reuse. Keep small (≤ 8); the
-   * 25-vertex gate fixtures use 2, where per-round scheduling WAS the
-   * whole cost — k=4 MEASURED WORSE there (AQE schedules extra
-   * stage-jobs and plan compile grows with the 2^k tree; bench notes
-   * r13 §1). */
-  def hopsPerCycle(k: Int): this.type = {
-    require(k >= 1 && k <= 8, s"hopsPerCycle out of [1, 8]: $k")
-    hopsPerCycleV = k; this
-  }
-  private var hopsPerCycleV: Int = 1
-
   /** The driver tail runs the label-correcting loop as one bounded pass.
    * It is LEVEL-SYNCHRONOUS (each sweep reads only the previous sweep's
    * arrivals), so it agrees with the distributed rounds exactly even when
@@ -87,51 +67,38 @@ class TemporalReachability(g: GraphFrame) extends LocalTail {
     gate(e, pinForDistributed = true)(runLocal)(runDistributed)
   }
 
-  private def runDistributed(e: DataFrame): DataFrame = {
-    // interval 1: every cycle cuts, and cycleCounted fuses the
-    // convergence count into the cut's own job — no separate action
-    val mgr = new IterationManager(1)
-    var state = mgr.cycle(g.vertices.select(col(ID),
-      when(col(ID) === lit(sourceV), lit(startTimeV))
-        .otherwise(lit(null).cast("double")).as("arrival")), 0)
-    var hops = 0
-    var improved = 1L
-    var cycleIdx = 0
-    while (hops < maxIterV && improved > 0) {
-      cycleIdx += 1
-      // never exceed maxIter TOTAL hops, so a binding maxIter means
-      // exactly maxIter level-synchronous sweeps — same as the tail
-      val k = math.min(hopsPerCycleV, maxIterV - hops)
-      var cur = state
-      for (h <- 1 to k) {
-        // edges usable this hop: departure no earlier than the current
-        // arrival at src — the predicate rides the equi-join
-        val cand = e.join(
-            cur.filter(col("arrival").isNotNull)
-              .select(col(ID).as(SRC), col("arrival").as("_a")), SRC)
-          .filter(col("_t") >= col("_a"))
-          .groupBy(col(DST).as(ID)).agg(min(col("_arr")).as("_new"))
-        val merged = cur.join(cand, Seq(ID), "left_outer")
-          .select(col(ID),
-            when(col("arrival").isNull, col("_new"))
-              .when(col("_new").isNull, col("arrival"))
-              .otherwise(least(col("arrival"), col("_new"))).as("arrival"),
-            (col("_new").isNotNull &&
-              (col("arrival").isNull || col("_new") < col("arrival")))
-              .as("_improved"))
-        // only the LAST hop's improvement flag decides convergence: the
-        // sweep is a deterministic monotone map, so one application with
-        // zero change IS the fixpoint, whatever earlier hops did
-        cur = if (h == k) merged else merged.select(col(ID), col("arrival"))
-      }
-      hops += k
-      val (next, imp) = mgr.cycleCounted(cur, cycleIdx,
-        count(when(col("_improved"), lit(1))))
-      improved = imp
-      state = next
+  private def runDistributed(e: DataFrame): DataFrame =
+    // earliest arrival is a monotone fixpoint, so hops chain lazily per
+    // cut with the per-vertex min-merge between them (no path explosion);
+    // the improved count rides the cut's own job. A binding maxIter means
+    // exactly maxIter level-synchronous sweeps — same as the tail
+    new IterationManager().chained(
+      g.vertices.select(col(ID),
+        when(col(ID) === lit(sourceV), lit(startTimeV))
+          .otherwise(lit(null).cast("double")).as("arrival")),
+      maxIterV,
+      // only the LAST hop's improvement flag decides convergence: the
+      // sweep is a deterministic monotone map, so one application with
+      // zero change IS the fixpoint, whatever earlier hops did
+      observe = _ => Seq(count(when(col("_improved"), lit(1)))),
+      after = (next, _, obs) => if (obs(0) > 0) Some(next) else None,
+      result = _.select(col(ID), col("arrival"))) { (cur, _) =>
+      // edges usable this hop: departure no earlier than the current
+      // arrival at src — the predicate rides the equi-join
+      val cand = e.join(
+          cur.filter(col("arrival").isNotNull)
+            .select(col(ID).as(SRC), col("arrival").as("_a")), SRC)
+        .filter(col("_t") >= col("_a"))
+        .groupBy(col(DST).as(ID)).agg(min(col("_arr")).as("_new"))
+      cur.join(cand, Seq(ID), "left_outer")
+        .select(col(ID),
+          when(col("arrival").isNull, col("_new"))
+            .when(col("_new").isNull, col("arrival"))
+            .otherwise(least(col("arrival"), col("_new"))).as("arrival"),
+          (col("_new").isNotNull &&
+            (col("arrival").isNull || col("_new") < col("arrival")))
+            .as("_improved"))
     }
-    mgr.finish(state.select(col(ID), col("arrival")))
-  }
 
   /** Driver tail: LEVEL-SYNCHRONOUS relaxation over the collected edge
    * list — each sweep reads arrivals only from the PREVIOUS sweep's map

@@ -224,7 +224,7 @@ object Tokenizer {
 
   /** Eager lineage cut of a (piece, count) vocab with the Laplace
    * denominator (ΣC + |V|) OBSERVED on the cut's own materializing job
-   * (the [[graft.lib.IterationManager.cycleCounted]] pattern) — each EM
+   * (the [[graft.lib.IterationManager.cycleObserved]] pattern) — each EM
    * round pays one driver job instead of a cut plus a separate 1-row
    * aggregate action (r15). */
   private def cutVocabWithDenom(vocab: DataFrame): (DataFrame, Long) = {

@@ -203,30 +203,46 @@ class CacheHygieneSpec extends TestBase with TailCases {
     assert(leaks.isEmpty, "left pinned frames after a failed probe")
   }
 
+  /** Runs `c` over friends edges whose dst "b" raises `message` when a
+   * job reads it, at threshold 0 (distributed), and reports whatever
+   * persisted RDD or CacheManager entry outlives the exception. */
+  private def leftAfterDstError(c: TailCase, message: String): Option[String] = {
+    spark.catalog.clearCache()
+    spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(true))
+    val edges = tailEdges(c.edgeCols,
+      wrapDst = d => when(d === "b", raise_error(lit(message))).otherwise(d))
+    val before = leftoverIds()
+    val err = intercept[Exception] {
+      c.run(GraphFrame(friends.vertices, edges), 0L).count()
+    }
+    assert(String.valueOf(err.getMessage).contains(message),
+      s"${c.name} failed elsewhere: $err")
+    val rdds = leftoverIds() -- before
+    val entries = !org.apache.spark.sql.graftshim.CacheProbe.isEmpty(spark)
+    if (rdds.isEmpty && !entries) None
+    else Some(s"${c.name}: RDDs ${rdds.toSeq.sorted}, cache entries left: $entries")
+  }
+
   // The distributed centrality bodies cut one frame per level and per
   // fixpoint round; a join that throws mid-search must release every cut
   // made so far, not only the gate's pin. The failure sits in one edge's
   // dst, so it fires in the level-1 join, after the level-0 cut.
   test("distributed centralities release their level frames when a level join throws") {
     val centrality = Seq("betweenness", "closeness", "eccentricity")
-    val leaks = tailCases.filter(c => centrality.exists(c.name.startsWith)).flatMap { c =>
-      spark.catalog.clearCache()
-      spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(true))
-      val edges = tailEdges(c.edgeCols,
-        wrapDst = d => when(d === "b", raise_error(lit("level failure"))).otherwise(d))
-      val before = leftoverIds()
-      val err = intercept[Exception] {
-        c.run(GraphFrame(friends.vertices, edges), 0L).count()
-      }
-      assert(String.valueOf(err.getMessage).contains("level failure"),
-        s"${c.name} failed elsewhere: $err")
-      val rdds = leftoverIds() -- before
-      val entries = !org.apache.spark.sql.graftshim.CacheProbe.isEmpty(spark)
-      if (rdds.isEmpty && !entries) None
-      else Some(s"${c.name}: RDDs ${rdds.toSeq.sorted}, cache entries left: $entries")
-    }
+    val leaks = tailCases.filter(c => centrality.exists(c.name.startsWith))
+      .flatMap(leftAfterDstError(_, "level failure"))
     assert(leaks.isEmpty, "left level frames after a failed join")
   }
+
+  // The chained-round loops (IterationManager.chained) cut the initial
+  // state before the first round reads an edge, so a failure in one
+  // edge's dst fires in the first chunk's cut, after that initial cut.
+  for (name <- Seq("hits", "katz", "eigenvector", "salsa", "independentCascade",
+      "temporalReachability"))
+    test(s"$name releases its round cuts when a round throws") {
+      val leak = leftAfterDstError(tailCases.find(_.name == name).get, "round failure")
+      assert(leak.isEmpty, s"left round frames after a failed round: $leak")
+    }
 
   // r15 (ADVICE item): hostRank's host-edge pin is operator-internal —
   // the result must be self-contained on BOTH PageRank paths (the local

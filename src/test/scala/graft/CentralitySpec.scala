@@ -313,6 +313,21 @@ class CentralitySpec extends TestBase {
     assert(local(1) == Set(Seq("a", 3.0), Seq("b", 0.0)), local(1))
   }
 
+  test("distributed centralities drop an edge with a null endpoint, like the tails") {
+    // vertices {a, b}, edges a->b and a->null: a reaches b and nothing
+    // else, so closeness(a) and harmonic(a) are 1 on both paths
+    val g = GraphFrame(Seq("a", "b").toDF("id"),
+      Seq(("a", "b", 1.0), ("a", null, 1.0)).toDF("src", "dst", "w"))
+    def scores(t: Long): Seq[Set[Seq[Any]]] = Seq(
+      rows(g.closeness.setSmallGraphThreshold(t).run()),
+      rows(g.closeness.weightCol("w").setSmallGraphThreshold(t).run()),
+      rows(g.eccentricity.setSmallGraphThreshold(t).run()),
+      rows(g.betweenness.setSmallGraphThreshold(t).run()))
+    val local = scores(100000)
+    assert(local(0) == Set(Seq("a", 1.0, 1.0), Seq("b", 0.0, 0.0)), local(0))
+    assert(scores(0) == local)
+  }
+
   test("centrality: parallel edges collapse, self-loops are inert") {
     val v = Seq(0L, 1L, 2L).toDF("id")
     val e = Seq((0L, 1L), (0L, 1L), (1L, 1L), (1L, 2L)).toDF("src", "dst")

@@ -105,6 +105,16 @@ class ConnectPluginSpec extends TestBase {
     assert(err.getMessage.contains("maxIters") && err.getMessage.contains("accepted"))
   }
 
+  test("hits rejects the removed roundsPerCycle key as unknown") {
+    val v = spark.sql("SELECT * FROM VALUES (0L),(1L) AS t(id)")
+    val e = spark.sql("SELECT * FROM VALUES (0L,1L) AS t(src, dst)")
+    val err = intercept[IllegalArgumentException] {
+      GraftConnectDispatch.run(Some(v), e, "hits", """{"maxIter": 5, "roundsPerCycle": 2}""")
+    }
+    assert(err.getMessage.contains("unknown params_json key(s) 'roundsPerCycle' for hits; " +
+      "accepted: maxIter"), err.getMessage)
+  }
+
   test("unknown algorithm fails with the supported list") {
     val err = intercept[IllegalArgumentException] {
       callPlugin(GraftRelation("frobnicate",

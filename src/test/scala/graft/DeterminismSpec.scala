@@ -250,20 +250,20 @@ class DeterminismSpec extends AnyFunSuite with BeforeAndAfterAll {
       .setSmallGraphThreshold(0).run()
       .select("id").as[String].collect().toSet
     // round-13 surfaces: the HOP-BATCHED distributed paths (fused
-    // observe-counts + k lazily-chained sweeps per cut) must agree with
-    // themselves across partitionings AND with the single-hop `tmp` pin
-    // above; IC forced-dist was previously only pinned via the gate
+    // observe-counts + lazily-chained sweeps per cut) must agree with
+    // themselves across partitionings, and the `tmp` pin above with the
+    // driver tail (`tmp3`); IC forced-dist was previously only pinned via
+    // the gate
     val tmp3 = {
       val et = gNum.edges.withColumn("t",
         (pmod(col("src") * 3 + col("dst"), lit(4)) + 1).cast("double"))
       new lib.TemporalReachability(GraphFrame(gNum.vertices, et))
-        .source(0L).timeCol("t").maxIter(20)
-        .setSmallGraphThreshold(0).hopsPerCycle(3).run()
+        .source(0L).timeCol("t").maxIter(20).run()
         .collect().map(r => r.getLong(0) ->
           (if (r.isNullAt(1)) -1.0 else r.getDouble(1))).toMap
     }
     val icd = new lib.IndependentCascade(gNum).p(0.5).hashSeed(7L)
-      .setSmallGraphThreshold(0).hopsPerCycle(2).run(Seq(0L))
+      .setSmallGraphThreshold(0).run(Seq(0L))
       .collect().map(r => r.getLong(0) ->
         (if (r.isNullAt(1)) -1 else r.getInt(1))).toMap
 
@@ -289,9 +289,9 @@ class DeterminismSpec extends AnyFunSuite with BeforeAndAfterAll {
       assert(base(k) === alt1(k), s"$k drifted between 4-partition and 11-partition runs")
       assert(base(k) === alt2(k), s"$k drifted between AQE-on and AQE-off runs")
     }
-    // hop batching must be output-invariant: 3 chained sweeps per cut ==
-    // one sweep per cut on the same temporal fixture
+    // hop batching must be output-invariant: the chained distributed
+    // sweeps == the level-synchronous driver tail on the same fixture
     assert(base("tmp") === base("tmp3"),
-      "hop-batched temporal rounds diverged from the single-hop path")
+      "hop-batched temporal rounds diverged from the driver tail")
   }
 }

@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.functions._
 
 /** Independent-cascade influence spread (lib.IndependentCascade):
- * semantics, driver tail == distributed rounds, and hop batching. */
+ * semantics and driver tail == distributed rounds. */
 class IndependentCascadeSpec extends TestBase {
   import spark.implicits._
 
@@ -34,13 +34,13 @@ class IndependentCascadeSpec extends TestBase {
     }
   }
 
-  test("independent cascade: hopsPerCycle never changes the activation rounds") {
+  test("independent cascade: chained distributed levels equal the tail") {
     val v = (0L until 25L).toDF(GraphFrame.ID)
     val e = v.select(col(GraphFrame.ID).as(GraphFrame.SRC),
       pmod(col(GraphFrame.ID) + 7, lit(25)).as(GraphFrame.DST))
-    val runs = Seq(1, 4).map { k =>
+    val runs = Seq(0L, 1000000L).map { t =>
       new lib.IndependentCascade(GraphFrame(v, e)).p(0.5).hashSeed(9L)
-        .setSmallGraphThreshold(0).hopsPerCycle(k).run(Seq(0L))
+        .setSmallGraphThreshold(t).run(Seq(0L))
         .collect().map(r => r.getLong(0) ->
           (if (r.isNullAt(1)) -1 else r.getInt(1))).toMap
     }

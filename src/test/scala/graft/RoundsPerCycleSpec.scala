@@ -2,9 +2,9 @@ package graft
 
 import org.apache.spark.sql.functions._
 
-/** roundsPerCycle batching of the fixed-round power-iteration family
- * (Eigenvector/Hits/Katz/Salsa) — k rounds chained lazily per lineage
- * cut must never change the trajectory. */
+/** The chained-round loop (IterationManager.chained, RoundsPerCut rounds
+ * chained lazily per lineage cut) must never change the trajectory: the
+ * distributed paths of its six users match their local tails. */
 class RoundsPerCycleSpec extends TestBase {
   import spark.implicits._
 
@@ -35,69 +35,44 @@ class RoundsPerCycleSpec extends TestBase {
     }
   }
 
-  test("eigenvector: roundsPerCycle never changes the trajectory") {
-    val g = fixture
-    val runs = Seq(1, 3, 8).map { k =>
-      g.eigenvector.maxIter(10).setSmallGraphThreshold(0).roundsPerCycle(k)
-        .run().collect()
-        .map(r => r.getLong(0) -> Seq(r.getDouble(1))).toMap
-    }
-    assertSame(runs, "eigenvector")
-  }
-
-  test("katz: roundsPerCycle never changes the trajectory") {
-    val g = fixture
-    val runs = Seq(1, 3, 8).map { k =>
-      g.katz.alpha(0.05).beta(1.0).maxIter(9).setSmallGraphThreshold(0)
-        .roundsPerCycle(k).run().collect()
-        .map(r => r.getLong(0) -> Seq(r.getDouble(1))).toMap
-    }
-    assertSame(runs, "katz")
-  }
-
-  test("hits: roundsPerCycle never changes the trajectory (odd maxIter)") {
-    val g = fixture
-    val runs = Seq(1, 3, 8).map { k =>
-      g.hits.maxIter(5).setSmallGraphThreshold(0).roundsPerCycle(k)
-        .run().collect()
-        .map(r => r.getLong(0) -> Seq(r.getDouble(1), r.getDouble(2))).toMap
-    }
-    assertSame(runs, "hits")
-  }
-
-  test("salsa: roundsPerCycle never changes the trajectory") {
-    val g = fixture
-    val runs = Seq(1, 3, 8).map { k =>
-      g.salsa.maxIter(5).setSmallGraphThreshold(0).roundsPerCycle(k)
-        .run().collect()
-        .map(r => r.getLong(0) -> Seq(r.getDouble(1), r.getDouble(2))).toMap
-    }
-    assertSame(runs, "salsa")
-  }
-
+  // maxIter values span several cuts, end on an odd round (a one-round
+  // last chunk) and, for Katz and Eigenvector, cross the round-8 guard
   test("batched distributed path still matches the local tail") {
     val g = fixture
-    def pair(tag: String, dist: => Map[Long, Seq[Double]],
-        local: => Map[Long, Seq[Double]]): Unit =
-      assertSame(Seq(dist, local), tag)
-    pair("eigenvector",
-      g.eigenvector.maxIter(10).setSmallGraphThreshold(0).run().collect()
-        .map(r => r.getLong(0) -> Seq(r.getDouble(1))).toMap,
-      g.eigenvector.maxIter(10).run().collect()
-        .map(r => r.getLong(0) -> Seq(r.getDouble(1))).toMap)
-    pair("hits",
-      g.hits.maxIter(5).setSmallGraphThreshold(0).run().collect()
-        .map(r => r.getLong(0) -> Seq(r.getDouble(1), r.getDouble(2))).toMap,
-      g.hits.maxIter(5).run().collect()
-        .map(r => r.getLong(0) -> Seq(r.getDouble(1), r.getDouble(2))).toMap)
-  }
+    def scores(df: org.apache.spark.sql.DataFrame, n: Int): Map[Long, Seq[Double]] =
+      df.collect().map(r => r.getLong(0) -> (1 to n).map(r.getDouble)).toMap
+    def pair(tag: String, run: Long => Map[Long, Seq[Double]]): Unit =
+      assertSame(Seq(run(0L), run(100000L)), tag)
+    pair("eigenvector", t => scores(
+      g.eigenvector.maxIter(10).setSmallGraphThreshold(t).run(), 1))
+    pair("katz", t => scores(
+      g.katz.alpha(0.05).beta(1.0).maxIter(9).setSmallGraphThreshold(t).run(), 1))
+    pair("hits", t => scores(g.hits.maxIter(5).setSmallGraphThreshold(t).run(), 2))
+    pair("salsa", t => scores(g.salsa.maxIter(5).setSmallGraphThreshold(t).run(), 2))
 
-  test("roundsPerCycle rejects out-of-range k") {
-    val g = fixture
-    intercept[IllegalArgumentException] { g.eigenvector.roundsPerCycle(0) }
-    intercept[IllegalArgumentException] { g.katz.roundsPerCycle(9) }
-    intercept[IllegalArgumentException] { g.hits.roundsPerCycle(0) }
-    intercept[IllegalArgumentException] { g.salsa.roundsPerCycle(9) }
+    val timed = GraphFrame(g.vertices, g.edges.withColumn("time",
+      (pmod(col(GraphFrame.SRC) * 2 + col(GraphFrame.DST), lit(7)) + 1).cast("double")))
+    def arrivals(maxIter: Int, t: Long): Map[Long, Option[Double]] =
+      new lib.TemporalReachability(timed).source(0L).timeCol("time")
+        .maxIter(maxIter).setSmallGraphThreshold(t).run().collect()
+        .map(r => r.getLong(0) -> Option(r.get(1)).map(_.asInstanceOf[Double])).toMap
+    // 3 hops bind before the fixpoint: fewer vertices than 50 hops reach
+    val bound = arrivals(3, 0L)
+    assert(bound.values.count(_.isDefined) < arrivals(50, 0L).values.count(_.isDefined),
+      "maxIter 3 should bind before the fixpoint")
+    assert(bound == arrivals(3, 100000L), "temporalReachability")
+
+    // p = 1 makes the cascade a plain BFS, several cuts deep: maxIter 5
+    // binds on an odd level, the default stops at the first empty one
+    def levels(maxIter: Int, t: Long): Map[Long, Option[Int]] =
+      new lib.IndependentCascade(g).p(1.0).maxIter(maxIter).setSmallGraphThreshold(t)
+        .run(Seq(0L)).collect()
+        .map(r => r.getLong(0) -> Option(r.get(1)).map(_.asInstanceOf[Int])).toMap
+    for (maxIter <- Seq(5, 50)) {
+      val dist = levels(maxIter, 0L)
+      assert(dist.values.flatten.max >= 3, s"the cascade should span several cuts: $dist")
+      assert(dist == levels(maxIter, 100000L), s"independentCascade maxIter $maxIter")
+    }
   }
 
   test("hits maxIter=0 still normalizes the all-ones init (no loop, no observation)") {

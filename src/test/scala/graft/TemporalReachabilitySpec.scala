@@ -72,16 +72,16 @@ class TemporalReachabilitySpec extends TestBase {
     assert(tail2(2L) == 2.0 && tail2(3L) == -1.0, tail2.toString)
   }
 
-  test("temporal reachability: hopsPerCycle never changes the fixpoint") {
+  test("temporal reachability: chained distributed fixpoint equals the tail") {
     val v = (0L until 25L).toDF(GraphFrame.ID)
     val e = v.select(col(GraphFrame.ID).as(GraphFrame.SRC),
         pmod(col(GraphFrame.ID) + 7, lit(25)).as(GraphFrame.DST))
       .withColumn("time",
         (pmod(col(GraphFrame.SRC) * 2 + col(GraphFrame.DST), lit(7)) + 1)
           .cast("double"))
-    val runs = Seq(1, 3, 8).map { k =>
+    val runs = Seq(0L, 1000000L).map { t =>
       new lib.TemporalReachability(GraphFrame(v, e)).source(0L)
-        .timeCol("time").setSmallGraphThreshold(0).hopsPerCycle(k).run()
+        .timeCol("time").setSmallGraphThreshold(t).run()
         .collect().map(r => r.getLong(0) ->
           (if (r.isNullAt(1)) null else r.getDouble(1))).toMap
     }
@@ -95,12 +95,12 @@ class TemporalReachabilitySpec extends TestBase {
       .select(col(GraphFrame.ID).as(GraphFrame.SRC),
         (col(GraphFrame.ID) + 1).as(GraphFrame.DST))
       .withColumn("time", lit(1.0))
-    def reached(k: Int) =
+    def reached(maxIter: Int) =
       new lib.TemporalReachability(GraphFrame(v, e)).source(0L)
-        .timeCol("time").maxIter(3).setSmallGraphThreshold(0)
-        .hopsPerCycle(k).run()
+        .timeCol("time").maxIter(maxIter).setSmallGraphThreshold(0).run()
         .filter(col("arrival").isNotNull).count()
-    // 3 sweeps reach exactly vertices 0..3, whatever the batch size
-    assert(reached(1) == 4 && reached(2) == 4 && reached(8) == 4)
+    // n sweeps reach exactly vertices 0..n, whether the last chunk of
+    // chained hops is full (2, 4) or a single hop (1, 3)
+    assert((1 to 4).map(reached) == Seq(2, 3, 4, 5))
   }
 }
