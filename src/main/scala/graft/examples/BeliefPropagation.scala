@@ -38,6 +38,14 @@ object BeliefPropagation {
    * `color` (scheduling class — neighboring vertices must differ);
    * `g.edges` carries `b` (coupling), one row per undirected edge.
    * Returns the vertices augmented with `belief` = P(x_i = +1).
+   *
+   * Memory bound: each vertex's inbox sum is folded in sender order over
+   * a `collect_list` of its incoming messages, so one aggregation row
+   * holds the vertex's whole inbox. Per-row memory is O(max in-degree):
+   * deg_in(v) (i, λ) structs of at least 32 bytes each with long ids
+   * (more with string ids), i.e. ≥ 32 MB for a 10⁶-degree hub and
+   * ≥ 3.2 GB, past one task's memory, for a 10⁸-degree hub. An order-free
+   * fixed-point integer sum would remove the bound.
    */
   def sumProduct(g: GraphFrame, sweeps: Int = 5): DataFrame = {
     import GraphFrame.{ID, SRC, DST}

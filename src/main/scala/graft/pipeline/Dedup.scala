@@ -11,7 +11,9 @@ import org.apache.spark.sql.functions._
  *  - exact dedup is a single hash aggregation on the content hash (map-side
  *    partial agg; no row ever carries the full text through the shuffle);
  *  - minhash signatures are computed per-row over the in-row shingle array
- *    (no explode, stays in codegen); only the tiny (id, band, hash) table
+ *    (no explode); shingling, the minhash lanes and simhash are fused
+ *    codegen kernels ([[graft.expressions.TextHash]]) that hash each key
+ *    once with a reused digest. Only the tiny (id, band, hash) table
  *    shuffles, and candidate pairs come from a bucket self-join whose
  *    fan-out is bounded by bucket size (AQE splits skewed buckets);
  *  - all hashing is md5-based → deterministic, retry-safe, and exactly
@@ -142,21 +144,21 @@ object Dedup {
    * per row and hands it to `body` as a higher-order-function lambda
    * variable. An aliased intermediate column is NOT a safe way to share an
    * expensive expression — project collapsing can inline the alias into
-   * every consumer, and the minhash/shingle kernels are higher-order
-   * functions that run interpreted (outside codegen subexpression
-   * elimination), so the duplication is real per-row work. A lambda
-   * variable is bound once by construction and no rewrite duplicates it. */
+   * every consumer, and codegen subexpression elimination looks neither
+   * inside conditional branches nor across operators, so each copy would
+   * be another shingle scan or another set of minhash lanes per row. A
+   * lambda variable is bound once by construction and no rewrite
+   * duplicates it. */
   private[pipeline] def bindOnce(value: Column, body: Column => Column): Column =
     element_at(transform(array(value), body), 1)
 
-  /** Minhash signature (array<string> of `numHashes` md5-minima) over an
-   * already-materialized shingle-array column — pass a [[bindOnce]] lambda
-   * or a post-Generate attribute, or the shingling expression tree is
-   * re-evaluated once per hash lane. */
+  /** Minhash signature (array<string> of `numHashes` md5-minima; lane h
+   * is the smallest md5("h|" + shingle), null when no shingle) over a
+   * shingle-array column. One codegen kernel
+   * ([[graft.expressions.MinhashLanes]]) hashes every shingle once per
+   * lane into a reused digest and hex-encodes only each lane's winner. */
   def minhashSignature(shingles: Column, numHashes: Int): Column =
-    array((0 until numHashes).map { h =>
-      array_min(transform(shingles, s => md5(concat(lit(s"$h|"), s))))
-    }: _*)
+    graft.expressions.TextHash.minhashLanes(shingles, numHashes)
 
   /** Persistable MinHash index: ONE compact row per document —
    * (idCol, sig: array<string>, buckets: array<struct<band:int,bh:string>>).
@@ -165,11 +167,13 @@ object Dedup {
    * the index is ~(numHashes·32 + bands·36) bytes/doc regardless of
    * document size. Documents with no shingles are excluded.
    *
-   * The whole row is computed by ONE expression: the shingle array and the
-   * 16-lane signature are lambda-bound ([[bindOnce]]) so each evaluates
-   * once, and the result passes through an `explode` Generate barrier so
-   * downstream project collapsing cannot re-inline the signature into the
-   * 8 band hashes (measured 18× per-row re-evaluation without it). */
+   * The whole row is computed by ONE expression: the shingle array
+   * ([[Text.wordShingles]]) and the 16-lane signature
+   * ([[minhashSignature]]) are codegen kernels, lambda-bound
+   * ([[bindOnce]]) so each evaluates once per row, and the result passes
+   * through an `explode` Generate barrier so downstream project collapsing
+   * cannot re-inline the signature into the 8 band hashes (measured 18×
+   * per-row re-evaluation without it). */
   def minhashIndex(df0: DataFrame, idCol: String, textCol: String,
       n: Int = 3, bands: Int = 8, rowsPerBand: Int = 2): DataFrame = {
     val df = ensureParallelism(df0)
@@ -304,23 +308,14 @@ object Dedup {
       .filter(col("est_jaccard") >= minEstJaccard)
   }
 
-  /** Per-document SimHash over word tokens, `bits` wide (max 32; nibbles of
-   * each token's md5 drive the bit votes). Returns (id, simhash: long). */
+  /** Per-document SimHash over word tokens ([[Text.tokens]]), `bits` wide
+   * (a positive multiple of 4, max 32): bit b is set when most tokens have
+   * bit `b % 4` of hex nibble `b / 4` of their md5 set. One codegen kernel
+   * ([[graft.expressions.SimHash]]) hashes each token once for all bits.
+   * Returns (id, simhash: long); null text gives 0. */
   def simhash(df0: DataFrame, idCol: String, textCol: String, bits: Int = 16): DataFrame = {
-    val df = ensureParallelism(df0)
-    require(bits <= 32 && bits % 4 == 0, "bits must be multiple of 4, <= 32")
-    val toks = Text.tokens(col(textCol))
-    val fp = (0 until bits).map { b =>
-      val nibblePos = b / 4 + 1 // 1-based position in the md5 hex string
-      val k = b % 4
-      val contrib = (t: Column) => {
-        val nv = conv(substring(md5(t), nibblePos, 1), 16, 10).cast("int")
-        when(nv % lit(1 << (k + 1)) >= lit(1 << k), lit(1)).otherwise(lit(-1))
-      }
-      val vote = aggregate(toks, lit(0), (acc, t) => acc + contrib(t))
-      when(vote > 0, lit(1L << b)).otherwise(lit(0L))
-    }.reduce(_ + _)
-    df.select(col(idCol), fp.as("simhash"))
+    val fp = graft.expressions.TextHash.simhash(col(textCol), bits) // checks `bits`
+    ensureParallelism(df0).select(col(idCol), fp.as("simhash"))
   }
 
   /** Cluster similarity pairs into components and map every row of `df`

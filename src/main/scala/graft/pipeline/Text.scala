@@ -113,14 +113,11 @@ object Text {
         round(col("cosine"), 6).as("cosine"))
   }
 
-  /** n-word shingles of the token array (empty array when too short). */
-  def wordShingles(text: Column, n: Int): Column = {
-    val toks = tokens(text)
-    when(size(toks) >= n,
-      transform(sequence(lit(1), size(toks) - lit(n - 1)),
-        i => concat_ws(" ", slice(toks, i, lit(n)))))
-      .otherwise(filter(array(lit("")), _ => lit(false)))
-  }
+  /** n-word shingles of the [[tokens]], joined by one space: an empty
+   * array for null text or fewer than `n` tokens. One codegen kernel
+   * ([[graft.expressions.WordShingles]]) scans the UTF-8 bytes in place. */
+  def wordShingles(text: Column, n: Int): Column =
+    graft.expressions.TextHash.wordShingles(text, n)
 
   /** (id, n_tokens). */
   def tokenCount(df: DataFrame, idCol: String, textCol: String): DataFrame =
@@ -624,7 +621,7 @@ object Text {
    * probability; any engine with md5 reproduces it bit-for-bit. */
   def fingerprint(df0: DataFrame, idCol: String, textCol: String, n: Int = 3): DataFrame = {
     val df = ensureParallelism(df0)
-    val hashes = transform(wordShingles(col(textCol), n), s => md5(s))
+    val hashes = graft.expressions.TextHash.md5Each(wordShingles(col(textCol), n))
     val selected = filter(hashes, h => substring(h, 32, 1).isin("0", "1"))
     df.select(col(idCol),
       md5(concat_ws("", array_sort(selected))).as("fingerprint"))

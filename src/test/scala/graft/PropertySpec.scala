@@ -404,13 +404,15 @@ class PropertySpec extends TestBase {
 
   test("minhashIndex plan computes the 16-lane signature exactly once per row") {
     // Regression: an aliased signature column was inlined by project
-    // collapsing into each of the 8 band hashes (18x per-row re-eval,
-    // 288 array_min in the LSH plan). bindOnce + the Generate barrier
-    // pin it to one evaluation; this counts the kernel in the optimized
-    // plan so the duplication cannot silently return.
+    // collapsing into each of the 8 band hashes (18x per-row re-eval).
+    // bindOnce + the Generate barrier pin it to one evaluation; this
+    // counts the signature kernel (all 16 lanes in one MinhashLanes) in
+    // the optimized plan so the duplication cannot silently return.
     val docs = Seq((1L, "alpha beta gamma delta epsilon zeta")).toDF("doc_id", "text")
     def lanes(df: org.apache.spark.sql.DataFrame): Int =
-      "array_min".r.findAllIn(df.queryExecution.optimizedPlan.toString).length
+      df.queryExecution.optimizedPlan.flatMap(_.expressions.flatMap(_.collect {
+        case m: graft.expressions.MinhashLanes => m.numHashes
+      })).sum
     assert(lanes(pipeline.Dedup.minhashIndex(docs, "doc_id", "text")) == 16)
     // self-join: one signature per join leg
     assert(lanes(pipeline.Dedup.minhashLsh(docs, "doc_id", "text")) <= 32)
