@@ -130,18 +130,28 @@ class ConnectedComponents(g: GraphFrame) extends LocalTail {
       .select(greatest(col("s"), col("d")).as("src"), least(col("s"), col("d")).as("dst"))
       .distinct()
 
-    // one job finishes any graph already under the union-find threshold
-    // (e.g. LSH dedup pair graphs: dozens of edges, full label fidelity).
-    // Probe on a plain pin BEFORE the round-0 lineage cut: the fast path
-    // then skips the eager localCheckpoint job entirely, and the
-    // distributed path cycles the already-cached frame at no extra cost
-    // (the pin is released right after that cut). With the tail disabled
-    // there is no probe, and the cut reads the frame unpinned.
-    gate[Either[DataFrame, DataFrame]](canon, pinForDistributed = tailEnabled)(
-      p => Left(finishWithUnionFind(p, iv, mgr)))(p => Right(mgr.cycle(p, 0))) match {
+    // one bounded job finishes any graph already under the union-find
+    // threshold (e.g. LSH dedup pair graphs: dozens of edges, full label
+    // fidelity). Pinned BEFORE the round-0 lineage cut: the distributed
+    // path then cycles the already-cached frame at no extra cost (the pin
+    // is released right after that cut). With the tail disabled there is
+    // no probe, and the cut reads the frame unpinned.
+    gateCollect[(Long, Long), Either[DataFrame, DataFrame]](canon,
+      pinForDistributed = tailEnabled)(longEdges)(
+      edges => Left(finishWithUnionFind(edges, iv, mgr)))(p => Right(mgr.cycle(p, 0))) match {
       case Left(labeled) => labeled
       case Right(cut) => runRounds(cut, iv, mgr)
     }
+  }
+
+  /** The `(src, dst)` surrogate pairs of `ee` as a typed collect: Tuple2
+   * is @specialized on Long, so the transient driver footprint is ~32
+   * bytes/edge instead of ~120 for Rows of boxed values — what makes the
+   * 1M-edge default threshold cheap. */
+  private def longEdges(ee: DataFrame): Array[(Long, Long)] = {
+    val session = ee.sparkSession
+    import session.implicits._
+    ee.select(col("src").cast("long"), col("dst").cast("long")).as[(Long, Long)].collect()
   }
 
   /** Large-star / small-star supersteps from the round-0 cut `ee0`, with
@@ -186,7 +196,7 @@ class ConnectedComponents(g: GraphFrame) extends LocalTail {
       // threshold, one union-find job beats O(log diameter) more supersteps
       // (the star-contracted remainder has the same components)
       if (!converged && tailFits(cs.getLong(1)))
-        return finishWithUnionFind(ee, iv, mgr)
+        return finishWithUnionFind(longEdges(ee), iv, mgr)
     }
 
     // at fixpoint every non-root points straight at its component minimum
@@ -198,18 +208,13 @@ class ConnectedComponents(g: GraphFrame) extends LocalTail {
     mgr.finish(g.vertices.join(labeled, Seq(ID), "left_outer"))
   }
 
-  /** Collect the (bounded) edge list, union-find with min-id roots — the
-   * same min-surrogate labels the distributed fixpoint produces — and join
-   * the labels back. One job instead of one per superstep. */
-  private def finishWithUnionFind(ee: DataFrame, iv: DataFrame,
+  /** Union-find over the collected (bounded) edge list with min-id roots —
+   * the same min-surrogate labels the distributed fixpoint produces — and
+   * join the labels back. One job instead of one per superstep. */
+  private def finishWithUnionFind(edges: Array[(Long, Long)], iv: DataFrame,
       mgr: IterationManager): DataFrame = {
-    val session = ee.sparkSession
-    // typed collect: Tuple2 is @specialized on Long, so the transient
-    // driver footprint is ~32 bytes/edge instead of ~120 for Rows of
-    // boxed values — what makes the 1M-edge default threshold cheap
+    val session = iv.sparkSession
     import session.implicits._
-    val edges = ee.select(col("src").cast("long"), col("dst").cast("long"))
-      .as[(Long, Long)].collect()
     val labels = UnionFind.minLabels(edges.iterator,
       Ordering.Long.on[Any](_.asInstanceOf[Long]))
     val compDF = labels.map { case (v, c) => (v.asInstanceOf[Long], c.asInstanceOf[Long]) }

@@ -3,6 +3,8 @@ package graft.lib
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DataType, DoubleType, StructField, StructType}
+import org.apache.spark.scheduler.SparkListenerEvent
+import org.apache.spark.sql.graftshim.GraftShims
 import org.apache.spark.storage.StorageLevel
 import graft.{GraftConf, GraphFrame}
 
@@ -17,8 +19,9 @@ import graft.{GraftConf, GraphFrame}
  * latency: skipping lineage cuts instead blows up the analyzer.
  *
  * Mixing this trait in gives a builder its `setSmallGraphThreshold` knob
- * and the one tail/distributed decision, [[gate]]. The companion holds
- * the pin rule and the collect / join-back helpers the tails share.
+ * and the one tail/distributed decision, [[gate]]: one bounded collect
+ * both decides and feeds the tail. The companion holds the collect /
+ * join-back helpers the tails share.
  */
 trait LocalTail {
   /** Default of [[setSmallGraphThreshold]]: the link-analysis conf key,
@@ -44,28 +47,54 @@ trait LocalTail {
   /** Whether an edge count `n` fits the tail: `t > 0 && n <= t`. */
   protected def tailFits(n: Long): Boolean = tailEnabled && n <= smallGraphThresholdV
 
-  /** The one tail/distributed decision: `tail(probe)` when `eligible`, the
-   * probe's row count fits the threshold and `andIf` holds (evaluated
-   * after the count), else `distributed(probe)`.
+  /** The one tail/distributed decision: `tail(rows)` when `eligible`, the
+   * probe has at most t rows and `andIf` holds (evaluated after the
+   * collect), else `distributed(probe)`.
    *
-   * The probe is pinned for the count and the tail's collect by
-   * [[LocalTail.pinned]] (a frame the caller already cached is read, never
-   * evicted), and the pin is released on every path, exceptions included.
-   * With `pinForDistributed` the distributed path reads the pinned frame
-   * too, so it is pinned even when the tail cannot apply and released
-   * only after `distributed` returns; otherwise it is pinned only to
-   * probe, and released before `distributed` starts. */
+   * One bounded job decides and collects: `collect(probe.limit(t + 1))`
+   * reads at most t + 1 rows, so the driver never holds more than that,
+   * and at ≤ t rows they are the tail's input (Rows for [[gate]]; typed
+   * `(Long, Long)` pairs for connected components, ~32 bytes per edge
+   * instead of a Row of boxed values). There is no count job. Each probe
+   * posts a [[TailDecision]].
+   *
+   * Without `pinForDistributed` nothing is pinned. With it the
+   * distributed path reads the probe too, so the probe is persisted
+   * before the collect, even when the tail cannot apply, and unpersisted
+   * in a `finally` after `tail` or `distributed` returns or throws. It is
+   * persisted only if `Dataset.storageLevel` shows it is not cached yet: a
+   * plan that canonicalizes equal to a caller's cached frame (e.g.
+   * `edges.select(src, dst)` over cached `(src, dst)` edges) already reads
+   * that cache, and unpersisting it would evict the caller's entry. */
+  protected def gateCollect[A, T](probe: DataFrame, eligible: Boolean = true,
+      pinForDistributed: Boolean = false, andIf: => Boolean = true)(
+      collect: DataFrame => Array[A])(tail: Array[A] => T)(distributed: DataFrame => T): T = {
+    val t = smallGraphThresholdV
+    def decide(p: DataFrame): T =
+      if (!eligible || !tailEnabled) distributed(p)
+      else {
+        val rows = collect(p.limit(math.min(t, Int.MaxValue - 1L).toInt + 1))
+        val fits = rows.length <= t && andIf
+        GraftShims.postEvent(p.sparkSession,
+          TailDecision(getClass.getSimpleName, t, rows.length, fits))
+        if (fits) tail(rows) else distributed(p)
+      }
+    if (!pinForDistributed || probe.storageLevel != StorageLevel.NONE) decide(probe)
+    else {
+      probe.persist()
+      try decide(probe) finally probe.unpersist(false)
+    }
+  }
+
+  /** [[gateCollect]] of the probe's Rows: the tail gets them back as a
+   * local frame with the probe's schema, so its own `collect()` calls run
+   * no Spark job. */
   protected def gate[T](probe: DataFrame, eligible: Boolean = true,
       pinForDistributed: Boolean = false, andIf: => Boolean = true)(
-      tail: DataFrame => T)(distributed: DataFrame => T): T = {
-    val probing = eligible && tailEnabled
-    def fits(p: DataFrame): Boolean = probing && tailFits(p.count()) && andIf
-    if (pinForDistributed)
-      LocalTail.pinned(probe)(p => if (fits(p)) tail(p) else distributed(p))
-    else if (!probing) distributed(probe)
-    else LocalTail.pinned(probe)(p => if (fits(p)) Some(tail(p)) else None)
-      .getOrElse(distributed(probe))
-  }
+      tail: DataFrame => T)(distributed: DataFrame => T): T =
+    gateCollect(probe, eligible, pinForDistributed, andIf)(_.collect())(rows =>
+      tail(probe.sparkSession.createDataFrame(java.util.Arrays.asList(rows: _*),
+        probe.schema)))(distributed)
 
   /** [[gate]] for tails that replay Spark's ordering of the id type on the
    * driver: id types without a faithful driver ordering
@@ -77,6 +106,13 @@ trait LocalTail {
     gate(probe, ord.isDefined, pinForDistributed, andIf)(tail(_, ord.get))(distributed)
   }
 }
+
+/** Posted on the listener bus (`SparkListener.onOtherEvent`) by every
+ * [[LocalTail]] gate that probes: the builder's class name, its
+ * threshold t, the probe rows its bounded collect read (at most t + 1)
+ * and whether the driver tail ran. */
+case class TailDecision(builder: String, threshold: Long, rowsRead: Int, tail: Boolean)
+  extends SparkListenerEvent
 
 /**
  * Semantics parity of the collect / join-back helpers with the
@@ -91,21 +127,8 @@ trait LocalTail {
  *    function of the graph VALUE — partition-count invariant.
  */
 private[lib] object LocalTail {
-  /** Runs `body(df)` with `df` pinned. The frame is persisted here only if
-   * `Dataset.storageLevel` shows it is not cached yet: a plan that
-   * canonicalizes equal to a caller's cached frame (e.g.
-   * `edges.select(src, dst)` over cached `(src, dst)` edges) already reads
-   * that cache, and unpersisting it would evict the caller's entry. What
-   * was pinned here is unpersisted in a `finally`, on success and error
-   * alike; nothing else is. */
-  def pinned[T](df: DataFrame)(body: DataFrame => T): T = {
-    val pin = df.storageLevel == StorageLevel.NONE
-    if (pin) df.persist()
-    try body(df) finally if (pin) df.unpersist(false)
-  }
-
   /** `(src, dst)` pairs from the first two columns of `e`, null-free and
-   * sorted by their string forms: one bounded collect of the pinned probe. */
+   * sorted by their string forms. */
   def collectEdges(e: DataFrame): Array[(Any, Any)] =
     e.collect().iterator
       .filter(r => !r.isNullAt(0) && !r.isNullAt(1))
@@ -122,13 +145,26 @@ private[lib] object LocalTail {
       .toArray
       .sortBy { case (s, d, w) => (String.valueOf(s), String.valueOf(d), w) }
 
-  /** The vertex-table ids that are endpoints of `e`, sorted: a semi-join
-   * of the (huge) vertex table against the (small) endpoint set. */
+  /** The vertex-table ids that are endpoints of `e`, sorted: the distinct
+   * non-null `src`/`dst` values of the collected edges. On a graph whose
+   * edge endpoints are all vertices (`fromEdges`, `validated()`) those are
+   * the answer, cast to the vertex id type, and no Spark job runs;
+   * otherwise one broadcast semi-join of the vertex ids against them. */
   def endpointIds(e: DataFrame, g: GraphFrame): Array[Any] = {
     import GraphFrame.{ID, SRC, DST}
-    val epDF = e.select(col(SRC).as(ID)).union(e.select(col(DST).as(ID))).distinct()
-    g.vertices.select(col(ID)).join(epDF, Seq(ID), "left_semi")
-      .collect().map(_.get(0)).sortBy(String.valueOf(_))
+    val complete = g.edgeEndpointsComplete
+    // the type the semi-join compares in: the union type of src and dst
+    val t = if (complete) g.vertices.schema(ID).dataType
+      else e.select(col(SRC).as(ID)).union(e.select(col(DST).as(ID))).schema(ID).dataType
+    val eps = e.select(col(SRC).cast(t), col(DST).cast(t)).collect().iterator
+      .flatMap(_.toSeq).filter(_ != null).toArray.distinct
+    val ids =
+      if (complete) eps
+      else g.vertices.select(col(ID)).join(broadcast(g.spark.createDataFrame(
+          java.util.Arrays.asList(eps.map(Row(_)): _*),
+          StructType(Seq(StructField(ID, t))))), Seq(ID), "left_semi")
+        .collect().map(_.get(0))
+    ids.sortBy(String.valueOf(_))
   }
 
   /** Every vertex id, sorted by string form. */

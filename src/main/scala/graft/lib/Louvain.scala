@@ -104,30 +104,12 @@ class Louvain(g: GraphFrame) extends LocalTail {
       // endpoints absent from the vertex table carry no state: drop the edge
       .join(g.vertices.select(col(ID).as("a")), Seq("a"), "left_semi")
       .join(g.vertices.select(col(ID).as("b")), Seq("b"), "left_semi")
-    // pinned on every path; the edge count also picks the gain mode, so
-    // this gate tests the threshold itself instead of going through `gate`
-    LocalTail.pinned(und)(runPinned)
-  }
-
-  private def runPinned(und: DataFrame): DataFrame = {
-    val m = und.count()
-    val decimalGains = gainModeV match {
-      case "decimal" => true
-      case "long" =>
-        require(2 * m <= 1500000000L,
-          s"louvain: $m undirected edges exceeds the exact-Long gain bound " +
-            "(|gain| <= (2m)^2 must fit a 64-bit integer, m <= 1.5e9); " +
-            "use gainMode \"auto\" or \"decimal\" for exact DECIMAL(38,0) scoring")
-        false
-      case _ => 2 * m > 1500000000L
-    }
-    val ordOpt = UnionFind.sparkOrdering(g.vertices.schema(ID).dataType)
-    // tail only triggers at m ≤ threshold ≤ ~1e5 ≪ 1.5e9: Long gains are
-    // exact there regardless of gainMode (decimal and Long agree bit-for-
-    // bit on exact integers, proven by the decimal/long differential spec)
-    if (m == 0) g.vertices.withColumn("community", col(ID))
-    else if (tailFits(m) && ordOpt.isDefined) runLocal(und, ordOpt.get)
-    else runDistributed(und, m, decimalGains)
+    // pinned on every path: the distributed rounds re-read it. The tail
+    // holds at most the threshold's edges, far below 1.5e9, so its Long
+    // gains are exact whatever the gain mode (decimal and Long agree
+    // bit-for-bit on exact integers, proven by the decimal/long spec)
+    gateOrdered(und, g.vertices.schema(ID).dataType, pinForDistributed = true)(
+      runLocal)(p => runDistributed(p, p.count()))
   }
 
   /** One level's synchronous rounds over weighted bidirectional edges
@@ -170,7 +152,20 @@ class Louvain(g: GraphFrame) extends LocalTail {
     state
   }
 
-  private def runDistributed(und: DataFrame, m: Long, decimalGains: Boolean): DataFrame = {
+  /** The distributed rounds over the `m` canonical edges of `und`; the
+   * edge count also picks the gain mode. */
+  private def runDistributed(und: DataFrame, m: Long): DataFrame = {
+    val decimalGains = gainModeV match {
+      case "decimal" => true
+      case "long" =>
+        require(2 * m <= 1500000000L,
+          s"louvain: $m undirected edges exceeds the exact-Long gain bound " +
+            "(|gain| <= (2m)^2 must fit a 64-bit integer, m <= 1.5e9); " +
+            "use gainMode \"auto\" or \"decimal\" for exact DECIMAL(38,0) scoring")
+        false
+      case _ => 2 * m > 1500000000L
+    }
+    if (m == 0) return g.vertices.withColumn("community", col(ID))
     val mgr = new IterationManager(2)
     var rc = -1
     def cut(df: DataFrame): DataFrame = { rc += 1; mgr.cycle(df, rc) }

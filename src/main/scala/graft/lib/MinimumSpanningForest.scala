@@ -44,7 +44,6 @@ class MinimumSpanningForest(g: GraphFrame) extends LocalTail {
    * driver-side Kruskal tail collects ≤ threshold (a, b, w) triples. */
   def run(): DataFrame = {
     require(weightColV.nonEmpty, "minimumSpanningForest requires weightCol(...)")
-    val idType = g.edges.schema(SRC).dataType
     val e = g.edges
       .filter(col(SRC).isNotNull && col(DST).isNotNull &&
         col(weightColV).isNotNull && !col(weightColV).cast("double").isNaN &&
@@ -53,6 +52,8 @@ class MinimumSpanningForest(g: GraphFrame) extends LocalTail {
         greatest(col(SRC), col(DST)).as("b"),
         col(weightColV).cast("double").as("w"))
       .groupBy("a", "b").agg(min("w").as("w"))
+    // least/greatest widen mixed src/dst types: order by the probe's type
+    val idType = e.schema("a").dataType
     gateOrdered(e, idType, pinForDistributed = true)(runLocal)(runDistributed(_, idType))
   }
 
@@ -172,7 +173,7 @@ class MinimumSpanningForest(g: GraphFrame) extends LocalTail {
       val (ra, rb) = (find(a), find(b))
       if (ra == rb) false else { parent(ra) = rb; true }
     }
-    val idType = g.edges.schema(SRC).dataType
+    val idType = e.schema("a").dataType
     val schema = StructType(Seq(StructField(SRC, idType), StructField(DST, idType),
       StructField("weight", DoubleType)))
     val list: java.util.List[Row] = java.util.Arrays.asList(

@@ -24,8 +24,12 @@ import graft.GraphFrame
  * Scale: state is (id, sketch) — one row of bounded width per vertex;
  * each round is one edge join + one `theta_union_agg` hash aggregation
  * (map-side combinable: unions are associative), round count = graph
- * diameter, rounds through [[IterationManager]]. The per-round saturation
- * probe doubles as the convergence test.
+ * diameter. Every round is one observed lineage cut
+ * ([[IterationManager.cycleObserved]]): N(d) is summed on the cut's own
+ * job, and that sum doubles as the saturation (convergence) test, so a
+ * round costs one job and no separate total query. A round that throws
+ * releases every cut and the pinned edge frame before the error
+ * propagates.
  *
  * `run()` returns one row per distance: `(d: int, n_pairs: long)` for
  * d = 0 until N(d) stops growing (or `maxIter`). `effectiveDiameter`
@@ -52,36 +56,35 @@ class NeighborhoodFunction(g: GraphFrame) {
   def run(): DataFrame = {
     val spark = g.spark
     val lg = lgNomEntriesV
-    val mgr = new IterationManager(2)
-    val edges = mgr.persistLazy(
-      g.edges.select(col(SRC), col(DST)).distinct().repartition(col(DST)))
-
-    var state = mgr.cycle(g.vertices.select(col(ID))
-      .groupBy(col(ID))
-      .agg(expr(s"theta_sketch_agg($ID, $lg)").as("_nf_sk")), 0)
-
-    // theta_sketch_estimate returns LONG (Spark rounds the raw estimate);
-    // sum() over zero rows is NULL — coalesce so an empty vertex table
-    // yields a clean (0, 0) row instead of an NPE
-    def total(): Long =
-      state.agg(coalesce(sum(expr("theta_sketch_estimate(_nf_sk)")), lit(0L)))
-        .head().getLong(0)
-
-    val counts = ArrayBuffer[(Int, Long)]((0, total()))
-    var d = 0
-    var saturated = false
-    while (!saturated && d < maxIterV) {
-      d += 1
-      // ball_d(v) = ball_{d-1}(v) ∪ ⋃_{v→w} ball_{d-1}(w): ship each
-      // vertex's sketch to its in-edges' sources, union per vertex
-      val msgs = edges.join(state.withColumnRenamed(ID, DST), DST)
-        .select(col(SRC).as(ID), col("_nf_sk"))
-      state = mgr.cycle(state.unionByName(msgs)
-        .groupBy(col(ID)).agg(expr(s"theta_union_agg(_nf_sk, $lg)").as("_nf_sk")), d)
-      val nd = total()
-      if (nd == counts.last._2) saturated = true else counts += ((d, nd))
-    }
-    mgr.close()
+    val mgr = new IterationManager()
+    // N(d) rides the cut job of ball_d. theta_sketch_estimate returns LONG
+    // (Spark rounds the raw estimate); sum() over zero rows is NULL —
+    // coalesce so an empty vertex table yields a clean (0, 0) row
+    val total = Seq(coalesce(sum(expr("theta_sketch_estimate(_nf_sk)")), lit(0L)))
+    val counts = ArrayBuffer.empty[(Int, Long)]
+    try {
+      val edges = mgr.persistLazy(
+        g.edges.select(col(SRC), col(DST)).distinct().repartition(col(DST)))
+      var ball = g.vertices.select(col(ID))
+        .groupBy(col(ID))
+        .agg(expr(s"theta_sketch_agg($ID, $lg)").as("_nf_sk"))
+      var d = 0
+      var saturated = false
+      while (!saturated && d <= maxIterV) {
+        val (state, Seq(n: java.lang.Long)) = mgr.cycleObserved(ball, d, total)
+        if (counts.lastOption.exists(_._2 == n.longValue)) saturated = true
+        else {
+          counts += ((d, n.longValue))
+          d += 1
+          // ball_d(v) = ball_{d-1}(v) ∪ ⋃_{v→w} ball_{d-1}(w): ship each
+          // vertex's sketch to its in-edges' sources, union per vertex
+          val msgs = edges.join(state.withColumnRenamed(ID, DST), DST)
+            .select(col(SRC).as(ID), col("_nf_sk"))
+          ball = state.unionByName(msgs)
+            .groupBy(col(ID)).agg(expr(s"theta_union_agg(_nf_sk, $lg)").as("_nf_sk"))
+        }
+      }
+    } finally mgr.close()
     import spark.implicits._
     counts.toSeq.toDF("d", "n_pairs")
   }

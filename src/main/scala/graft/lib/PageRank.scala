@@ -155,9 +155,7 @@ class PageRank(g: GraphFrame) extends LocalTail {
       .map(r => (r.get(0), if (r.isNullAt(1)) null else r.get(1), r.getDouble(2)))
       .toArray
       .sortBy { case (s, d, _) => (String.valueOf(s), String.valueOf(d)) }
-    val epDF = e.select(col(SRC).as(ID)).union(e.select(col(DST).as(ID))).distinct()
-    val validArr = g.vertices.select(col(ID)).join(epDF, Seq(ID), "left_semi")
-      .collect().map(_.get(0))
+    val validArr = LocalTail.endpointIds(e, g)
     val valid = validArr.toSet
     // resolve the personalized source with SQL equality (numeric
     // coercion!) so the local identity test uses the STORED value; an
@@ -184,7 +182,7 @@ class PageRank(g: GraphFrame) extends LocalTail {
     // uniform tol mode: isolated vertices move 1.0 → resetProb in round 1
     // and then freeze — they keep the stop probe alive through round 1
     // exactly as the distributed all-vertices voting does
-    val nIsolated = g.vertices.count() - validArr.length -
+    lazy val nIsolated = g.vertices.count() - validArr.length -
       sourceVals.filterNot(valid).size
     val maxRounds = if (tolV.isDefined) 100 else maxIterV
     var round = 0

@@ -90,10 +90,7 @@ class ParallelPersonalizedPageRank(g: GraphFrame) extends LocalTail {
       .map(r => (r.get(0), if (r.isNullAt(1)) null else r.get(1)))
       .toArray
       .sortBy { case (s, d) => (String.valueOf(s), String.valueOf(d)) }
-    val epDF = e.select(col(GraphFrame.SRC).as(ID))
-      .union(e.select(col(GraphFrame.DST).as(ID))).distinct()
-    val validArr = g.vertices.select(col(ID)).join(epDF, Seq(ID), "left_semi")
-      .collect().map(_.get(0))
+    val validArr = LocalTail.endpointIds(e, g)
     val valid = validArr.toSet
     // one SQL job resolves every vertex's lane membership with the exact
     // `id === lit(source)` coercion of the distributed init

@@ -16,6 +16,11 @@ import org.apache.spark.sql.classic.ExpressionUtils
  * core/src/main/scala-spark-4/.../SparkShims.scala.
  */
 object GraftShims {
+  /** Post `event` on the context's listener bus; listeners get it in
+   * `onOtherEvent`, in order with the job events around it. */
+  def postEvent(spark: SparkSession, event: org.apache.spark.scheduler.SparkListenerEvent): Unit =
+    spark.sparkContext.listenerBus.post(event)
+
   /** Wrap a Catalyst expression as a user-facing Column. */
   def column(e: Expression): Column = ExpressionUtils.column(e)
 

@@ -244,6 +244,15 @@ class CacheHygieneSpec extends TestBase with TailCases {
       assert(leak.isEmpty, s"left round frames after a failed round: $leak")
     }
 
+  // NeighborhoodFunction cuts the vertex sketches before a round reads an
+  // edge, so a failure in one edge's dst fires in the round-1 cut, after
+  // the round-0 cut and with the edge frame pinned.
+  test("neighborhoodFunction releases its round cuts when a round throws") {
+    val anf = TailCase("neighborhoodFunction", Nil, (g, _) => g.neighborhoodFunction.run())
+    val leak = leftAfterDstError(anf, "round failure")
+    assert(leak.isEmpty, s"left round frames after a failed round: $leak")
+  }
+
   // r15 (ADVICE item): hostRank's host-edge pin is operator-internal —
   // the result must be self-contained on BOTH PageRank paths (the local
   // tail's join-back used to reference the cached edges, pinning a

@@ -20,7 +20,7 @@ import graft.connect.{GraftConnectDispatch, GraftRelation, GraftRelationPlugin, 
  * `Any` bytes come from our own wire encoder — the same bytes a remote
  * client produces.
  */
-class ConnectPluginSpec extends TestBase {
+class ConnectPluginSpec extends TestBase with SparkEvents {
 
   private lazy val planner =
     new SparkConnectPlanner(
@@ -796,40 +796,12 @@ class ConnectPluginSpec extends TestBase {
 
   test("an unknown key is rejected before any Spark job runs") {
     val docs = spark.sql(docSql)
-    val group = "connect-unknown-key-probe"
-    val jobs = new java.util.concurrent.atomic.AtomicInteger()
-    @volatile var marker = new java.util.concurrent.CountDownLatch(1)
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(js: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        Option(js.properties).map(_.getProperty("spark.jobGroup.id")).orNull match {
-          case `group` => jobs.incrementAndGet()
-          case g if g == group + "-marker" => marker.countDown()
-          case _ =>
-        }
-    }
-    val sc = spark.sparkContext
-    def inGroup[T](g: String)(body: => T): T = {
-      sc.setJobGroup(g, g)
-      try body finally sc.clearJobGroup()
-    }
-    // runs the op in `group`, then one marker job: listener events arrive
-    // in order, so once the marker is seen every earlier job is counted
-    def jobsOf(params: String): Int = {
-      jobs.set(0)
-      marker = new java.util.concurrent.CountDownLatch(1)
-      inGroup(group)(scala.util.Try(
-        GraftConnectDispatch.run(scala.None, docs, "pipe_bpe_train", params)))
-      inGroup(group + "-marker")(spark.range(1).count())
-      assert(marker.await(60, java.util.concurrent.TimeUnit.SECONDS))
-      jobs.get()
-    }
-    sc.addSparkListener(listener)
-    try {
-      assert(jobsOf("""{"textCol": "text", "numMerge": 1}""") == 0)
-      // pipe_bpe_train is eager: spelled right it runs jobs inside run(),
-      // so the probe can see them
-      assert(jobsOf("""{"textCol": "text", "numMerges": 1}""") > 0)
-    } finally sc.removeSparkListener(listener)
+    def jobsOf(params: String): Int = observed(scala.util.Try(
+      GraftConnectDispatch.run(scala.None, docs, "pipe_bpe_train", params))).jobs
+    assert(jobsOf("""{"textCol": "text", "numMerge": 1}""") == 0)
+    // pipe_bpe_train is eager: spelled right it runs jobs inside run(),
+    // so the probe can see them
+    assert(jobsOf("""{"textCol": "text", "numMerges": 1}""") > 0)
     val err = intercept[IllegalArgumentException] {
       GraftConnectDispatch.run(scala.None, docs, "pipe_bpe_train",
         """{"textCol": "text", "numMerge": 1}""")

@@ -1,0 +1,59 @@
+package graft
+
+import java.nio.file.Files
+
+import org.apache.spark.sql.DataFrame
+
+import graft.gate.GateTable
+
+/** Spark-job budgets per call: each call runs in its own job group, a
+ * SparkListener counts the group's jobs, and the call's result is
+ * consumed (collected), so lazy work is counted too. Job counts repeat
+ * run to run within one job, so each budget is the count measured when it
+ * was set plus 2. A call that needs more has gained per-job overhead: find
+ * the new jobs before raising its budget. */
+class JobBudgetSpec extends TestBase with SparkEvents {
+  import spark.implicits._
+
+  /** A 25-nation table: the vertex set of the circulant ANF fixture. */
+  private lazy val nationDir: String = {
+    val dir = Files.createTempDirectory("job-budget-spec").toString
+    (0 until 25).map(n => (n, s"NATION_$n")).toDF("n_nationkey", "n_name")
+      .write.parquet(s"$dir/nation.parquet")
+    dir
+  }
+
+  override def afterAll(): Unit = {
+    def rm(f: java.io.File): Unit = {
+      Option(f.listFiles()).foreach(_.foreach(rm))
+      f.delete()
+    }
+    try rm(new java.io.File(nationDir)) finally super.afterAll()
+  }
+
+  private def gateRow(name: String): Seq[DataFrame] =
+    Seq(GateTable.rows.find(_.name == name).get.run(spark, nationDir))
+
+  /** (call, budget, the frames the call returns). */
+  private val budgets: Seq[(String, Int, () => Seq[DataFrame])] = Seq(
+    ("g_neighborhood", 66, () => gateRow("g_neighborhood")),
+    ("g_avg_distance", 67, () => gateRow("g_avg_distance")),
+    ("g_effective_diameter", 70, () => gateRow("g_effective_diameter")),
+    ("pageRank", 9, () => {
+      val pr = friends.pageRank.maxIter(10).run()
+      Seq(pr.vertices, pr.edges)
+    }),
+    ("labelPropagation", 6, () => Seq(friends.labelPropagation.maxIter(5).run())),
+    ("kCore", 8, () => Seq(friends.kCore.run())),
+    ("louvain", 8, () => Seq(friends.louvain.run())),
+    ("articulationPoints", 5, () => Seq(friends.twoConnectivity.articulationPoints())),
+    ("connectedComponents", 14, () => Seq(friends.connectedComponents.run())))
+
+  for ((call, budget, run) <- budgets)
+    test(s"$call runs at most $budget Spark jobs") {
+      spark.catalog.clearCache()
+      val jobs = observed(run().foreach(_.collect())).jobs
+      info(s"$call: $jobs Spark jobs")
+      assert(jobs <= budget, s"$call ran $jobs Spark jobs, budget $budget")
+    }
+}

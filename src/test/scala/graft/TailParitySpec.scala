@@ -9,10 +9,11 @@ import org.apache.spark.sql.functions._
  * paths (threshold high = local tail, threshold 0 = distributed
  * supersteps). This is the guard for the tails' core claim: not "same
  * answer at convergence" but same answer, period — including mid-
- * convergence caps exercised by the per-operator specs. The last test
- * runs every builder of [[TailCases]] through both paths.
+ * convergence caps exercised by the per-operator specs. The last tests
+ * run every builder of [[TailCases]] through both paths, at the
+ * threshold boundary and on a graph with mixed integral id types.
  */
-class TailParitySpec extends TestBase with TailCases {
+class TailParitySpec extends TestBase with TailCases with SparkEvents {
   import spark.implicits._
 
   /** xorshift-ish deterministic edge list: no RNG state in the suite. */
@@ -102,5 +103,53 @@ class TailParitySpec extends TestBase with TailCases {
       canon(c.run(g, 100000L)) != canon(c.run(g, 0L))
     }
     assert(mismatched.isEmpty, s"tail != distributed: ${mismatched.map(_.name)}")
+  }
+
+  // The gate reads at most t + 1 probe rows: at t = the probe's exact row
+  // count n the tail must run, at n - 1 the run must go distributed, and
+  // both must give the threshold-0 output. n is what the gate read at a
+  // threshold far above it.
+  test("every driver tail runs at threshold = its probe's row count and not one below") {
+    val failures = tailCases.flatMap { c =>
+      val g = GraphFrame(friends.vertices, tailEdges(c.edgeCols))
+      val expected = canon(c.run(g, 0L))
+      val (builder, n) = observed(canon(c.run(g, 100000L))).decisions match {
+        case Seq(d) if d.tail => (d.builder, d.rowsRead.toLong)
+        case ds => fail(s"${c.name}: expected one tail decision at 100000, got $ds")
+      }
+      // a distributed body may run other builders (2-connectivity runs CC)
+      def check(t: Long, tail: Boolean): Option[String] = {
+        val o = observed(canon(c.run(g, t)))
+        if (o.decisions.filter(_.builder == builder).map(_.tail) != Seq(tail))
+          Some(s"${c.name} at $t (n = $n): decisions ${o.decisions}")
+        else if (o.result != expected) Some(s"${c.name} at $t (n = $n): output differs")
+        else None
+      }
+      check(n, tail = true) ++ check(n - 1, tail = false)
+    }
+    assert(failures.isEmpty, failures.mkString("; "))
+  }
+
+  // fromEdges types its vertex ids as the union type of src and dst, so
+  // the tails' endpoint ids, taken from the collected edges without a
+  // Spark job, must come back in that type: Int src values as Long ids.
+  test("driver tails on a fromEdges graph with Int src and Long dst == distributed") {
+    val ints = (c: org.apache.spark.sql.Column) => ascii(c) - 96
+    // these runs name the string vertex "a" as their source
+    val stringSources = Set("parallelPersonalizedPageRank", "independentCascade",
+      "temporalReachability")
+    val failures = tailCases.filterNot(c => stringSources(c.name)).flatMap { c =>
+      val e = tailEdges(c.edgeCols)
+        .withColumn("src", ints(col("src")))
+        .withColumn("dst", ints(col("dst")).cast("long"))
+      val g = GraphFrame.fromEdges(e)
+      assert(g.vertices.schema("id").dataType == org.apache.spark.sql.types.LongType)
+      scala.util.Try(canon(c.run(g, 100000L)) == canon(c.run(g, 0L))) match {
+        case scala.util.Success(true) => None
+        case scala.util.Success(false) => Some(s"${c.name}: tail != distributed")
+        case scala.util.Failure(t) => Some(s"${c.name}: $t")
+      }
+    }
+    assert(failures.isEmpty, failures.mkString("; "))
   }
 }
