@@ -60,7 +60,7 @@ object GateFixtures {
   /** Irregular cycle+chords graph over the 25 nations: id → (id+7) % 25,
    * plus id → (3·id+1) % 25 for id % 3 = 0 (out-degrees 1-2, diameter ~8
    * — real path structure where the trade graph is near-complete). */
-  private[gate] def circulantGraph(s: SparkSession, dir: String): GraphFrame = {
+  private[graft] def circulantGraph(s: SparkSession, dir: String): GraphFrame = {
     val v = load(s, dir, "nation").select(col("n_nationkey").as(ID))
     val e = v.select(col(ID).as(SRC), pmod(col(ID) + 7, lit(25)).as(DST))
       .unionByName(v.filter(col(ID) % 3 === 0)

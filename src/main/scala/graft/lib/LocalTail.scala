@@ -11,7 +11,7 @@ import graft.{GraftConf, GraphFrame}
 /**
  * The bounded driver-side tail shared by every builder that can finish a
  * small graph on the driver (docs/THRESHOLDS.md rows 1, 2, 2b, 11,
- * 12b-12e, 22). Below a conf-settable EDGE threshold (0 disables),
+ * 12b-12e, 13, 22). Below a conf-settable EDGE threshold (0 disables),
  * per-round distributed supersteps are pure fixed scheduling overhead, so
  * the algorithm collects the graph once, iterates locally and
  * broadcast-joins the result back. The round-8 cadence experiment (see

@@ -3,6 +3,7 @@ package graft.lib
 import scala.collection.mutable.ArrayBuffer
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.BinaryType
 import graft.GraphFrame
 
 /**
@@ -31,11 +32,19 @@ import graft.GraphFrame
  * releases every cut and the pinned edge frame before the error
  * propagates.
  *
+ * Small graphs finish on the driver ([[LocalTail]], docs/THRESHOLDS.md
+ * row 13): at most `setSmallGraphThreshold` edges AND at most
+ * min(2^lgNomEntries, 4096) vertex rows. Below 2^lgNomEntries vertices
+ * every ball's sketch is exact, so the tail replays the same rounds with
+ * one exact bitset per ball and returns the same table from one bounded
+ * edge collect (plus one bounded vertex-id collect unless the vertex
+ * table is the edges' own endpoint set).
+ *
  * `run()` returns one row per distance: `(d: int, n_pairs: long)` for
  * d = 0 until N(d) stops growing (or `maxIter`). `effectiveDiameter`
  * post-processes that table.
  */
-class NeighborhoodFunction(g: GraphFrame) {
+class NeighborhoodFunction(g: GraphFrame) extends LocalTail {
   import GraphFrame.{ID, SRC, DST}
 
   private var maxIterV: Int = 64
@@ -54,39 +63,123 @@ class NeighborhoodFunction(g: GraphFrame) {
   }
 
   def run(): DataFrame = {
+    val lg = lgNomEntriesV
+    // built before the gate so both paths reject an id type the sketches
+    // cannot hash, at analysis time
+    val ball0 = g.vertices.select(col(ID))
+      .groupBy(col(ID))
+      .agg(expr(s"theta_sketch_agg($ID, $lg)").as("_nf_sk"))
+    val probe = g.edges.select(col(SRC), col(DST))
+    // the type the distributed joins and unions compare ids in
+    val keyType = g.vertices.select(col(ID))
+      .union(probe.select(col(SRC).as(ID))).union(probe.select(col(DST).as(ID)))
+      .schema(ID).dataType
+    val bound = math.min(1L << lg, 4096L)
+    // the gate's collect fills `edges`; `fits` then reads the vertex ids
+    var edges = Array.empty[(Any, Any)]
+    var ids = Array.empty[Any]
+    def fits: Boolean = {
+      ids =
+        if (verticesAreEndpoints) edges.flatMap { case (s, d) => Seq(s, d) }.distinct
+        else g.vertices.select(col(ID).cast(keyType)).limit(bound.toInt + 1)
+          .collect().map(_.get(0))
+      ids.length <= bound
+    }
+    // byte arrays compare by reference on the driver
+    gateCollect(probe, eligible = keyType != BinaryType, andIf = fits) { p =>
+      edges = p.select(col(SRC).cast(keyType), col(DST).cast(keyType)).collect()
+        .map(r => (r.get(0), r.get(1)))
+      edges
+    }(_ => runLocal(edges, ids))(_ => runDistributed(ball0))
+  }
+
+  /** Whether the vertex table's plan is the distinct endpoints of the edge
+   * table's, as [[GraphFrame.fromEdges]] builds it: then the collected
+   * edges hold every vertex id. `edgeEndpointsComplete` alone is not
+   * enough — `filterEdges` and `validated()` keep it on graphs with
+   * isolated vertices, and each of those counts in N(d). */
+  private def verticesAreEndpoints: Boolean =
+    g.edgeEndpointsComplete && g.vertices.queryExecution.analyzed.sameResult(
+      GraphFrame.fromEdges(g.edges).vertices.queryExecution.analyzed)
+
+  /** The `(d, n_pairs)` table: N(d) = `observe(d)` for d = 0, 1, ...
+   * until N(d) stops growing or d > maxIter. `observe(d)` first advances
+   * the balls from distance d - 1 to d (d > 0). */
+  private def rounds(observe: Int => Long): DataFrame = {
+    val counts = ArrayBuffer.empty[(Int, Long)]
+    var d = 0
+    var saturated = false
+    while (!saturated && d <= maxIterV) {
+      val n = observe(d)
+      if (counts.lastOption.exists(_._2 == n)) saturated = true
+      else { counts += ((d, n)); d += 1 }
+    }
     val spark = g.spark
+    import spark.implicits._
+    counts.toSeq.toDF("d", "n_pairs")
+  }
+
+  private def runDistributed(ball0: DataFrame): DataFrame = {
     val lg = lgNomEntriesV
     val mgr = new IterationManager()
     // N(d) rides the cut job of ball_d. theta_sketch_estimate returns LONG
     // (Spark rounds the raw estimate); sum() over zero rows is NULL —
     // coalesce so an empty vertex table yields a clean (0, 0) row
     val total = Seq(coalesce(sum(expr("theta_sketch_estimate(_nf_sk)")), lit(0L)))
-    val counts = ArrayBuffer.empty[(Int, Long)]
     try {
       val edges = mgr.persistLazy(
         g.edges.select(col(SRC), col(DST)).distinct().repartition(col(DST)))
-      var ball = g.vertices.select(col(ID))
-        .groupBy(col(ID))
-        .agg(expr(s"theta_sketch_agg($ID, $lg)").as("_nf_sk"))
-      var d = 0
-      var saturated = false
-      while (!saturated && d <= maxIterV) {
-        val (state, Seq(n: java.lang.Long)) = mgr.cycleObserved(ball, d, total)
-        if (counts.lastOption.exists(_._2 == n.longValue)) saturated = true
-        else {
-          counts += ((d, n.longValue))
-          d += 1
+      var state = ball0
+      rounds { d =>
+        val ball = if (d == 0) ball0 else {
           // ball_d(v) = ball_{d-1}(v) ∪ ⋃_{v→w} ball_{d-1}(w): ship each
           // vertex's sketch to its in-edges' sources, union per vertex
           val msgs = edges.join(state.withColumnRenamed(ID, DST), DST)
             .select(col(SRC).as(ID), col("_nf_sk"))
-          ball = state.unionByName(msgs)
+          state.unionByName(msgs)
             .groupBy(col(ID)).agg(expr(s"theta_union_agg(_nf_sk, $lg)").as("_nf_sk"))
         }
+        val (cut, Seq(n: java.lang.Long)) = mgr.cycleObserved(ball, d, total)
+        state = cut
+        n.longValue
       }
     } finally mgr.close()
-    import spark.implicits._
-    counts.toSeq.toDF("d", "n_pairs")
+  }
+
+  /** Driver tail: the distributed rounds replayed with one exact bitset
+   * per ball over the ≤ 2^lgNomEntries distinct non-null vertex ids. Keys
+   * follow the distributed `groupBy(id)`: a duplicate id is one key, and
+   * a null id or src is a key whose ball starts empty. A key that is no
+   * vertex (a dangling src) holds state only once one of its out-edges
+   * brings it a ball, and until then its ball is empty; so an edge whose
+   * dst holds no state sends nothing, as in the join, and every ball can
+   * be summed. A null dst matches nothing. */
+  private def runLocal(collected: Array[(Any, Any)], vertexIds: Array[Any]): DataFrame = {
+    val key = new java.util.HashMap[Any, Int]() // holds null
+    def index(k: Any): Int = { if (!key.containsKey(k)) key.put(k, key.size); key.get(k) }
+    // the non-null vertex ids first: key i < bits is bit i
+    vertexIds.filter(_ != null).foreach(index)
+    val bits = key.size
+    val msgs = collected.filter(_._2 != null).distinct
+      .map { case (s, d) => (index(s), index(d)) }
+    val words = (bits + 63) / 64
+    var ball = Array.tabulate(key.size) { i =>
+      val b = new Array[Long](words)
+      if (i < bits) b(i >> 6) = 1L << i
+      b
+    }
+    rounds { d =>
+      if (d > 0) {
+        val next = ball.map(_.clone)
+        for ((i, j) <- msgs) {
+          val (to, from) = (next(i), ball(j))
+          var w = 0
+          while (w < words) { to(w) |= from(w); w += 1 }
+        }
+        ball = next
+      }
+      ball.iterator.map(_.iterator.map(java.lang.Long.bitCount).sum.toLong).sum
+    }
   }
 
   /** Smallest d with N(d) >= alpha * N(max) — the standard (integer)

@@ -322,40 +322,45 @@ object Dedup {
    * to its component's minimum id (`keep_id`, itself for singletons).
    * Small pair sets (the overwhelmingly common case after LSH banding —
    * dozens to thousands of edges out of millions of documents) are
-   * union-found on the driver in one job; anything bigger runs the
+   * union-found on the driver: one bounded `limit(smallThreshold + 1)`
+   * collect both decides and feeds the union-find, so the driver never
+   * holds more than smallThreshold + 1 pairs. Anything bigger runs the
    * distributed GraphFrame CC, which is the 100 TB path. Both label with
    * the natural-ordering minimum id, so results are identical.
    * Full bounded-path matrix: docs/THRESHOLDS.md. */
   private[graft] def clusterReps(df: DataFrame, idCol: String, pairs0: DataFrame,
       smallThreshold: Long = 100000L): DataFrame = {
-    // the pair frame is the output of the whole LSH chain — persist it so
-    // the size probe and the consumer (collect or CC) share one computation
-    val pairs = pairs0.persist()
-    val nPairs = pairs.count()
     // id types without a Spark-faithful driver ordering route to the
-    // distributed path (same labels, just without the one-job shortcut)
+    // distributed path (same labels, just without the driver shortcut)
     val ordOpt = graft.lib.UnionFind.sparkOrdering(df.schema(idCol).dataType)
-    val reps =
-      if (nPairs <= smallThreshold && ordOpt.isDefined) {
-        val rows = pairs.collect()
-        pairs.unpersist(false)
-        val labels = graft.lib.UnionFind.minLabels(
-          rows.iterator.map(r => (r.get(0), r.get(1))), ordOpt.get)
-        val session = df.sparkSession
-        val schema = org.apache.spark.sql.types.StructType(Seq(
-          org.apache.spark.sql.types.StructField(idCol, df.schema(idCol).dataType),
-          org.apache.spark.sql.types.StructField("_rep", df.schema(idCol).dataType)))
-        val repRows = labels.map { case (v, r) => org.apache.spark.sql.Row(v, r) }.toSeq
-        broadcast(session.createDataFrame(
-          session.sparkContext.parallelize(repRows, 1), schema))
-      } else {
-        val g = graft.GraphFrame.fromEdges(
-          pairs.select(col("a").as(graft.GraphFrame.SRC), col("b").as(graft.GraphFrame.DST)))
-        val cc = g.connectedComponents.run() // materializes (and persists) labels
-        pairs.unpersist(false)
-        cc.select(col(graft.GraphFrame.ID).as(idCol),
-          min(graft.GraphFrame.ID).over(Window.partitionBy("component")).as("_rep"))
+    // the pair frame is the output of the whole LSH chain: pinned before
+    // the collect, so a run that goes distributed computes it once (a
+    // caller-cached frame is read, not pinned again)
+    val pin = pairs0.storageLevel == org.apache.spark.storage.StorageLevel.NONE
+    val pairs = if (pin) pairs0.persist() else pairs0
+    val reps = try {
+      val small = ordOpt.map(_ => pairs.limit(
+        math.min(smallThreshold, Int.MaxValue - 1L).toInt + 1).collect())
+        .filter(_.length <= smallThreshold)
+      small match {
+        case Some(rows) =>
+          val labels = graft.lib.UnionFind.minLabels(
+            rows.iterator.map(r => (r.get(0), r.get(1))), ordOpt.get)
+          val session = df.sparkSession
+          val schema = org.apache.spark.sql.types.StructType(Seq(
+            org.apache.spark.sql.types.StructField(idCol, df.schema(idCol).dataType),
+            org.apache.spark.sql.types.StructField("_rep", df.schema(idCol).dataType)))
+          val repRows = labels.map { case (v, r) => org.apache.spark.sql.Row(v, r) }.toSeq
+          broadcast(session.createDataFrame(
+            session.sparkContext.parallelize(repRows, 1), schema))
+        case None =>
+          val g = graft.GraphFrame.fromEdges(
+            pairs.select(col("a").as(graft.GraphFrame.SRC), col("b").as(graft.GraphFrame.DST)))
+          val cc = g.connectedComponents.run() // materializes (and persists) labels
+          cc.select(col(graft.GraphFrame.ID).as(idCol),
+            min(graft.GraphFrame.ID).over(Window.partitionBy("component")).as("_rep"))
       }
+    } finally if (pin) pairs.unpersist(false)
     df.select(col(idCol))
       .join(reps, Seq(idCol), "left_outer")
       .select(col(idCol), coalesce(col("_rep"), col(idCol)).as("keep_id"))

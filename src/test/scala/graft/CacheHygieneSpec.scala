@@ -237,21 +237,14 @@ class CacheHygieneSpec extends TestBase with TailCases {
   // The chained-round loops (IterationManager.chained) cut the initial
   // state before the first round reads an edge, so a failure in one
   // edge's dst fires in the first chunk's cut, after that initial cut.
+  // NeighborhoodFunction likewise cuts the vertex sketches first, so the
+  // failure fires in the round-1 cut, with the edge frame pinned.
   for (name <- Seq("hits", "katz", "eigenvector", "salsa", "independentCascade",
-      "temporalReachability"))
+      "temporalReachability", "neighborhoodFunction"))
     test(s"$name releases its round cuts when a round throws") {
       val leak = leftAfterDstError(tailCases.find(_.name == name).get, "round failure")
       assert(leak.isEmpty, s"left round frames after a failed round: $leak")
     }
-
-  // NeighborhoodFunction cuts the vertex sketches before a round reads an
-  // edge, so a failure in one edge's dst fires in the round-1 cut, after
-  // the round-0 cut and with the edge frame pinned.
-  test("neighborhoodFunction releases its round cuts when a round throws") {
-    val anf = TailCase("neighborhoodFunction", Nil, (g, _) => g.neighborhoodFunction.run())
-    val leak = leftAfterDstError(anf, "round failure")
-    assert(leak.isEmpty, s"left round frames after a failed round: $leak")
-  }
 
   // r15 (ADVICE item): hostRank's host-edge pin is operator-internal —
   // the result must be self-contained on BOTH PageRank paths (the local

@@ -4,7 +4,7 @@ import java.nio.file.Files
 
 import org.apache.spark.sql.DataFrame
 
-import graft.gate.GateTable
+import graft.gate.{GateFixtures, GateTable}
 
 /** Spark-job budgets per call: each call runs in its own job group, a
  * SparkListener counts the group's jobs, and the call's result is
@@ -36,9 +36,12 @@ class JobBudgetSpec extends TestBase with SparkEvents {
 
   /** (call, budget, the frames the call returns). */
   private val budgets: Seq[(String, Int, () => Seq[DataFrame])] = Seq(
-    ("g_neighborhood", 66, () => gateRow("g_neighborhood")),
-    ("g_avg_distance", 67, () => gateRow("g_avg_distance")),
-    ("g_effective_diameter", 70, () => gateRow("g_effective_diameter")),
+    ("g_neighborhood", 11, () => gateRow("g_neighborhood")),
+    ("g_avg_distance", 12, () => gateRow("g_avg_distance")),
+    ("g_effective_diameter", 15, () => gateRow("g_effective_diameter")),
+    // the distributed ANF rounds, which the gate rows no longer reach
+    ("neighborhoodFunction", 62, () => Seq(GateFixtures.circulantGraph(spark, nationDir)
+      .neighborhoodFunction.setSmallGraphThreshold(0).run())),
     ("pageRank", 9, () => {
       val pr = friends.pageRank.maxIter(10).run()
       Seq(pr.vertices, pr.edges)

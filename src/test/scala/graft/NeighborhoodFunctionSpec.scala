@@ -2,11 +2,32 @@ package graft
 
 import org.apache.spark.sql.functions._
 
-class NeighborhoodFunctionSpec extends TestBase {
+class NeighborhoodFunctionSpec extends TestBase with SparkEvents {
   import spark.implicits._
 
   private def nf(g: GraphFrame): Map[Int, Long] =
     g.neighborhoodFunction.run().as[(Int, Long)].collect().toMap
+
+  /** `run()` at `threshold` (100000 takes the driver tail, 0 the
+   * distributed rounds), with the tail decisions it posted. */
+  private def nfAt(g: GraphFrame, threshold: Long,
+      conf: lib.NeighborhoodFunction => lib.NeighborhoodFunction = identity)
+      : Observed[Map[Int, Long]] =
+    observed(conf(g.neighborhoodFunction).setSmallGraphThreshold(threshold).run()
+      .as[(Int, Long)].collect().toMap)
+
+  /** Asserts that the tail ran at 100000 and gave the distributed result;
+   * returns that result. */
+  private def tailMatchesDistributed(g: GraphFrame,
+      conf: lib.NeighborhoodFunction => lib.NeighborhoodFunction = identity)
+      : Map[Int, Long] = {
+    val tail = nfAt(g, 100000L, conf)
+    assert(tail.decisions.map(_.tail) == Seq(true), s"decisions ${tail.decisions}")
+    val dist = nfAt(g, 0L, conf)
+    assert(dist.decisions.isEmpty)
+    assert(tail.result == dist.result)
+    tail.result
+  }
 
   test("directed chain: N(d) grows by the remaining suffix sizes") {
     // 0->1->2->3: N(0)=4, N(1)=7, N(2)=9, N(3)=10, then saturates
@@ -88,5 +109,55 @@ class NeighborhoodFunctionSpec extends TestBase {
     val a = anf.effectiveDiameterReport(0.9).head()
     val b = anf.effectiveDiameterReport(nfTable, 0.9).head()
     assert(a == b)
+  }
+
+  // vertices a, b, c, d (twice) and isolated "iso"; x and z are dangling
+  // srcs; y is a dangling dst that is itself a dangling src, so it holds
+  // state from round 1 and sends from round 2; a -> b twice, b -> b, a
+  // null src and a null dst. Hand replay of the distributed rounds:
+  // N = 5, 11, 18, 22, 24.
+  private def awkward: GraphFrame = {
+    val v = Seq("a", "b", "c", "d", "d", "iso").toDF("id")
+    val e = Seq[(String, String)](("a", "b"), ("a", "b"), ("b", "b"), ("b", "c"),
+      ("c", "d"), ("x", "a"), ("d", "y"), ("y", "c"), ("z", "y"), (null, "a"),
+      ("c", null)).toDF("src", "dst")
+    GraphFrame(v, e)
+  }
+
+  test("driver tail == distributed rounds on an awkward graph") {
+    assert(tailMatchesDistributed(awkward) ==
+      Map(0 -> 5L, 1 -> 11L, 2 -> 18L, 3 -> 22L, 4 -> 24L))
+    assert(tailMatchesDistributed(awkward, _.maxIter(2)) ==
+      Map(0 -> 5L, 1 -> 11L, 2 -> 18L))
+  }
+
+  // fromEdges: the vertex ids come from the collected edges. filterEdges
+  // keeps edgeEndpointsComplete but leaves vertices without edges, which
+  // still count 1 each, so their ids come from the vertex table.
+  test("driver tail == distributed rounds on fromEdges and filtered graphs") {
+    val g = GraphFrame.fromEdges(Seq((1, 2L), (2, 3L), (3, 1L), (4, 5L), (5, 6L))
+      .toDF("src", "dst"))
+    assert(tailMatchesDistributed(g) ==
+      Map(0 -> 6L, 1 -> 11L, 2 -> 15L))
+    assert(tailMatchesDistributed(g.filterEdges("src <= 3")) ==
+      Map(0 -> 6L, 1 -> 9L, 2 -> 12L))
+  }
+
+  // below 2^lgNomEntries vertices every sketch is exact; one more vertex
+  // and the run must stay on the sketches
+  test("the driver tail runs up to 2^lgNomEntries vertices and not one more") {
+    val lg4 = (n: lib.NeighborhoodFunction) => n.setLgNomEntries(4)
+    assert(tailMatchesDistributed(chain(16), lg4)(15) == 136L)
+    val over = nfAt(chain(17), 100000L, lg4)
+    assert(over.decisions.map(_.tail) == Seq(false), s"decisions ${over.decisions}")
+  }
+
+  // byte-array ids compare by reference on the driver
+  test("binary ids run the distributed rounds") {
+    val e = Seq((Array[Byte](1), Array[Byte](2)), (Array[Byte](2), Array[Byte](1)))
+      .toDF("src", "dst")
+    val run = nfAt(GraphFrame.fromEdges(e), 100000L)
+    assert(run.decisions.isEmpty)
+    assert(run.result == Map(0 -> 2L, 1 -> 4L))
   }
 }

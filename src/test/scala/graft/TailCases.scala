@@ -62,7 +62,9 @@ trait TailCases { self: TestBase =>
         .setSmallGraphThreshold(t).run(Seq("a"))),
     TailCase("temporalReachability", Seq("time"),
       (g, t) => new lib.TemporalReachability(g).source("a").maxIter(2)
-        .setSmallGraphThreshold(t).run()))
+        .setSmallGraphThreshold(t).run()),
+    TailCase("neighborhoodFunction", Nil,
+      (g, t) => g.neighborhoodFunction.setSmallGraphThreshold(t).run()))
 
   /** The friends graph's edges narrowed to (src, dst) plus `extra`
    * columns, each an integer weight in 1..3 that is not the same on every
