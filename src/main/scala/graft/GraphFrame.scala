@@ -240,14 +240,16 @@ class GraphFrame private (
    * g_connected_components hash mismatch). The window shuffles by bucket
    * and sorts by id within each — the same cost class as the old
    * repartition+sort, with no global-sort bottleneck. Overflows only
-   * past 2^47 vertices per bucket set (≈1.4e14 ids). */
+   * past 2^47 vertices per bucket set (≈1.4e14 ids). The connected-
+   * components driver tail mints the same surrogates on the driver
+   * (`lib.ConnectedComponents.mintSurrogates`). */
   lazy val indexedVertices: DataFrame = {
     if (hasIntegralIdType) {
       vertices.select(col(ID).cast("long").as(LONG_ID), col(ID),
         nestAsCol(vertices, ATTR))
     } else {
       import org.apache.spark.sql.expressions.Window
-      val buckets = 65536L
+      val buckets = SURROGATE_BUCKETS
       val b = pmod(xxhash64(col(ID)), lit(buckets))
       val rn = row_number().over(Window.partitionBy(b).orderBy(ID))
       vertices.select((rn.cast("long") * buckets + b).as(LONG_ID), col(ID),
@@ -861,6 +863,8 @@ object GraphFrame {
   private[graft] val LONG_ID = "new_id"
   private[graft] val LONG_SRC = "new_src"
   private[graft] val LONG_DST = "new_dst"
+  /** Hash buckets of the [[GraphFrame.indexedVertices]] surrogate mint. */
+  private[graft] val SURROGATE_BUCKETS = 65536L
 
   def apply(vertices: DataFrame, edges: DataFrame): GraphFrame =
     new GraphFrame(vertices, edges)

@@ -2,7 +2,8 @@ package graft.lib
 
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.DecimalType
+import org.apache.spark.sql.types.{ByteType, DataType, DecimalType, IntegerType, LongType,
+  ShortType, StructField, StructType}
 import graft.GraphFrame
 
 /**
@@ -17,6 +18,19 @@ import graft.GraphFrame
  * splits at runtime. Rounds converge in O(log diameter); per-round state
  * is the contracted edge list only (never the full input), and lineage is
  * cut through [[IterationManager]] so the plan stays flat at any scale.
+ *
+ * Small graphs finish on the driver ([[LocalTail]], docs/THRESHOLDS.md
+ * row 1): at most `setSmallGraphThreshold` raw edge rows and at most as
+ * many vertex rows, for integral or string ids (string ids need src and
+ * dst of the id's type). One bounded collect reads the caller's edges,
+ * plus one bounded vertex-id collect unless the vertex table is the
+ * `fromEdges` endpoint set. The tail mints each vertex row's surrogate as
+ * [[GraphFrame.indexedVertices]] does, unions the edges' surrogates with
+ * the rounds' rules (see `runTwoPhase`) and labels each component with its
+ * minimum surrogate, so it returns the rounds' exact rows. On the
+ * `fromEdges` endpoint set its result is a local relation that reads no
+ * input; otherwise it is that relation broadcast-joined onto the vertices.
+ * The rounds finish on the driver too once their remainder fits.
  *
  * Output: original vertices + `component: long` (surrogate Long ids are
  * mapped back for non-integral id types).
@@ -64,12 +78,14 @@ class ConnectedComponents(g: GraphFrame) extends LocalTail {
    * lib/ConnectedComponents.scala:40-42 `useLabelsAsComponents`). */
   def setUseLabelsAsComponents(b: Boolean): this.type = { labelsAsComponents = b; this }
 
-  /** The union-find tail's threshold is compared against the remaining
-   * parent-pointer edge frame's count. Driver cost at the 1M default:
-   * ~32 bytes/edge for the typed collect (~32 MB) plus the per-vertex
-   * label hash map and the toSeq.toDF local relation shipped back —
-   * bounded by #distinct endpoints ≤ 2×edges, so order ~100 MB transient
-   * worst case, far under the driver heap. The winners are tiny LSH pair
+  /** The union-find tail's threshold is compared against the input's raw
+   * edge rows and vertex rows, and then against each round's remaining
+   * parent-pointer edge count. Driver cost at the 1M default: ~32
+   * bytes/edge for the typed collect of integral ids (~32 MB), Rows of
+   * ~150 bytes/edge for string ids (~150 MB) plus the vertex ids, the
+   * per-vertex label hash map and the local relation shipped back —
+   * order ~100-300 MB transient worst case, far under the driver heap.
+   * The winners are tiny LSH pair
    * graphs and, above all, the TAIL of star contraction: after one round
    * the remainder is at most one parent pointer per non-root vertex, so a
    * remainder under 1M EDGES finishes in one driver job instead of ~5-8
@@ -95,63 +111,113 @@ class ConnectedComponents(g: GraphFrame) extends LocalTail {
   }
 
   private def runTwoPhase(): DataFrame = {
-    val mgr = IterationManager.withReliableDir(g.spark, reliableDirV,
-      checkpointIntervalV, storageLevelV)
-    // a failed run releases what it pinned so far (surrogate-id table, cuts)
-    try twoPhase(mgr) catch { case e: Throwable => mgr.close(); throw e }
-  }
-
-  private def twoPhase(mgr: IterationManager): DataFrame = {
-    // surrogate-id table feeds both the edge translation and the final
-    // label join — for non-integral ids it costs a shuffle+sort (the
-    // row_number mint), so it must be evaluated exactly ONCE. Translating
-    // edges through `g.indexedEdges` would re-plan `indexedVertices` and
-    // only dodge the recompute if CacheManager canonicalization happens to
-    // match the aliased projection; joining against the SAME cached frame
-    // makes single evaluation structural. Lazy persist: the round-0 probe
-    // job below is the first consumer, so an eager count here would be a
-    // whole extra job just to warm the cache.
-    val iv0 = g.indexedVertices.select(col(LONG_ID).as("vid"), col(ID))
-    val (iv, rawEdges) =
-      if (g.hasIntegralIdType)
-        (iv0, g.indexedEdges.select(col(LONG_SRC).as("s"), col(LONG_DST).as("d")))
-      else {
-        val p = mgr.persistLazy(iv0)
-        val e = g.edges.select(col(SRC), col(DST))
-          .join(p.select(col("vid").as("s"), col(ID).as(SRC)), SRC)
-          .join(p.select(col("vid").as("d"), col(ID).as(DST)), DST)
-          .select(col("s"), col("d"))
-        (p, e)
-      }
-
-    // canonical undirected edge list on surrogate longs: src > dst, no loops
-    val canon = rawEdges
-      .filter(col("s") =!= col("d"))
-      .select(greatest(col("s"), col("d")).as("src"), least(col("s"), col("d")).as("dst"))
-      .distinct()
-
-    // one bounded job finishes any graph already under the union-find
-    // threshold (e.g. LSH dedup pair graphs: dozens of edges, full label
-    // fidelity). Pinned BEFORE the round-0 lineage cut: the distributed
-    // path then cycles the already-cached frame at no extra cost (the pin
-    // is released right after that cut). With the tail disabled there is
-    // no probe, and the cut reads the frame unpinned.
-    gateCollect[(Long, Long), Either[DataFrame, DataFrame]](canon,
-      pinForDistributed = tailEnabled)(longEdges)(
-      edges => Left(finishWithUnionFind(edges, iv, mgr)))(p => Right(mgr.cycle(p, 0))) match {
-      case Left(labeled) => labeled
-      case Right(cut) => runRounds(cut, iv, mgr)
+    val probe = g.edges.select(col(SRC), col(DST))
+    val idType = g.vertices.schema(ID).dataType
+    lazy val endpointsOnly = LocalTail.verticesAreEndpoints(g)
+    // the gate's collect fills the edges; `idsFit` then reads every vertex
+    // row's id, from those edges or with one bounded collect
+    var ids = Option.empty[Array[Any]]
+    def idsFit(endpoints: => Array[Any]): Boolean = {
+      ids = LocalTail.vertexIdsUpTo(g, idType, smallGraphThreshold, endpointsOnly)(endpoints)
+      ids.isDefined
+    }
+    if (g.hasIntegralIdType) {
+      // the surrogate is the id as a Long, and the rounds translate no edge:
+      // an edge to a dangling endpoint still joins its component
+      var edges = Array.empty[ConnectedComponents.LongEdge]
+      gateCollect(probe, andIf = idsFit(ConnectedComponents.endpoints(edges, idType))) { p =>
+        edges = longEdges(p); edges
+      } { _ =>
+        labelLocally(ids.get, ids.get.map { case n: Number => n.longValue; case _ => 0L },
+          edges.iterator.filter(e => e.nulls == 0 && e.src != e.dst).map(e => (e.src, e.dst)),
+          endpointsOnly)
+      }(_ => runDistributed())
+    } else {
+      // string ids whose edges have their type: the rounds join the edges
+      // to the minted surrogates, so an edge counts only when both
+      // endpoints are vertex ids, once per surrogate of each
+      var rows = Array.empty[Row]
+      val eligible = UnionFind.sparkOrdering(idType).isDefined &&
+        probe.schema.forall(_.dataType == idType)
+      gateCollect(probe, eligible,
+          andIf = idsFit(rows.iterator.flatMap(_.toSeq).distinct.toArray)) { p =>
+        rows = p.collect(); rows
+      } { _ =>
+        val v = ids.get
+        val sur = ConnectedComponents.mintSurrogates(v, idType)
+        val sursOf = v.indices.filter(v(_) != null).groupMap(v(_))(sur(_))
+        def of(id: Any) = sursOf.getOrElse(id, Nil)
+        labelLocally(v, sur, for (r <- rows.iterator; s <- of(r.get(0)); d <- of(r.get(1))
+          if s != d) yield (s, d), endpointsOnly)
+      }(_ => runDistributed())
     }
   }
 
-  /** The `(src, dst)` surrogate pairs of `ee` as a typed collect: Tuple2
-   * is @specialized on Long, so the transient driver footprint is ~32
-   * bytes/edge instead of ~120 for Rows of boxed values — what makes the
+  /** Driver tail: union-find over the surrogate `pairs` with min-surrogate
+   * roots, the labels the distributed fixpoint produces; a vertex row no
+   * edge touches keeps its own surrogate `sur(i)` and a null id gets a
+   * null component. On the `fromEdges` endpoint set (`endpointsOnly`) the
+   * local relation of `(id, component)` rows is the result and reads no
+   * input; otherwise it is broadcast-joined onto the vertex table, as the
+   * rounds' labels are. */
+  private def labelLocally(ids: Array[Any], sur: Array[Long], pairs: Iterator[(Long, Long)],
+      endpointsOnly: Boolean): DataFrame = {
+    val labels = UnionFind.minLabels(pairs, Ordering.Long.on[Any](_.asInstanceOf[Long])).toMap
+    val rows = ids.indices.map { i =>
+      Row(ids(i), if (ids(i) == null) null else labels.getOrElse(sur(i), sur(i)))
+    }
+    val local = g.spark.createDataFrame(java.util.Arrays.asList(rows: _*),
+      StructType(Seq(g.vertices.schema(ID), StructField("component", LongType))))
+    if (endpointsOnly) local else g.vertices.join(broadcast(local), Seq(ID), "left_outer")
+  }
+
+  /** The star-contraction rounds from the canonical edge list. */
+  private def runDistributed(): DataFrame = {
+    val mgr = IterationManager.withReliableDir(g.spark, reliableDirV,
+      checkpointIntervalV, storageLevelV)
+    // a failed run releases what it pinned so far (surrogate-id table, cuts)
+    try {
+      // surrogate-id table feeds both the edge translation and the final
+      // label join — for non-integral ids it costs a shuffle+sort (the
+      // row_number mint), so it must be evaluated exactly ONCE. Translating
+      // edges through `g.indexedEdges` would re-plan `indexedVertices` and
+      // only dodge the recompute if CacheManager canonicalization happens to
+      // match the aliased projection; joining against the SAME cached frame
+      // makes single evaluation structural. Lazy persist: the round-0 cut
+      // below is the first consumer, so an eager count here would be a
+      // whole extra job just to warm the cache.
+      val iv0 = g.indexedVertices.select(col(LONG_ID).as("vid"), col(ID))
+      val (iv, rawEdges) =
+        if (g.hasIntegralIdType)
+          (iv0, g.indexedEdges.select(col(LONG_SRC).as("s"), col(LONG_DST).as("d")))
+        else {
+          val p = mgr.persistLazy(iv0)
+          val e = g.edges.select(col(SRC), col(DST))
+            .join(p.select(col("vid").as("s"), col(ID).as(SRC)), SRC)
+            .join(p.select(col("vid").as("d"), col(ID).as(DST)), DST)
+            .select(col("s"), col("d"))
+          (p, e)
+        }
+      // canonical undirected edge list on surrogate longs: src > dst, no loops
+      val canon = rawEdges
+        .filter(col("s") =!= col("d"))
+        .select(greatest(col("s"), col("d")).as("src"), least(col("s"), col("d")).as("dst"))
+        .distinct()
+      runRounds(mgr.cycle(canon, 0), iv, mgr)
+    } catch { case e: Throwable => mgr.close(); throw e }
+  }
+
+  /** The `(src, dst)` pairs of `ee` cast to Long, as a typed collect: an
+   * object of two primitive longs and a byte, ~32 bytes per edge on the
+   * driver where a Row of boxed values takes ~120 — what makes the
    * 1M-edge default threshold cheap. */
-  private def longEdges(ee: DataFrame): Array[(Long, Long)] = {
+  private def longEdges(ee: DataFrame): Array[ConnectedComponents.LongEdge] = {
     val session = ee.sparkSession
     import session.implicits._
-    ee.select(col("src").cast("long"), col("dst").cast("long")).as[(Long, Long)].collect()
+    val (s, d) = (col(SRC).cast("long"), col(DST).cast("long"))
+    ee.select(coalesce(s, lit(0L)).as("src"), coalesce(d, lit(0L)).as("dst"),
+      (when(s.isNull, 1).otherwise(0) + when(d.isNull, 2).otherwise(0)).cast("byte").as("nulls"))
+      .as[ConnectedComponents.LongEdge].collect()
   }
 
   /** Large-star / small-star supersteps from the round-0 cut `ee0`, with
@@ -211,11 +277,11 @@ class ConnectedComponents(g: GraphFrame) extends LocalTail {
   /** Union-find over the collected (bounded) edge list with min-id roots —
    * the same min-surrogate labels the distributed fixpoint produces — and
    * join the labels back. One job instead of one per superstep. */
-  private def finishWithUnionFind(edges: Array[(Long, Long)], iv: DataFrame,
+  private def finishWithUnionFind(edges: Array[ConnectedComponents.LongEdge], iv: DataFrame,
       mgr: IterationManager): DataFrame = {
     val session = iv.sparkSession
     import session.implicits._
-    val labels = UnionFind.minLabels(edges.iterator,
+    val labels = UnionFind.minLabels(edges.iterator.map(e => (e.src, e.dst)),
       Ordering.Long.on[Any](_.asInstanceOf[Long]))
     val compDF = labels.map { case (v, c) => (v.asInstanceOf[Long], c.asInstanceOf[Long]) }
       .toSeq.toDF("vid", "comp")
@@ -226,6 +292,60 @@ class ConnectedComponents(g: GraphFrame) extends LocalTail {
 }
 
 object ConnectedComponents {
+  /** One collected edge with its endpoints cast to Long: bit 0 of `nulls`
+   * marks a null src and bit 1 a null dst, whose field then holds 0. */
+  private[lib] case class LongEdge(src: Long, dst: Long, nulls: Byte)
+
+  /** The distinct endpoints of `edges` as values of the integral vertex id
+   * type `idType`, with null when an endpoint is null: the vertex ids of a
+   * `fromEdges` graph. */
+  private[lib] def endpoints(edges: Array[LongEdge], idType: DataType): Array[Any] = {
+    val narrow: Long => Any = idType match {
+      case IntegerType => _.toInt
+      case ShortType => _.toShort
+      case ByteType => _.toByte
+      case _ => identity
+    }
+    val ends = edges.iterator.flatMap { e =>
+      (if ((e.nulls & 1) == 0) Iterator(e.src) else Iterator.empty) ++
+        (if ((e.nulls & 2) == 0) Iterator(e.dst) else Iterator.empty)
+    }.distinct.map(narrow).toArray
+    if (edges.exists(_.nulls != 0)) ends :+ null else ends
+  }
+
+  /** Every id's surrogate as [[GraphFrame.indexedVertices]] mints it for a
+   * non-integral id type: rn * B + bucket, with bucket = pmod(xxhash64(id),
+   * B) and rn the row number within the bucket in Spark's ascending order
+   * of the id, nulls first, so a duplicate id gets one surrogate per row.
+   * The bucket and the order are Catalyst's own expressions, evaluated on
+   * the driver over the id in its own type. */
+  private[graft] def mintSurrogates(ids: Array[Any], idType: DataType): Array[Long] = {
+    import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
+    import org.apache.spark.sql.catalyst.expressions.{Ascending, BoundReference,
+      GenericInternalRow, InterpretedOrdering, Literal, Pmod, SortOrder, XxHash64}
+    val buckets = GraphFrame.SURROGATE_BUCKETS
+    val id = BoundReference(0, idType, nullable = true)
+    val bucketOf = Pmod(new XxHash64(Seq(id)), Literal(buckets))
+    val toCatalyst = CatalystTypeConverters.createToCatalystConverter(idType)
+    val rows = ids.map { v =>
+      val r = new GenericInternalRow(Array[Any](toCatalyst(v), null))
+      r.setLong(1, bucketOf.eval(r).asInstanceOf[Long])
+      r
+    }
+    // the window's sort: by bucket, then by id
+    val order = new InterpretedOrdering(Seq(
+      SortOrder(BoundReference(1, LongType, nullable = false), Ascending), SortOrder(id, Ascending)))
+    val sur = new Array[Long](ids.length)
+    var (rn, prev) = (0L, -1L)
+    for (i <- ids.indices.sortBy[InternalRow](rows(_))(order)) {
+      val b = rows(i).getLong(1)
+      rn = if (b == prev) rn + 1 else 1
+      prev = b
+      sur(i) = rn * buckets + b
+    }
+    sur
+  }
+
   /** Canonical algorithm name: "graphframes" is the reference's deprecated
    * alias for two_phase; "graphx" names its RDD backend, which this engine
    * deliberately lacks (SURVEY §7) — rejected with the supported set. */

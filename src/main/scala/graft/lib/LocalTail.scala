@@ -41,6 +41,9 @@ trait LocalTail {
     smallGraphThresholdV = n; this
   }
 
+  /** The threshold t. */
+  protected def smallGraphThreshold: Long = smallGraphThresholdV
+
   /** Whether the tail is enabled at all: `t > 0`. */
   protected def tailEnabled: Boolean = smallGraphThresholdV > 0
 
@@ -54,8 +57,8 @@ trait LocalTail {
    * One bounded job decides and collects: `collect(probe.limit(t + 1))`
    * reads at most t + 1 rows, so the driver never holds more than that,
    * and at ≤ t rows they are the tail's input (Rows for [[gate]]; typed
-   * `(Long, Long)` pairs for connected components, ~32 bytes per edge
-   * instead of a Row of boxed values). There is no count job. Each probe
+   * Long edges for connected components with integral ids, ~32 bytes per
+   * edge instead of a Row of boxed values). There is no count job. Each probe
    * posts a [[TailDecision]].
    *
    * Without `pinForDistributed` nothing is pinned. With it the
@@ -165,6 +168,29 @@ private[lib] object LocalTail {
           StructType(Seq(StructField(ID, t))))), Seq(ID), "left_semi")
         .collect().map(_.get(0))
     ids.sortBy(String.valueOf(_))
+  }
+
+  /** Whether the vertex table's plan is the distinct endpoints of the edge
+   * table's, as [[GraphFrame.fromEdges]] builds it: then the collected
+   * edges hold every vertex id, one per vertex row. `edgeEndpointsComplete`
+   * alone is not enough — `filterEdges` and `validated()` keep it on graphs
+   * with isolated vertices. */
+  def verticesAreEndpoints(g: GraphFrame): Boolean =
+    g.edgeEndpointsComplete && g.vertices.queryExecution.analyzed.sameResult(
+      GraphFrame.fromEdges(g.edges).vertices.queryExecution.analyzed)
+
+  /** Every vertex row's id, in type `t`, if there are at most `bound`
+   * rows. With `fromEndpoints` ([[verticesAreEndpoints]]) they are
+   * `endpoints`, the distinct endpoints of the collected edges, and no
+   * Spark job runs; otherwise one bounded `limit(bound + 1)` collect of
+   * `vertices.select(id)` reads them. */
+  def vertexIdsUpTo(g: GraphFrame, t: DataType, bound: Long, fromEndpoints: Boolean)(
+      endpoints: => Array[Any]): Option[Array[Any]] = {
+    val ids =
+      if (fromEndpoints) endpoints
+      else g.vertices.select(col(GraphFrame.ID).cast(t))
+        .limit(math.min(bound, Int.MaxValue - 1L).toInt + 1).collect().map(_.get(0))
+    Some(ids).filter(_.length <= bound)
   }
 
   /** Every vertex id, sorted by string form. */

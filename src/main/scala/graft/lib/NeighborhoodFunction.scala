@@ -77,30 +77,21 @@ class NeighborhoodFunction(g: GraphFrame) extends LocalTail {
     val bound = math.min(1L << lg, 4096L)
     // the gate's collect fills `edges`; `fits` then reads the vertex ids
     var edges = Array.empty[(Any, Any)]
-    var ids = Array.empty[Any]
+    var ids = Option.empty[Array[Any]]
+    // isolated vertices count 1 each in N(d), so the endpoints are the ids
+    // only on the `fromEdges` endpoint set
     def fits: Boolean = {
-      ids =
-        if (verticesAreEndpoints) edges.flatMap { case (s, d) => Seq(s, d) }.distinct
-        else g.vertices.select(col(ID).cast(keyType)).limit(bound.toInt + 1)
-          .collect().map(_.get(0))
-      ids.length <= bound
+      ids = LocalTail.vertexIdsUpTo(g, keyType, bound, LocalTail.verticesAreEndpoints(g))(
+        edges.flatMap { case (s, d) => Seq(s, d) }.distinct)
+      ids.isDefined
     }
     // byte arrays compare by reference on the driver
     gateCollect(probe, eligible = keyType != BinaryType, andIf = fits) { p =>
       edges = p.select(col(SRC).cast(keyType), col(DST).cast(keyType)).collect()
         .map(r => (r.get(0), r.get(1)))
       edges
-    }(_ => runLocal(edges, ids))(_ => runDistributed(ball0))
+    }(_ => runLocal(edges, ids.get))(_ => runDistributed(ball0))
   }
-
-  /** Whether the vertex table's plan is the distinct endpoints of the edge
-   * table's, as [[GraphFrame.fromEdges]] builds it: then the collected
-   * edges hold every vertex id. `edgeEndpointsComplete` alone is not
-   * enough — `filterEdges` and `validated()` keep it on graphs with
-   * isolated vertices, and each of those counts in N(d). */
-  private def verticesAreEndpoints: Boolean =
-    g.edgeEndpointsComplete && g.vertices.queryExecution.analyzed.sameResult(
-      GraphFrame.fromEdges(g.edges).vertices.queryExecution.analyzed)
 
   /** The `(d, n_pairs)` table: N(d) = `observe(d)` for d = 0, 1, ...
    * until N(d) stops growing or d > maxIter. `observe(d)` first advances

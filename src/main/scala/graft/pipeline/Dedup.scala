@@ -356,7 +356,10 @@ object Dedup {
         case None =>
           val g = graft.GraphFrame.fromEdges(
             pairs.select(col("a").as(graft.GraphFrame.SRC), col("b").as(graft.GraphFrame.DST)))
-          val cc = g.connectedComponents.run() // materializes (and persists) labels
+          // self-contained: a driver-tail result on this fromEdges graph is a
+          // local relation and a rounds result is lineage-cut, so neither
+          // recomputes the pairs unpersisted below
+          val cc = g.connectedComponents.run()
           cc.select(col(graft.GraphFrame.ID).as(idCol),
             min(graft.GraphFrame.ID).over(Window.partitionBy("component")).as("_rep"))
       }

@@ -50,7 +50,14 @@ class JobBudgetSpec extends TestBase with SparkEvents {
     ("kCore", 8, () => Seq(friends.kCore.run())),
     ("louvain", 8, () => Seq(friends.louvain.run())),
     ("articulationPoints", 5, () => Seq(friends.twoConnectivity.articulationPoints())),
-    ("connectedComponents", 14, () => Seq(friends.connectedComponents.run())))
+    ("connectedComponents", 4, () => Seq(friends.connectedComponents.run())),
+    // string ids from the edges alone: the vertex ids are the collected
+    // endpoints, so the tail reads no vertex table
+    ("connectedComponents fromEdges", 2, () =>
+      Seq(GraphFrame.fromEdges(friends.edges).connectedComponents.run())),
+    // the star-contraction rounds, which the tail above skips
+    ("connectedComponents rounds", 39, () =>
+      Seq(friends.connectedComponents.setSmallGraphThreshold(0).run())))
 
   for ((call, budget, run) <- budgets)
     test(s"$call runs at most $budget Spark jobs") {
