@@ -47,7 +47,8 @@ object BeliefPropagation {
    * ≥ 3.2 GB, past one task's memory, for a 10⁸-degree hub. An order-free
    * fixed-point integer sum would remove the bound.
    */
-  def sumProduct(g: GraphFrame, sweeps: Int = 5): DataFrame = {
+  def sumProduct(g: GraphFrame, sweeps: Int = 5): DataFrame =
+      graft.lib.IterationManager.scoped(g.spark) { mgr =>
     import GraphFrame.{ID, SRC, DST}
     val v = g.vertices
     val colors = v.select("color").distinct().orderBy("color")
@@ -58,7 +59,6 @@ object BeliefPropagation {
     // materialized (a bare per-round localCheckpoint leaked sweeps×colors
     // edge-sized frames until session GC), result handed out
     // self-contained via finish()
-    val mgr = new graft.lib.IterationManager(2)
     var msgs = mgr.cycle(e.unionByName(
         e.select(col("j").as("i"), col("i").as("j"), col("b")))
       .withColumn("lam", lit(0.0)), 0)

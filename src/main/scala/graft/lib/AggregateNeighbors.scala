@@ -116,7 +116,7 @@ class AggregateNeighbors(g: GraphFrame) {
   // Path-accumulator mode (reference semantics)
   // -------------------------------------------------------------------
 
-  private def runPaths(): DataFrame = {
+  private def runPaths(): DataFrame = IterationManager.scoped(g.spark) { mgr =>
     val hops = if (maxHops == -1) 3 else maxHops
     require(stoppingConditionV.orElse(targetConditionV).isDefined,
       "Any of target or stopping conditions should be provided")
@@ -129,7 +129,6 @@ class AggregateNeighbors(g: GraphFrame) {
     def vAttr = struct(reqV.map(c => col(GraphFrame.quoteName(c))).toIndexedSeq: _*)
     val eAttr = struct(reqE.map(c => col(GraphFrame.quoteName(c))).toIndexedSeq: _*)
 
-    val mgr = IterationManager.withReliableDir(g.spark, None)
     val edges0 = if (removeLoops) g.edges.filter(col(SRC) =!= col(DST)) else g.edges
     // (src, dst, edge_attributes, dst_attributes), co-partitioned by src;
     // left join tolerates dangling endpoints exactly like the reference
@@ -186,19 +185,18 @@ class AggregateNeighbors(g: GraphFrame) {
   // Per-hop aggregation mode
   // -------------------------------------------------------------------
 
-  private def runAgg(): DataFrame = {
+  private def runAgg(): DataFrame = IterationManager.scoped(g.spark) { mgr =>
     require(aggs.nonEmpty, "aggregateNeighbors: at least one aggregate required")
     val hops = if (maxHops == -1) 1 else maxHops
     val removeLoops = removeLoopsV.getOrElse(true)
     val edges0 = edgeFilterV.map(g.edges.filter).getOrElse(g.edges)
     // (src, neighbor-id, neighbor-struct), co-partitioned by src for reuse
-    val nbrTable = edges0.select(col(SRC).as("_an_src"), col(DST).as("_an_dst"))
-      .join(g.vertices.select(col(ID).as("_an_dst"), GraphFrame.nestAsCol(g.vertices, NBR)),
-        "_an_dst")
-      .repartition(col("_an_src"))
-      .persist()
+    val nbrTable = mgr.persistLazy(
+      edges0.select(col(SRC).as("_an_src"), col(DST).as("_an_dst"))
+        .join(g.vertices.select(col(ID).as("_an_dst"), GraphFrame.nestAsCol(g.vertices, NBR)),
+          "_an_dst")
+        .repartition(col("_an_src")))
 
-    val mgr = IterationManager.withReliableDir(g.spark, None)
     // frontier: (origin, current)
     var frontier = g.vertices.select(col(ID).as("_an_origin"), col(ID).as("_an_cur"))
     val results = ArrayBuffer.empty[DataFrame]
@@ -221,9 +219,7 @@ class AggregateNeighbors(g: GraphFrame) {
       exhausted = frontier.isEmpty
       hop += 1
     }
-    val out = mgr.finish(results.reduce(_ unionByName _))
-    nbrTable.unpersist(false)
-    out
+    mgr.finish(results.reduce(_ unionByName _))
   }
 }
 

@@ -50,11 +50,16 @@ class BFS(g: GraphFrame) {
         col(s"_bfs_e.$DST") === col(s"_bfs_b.$ID"))
     val toIds = g.vertices.filter(to).select(col(ID))
 
-    val mgr = IterationManager.withReliableDir(g.spark, None)
-    var paths = g.vertices.filter(from).select(vStruct.as("from"))
-    if (paths.isEmpty) return zero // empty frame with (from,to) schema
-    paths = mgr.persistOnly(paths)
+    val sources = g.vertices.filter(from).select(vStruct.as("from"))
+    if (sources.isEmpty) zero // empty frame with (from,to) schema
+    else search(sources, a2b, toIds, zero)
+  }
 
+  /** The hop-by-hop search from the non-empty `sources` over the one-hop
+   * table `a2b`; `zero` is the empty result. */
+  private def search(sources: DataFrame, a2b: DataFrame, toIds: DataFrame,
+      zero: DataFrame): DataFrame = IterationManager.scoped(g.spark) { mgr =>
+    var paths = mgr.persistOnly(sources)
     var result: Option[DataFrame] = None
     var hop = 1
     while (result.isEmpty && hop <= maxPathLengthV) {

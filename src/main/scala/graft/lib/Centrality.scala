@@ -73,15 +73,6 @@ private[graft] object MultiSourceBFS {
         "to 0 (or above your source count) to force the exact run")
   }
 
-  /** Runs `body` with a `cut` that lineage-cuts (localCheckpoint) and
-   * retains a frame; every frame cut is released when `body` returns or
-   * throws. */
-  def withCuts[T](body: (DataFrame => DataFrame) => T): T = {
-    val cuts = ArrayBuffer.empty[DataFrame]
-    try body { df => val c = df.localCheckpoint(true); cuts += c; c }
-    finally cuts.foreach(IterationManager.release)
-  }
-
   /** Multi-source Bellman-Ford over `(src, dst, _bw)` edges: the FINAL
    * `(s, id, d)` frame for every reached pair (sources at d 0). Each
    * round is one join + one min-aggregation on the improved frontier;
@@ -229,8 +220,10 @@ private[lib] sealed abstract class PathCentrality(g: GraphFrame, op: String)
    * first; null endpoints dropped, as the tails' collects drop them), the
    * vertex count, then the one [[gate]] — `tail(edges, n)`
    * over the sorted driver edge collect (hop mode reads every weight as
-   * 1), else `distributed(e, n, cut)` past the exact-source guard, with
-   * every frame cut released on return and on error alike. */
+   * 1), else `distributed(e, n, cut)` past the exact-source guard: `cut`
+   * is a [[IterationManager.keep]], and the result is handed out through
+   * [[IterationManager.finish]], so every frame cut is released on return
+   * and on error alike. */
   protected def runPaths(tail: (Array[(Any, Any, Double)], Long) => DataFrame)(
       distributed: (DataFrame, Long, DataFrame => DataFrame) => DataFrame): DataFrame = {
     val linked = g.edges.filter(col(SRC).isNotNull && col(DST).isNotNull)
@@ -247,7 +240,7 @@ private[lib] sealed abstract class PathCentrality(g: GraphFrame, op: String)
       if (weighted) LocalTail.collectWeightedEdges(p)
       else LocalTail.collectEdges(p).map { case (s, d) => (s, d, 1.0) }, n)) { p =>
       if (!sampled(n)) MultiSourceBFS.guardExactSources(op, n)
-      MultiSourceBFS.withCuts(distributed(p, n, _))
+      IterationManager.scoped(g.spark)(mgr => mgr.finish(distributed(p, n, mgr.keep)))
     }
   }
 
@@ -304,11 +297,10 @@ private[lib] sealed abstract class PathCentrality(g: GraphFrame, op: String)
   }
 
   /** Every vertex-table column plus `scores` over the `_k`-keyed
-   * aggregate `agg`, lineage-cut. */
+   * aggregate `agg`. */
   protected def joinScores(agg: DataFrame, scores: Column*): DataFrame =
     g.vertices.join(agg, col(ID) === col("_k"), "left_outer")
       .select(g.vertices.columns.map(c => g.vertices(GraphFrame.quoteName(c))) ++ scores: _*)
-      .localCheckpoint(true)
 
   /** The driver tails' join-back of their score maps: a vertex absent
    * from a map scores 0 there. */
@@ -370,16 +362,14 @@ class Betweenness(g: GraphFrame) extends PathCentrality(g, "betweenness") {
       g.edges.sparkSession.createDataFrame(rows, schema)
     }) { (e, n, cut) =>
       val parts = backward(e, n, cut, edgeCredit = true)._2
-      val joined =
-        if (parts.isEmpty) e.withColumn("edge_betweenness", lit(0.0))
-        else {
-          val agg = parts.reduce(_ unionByName _)
-            .groupBy(col("_u"), col("_v")).agg(sum("_c").as("_b"))
-          e.join(agg, e(SRC) === agg("_u") && e(DST) === agg("_v"), "left_outer")
-            .select(e(SRC), e(DST),
-              (coalesce(col("_b"), lit(0.0)) * lit(scale(n))).as("edge_betweenness"))
-        }
-      joined.localCheckpoint(true)
+      if (parts.isEmpty) e.withColumn("edge_betweenness", lit(0.0))
+      else {
+        val agg = parts.reduce(_ unionByName _)
+          .groupBy(col("_u"), col("_v")).agg(sum("_c").as("_b"))
+        e.join(agg, e(SRC) === agg("_u") && e(DST) === agg("_v"), "left_outer")
+          .select(e(SRC), e(DST),
+            (coalesce(col("_b"), lit(0.0)) * lit(scale(n))).as("edge_betweenness"))
+      }
     }
   }
 

@@ -172,39 +172,35 @@ class ConnectedComponents(g: GraphFrame) extends LocalTail {
   }
 
   /** The star-contraction rounds from the canonical edge list. */
-  private def runDistributed(): DataFrame = {
-    val mgr = IterationManager.withReliableDir(g.spark, reliableDirV,
-      checkpointIntervalV, storageLevelV)
-    // a failed run releases what it pinned so far (surrogate-id table, cuts)
-    try {
-      // surrogate-id table feeds both the edge translation and the final
-      // label join — for non-integral ids it costs a shuffle+sort (the
-      // row_number mint), so it must be evaluated exactly ONCE. Translating
-      // edges through `g.indexedEdges` would re-plan `indexedVertices` and
-      // only dodge the recompute if CacheManager canonicalization happens to
-      // match the aliased projection; joining against the SAME cached frame
-      // makes single evaluation structural. Lazy persist: the round-0 cut
-      // below is the first consumer, so an eager count here would be a
-      // whole extra job just to warm the cache.
-      val iv0 = g.indexedVertices.select(col(LONG_ID).as("vid"), col(ID))
-      val (iv, rawEdges) =
-        if (g.hasIntegralIdType)
-          (iv0, g.indexedEdges.select(col(LONG_SRC).as("s"), col(LONG_DST).as("d")))
-        else {
-          val p = mgr.persistLazy(iv0)
-          val e = g.edges.select(col(SRC), col(DST))
-            .join(p.select(col("vid").as("s"), col(ID).as(SRC)), SRC)
-            .join(p.select(col("vid").as("d"), col(ID).as(DST)), DST)
-            .select(col("s"), col("d"))
-          (p, e)
-        }
-      // canonical undirected edge list on surrogate longs: src > dst, no loops
-      val canon = rawEdges
-        .filter(col("s") =!= col("d"))
-        .select(greatest(col("s"), col("d")).as("src"), least(col("s"), col("d")).as("dst"))
-        .distinct()
-      runRounds(mgr.cycle(canon, 0), iv, mgr)
-    } catch { case e: Throwable => mgr.close(); throw e }
+  private def runDistributed(): DataFrame = IterationManager.scoped(g.spark, reliableDirV,
+      checkpointIntervalV, storageLevelV) { mgr =>
+    // surrogate-id table feeds both the edge translation and the final
+    // label join — for non-integral ids it costs a shuffle+sort (the
+    // row_number mint), so it must be evaluated exactly ONCE. Translating
+    // edges through `g.indexedEdges` would re-plan `indexedVertices` and
+    // only dodge the recompute if CacheManager canonicalization happens to
+    // match the aliased projection; joining against the SAME cached frame
+    // makes single evaluation structural. Lazy persist: the round-0 cut
+    // below is the first consumer, so an eager count here would be a
+    // whole extra job just to warm the cache.
+    val iv0 = g.indexedVertices.select(col(LONG_ID).as("vid"), col(ID))
+    val (iv, rawEdges) =
+      if (g.hasIntegralIdType)
+        (iv0, g.indexedEdges.select(col(LONG_SRC).as("s"), col(LONG_DST).as("d")))
+      else {
+        val p = mgr.persistLazy(iv0)
+        val e = g.edges.select(col(SRC), col(DST))
+          .join(p.select(col("vid").as("s"), col(ID).as(SRC)), SRC)
+          .join(p.select(col("vid").as("d"), col(ID).as(DST)), DST)
+          .select(col("s"), col("d"))
+        (p, e)
+      }
+    // canonical undirected edge list on surrogate longs: src > dst, no loops
+    val canon = rawEdges
+      .filter(col("s") =!= col("d"))
+      .select(greatest(col("s"), col("d")).as("src"), least(col("s"), col("d")).as("dst"))
+      .distinct()
+    runRounds(mgr.cycle(canon, 0), iv, mgr)
   }
 
   /** The `(src, dst)` pairs of `ee` cast to Long, as a typed collect: an

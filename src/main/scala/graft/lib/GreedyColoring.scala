@@ -65,19 +65,10 @@ class GreedyColoring(g: GraphFrame) extends LocalTail {
       runLocal)(runDistributed)
   }
 
-  private def runDistributed(und: DataFrame): DataFrame = {
-
-    // every loop-carried frame is eagerly lineage-cut and RETAINED until
-    // the result is handed out: the IterationManager queue frees older
-    // rounds, but color boundaries re-read frames from many rounds back
-    // (uncolored, per-round winners) — the exact shape its queue must not
-    // keep (cf. the round-6 outage class; Centrality manages levels the
-    // same way)
-    val toRelease = mutable.ArrayBuffer.empty[DataFrame]
-    def cut(df: DataFrame): DataFrame = {
-      val c = df.localCheckpoint(true); toRelease += c; c
-    }
-    var uncolored = cut(g.vertices.select(ID))
+  private def runDistributed(und: DataFrame): DataFrame = IterationManager.scoped(g.spark) { mgr =>
+    // every loop-carried frame is kept, not cycled: color boundaries
+    // re-read frames from many rounds back (uncolored, per-round winners)
+    var uncolored = mgr.keep(g.vertices.select(ID))
     val colorFrames = mutable.ArrayBuffer.empty[DataFrame]
 
     // hash-only priority, deliberately WITHOUT an id tie-break: a winner
@@ -102,7 +93,7 @@ class GreedyColoring(g: GraphFrame) extends LocalTail {
         val nbrMin = er.select(col(SRC).as(ID), prio(col(DST), color, round).as("p"))
           .unionAll(er.select(col(DST).as(ID), prio(col(SRC), color, round).as("p")))
           .groupBy(ID).agg(min(col("p")).as("nbrMin"))
-        val w = cut(pool.join(nbrMin, Seq(ID), "left_outer")
+        val w = mgr.keep(pool.join(nbrMin, Seq(ID), "left_outer")
           .filter(col("nbrMin").isNull || prio(col(ID), color, round) < col("nbrMin"))
           .select(ID))
         winners += w
@@ -111,22 +102,18 @@ class GreedyColoring(g: GraphFrame) extends LocalTail {
           .unionAll(er.join(w.select(col(ID).as(DST)), Seq(DST), "left_semi")
             .select(col(SRC).as(ID)))
           .distinct()
-        pool = cut(
+        pool = mgr.keep(
           pool.join(w, Seq(ID), "left_anti").join(nbrOfW, Seq(ID), "left_anti"))
         round += 1
       }
       val colored = winners.reduce(_ unionAll _).withColumn("color", lit(color))
       colorFrames += colored
-      uncolored = cut(uncolored.join(colored.select(ID), Seq(ID), "left_anti"))
+      uncolored = mgr.keep(uncolored.join(colored.select(ID), Seq(ID), "left_anti"))
       color += 1
     }
     if (!uncolored.isEmpty)
       colorFrames += uncolored.withColumn("color", lit(-1))
-    val out = g.vertices
-      .join(colorFrames.reduce(_ unionAll _), Seq(ID), "left_outer")
-      .localCheckpoint(true)
-    toRelease.foreach(IterationManager.release)
-    out
+    mgr.finish(g.vertices.join(colorFrames.reduce(_ unionAll _), Seq(ID), "left_outer"))
   }
 
   /** Driver tail (md5 mode): identical priorities — md5 hex strings order

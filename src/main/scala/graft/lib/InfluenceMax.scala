@@ -53,17 +53,14 @@ class InfluenceMax(g: GraphFrame) {
     pV = x; this
   }
 
-  def run(): DataFrame = {
-    val spark = g.vertices.sparkSession
+  def run(): DataFrame = IterationManager.scoped(g.spark) { mgr =>
     val und = g.edges.filter(col(SRC) =!= col(DST))
       .select(least(col(SRC), col(DST)).as("a"), greatest(col(SRC), col(DST)).as("b"))
       .distinct()
       .join(g.vertices.select(col(ID).as("a")), Seq("a"), "left_semi")
       .join(g.vertices.select(col(ID).as("b")), Seq("b"), "left_semi")
-    val adj = und.select(col("a").as("u"), col("b").as("v"))
-      .unionByName(und.select(col("b").as("u"), col("a").as("v")))
-      .persist()
-    val mgr = new IterationManager(2)
+    val adj = mgr.persistLazy(und.select(col("a").as("u"), col("b").as("v"))
+      .unionByName(und.select(col("b").as("u"), col("a").as("v"))))
     val deg = adj.groupBy(col("u").as(ID)).agg(count(lit(1)).as("d"))
     var state = mgr.cycle(
       g.vertices.select(col(ID)).join(deg, Seq(ID), "left_outer")
@@ -88,8 +85,6 @@ class InfluenceMax(g: GraphFrame) {
             (col("picked") || col(ID) === lit(seed)).as("picked")), round)
       }
     }
-    mgr.close()
-    adj.unpersist(false)
     val idField = g.vertices.schema(ID)
     val schema = org.apache.spark.sql.types.StructType(Seq(
       idField.copy(name = ID),
@@ -98,6 +93,6 @@ class InfluenceMax(g: GraphFrame) {
       org.apache.spark.sql.types.StructField("score",
         org.apache.spark.sql.types.DoubleType, nullable = false)))
     val rows = picks.map { case (id, r, s) => org.apache.spark.sql.Row(id, r, s) }
-    spark.createDataFrame(java.util.Arrays.asList(rows.toSeq: _*), schema)
+    g.spark.createDataFrame(java.util.Arrays.asList(rows.toSeq: _*), schema)
   }
 }

@@ -17,10 +17,19 @@ import org.apache.spark.storage.StorageLevel
  *  3. persisted frames from two rounds ago leak memory → unpersist once a
  *     newer round has been materialized.
  *
- * Usage per round: `df = mgr.cycle(df, round)`. The returned frame is
- * persisted (and possibly checkpointed); the frame from the previous cycle
- * is unpersisted only after the new one is materialized, so recomputation
- * never cascades. Fixed-step loops hand the whole loop to [[chained]].
+ * Usage: a distributed body runs inside
+ * `IterationManager.scoped(spark, dir, interval, level) { mgr => ... }`,
+ * which releases every frame the manager tracks when the body returns or
+ * throws. Per round, `df = mgr.cycle(df, round)` persists the frame (and
+ * cuts its lineage every `interval` rounds); the frame from the previous
+ * cycle is unpersisted only after the new one is materialized, so
+ * recomputation never cascades. A frame that later rounds or the result
+ * re-read after the queue has moved on goes through `mgr.keep`; side
+ * frames through `mgr.persistOnly` / `mgr.persistLazy`; a second
+ * loop-carried frame gets its own queue from `mgr.sub`. The body hands
+ * its result out through `mgr.finish`, which cuts it self-contained and
+ * then frees everything else. Fixed-step loops hand the whole loop to
+ * [[chained]].
  */
 private[graft] object IterationManager {
   /** Rounds [[IterationManager.chained]] chains lazily per lineage cut.
@@ -88,6 +97,20 @@ private[graft] object IterationManager {
     }
   }
 
+  /** Runs `body` with a manager built as [[withReliableDir]] builds one
+   * and closes the manager when the body returns or throws, so every
+   * frame it tracks is released on the error path too. A body hands a
+   * frame that reads tracked state out through [[finish]] (or
+   * [[finishAll]]), which has closed the manager already. */
+  def scoped[T](spark: org.apache.spark.sql.SparkSession, dir: Option[String] = None,
+      checkpointInterval: Int = 2,
+      storageLevel: StorageLevel = StorageLevel.MEMORY_AND_DISK)(
+      body: IterationManager => T): T =
+    closing(withReliableDir(spark, dir, checkpointInterval, storageLevel))(body)
+
+  private def closing[T](mgr: IterationManager)(body: IterationManager => T): T =
+    try body(mgr) finally mgr.close()
+
   /** Eagerly free the block-manager storage behind a frame returned from
    * [[IterationManager.finish]] (its `LogicalRDD` blocks). Call only when
    * the frame's data is no longer needed — it cannot be recomputed. */
@@ -125,6 +148,8 @@ private[graft] class IterationManager(
   private case class Entry(df: DataFrame, rddIds: Seq[Int], viaDatasetPersist: Boolean)
   private val persisted = mutable.Queue.empty[Entry]
   private val sideFrames = mutable.ArrayBuffer.empty[DataFrame]
+  private val kept = mutable.ArrayBuffer.empty[DataFrame]
+  private val subs = mutable.ArrayBuffer.empty[IterationManager]
 
   // NOTE on cadence (round-8 experiment, kept for the record): stretching
   // the cut interval when the state frame is tiny — "skip eager cuts,
@@ -196,7 +221,7 @@ private[graft] class IterationManager(
       after: (DataFrame, Int, Seq[Double]) => Option[DataFrame] = (s, _, _) => Some(s),
       result: DataFrame => DataFrame = identity)(
       step: (DataFrame, Int) => DataFrame): DataFrame =
-    try {
+    IterationManager.closing(this) { _ =>
       var state = cycleAt(init, 0, force = true)
       var round = 0
       var cut = 0
@@ -220,7 +245,7 @@ private[graft] class IterationManager(
         }
       }
       finish(result(state))
-    } catch { case t: Throwable => close(); throw t }
+    }
 
   private def cycleAt(df: DataFrame, round: Int, force: Boolean): DataFrame = {
     val doCheckpoint = force ||
@@ -234,13 +259,7 @@ private[graft] class IterationManager(
       // cut leaks one cached copy of the full iteration state.
       val sc = df.sparkSession.sparkContext
       val before = sc.getPersistentRDDs.keySet
-      val c = if (useLocalCheckpoint) df.localCheckpoint(true)
-      else {
-        val p = df.persist(storageLevel)
-        val x = p.checkpoint(true)
-        p.unpersist(false)
-        x
-      }
+      val c = cut(df)
       // RDDs persisted by this cut (and any lazy prior-round caches the
       // cut's job happened to materialize — double-freeing those later is
       // a no-op); ids, not references, so dropped entries don't pin
@@ -250,27 +269,55 @@ private[graft] class IterationManager(
       // everything older than this materialized frame is now safe to drop
       while (persisted.size > 1) free(persisted.dequeue())
       c
-    } else if (checkpointInterval <= 0) {
-      // checkpointing disabled: materialize every round (plan keeps
-      // growing — caller opted out of lineage cuts)
-      val p = df.persist(storageLevel)
-      p.count()
-      persisted.enqueue(Entry(p, Nil, viaDatasetPersist = true))
-      while (persisted.size > 1) free(persisted.dequeue())
-      p
     } else {
       val p = df.persist(storageLevel)
       persisted.enqueue(Entry(p, Nil, viaDatasetPersist = true))
+      if (checkpointInterval <= 0) {
+        // checkpointing disabled: materialize every round (plan keeps
+        // growing — caller opted out of lineage cuts)
+        p.count()
+        while (persisted.size > 1) free(persisted.dequeue())
+      }
       p
     }
+  }
+
+  /** Cut `df` self-contained now (an eager `localCheckpoint`, or a
+   * reliable checkpoint under a reliable dir) and keep its blocks until
+   * [[finish]] or [[close]], which free them with
+   * [[IterationManager.release]] only after the result has been cut. For
+   * frames that later rounds or the result re-read after the [[cycle]]
+   * queue has moved past them: per-round winners, color classes, levels.
+   *
+   * Why a cut and not a persist: such a frame's plan reads the evolving
+   * round state, and a later cycle's `Dataset.unpersist` of a lazy round
+   * entry re-compiles every dependent CacheManager entry. A persisted
+   * frame would drop its built data there and rebuild at [[finish]]
+   * through cut blocks the queue had already freed
+   * (CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND: the round-6 and round-12 crash
+   * class, seen on ≥ 3-round graphs). A cut lives outside the
+   * CacheManager and reads only its own blocks. */
+  def keep(df: DataFrame): DataFrame = {
+    val c = cut(df)
+    // two concurrent jobs may keep their cuts at once
+    kept.synchronized(kept += c)
+    c
+  }
+
+  /** A manager for a second loop-carried frame (its own [[cycle]] queue),
+   * built like this one and closed with it at the latest. A body may
+   * close it earlier, e.g. at the end of the outer round it served. */
+  def sub(interval: Int = checkpointInterval): IterationManager = {
+    val m = new IterationManager(interval, storageLevel, useLocalCheckpoint)
+    subs += m
+    m
   }
 
   /** Materialize + persist without lineage truncation (for side frames);
    * tracked and released by [[close]]. */
   def persistOnly(df: DataFrame): DataFrame = {
-    val p = df.persist(storageLevel)
+    val p = persistLazy(df)
     p.count()
-    sideFrames += p
     p
   }
 
@@ -306,31 +353,41 @@ private[graft] class IterationManager(
   /** [[finish]] for callers with SEVERAL results over the same iteration
    * state (e.g. bridges + articulation points from one BFS forest): every
    * frame is cut/materialized BEFORE the single close, so no result's
-   * lineage can reach into blocks the close frees. */
+   * lineage can reach into blocks the close frees. A frame from [[keep]]
+   * is a cut already and is handed out as it is, no longer tracked. */
   def finishAll(dfs: Seq[DataFrame]): Seq[DataFrame] = {
-    val rs = dfs.map { df =>
-      if (useLocalCheckpoint) df.localCheckpoint(true)
-      else {
-        val p = df.persist(storageLevel)
-        val x = p.checkpoint(true)
-        p.unpersist(false)
-        x
-      }
-    }
+    // a kept frame is a cut already: it is handed out as it is
+    val rs = dfs.map(df => kept.indexWhere(_ eq df) match {
+      case -1 => cut(df)
+      case i => kept.remove(i)
+    })
     close()
     rs
   }
 
-  /** Drop every cache still held, including the RDD blocks behind lineage
-   * cuts. Callers MUST materialize (persist + count) their final result
-   * BEFORE closing: the last cut's blocks are freed here, and a frame
-   * whose lineage was truncated into them cannot be recomputed after. */
-  def close(keep: DataFrame*): Unit = {
-    val keepSet = keep.toSet
-    persisted.dequeueAll(_ => true).foreach { e =>
-      if (!keepSet.contains(e.df)) free(e)
+  /** An eager lineage cut: `localCheckpoint`, or a reliable `checkpoint`
+   * when the manager has a reliable dir. */
+  private def cut(df: DataFrame): DataFrame =
+    if (useLocalCheckpoint) df.localCheckpoint(true)
+    else {
+      val p = df.persist(storageLevel)
+      try p.checkpoint(true) finally p.unpersist(false)
     }
-    sideFrames.foreach { df => if (!keepSet.contains(df)) df.unpersist(false) }
+
+  /** Drop every cache still held, including the RDD blocks behind lineage
+   * cuts and [[keep]]s. A result must be cut BEFORE closing (see
+   * [[finish]]): a frame whose lineage reaches into the freed blocks
+   * cannot be recomputed after. Kept cuts are freed with
+   * [[IterationManager.release]], side frames with `Dataset.unpersist`:
+   * `release` on a side frame would unpin every `LogicalRDD` its plan
+   * reads, live round cuts included. */
+  def close(): Unit = {
+    persisted.dequeueAll(_ => true).foreach(free)
+    sideFrames.foreach(_.unpersist(false))
     sideFrames.clear()
+    kept.foreach(IterationManager.release)
+    kept.clear()
+    subs.foreach(_.close())
+    subs.clear()
   }
 }

@@ -46,8 +46,7 @@ class KTruss(g: GraphFrame) {
     require(n > 0, "maxIter should be positive."); maxIterV = n; this
   }
 
-  def run(): DataFrame = {
-    val mgr = new IterationManager(2)
+  def run(): DataFrame = IterationManager.scoped(g.spark) { mgr =>
     var edges = mgr.cycle(g.edges
       .filter(col(SRC) =!= col(DST))
       .select(least(col(SRC), col(DST)).as(SRC), greatest(col(SRC), col(DST)).as(DST))

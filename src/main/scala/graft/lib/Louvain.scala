@@ -109,7 +109,10 @@ class Louvain(g: GraphFrame) extends LocalTail {
     // gains are exact whatever the gain mode (decimal and Long agree
     // bit-for-bit on exact integers, proven by the decimal/long spec)
     gateOrdered(und, g.vertices.schema(ID).dataType, pinForDistributed = true)(
-      runLocal)(p => runDistributed(p, p.count()))
+      runLocal)(p => p.count() match {
+        case 0 => g.vertices.withColumn("community", col(ID))
+        case m => runDistributed(p, m)
+      })
   }
 
   /** One level's synchronous rounds over weighted bidirectional edges
@@ -152,9 +155,10 @@ class Louvain(g: GraphFrame) extends LocalTail {
     state
   }
 
-  /** The distributed rounds over the `m` canonical edges of `und`; the
-   * edge count also picks the gain mode. */
-  private def runDistributed(und: DataFrame, m: Long): DataFrame = {
+  /** The distributed rounds over the `m` > 0 canonical edges of `und`;
+   * the edge count also picks the gain mode. */
+  private def runDistributed(und: DataFrame, m: Long): DataFrame =
+      IterationManager.scoped(g.spark) { mgr =>
     val decimalGains = gainModeV match {
       case "decimal" => true
       case "long" =>
@@ -165,13 +169,10 @@ class Louvain(g: GraphFrame) extends LocalTail {
         false
       case _ => 2 * m > 1500000000L
     }
-    if (m == 0) return g.vertices.withColumn("community", col(ID))
-    val mgr = new IterationManager(2)
     var rc = -1
     def cut(df: DataFrame): DataFrame = { rc += 1; mgr.cycle(df, rc) }
-    // per-level vertex→community snapshots, each SELF-CONTAINED (their
-    // blocks must outlive the mgr queue, which frees older entries as
-    // later levels cut — same block discipline as IterationManager.finish)
+    // per-level vertex→community snapshots, kept: the labels are composed
+    // back down only after the last level
     val maps = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
     // canonical weighted level edges (a ≤ b; a = b are super-loops)
     var ce = und.select(col("a"), col("b"), lit(1L).as("w"))
@@ -192,7 +193,7 @@ class Louvain(g: GraphFrame) extends LocalTail {
           (coalesce(col("wd"), lit(0L)) + lit(2L) * coalesce(col("loopw"), lit(0L))).as("deg"),
           col(ID).as("community"))
       val state = roundsDistributed(u, init, m, decimalGains, cut)
-      maps += state.select(col(ID), col("community")).localCheckpoint(true)
+      maps += mgr.keep(state.select(col(ID), col("community")))
       if (lvl < levelsV) {
         // coarsen: map both endpoints through this level's assignment;
         // intra edges land on the diagonal as super-loops
@@ -212,11 +213,8 @@ class Louvain(g: GraphFrame) extends LocalTail {
         .join(sm.select(col(ID).as("_c"), col("community").as("_nc")),
           comp("community") === col("_c"), "left_outer")
         .select(comp(ID), coalesce(col("_nc"), comp("community")).as("community"))
-    val result = mgr.finish(
-      g.vertices.join(comp, Seq(ID), "left_outer")
-        .withColumn("community", coalesce(col("community"), col(ID))))
-    maps.foreach(IterationManager.release)
-    result
+    mgr.finish(g.vertices.join(comp, Seq(ID), "left_outer")
+      .withColumn("community", coalesce(col("community"), col(ID))))
   }
 
   /** Driver tail: the identical synchronous integer-gain rounds and

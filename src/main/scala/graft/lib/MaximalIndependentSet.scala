@@ -47,13 +47,10 @@ class MaximalIndependentSet(g: GraphFrame) extends LocalTail {
     gate(und, eligible = hashModeV == "md5")(runLocal)(runDistributed)
   }
 
-  private def runDistributed(und: DataFrame): DataFrame = {
-
-    val mgr = IterationManager.withReliableDir(g.spark, None)
+  private def runDistributed(und: DataFrame): DataFrame = IterationManager.scoped(g.spark) { mgr =>
     var remaining = mgr.persistOnly(g.vertices.select(ID))
     val undP = mgr.persistOnly(und)
     var mis: Option[DataFrame] = None
-    val roundWinners = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
 
     var round = 0
     while (round < maxIterV && remaining.take(1).nonEmpty) {
@@ -75,14 +72,7 @@ class MaximalIndependentSet(g: GraphFrame) extends LocalTail {
       val cand = remaining.join(nbrMin, Seq(ID), "left_outer")
         .filter(col("nbrMin").isNull || prio(col(ID)) < col("nbrMin"))
         .select(ID)
-      // winners are CUT self-contained, not persisted: their plan reads
-      // the evolving `remaining` frame, and a later cycle's
-      // Dataset.unpersist of a lazy round entry re-compiles dependent
-      // CacheManager entries — a persisted winner frame would drop its
-      // built data and rebuild at finish() through freed cut blocks
-      // (the MaximalMatching round-12 crash class; ≥ 3-round graphs)
-      val candP = cand.localCheckpoint(true)
-      roundWinners += candP
+      val candP = mgr.keep(cand)
       mis = Some(mis.map(_.unionAll(candP)).getOrElse(candP))
       val nbrOfCand = er.join(candP.select(col(ID).as(SRC)), Seq(SRC), "left_semi")
         .select(col(DST).as(ID))
@@ -94,14 +84,8 @@ class MaximalIndependentSet(g: GraphFrame) extends LocalTail {
         round)
       round += 1
     }
-    val out = mgr.finish(mis.map(m => g.vertices.join(m, Seq(ID), "left_semi"))
+    mgr.finish(mis.map(m => g.vertices.join(m, Seq(ID), "left_semi"))
       .getOrElse(g.vertices.limit(0)))
-    undP.unpersist(false)
-    // the finish cut copied the winner rows — release the per-round cuts'
-    // RDD blocks (each cut's plan is only its own LogicalRDD, so release
-    // cannot touch live manager state)
-    roundWinners.foreach(IterationManager.release)
-    out
   }
 
   /** Driver tail (md5 mode): identical Luby rounds — md5 hex strings

@@ -82,11 +82,9 @@ class MaximalMatching(g: GraphFrame) extends LocalTail {
     gate(und, pinForDistributed = true)(runLocal)(runDistributed)
   }
 
-  private def runDistributed(und: DataFrame): DataFrame = {
-    val mgr = IterationManager.withReliableDir(g.spark, None)
+  private def runDistributed(und: DataFrame): DataFrame = IterationManager.scoped(g.spark) { mgr =>
     var er = mgr.cycle(und, 0)
     var matched: Option[DataFrame] = None
-    val winnerCuts = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
     var round = 0
     var done = false
     while (round < maxIterV && !done) {
@@ -100,22 +98,11 @@ class MaximalMatching(g: GraphFrame) extends LocalTail {
       val vmin = ep.select(col("ea").as("v"), col("s"))
         .unionAll(ep.select(col("eb").as("v"), col("s")))
         .groupBy(col("v")).agg(min(col("s")).as("m"))
-      // winners are CUT self-contained, not merely persisted: their plan
-      // reads the round's evolving er frame, and a later cycle's
-      // Dataset.unpersist of a lazy er entry RE-COMPILES every dependent
-      // CacheManager entry — a persisted winners frame would silently
-      // drop its built data and rebuild at finish() through cut blocks
-      // the manager already freed (CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND,
-      // the round-6 class; reproduced under AQE-off). A localCheckpoint
-      // lives at the RDD level, outside the CacheManager, immune to the
-      // cascade — same one-materializing-job cost as persistOnly.
-      val winners =
+      val winners = mgr.keep(
         ep.join(vmin.select(col("v").as("ea"), col("m").as("ma")), "ea")
           .join(vmin.select(col("v").as("eb"), col("m").as("mb")), "eb")
           .filter(col("s") === col("ma") && col("s") === col("mb"))
-          .select(col("ea"), col("eb"), col("_w"), lit(round).as("round"))
-          .localCheckpoint(true)
-      winnerCuts += winners
+          .select(col("ea"), col("eb"), col("_w"), lit(round).as("round")))
       matched = Some(matched.map(_.unionAll(winners)).getOrElse(winners))
       val mv = winners.select(col("ea").as("v"))
         .unionAll(winners.select(col("eb").as("v"))).distinct()
@@ -133,12 +120,8 @@ class MaximalMatching(g: GraphFrame) extends LocalTail {
     val cols = Seq(col("ea").as(SRC), col("eb").as(DST)) ++
       (if (weightColV.isDefined) Seq(col("_w").as("weight")) else Nil) ++
       Seq(col("round").cast("int").as("round"))
-    val out = mgr.finish(matched.map(_.select(cols: _*))
+    mgr.finish(matched.map(_.select(cols: _*))
       .getOrElse(und.limit(0).withColumn("round", lit(0)).select(cols: _*)))
-    // the finish cut copied the matched rows — release the per-round
-    // winner cuts' RDD blocks eagerly
-    winnerCuts.foreach(IterationManager.release)
-    out
   }
 
   /** Driver tail: identical level-synchronous rounds — md5 hex strings

@@ -57,14 +57,14 @@ class MinimumSpanningForest(g: GraphFrame) extends LocalTail {
     gateOrdered(e, idType, pinForDistributed = true)(runLocal)(runDistributed(_, idType))
   }
 
-  private def runDistributed(e: DataFrame, idType: DataType): DataFrame = {
-    // checkpointInterval 1: comp appears TWICE in every round's candidate
-    // join and the hooking table self-joins on top — without a lineage cut
-    // per round the analyzed plan tree multiplies ~16× per round and the
-    // pointer-doubling loop squares it again (the 4^rounds analyzer
-    // explosion measured in lib/IterationManager.scala's cadence note).
-    // Every cut is eager, so each frame below reads LogicalRDD state.
-    val mgr = new IterationManager(1)
+  // checkpointInterval 1: comp appears TWICE in every round's candidate
+  // join and the hooking table self-joins on top — without a lineage cut
+  // per round the analyzed plan tree multiplies ~16× per round and the
+  // pointer-doubling loop squares it again (the 4^rounds analyzer
+  // explosion measured in lib/IterationManager.scala's cadence note).
+  // Every cut is eager, so each frame below reads LogicalRDD state.
+  private def runDistributed(e: DataFrame, idType: DataType): DataFrame =
+      IterationManager.scoped(g.spark, checkpointInterval = 1) { mgr =>
     var comp = mgr.cycle(
       e.select(col("a").as(ID)).union(e.select(col("b"))).distinct()
         .select(col(ID), col(ID).as("comp")), 0)
@@ -94,15 +94,8 @@ class MinimumSpanningForest(g: GraphFrame) extends LocalTail {
             .union(cand.select(col("cb").as("c"), k.as("k")))
             .groupBy("c").agg(min("k").as("k")))
         cand.unpersist(false)
-        // the round's forest slice is CUT self-contained, not persisted:
-        // the mid-round chosen.unpersist below re-compiles dependent
-        // CacheManager entries, so a persisted slice would drop its built
-        // data and rebuild at finish() through comp cuts the interval-1
-        // manager already freed (the MaximalMatching round-12 crash
-        // class); a localCheckpoint lives outside the CacheManager
-        forest = forest :+ chosen.select(col("k.a").as(SRC),
-            col("k.b").as(DST), col("k.w").as("weight")).distinct()
-          .localCheckpoint(true)
+        forest = forest :+ mgr.keep(chosen.select(col("k.a").as(SRC),
+          col("k.b").as(DST), col("k.w").as("weight")).distinct())
         // hooking graph c → partner(c); the minimum-keyed edge inside any
         // hooking component is chosen by BOTH its endpoint components, so
         // every pointer cycle is a mutual pair — root it at the smaller id
@@ -112,7 +105,7 @@ class MinimumSpanningForest(g: GraphFrame) extends LocalTail {
         // pointer doubling self-joins p every step — own per-round manager,
         // cut per step, closed only after the new comp is cut (the cut job
         // is the last reader of the final p's blocks)
-        val pm = new IterationManager(1)
+        val pm = mgr.sub()
         var p = pm.cycle(parent0.as("x")
           .join(parent0.as("y"), col("x.p") === col("y.c"))
           .select(col("x.c").as("c"),
@@ -144,11 +137,7 @@ class MinimumSpanningForest(g: GraphFrame) extends LocalTail {
           StructType(Seq(StructField(SRC, idType), StructField(DST, idType),
             StructField("weight", DoubleType))))
       else forest.reduce(_ unionByName _)
-    val out = mgr.finish(result) // finish() self-contains and closes mgr
-    // the finish cut copied the forest rows — release the per-round cuts'
-    // RDD blocks (each cut's plan is only its own LogicalRDD)
-    forest.foreach(IterationManager.release)
-    out
+    mgr.finish(result)
   }
 
   /** Driver-side Kruskal tail: same `(w, a, b)` key order via the

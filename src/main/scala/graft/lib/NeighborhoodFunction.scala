@@ -110,31 +110,31 @@ class NeighborhoodFunction(g: GraphFrame) extends LocalTail {
     counts.toSeq.toDF("d", "n_pairs")
   }
 
-  private def runDistributed(ball0: DataFrame): DataFrame = {
+  /** The rounds' counts are a driver-local frame: the scope's close frees
+   * every round cut once they are collected. */
+  private def runDistributed(ball0: DataFrame): DataFrame =
+      IterationManager.scoped(g.spark) { mgr =>
     val lg = lgNomEntriesV
-    val mgr = new IterationManager()
     // N(d) rides the cut job of ball_d. theta_sketch_estimate returns LONG
     // (Spark rounds the raw estimate); sum() over zero rows is NULL —
     // coalesce so an empty vertex table yields a clean (0, 0) row
     val total = Seq(coalesce(sum(expr("theta_sketch_estimate(_nf_sk)")), lit(0L)))
-    try {
-      val edges = mgr.persistLazy(
-        g.edges.select(col(SRC), col(DST)).distinct().repartition(col(DST)))
-      var state = ball0
-      rounds { d =>
-        val ball = if (d == 0) ball0 else {
-          // ball_d(v) = ball_{d-1}(v) ∪ ⋃_{v→w} ball_{d-1}(w): ship each
-          // vertex's sketch to its in-edges' sources, union per vertex
-          val msgs = edges.join(state.withColumnRenamed(ID, DST), DST)
-            .select(col(SRC).as(ID), col("_nf_sk"))
-          state.unionByName(msgs)
-            .groupBy(col(ID)).agg(expr(s"theta_union_agg(_nf_sk, $lg)").as("_nf_sk"))
-        }
-        val (cut, Seq(n: java.lang.Long)) = mgr.cycleObserved(ball, d, total)
-        state = cut
-        n.longValue
+    val edges = mgr.persistLazy(
+      g.edges.select(col(SRC), col(DST)).distinct().repartition(col(DST)))
+    var state = ball0
+    rounds { d =>
+      val ball = if (d == 0) ball0 else {
+        // ball_d(v) = ball_{d-1}(v) ∪ ⋃_{v→w} ball_{d-1}(w): ship each
+        // vertex's sketch to its in-edges' sources, union per vertex
+        val msgs = edges.join(state.withColumnRenamed(ID, DST), DST)
+          .select(col(SRC).as(ID), col("_nf_sk"))
+        state.unionByName(msgs)
+          .groupBy(col(ID)).agg(expr(s"theta_union_agg(_nf_sk, $lg)").as("_nf_sk"))
       }
-    } finally mgr.close()
+      val (cut, Seq(n: java.lang.Long)) = mgr.cycleObserved(ball, d, total)
+      state = cut
+      n.longValue
+    }
   }
 
   /** Driver tail: the distributed rounds replayed with one exact bitset

@@ -157,6 +157,11 @@ class Pregel(g: GraphFrame) {
     require(vertexCols.nonEmpty, "pregel: withVertexColumn required")
     require(msgsToSrc.nonEmpty || msgsToDst.nonEmpty, "pregel: no message expressions")
     require(aggMsgsCol.nonEmpty, "pregel: aggMsgs required")
+    runDistributed()
+  }
+
+  private def runDistributed(): DataFrame = IterationManager.scoped(g.spark,
+      reliableCheckpointDir, checkpointInterval, storageLevel) { mgr =>
 
     val origCols = g.vertices.columns.toSeq
     val stateCols = origCols ++ vertexCols.map(_.name) ++
@@ -188,13 +193,12 @@ class Pregel(g: GraphFrame) {
 
     // Edges shaped once: (edge_src, edge_dst[, edge-struct of referenced
     // fields]), co-partitioned by the per-round join key and cached.
-    val edgeStruct = g.edges.select(
+    val edgeStruct = mgr.persistLazy(g.edges.select(
       (Seq(col(SRC).as("_p_esrc"), col(DST).as("_p_edst")) ++
         (if (edgeFields.nonEmpty)
           Seq(struct(edgeFields.map(c => col(graft.GraphFrame.quoteName(c))).toIndexedSeq: _*).as(EDGE)) else Nil)
       ).toIndexedSeq: _*)
-      .repartition(col("_p_esrc"))
-      .persist(storageLevel)
+      .repartition(col("_p_esrc")))
 
     val useDstJoin = requiredDstList.isDefined || needsDstJoin
 
@@ -204,8 +208,6 @@ class Pregel(g: GraphFrame) {
         (if (updateActiveExpr.isDefined) Seq(initialActiveExpr.as(ACTIVE_COL)) else Nil)
       ).toIndexedSeq: _*)
 
-    val mgr = IterationManager.withReliableDir(g.spark, reliableCheckpointDir,
-      checkpointInterval, storageLevel)
     state = mgr.cycle(state, 0)
 
     var iter = 1
@@ -246,7 +248,7 @@ class Pregel(g: GraphFrame) {
       // persist the aggregated messages across the probe and the update
       // join, or the whole triplet+aggregate pipeline executes twice per
       // round (probe once, update once)
-      val agged = if (earlyStopping) agged0.persist() else agged0
+      val agged = if (earlyStopping) mgr.persistLazy(agged0) else agged0
 
       if (earlyStopping && agged.isEmpty) {
         agged.unpersist(false)
@@ -272,10 +274,8 @@ class Pregel(g: GraphFrame) {
     // finish(): the result is often a no-op projection of the final state
     // (fixed-iteration algorithms drop no voting column) — persist+close
     // would let close() uncache it via sameResult; see IterationManager
-    val result = mgr.finish(state.select(
+    mgr.finish(state.select(
       (origCols.map(c => col(graft.GraphFrame.quoteName(c))) ++ vertexCols.map(vc => col(vc.name))).toIndexedSeq: _*))
-    edgeStruct.unpersist(false)
-    result
   }
 }
 

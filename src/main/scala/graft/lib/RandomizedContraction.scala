@@ -36,7 +36,7 @@ class RandomizedContraction(g: GraphFrame) {
     reliableDirV = Some(dir); this
   }
 
-  def run(): DataFrame = {
+  def run(): DataFrame = IterationManager.scoped(g.spark, reliableDirV) { mgr =>
     val iv = g.indexedVertices.select(col(LONG_ID).as("vid"), col(ID))
     var ee = g.indexedEdges
       .select(col(LONG_SRC).as("src"), col(LONG_DST).as("dst"))
@@ -44,7 +44,6 @@ class RandomizedContraction(g: GraphFrame) {
       .select(least(col("src"), col("dst")).as("src"), greatest(col("src"), col("dst")).as("dst"))
       .distinct()
 
-    val mgr = IterationManager.withReliableDir(g.spark, reliableDirV)
     ee = mgr.cycle(ee, 0)
     val repTables = ArrayBuffer.empty[DataFrame]
     val rnd = new scala.util.Random(seedV)
@@ -91,8 +90,6 @@ class RandomizedContraction(g: GraphFrame) {
 
     val labeled = iv.join(comp.select(col("v").as("vid"), col("comp")), Seq("vid"), "left_outer")
       .select(col(ID), coalesce(col("comp"), col("vid")).as("component"))
-    val out = mgr.finish(g.vertices.join(labeled, Seq(ID), "left_outer"))
-    repTables.foreach(_.unpersist(false))
-    out
+    mgr.finish(g.vertices.join(labeled, Seq(ID), "left_outer"))
   }
 }

@@ -63,14 +63,13 @@ class SVDPlusPlus(g: GraphFrame) {
    * vertex: (id, q, p, y, bias, norm_deviation) — q/y null for users,
    * p/norm null for items. Training loss (final-state Σerr²) in [[lastLoss]].
    */
-  def runDeterministic(): DataFrame = {
+  def runDeterministic(): DataFrame = IterationManager.scoped(g.spark) { mgr =>
     import GraphFrame.{SRC, DST}
     require(g.edges.columns.contains(WEIGHT), "svdPlusPlus: edges need a 'weight' column")
     // ids keep their original type end-to-end; only the md5 init hashes
     // their string form (concat_ws casts)
-    val e = g.edges.select(col(SRC).as("u"), col(DST).as("i"),
-        col(WEIGHT).cast("double").as("r"))
-      .persist()
+    val e = mgr.persistLazy(g.edges.select(col(SRC).as("u"), col(DST).as("i"),
+        col(WEIGHT).cast("double").as("r")))
     val mu = e.agg(avg("r")).head().getDouble(0)
     val g1 = gamma1; val g2 = gamma2; val g6 = gamma6; val g7 = gamma7
     // hash init in [0, 0.1): first 16 md5 bits of "tag|id|k" / 65536 * 0.1
@@ -88,14 +87,12 @@ class SVDPlusPlus(g: GraphFrame) {
       df.groupBy(key).agg(sums.head, sums.tail: _*)
         .select(col(key), array((0 until rank).map(k => col(s"_s$k")): _*).as(arr))
     }
-    var users = e.groupBy("u").agg(count(lit(1)).as("du"), avg("r").as("ar"))
+    var users = mgr.persistLazy(e.groupBy("u").agg(count(lit(1)).as("du"), avg("r").as("ar"))
       .select(col("u"), col("du"), (col("ar") - mu).as("bu"),
-        (lit(1.0) / sqrt(col("du"))).as("nu"), hvec("p", col("u")).as("p"))
-      .persist()
-    var items = e.groupBy("i").agg(count(lit(1)).as("di"), avg("r").as("ar"))
+        (lit(1.0) / sqrt(col("du"))).as("nu"), hvec("p", col("u")).as("p")))
+    var items = mgr.persistLazy(e.groupBy("i").agg(count(lit(1)).as("di"), avg("r").as("ar"))
       .select(col("i"), col("di"), (col("ar") - mu).as("bi"),
-        hvec("q", col("i")).as("q"), hvec("y", col("i")).as("y"))
-      .persist()
+        hvec("q", col("i")).as("q"), hvec("y", col("i")).as("y")))
     def edgeErr(us: DataFrame, it: DataFrame): DataFrame = {
       // r14 join restructure: the edge frame is the only corpus-sized
       // side, so shuffle IT as few times as possible. ONE e⋈items
@@ -122,9 +119,8 @@ class SVDPlusPlus(g: GraphFrame) {
       // (u, i, err, q, z, nu) — the full edgeErr row also carries r, p,
       // su, pred and both bias columns, which doubled the cached bytes
       // and the scan feeding each epoch's two shuffles for no consumer
-      val t = edgeErr(users, items)
-        .select(col("u"), col("i"), col("err"), col("q"), col("z"), col("nu"))
-        .persist()
+      val t = mgr.persistLazy(edgeErr(users, items)
+        .select(col("u"), col("i"), col("err"), col("q"), col("z"), col("nu")))
       // ONE hash aggregation per vertex side: the scalar Σerr and every
       // per-lane vector sum ride the same shuffle as sibling sum columns
       // (this replaces one scalar agg + one/two vecSum aggs per side — five
@@ -154,57 +150,46 @@ class SVDPlusPlus(g: GraphFrame) {
             (q, s) => q + (s - col("di") * g7 * q) * g2).as("q"),
           zip_with(col("y"), col("ey"),
             (y, s) => y + (s - col("di") * g7 * y) * g2).as("y"))
-      // eager localCheckpoint BOTH truncates the lineage (the epoch plan
-      // tree otherwise compounds ~10x per epoch — a 5-epoch run OOMs the
-      // driver on plan nodes alone) and materializes, so the epoch inputs
-      // can be dropped immediately. r14: the two checkpoints are
-      // INDEPENDENT given the persisted t — materialize them as two
-      // concurrent jobs (guide-§2.6 overlap: the item job back-fills the
-      // user job's straggler tail instead of waiting it out; results are
-      // value-deterministic, so overlap cannot change them)
+      // a kept cut BOTH truncates the lineage (the epoch plan tree
+      // otherwise compounds ~10x per epoch — a 5-epoch run OOMs the driver
+      // on plan nodes alone) and materializes, so the epoch inputs can be
+      // dropped immediately. r14: the two cuts are INDEPENDENT given the
+      // persisted t — materialize them as two concurrent jobs (guide-§2.6
+      // overlap: the item job back-fills the user job's straggler tail
+      // instead of waiting it out; results are value-deterministic, so
+      // overlap cannot change them)
       val (cu, ci) = {
         import scala.concurrent.{Await, Future}
         import scala.concurrent.duration.Duration
         import scala.concurrent.ExecutionContext.Implicits.global
-        val fu = Future(newUsers.localCheckpoint(true))
-        val fi = Future(newItems.localCheckpoint(true))
-        // await BOTH before propagating any failure (r15, ADVICE item):
-        // rethrowing on the first Await left the sibling job running
-        // unsupervised — its checkpoint blocks were never released and the
-        // epoch inputs stayed persisted on the error path
+        val fu = Future(mgr.keep(newUsers))
+        val fi = Future(mgr.keep(newItems))
+        // await BOTH before propagating the first failure: a sibling job
+        // still running could keep a cut after the scope has closed
         val ru = scala.util.Try(Await.result(fu, Duration.Inf))
         val ri = scala.util.Try(Await.result(fi, Duration.Inf))
-        (ru, ri) match {
-          case (scala.util.Success(u), scala.util.Success(i)) => (u, i)
-          case _ =>
-            // reap whichever side DID materialize, drop the epoch inputs,
-            // then rethrow the first failure
-            ru.foreach(IterationManager.release(_))
-            ri.foreach(IterationManager.release(_))
-            users.unpersist(false); items.unpersist(false); t.unpersist(false)
-            IterationManager.release(users); IterationManager.release(items)
-            throw ru.failed.toOption.orElse(ri.failed.toOption).get
-        }
+        (ru.get, ri.get)
       }
       users.unpersist(false); items.unpersist(false); t.unpersist(false)
       // superseded epochs' checkpoint BLOCKS live outside the CacheManager
       // (Dataset.unpersist can't free them) — release them eagerly or the
-      // loop leaks two vertex-sized frames per epoch until session GC
+      // loop holds two vertex-sized frames per epoch until the scope ends
       IterationManager.release(users); IterationManager.release(items)
       users = cu; items = ci
     }
+    // the final cuts are handed out as they are (finishing a kept frame
+    // makes no new cut)
+    val Seq(fu, fi) = mgr.finishAll(Seq(users, items))
     // loss = one more full edge pass over the FINAL state — deferred to
     // first lastLoss access (the final users/items are lineage-cut and
-    // self-contained; e recomputes from the source edges if evicted)
-    val fu = users; val fi = items
+    // self-contained; e recomputes from the source edges once released)
     lossCache = None
     lossEval = () => edgeErr(fu, fi)
       .agg(sum(col("err") * col("err"))).head().getDouble(0)
-    e.unpersist(false)
-    users.select(col("u").as(ID), lit(null).cast("array<double>").as("q"),
+    fu.select(col("u").as(ID), lit(null).cast("array<double>").as("q"),
         col("p"), lit(null).cast("array<double>").as("y"),
         col("bu").as("bias"), col("nu").as("norm_deviation"))
-      .unionByName(items.select(col("i").as(ID), col("q"),
+      .unionByName(fi.select(col("i").as(ID), col("q"),
         lit(null).cast("array<double>").as("p"), col("y"),
         col("bi").as("bias"), lit(null).cast("double").as("norm_deviation")))
   }

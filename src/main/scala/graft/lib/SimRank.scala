@@ -76,10 +76,10 @@ class SimRank(g: GraphFrame) extends LocalTail {
       andIf = g.vertices.count() <= tailVertexBound)(runLocal)(runDistributed)
   }
 
-  private def runDistributed(e: DataFrame): DataFrame = {
-    val ind = e.groupBy(col(DST).as("_v")).agg(count(lit(1)).as("_d")).persist()
+  private def runDistributed(e: DataFrame): DataFrame =
+      IterationManager.scoped(g.spark, checkpointInterval = 1) { mgr =>
+    val ind = mgr.persistLazy(e.groupBy(col(DST).as("_v")).agg(count(lit(1)).as("_d")))
     val vv = g.vertices.select(col(ID))
-    val mgr = new IterationManager(1)
     var state = mgr.cycle(
       vv.select(col(ID).as("a"), col(ID).as("b"), lit(0.0).as("s")).limit(0), 0)
     for (round <- 1 to maxIterV) {
@@ -105,9 +105,7 @@ class SimRank(g: GraphFrame) extends LocalTail {
             "or switch to top-k similarity (kNN family) at this scale")
       }
     }
-    val result = mgr.finish(state.select(col("a"), col("b"), col("s").as("simrank")))
-    ind.unpersist(false)
-    result
+    mgr.finish(state.select(col("a"), col("b"), col("s").as("simrank")))
   }
 
   /** Driver tail: identical contribution multiset, accumulated in sorted

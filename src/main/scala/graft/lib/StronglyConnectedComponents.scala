@@ -32,9 +32,6 @@ class StronglyConnectedComponents(g: GraphFrame) extends LocalTail {
     reliableDirV = Some(dir); this
   }
 
-  private def newMgr(): IterationManager =
-    IterationManager.withReliableDir(g.spark, reliableDirV)
-
   /** The driver tail (docs/THRESHOLDS.md row 2) SIMULATES the
    * distributed algorithm (trim fixpoint → max-color fixpoint → root
    * sweeps → peel, capped at maxIter outer rounds) rather than
@@ -50,9 +47,9 @@ class StronglyConnectedComponents(g: GraphFrame) extends LocalTail {
     gate(e0)(runLocal(iv, _))(runDistributed(iv, _))
   }
 
-  private def runDistributed(iv: DataFrame, e0: DataFrame): DataFrame = {
-    val remMgr = newMgr()
-    val reMgr = newMgr()
+  private def runDistributed(iv: DataFrame, e0: DataFrame): DataFrame =
+      IterationManager.scoped(g.spark, reliableDirV) { remMgr =>
+    val reMgr = remMgr.sub()
     var rem = remMgr.persistOnly(iv.select(col("vid")))
     var re = reMgr.persistOnly(e0)
     val assignedParts = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
@@ -105,7 +102,7 @@ class StronglyConnectedComponents(g: GraphFrame) extends LocalTail {
       // Empty frontier == fixpoint, so the loop needs ONE frontier-sized
       // probe per round instead of a full-table checksum, and each round
       // joins only frontier-adjacent edges rather than the whole edge set.
-      val cmgr = newMgr()
+      val cmgr = remMgr.sub()
       var colors = cmgr.cycle(
         rem.select(col("vid"), col("vid").as("color"), lit(true).as("_chg")), 0)
       var it = 1
@@ -135,15 +132,13 @@ class StronglyConnectedComponents(g: GraphFrame) extends LocalTail {
       // analyzed plan per hop — exponential analysis time/heap on any
       // SCC with diameter over ~10 (a 12-cycle OOM'd an 8g driver on
       // plan strings before this; dense test graphs never hit it).
-      val bmgr = newMgr()
+      val bmgr = remMgr.sub()
       val sameColorRevP = bmgr.persistOnly(sameColorRev)
       // interval 6: sweep plans only double per hop, so 2^6 plan nodes
       // between cuts stays trivial while short sweeps (dense graphs
       // converge in 2-3 hops) pay zero mid-loop checkpoint jobs
-      val fmgr = IterationManager.withReliableDir(g.spark, reliableDirV,
-        checkpointInterval = 6)
-      val rmgr = IterationManager.withReliableDir(g.spark, reliableDirV,
-        checkpointInterval = 6)
+      val fmgr = remMgr.sub(interval = 6)
+      val rmgr = remMgr.sub(interval = 6)
       var reached = rmgr.cycle(
         colorsP.filter(col("vid") === col("color")).select(col("vid"), col("color")), 0)
       var frontier = reached
@@ -163,11 +158,11 @@ class StronglyConnectedComponents(g: GraphFrame) extends LocalTail {
         }
         bIt += 1
       }
-      // rmgr.finish: `part` is a rename-only projection of `reached` —
-      // persist+close would let rmgr's close uncache it via sameResult
-      // (see IterationManager.finish); the cut also detaches it from the
-      // fmgr/bmgr frames closed below. Released eagerly at the end.
-      val part = rmgr.finish(
+      // kept, not persisted: `part` is a rename-only projection of
+      // `reached`, so rmgr's close would uncache it via sameResult (see
+      // IterationManager.finish); the cut also detaches it from the
+      // sweep frames closed below
+      val part = remMgr.keep(
         reached.select(col("vid"), col("color").as("component")))
       assignedParts += part
       remRound += 1; reRound += 1
@@ -177,20 +172,17 @@ class StronglyConnectedComponents(g: GraphFrame) extends LocalTail {
           .join(part.select(col("vid").as("dst")), Seq("dst"), "left_anti")
           .select("src", "dst"),
         reRound)
-      cmgr.close(); bmgr.close(); fmgr.close()
+      cmgr.close(); bmgr.close(); fmgr.close(); rmgr.close()
       outer += 1
       }
     }
 
     val assigned = assignedParts.reduceOption(_ unionAll _)
       .getOrElse(iv.limit(0).select(col("vid"), col("vid").as("component")))
-    val out = remMgr.finish(g.vertices.join(
+    remMgr.finish(g.vertices.join(
       iv.join(assigned, Seq("vid"), "left_outer")
         .select(col(ID), coalesce(col("component"), col("vid")).as("component")),
       Seq(ID), "left_outer"))
-    reMgr.close()
-    assignedParts.foreach(IterationManager.release)
-    out
   }
 
   /** Driver tail: simulates the exact distributed schedule on the

@@ -149,9 +149,10 @@ class TriangleCount(g: GraphFrame) {
   }
 
   def run(): DataFrame = {
-    if (algorithmV == "approx") return runApprox(lgNomEntriesV)
-    val spark = g.vertices.sparkSession
-    val mgr = IterationManager.withReliableDir(spark, None)
+    if (algorithmV == "approx") runApprox(lgNomEntriesV) else runExact()
+  }
+
+  private def runExact(): DataFrame = IterationManager.scoped(g.spark) { mgr =>
     val canon = mgr.persistOnly(canonical)
     val deg = canon.select(explode(array(col(SRC), col(DST))).as(ID))
       .groupBy(ID).agg(count(lit(1)).as("_tc_deg"))

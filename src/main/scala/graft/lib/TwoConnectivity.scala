@@ -213,14 +213,12 @@ class TwoConnectivity(g: GraphFrame) extends LocalTail {
 
   // ---------------------------------------------------------- distributed
 
-  private def runDistributed(und: DataFrame,
-      modes: Set[Mode.Value]): Map[Mode.Value, DataFrame] = {
-    val spark = g.vertices.sparkSession
-    // one manager PER evolving frame: a cycle() frees the manager's older
+  private def runDistributed(und: DataFrame, modes: Set[Mode.Value]): Map[Mode.Value, DataFrame] =
+      IterationManager.scoped(g.spark) { mgr =>
+    // one queue PER evolving frame: a cycle() frees the queue's older
     // frames, so dist and anc cycling through one queue would free each
     // other's live state (CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND)
-    val mgrD = IterationManager.withReliableDir(spark, None)
-    val mgr = IterationManager.withReliableDir(spark, None)
+    val mgrD = mgr.sub()
     val adj = mgr.persistLazy(
       und.select(col("ea").as("u"), col("eb").as("v"))
         .unionByName(und.select(col("eb").as("u"), col("ea").as("v"))))
@@ -397,10 +395,8 @@ class TwoConnectivity(g: GraphFrame) extends LocalTail {
     }.toMap
 
     // every readout is cut/materialized self-contained BEFORE the shared
-    // state is freed — finishAll closes mgr after the last cut
+    // state is freed — finishAll closes mgr (and mgrD) after the last cut
     val keys = readouts.keys.toSeq
-    val cut = mgr.finishAll(keys.map(readouts))
-    mgrD.close()
-    keys.zip(cut).toMap
+    keys.zip(mgr.finishAll(keys.map(readouts))).toMap
   }
 }

@@ -168,7 +168,8 @@ object Similarity {
    * V×L rows, with a lineage cut per round. */
   def labelSpread(df: DataFrame, idCol: String, vecCol: String,
       labelCol: String, k: Int = 5, rounds: Int = 3,
-      seedFraction: Double = 0.5, seed: Long = 42L): DataFrame = {
+      seedFraction: Double = 0.5, seed: Long = 42L): DataFrame =
+      graft.lib.IterationManager.scoped(df.sparkSession) { mgr =>
     require(seedFraction >= 0 && seedFraction <= 1,
       s"seedFraction must be in [0,1]: $seedFraction")
     require(rounds >= 1, s"rounds must be >= 1: $rounds")
@@ -180,7 +181,6 @@ object Similarity {
     }
     val isSeed = conv(substring(md5(concat_ws("|", lit(seed),
       col(idCol).cast("string"))), 1, 4), 16, 10).cast("int") < lit(t)
-    val mgr = new graft.lib.IterationManager(2)
     val undP = mgr.persistOnly(und)
     // r15 round restructure: seeds keep their INITIAL label and non-seeds
     // are recomputed from scratch each round (not sticky), so the new

@@ -124,7 +124,7 @@ class RandomWalks(g: GraphFrame) {
     conv(substring(md5(concat_ws("|", cols: _*)), 1, 15), 16, 10).cast("long")
 
   /** One row per walk: (walk_id: string, random_walk: array<idType>). */
-  def run(): DataFrame = {
+  def run(): DataFrame = IterationManager.scoped(g.spark) { mgr =>
     val idIsLong = g.vertices.schema(ID).dataType ==
       org.apache.spark.sql.types.LongType
     val sampler =
@@ -143,7 +143,7 @@ class RandomWalks(g: GraphFrame) {
         .as("_rw_nbrs"))
     // weighted mode: align a weights array to the sampled neighbor order
     // (posexplode → per-(v, nbr) summed edge weight → re-sort by position)
-    val nbrs = (weightColV match {
+    val nbrs = mgr.persistLazy((weightColV match {
       case None => nbrsBase
       case Some(wc) =>
         val wcol = col(graft.GraphFrame.quoteName(wc)).cast("double")
@@ -164,8 +164,7 @@ class RandomWalks(g: GraphFrame) {
             transform(col("_ps"), x => coalesce(x.getField("_ew"), lit(0.0)))
               .as("_rw_wts"))
     })
-      .repartition(col("_rw_v"))
-      .persist()
+      .repartition(col("_rw_v")))
 
     val (numBatches, batchSize) = (numBatchesV, batchSizeV) match {
       case (Some(n), Some(b)) => (n, b)
@@ -176,7 +175,6 @@ class RandomWalks(g: GraphFrame) {
     require(startBatchV == 1 || tmpPrefixV.nonEmpty,
       "setStartingFromBatch needs setTemporaryPrefix (state is read from its batches)")
 
-    val mgr = IterationManager.withReliableDir(g.spark, None)
     // n2v needs the PREVIOUS vertex in state (one extra neighbor join per
     // step); pure weighted bias reads the aligned weights array off the
     // already-joined neighbor frame — no prev tracking, no second join
@@ -287,9 +285,7 @@ class RandomWalks(g: GraphFrame) {
         state = spark.read.parquet(batchPath(batch))
       }
     }
-    val out = mgr.finish(state.select(col("walk_id"), col("random_walk")))
-    nbrs.unpersist(false)
-    out
+    mgr.finish(state.select(col("walk_id"), col("random_walk")))
   }
 
   private def spark = g.spark

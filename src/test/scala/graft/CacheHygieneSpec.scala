@@ -223,27 +223,34 @@ class CacheHygieneSpec extends TestBase with TailCases {
     else Some(s"${c.name}: RDDs ${rdds.toSeq.sorted}, cache entries left: $entries")
   }
 
-  // The distributed centrality bodies cut one frame per level and per
-  // fixpoint round; a join that throws mid-search must release every cut
-  // made so far, not only the gate's pin. The failure sits in one edge's
-  // dst, so it fires in the level-1 join, after the level-0 cut.
-  test("distributed centralities release their level frames when a level join throws") {
-    val centrality = Seq("betweenness", "closeness", "eccentricity")
-    val leaks = tailCases.filter(c => centrality.exists(c.name.startsWith))
-      .flatMap(leftAfterDstError(_, "level failure"))
-    assert(leaks.isEmpty, "left level frames after a failed join")
-  }
+  /** Iterative calls without a driver tail, in the shape of a tail case:
+   * only randomized contraction reads the threshold. */
+  private val iterativeCases: Seq[TailCase] = Seq(
+    TailCase("shortestPaths", Nil, (g, _) => g.shortestPaths.landmarks(Seq("a")).run()),
+    TailCase("bfs", Nil,
+      (g, _) => g.bfs.fromExpr(col("id") === "a").toExpr(col("id") === "zz").run()),
+    TailCase("triangleCount", Nil, (g, _) => g.triangleCount.run()),
+    TailCase("kTruss", Nil, (g, _) => g.kTruss.run()),
+    TailCase("randomized contraction", Nil,
+      (g, t) => g.connectedComponents.setAlgorithm("randomized_contraction")
+        .setSmallGraphThreshold(t).run()),
+    TailCase("pregel", Nil,
+      (g, _) => g.pregel
+        .withVertexColumn("hops", lit(0L), coalesce(lib.Pregel.msg, col("hops")))
+        .sendMsgToDst(lib.Pregel.src("hops") + 1L)
+        .aggMsgs(max(lib.Pregel.msg))
+        .setMaxIter(3)
+        .run()))
 
-  // The chained-round loops (IterationManager.chained) cut the initial
-  // state before the first round reads an edge, so a failure in one
-  // edge's dst fires in the first chunk's cut, after that initial cut.
-  // NeighborhoodFunction likewise cuts the vertex sketches first, so the
-  // failure fires in the round-1 cut, with the edge frame pinned.
-  for (name <- Seq("hits", "katz", "eigenvector", "salsa", "independentCascade",
-      "temporalReachability", "neighborhoodFunction"))
-    test(s"$name releases its round cuts when a round throws") {
-      val leak = leftAfterDstError(tailCases.find(_.name == name).get, "round failure")
-      assert(leak.isEmpty, s"left round frames after a failed round: $leak")
+  // Every distributed iterative body releases everything it pinned when a
+  // job fails mid-iteration: round cuts, kept results of earlier rounds
+  // and side frames, not only the gate's pin. The failure sits in one
+  // edge's dst, so it fires in the first job that reads that edge, after
+  // the body has cut or pinned its first frames.
+  for (c <- tailCases ++ iterativeCases)
+    test(s"${c.name} releases its iteration frames when a round throws") {
+      val leak = leftAfterDstError(c, "round failure")
+      assert(leak.isEmpty, s"left frames pinned after a failed round: $leak")
     }
 
   // r15 (ADVICE item): hostRank's host-edge pin is operator-internal —

@@ -57,7 +57,14 @@ class JobBudgetSpec extends TestBase with SparkEvents {
       Seq(GraphFrame.fromEdges(friends.edges).connectedComponents.run())),
     // the star-contraction rounds, which the tail above skips
     ("connectedComponents rounds", 39, () =>
-      Seq(friends.connectedComponents.setSmallGraphThreshold(0).run())))
+      Seq(friends.connectedComponents.setSmallGraphThreshold(0).run())),
+    // distributed bodies whose round results are kept cuts
+    ("maximalIndependentSet rounds", 31, () =>
+      Seq(friends.maximalIndependentSet.setHashMode("md5").setSmallGraphThreshold(0).run())),
+    ("greedyColoring rounds", 70, () =>
+      Seq(friends.greedyColoring.setHashMode("md5").setSmallGraphThreshold(0).run())),
+    ("stronglyConnectedComponents rounds", 91, () =>
+      Seq(friends.stronglyConnectedComponents.maxIter(3).setSmallGraphThreshold(0).run())))
 
   for ((call, budget, run) <- budgets)
     test(s"$call runs at most $budget Spark jobs") {
