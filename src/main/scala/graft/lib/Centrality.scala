@@ -305,8 +305,9 @@ private[lib] sealed abstract class PathCentrality(g: GraphFrame, op: String)
   /** The driver tails' join-back of their score maps: a vertex absent
    * from a map scores 0 there. */
   protected def joinLocal(scores: (String, collection.Map[Any, Double])*): DataFrame =
-    LocalTail.joinBack(g, scores.flatMap(_._2.keys).distinct.toArray.sortBy(String.valueOf(_)),
-      scores.map { case (name, m) => (name, (v: Any) => m.getOrElse(v, 0.0), 0.0) })
+    LocalTail.joinBack(g, scores.flatMap(_._2.keys).distinct.map(v =>
+        Row.fromSeq(v +: scores.map(_._2.getOrElse(v, 0.0)))),
+      scores.map(s => LocalTail.score(s._1, 0.0)))(vertexIdsFor(g))
 }
 
 /** Brandes betweenness centrality — see [[MultiSourceBFS]] for the

@@ -3,7 +3,7 @@ package graft.lib
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{ByteType, DataType, DecimalType, IntegerType, LongType,
-  ShortType, StructField, StructType}
+  ShortType}
 import graft.GraphFrame
 
 /**
@@ -27,9 +27,9 @@ import graft.GraphFrame
  * `fromEdges` endpoint set. The tail mints each vertex row's surrogate as
  * [[GraphFrame.indexedVertices]] does, unions the edges' surrogates with
  * the rounds' rules (see `runTwoPhase`) and labels each component with its
- * minimum surrogate, so it returns the rounds' exact rows. On the
- * `fromEdges` endpoint set its result is a local relation that reads no
- * input; otherwise it is that relation broadcast-joined onto the vertices.
+ * minimum surrogate, so it returns the rounds' exact rows, through
+ * [[LocalTail.joinBack]] (on the `fromEdges` endpoint set a local relation
+ * that reads no input).
  * The rounds finish on the driver too once their remainder fits.
  *
  * Output: original vertices + `component: long` (surrogate Long ids are
@@ -113,12 +113,12 @@ class ConnectedComponents(g: GraphFrame) extends LocalTail {
   private def runTwoPhase(): DataFrame = {
     val probe = g.edges.select(col(SRC), col(DST))
     val idType = g.vertices.schema(ID).dataType
-    lazy val endpointsOnly = LocalTail.verticesAreEndpoints(g)
     // the gate's collect fills the edges; `idsFit` then reads every vertex
     // row's id, from those edges or with one bounded collect
     var ids = Option.empty[Array[Any]]
     def idsFit(endpoints: => Array[Any]): Boolean = {
-      ids = LocalTail.vertexIdsUpTo(g, idType, smallGraphThreshold, endpointsOnly)(endpoints)
+      ids = LocalTail.vertexIdsUpTo(g, idType, smallGraphThreshold,
+        LocalTail.verticesAreEndpoints(g))(endpoints)
       ids.isDefined
     }
     if (g.hasIntegralIdType) {
@@ -129,8 +129,7 @@ class ConnectedComponents(g: GraphFrame) extends LocalTail {
         edges = longEdges(p); edges
       } { _ =>
         labelLocally(ids.get, ids.get.map { case n: Number => n.longValue; case _ => 0L },
-          edges.iterator.filter(e => e.nulls == 0 && e.src != e.dst).map(e => (e.src, e.dst)),
-          endpointsOnly)
+          edges.iterator.filter(e => e.nulls == 0 && e.src != e.dst).map(e => (e.src, e.dst)))
       }(_ => runDistributed())
     } else {
       // string ids whose edges have their type: the rounds join the edges
@@ -148,7 +147,7 @@ class ConnectedComponents(g: GraphFrame) extends LocalTail {
         val sursOf = v.indices.filter(v(_) != null).groupMap(v(_))(sur(_))
         def of(id: Any) = sursOf.getOrElse(id, Nil)
         labelLocally(v, sur, for (r <- rows.iterator; s <- of(r.get(0)); d <- of(r.get(1))
-          if s != d) yield (s, d), endpointsOnly)
+          if s != d) yield (s, d))
       }(_ => runDistributed())
     }
   }
@@ -156,19 +155,14 @@ class ConnectedComponents(g: GraphFrame) extends LocalTail {
   /** Driver tail: union-find over the surrogate `pairs` with min-surrogate
    * roots, the labels the distributed fixpoint produces; a vertex row no
    * edge touches keeps its own surrogate `sur(i)` and a null id gets a
-   * null component. On the `fromEdges` endpoint set (`endpointsOnly`) the
-   * local relation of `(id, component)` rows is the result and reads no
-   * input; otherwise it is broadcast-joined onto the vertex table, as the
-   * rounds' labels are. */
-  private def labelLocally(ids: Array[Any], sur: Array[Long], pairs: Iterator[(Long, Long)],
-      endpointsOnly: Boolean): DataFrame = {
+   * null component. The `(id, component)` rows of every vertex row go back
+   * through [[LocalTail.joinBack]]. */
+  private def labelLocally(ids: Array[Any], sur: Array[Long],
+      pairs: Iterator[(Long, Long)]): DataFrame = {
     val labels = UnionFind.minLabels(pairs, Ordering.Long.on[Any](_.asInstanceOf[Long])).toMap
-    val rows = ids.indices.map { i =>
+    LocalTail.joinBack(g, ids.indices.map { i =>
       Row(ids(i), if (ids(i) == null) null else labels.getOrElse(sur(i), sur(i)))
-    }
-    val local = g.spark.createDataFrame(java.util.Arrays.asList(rows: _*),
-      StructType(Seq(g.vertices.schema(ID), StructField("component", LongType))))
-    if (endpointsOnly) local else g.vertices.join(broadcast(local), Seq(ID), "left_outer")
+    }, Seq(LocalTail.Out("component", LongType, lit(null))))(Some(ids))
   }
 
   /** The star-contraction rounds from the canonical edge list. */

@@ -1,6 +1,6 @@
 package graft.lib
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 import graft.GraphFrame
 
@@ -64,7 +64,7 @@ class Eigenvector(g: GraphFrame) extends LocalTail {
     // cut with no convergence probe; the guard max / final sup-norm ride
     // the cut's own job — zero separate driver actions in the loop
     var norm = 0.0
-    new IterationManager().chained(
+    IterationManager.chained(
       g.vertices.select(col(ID), lit(1.0).as("x")), maxIterV,
       observe = _ => Seq(max(abs(col("x")))),
       // the every-8th-round guard (same bound, cadence and rescale rule
@@ -113,7 +113,7 @@ class Eigenvector(g: GraphFrame) extends LocalTail {
       }
     }
     val norm = vids.iterator.map(v => math.abs(x(v))).foldLeft(0.0)(math.max)
-    LocalTail.joinBack(g, vids, Seq(
-      ("eigenvector", (v: Any) => if (norm > 0) x(v) / norm else 0.0, 0.0)))
+    LocalTail.joinBack(g, vids.map(v => Row(v, if (norm > 0) x(v) / norm else 0.0)),
+      Seq(LocalTail.score("eigenvector", 0.0)))(vertexIdsFor(g, Some(e)))
   }
 }

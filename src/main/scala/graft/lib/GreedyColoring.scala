@@ -1,8 +1,9 @@
 package graft.lib
 
 import scala.collection.mutable
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.IntegerType
 import graft.GraphFrame
 
 /**
@@ -67,8 +68,14 @@ class GreedyColoring(g: GraphFrame) extends LocalTail {
 
   private def runDistributed(und: DataFrame): DataFrame = IterationManager.scoped(g.spark) { mgr =>
     // every loop-carried frame is kept, not cycled: color boundaries
-    // re-read frames from many rounds back (uncolored, per-round winners)
-    var uncolored = mgr.keep(g.vertices.select(ID))
+    // re-read frames from many rounds back (uncolored, per-round winners).
+    // Pools and uncolored sets are kept with their row count observed on
+    // the cut's own job: no separate emptiness probe
+    def keep(df: DataFrame): (DataFrame, Long) = {
+      val (c, Seq(n)) = mgr.keepObserved(df, Seq(count(lit(1))))
+      (c, n.asInstanceOf[Long])
+    }
+    var (uncolored, left) = keep(g.vertices.select(ID))
     val colorFrames = mutable.ArrayBuffer.empty[DataFrame]
 
     // hash-only priority, deliberately WITHOUT an id tie-break: a winner
@@ -82,11 +89,11 @@ class GreedyColoring(g: GraphFrame) extends LocalTail {
       else xxhash64(c, lit(seedV), lit(color), lit(round))
 
     var color = 0
-    while (color < maxColorsV && !uncolored.isEmpty) {
-      var pool = uncolored
+    while (color < maxColorsV && left > 0) {
+      var (pool, inPool) = (uncolored, left)
       val winners = mutable.ArrayBuffer.empty[DataFrame]
       var round = 0
-      while (round < maxIterV && !pool.isEmpty) {
+      while (round < maxIterV && inPool > 0) {
         val er = und
           .join(pool.select(col(ID).as(SRC)), Seq(SRC), "left_semi")
           .join(pool.select(col(ID).as(DST)), Seq(DST), "left_semi")
@@ -102,16 +109,18 @@ class GreedyColoring(g: GraphFrame) extends LocalTail {
           .unionAll(er.join(w.select(col(ID).as(DST)), Seq(DST), "left_semi")
             .select(col(SRC).as(ID)))
           .distinct()
-        pool = mgr.keep(
+        val (p, n) = keep(
           pool.join(w, Seq(ID), "left_anti").join(nbrOfW, Seq(ID), "left_anti"))
+        pool = p; inPool = n
         round += 1
       }
       val colored = winners.reduce(_ unionAll _).withColumn("color", lit(color))
       colorFrames += colored
-      uncolored = mgr.keep(uncolored.join(colored.select(ID), Seq(ID), "left_anti"))
+      val (u, n) = keep(uncolored.join(colored.select(ID), Seq(ID), "left_anti"))
+      uncolored = u; left = n
       color += 1
     }
-    if (!uncolored.isEmpty)
+    if (left > 0)
       colorFrames += uncolored.withColumn("color", lit(-1))
     mgr.finish(g.vertices.join(colorFrames.reduce(_ unionAll _), Seq(ID), "left_outer"))
   }
@@ -153,8 +162,7 @@ class GreedyColoring(g: GraphFrame) extends LocalTail {
       color += 1
     }
     for (v <- uncolored) colorOf(v) = -1
-    LocalTail.joinBack(g, ids,
-      Seq(("colorD", (v: Any) => colorOf.getOrElse(v, 0).toDouble, 0.0)))
-      .withColumn("color", col("colorD").cast("int")).drop("colorD")
+    LocalTail.joinBack(g, ids.map(v => Row(v, colorOf(v))),
+      Seq(LocalTail.Out("color", IntegerType, lit(0))))(Some(ids))
   }
 }

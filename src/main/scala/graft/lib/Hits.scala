@@ -1,6 +1,6 @@
 package graft.lib
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 import graft.GraphFrame
 
@@ -61,7 +61,7 @@ class Hits(g: GraphFrame) extends LocalTail {
     // i.e. a 1e13-degree vertex — beyond any real edge count. Its timing
     // is part of the float contract.
     var finalNorms: Option[(Double, Double)] = None
-    new IterationManager().chained(
+    IterationManager.chained(
       g.vertices.select(col(ID), lit(1.0).as("hub"), lit(1.0).as("authority")),
       maxIterV,
       observe = round =>
@@ -147,8 +147,9 @@ class Hits(g: GraphFrame) extends LocalTail {
     }
     val hNorm = math.sqrt(vids.iterator.map(v => hub(v) * hub(v)).sum)
     val aNorm = math.sqrt(vids.iterator.map(v => auth(v) * auth(v)).sum)
-    LocalTail.joinBack(g, vids, Seq(
-      ("hub", (v: Any) => if (hNorm > 0) hub(v) / hNorm else 0.0, 0.0),
-      ("authority", (v: Any) => if (aNorm > 0) auth(v) / aNorm else 0.0, 0.0)))
+    LocalTail.joinBack(g, vids.map(v => Row(v, if (hNorm > 0) hub(v) / hNorm else 0.0,
+        if (aNorm > 0) auth(v) / aNorm else 0.0)),
+      Seq(LocalTail.score("hub", 0.0), LocalTail.score("authority", 0.0)))(
+      vertexIdsFor(g, Some(e)))
   }
 }

@@ -1,7 +1,8 @@
 package graft.lib
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.IntegerType
 import graft.GraphFrame
 
 /**
@@ -64,7 +65,7 @@ class IndependentCascade(g: GraphFrame) extends LocalTail {
     // the activation round is the unique live-edge BFS level, so levels
     // chain lazily per cut; the last level's growth count rides the cut's
     // own job — no separate limit/count action
-    new IterationManager().chained(
+    IterationManager.chained(
       g.vertices.select(col(ID),
         when(col(ID).isInCollection(seeds), lit(0))
           .otherwise(lit(null).cast("int")).as("round")),
@@ -100,14 +101,7 @@ class IndependentCascade(g: GraphFrame) extends LocalTail {
         .distinct.filterNot(round.contains)
       frontier.foreach(v => round(v) = r)
     }
-    val spark = g.vertices.sparkSession
-    val df = spark.createDataFrame(
-      spark.sparkContext.parallelize(
-        round.toSeq.map { case (k, v) => org.apache.spark.sql.Row(k, v) }, 1),
-      org.apache.spark.sql.types.StructType(Seq(
-        g.vertices.schema(ID).copy(name = ID),
-        org.apache.spark.sql.types.StructField("round",
-          org.apache.spark.sql.types.IntegerType))))
-    g.vertices.select(col(ID)).join(broadcast(df), Seq(ID), "left_outer")
+    LocalTail.joinBack(g, round.map { case (v, r) => Row(v, r) },
+      Seq(LocalTail.Out("round", IntegerType, lit(null))))(vertexIdsFor(g)).select(ID, "round")
   }
 }

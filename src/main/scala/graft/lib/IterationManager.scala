@@ -29,7 +29,7 @@ import org.apache.spark.storage.StorageLevel
  * loop-carried frame gets its own queue from `mgr.sub`. The body hands
  * its result out through `mgr.finish`, which cuts it self-contained and
  * then frees everything else. Fixed-step loops hand the whole loop to
- * [[chained]].
+ * [[IterationManager.chained]].
  */
 private[graft] object IterationManager {
   /** Rounds [[IterationManager.chained]] chains lazily per lineage cut.
@@ -105,11 +105,53 @@ private[graft] object IterationManager {
   def scoped[T](spark: org.apache.spark.sql.SparkSession, dir: Option[String] = None,
       checkpointInterval: Int = 2,
       storageLevel: StorageLevel = StorageLevel.MEMORY_AND_DISK)(
-      body: IterationManager => T): T =
-    closing(withReliableDir(spark, dir, checkpointInterval, storageLevel))(body)
-
-  private def closing[T](mgr: IterationManager)(body: IterationManager => T): T =
+      body: IterationManager => T): T = {
+    val mgr = withReliableDir(spark, dir, checkpointInterval, storageLevel)
     try body(mgr) finally mgr.close()
+  }
+
+  /** The chained-round loop of the fixed-step iterative operators, run
+   * inside [[scoped]] (so it honors `spark.graft.useLocalCheckpoints`):
+   * cut `init`, then apply `step(state, r)` for rounds r = 1 to
+   * `maxRounds`, chaining [[RoundsPerCut]] rounds lazily per lineage cut
+   * (the last chunk is clamped to `maxRounds`). Each cut observes
+   * `observe(r)` on its own job (a plain cut when empty), where r is the
+   * round the chunk ended on; `after(cut, r, values)` then returns the
+   * state to continue from (the cut, or a rescaled projection of it) or
+   * None to stop at the cut. Returns `finish(result(state))`; when any
+   * round, cut or the result throws, every tracked frame is released
+   * before the exception propagates. Observed values arrive as doubles,
+   * 0.0 for a null (an empty frame's aggregate). */
+  def chained(init: DataFrame, maxRounds: Int,
+      observe: Int => Seq[Column] = _ => Nil,
+      after: (DataFrame, Int, Seq[Double]) => Option[DataFrame] = (s, _, _) => Some(s),
+      result: DataFrame => DataFrame = identity)(
+      step: (DataFrame, Int) => DataFrame): DataFrame =
+    scoped(init.sparkSession) { mgr =>
+      var state = mgr.cycleAt(init, 0, force = true)
+      var round = 0
+      var cut = 0
+      var going = true
+      while (going && round < maxRounds) {
+        val last = math.min(round + RoundsPerCut, maxRounds)
+        var cur = state
+        for (r <- round + 1 to last) cur = step(cur, r)
+        round = last
+        cut += 1
+        val metrics = observe(round)
+        val (next, values) =
+          if (metrics.isEmpty) (mgr.cycleAt(cur, cut, force = true), Nil)
+          else mgr.cycleObserved(cur, cut, metrics)
+        after(next, round, values.map {
+          case n: java.lang.Number => n.doubleValue()
+          case _ => 0.0
+        }) match {
+          case Some(s) => state = s
+          case None => state = next; going = false
+        }
+      }
+      mgr.finish(result(state))
+    }
 
   /** Eagerly free the block-manager storage behind a frame returned from
    * [[IterationManager.finish]] (its `LogicalRDD` blocks). Call only when
@@ -186,13 +228,20 @@ private[graft] class IterationManager(
    * observations listen on — probed on Spark 4.1 before relying on it
    * here. */
   def cycleObserved(df: DataFrame, round: Int,
-      metrics: Seq[Column]): (DataFrame, Seq[Any]) = {
-    require(metrics.nonEmpty, "cycleObserved needs at least one metric")
-    val obs = org.apache.spark.sql.Observation(s"graft_cycle_${round}_" +
-      java.util.UUID.randomUUID().toString)
+      metrics: Seq[Column]): (DataFrame, Seq[Any]) =
+    observed(df, metrics)(cycleAt(_, round, force = true))
+
+  /** [[keep]] with metrics observed on the cut's own job, as
+   * [[cycleObserved]] does for [[cycle]]. */
+  def keepObserved(df: DataFrame, metrics: Seq[Column]): (DataFrame, Seq[Any]) =
+    observed(df, metrics)(keep)
+
+  private def observed(df: DataFrame, metrics: Seq[Column])(
+      materialize: DataFrame => DataFrame): (DataFrame, Seq[Any]) = {
+    require(metrics.nonEmpty, "an observed cut needs at least one metric")
+    val obs = org.apache.spark.sql.Observation("graft_cut_" + java.util.UUID.randomUUID())
     val named = metrics.zipWithIndex.map { case (m, i) => m.as(s"_m$i") }
-    val c = cycleAt(df.observe(obs, named.head, named.tail: _*), round,
-      force = true)
+    val c = materialize(df.observe(obs, named.head, named.tail: _*))
     val got = obs.get
     (c, metrics.indices.map(i => got(s"_m$i")))
   }
@@ -204,48 +253,6 @@ private[graft] class IterationManager(
    * dropped once a newer frame has actually been materialized. */
   def cycle(df: DataFrame, round: Int): DataFrame =
     cycleAt(df, round, force = false)
-
-  /** The chained-round loop of the fixed-step iterative operators: cut
-   * `init`, then apply `step(state, r)` for rounds r = 1 to `maxRounds`,
-   * chaining [[IterationManager.RoundsPerCut]] rounds lazily per lineage
-   * cut (the last chunk is clamped to `maxRounds`). Each cut observes
-   * `observe(r)` on its own job (a plain cut when empty), where r is the
-   * round the chunk ended on; `after(cut, r, values)` then returns the
-   * state to continue from (the cut, or a rescaled projection of it) or
-   * None to stop at the cut. Returns `finish(result(state))`; when any
-   * round, cut or the result throws, every tracked frame is released
-   * before the exception propagates. Observed values arrive as doubles,
-   * 0.0 for a null (an empty frame's aggregate). */
-  def chained(init: DataFrame, maxRounds: Int,
-      observe: Int => Seq[Column] = _ => Nil,
-      after: (DataFrame, Int, Seq[Double]) => Option[DataFrame] = (s, _, _) => Some(s),
-      result: DataFrame => DataFrame = identity)(
-      step: (DataFrame, Int) => DataFrame): DataFrame =
-    IterationManager.closing(this) { _ =>
-      var state = cycleAt(init, 0, force = true)
-      var round = 0
-      var cut = 0
-      var going = true
-      while (going && round < maxRounds) {
-        val last = math.min(round + IterationManager.RoundsPerCut, maxRounds)
-        var cur = state
-        for (r <- round + 1 to last) cur = step(cur, r)
-        round = last
-        cut += 1
-        val metrics = observe(round)
-        val (next, values) =
-          if (metrics.isEmpty) (cycleAt(cur, cut, force = true), Nil)
-          else cycleObserved(cur, cut, metrics)
-        after(next, round, values.map {
-          case n: java.lang.Number => n.doubleValue()
-          case _ => 0.0
-        }) match {
-          case Some(s) => state = s
-          case None => state = next; going = false
-        }
-      }
-      finish(result(state))
-    }
 
   private def cycleAt(df: DataFrame, round: Int, force: Boolean): DataFrame = {
     val doCheckpoint = force ||

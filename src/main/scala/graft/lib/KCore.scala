@@ -1,7 +1,8 @@
 package graft.lib
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.IntegerType
 import graft.GraphFrame
 
 /**
@@ -19,7 +20,7 @@ import graft.GraphFrame
  * Output: `id, kcore: int` (+ original vertex attributes).
  */
 class KCore(g: GraphFrame) extends LocalTail {
-  import GraphFrame.ID
+  import GraphFrame.{ID, SRC, DST}
 
   private var maxIterV: Int = Int.MaxValue
 
@@ -29,15 +30,12 @@ class KCore(g: GraphFrame) extends LocalTail {
    * synchronous capped-h-index rounds with the same all-changed stop and
    * maxIter cap, so even a cap-truncated mid-convergence state matches
    * the distributed one. */
-  def run(): DataFrame = {
-    // undirected simple graph
-    val canon = g.edges
-      .filter(col(GraphFrame.SRC) =!= col(GraphFrame.DST))
-      .select(least(col(GraphFrame.SRC), col(GraphFrame.DST)).as(GraphFrame.SRC),
-        greatest(col(GraphFrame.SRC), col(GraphFrame.DST)).as(GraphFrame.DST))
-      .distinct()
-    gate(canon)(runLocal)(runDistributed)
-  }
+  def run(): DataFrame =
+    gate(g.edges.select(col(SRC), col(DST)))(runLocal)(e => runDistributed(
+      // undirected simple graph
+      e.filter(col(SRC) =!= col(DST))
+        .select(least(col(SRC), col(DST)).as(SRC), greatest(col(SRC), col(DST)).as(DST))
+        .distinct()))
 
   private def runDistributed(canon: DataFrame): DataFrame = {
     val gU = GraphFrame(g.vertices, canon)
@@ -71,16 +69,18 @@ class KCore(g: GraphFrame) extends LocalTail {
   /** Driver tail: the same synchronous rounds — new core = min(own,
    * h-index of neighbors' sender-clamped cores), computed from the OLD
    * cores, until a round changes nothing or maxIter. Vertices touching
-   * no edge stay at core 0 via the join-back fill. */
-  private def runLocal(canon: DataFrame): DataFrame = {
+   * no edge stay at core 0 via the join-back fill. The undirected simple
+   * graph is built here from the collected edges: self-loops dropped,
+   * each neighbor once. */
+  private def runLocal(e: DataFrame): DataFrame = {
     import scala.collection.mutable
-    val (edges, vids) = LocalTail.collectGraph(canon, g)
+    val (edges, vids) = LocalTail.collectGraph(e, g)
     val valid = vids.toSet
-    val adj = mutable.HashMap.empty[Any, mutable.ArrayBuffer[Any]]
-    edges.iterator.filter { case (s, d) => valid(s) && valid(d) }.foreach {
+    val adj = mutable.HashMap.empty[Any, mutable.LinkedHashSet[Any]]
+    edges.iterator.filter { case (s, d) => s != d && valid(s) && valid(d) }.foreach {
       case (s, d) =>
-        adj.getOrElseUpdate(s, mutable.ArrayBuffer.empty) += d
-        adj.getOrElseUpdate(d, mutable.ArrayBuffer.empty) += s
+        adj.getOrElseUpdate(s, mutable.LinkedHashSet.empty) += d
+        adj.getOrElseUpdate(d, mutable.LinkedHashSet.empty) += s
     }
     def hIndex(values: Seq[Int]): Int = {
       val sorted = values.sorted(Ordering.Int.reverse)
@@ -108,8 +108,7 @@ class KCore(g: GraphFrame) extends LocalTail {
       core = next
       round += 1
     }
-    LocalTail.joinBack(g, vids,
-      Seq(("kcoreD", (v: Any) => core(v).toDouble, 0.0)))
-      .withColumn("kcore", col("kcoreD").cast("int")).drop("kcoreD")
+    LocalTail.joinBack(g, vids.map(v => Row(v, core(v))),
+      Seq(LocalTail.Out("kcore", IntegerType, lit(0))))(vertexIdsFor(g, Some(e)))
   }
 }

@@ -1,6 +1,6 @@
 package graft.lib
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 import graft.GraphFrame
 
@@ -36,7 +36,7 @@ class Katz(g: GraphFrame) extends LocalTail {
   private def runDistributed(e: DataFrame): DataFrame =
     // no convergence probe, no overflow guard — the series is
     // geometrically damped for sensible α
-    new IterationManager().chained(
+    IterationManager.chained(
       g.vertices.select(col(ID), lit(betaV).as("katz")), maxIterV,
       result = g.vertices.join(_, Seq(ID), "left_outer")) { (cur, _) =>
       val in = e.join(cur.select(col(ID).as(SRC), col("katz")), SRC)
@@ -66,6 +66,7 @@ class Katz(g: GraphFrame) extends LocalTail {
       vids.foreach(v => nx(v) = betaV + alphaV * in(v))
       x = nx
     }
-    LocalTail.joinBack(g, vids, Seq(("katz", (v: Any) => x(v), betaV)))
+    LocalTail.joinBack(g, vids.map(v => Row(v, x(v))), Seq(LocalTail.score("katz", betaV)))(
+      vertexIdsFor(g, Some(e)))
   }
 }

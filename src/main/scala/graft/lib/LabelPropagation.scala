@@ -1,6 +1,6 @@
 package graft.lib
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
 import graft.GraphFrame
 
@@ -99,15 +99,8 @@ class LabelPropagation(g: GraphFrame) extends LocalTail {
       label = next
     }
     // vertices touching no edge never receive mail: label = own id
-    val spark = g.vertices.sparkSession
-    val idField = g.vertices.schema(ID)
-    val schema = org.apache.spark.sql.types.StructType(Seq(
-      org.apache.spark.sql.types.StructField(ID, idField.dataType, nullable = true),
-      org.apache.spark.sql.types.StructField("label", idField.dataType, nullable = true)))
-    val rel: java.util.List[org.apache.spark.sql.Row] = java.util.Arrays.asList(
-      vids.map(v => org.apache.spark.sql.Row(v, label(v))): _*)
-    g.vertices
-      .join(broadcast(spark.createDataFrame(rel, schema)), Seq(ID), "left_outer")
-      .withColumn("label", coalesce(col("label"), col(ID)))
+    LocalTail.joinBack(g, vids.map(v => Row(v, label(v))),
+      Seq(LocalTail.Out("label", g.vertices.schema(ID).dataType, col(ID))))(
+      vertexIdsFor(g, Some(e)))
   }
 }

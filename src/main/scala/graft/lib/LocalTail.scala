@@ -1,6 +1,6 @@
 package graft.lib
 
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DataType, DoubleType, StructField, StructType}
 import org.apache.spark.scheduler.SparkListenerEvent
@@ -13,10 +13,12 @@ import graft.{GraftConf, GraphFrame}
  * small graph on the driver (docs/THRESHOLDS.md rows 1, 2, 2b, 11,
  * 12b-12e, 13, 22). Below a conf-settable EDGE threshold (0 disables),
  * per-round distributed supersteps are pure fixed scheduling overhead, so
- * the algorithm collects the graph once, iterates locally and
- * broadcast-joins the result back. The round-8 cadence experiment (see
- * IterationManager) showed this is the ONLY safe way to cut small-graph
- * latency: skipping lineage cuts instead blows up the analyzer.
+ * the algorithm collects the graph once, iterates locally and hands its
+ * per-vertex result back through [[LocalTail.joinBack]]: on a `fromEdges`
+ * graph the local relation itself, otherwise a broadcast join onto the
+ * vertex table. The round-8 cadence experiment (see IterationManager)
+ * showed this is the ONLY safe way to cut small-graph latency: skipping
+ * lineage cuts instead blows up the analyzer.
  *
  * Mixing this trait in gives a builder its `setSmallGraphThreshold` knob
  * and the one tail/distributed decision, [[gate]]: one bounded collect
@@ -108,6 +110,18 @@ trait LocalTail {
     val ord = UnionFind.sparkOrdering(idType)
     gate(probe, ord.isDefined, pinForDistributed, andIf)(tail(_, ord.get))(distributed)
   }
+
+  /** Every vertex id for [[LocalTail.joinBack]]'s local relation on a
+   * `fromEdges` graph. `rawProbe` is the tail's collected probe when it
+   * holds every edge row's `(src, dst)`: its endpoints, null included, are
+   * then the vertex ids and no Spark job runs. Otherwise one bounded
+   * collect reads at most t ids (None above t). */
+  protected def vertexIdsFor(g: GraphFrame, rawProbe: Option[DataFrame] = None)
+      : Option[Array[Any]] = {
+    val t = g.vertices.schema(GraphFrame.ID).dataType
+    LocalTail.vertexIdsUpTo(g, t, if (rawProbe.isDefined) Long.MaxValue else smallGraphThresholdV,
+      rawProbe.isDefined)(LocalTail.endpointsOf(rawProbe.get, t))
+  }
 }
 
 /** Posted on the listener bus (`SparkListener.onOtherEvent`) by every
@@ -159,8 +173,7 @@ private[lib] object LocalTail {
     // the type the semi-join compares in: the union type of src and dst
     val t = if (complete) g.vertices.schema(ID).dataType
       else e.select(col(SRC).as(ID)).union(e.select(col(DST).as(ID))).schema(ID).dataType
-    val eps = e.select(col(SRC).cast(t), col(DST).cast(t)).collect().iterator
-      .flatMap(_.toSeq).filter(_ != null).toArray.distinct
+    val eps = endpointsOf(e, t).filter(_ != null)
     val ids =
       if (complete) eps
       else g.vertices.select(col(ID)).join(broadcast(g.spark.createDataFrame(
@@ -168,6 +181,15 @@ private[lib] object LocalTail {
           StructType(Seq(StructField(ID, t))))), Seq(ID), "left_semi")
         .collect().map(_.get(0))
     ids.sortBy(String.valueOf(_))
+  }
+
+  /** The distinct `src`/`dst` values of the collected edges `e` in type
+   * `t`, null included: a `fromEdges` graph's vertex ids when `e` holds
+   * every edge row. */
+  def endpointsOf(e: DataFrame, t: DataType): Array[Any] = {
+    import GraphFrame.{SRC, DST}
+    e.select(col(SRC).cast(t), col(DST).cast(t)).collect().iterator
+      .flatMap(_.toSeq).toArray.distinct
   }
 
   /** Whether the vertex table's plan is the distinct endpoints of the edge
@@ -201,22 +223,45 @@ private[lib] object LocalTail {
   def collectGraph(e: DataFrame, g: GraphFrame): (Array[(Any, Any)], Array[Any]) =
     (collectEdges(e), endpointIds(e, g))
 
-  /** Local relation `(id, <scores...>)` with the graph's own id type,
-   * broadcast-joined back onto the full vertex table; `fill` supplies the
-   * closed-form score of vertices that touch no edge. */
-  def joinBack(g: GraphFrame, ids: Array[Any], scores: Seq[(String, Any => Double, Double)])
-      : DataFrame = {
+  /** One per-vertex column a driver tail hands back through [[joinBack]]:
+   * its name, its type, and the fill of every vertex row without a value
+   * (a vertex the tail did not score, a null id): `lit(0.0)` for a closed
+   * form, `col(ID)` for a label that defaults to the vertex itself,
+   * `lit(null)` for none. */
+  case class Out(name: String, dataType: DataType, fill: Column)
+
+  /** A double score column with a constant fill. */
+  def score(name: String, fill: Double): Out = Out(name, DoubleType, lit(fill))
+
+  /** The one way a driver tail's per-vertex result goes back onto the
+   * vertex table. `rows` are `Row(id, value per out...)` in the graph's id
+   * type, at most one per id except where the tail replays duplicate
+   * vertex rows (connected components); every value column becomes
+   * `coalesce(value, fill)`.
+   *
+   * On a graph whose vertex table is the `fromEdges` endpoint set
+   * ([[verticesAreEndpoints]]) with every vertex id known (`vertexIds`,
+   * evaluated only then), the result is the local relation itself: one
+   * row per vertex id, its values looked up in `rows` (none for a null
+   * id, which a join never matches). Consuming it runs no Spark job.
+   * Otherwise the local relation is broadcast-joined (`left_outer`) onto
+   * the full vertex table. Both give the same schema and rows. */
+  def joinBack(g: GraphFrame, rows: Iterable[Row], outs: Seq[Out])(
+      vertexIds: => Option[Array[Any]]): DataFrame = {
     import GraphFrame.ID
-    val spark: SparkSession = g.vertices.sparkSession
-    val idField = g.vertices.schema(ID)
-    val schema = StructType(StructField(ID, idField.dataType, nullable = true) +:
-      scores.map { case (n, _, _) => StructField(n, DoubleType, nullable = false) })
-    val rows: java.util.List[Row] = java.util.Arrays.asList(
-      ids.map(v => Row.fromSeq(v +: scores.map(_._2(v)))): _*)
-    var out = g.vertices.join(broadcast(spark.createDataFrame(rows, schema)),
-      Seq(ID), "left_outer")
-    for ((n, _, fill) <- scores)
-      out = out.withColumn(n, coalesce(col(n), lit(fill)))
-    out
+    val schema = StructType(g.vertices.schema(ID) +:
+      outs.map(o => StructField(o.name, o.dataType, nullable = true)))
+    def local(rs: Iterable[Row]): DataFrame =
+      g.spark.createDataFrame(java.util.Arrays.asList(rs.toSeq: _*), schema)
+    (if (verticesAreEndpoints(g)) vertexIds else None) match {
+      case Some(ids) =>
+        val byId = rows.iterator.filter(!_.isNullAt(0)).map(r => r.get(0) -> r.toSeq.tail).toMap
+        val none = outs.map(_ => null)
+        local(ids.map(v => Row.fromSeq(v +: byId.getOrElse(v, none))))
+          .select(col(ID) +: outs.map(o => coalesce(col(o.name), o.fill).as(o.name)): _*)
+      case None =>
+        outs.foldLeft(g.vertices.join(broadcast(local(rows)), Seq(ID), "left_outer"))(
+          (df, o) => df.withColumn(o.name, coalesce(col(o.name), o.fill)))
+    }
   }
 }

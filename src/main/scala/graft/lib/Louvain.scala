@@ -1,6 +1,6 @@
 package graft.lib
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
@@ -302,15 +302,7 @@ class Louvain(g: GraphFrame) extends LocalTail {
       }
     }
     // vertices touching no edge stay in their own community
-    val spark = g.vertices.sparkSession
-    val idField = g.vertices.schema(ID)
-    val schema = org.apache.spark.sql.types.StructType(Seq(
-      org.apache.spark.sql.types.StructField(ID, idField.dataType, nullable = true),
-      org.apache.spark.sql.types.StructField("community", idField.dataType, nullable = true)))
-    val rel: java.util.List[org.apache.spark.sql.Row] = java.util.Arrays.asList(
-      baseVids.map(v => org.apache.spark.sql.Row(v, assign(v))): _*)
-    g.vertices
-      .join(broadcast(spark.createDataFrame(rel, schema)), Seq(ID), "left_outer")
-      .withColumn("community", coalesce(col("community"), col(ID)))
+    LocalTail.joinBack(g, baseVids.map(v => Row(v, assign(v))),
+      Seq(LocalTail.Out("community", g.vertices.schema(ID).dataType, col(ID))))(vertexIdsFor(g))
   }
 }

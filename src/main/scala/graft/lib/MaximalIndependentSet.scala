@@ -1,7 +1,8 @@
 package graft.lib
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.BooleanType
 import graft.GraphFrame
 
 /**
@@ -48,12 +49,18 @@ class MaximalIndependentSet(g: GraphFrame) extends LocalTail {
   }
 
   private def runDistributed(und: DataFrame): DataFrame = IterationManager.scoped(g.spark) { mgr =>
-    var remaining = mgr.persistOnly(g.vertices.select(ID))
+    // each remaining set is cut with its row count observed on the cut's
+    // own job: no separate emptiness probe per round
+    def cut(df: DataFrame, round: Int): (DataFrame, Long) = {
+      val (c, Seq(n)) = mgr.cycleObserved(df, round, Seq(count(lit(1))))
+      (c, n.asInstanceOf[Long])
+    }
+    var (remaining, left) = cut(g.vertices.select(ID), 0)
     val undP = mgr.persistOnly(und)
     var mis: Option[DataFrame] = None
 
     var round = 0
-    while (round < maxIterV && remaining.take(1).nonEmpty) {
+    while (round < maxIterV && left > 0) {
       // hash-only priority, deliberately WITHOUT an id tie-break (same
       // rule as GreedyColoring): on a collision neither endpoint wins and
       // both retry next round with a different hash — what the local tail
@@ -79,9 +86,10 @@ class MaximalIndependentSet(g: GraphFrame) extends LocalTail {
         .unionAll(er.join(candP.select(col(ID).as(DST)), Seq(DST), "left_semi")
           .select(col(SRC).as(ID)))
         .distinct()
-      remaining = mgr.cycle(
+      val (r, n) = cut(
         remaining.join(candP, Seq(ID), "left_anti").join(nbrOfCand, Seq(ID), "left_anti"),
         round)
+      remaining = r; left = n
       round += 1
     }
     mgr.finish(mis.map(m => g.vertices.join(m, Seq(ID), "left_semi"))
@@ -119,14 +127,8 @@ class MaximalIndependentSet(g: GraphFrame) extends LocalTail {
       remaining --= drop
       round += 1
     }
-    // semi-join against the local winner set keeps vertex columns + types
-    val idField = g.vertices.schema(ID)
-    val schema = org.apache.spark.sql.types.StructType(Seq(
-      org.apache.spark.sql.types.StructField(ID, idField.dataType, nullable = true)))
-    val rel: java.util.List[org.apache.spark.sql.Row] = java.util.Arrays.asList(
-      mis.toSeq.sortBy(String.valueOf(_))
-        .map(v => org.apache.spark.sql.Row(v)): _*)
-    g.vertices.join(
-      broadcast(g.spark.createDataFrame(rel, schema)), Seq(ID), "left_semi")
+    // the vertex rows of the winners, with every vertex column
+    LocalTail.joinBack(g, mis.map(Row(_, true)), Seq(LocalTail.Out("_mis", BooleanType, lit(false))))(
+      Some(ids)).filter(col("_mis")).drop("_mis")
   }
 }

@@ -150,18 +150,8 @@ class MinimumSpanningForest(g: GraphFrame) extends LocalTail {
         else if (ord.compare(a1, a2) != 0) ord.lt(a1, a2)
         else ord.lt(b1, b2)
       }
-    val parent = scala.collection.mutable.HashMap.empty[Any, Any]
-    def find(x: Any): Any = {
-      var r = x
-      while (parent.getOrElse(r, r) != r) r = parent(r)
-      var c = x
-      while (parent.getOrElse(c, c) != c) { val n = parent(c); parent(c) = r; c = n }
-      r
-    }
-    val kept = rows.filter { case (a, b, _) =>
-      val (ra, rb) = (find(a), find(b))
-      if (ra == rb) false else { parent(ra) = rb; true }
-    }
+    val uf = new UnionFind(ord)
+    val kept = rows.filter { case (a, b, _) => uf.union(a, b) }
     val idType = e.schema("a").dataType
     val schema = StructType(Seq(StructField(SRC, idType), StructField(DST, idType),
       StructField("weight", DoubleType)))

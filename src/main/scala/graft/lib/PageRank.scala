@@ -1,6 +1,6 @@
 package graft.lib
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 import graft.GraphFrame
 
@@ -213,8 +213,8 @@ class PageRank(g: GraphFrame) extends LocalTail {
     }
 
     val fill = if (personalized) 0.0 else alpha
-    val ranks = LocalTail.joinBack(g, ids,
-      Seq(("pagerank", (v: Any) => rank(v), fill)))
+    val ranks = LocalTail.joinBack(g, ids.map(v => Row(v, rank(v))),
+      Seq(LocalTail.score("pagerank", fill)))(vertexIdsFor(g, Some(e)))
     val outDeg = weightColV match {
       case Some(w) => g.edges
         .groupBy(col(SRC).as(ID))

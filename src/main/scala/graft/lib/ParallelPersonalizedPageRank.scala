@@ -131,17 +131,9 @@ class ParallelPersonalizedPageRank(g: GraphFrame) extends LocalTail {
       }
     }
 
-    val idField = g.vertices.schema(ID)
-    val schema = T.StructType(Seq(
-      T.StructField(ID, idField.dataType, nullable = true),
-      T.StructField("pageranks", T.ArrayType(T.DoubleType, containsNull = true))))
-    val local: java.util.List[Row] = java.util.Arrays.asList(
-      ids.map(v => Row(v, rank(v).toSeq)): _*)
-    val spark = g.vertices.sparkSession
-    val zeros = array(Seq.fill(k)(lit(0.0)): _*)
-    val ranks = g.vertices
-      .join(broadcast(spark.createDataFrame(local, schema)), Seq(ID), "left_outer")
-      .withColumn("pageranks", coalesce(col("pageranks"), zeros))
+    val ranks = LocalTail.joinBack(g, ids.map(v => Row(v, rank(v).toSeq)),
+      Seq(LocalTail.Out("pageranks", T.ArrayType(T.DoubleType, containsNull = true),
+        array(Seq.fill(k)(lit(0.0)): _*))))(vertexIdsFor(g, Some(e)))
 
     val outDegDF = g.outDegrees
     val weights = g.edges

@@ -1,6 +1,6 @@
 package graft.lib
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 import graft.GraphFrame
 
@@ -62,7 +62,7 @@ class Salsa(g: GraphFrame) extends LocalTail {
   private def runDistributed(e: DataFrame): DataFrame = {
     // the final L1 sums ride the last chunk's cut
     var sums = Seq(0.0, 0.0)
-    new IterationManager().chained(
+    IterationManager.chained(
       g.vertices.select(col(ID), lit(1.0).as("hub"), lit(0.0).as("authority")),
       maxIterV,
       observe = round => if (round >= maxIterV) Seq(sum("hub"), sum("authority")) else Nil,
@@ -111,8 +111,8 @@ class Salsa(g: GraphFrame) extends LocalTail {
     }
     val sh = vids.iterator.map(hub).sum
     val sa = vids.iterator.map(auth).sum
-    LocalTail.joinBack(g, vids, Seq(
-      ("hub", (v: Any) => if (sh > 0) hub(v) / sh else 0.0, 0.0),
-      ("authority", (v: Any) => if (sa > 0) auth(v) / sa else 0.0, 0.0)))
+    LocalTail.joinBack(g, vids.map(v => Row(v, if (sh > 0) hub(v) / sh else 0.0,
+        if (sa > 0) auth(v) / sa else 0.0)),
+      Seq(LocalTail.score("hub", 0.0), LocalTail.score("authority", 0.0)))(vertexIdsFor(g))
   }
 }

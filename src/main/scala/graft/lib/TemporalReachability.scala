@@ -1,7 +1,8 @@
 package graft.lib
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.DoubleType
 import graft.GraphFrame
 
 /**
@@ -72,7 +73,7 @@ class TemporalReachability(g: GraphFrame) extends LocalTail {
     // cut with the per-vertex min-merge between them (no path explosion);
     // the improved count rides the cut's own job. A binding maxIter means
     // exactly maxIter level-synchronous sweeps — same as the tail
-    new IterationManager().chained(
+    IterationManager.chained(
       g.vertices.select(col(ID),
         when(col(ID) === lit(sourceV), lit(startTimeV))
           .otherwise(lit(null).cast("double")).as("arrival")),
@@ -125,15 +126,7 @@ class TemporalReachability(g: GraphFrame) extends LocalTail {
       }
       arrival = next
     }
-    // ship the tiny arrival map back as a broadcast local frame
-    val spark = g.vertices.sparkSession
-    val arrDf = spark.createDataFrame(
-      spark.sparkContext.parallelize(
-        arrival.toSeq.map { case (k, a) => org.apache.spark.sql.Row(k, a) }, 1),
-      org.apache.spark.sql.types.StructType(Seq(
-        g.vertices.schema(ID).copy(name = ID),
-        org.apache.spark.sql.types.StructField("arrival",
-          org.apache.spark.sql.types.DoubleType))))
-    g.vertices.select(col(ID)).join(broadcast(arrDf), Seq(ID), "left_outer")
+    LocalTail.joinBack(g, arrival.map { case (v, a) => Row(v, a) },
+      Seq(LocalTail.Out("arrival", DoubleType, lit(null))))(vertexIdsFor(g)).select(ID, "arrival")
   }
 }

@@ -188,23 +188,11 @@ class TwoConnectivity(g: GraphFrame) extends LocalTail {
           StructType(Seq(idf(ID),
             StructField("is_articulation", BooleanType, nullable = false))))
       case Mode.TwoEcc =>
-        val uf = new mutable.HashMap[Any, Any]()
-        def find(x: Any): Any = {
-          var r = x
-          while (!uf.getOrElse(r, r).equals(r)) r = uf.getOrElse(r, r)
-          var c = x
-          while (!c.equals(r)) { val n = uf.getOrElse(c, c); uf(c) = r; c = n }
-          r
-        }
+        val uf = new UnionFind(ord)
         edges.foreach { case (a, b) =>
-          if (!bridgeSet.contains((a, b)) && !bridgeSet.contains((b, a))) {
-            val (ra, rb) = (find(a), find(b))
-            if (!ra.equals(rb)) {
-              if (ord.lt(ra, rb)) uf(rb) = ra else uf(ra) = rb
-            }
-          }
+          if (!bridgeSet.contains((a, b)) && !bridgeSet.contains((b, a))) uf.union(a, b)
         }
-        val rows = vids.map(v => Row(v, find(v)))
+        val rows = vids.map(v => Row(v, uf.find(v)))
         spark.createDataFrame(
           java.util.Arrays.asList(rows: _*),
           StructType(Seq(idf(ID), idf("component"))))

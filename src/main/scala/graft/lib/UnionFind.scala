@@ -1,12 +1,37 @@
 package graft.lib
 
 /**
- * Driver-side union-find with minimum-id roots — the shared kernel behind
- * the bounded small-graph fast paths in [[ConnectedComponents]] and
- * `graft.pipeline.Dedup.clusterReps`. Path compression + point-smaller:
- * the root of every set is its ordering-minimum element, so labels match
- * what the distributed fixpoints produce (component minimum).
+ * Driver-side union-find with minimum-id roots — the one kernel behind
+ * the bounded small-graph tails of [[ConnectedComponents]],
+ * `graft.pipeline.Dedup.clusterReps`, the minimum spanning forest's
+ * Kruskal and 2-edge-connected components. Path compression +
+ * point-smaller: the root of every set is its `ord`-minimum element, so
+ * labels match what the distributed fixpoints produce (component minimum).
  */
+private[graft] final class UnionFind(ord: Ordering[Any]) {
+  private val parent = scala.collection.mutable.HashMap.empty[Any, Any]
+
+  /** The root of `x`'s set (`x` itself if never unioned). */
+  def find(x: Any): Any = {
+    var r = x
+    while (parent.getOrElse(r, r) != r) r = parent(r)
+    var c = x
+    while (parent.getOrElse(c, c) != c) { val n = parent(c); parent(c) = r; c = n }
+    r
+  }
+
+  /** Merge the sets of `a` and `b` under the smaller root; false when they
+   * were one set already. */
+  def union(a: Any, b: Any): Boolean = {
+    val ra = find(a); val rb = find(b)
+    if (ra == rb) false
+    else {
+      if (ord.lt(ra, rb)) parent(rb) = ra else parent(ra) = rb
+      true
+    }
+  }
+}
+
 private[graft] object UnionFind {
 
   /** Orderings that match Spark's own comparison semantics for the id
@@ -42,22 +67,9 @@ private[graft] object UnionFind {
   /** Union all pairs, then return every touched element mapped to its
    * set's minimum element under `ord`. */
   def minLabels(pairs: Iterator[(Any, Any)], ord: Ordering[Any]): Iterator[(Any, Any)] = {
-    val parent = scala.collection.mutable.HashMap.empty[Any, Any]
+    val uf = new UnionFind(ord)
     val seen = scala.collection.mutable.LinkedHashSet.empty[Any]
-    def find(x: Any): Any = {
-      var r = x
-      while (parent.getOrElse(r, r) != r) r = parent(r)
-      var c = x
-      while (parent.getOrElse(c, c) != c) { val n = parent(c); parent(c) = r; c = n }
-      r
-    }
-    pairs.foreach { case (a, b) =>
-      seen += a; seen += b
-      val ra = find(a); val rb = find(b)
-      if (ra != rb) {
-        if (ord.lt(ra, rb)) parent(rb) = ra else parent(ra) = rb
-      }
-    }
-    seen.iterator.map(v => (v, find(v)))
+    pairs.foreach { case (a, b) => seen += a; seen += b; uf.union(a, b) }
+    seen.iterator.map(v => (v, uf.find(v)))
   }
 }

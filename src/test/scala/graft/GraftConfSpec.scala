@@ -60,6 +60,15 @@ class GraftConfSpec extends TestBase {
     }
   }
 
+  test("useLocalCheckpoints=false reaches the chained loops: hits without a checkpoint dir throws") {
+    withConf(GraftConf.UseLocalCheckpointsKey -> "false") {
+      spark.sparkContext.setCheckpointDir(null.asInstanceOf[String]) // clear
+      intercept[java.io.IOException] {
+        friends.hits.maxIter(2).setSmallGraphThreshold(0).run()
+      }
+    }
+  }
+
   test("cc storage level conf: invalid name fails fast, valid name runs") {
     withConf(GraftConf.CcStorageLevelKey -> "NOT_A_LEVEL") {
       intercept[IllegalArgumentException] { friends.connectedComponents }

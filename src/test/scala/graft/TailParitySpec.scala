@@ -130,6 +130,28 @@ class TailParitySpec extends TestBase with TailCases with SparkEvents {
     assert(failures.isEmpty, failures.mkString("; "))
   }
 
+  // On a fromEdges graph a tail's join-back returns its local relation
+  // itself; over the same vertex rows behind a lineage cut it broadcast-
+  // joins that relation onto them. Both must give the same schema and the
+  // same rows, one per vertex, including the null id of a null endpoint.
+  test("every driver tail's fromEdges local result == its join onto the same vertex rows") {
+    val failures = tailCases.flatMap { c =>
+      val friendsE = tailEdges(c.edgeCols)
+      val e = friendsE.unionAll(spark.createDataFrame(java.util.Arrays.asList(
+        org.apache.spark.sql.Row.fromSeq(Seq(null, "a") ++ c.edgeCols.map(_ => 1.0))),
+        friendsE.schema))
+      val local = c.run(GraphFrame.fromEdges(e), 100000L)
+      val joined = c.run(GraphFrame(GraphFrame.fromEdges(e).vertices.localCheckpoint(), e), 100000L)
+      def sorted(df: org.apache.spark.sql.DataFrame) = df.collect().sortBy(_.toString).toSeq
+      if (local.schema != joined.schema)
+        Some(s"${c.name}: schema ${local.schema.simpleString} != ${joined.schema.simpleString}")
+      else if (sorted(local) != sorted(joined))
+        Some(s"${c.name}: rows ${sorted(local)} != ${sorted(joined)}")
+      else None
+    }
+    assert(failures.isEmpty, failures.mkString("; "))
+  }
+
   // fromEdges types its vertex ids as the union type of src and dst, so
   // the tails' endpoint ids, taken from the collected edges without a
   // Spark job, must come back in that type: Int src values as Long ids.
