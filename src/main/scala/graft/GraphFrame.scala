@@ -111,6 +111,16 @@ class GraphFrame private (
   private[graft] lazy val idOnlyVertices: Boolean =
     vertices.columns.sameElements(Array(ID))
 
+  /** Whether the vertex table's plan is the distinct endpoints of the edge
+   * table's, as [[GraphFrame.fromEdges]] builds it: then edges collected
+   * whole hold every vertex id, one per vertex row. `edgeEndpointsComplete`
+   * alone is not enough — `filterEdges` and `validated()` keep it on graphs
+   * with isolated vertices. Both analyzed plans are immutable, so the
+   * `sameResult` comparison runs once per graph. */
+  private[graft] lazy val verticesAreEndpoints: Boolean =
+    edgeEndpointsComplete && vertices.queryExecution.analyzed.sameResult(
+      fromEdges(edges).vertices.queryExecution.analyzed)
+
   // ---------------------------------------------------------------------
   // Structure operators
   // ---------------------------------------------------------------------

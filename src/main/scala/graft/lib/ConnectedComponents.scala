@@ -118,7 +118,7 @@ class ConnectedComponents(g: GraphFrame) extends LocalTail {
     var ids = Option.empty[Array[Any]]
     def idsFit(endpoints: => Array[Any]): Boolean = {
       ids = LocalTail.vertexIdsUpTo(g, idType, smallGraphThreshold,
-        LocalTail.verticesAreEndpoints(g))(endpoints)
+        g.verticesAreEndpoints)(endpoints)
       ids.isDefined
     }
     if (g.hasIntegralIdType) {

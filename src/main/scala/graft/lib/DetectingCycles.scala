@@ -68,7 +68,8 @@ class DetectingCycles(g: GraphFrame) extends LocalTail {
    * matching the distributed array_union + distinct. */
   private def runLocal(e: DataFrame, ord: Ordering[Any]): DataFrame = {
     import scala.collection.mutable
-    val (edges, vids) = LocalTail.collectGraph(e, g)
+    val (edges, eps) = LocalTail.collectGraph(e, g)
+    val vids = eps.vids
     val valid = vids.toSet
     val adj = edges.iterator
       .filter { case (s, d) => valid(s) && valid(d) }

@@ -92,8 +92,10 @@ class Eigenvector(g: GraphFrame) extends LocalTail {
    * from round 1 on — filled in closed form by the join-back. */
   private def runLocal(e: DataFrame): DataFrame = {
     import scala.collection.mutable
-    val edges = LocalTail.collectWeightedEdges(e)
-    val vids = LocalTail.endpointIds(e, g)
+    val rows = e.collect()
+    val edges = LocalTail.weightedEdgesOf(rows)
+    val eps = LocalTail.endpointIds(e, g, rows)
+    val vids = eps.vids
     val valid = vids.toSet
     var x = mutable.HashMap.empty[Any, Double]
     vids.foreach(v => x(v) = 1.0)
@@ -114,6 +116,6 @@ class Eigenvector(g: GraphFrame) extends LocalTail {
     }
     val norm = vids.iterator.map(v => math.abs(x(v))).foldLeft(0.0)(math.max)
     LocalTail.joinBack(g, vids.map(v => Row(v, if (norm > 0) x(v) / norm else 0.0)),
-      Seq(LocalTail.score("eigenvector", 0.0)))(vertexIdsFor(g, Some(e)))
+      Seq(LocalTail.score("eigenvector", 0.0)))(vertexIdsFor(g, Some(eps)))
   }
 }

@@ -114,7 +114,8 @@ class Hits(g: GraphFrame) extends LocalTail {
    * round 1 on — filled in closed form by the join-back. */
   private def runLocal(e: DataFrame): DataFrame = {
     import scala.collection.mutable
-    val (edges, vids) = LocalTail.collectGraph(e, g)
+    val (edges, eps) = LocalTail.collectGraph(e, g)
+    val vids = eps.vids
     val valid = vids.toSet
     var hub = mutable.HashMap.empty[Any, Double]
     var auth = mutable.HashMap.empty[Any, Double]
@@ -150,6 +151,6 @@ class Hits(g: GraphFrame) extends LocalTail {
     LocalTail.joinBack(g, vids.map(v => Row(v, if (hNorm > 0) hub(v) / hNorm else 0.0,
         if (aNorm > 0) auth(v) / aNorm else 0.0)),
       Seq(LocalTail.score("hub", 0.0), LocalTail.score("authority", 0.0)))(
-      vertexIdsFor(g, Some(e)))
+      vertexIdsFor(g, Some(eps)))
   }
 }

@@ -74,7 +74,8 @@ class KCore(g: GraphFrame) extends LocalTail {
    * each neighbor once. */
   private def runLocal(e: DataFrame): DataFrame = {
     import scala.collection.mutable
-    val (edges, vids) = LocalTail.collectGraph(e, g)
+    val (edges, eps) = LocalTail.collectGraph(e, g)
+    val vids = eps.vids
     val valid = vids.toSet
     val adj = mutable.HashMap.empty[Any, mutable.LinkedHashSet[Any]]
     edges.iterator.filter { case (s, d) => s != d && valid(s) && valid(d) }.foreach {
@@ -109,6 +110,6 @@ class KCore(g: GraphFrame) extends LocalTail {
       round += 1
     }
     LocalTail.joinBack(g, vids.map(v => Row(v, core(v))),
-      Seq(LocalTail.Out("kcore", IntegerType, lit(0))))(vertexIdsFor(g, Some(e)))
+      Seq(LocalTail.Out("kcore", IntegerType, lit(0))))(vertexIdsFor(g, Some(eps)))
   }
 }

@@ -52,7 +52,8 @@ class Katz(g: GraphFrame) extends LocalTail {
    * in closed form by the join-back. */
   private def runLocal(e: DataFrame): DataFrame = {
     import scala.collection.mutable
-    val (edges, vids) = LocalTail.collectGraph(e, g)
+    val (edges, eps) = LocalTail.collectGraph(e, g)
+    val vids = eps.vids
     val valid = vids.toSet
     var x = mutable.HashMap.empty[Any, Double]
     vids.foreach(v => x(v) = betaV)
@@ -67,6 +68,6 @@ class Katz(g: GraphFrame) extends LocalTail {
       x = nx
     }
     LocalTail.joinBack(g, vids.map(v => Row(v, x(v))), Seq(LocalTail.score("katz", betaV)))(
-      vertexIdsFor(g, Some(e)))
+      vertexIdsFor(g, Some(eps)))
   }
 }

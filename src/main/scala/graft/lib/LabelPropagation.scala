@@ -71,7 +71,8 @@ class LabelPropagation(g: GraphFrame) extends LocalTail {
    * ordering — exactly mode(deterministic = true). */
   private def runLocal(e: DataFrame, ord: Ordering[Any]): DataFrame = {
     import scala.collection.mutable
-    val (edges, vids) = LocalTail.collectGraph(e, g)
+    val (edges, eps) = LocalTail.collectGraph(e, g)
+    val vids = eps.vids
     val valid = vids.toSet
     // per-edge-row votes: directed sends src→dst; undirected both ways
     val sends: Array[(Any, Any)] = {
@@ -101,6 +102,6 @@ class LabelPropagation(g: GraphFrame) extends LocalTail {
     // vertices touching no edge never receive mail: label = own id
     LocalTail.joinBack(g, vids.map(v => Row(v, label(v))),
       Seq(LocalTail.Out("label", g.vertices.schema(ID).dataType, col(ID))))(
-      vertexIdsFor(g, Some(e)))
+      vertexIdsFor(g, Some(eps)))
   }
 }

@@ -111,16 +111,33 @@ trait LocalTail {
     gate(probe, ord.isDefined, pinForDistributed, andIf)(tail(_, ord.get))(distributed)
   }
 
-  /** Every vertex id for [[LocalTail.joinBack]]'s local relation on a
-   * `fromEdges` graph. `rawProbe` is the tail's collected probe when it
-   * holds every edge row's `(src, dst)`: its endpoints, null included, are
-   * then the vertex ids and no Spark job runs. Otherwise one bounded
-   * collect reads at most t ids (None above t). */
-  protected def vertexIdsFor(g: GraphFrame, rawProbe: Option[DataFrame] = None)
+  /** [[gate]] over the raw `(src, dst)` edges of `g`, for tails that build
+   * the canonical undirected edge set on the driver
+   * ([[LocalTail.undirectedPairs]]). The tail applies only when the id
+   * type has a Spark-faithful driver ordering ([[UnionFind.sparkOrdering]])
+   * and `src` and `dst` carry the id type itself; the distributed path
+   * gets the probe and builds (and pins) its own canonical frame. */
+  protected def gateUndirected[T](g: GraphFrame)(tail: (DataFrame, Ordering[Any]) => T)(
+      distributed: DataFrame => T): T = {
+    import GraphFrame.{ID, SRC, DST}
+    val idType = g.vertices.schema(ID).dataType
+    val ord = UnionFind.sparkOrdering(idType).filter(_ =>
+      g.edges.schema(SRC).dataType == idType && g.edges.schema(DST).dataType == idType)
+    gate(g.edges.select(col(SRC), col(DST)), ord.isDefined)(tail(_, ord.get))(distributed)
+  }
+
+  /** Every vertex id, for [[LocalTail.joinBack]]'s local relation or a tail
+   * that needs them all. `endpoints` are those of the tail's collected
+   * probe when it holds every edge row's `(src, dst)`: on a `fromEdges`
+   * graph ([[GraphFrame.verticesAreEndpoints]]) they are the vertex ids and
+   * no Spark job runs. Otherwise one bounded collect reads at most t ids
+   * (None above t). */
+  protected def vertexIdsFor(g: GraphFrame, endpoints: Option[LocalTail.Endpoints] = None)
       : Option[Array[Any]] = {
-    val t = g.vertices.schema(GraphFrame.ID).dataType
-    LocalTail.vertexIdsUpTo(g, t, if (rawProbe.isDefined) Long.MaxValue else smallGraphThresholdV,
-      rawProbe.isDefined)(LocalTail.endpointsOf(rawProbe.get, t))
+    val fromEndpoints = endpoints.isDefined && g.verticesAreEndpoints
+    LocalTail.vertexIdsUpTo(g, g.vertices.schema(GraphFrame.ID).dataType,
+      if (fromEndpoints) Long.MaxValue else smallGraphThresholdV, fromEndpoints)(
+      endpoints.get.all)
   }
 }
 
@@ -146,8 +163,10 @@ case class TailDecision(builder: String, threshold: Long, rowsRead: Int, tail: B
 private[lib] object LocalTail {
   /** `(src, dst)` pairs from the first two columns of `e`, null-free and
    * sorted by their string forms. */
-  def collectEdges(e: DataFrame): Array[(Any, Any)] =
-    e.collect().iterator
+  def collectEdges(e: DataFrame): Array[(Any, Any)] = edgesOf(e.collect())
+
+  private def edgesOf(rows: Array[Row]): Array[(Any, Any)] =
+    rows.iterator
       .filter(r => !r.isNullAt(0) && !r.isNullAt(1))
       .map(r => (r.get(0), r.get(1))).toArray
       .sortBy { case (s, d) => (String.valueOf(s), String.valueOf(d)) }
@@ -156,54 +175,88 @@ private[lib] object LocalTail {
    * endpoints dropped, a null weight read as 0.0, sorted by `(src, dst, w)`
    * so parallel edges with distinct weights accumulate in a fixed order. */
   def collectWeightedEdges(e: DataFrame): Array[(Any, Any, Double)] =
-    e.collect().iterator
+    weightedEdgesOf(e.collect())
+
+  /** [[collectWeightedEdges]] of `e`'s collected rows. */
+  def weightedEdgesOf(rows: Array[Row]): Array[(Any, Any, Double)] =
+    rows.iterator
       .filter(r => !r.isNullAt(0) && !r.isNullAt(1))
       .map(r => (r.get(0), r.get(1), if (r.isNullAt(2)) 0.0 else r.getDouble(2)))
       .toArray
       .sortBy { case (s, d, w) => (String.valueOf(s), String.valueOf(d), w) }
 
-  /** The vertex-table ids that are endpoints of `e`, sorted: the distinct
-   * non-null `src`/`dst` values of the collected edges. On a graph whose
-   * edge endpoints are all vertices (`fromEdges`, `validated()`) those are
-   * the answer, cast to the vertex id type, and no Spark job runs;
-   * otherwise one broadcast semi-join of the vertex ids against them. */
-  def endpointIds(e: DataFrame, g: GraphFrame): Array[Any] = {
+  /** The endpoints of a tail's collected edges, read once: `vids`, the
+   * vertex-table ids among them, sorted (computed on first use), and `all`,
+   * every distinct `src`/`dst` value, null included, in the vertex id type
+   * when the graph is `edgeEndpointsComplete` — then, on a `fromEdges`
+   * graph whose edge rows were all collected, the vertex ids
+   * ([[LocalTail.vertexIdsFor]]). */
+  final class Endpoints(vidsOf: => Array[Any], val all: Array[Any]) {
+    lazy val vids: Array[Any] = vidsOf
+  }
+
+  /** [[Endpoints]] of the collected edges `e`. On a graph whose edge
+   * endpoints are all vertices (`fromEdges`, `validated()`) the non-null
+   * endpoints, cast to the vertex id type, are the `vids` and no Spark job
+   * runs; otherwise the first read of `vids` runs one broadcast semi-join
+   * of the vertex ids against them. `rows` are `e`'s collected rows, read
+   * instead of a cast projection when `src` and `dst` already have the type
+   * compared in. */
+  def endpointIds(e: DataFrame, g: GraphFrame, rows: Array[Row]): Endpoints = {
     import GraphFrame.{ID, SRC, DST}
     val complete = g.edgeEndpointsComplete
     // the type the semi-join compares in: the union type of src and dst
     val t = if (complete) g.vertices.schema(ID).dataType
       else e.select(col(SRC).as(ID)).union(e.select(col(DST).as(ID))).schema(ID).dataType
-    val eps = endpointsOf(e, t).filter(_ != null)
-    val ids =
+    val all = endpointsOf(e, t, rows)
+    val eps = all.filter(_ != null)
+    def ids =
       if (complete) eps
       else g.vertices.select(col(ID)).join(broadcast(g.spark.createDataFrame(
           java.util.Arrays.asList(eps.map(Row(_)): _*),
           StructType(Seq(StructField(ID, t))))), Seq(ID), "left_semi")
         .collect().map(_.get(0))
-    ids.sortBy(String.valueOf(_))
+    new Endpoints(ids.sortBy(String.valueOf(_)), all)
   }
 
   /** The distinct `src`/`dst` values of the collected edges `e` in type
-   * `t`, null included: a `fromEdges` graph's vertex ids when `e` holds
-   * every edge row. */
-  def endpointsOf(e: DataFrame, t: DataType): Array[Any] = {
+   * `t`, null included: read from `rows`, `e`'s collected rows, when both
+   * columns have type `t`, else from one cast projection of `e`. */
+  def endpointsOf(e: DataFrame, t: DataType, rows: Array[Row]): Array[Any] = {
     import GraphFrame.{SRC, DST}
-    e.select(col(SRC).cast(t), col(DST).cast(t)).collect().iterator
-      .flatMap(_.toSeq).toArray.distinct
+    val (s, d) = (e.schema.fieldIndex(SRC), e.schema.fieldIndex(DST))
+    val pairs =
+      if (e.schema(s).dataType == t && e.schema(d).dataType == t)
+        rows.iterator.map(r => (r.get(s), r.get(d)))
+      else e.select(col(SRC).cast(t), col(DST).cast(t)).collect().iterator
+        .map(r => (r.get(0), r.get(1)))
+    pairs.flatMap { case (a, b) => Iterator(a, b) }.toArray.distinct
   }
 
-  /** Whether the vertex table's plan is the distinct endpoints of the edge
-   * table's, as [[GraphFrame.fromEdges]] builds it: then the collected
-   * edges hold every vertex id, one per vertex row. `edgeEndpointsComplete`
-   * alone is not enough — `filterEdges` and `validated()` keep it on graphs
-   * with isolated vertices. */
-  def verticesAreEndpoints(g: GraphFrame): Boolean =
-    g.edgeEndpointsComplete && g.vertices.queryExecution.analyzed.sameResult(
-      GraphFrame.fromEdges(g.edges).vertices.queryExecution.analyzed)
+  /** The canonical undirected edge set of collected `(src, dst)` rows (the
+   * first two columns), as the distributed paths build it with
+   * `filter(src =!= dst)`, `least`/`greatest` and `distinct`: rows with a
+   * null endpoint and self-loops dropped, each pair oriented (least,
+   * greatest) under `ord` and kept once, sorted by `ord`. Ids compare with
+   * `ord.equiv`, never `==` on boxed values, so the self-loop and duplicate
+   * tests are Spark's. */
+  def undirectedPairs(rows: Array[Row], ord: Ordering[Any]): Array[(Any, Any)] = {
+    val sorted = rows.iterator
+      .filter(r => !r.isNullAt(0) && !r.isNullAt(1) && !ord.equiv(r.get(0), r.get(1)))
+      .map(r => if (ord.lt(r.get(0), r.get(1))) (r.get(0), r.get(1)) else (r.get(1), r.get(0)))
+      .toArray.sorted(Ordering.Tuple2(ord, ord))
+    val out = Array.newBuilder[(Any, Any)]
+    var last: Option[(Any, Any)] = None
+    sorted.foreach { p =>
+      if (!last.exists(l => ord.equiv(l._1, p._1) && ord.equiv(l._2, p._2))) out += p
+      last = Some(p)
+    }
+    out.result()
+  }
 
   /** Every vertex row's id, in type `t`, if there are at most `bound`
-   * rows. With `fromEndpoints` ([[verticesAreEndpoints]]) they are
-   * `endpoints`, the distinct endpoints of the collected edges, and no
+   * rows. With `fromEndpoints` ([[GraphFrame.verticesAreEndpoints]]) they
+   * are `endpoints`, the distinct endpoints of the collected edges, and no
    * Spark job runs; otherwise one bounded `limit(bound + 1)` collect of
    * `vertices.select(id)` reads them. */
   def vertexIdsUpTo(g: GraphFrame, t: DataType, bound: Long, fromEndpoints: Boolean)(
@@ -219,9 +272,12 @@ private[lib] object LocalTail {
   def vertexIds(g: GraphFrame): Array[Any] =
     g.vertices.select(col(GraphFrame.ID)).collect().map(_.get(0)).sortBy(String.valueOf(_))
 
-  /** [[collectEdges]] plus [[endpointIds]], for the tails that need both. */
-  def collectGraph(e: DataFrame, g: GraphFrame): (Array[(Any, Any)], Array[Any]) =
-    (collectEdges(e), endpointIds(e, g))
+  /** [[collectEdges]] plus [[endpointIds]] from one collect of `e`, for
+   * the tails that need both. */
+  def collectGraph(e: DataFrame, g: GraphFrame): (Array[(Any, Any)], Endpoints) = {
+    val rows = e.collect()
+    (edgesOf(rows), endpointIds(e, g, rows))
+  }
 
   /** One per-vertex column a driver tail hands back through [[joinBack]]:
    * its name, its type, and the fill of every vertex row without a value
@@ -239,28 +295,31 @@ private[lib] object LocalTail {
    * vertex rows (connected components); every value column becomes
    * `coalesce(value, fill)`.
    *
-   * On a graph whose vertex table is the `fromEdges` endpoint set
-   * ([[verticesAreEndpoints]]) with every vertex id known (`vertexIds`,
-   * evaluated only then), the result is the local relation itself: one
-   * row per vertex id, its values looked up in `rows` (none for a null
-   * id, which a join never matches). Consuming it runs no Spark job.
-   * Otherwise the local relation is broadcast-joined (`left_outer`) onto
-   * the full vertex table. Both give the same schema and rows. */
-  def joinBack(g: GraphFrame, rows: Iterable[Row], outs: Seq[Out])(
+   * With every vertex row's id known (`vertexIds`, evaluated only then)
+   * on a graph whose vertex table is the `fromEdges` endpoint set
+   * ([[GraphFrame.verticesAreEndpoints]]), or on any graph when the result
+   * keeps only the vertex `id` column (`idOnly`), the result is the local
+   * relation itself: one row per vertex id, its values looked up in `rows`
+   * (none for a null id, which a join never matches). Consuming it runs no
+   * Spark job. Otherwise the local relation is broadcast-joined
+   * (`left_outer`) onto the vertex table (its `id` column alone with
+   * `idOnly`). Both give the same schema and rows. */
+  def joinBack(g: GraphFrame, rows: Iterable[Row], outs: Seq[Out], idOnly: Boolean = false)(
       vertexIds: => Option[Array[Any]]): DataFrame = {
     import GraphFrame.ID
     val schema = StructType(g.vertices.schema(ID) +:
       outs.map(o => StructField(o.name, o.dataType, nullable = true)))
     def local(rs: Iterable[Row]): DataFrame =
       g.spark.createDataFrame(java.util.Arrays.asList(rs.toSeq: _*), schema)
-    (if (verticesAreEndpoints(g)) vertexIds else None) match {
+    (if (idOnly || g.verticesAreEndpoints) vertexIds else None) match {
       case Some(ids) =>
         val byId = rows.iterator.filter(!_.isNullAt(0)).map(r => r.get(0) -> r.toSeq.tail).toMap
         val none = outs.map(_ => null)
         local(ids.map(v => Row.fromSeq(v +: byId.getOrElse(v, none))))
           .select(col(ID) +: outs.map(o => coalesce(col(o.name), o.fill).as(o.name)): _*)
       case None =>
-        outs.foldLeft(g.vertices.join(broadcast(local(rows)), Seq(ID), "left_outer"))(
+        val vertices = if (idOnly) g.vertices.select(col(ID)) else g.vertices
+        outs.foldLeft(vertices.join(broadcast(local(rows)), Seq(ID), "left_outer"))(
           (df, o) => df.withColumn(o.name, coalesce(col(o.name), o.fill)))
     }
   }

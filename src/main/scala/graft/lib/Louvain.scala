@@ -96,24 +96,11 @@ class Louvain(g: GraphFrame) extends LocalTail {
    * (docs/THRESHOLDS.md row 2b) replays the exact distributed trajectory
    * (same integer gains, same smallest-community tie rule via the id
    * type's Spark ordering) including every coarse level. */
-  def run(): DataFrame = {
-    val und = g.edges.select(col(SRC), col(DST))
-      .filter(col(SRC).isNotNull && col(DST).isNotNull && col(SRC) =!= col(DST))
-      .select(least(col(SRC), col(DST)).as("a"), greatest(col(SRC), col(DST)).as("b"))
-      .distinct()
-      // endpoints absent from the vertex table carry no state: drop the edge
-      .join(g.vertices.select(col(ID).as("a")), Seq("a"), "left_semi")
-      .join(g.vertices.select(col(ID).as("b")), Seq("b"), "left_semi")
-    // pinned on every path: the distributed rounds re-read it. The tail
-    // holds at most the threshold's edges, far below 1.5e9, so its Long
-    // gains are exact whatever the gain mode (decimal and Long agree
-    // bit-for-bit on exact integers, proven by the decimal/long spec)
-    gateOrdered(und, g.vertices.schema(ID).dataType, pinForDistributed = true)(
-      runLocal)(p => p.count() match {
-        case 0 => g.vertices.withColumn("community", col(ID))
-        case m => runDistributed(p, m)
-      })
-  }
+  def run(): DataFrame =
+    // the tail holds at most the threshold's edges, far below 1.5e9, so
+    // its Long gains are exact whatever the gain mode (decimal and Long
+    // agree bit-for-bit on exact integers, proven by the decimal/long spec)
+    gateUndirected(g)(runLocal)(runDistributed)
 
   /** One level's synchronous rounds over weighted bidirectional edges
    * `u(s, d, w)` from initial `state(id, deg, community)`; `cut` is the
@@ -155,10 +142,25 @@ class Louvain(g: GraphFrame) extends LocalTail {
     state
   }
 
-  /** The distributed rounds over the `m` > 0 canonical edges of `und`;
-   * the edge count also picks the gain mode. */
-  private def runDistributed(und: DataFrame, m: Long): DataFrame =
+  /** The distributed rounds over the canonical undirected edges of the
+   * raw `(src, dst)` probe `e`, pinned here: the rounds re-read them, and
+   * their count `m` also picks the gain mode. */
+  private def runDistributed(e: DataFrame): DataFrame =
       IterationManager.scoped(g.spark) { mgr =>
+    val und = mgr.persistLazy(e
+      .filter(col(SRC).isNotNull && col(DST).isNotNull && col(SRC) =!= col(DST))
+      .select(least(col(SRC), col(DST)).as("a"), greatest(col(SRC), col(DST)).as("b"))
+      .distinct()
+      // endpoints absent from the vertex table carry no state: drop the edge
+      .join(g.vertices.select(col(ID).as("a")), Seq("a"), "left_semi")
+      .join(g.vertices.select(col(ID).as("b")), Seq("b"), "left_semi"))
+    val m = und.count()
+    if (m == 0) g.vertices.withColumn("community", col(ID))
+    else levelsDistributed(mgr, und, m)
+  }
+
+  /** Every level's rounds over the `m` > 0 canonical edges `und`. */
+  private def levelsDistributed(mgr: IterationManager, und: DataFrame, m: Long): DataFrame = {
     val decimalGains = gainModeV match {
       case "decimal" => true
       case "long" =>
@@ -218,11 +220,15 @@ class Louvain(g: GraphFrame) extends LocalTail {
   }
 
   /** Driver tail: the identical synchronous integer-gain rounds and
-   * coarse levels, over the collected canonical edge list. */
-  private def runLocal(und: DataFrame, ord: Ordering[Any]): DataFrame = {
+   * coarse levels, over the canonical undirected pairs of the collected
+   * raw edges whose endpoints are both vertices. */
+  private def runLocal(e: DataFrame, ord: Ordering[Any]): DataFrame = {
     import scala.collection.mutable
-    val baseEdges: Array[(Any, Any)] = und.collect().iterator
-      .map(r => (r.get(r.fieldIndex("a")), r.get(r.fieldIndex("b")))).toArray
+    val rows = e.collect()
+    val eps = LocalTail.endpointIds(e, g, rows)
+    val valid = eps.vids.toSet
+    val baseEdges: Array[(Any, Any)] = LocalTail.undirectedPairs(rows, ord)
+      .filter { case (a, b) => valid(a) && valid(b) }
     val baseVids: Array[Any] = baseEdges.iterator.flatMap(p => Iterator(p._1, p._2))
       .toArray.distinct
     val m = baseEdges.length.toLong
@@ -303,6 +309,7 @@ class Louvain(g: GraphFrame) extends LocalTail {
     }
     // vertices touching no edge stay in their own community
     LocalTail.joinBack(g, baseVids.map(v => Row(v, assign(v))),
-      Seq(LocalTail.Out("community", g.vertices.schema(ID).dataType, col(ID))))(vertexIdsFor(g))
+      Seq(LocalTail.Out("community", g.vertices.schema(ID).dataType, col(ID))))(
+      vertexIdsFor(g, Some(eps)))
   }
 }

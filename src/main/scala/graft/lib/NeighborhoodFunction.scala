@@ -81,7 +81,7 @@ class NeighborhoodFunction(g: GraphFrame) extends LocalTail {
     // isolated vertices count 1 each in N(d), so the endpoints are the ids
     // only on the `fromEdges` endpoint set
     def fits: Boolean = {
-      ids = LocalTail.vertexIdsUpTo(g, keyType, bound, LocalTail.verticesAreEndpoints(g))(
+      ids = LocalTail.vertexIdsUpTo(g, keyType, bound, g.verticesAreEndpoints)(
         edges.flatMap { case (s, d) => Seq(s, d) }.distinct)
       ids.isDefined
     }

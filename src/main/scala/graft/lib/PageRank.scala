@@ -2,6 +2,7 @@ package graft.lib
 
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DoubleType, StructField}
 import graft.GraphFrame
 
 /**
@@ -70,14 +71,17 @@ class PageRank(g: GraphFrame) extends LocalTail {
       _ => runDistributed())
   }
 
+  /** (id, outDegree): per-vertex out-degree, or out-weight sum when
+   * weighted. */
+  private def outDegrees: DataFrame = weightColV match {
+    case Some(w) => g.edges
+      .groupBy(col(SRC).as(ID))
+      .agg(sum(col(GraphFrame.quoteName(w)).cast("double")).as("outDegree"))
+    case None => g.outDegrees
+  }
+
   private def runDistributed(): GraphFrame = {
-    // uniform: per-vertex out-degree; weighted: out-weight sum
-    val outDeg = weightColV match {
-      case Some(w) => g.edges
-        .groupBy(col(SRC).as(ID))
-        .agg(sum(col(GraphFrame.quoteName(w)).cast("double")).as("outDegree"))
-      case None => g.outDegrees
-    }
+    val outDeg = outDegrees
     val v = g.vertices.join(outDeg, Seq(ID), "left_outer")
       .na.fill(0, Seq("outDegree"))
       .withColumnRenamed("outDegree", "_pr_outdeg")
@@ -126,9 +130,9 @@ class PageRank(g: GraphFrame) extends LocalTail {
     GraphFrame(ranks, weightedEdges(outDeg))
   }
 
-  /** Edges + `weight` (per-edge share of the source's out-mass) — shared
-   * by both execution paths; lazy, evaluated only if the caller reads
-   * `.edges`. */
+  /** Edges + `weight` (per-edge share of the source's out-mass) — the
+   * distributed path's, and the tail's unless it holds the whole edge
+   * table; lazy, evaluated only if the caller reads `.edges`. */
   private def weightedEdges(outDeg: DataFrame): DataFrame =
     g.edges
       .join(outDeg.select(col(ID).as(SRC), col("outDegree").as("_pr_od")), Seq(SRC), "left_outer")
@@ -150,12 +154,14 @@ class PageRank(g: GraphFrame) extends LocalTail {
     // (src, dst, w) triples; null src never joins rank state and null dst
     // receives nothing, but a null-dst edge still counts toward its
     // source's out-mass (matching the distributed outDeg groupBy)
-    val rows = e.collect().iterator
+    val raw = e.collect()
+    val rows = raw.iterator
       .filter(r => !r.isNullAt(0))
       .map(r => (r.get(0), if (r.isNullAt(1)) null else r.get(1), r.getDouble(2)))
       .toArray
       .sortBy { case (s, d, _) => (String.valueOf(s), String.valueOf(d)) }
-    val validArr = LocalTail.endpointIds(e, g)
+    val eps = LocalTail.endpointIds(e, g, raw)
+    val validArr = eps.vids
     val valid = validArr.toSet
     // resolve the personalized source with SQL equality (numeric
     // coercion!) so the local identity test uses the STORED value; an
@@ -214,13 +220,17 @@ class PageRank(g: GraphFrame) extends LocalTail {
 
     val fill = if (personalized) 0.0 else alpha
     val ranks = LocalTail.joinBack(g, ids.map(v => Row(v, rank(v))),
-      Seq(LocalTail.score("pagerank", fill)))(vertexIdsFor(g, Some(e)))
-    val outDeg = weightColV match {
-      case Some(w) => g.edges
-        .groupBy(col(SRC).as(ID))
-        .agg(sum(col(GraphFrame.quoteName(w)).cast("double")).as("outDegree"))
-      case None => g.outDegrees
-    }
-    GraphFrame(ranks, weightedEdges(outDeg))
+      Seq(LocalTail.score("pagerank", fill)))(vertexIdsFor(g, Some(eps)))
+    // unweighted (src, dst) edges: the probe rows are the whole edge table,
+    // and weight = 1/outdeg(src) from the out-weights above; a null src
+    // gets a null weight, as weightedEdges' left-outer join gives it
+    val weighted =
+      if (weightColV.isEmpty && g.edges.columns.sameElements(Array(SRC, DST))) {
+        val rs = raw.map(r => Row(r.get(0), r.get(1),
+          if (r.isNullAt(0)) null else 1.0 / outW(r.get(0))))
+        g.spark.createDataFrame(java.util.Arrays.asList(rs.toSeq: _*),
+          g.edges.schema.add(StructField(GraphFrame.WEIGHT, DoubleType, nullable = true)))
+      } else weightedEdges(outDegrees)
+    GraphFrame(ranks, weighted)
   }
 }

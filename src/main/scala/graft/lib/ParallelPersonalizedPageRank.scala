@@ -85,12 +85,14 @@ class ParallelPersonalizedPageRank(g: GraphFrame) extends LocalTail {
     import scala.collection.mutable
     import org.apache.spark.sql.{Row, types => T}
     val k = sourcesV.size
-    val rows = e.collect().iterator
+    val raw = e.collect()
+    val rows = raw.iterator
       .filter(r => !r.isNullAt(0))
       .map(r => (r.get(0), if (r.isNullAt(1)) null else r.get(1)))
       .toArray
       .sortBy { case (s, d) => (String.valueOf(s), String.valueOf(d)) }
-    val validArr = LocalTail.endpointIds(e, g)
+    val eps = LocalTail.endpointIds(e, g, raw)
+    val validArr = eps.vids
     val valid = validArr.toSet
     // one SQL job resolves every vertex's lane membership with the exact
     // `id === lit(source)` coercion of the distributed init
@@ -133,7 +135,7 @@ class ParallelPersonalizedPageRank(g: GraphFrame) extends LocalTail {
 
     val ranks = LocalTail.joinBack(g, ids.map(v => Row(v, rank(v).toSeq)),
       Seq(LocalTail.Out("pageranks", T.ArrayType(T.DoubleType, containsNull = true),
-        array(Seq.fill(k)(lit(0.0)): _*))))(vertexIdsFor(g, Some(e)))
+        array(Seq.fill(k)(lit(0.0)): _*))))(vertexIdsFor(g, Some(eps)))
 
     val outDegDF = g.outDegrees
     val weights = g.edges

@@ -93,10 +93,11 @@ class Salsa(g: GraphFrame) extends LocalTail {
    * accumulation order — a pure function of the graph value. */
   private def runLocal(e: DataFrame): DataFrame = {
     import scala.collection.mutable
-    val rows = e.collect().iterator
+    val raw = e.collect()
+    val rows = raw.iterator
       .map(r => (r.get(0), r.get(1), r.getDouble(2), r.getDouble(3))).toArray
       .sortBy { case (s, d, _, _) => (String.valueOf(s), String.valueOf(d)) }
-    val vids = LocalTail.endpointIds(e, g)
+    val vids = LocalTail.endpointIds(e, g, raw).vids
     var hub = mutable.HashMap.empty[Any, Double]
     var auth = mutable.HashMap.empty[Any, Double]
     vids.foreach { v => hub(v) = 1.0; auth(v) = 0.0 }

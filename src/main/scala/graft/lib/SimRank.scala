@@ -114,7 +114,8 @@ class SimRank(g: GraphFrame) extends LocalTail {
    * same total order the distributed `na < nb` comparison uses. */
   private def runLocal(e: DataFrame, ord: Ordering[Any]): DataFrame = {
     import scala.collection.mutable
-    val (edges, vids) = LocalTail.collectGraph(e, g)
+    val (edges, eps) = LocalTail.collectGraph(e, g)
+    val vids = eps.vids
     val valid = vids.toSet
     val kept = edges.filter { case (s, d) => valid(s) && valid(d) }
     val out = mutable.HashMap.empty[Any, mutable.ArrayBuffer[Any]]

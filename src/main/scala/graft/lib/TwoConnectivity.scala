@@ -67,13 +67,6 @@ class TwoConnectivity(g: GraphFrame) extends LocalTail {
     maxAncestorRowsV = n; this
   }
 
-  /** Canonical simple undirected edges (a < b). */
-  private def canonical: DataFrame =
-    g.edges.filter(col(SRC) =!= col(DST))
-      .select(least(col(SRC), col(DST)).as("ea"),
-        greatest(col(SRC), col(DST)).as("eb"))
-      .distinct()
-
   /** (ea, eb, is_bridge) over the canonical simple undirected edges. */
   def bridges(): DataFrame = runFor(Mode.Bridges)
 
@@ -101,9 +94,7 @@ class TwoConnectivity(g: GraphFrame) extends LocalTail {
   private def runFor(mode: Mode.Value): DataFrame = runModes(Set(mode))(mode)
 
   private def runModes(modes: Set[Mode.Value]): Map[Mode.Value, DataFrame] = {
-    val results = gate(canonical, pinForDistributed = true)(
-      und => modes.iterator.map(m => m -> runLocal(und, m)).toMap)(
-      runDistributed(_, modes))
+    val results = gateUndirected(g)(runLocal(_, _, modes))(runDistributed(_, modes))
     results.map { case (m, result) =>
       m -> (if (m == Mode.Bridges)
         result.select(col("ea").as(SRC), col("eb").as(DST), col("is_bridge"))
@@ -114,19 +105,26 @@ class TwoConnectivity(g: GraphFrame) extends LocalTail {
   // ---------------------------------------------------------------- local
 
   /** Iterative Tarjan (explicit stack — recursion would blow on long
-   * chains): disc/low over the DFS forest of the SIMPLE graph; bridge
-   * (p,c) iff low(c) > disc(p); articulation = root with ≥2 DFS children
-   * or non-root with a child where low(c) ≥ disc(v); 2ECC = union-find
-   * over non-bridge edges with min-id labels under the Spark total order
-   * ([[UnionFind.sparkOrdering]]). Bounded by the edge-count threshold. */
-  private def runLocal(und: DataFrame, mode: Mode.Value): DataFrame = {
+   * chains): disc/low over the DFS forest of the canonical undirected
+   * pairs of the collected raw edges ([[LocalTail.undirectedPairs]]),
+   * rooted at vertex-table ids only (as the BFS forest is rooted at
+   * vertices); bridge (p,c) iff low(c) > disc(p); articulation = root with
+   * ≥2 DFS children or non-root with a child where low(c) ≥ disc(v); 2ECC =
+   * union-find over non-bridge edges with min-id labels under the Spark
+   * total order `ord`. Vertices touching no edge get their closed form
+   * (not an articulation point, their own 2ECC) from the join-back fill.
+   * Bounded by the edge-count threshold. */
+  private def runLocal(e: DataFrame, ord: Ordering[Any],
+      modes: Set[Mode.Value]): Map[Mode.Value, DataFrame] = {
     import scala.collection.mutable
-    val spark = g.vertices.sparkSession
     val idType = g.vertices.schema(ID).dataType
-    val ord = UnionFind.sparkOrdering(idType).getOrElse(
-      Ordering.by[Any, String](String.valueOf))
-    val edges = LocalTail.collectEdges(und)
-    val vids = LocalTail.vertexIds(g)
+    val rows = e.collect()
+    val edges = LocalTail.undirectedPairs(rows, ord)
+    val eps = LocalTail.endpointIds(e, g, rows)
+    // every vertex row's id (no job on a fromEdges graph, else one bounded
+    // collect); above t vertex rows, the vertex-table endpoints
+    val allIds = vertexIdsFor(g, Some(eps))
+    val roots = allIds.getOrElse(eps.vids)
     val adj = mutable.HashMap.empty[Any, mutable.ArrayBuffer[Any]]
     edges.foreach { case (a, b) =>
       adj.getOrElseUpdate(a, mutable.ArrayBuffer.empty) += b
@@ -139,7 +137,7 @@ class TwoConnectivity(g: GraphFrame) extends LocalTail {
     val bridgeSet = mutable.HashSet.empty[(Any, Any)] // (child, parent)
     var time = 0
     val empty = mutable.ArrayBuffer.empty[Any]
-    vids.foreach { root =>
+    roots.foreach { root =>
       if (!disc.contains(root)) {
         var rootChildren = 0
         disc(root) = time; low(root) = time; time += 1
@@ -170,39 +168,35 @@ class TwoConnectivity(g: GraphFrame) extends LocalTail {
         if (rootChildren >= 2) isArt += root
       }
     }
-    def idf(name: String) = StructField(name, idType, nullable = true)
-    mode match {
+    def isBridge(a: Any, b: Any): Boolean = bridgeSet.contains((a, b)) || bridgeSet.contains((b, a))
+    def perVertex(out: LocalTail.Out)(value: Any => Any): DataFrame =
+      LocalTail.joinBack(g, roots.map(v => Row(v, value(v))), Seq(out), idOnly = true)(allIds)
+    modes.iterator.map {
       case Mode.Bridges =>
-        val rows = edges.map { case (a, b) =>
-          val isB = bridgeSet.contains((a, b)) || bridgeSet.contains((b, a))
-          Row(a, b, isB)
-        }
-        spark.createDataFrame(
-          java.util.Arrays.asList(rows: _*),
+        def idf(name: String) = StructField(name, idType, nullable = true)
+        Mode.Bridges -> g.spark.createDataFrame(
+          java.util.Arrays.asList(edges.map { case (a, b) => Row(a, b, isBridge(a, b)) }: _*),
           StructType(Seq(idf("ea"), idf("eb"),
             StructField("is_bridge", BooleanType, nullable = false))))
-      case Mode.Articulation =>
-        val rows = vids.map(v => Row(v, isArt.contains(v)))
-        spark.createDataFrame(
-          java.util.Arrays.asList(rows: _*),
-          StructType(Seq(idf(ID),
-            StructField("is_articulation", BooleanType, nullable = false))))
+      case Mode.Articulation => Mode.Articulation ->
+        perVertex(LocalTail.Out("is_articulation", BooleanType, lit(false)))(isArt.contains)
       case Mode.TwoEcc =>
         val uf = new UnionFind(ord)
-        edges.foreach { case (a, b) =>
-          if (!bridgeSet.contains((a, b)) && !bridgeSet.contains((b, a))) uf.union(a, b)
-        }
-        val rows = vids.map(v => Row(v, uf.find(v)))
-        spark.createDataFrame(
-          java.util.Arrays.asList(rows: _*),
-          StructType(Seq(idf(ID), idf("component"))))
-    }
+        edges.foreach { case (a, b) => if (!isBridge(a, b)) uf.union(a, b) }
+        Mode.TwoEcc -> perVertex(LocalTail.Out("component", idType, col(ID)))(uf.find)
+    }.toMap
   }
 
   // ---------------------------------------------------------- distributed
 
-  private def runDistributed(und: DataFrame, modes: Set[Mode.Value]): Map[Mode.Value, DataFrame] =
+  /** The distributed pipeline over the canonical simple undirected edges
+   * (ea < eb) of the raw `(src, dst)` probe `e`, pinned here: every phase
+   * re-reads them. */
+  private def runDistributed(e: DataFrame, modes: Set[Mode.Value]): Map[Mode.Value, DataFrame] =
       IterationManager.scoped(g.spark) { mgr =>
+    val und = mgr.persistLazy(e.filter(col(SRC) =!= col(DST))
+      .select(least(col(SRC), col(DST)).as("ea"), greatest(col(SRC), col(DST)).as("eb"))
+      .distinct())
     // one queue PER evolving frame: a cycle() frees the queue's older
     // frames, so dist and anc cycling through one queue would free each
     // other's live state (CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND)

@@ -48,19 +48,25 @@ class JobBudgetSpec extends TestBase with SparkEvents {
     }),
     ("labelPropagation", 6, () => Seq(friends.labelPropagation.maxIter(5).run())),
     ("kCore", 6, () => Seq(friends.kCore.run())),
-    ("louvain", 8, () => Seq(friends.louvain.run())),
-    ("articulationPoints", 5, () => Seq(friends.twoConnectivity.articulationPoints())),
+    ("louvain", 6, () => Seq(friends.louvain.run())),
+    ("articulationPoints", 2, () => Seq(friends.twoConnectivity.articulationPoints())),
     // string ids from the edges alone: each tail's join-back is its local
-    // relation, whose consumption runs no Spark job (pageRank's weighted
-    // edges still join the out-degrees)
+    // relation, whose consumption runs no Spark job
+    ("articulationPoints fromEdges", 2, () =>
+      Seq(GraphFrame.fromEdges(friends.edges).twoConnectivity.articulationPoints())),
     ("pageRank fromEdges", 5, () => {
       val pr = GraphFrame.fromEdges(friends.edges).pageRank.maxIter(10).run()
+      Seq(pr.vertices, pr.edges)
+    }),
+    // (src, dst) edges: the tail's weighted edges are its local relation too
+    ("pageRank fromEdges (src, dst)", 2, () => {
+      val pr = GraphFrame.fromEdges(friends.edges.select("src", "dst")).pageRank.maxIter(10).run()
       Seq(pr.vertices, pr.edges)
     }),
     ("labelPropagation fromEdges", 2, () =>
       Seq(GraphFrame.fromEdges(friends.edges).labelPropagation.maxIter(5).run())),
     ("kCore fromEdges", 2, () => Seq(GraphFrame.fromEdges(friends.edges).kCore.run())),
-    ("louvain fromEdges", 9, () => Seq(GraphFrame.fromEdges(friends.edges).louvain.run())),
+    ("louvain fromEdges", 2, () => Seq(GraphFrame.fromEdges(friends.edges).louvain.run())),
     ("connectedComponents", 4, () => Seq(friends.connectedComponents.run())),
     // string ids from the edges alone: the vertex ids are the collected
     // endpoints, so the tail reads no vertex table

@@ -22,6 +22,8 @@ trait TailCases { self: TestBase =>
       (g, t) => g.labelPropagation.maxIter(2).setSmallGraphThreshold(t).run()),
     TailCase("pageRank", Nil,
       (g, t) => g.pageRank.maxIter(2).setSmallGraphThreshold(t).run().vertices),
+    TailCase("pageRank edges", Nil,
+      (g, t) => g.pageRank.maxIter(2).setSmallGraphThreshold(t).run().edges),
     TailCase("parallelPersonalizedPageRank", Nil,
       (g, t) => g.parallelPersonalizedPageRank.sourceIds(Seq("a")).maxIter(2)
         .setSmallGraphThreshold(t).run().vertices),
@@ -35,6 +37,8 @@ trait TailCases { self: TestBase =>
       (g, t) => g.simRank.maxIter(1).setSmallGraphThreshold(t).run()),
     TailCase("twoConnectivity", Nil,
       (g, t) => g.twoConnectivity.setSmallGraphThreshold(t).bridges()),
+    TailCase("twoConnectivity articulation", Nil,
+      (g, t) => g.twoConnectivity.setSmallGraphThreshold(t).articulationPoints()),
     TailCase("minimumSpanningForest", Seq("w"),
       (g, t) => g.minimumSpanningForest.weightCol("w").setSmallGraphThreshold(t).run()),
     TailCase("betweenness", Nil, (g, t) => g.betweenness.setSmallGraphThreshold(t).run()),

@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /**
@@ -103,6 +104,60 @@ class TailParitySpec extends TestBase with TailCases with SparkEvents {
       canon(c.run(g, 100000L)) != canon(c.run(g, 0L))
     }
     assert(mismatched.isEmpty, s"tail != distributed: ${mismatched.map(_.name)}")
+  }
+
+  // Louvain and 2-connectivity probe the raw (src, dst) rows and build the
+  // canonical undirected edge set on the driver: self-loops, reciprocal and
+  // parallel pairs, null endpoints and (Louvain) endpoints outside the
+  // vertex table must drop exactly as the distributed filter, least/greatest,
+  // distinct and semi-joins drop them.
+  private val undirectedRuns: Seq[(String, (GraphFrame, Long) => DataFrame)] = Seq(
+    "louvain" -> ((g, t) => g.louvain.setSmallGraphThreshold(t).run()),
+    "louvain levels 2" -> ((g, t) => g.louvain.setLevels(2).setSmallGraphThreshold(t).run()),
+    "bridges" -> ((g, t) => g.twoConnectivity.setSmallGraphThreshold(t).bridges()),
+    "articulationPoints" ->
+      ((g, t) => g.twoConnectivity.setSmallGraphThreshold(t).articulationPoints()),
+    "twoEdgeComponents" ->
+      ((g, t) => g.twoConnectivity.setSmallGraphThreshold(t).twoEdgeComponents()))
+
+  /** Each run's tail (threshold t) against threshold 0 on `g`, and
+   * whether its own gate took the tail (an ineligible gate posts no
+   * decision; 2-connectivity's distributed body runs CC's gate). */
+  private def undirectedMismatches(g: GraphFrame, tail: Boolean,
+      t: Long = 100000L): Seq[String] =
+    undirectedRuns.flatMap { case (name, run) =>
+      val o = observed(canon(run(g, t)))
+      val own = o.decisions.filter(d => d.builder == "Louvain" || d.builder == "TwoConnectivity")
+      if (own.map(_.tail) != (if (tail) Seq(true) else Nil))
+        Some(s"$name: decisions ${o.decisions}, expected tail = $tail")
+      else if (o.result != canon(run(g, 0L))) Some(s"$name: tail != distributed")
+      else None
+    }
+
+  test("louvain and 2-connectivity tails canonicalize the raw edges as the distributed path") {
+    val v = Seq("a", "b", "c", "d", "e", "f").toDF("id") // f isolated
+    val e = Seq[(String, String)](("a", "a"), ("a", "b"), ("b", "a"), ("b", "c"), ("b", "c"),
+      ("c", "a"), ("c", "c"), ("c", "d"), ("d", "e"), ("e", "z"), ("z", "d"), ("x", "y"),
+      (null, "c"), ("d", null)).toDF("src", "dst")
+    // more vertex rows than t = the 14 edge rows: 2-connectivity's tail
+    // then roots at the vertex-table endpoints and joins its readouts back
+    val isolated = v.union((1 to 20).map(i => s"i$i").toDF("id"))
+    val failures = (Seq("joined" -> GraphFrame(v, e), "fromEdges" -> GraphFrame.fromEdges(e))
+      .flatMap { case (name, g) => undirectedMismatches(g, tail = true).map(m => s"$name $m") }) ++
+      undirectedMismatches(GraphFrame(isolated, e), tail = true, t = 14L).map(m => s"isolated $m")
+    assert(failures.isEmpty, failures.mkString("; "))
+  }
+
+  // Spark compares doubles with -0.0 = 0.0 and NaN = NaN, unlike boxed
+  // equals or ==: Double ids have no driver ordering and run distributed.
+  test("louvain and 2-connectivity with Double ids run distributed and agree") {
+    val nan = Double.NaN
+    val v = Seq(0.0, 1.0, 2.0, 3.0, nan).toDF("id")
+    val e = Seq((-0.0, 0.0), (nan, nan), (-0.0, 1.0), (0.0, 1.0), (1.0, 2.0), (2.0, 0.0),
+      (2.0, 3.0)).toDF("src", "dst")
+    val failures = Seq("joined" -> GraphFrame(v, e), "fromEdges" -> GraphFrame.fromEdges(e))
+      .flatMap { case (name, g) => undirectedMismatches(g, tail = false).map(m => s"$name $m") }
+    assert(failures.isEmpty, failures.mkString("; "))
   }
 
   // The gate reads at most t + 1 probe rows: at t = the probe's exact row
