@@ -217,14 +217,14 @@ private[lib] sealed abstract class PathCentrality(g: GraphFrame, op: String)
   protected def scale(n: Long): Double = if (sampled(n)) n.toDouble / sampleKV else 1.0
 
   /** The one run of every entry point: the edge table (weights checked
-   * first; null endpoints dropped, as the tails' collects drop them), the
-   * vertex count, then the one [[gate]] — `tail(edges, n)`
-   * over the sorted driver edge collect (hop mode reads every weight as
-   * 1), else `distributed(e, n, cut)` past the exact-source guard: `cut`
-   * is a [[IterationManager.keep]], and the result is handed out through
+   * first; null endpoints dropped, as the tails' edges drop them), then
+   * the one [[gate]] — `tail(lg, n)` when every vertex id fits the
+   * threshold too, n being their number, else `distributed(e, n, cut)`
+   * past the exact-source guard, n a vertex count: `cut` is a
+   * [[IterationManager.keep]], and the result is handed out through
    * [[IterationManager.finish]], so every frame cut is released on return
    * and on error alike. */
-  protected def runPaths(tail: (Array[(Any, Any, Double)], Long) => DataFrame)(
+  protected def runPaths(tail: (LocalGraph, Long) => DataFrame)(
       distributed: (DataFrame, Long, DataFrame => DataFrame) => DataFrame): DataFrame = {
     val linked = g.edges.filter(col(SRC).isNotNull && col(DST).isNotNull)
     val e = weightColV match {
@@ -235,14 +235,18 @@ private[lib] sealed abstract class PathCentrality(g: GraphFrame, op: String)
           s"$op weightCol '$w' must be non-null and > 0 on every edge")
         linked.groupBy(col(SRC), col(DST)).agg(min(wc.cast("double")).as("_bw"))
     }
-    val n = g.vertices.count()
-    gate(e, pinForDistributed = true)(p => tail(
-      if (weighted) LocalTail.collectWeightedEdges(p)
-      else LocalTail.collectEdges(p).map { case (s, d) => (s, d, 1.0) }, n)) { p =>
+    gate(g, e, pinForDistributed = true, andIf = _.vertexIds().isDefined)(lg =>
+      tail(lg, lg.vertexIds().get.length)) { p =>
+      val n = g.vertices.count()
       if (!sampled(n)) MultiSourceBFS.guardExactSources(op, n)
       IterationManager.scoped(g.spark)(mgr => mgr.finish(distributed(p, n, mgr.keep)))
     }
   }
+
+  /** The tail's edges in the collect's sorted order; hop mode reads every
+   * weight as 1. */
+  protected def localEdges(lg: LocalGraph): Array[(Any, Any, Double)] =
+    if (weighted) lg.weighted else lg.edges.map { case (s, d) => (s, d, 1.0) }
 
   /** The sources as an `(s)` frame: every vertex, or the k smallest by
    * md5 of the id's string form. */
@@ -254,8 +258,8 @@ private[lib] sealed abstract class PathCentrality(g: GraphFrame, op: String)
 
   /** The driver twin of [[sourceFrame]], in the order the tails visit
    * them. */
-  protected def localSources(n: Long): Array[Any] = {
-    val ids = LocalTail.vertexIds(g)
+  protected def localSources(lg: LocalGraph, n: Long): Array[Any] = {
+    val ids = lg.vertexIds().get.sortBy(String.valueOf(_))
     if (sampled(n))
       ids.sortBy(v => (MultiSourceBFS.md5Hex(String.valueOf(v)), String.valueOf(v)))
         .take(sampleKV)
@@ -287,10 +291,10 @@ private[lib] sealed abstract class PathCentrality(g: GraphFrame, op: String)
   /** The driver twin of [[distanceFrame]]: `(key, d)` per reached pair,
    * source by source, each source's pairs by ascending distance (a fixed
    * summation order for the per-source sums). */
-  protected def localDistances(edges: Array[(Any, Any, Double)], n: Long)
-      : Iterator[(Any, Double)] = {
+  protected def localDistances(lg: LocalGraph, n: Long): Iterator[(Any, Double)] = {
+    val edges = localEdges(lg)
     val adj = adjacency(if (sampled(n)) edges.map { case (s, d, w) => (d, s, w) } else edges)
-    localSources(n).iterator.flatMap { s =>
+    localSources(lg, n).iterator.flatMap { s =>
       MultiSourceBFS.localPaths(adj, s, weighted)._2.toSeq.sortBy(_._2)
         .map { case (v, d) => (if (sampled(n)) v else s, d) }
     }
@@ -304,10 +308,11 @@ private[lib] sealed abstract class PathCentrality(g: GraphFrame, op: String)
 
   /** The driver tails' join-back of their score maps: a vertex absent
    * from a map scores 0 there. */
-  protected def joinLocal(scores: (String, collection.Map[Any, Double])*): DataFrame =
-    LocalTail.joinBack(g, scores.flatMap(_._2.keys).distinct.map(v =>
+  protected def joinLocal(lg: LocalGraph)(scores: (String, collection.Map[Any, Double])*)
+      : DataFrame =
+    lg.joinBack(scores.flatMap(_._2.keys).distinct.map(v =>
         Row.fromSeq(v +: scores.map(_._2.getOrElse(v, 0.0)))),
-      scores.map(s => LocalTail.score(s._1, 0.0)))(vertexIdsFor(g))
+      scores.map(s => LocalTail.score(s._1, 0.0)))
 }
 
 /** Brandes betweenness centrality — see [[MultiSourceBFS]] for the
@@ -323,9 +328,9 @@ class Betweenness(g: GraphFrame) extends PathCentrality(g, "betweenness") {
   /** Divide by (n-1)(n-2) — the directed-graph pair count. */
   def normalized(b: Boolean): this.type = { normalizedV = b; this }
 
-  def run(): DataFrame = runPaths({ (edges, n) =>
-    val btw = localBrandes(edges, n)._1
-    joinLocal(("betweenness", btw.map { case (v, b) => (v, b * factor(n)) }))
+  def run(): DataFrame = runPaths({ (lg, n) =>
+    val btw = localBrandes(lg, n)._1
+    joinLocal(lg)(("betweenness", btw.map { case (v, b) => (v, b * factor(n)) }))
   }) { (e, n, cut) =>
     val delta =
       if (weighted) weightedDeltas(e, n, cut)
@@ -353,13 +358,13 @@ class Betweenness(g: GraphFrame) extends PathCentrality(g, "betweenness") {
    * shortest path (self-loops included). */
   def runEdges(): DataFrame = {
     require(!weighted, "edge betweenness is unweighted-only (weightCol is not supported)")
-    runPaths({ (edges, n) =>
-      val ebt = localBrandes(edges, n)._2
+    runPaths({ (lg, n) =>
+      val ebt = localBrandes(lg, n)._2
       val schema = StructType(Seq(StructField(SRC, g.edges.schema(SRC).dataType),
         StructField(DST, g.edges.schema(DST).dataType),
         StructField("edge_betweenness", DoubleType)))
-      val rows: java.util.List[Row] = java.util.Arrays.asList(edges.map { case (u, v, _) =>
-        Row(u, v, ebt.getOrElse((u, v), 0.0) * scale(n)) }: _*)
+      val rows: java.util.List[Row] = java.util.Arrays.asList(localEdges(lg).map {
+        case (u, v, _) => Row(u, v, ebt.getOrElse((u, v), 0.0) * scale(n)) }: _*)
       g.edges.sparkSession.createDataFrame(rows, schema)
     }) { (e, n, cut) =>
       val parts = backward(e, n, cut, edgeCredit = true)._2
@@ -466,12 +471,12 @@ class Betweenness(g: GraphFrame) extends PathCentrality(g, "betweenness") {
    * the forward phase of [[MultiSourceBFS.localPaths]], then one sweep in
    * reverse settled order that credits every shortest-path DAG edge (v, w)
    * with σ_v/σ_w·(1+δ_w). Returns (vertex credit, edge credit). */
-  private def localBrandes(edges: Array[(Any, Any, Double)], n: Long)
+  private def localBrandes(lg: LocalGraph, n: Long)
       : (mutable.HashMap[Any, Double], mutable.HashMap[(Any, Any), Double]) = {
-    val adj = adjacency(edges)
+    val adj = adjacency(localEdges(lg))
     val btw = mutable.HashMap.empty[Any, Double]
     val ebt = mutable.HashMap.empty[(Any, Any), Double]
-    for (s <- localSources(n)) {
+    for (s <- localSources(lg, n)) {
       val (order, dist, sigma) = MultiSourceBFS.localPaths(adj, s, weighted)
       val delta = mutable.HashMap.empty[Any, Double]
       for (v <- order.reverseIterator) {
@@ -500,10 +505,10 @@ class Betweenness(g: GraphFrame) extends PathCentrality(g, "betweenness") {
 class Eccentricity(g: GraphFrame) extends PathCentrality(g, "eccentricity") {
   def run(): DataFrame = {
     val eccType = if (weighted) "double" else "int"
-    runPaths({ (edges, n) =>
+    runPaths({ (lg, n) =>
       val ecc = mutable.HashMap.empty[Any, Double]
-      for ((k, d) <- localDistances(edges, n)) ecc(k) = math.max(ecc.getOrElse(k, 0.0), d)
-      joinLocal(("eccentricity", ecc)).withColumn("eccentricity", col("eccentricity").cast(eccType))
+      for ((k, d) <- localDistances(lg, n)) ecc(k) = math.max(ecc.getOrElse(k, 0.0), d)
+      joinLocal(lg)(("eccentricity", ecc)).withColumn("eccentricity", col("eccentricity").cast(eccType))
     }) { (e, n, cut) =>
       joinScores(distanceFrame(e, n, cut).groupBy("_k").agg(max("d").as("_ec")),
         coalesce(col("_ec"), lit(0)).cast(eccType).as("eccentricity"))
@@ -522,17 +527,17 @@ class Eccentricity(g: GraphFrame) extends PathCentrality(g, "eccentricity") {
  * Wasserman–Faust closeness is a ratio estimate (consistent, slight
  * small-k bias). */
 class Closeness(g: GraphFrame) extends PathCentrality(g, "closeness") {
-  def run(): DataFrame = runPaths({ (edges, n) =>
+  def run(): DataFrame = runPaths({ (lg, n) =>
     // per scored vertex: reachable count r, distance sum, harmonic sum
     val r = mutable.HashMap.empty[Any, Double]
     val total = mutable.HashMap.empty[Any, Double]
     val h = mutable.HashMap.empty[Any, Double]
-    for ((k, d) <- localDistances(edges, n) if d > 0) {
+    for ((k, d) <- localDistances(lg, n) if d > 0) {
       r(k) = r.getOrElse(k, 0.0) + 1.0
       total(k) = total.getOrElse(k, 0.0) + d
       h(k) = h.getOrElse(k, 0.0) + 1.0 / d
     }
-    joinLocal(
+    joinLocal(lg)(
       ("closeness", r.map { case (v, rv) =>
         (v, scale(n) * rv / math.max(n - 1.0, 1.0) * rv / total(v)) }),
       ("harmonic", h.map { case (v, hv) => (v, scale(n) * hv) }))

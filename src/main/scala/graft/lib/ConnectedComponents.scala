@@ -28,7 +28,7 @@ import graft.GraphFrame
  * [[GraphFrame.indexedVertices]] does, unions the edges' surrogates with
  * the rounds' rules (see `runTwoPhase`) and labels each component with its
  * minimum surrogate, so it returns the rounds' exact rows, through
- * [[LocalTail.joinBack]] (on the `fromEdges` endpoint set a local relation
+ * [[LocalGraph.joinBack]] (on the `fromEdges` endpoint set a local relation
  * that reads no input).
  * The rounds finish on the driver too once their remainder fits.
  *
@@ -113,40 +113,31 @@ class ConnectedComponents(g: GraphFrame) extends LocalTail {
   private def runTwoPhase(): DataFrame = {
     val probe = g.edges.select(col(SRC), col(DST))
     val idType = g.vertices.schema(ID).dataType
-    // the gate's collect fills the edges; `idsFit` then reads every vertex
-    // row's id, from those edges or with one bounded collect
-    var ids = Option.empty[Array[Any]]
-    def idsFit(endpoints: => Array[Any]): Boolean = {
-      ids = LocalTail.vertexIdsUpTo(g, idType, smallGraphThreshold,
-        g.verticesAreEndpoints)(endpoints)
-      ids.isDefined
-    }
+    // every vertex row's id must fit t too: from the collected endpoints
+    // on the fromEdges endpoint set, else one bounded collect
+    val idsFit = (lg: LocalGraph) => lg.vertexIds().isDefined
     if (g.hasIntegralIdType) {
       // the surrogate is the id as a Long, and the rounds translate no edge:
       // an edge to a dangling endpoint still joins its component
-      var edges = Array.empty[ConnectedComponents.LongEdge]
-      gateCollect(probe, andIf = idsFit(ConnectedComponents.endpoints(edges, idType))) { p =>
-        edges = longEdges(p); edges
-      } { _ =>
-        labelLocally(ids.get, ids.get.map { case n: Number => n.longValue; case _ => 0L },
+      gateCollect(probe)(longEdges)(edges => (edges, LocalGraph.ofEndpoints(g,
+          smallGraphThreshold, probe.schema)(ConnectedComponents.endpoints(edges, idType))))(
+          el => idsFit(el._2)) { case (edges, lg) =>
+        val ids = lg.vertexIds().get
+        labelLocally(lg, ids, ids.map { case n: Number => n.longValue; case _ => 0L },
           edges.iterator.filter(e => e.nulls == 0 && e.src != e.dst).map(e => (e.src, e.dst)))
       }(_ => runDistributed())
     } else {
       // string ids whose edges have their type: the rounds join the edges
       // to the minted surrogates, so an edge counts only when both
       // endpoints are vertex ids, once per surrogate of each
-      var rows = Array.empty[Row]
       val eligible = UnionFind.sparkOrdering(idType).isDefined &&
         probe.schema.forall(_.dataType == idType)
-      gateCollect(probe, eligible,
-          andIf = idsFit(rows.iterator.flatMap(_.toSeq).distinct.toArray)) { p =>
-        rows = p.collect(); rows
-      } { _ =>
-        val v = ids.get
+      gate(g, probe, eligible, edgeRows = true, andIf = idsFit) { lg =>
+        val v = lg.vertexIds().get
         val sur = ConnectedComponents.mintSurrogates(v, idType)
         val sursOf = v.indices.filter(v(_) != null).groupMap(v(_))(sur(_))
         def of(id: Any) = sursOf.getOrElse(id, Nil)
-        labelLocally(v, sur, for (r <- rows.iterator; s <- of(r.get(0)); d <- of(r.get(1))
+        labelLocally(lg, v, sur, for (r <- lg.rows.iterator; s <- of(r.get(0)); d <- of(r.get(1))
           if s != d) yield (s, d))
       }(_ => runDistributed())
     }
@@ -156,13 +147,13 @@ class ConnectedComponents(g: GraphFrame) extends LocalTail {
    * roots, the labels the distributed fixpoint produces; a vertex row no
    * edge touches keeps its own surrogate `sur(i)` and a null id gets a
    * null component. The `(id, component)` rows of every vertex row go back
-   * through [[LocalTail.joinBack]]. */
-  private def labelLocally(ids: Array[Any], sur: Array[Long],
+   * through [[LocalGraph.joinBack]]. */
+  private def labelLocally(lg: LocalGraph, ids: Array[Any], sur: Array[Long],
       pairs: Iterator[(Long, Long)]): DataFrame = {
     val labels = UnionFind.minLabels(pairs, Ordering.Long.on[Any](_.asInstanceOf[Long])).toMap
-    LocalTail.joinBack(g, ids.indices.map { i =>
+    lg.joinBack(ids.indices.map { i =>
       Row(ids(i), if (ids(i) == null) null else labels.getOrElse(sur(i), sur(i)))
-    }, Seq(LocalTail.Out("component", LongType, lit(null))))(Some(ids))
+    }, Seq(LocalTail.Out("component", LongType, lit(null))))
   }
 
   /** The star-contraction rounds from the canonical edge list. */

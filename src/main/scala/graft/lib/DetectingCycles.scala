@@ -30,7 +30,7 @@ class DetectingCycles(g: GraphFrame) extends LocalTail {
    * makes every non-head vertex strictly greater than the head, which the
    * local DFS replays with the id type's Spark ordering. */
   def run(): DataFrame =
-    gateOrdered(g.edges.select(col(SRC), col(DST)), g.vertices.schema(ID).dataType)(
+    gateOrdered(g, g.edges.select(col(SRC), col(DST)), g.vertices.schema(ID).dataType)(
       runLocal)(_ => runDistributed())
 
   private def runDistributed(): DataFrame = {
@@ -66,10 +66,9 @@ class DetectingCycles(g: GraphFrame) extends LocalTail {
    * distributed head guard), closures only back to the head, cycle size
    * capped at maxIter. Parallel edges dedup through the result set,
    * matching the distributed array_union + distinct. */
-  private def runLocal(e: DataFrame, ord: Ordering[Any]): DataFrame = {
+  private def runLocal(lg: LocalGraph, ord: Ordering[Any]): DataFrame = {
     import scala.collection.mutable
-    val (edges, eps) = LocalTail.collectGraph(e, g)
-    val vids = eps.vids
+    val (edges, vids) = (lg.edges, lg.vids)
     val valid = vids.toSet
     val adj = edges.iterator
       .filter { case (s, d) => valid(s) && valid(d) }

@@ -55,8 +55,8 @@ class Eigenvector(g: GraphFrame) extends LocalTail {
     // bit-exactly).
     val wCol = weightColV.map(w => col(graft.GraphFrame.quoteName(w))
       .cast("double")).getOrElse(lit(1.0))
-    gate(g.edges.select(col(SRC), col(DST), wCol.as("_w")),
-      pinForDistributed = true)(runLocal)(runDistributed)
+    gate(g, g.edges.select(col(SRC), col(DST), wCol.as("_w")),
+      pinForDistributed = true, edgeRows = true)(runLocal)(runDistributed)
   }
 
   private def runDistributed(e: DataFrame): DataFrame = {
@@ -90,12 +90,9 @@ class Eigenvector(g: GraphFrame) extends LocalTail {
    * normalization), sorted-edge accumulation order so the result is a
    * pure function of the graph value. Vertices touching no edge score 0
    * from round 1 on — filled in closed form by the join-back. */
-  private def runLocal(e: DataFrame): DataFrame = {
+  private def runLocal(lg: LocalGraph): DataFrame = {
     import scala.collection.mutable
-    val rows = e.collect()
-    val edges = LocalTail.weightedEdgesOf(rows)
-    val eps = LocalTail.endpointIds(e, g, rows)
-    val vids = eps.vids
+    val (edges, vids) = (lg.weighted, lg.vids)
     val valid = vids.toSet
     var x = mutable.HashMap.empty[Any, Double]
     vids.foreach(v => x(v) = 1.0)
@@ -115,7 +112,7 @@ class Eigenvector(g: GraphFrame) extends LocalTail {
       }
     }
     val norm = vids.iterator.map(v => math.abs(x(v))).foldLeft(0.0)(math.max)
-    LocalTail.joinBack(g, vids.map(v => Row(v, if (norm > 0) x(v) / norm else 0.0)),
-      Seq(LocalTail.score("eigenvector", 0.0)))(vertexIdsFor(g, Some(eps)))
+    lg.joinBack(vids.map(v => Row(v, if (norm > 0) x(v) / norm else 0.0)),
+      Seq(LocalTail.score("eigenvector", 0.0)))
   }
 }

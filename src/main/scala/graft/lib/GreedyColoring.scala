@@ -56,17 +56,19 @@ class GreedyColoring(g: GraphFrame) extends LocalTail {
     hashModeV = m; this
   }
 
-  /** The driver tail (docs/THRESHOLDS.md row 11) runs in md5 mode only. */
-  def run(): DataFrame = {
-    val und = g.edges
+  /** The driver tail (docs/THRESHOLDS.md row 11) runs in md5 mode only,
+   * probes the raw edges and needs every vertex row's id within the
+   * threshold too. */
+  def run(): DataFrame =
+    gateUndirected(g, eligible = hashModeV == "md5", andIf = _.vertexIds().isDefined)(
+      runLocal)(_ => runDistributed())
+
+  private def runDistributed(): DataFrame = IterationManager.scoped(g.spark) { mgr =>
+    // the undirected simple edges, pinned: every Luby round re-reads them
+    val und = mgr.persistLazy(g.edges
       .filter(col(SRC) =!= col(DST))
       .select(least(col(SRC), col(DST)).as(SRC), greatest(col(SRC), col(DST)).as(DST))
-      .distinct()
-    gate(und, eligible = hashModeV == "md5", pinForDistributed = true)(
-      runLocal)(runDistributed)
-  }
-
-  private def runDistributed(und: DataFrame): DataFrame = IterationManager.scoped(g.spark) { mgr =>
+      .distinct())
     // every loop-carried frame is kept, not cycled: color boundaries
     // re-read frames from many rounds back (uncolored, per-round winners).
     // Pools and uncolored sets are kept with their row count observed on
@@ -130,11 +132,10 @@ class GreedyColoring(g: GraphFrame) extends LocalTail {
    * hash-only winner rule (no id tie-break) is the same in both paths
    * and the SQL oracle — over sorted adjacency, so the coloring is a
    * pure function of the graph value. */
-  private def runLocal(und: DataFrame): DataFrame = {
-    val edges = LocalTail.collectEdges(und)
-    val ids = LocalTail.vertexIds(g)
+  private def runLocal(lg: LocalGraph, ord: Ordering[Any]): DataFrame = {
+    val ids = lg.vertexIds().get
     val adj = mutable.HashMap.empty[Any, mutable.ArrayBuffer[Any]]
-    for ((s, d) <- edges) {
+    for ((s, d) <- lg.undirected(ord)) {
       adj.getOrElseUpdate(s, mutable.ArrayBuffer.empty) += d
       adj.getOrElseUpdate(d, mutable.ArrayBuffer.empty) += s
     }
@@ -162,7 +163,6 @@ class GreedyColoring(g: GraphFrame) extends LocalTail {
       color += 1
     }
     for (v <- uncolored) colorOf(v) = -1
-    LocalTail.joinBack(g, ids.map(v => Row(v, colorOf(v))),
-      Seq(LocalTail.Out("color", IntegerType, lit(0))))(Some(ids))
+    lg.joinBack(ids.map(v => Row(v, colorOf(v))), Seq(LocalTail.Out("color", IntegerType, lit(0))))
   }
 }

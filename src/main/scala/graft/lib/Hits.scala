@@ -43,8 +43,8 @@ class Hits(g: GraphFrame) extends LocalTail {
     // expensive upstream query (e.g. a multi-join edge derivation).
     // maxIter=0 normalizes the all-ones init over ALL vertices, which the
     // endpoints-only local loop cannot see — distributed handles it
-    gate(g.edges.select(col(SRC), col(DST)), eligible = maxIterV >= 1,
-      pinForDistributed = true)(runLocal)(runDistributed)
+    gate(g, g.edges.select(col(SRC), col(DST)), eligible = maxIterV >= 1,
+      pinForDistributed = true, edgeRows = true)(runLocal)(runDistributed)
 
   private def runDistributed(e: DataFrame): DataFrame = {
     // The guard maxes and the final L2 norms ride the chunk cuts' own
@@ -112,10 +112,9 @@ class Hits(g: GraphFrame) extends LocalTail {
    * normalization), sorted-edge accumulation order so the result is a pure
    * function of the graph value. Vertices touching no edge score 0 from
    * round 1 on — filled in closed form by the join-back. */
-  private def runLocal(e: DataFrame): DataFrame = {
+  private def runLocal(lg: LocalGraph): DataFrame = {
     import scala.collection.mutable
-    val (edges, eps) = LocalTail.collectGraph(e, g)
-    val vids = eps.vids
+    val (edges, vids) = (lg.edges, lg.vids)
     val valid = vids.toSet
     var hub = mutable.HashMap.empty[Any, Double]
     var auth = mutable.HashMap.empty[Any, Double]
@@ -148,9 +147,8 @@ class Hits(g: GraphFrame) extends LocalTail {
     }
     val hNorm = math.sqrt(vids.iterator.map(v => hub(v) * hub(v)).sum)
     val aNorm = math.sqrt(vids.iterator.map(v => auth(v) * auth(v)).sum)
-    LocalTail.joinBack(g, vids.map(v => Row(v, if (hNorm > 0) hub(v) / hNorm else 0.0,
+    lg.joinBack(vids.map(v => Row(v, if (hNorm > 0) hub(v) / hNorm else 0.0,
         if (aNorm > 0) auth(v) / aNorm else 0.0)),
-      Seq(LocalTail.score("hub", 0.0), LocalTail.score("authority", 0.0)))(
-      vertexIdsFor(g, Some(eps)))
+      Seq(LocalTail.score("hub", 0.0), LocalTail.score("authority", 0.0)))
   }
 }

@@ -58,7 +58,7 @@ class IndependentCascade(g: GraphFrame) extends LocalTail {
       .filter(col(SRC) =!= col(DST))
       .filter(coin < threshold)
       .distinct()
-    gate(live, pinForDistributed = true)(runLocal(_, seeds))(runDistributed(_, seeds))
+    gate(g, live, pinForDistributed = true)(runLocal(_, seeds))(runDistributed(_, seeds))
   }
 
   private def runDistributed(live: DataFrame, seeds: Seq[Any]): DataFrame =
@@ -87,10 +87,8 @@ class IndependentCascade(g: GraphFrame) extends LocalTail {
 
   /** Driver tail: plain BFS over the collected live edges — the level
    * assignment is unique, so no ordering requirement. */
-  private def runLocal(live: DataFrame, seeds: Seq[Any]): DataFrame = {
-    val adj = live.collect().groupBy(_.get(0)).map { case (u, rs) =>
-      u -> rs.map(_.get(1)).toSeq
-    }
+  private def runLocal(lg: LocalGraph, seeds: Seq[Any]): DataFrame = {
+    val adj = lg.edges.groupBy(_._1).map { case (u, es) => u -> es.map(_._2).toSeq }
     val round = scala.collection.mutable.HashMap.empty[Any, Int]
     seeds.foreach(s => round(s) = 0)
     var frontier: Seq[Any] = seeds.distinct
@@ -101,7 +99,7 @@ class IndependentCascade(g: GraphFrame) extends LocalTail {
         .distinct.filterNot(round.contains)
       frontier.foreach(v => round(v) = r)
     }
-    LocalTail.joinBack(g, round.map { case (v, r) => Row(v, r) },
-      Seq(LocalTail.Out("round", IntegerType, lit(null))))(vertexIdsFor(g)).select(ID, "round")
+    lg.joinBack(round.map { case (v, r) => Row(v, r) },
+      Seq(LocalTail.Out("round", IntegerType, lit(null)))).select(ID, "round")
   }
 }

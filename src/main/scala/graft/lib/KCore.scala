@@ -31,7 +31,7 @@ class KCore(g: GraphFrame) extends LocalTail {
    * maxIter cap, so even a cap-truncated mid-convergence state matches
    * the distributed one. */
   def run(): DataFrame =
-    gate(g.edges.select(col(SRC), col(DST)))(runLocal)(e => runDistributed(
+    gate(g, g.edges.select(col(SRC), col(DST)), edgeRows = true)(runLocal)(e => runDistributed(
       // undirected simple graph
       e.filter(col(SRC) =!= col(DST))
         .select(least(col(SRC), col(DST)).as(SRC), greatest(col(SRC), col(DST)).as(DST))
@@ -72,10 +72,9 @@ class KCore(g: GraphFrame) extends LocalTail {
    * no edge stay at core 0 via the join-back fill. The undirected simple
    * graph is built here from the collected edges: self-loops dropped,
    * each neighbor once. */
-  private def runLocal(e: DataFrame): DataFrame = {
+  private def runLocal(lg: LocalGraph): DataFrame = {
     import scala.collection.mutable
-    val (edges, eps) = LocalTail.collectGraph(e, g)
-    val vids = eps.vids
+    val (edges, vids) = (lg.edges, lg.vids)
     val valid = vids.toSet
     val adj = mutable.HashMap.empty[Any, mutable.LinkedHashSet[Any]]
     edges.iterator.filter { case (s, d) => s != d && valid(s) && valid(d) }.foreach {
@@ -109,7 +108,6 @@ class KCore(g: GraphFrame) extends LocalTail {
       core = next
       round += 1
     }
-    LocalTail.joinBack(g, vids.map(v => Row(v, core(v))),
-      Seq(LocalTail.Out("kcore", IntegerType, lit(0))))(vertexIdsFor(g, Some(eps)))
+    lg.joinBack(vids.map(v => Row(v, core(v))), Seq(LocalTail.Out("kcore", IntegerType, lit(0))))
   }
 }

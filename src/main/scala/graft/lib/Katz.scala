@@ -30,7 +30,7 @@ class Katz(g: GraphFrame) extends LocalTail {
   def run(): DataFrame =
     // pinned on both paths: re-joined every round, and possibly an
     // expensive upstream query
-    gate(g.edges.select(col(SRC), col(DST)), pinForDistributed = true)(
+    gate(g, g.edges.select(col(SRC), col(DST)), pinForDistributed = true, edgeRows = true)(
       runLocal)(runDistributed)
 
   private def runDistributed(e: DataFrame): DataFrame =
@@ -50,10 +50,9 @@ class Katz(g: GraphFrame) extends LocalTail {
   /** Driver-side tail: identical recurrence, sorted-edge accumulation
    * order. A vertex touching no edge earns exactly β every round — filled
    * in closed form by the join-back. */
-  private def runLocal(e: DataFrame): DataFrame = {
+  private def runLocal(lg: LocalGraph): DataFrame = {
     import scala.collection.mutable
-    val (edges, eps) = LocalTail.collectGraph(e, g)
-    val vids = eps.vids
+    val (edges, vids) = (lg.edges, lg.vids)
     val valid = vids.toSet
     var x = mutable.HashMap.empty[Any, Double]
     vids.foreach(v => x(v) = betaV)
@@ -67,7 +66,6 @@ class Katz(g: GraphFrame) extends LocalTail {
       vids.foreach(v => nx(v) = betaV + alphaV * in(v))
       x = nx
     }
-    LocalTail.joinBack(g, vids.map(v => Row(v, x(v))), Seq(LocalTail.score("katz", betaV)))(
-      vertexIdsFor(g, Some(eps)))
+    lg.joinBack(vids.map(v => Row(v, x(v))), Seq(LocalTail.score("katz", betaV)))
   }
 }

@@ -46,8 +46,8 @@ class LabelPropagation(g: GraphFrame) extends LocalTail {
   /** The driver tail (docs/THRESHOLDS.md row 2) replays mode's
    * deterministic smallest-tie-break with the id type's Spark ordering. */
   def run(): DataFrame =
-    gateOrdered(g.edges.select(col(SRC), col(DST)), g.vertices.schema(ID).dataType)(
-      runLocal)(_ => runDistributed())
+    gateOrdered(g, g.edges.select(col(SRC), col(DST)), g.vertices.schema(ID).dataType,
+      edgeRows = true)(runLocal)(_ => runDistributed())
 
   private def runDistributed(): DataFrame = {
     // mode() ignores nulls and returns null on an empty group; a vertex
@@ -69,10 +69,9 @@ class LabelPropagation(g: GraphFrame) extends LocalTail {
    * (the Pregel state join drops them); a vertex with no mail keeps its
    * label; ties break to the smallest label under the id type's Spark
    * ordering — exactly mode(deterministic = true). */
-  private def runLocal(e: DataFrame, ord: Ordering[Any]): DataFrame = {
+  private def runLocal(lg: LocalGraph, ord: Ordering[Any]): DataFrame = {
     import scala.collection.mutable
-    val (edges, eps) = LocalTail.collectGraph(e, g)
-    val vids = eps.vids
+    val (edges, vids) = (lg.edges, lg.vids)
     val valid = vids.toSet
     // per-edge-row votes: directed sends src→dst; undirected both ways
     val sends: Array[(Any, Any)] = {
@@ -100,8 +99,7 @@ class LabelPropagation(g: GraphFrame) extends LocalTail {
       label = next
     }
     // vertices touching no edge never receive mail: label = own id
-    LocalTail.joinBack(g, vids.map(v => Row(v, label(v))),
-      Seq(LocalTail.Out("label", g.vertices.schema(ID).dataType, col(ID))))(
-      vertexIdsFor(g, Some(eps)))
+    lg.joinBack(vids.map(v => Row(v, label(v))),
+      Seq(LocalTail.Out("label", g.vertices.schema(ID).dataType, col(ID))))
   }
 }

@@ -222,12 +222,10 @@ class Louvain(g: GraphFrame) extends LocalTail {
   /** Driver tail: the identical synchronous integer-gain rounds and
    * coarse levels, over the canonical undirected pairs of the collected
    * raw edges whose endpoints are both vertices. */
-  private def runLocal(e: DataFrame, ord: Ordering[Any]): DataFrame = {
+  private def runLocal(lg: LocalGraph, ord: Ordering[Any]): DataFrame = {
     import scala.collection.mutable
-    val rows = e.collect()
-    val eps = LocalTail.endpointIds(e, g, rows)
-    val valid = eps.vids.toSet
-    val baseEdges: Array[(Any, Any)] = LocalTail.undirectedPairs(rows, ord)
+    val valid = lg.vids.toSet
+    val baseEdges: Array[(Any, Any)] = lg.undirected(ord)
       .filter { case (a, b) => valid(a) && valid(b) }
     val baseVids: Array[Any] = baseEdges.iterator.flatMap(p => Iterator(p._1, p._2))
       .toArray.distinct
@@ -308,8 +306,7 @@ class Louvain(g: GraphFrame) extends LocalTail {
       }
     }
     // vertices touching no edge stay in their own community
-    LocalTail.joinBack(g, baseVids.map(v => Row(v, assign(v))),
-      Seq(LocalTail.Out("community", g.vertices.schema(ID).dataType, col(ID))))(
-      vertexIdsFor(g, Some(eps)))
+    lg.joinBack(baseVids.map(v => Row(v, assign(v))),
+      Seq(LocalTail.Out("community", g.vertices.schema(ID).dataType, col(ID))))
   }
 }

@@ -39,16 +39,13 @@ class MaximalIndependentSet(g: GraphFrame) extends LocalTail {
 
   /** The driver tail (same as [[GreedyColoring]]'s; docs/THRESHOLDS.md
    * row 11) runs in md5 mode only: the local loop replays md5 hex
-   * ordering, and xxhash64 is a Tungsten internal. */
-  def run(): DataFrame = {
-    val und = g.edges
-      .filter(col(SRC) =!= col(DST))
-      .select(least(col(SRC), col(DST)).as(SRC), greatest(col(SRC), col(DST)).as(DST))
-      .distinct()
-    gate(und, eligible = hashModeV == "md5")(runLocal)(runDistributed)
-  }
+   * ordering, and xxhash64 is a Tungsten internal. It probes the raw
+   * edges and needs every vertex row's id within the threshold too. */
+  def run(): DataFrame =
+    gateUndirected(g, eligible = hashModeV == "md5", andIf = _.vertexIds().isDefined)(
+      runLocal)(_ => runDistributed())
 
-  private def runDistributed(und: DataFrame): DataFrame = IterationManager.scoped(g.spark) { mgr =>
+  private def runDistributed(): DataFrame = IterationManager.scoped(g.spark) { mgr =>
     // each remaining set is cut with its row count observed on the cut's
     // own job: no separate emptiness probe per round
     def cut(df: DataFrame, round: Int): (DataFrame, Long) = {
@@ -56,7 +53,10 @@ class MaximalIndependentSet(g: GraphFrame) extends LocalTail {
       (c, n.asInstanceOf[Long])
     }
     var (remaining, left) = cut(g.vertices.select(ID), 0)
-    val undP = mgr.persistOnly(und)
+    val undP = mgr.persistOnly(g.edges
+      .filter(col(SRC) =!= col(DST))
+      .select(least(col(SRC), col(DST)).as(SRC), greatest(col(SRC), col(DST)).as(DST))
+      .distinct())
     var mis: Option[DataFrame] = None
 
     var round = 0
@@ -100,12 +100,11 @@ class MaximalIndependentSet(g: GraphFrame) extends LocalTail {
    * order the same way Spark's string min orders them, and the strict
    * hash-only winner rule matches the distributed path and the SQL
    * oracle. Pure function of the graph value (sorted adjacency). */
-  private def runLocal(und: DataFrame): DataFrame = {
+  private def runLocal(lg: LocalGraph, ord: Ordering[Any]): DataFrame = {
     import scala.collection.mutable
-    val edges = LocalTail.collectEdges(und)
-    val ids = LocalTail.vertexIds(g)
+    val ids = lg.vertexIds().get
     val adj = mutable.HashMap.empty[Any, mutable.ArrayBuffer[Any]]
-    for ((s, d) <- edges) {
+    for ((s, d) <- lg.undirected(ord)) {
       adj.getOrElseUpdate(s, mutable.ArrayBuffer.empty) += d
       adj.getOrElseUpdate(d, mutable.ArrayBuffer.empty) += s
     }
@@ -128,7 +127,7 @@ class MaximalIndependentSet(g: GraphFrame) extends LocalTail {
       round += 1
     }
     // the vertex rows of the winners, with every vertex column
-    LocalTail.joinBack(g, mis.map(Row(_, true)), Seq(LocalTail.Out("_mis", BooleanType, lit(false))))(
-      Some(ids)).filter(col("_mis")).drop("_mis")
+    lg.joinBack(mis.map(Row(_, true)), Seq(LocalTail.Out("_mis", BooleanType, lit(false))))
+      .filter(col("_mis")).drop("_mis")
   }
 }

@@ -79,7 +79,7 @@ class MaximalMatching(g: GraphFrame) extends LocalTail {
       .select(least(col(SRC), col(DST)).as("ea"),
         greatest(col(SRC), col(DST)).as("eb"), (wExpr + lit(0.0)).as("_w"))
       .groupBy("ea", "eb").agg(max(col("_w")).as("_w"))
-    gate(und, pinForDistributed = true)(runLocal)(runDistributed)
+    gate(g, und, pinForDistributed = true)(runLocal)(runDistributed)
   }
 
   private def runDistributed(und: DataFrame): DataFrame = IterationManager.scoped(g.spark) { mgr =>
@@ -128,9 +128,9 @@ class MaximalMatching(g: GraphFrame) extends LocalTail {
    * order the same way Spark's string min orders them and the composite
    * (-weight, md5) mirrors the distributed struct min, so the tail, the
    * distributed rounds and the SQL oracle agree exactly. */
-  private def runLocal(und: DataFrame): DataFrame = {
+  private def runLocal(lg: LocalGraph): DataFrame = {
     import scala.collection.mutable
-    val edges = und.collect().iterator
+    val edges = lg.rows.iterator
       .filter(r => !r.isNullAt(0) && !r.isNullAt(1))
       .map(r => (r.get(0), r.get(1), r.getDouble(2))).toArray
       .sortBy { case (a, b, _) => (String.valueOf(a), String.valueOf(b)) }

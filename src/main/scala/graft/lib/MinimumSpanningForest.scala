@@ -54,7 +54,8 @@ class MinimumSpanningForest(g: GraphFrame) extends LocalTail {
       .groupBy("a", "b").agg(min("w").as("w"))
     // least/greatest widen mixed src/dst types: order by the probe's type
     val idType = e.schema("a").dataType
-    gateOrdered(e, idType, pinForDistributed = true)(runLocal)(runDistributed(_, idType))
+    gateOrdered(g, e, idType, pinForDistributed = true)(runLocal(_, _, idType))(
+      runDistributed(_, idType))
   }
 
   // checkpointInterval 1: comp appears TWICE in every round's candidate
@@ -143,8 +144,8 @@ class MinimumSpanningForest(g: GraphFrame) extends LocalTail {
   /** Driver-side Kruskal tail: same `(w, a, b)` key order via the
    * Spark-faithful id ordering, plain union-find connectivity. Produces
    * the identical unique MSF by the uniqueness theorem, not by replay. */
-  private def runLocal(e: DataFrame, ord: Ordering[Any]): DataFrame = {
-    val rows = e.collect().map(r => (r.get(0), r.get(1), r.getDouble(2)))
+  private def runLocal(lg: LocalGraph, ord: Ordering[Any], idType: DataType): DataFrame = {
+    val rows = lg.rows.map(r => (r.get(0), r.get(1), r.getDouble(2)))
       .sortWith { case ((a1, b1, w1), (a2, b2, w2)) =>
         if (w1 != w2) w1 < w2
         else if (ord.compare(a1, a2) != 0) ord.lt(a1, a2)
@@ -152,7 +153,6 @@ class MinimumSpanningForest(g: GraphFrame) extends LocalTail {
       }
     val uf = new UnionFind(ord)
     val kept = rows.filter { case (a, b, _) => uf.union(a, b) }
-    val idType = e.schema("a").dataType
     val schema = StructType(Seq(StructField(SRC, idType), StructField(DST, idType),
       StructField("weight", DoubleType)))
     val list: java.util.List[Row] = java.util.Arrays.asList(

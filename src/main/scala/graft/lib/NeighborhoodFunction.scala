@@ -3,7 +3,7 @@ package graft.lib
 import scala.collection.mutable.ArrayBuffer
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.BinaryType
+import org.apache.spark.sql.types.{BinaryType, StructType}
 import graft.GraphFrame
 
 /**
@@ -69,28 +69,25 @@ class NeighborhoodFunction(g: GraphFrame) extends LocalTail {
     val ball0 = g.vertices.select(col(ID))
       .groupBy(col(ID))
       .agg(expr(s"theta_sketch_agg($ID, $lg)").as("_nf_sk"))
-    val probe = g.edges.select(col(SRC), col(DST))
     // the type the distributed joins and unions compare ids in
     val keyType = g.vertices.select(col(ID))
-      .union(probe.select(col(SRC).as(ID))).union(probe.select(col(DST).as(ID)))
+      .union(g.edges.select(col(SRC).as(ID))).union(g.edges.select(col(DST).as(ID)))
       .schema(ID).dataType
     val bound = math.min(1L << lg, 4096L)
-    // the gate's collect fills `edges`; `fits` then reads the vertex ids
-    var edges = Array.empty[(Any, Any)]
-    var ids = Option.empty[Array[Any]]
-    // isolated vertices count 1 each in N(d), so the endpoints are the ids
-    // only on the `fromEdges` endpoint set
-    def fits: Boolean = {
-      ids = LocalTail.vertexIdsUpTo(g, keyType, bound, g.verticesAreEndpoints)(
-        edges.flatMap { case (s, d) => Seq(s, d) }.distinct)
-      ids.isDefined
-    }
-    // byte arrays compare by reference on the driver
-    gateCollect(probe, eligible = keyType != BinaryType, andIf = fits) { p =>
-      edges = p.select(col(SRC).cast(keyType), col(DST).cast(keyType)).collect()
-        .map(r => (r.get(0), r.get(1)))
-      edges
-    }(_ => runLocal(edges, ids.get))(_ => runDistributed(ball0))
+    // the vertex ids in the key type, cast as Spark casts them (a local
+    // relation: no Spark job)
+    def keys(ids: Array[Any]): Array[Any] =
+      if (g.vertices.schema(ID).dataType == keyType) ids
+      else g.spark.createDataFrame(java.util.Arrays.asList(ids.map(Row(_)): _*),
+          StructType(Seq(g.vertices.schema(ID)))).select(col(ID).cast(keyType))
+        .collect().map(_.get(0))
+    // isolated vertices count 1 each in N(d), so every vertex row's id must
+    // fit the bound; byte arrays compare by reference on the driver
+    gate(g, g.edges.select(col(SRC).cast(keyType).as(SRC), col(DST).cast(keyType).as(DST)),
+        eligible = keyType != BinaryType, edgeRows = true,
+        andIf = _.vertexIds(bound).isDefined) { local =>
+      runLocal(local.rows.map(r => (r.get(0), r.get(1))), keys(local.vertexIds(bound).get))
+    }(_ => runDistributed(ball0))
   }
 
   /** The `(d, n_pairs)` table: N(d) = `observe(d)` for d = 0, 1, ...

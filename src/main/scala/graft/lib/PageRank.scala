@@ -2,7 +2,7 @@ package graft.lib
 
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{DoubleType, StructField}
+import org.apache.spark.sql.types.{DoubleType, StructField, StructType}
 import graft.GraphFrame
 
 /**
@@ -67,7 +67,7 @@ class PageRank(g: GraphFrame) extends LocalTail {
     }
     // maxIter 0 reports the init ranks via the Pregel path's zero-round
     // contract — the tail assumes at least one round
-    gate(eNarrow, eligible = tolV.isDefined || maxIterV >= 1)(runLocal)(
+    gate(g, eNarrow, eligible = tolV.isDefined || maxIterV >= 1, edgeRows = true)(runLocal)(
       _ => runDistributed())
   }
 
@@ -149,19 +149,17 @@ class PageRank(g: GraphFrame) extends LocalTail {
    * graph value; vertices touching no edge get their closed-form rank
    * from the join-back fill (uniform: resetProb after round 1;
    * personalized: 0, the source itself always rides the local loop). */
-  private def runLocal(e: DataFrame): GraphFrame = {
+  private def runLocal(lg: LocalGraph): GraphFrame = {
     import scala.collection.mutable
     // (src, dst, w) triples; null src never joins rank state and null dst
     // receives nothing, but a null-dst edge still counts toward its
     // source's out-mass (matching the distributed outDeg groupBy)
-    val raw = e.collect()
-    val rows = raw.iterator
+    val rows = lg.rows.iterator
       .filter(r => !r.isNullAt(0))
       .map(r => (r.get(0), if (r.isNullAt(1)) null else r.get(1), r.getDouble(2)))
       .toArray
       .sortBy { case (s, d, _) => (String.valueOf(s), String.valueOf(d)) }
-    val eps = LocalTail.endpointIds(e, g, raw)
-    val validArr = eps.vids
+    val validArr = lg.vids
     val valid = validArr.toSet
     // resolve the personalized source with SQL equality (numeric
     // coercion!) so the local identity test uses the STORED value; an
@@ -219,18 +217,22 @@ class PageRank(g: GraphFrame) extends LocalTail {
     }
 
     val fill = if (personalized) 0.0 else alpha
-    val ranks = LocalTail.joinBack(g, ids.map(v => Row(v, rank(v))),
-      Seq(LocalTail.score("pagerank", fill)))(vertexIdsFor(g, Some(eps)))
+    val ranks = lg.joinBack(ids.map(v => Row(v, rank(v))), Seq(LocalTail.score("pagerank", fill)))
     // unweighted (src, dst) edges: the probe rows are the whole edge table,
     // and weight = 1/outdeg(src) from the out-weights above; a null src
-    // gets a null weight, as weightedEdges' left-outer join gives it
+    // gets a null weight, as weightedEdges' left-outer join gives it.
+    // Other edge tables join a broadcast (id, outDegree) relation of those
+    // out-weights, which holds every non-null src
+    def local(rs: Seq[Row], schema: StructType) =
+      g.spark.createDataFrame(java.util.Arrays.asList(rs: _*), schema)
     val weighted =
-      if (weightColV.isEmpty && g.edges.columns.sameElements(Array(SRC, DST))) {
-        val rs = raw.map(r => Row(r.get(0), r.get(1),
-          if (r.isNullAt(0)) null else 1.0 / outW(r.get(0))))
-        g.spark.createDataFrame(java.util.Arrays.asList(rs.toSeq: _*),
+      if (weightColV.isEmpty && g.edges.columns.sameElements(Array(SRC, DST)))
+        local(lg.rows.toSeq.map(r => Row(r.get(0), r.get(1),
+            if (r.isNullAt(0)) null else 1.0 / outW(r.get(0)))),
           g.edges.schema.add(StructField(GraphFrame.WEIGHT, DoubleType, nullable = true)))
-      } else weightedEdges(outDegrees)
+      else weightedEdges(broadcast(local(outW.toSeq.map { case (v, w) => Row(v, w) },
+        StructType(Seq(g.edges.schema(SRC).copy(name = ID),
+          StructField("outDegree", DoubleType))))))
     GraphFrame(ranks, weighted)
   }
 }

@@ -39,8 +39,8 @@ class ParallelPersonalizedPageRank(g: GraphFrame) extends LocalTail {
     // and a non-empty sourceIds before running)
     require(maxIterV.nonEmpty, "parallelPersonalizedPageRank: maxIter required")
     require(sourcesV.nonEmpty, "parallelPersonalizedPageRank: sourceIds required")
-    gate(g.edges.select(col(GraphFrame.SRC), col(GraphFrame.DST)),
-      eligible = maxIterV.get >= 1)(runLocal)(_ => runDistributed())
+    gate(g, g.edges.select(col(GraphFrame.SRC), col(GraphFrame.DST)),
+      eligible = maxIterV.get >= 1, edgeRows = true)(runLocal)(_ => runDistributed())
   }
 
   private def runDistributed(): GraphFrame = {
@@ -81,18 +81,16 @@ class ParallelPersonalizedPageRank(g: GraphFrame) extends LocalTail {
   /** Driver-side tail: identical per-lane recurrence, sorted-edge
    * accumulation. Vertices touching no edge and matching no source get
    * the closed-form all-zero lane vector from the join-back fill. */
-  private def runLocal(e: DataFrame): GraphFrame = {
+  private def runLocal(lg: LocalGraph): GraphFrame = {
     import scala.collection.mutable
     import org.apache.spark.sql.{Row, types => T}
     val k = sourcesV.size
-    val raw = e.collect()
-    val rows = raw.iterator
+    val rows = lg.rows.iterator
       .filter(r => !r.isNullAt(0))
       .map(r => (r.get(0), if (r.isNullAt(1)) null else r.get(1)))
       .toArray
       .sortBy { case (s, d) => (String.valueOf(s), String.valueOf(d)) }
-    val eps = LocalTail.endpointIds(e, g, raw)
-    val validArr = eps.vids
+    val validArr = lg.vids
     val valid = validArr.toSet
     // one SQL job resolves every vertex's lane membership with the exact
     // `id === lit(source)` coercion of the distributed init
@@ -133,9 +131,9 @@ class ParallelPersonalizedPageRank(g: GraphFrame) extends LocalTail {
       }
     }
 
-    val ranks = LocalTail.joinBack(g, ids.map(v => Row(v, rank(v).toSeq)),
+    val ranks = lg.joinBack(ids.map(v => Row(v, rank(v).toSeq)),
       Seq(LocalTail.Out("pageranks", T.ArrayType(T.DoubleType, containsNull = true),
-        array(Seq.fill(k)(lit(0.0)): _*))))(vertexIdsFor(g, Some(eps)))
+        array(Seq.fill(k)(lit(0.0)): _*))))
 
     val outDegDF = g.outDegrees
     val weights = g.edges

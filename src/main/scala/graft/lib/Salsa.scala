@@ -56,7 +56,7 @@ class Salsa(g: GraphFrame) extends LocalTail {
     val e = e0.join(od, SRC).join(idg, DST)
       .select(col(SRC), col(DST),
         (lit(1.0) / col("_od")).as("_wout"), (lit(1.0) / col("_id")).as("_win"))
-    gate(e, pinForDistributed = true)(runLocal)(runDistributed)
+    gate(g, e, pinForDistributed = true)(runLocal)(runDistributed)
   }
 
   private def runDistributed(e: DataFrame): DataFrame = {
@@ -91,13 +91,12 @@ class Salsa(g: GraphFrame) extends LocalTail {
 
   /** Driver tail: identical recurrence and weight products, sorted-edge
    * accumulation order — a pure function of the graph value. */
-  private def runLocal(e: DataFrame): DataFrame = {
+  private def runLocal(lg: LocalGraph): DataFrame = {
     import scala.collection.mutable
-    val raw = e.collect()
-    val rows = raw.iterator
+    val rows = lg.rows.iterator
       .map(r => (r.get(0), r.get(1), r.getDouble(2), r.getDouble(3))).toArray
       .sortBy { case (s, d, _, _) => (String.valueOf(s), String.valueOf(d)) }
-    val vids = LocalTail.endpointIds(e, g, raw).vids
+    val vids = lg.vids
     var hub = mutable.HashMap.empty[Any, Double]
     var auth = mutable.HashMap.empty[Any, Double]
     vids.foreach { v => hub(v) = 1.0; auth(v) = 0.0 }
@@ -112,8 +111,8 @@ class Salsa(g: GraphFrame) extends LocalTail {
     }
     val sh = vids.iterator.map(hub).sum
     val sa = vids.iterator.map(auth).sum
-    LocalTail.joinBack(g, vids.map(v => Row(v, if (sh > 0) hub(v) / sh else 0.0,
+    lg.joinBack(vids.map(v => Row(v, if (sh > 0) hub(v) / sh else 0.0,
         if (sa > 0) auth(v) / sa else 0.0)),
-      Seq(LocalTail.score("hub", 0.0), LocalTail.score("authority", 0.0)))(vertexIdsFor(g))
+      Seq(LocalTail.score("hub", 0.0), LocalTail.score("authority", 0.0)))
   }
 }

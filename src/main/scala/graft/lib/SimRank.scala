@@ -64,20 +64,19 @@ class SimRank(g: GraphFrame) extends LocalTail {
    * 1, is omitted). Besides the edge threshold, the driver tail requires
    * ≤ 2000 vertices so the local pair map stays bounded. */
   def run(): DataFrame = {
-    val e = g.edges.select(col(SRC), col(DST))
+    gateOrdered(g, g.edges.select(col(SRC), col(DST)), g.vertices.schema(ID).dataType,
+      edgeRows = true, andIf = _.vertexIds(tailVertexBound).isDefined)(runLocal)(
+      _ => runDistributed())
+  }
+
+  private def runDistributed(): DataFrame =
+      IterationManager.scoped(g.spark, checkpointInterval = 1) { mgr =>
+    // the simple edges between vertices, pinned: every round re-reads them
+    val e = mgr.persistLazy(g.edges.select(col(SRC), col(DST))
       .filter(col(SRC).isNotNull && col(DST).isNotNull)
       .distinct()
       .join(g.vertices.select(col(ID).as(SRC)), Seq(SRC), "left_semi")
-      .join(g.vertices.select(col(ID).as(DST)), Seq(DST), "left_semi")
-      // USING-joins move the key column first — restore (src, dst) order
-      // because the tail's collectGraph reads edge tuples positionally
-      .select(col(SRC), col(DST))
-    gateOrdered(e, g.vertices.schema(ID).dataType, pinForDistributed = true,
-      andIf = g.vertices.count() <= tailVertexBound)(runLocal)(runDistributed)
-  }
-
-  private def runDistributed(e: DataFrame): DataFrame =
-      IterationManager.scoped(g.spark, checkpointInterval = 1) { mgr =>
+      .join(g.vertices.select(col(ID).as(DST)), Seq(DST), "left_semi"))
     val ind = mgr.persistLazy(e.groupBy(col(DST).as("_v")).agg(count(lit(1)).as("_d")))
     val vv = g.vertices.select(col(ID))
     var state = mgr.cycle(
@@ -112,12 +111,12 @@ class SimRank(g: GraphFrame) extends LocalTail {
    * (pair, out-edge) order — a pure function of the graph value. The
    * canonical pair member is chosen by [[UnionFind.sparkOrdering]], the
    * same total order the distributed `na < nb` comparison uses. */
-  private def runLocal(e: DataFrame, ord: Ordering[Any]): DataFrame = {
+  private def runLocal(lg: LocalGraph, ord: Ordering[Any]): DataFrame = {
     import scala.collection.mutable
-    val (edges, eps) = LocalTail.collectGraph(e, g)
-    val vids = eps.vids
+    val vids = lg.vids
     val valid = vids.toSet
-    val kept = edges.filter { case (s, d) => valid(s) && valid(d) }
+    // the simple edges between vertices: the distributed distinct and semi-joins
+    val kept = lg.edges.filter { case (s, d) => valid(s) && valid(d) }.distinct
     val out = mutable.HashMap.empty[Any, mutable.ArrayBuffer[Any]]
     val indeg = mutable.HashMap.empty[Any, Long].withDefaultValue(0L)
     kept.foreach { case (s, d) =>

@@ -44,7 +44,7 @@ class StronglyConnectedComponents(g: GraphFrame) extends LocalTail {
       .select(col(LONG_SRC).as("src"), col(LONG_DST).as("dst"))
       .filter(col("src") =!= col("dst"))
       .distinct()
-    gate(e0)(runLocal(iv, _))(runDistributed(iv, _))
+    gate(g, e0)(runLocal(iv, _))(runDistributed(iv, _))
   }
 
   private def runDistributed(iv: DataFrame, e0: DataFrame): DataFrame =
@@ -190,9 +190,9 @@ class StronglyConnectedComponents(g: GraphFrame) extends LocalTail {
    * the loop never assigns — trimmed singletons, isolates beyond the
    * peel, anything past the outer cap — are labeled with their own vid
    * by the same coalesce the distributed path uses. */
-  private def runLocal(iv: DataFrame, e: DataFrame): DataFrame = {
+  private def runLocal(iv: DataFrame, lg: LocalGraph): DataFrame = {
     import scala.collection.mutable
-    val edges0 = e.collect().map(r => (r.getLong(0), r.getLong(1)))
+    val edges0 = lg.rows.map(r => (r.getLong(0), r.getLong(1)))
       .sortBy(identity)
     val endpoints = edges0.iterator.flatMap(p => Iterator(p._1, p._2))
       .toArray.distinct.sorted

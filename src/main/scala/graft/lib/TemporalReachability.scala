@@ -65,7 +65,7 @@ class TemporalReachability(g: GraphFrame) extends LocalTail {
         col(timeColV).cast("double").as("_t"),
         (col(timeColV).cast("double") + dur).as("_arr"))
       .filter(col("_t").isNotNull)
-    gate(e, pinForDistributed = true)(runLocal)(runDistributed)
+    gate(g, e, pinForDistributed = true)(runLocal)(runDistributed)
   }
 
   private def runDistributed(e: DataFrame): DataFrame =
@@ -107,8 +107,8 @@ class TemporalReachability(g: GraphFrame) extends LocalTail {
    * round. A single in-place sweep can propagate many hops depending on
    * edge order, which would diverge from the distributed path whenever
    * `maxIter` binds before the fixpoint. */
-  private def runLocal(e: DataFrame): DataFrame = {
-    val rows = e.collect().map(r => (r.get(0), r.get(1), r.getDouble(3), r.getDouble(2)))
+  private def runLocal(lg: LocalGraph): DataFrame = {
+    val rows = lg.rows.map(r => (r.get(0), r.get(1), r.getDouble(3), r.getDouble(2)))
     var arrival = scala.collection.mutable.HashMap[Any, Double](sourceV -> startTimeV)
     var changed = true
     var rounds = 0
@@ -126,7 +126,7 @@ class TemporalReachability(g: GraphFrame) extends LocalTail {
       }
       arrival = next
     }
-    LocalTail.joinBack(g, arrival.map { case (v, a) => Row(v, a) },
-      Seq(LocalTail.Out("arrival", DoubleType, lit(null))))(vertexIdsFor(g)).select(ID, "arrival")
+    lg.joinBack(arrival.map { case (v, a) => Row(v, a) },
+      Seq(LocalTail.Out("arrival", DoubleType, lit(null)))).select(ID, "arrival")
   }
 }

@@ -106,7 +106,7 @@ class TwoConnectivity(g: GraphFrame) extends LocalTail {
 
   /** Iterative Tarjan (explicit stack — recursion would blow on long
    * chains): disc/low over the DFS forest of the canonical undirected
-   * pairs of the collected raw edges ([[LocalTail.undirectedPairs]]),
+   * pairs of the collected raw edges ([[LocalGraph.undirected]]),
    * rooted at vertex-table ids only (as the BFS forest is rooted at
    * vertices); bridge (p,c) iff low(c) > disc(p); articulation = root with
    * ≥2 DFS children or non-root with a child where low(c) ≥ disc(v); 2ECC =
@@ -114,17 +114,14 @@ class TwoConnectivity(g: GraphFrame) extends LocalTail {
    * total order `ord`. Vertices touching no edge get their closed form
    * (not an articulation point, their own 2ECC) from the join-back fill.
    * Bounded by the edge-count threshold. */
-  private def runLocal(e: DataFrame, ord: Ordering[Any],
+  private def runLocal(lg: LocalGraph, ord: Ordering[Any],
       modes: Set[Mode.Value]): Map[Mode.Value, DataFrame] = {
     import scala.collection.mutable
     val idType = g.vertices.schema(ID).dataType
-    val rows = e.collect()
-    val edges = LocalTail.undirectedPairs(rows, ord)
-    val eps = LocalTail.endpointIds(e, g, rows)
+    val edges = lg.undirected(ord)
     // every vertex row's id (no job on a fromEdges graph, else one bounded
     // collect); above t vertex rows, the vertex-table endpoints
-    val allIds = vertexIdsFor(g, Some(eps))
-    val roots = allIds.getOrElse(eps.vids)
+    val roots = lg.vertexIds().getOrElse(lg.vids)
     val adj = mutable.HashMap.empty[Any, mutable.ArrayBuffer[Any]]
     edges.foreach { case (a, b) =>
       adj.getOrElseUpdate(a, mutable.ArrayBuffer.empty) += b
@@ -170,7 +167,7 @@ class TwoConnectivity(g: GraphFrame) extends LocalTail {
     }
     def isBridge(a: Any, b: Any): Boolean = bridgeSet.contains((a, b)) || bridgeSet.contains((b, a))
     def perVertex(out: LocalTail.Out)(value: Any => Any): DataFrame =
-      LocalTail.joinBack(g, roots.map(v => Row(v, value(v))), Seq(out), idOnly = true)(allIds)
+      lg.joinBack(roots.map(v => Row(v, value(v))), Seq(out), idOnly = true)
     modes.iterator.map {
       case Mode.Bridges =>
         def idf(name: String) = StructField(name, idType, nullable = true)

@@ -54,7 +54,7 @@ class JobBudgetSpec extends TestBase with SparkEvents {
     // relation, whose consumption runs no Spark job
     ("articulationPoints fromEdges", 2, () =>
       Seq(GraphFrame.fromEdges(friends.edges).twoConnectivity.articulationPoints())),
-    ("pageRank fromEdges", 5, () => {
+    ("pageRank fromEdges", 4, () => {
       val pr = GraphFrame.fromEdges(friends.edges).pageRank.maxIter(10).run()
       Seq(pr.vertices, pr.edges)
     }),
@@ -63,6 +63,13 @@ class JobBudgetSpec extends TestBase with SparkEvents {
       val pr = GraphFrame.fromEdges(friends.edges.select("src", "dst")).pageRank.maxIter(10).run()
       Seq(pr.vertices, pr.edges)
     }),
+    // the vertex bound and the canonical undirected edges come from the
+    // collected raw edges (8, 4 and 5 jobs before they did)
+    ("simRank fromEdges", 2, () => Seq(GraphFrame.fromEdges(friends.edges).simRank.run())),
+    ("maximalIndependentSet fromEdges", 2, () =>
+      Seq(GraphFrame.fromEdges(friends.edges).maximalIndependentSet.setHashMode("md5").run())),
+    ("greedyColoring fromEdges", 2, () =>
+      Seq(GraphFrame.fromEdges(friends.edges).greedyColoring.setHashMode("md5").run())),
     ("labelPropagation fromEdges", 2, () =>
       Seq(GraphFrame.fromEdges(friends.edges).labelPropagation.maxIter(5).run())),
     ("kCore fromEdges", 2, () => Seq(GraphFrame.fromEdges(friends.edges).kCore.run())),

@@ -106,11 +106,11 @@ class TailParitySpec extends TestBase with TailCases with SparkEvents {
     assert(mismatched.isEmpty, s"tail != distributed: ${mismatched.map(_.name)}")
   }
 
-  // Louvain and 2-connectivity probe the raw (src, dst) rows and build the
-  // canonical undirected edge set on the driver: self-loops, reciprocal and
-  // parallel pairs, null endpoints and (Louvain) endpoints outside the
-  // vertex table must drop exactly as the distributed filter, least/greatest,
-  // distinct and semi-joins drop them.
+  // Louvain, 2-connectivity, MIS and greedy coloring probe the raw
+  // (src, dst) rows and build the canonical undirected edge set on the
+  // driver: self-loops, reciprocal and parallel pairs, null endpoints and
+  // (Louvain) endpoints outside the vertex table must drop exactly as the
+  // distributed filter, least/greatest, distinct and semi-joins drop them.
   private val undirectedRuns: Seq[(String, (GraphFrame, Long) => DataFrame)] = Seq(
     "louvain" -> ((g, t) => g.louvain.setSmallGraphThreshold(t).run()),
     "louvain levels 2" -> ((g, t) => g.louvain.setLevels(2).setSmallGraphThreshold(t).run()),
@@ -118,18 +118,30 @@ class TailParitySpec extends TestBase with TailCases with SparkEvents {
     "articulationPoints" ->
       ((g, t) => g.twoConnectivity.setSmallGraphThreshold(t).articulationPoints()),
     "twoEdgeComponents" ->
-      ((g, t) => g.twoConnectivity.setSmallGraphThreshold(t).twoEdgeComponents()))
+      ((g, t) => g.twoConnectivity.setSmallGraphThreshold(t).twoEdgeComponents()),
+    "maximalIndependentSet" ->
+      ((g, t) => g.maximalIndependentSet.setHashMode("md5").setSmallGraphThreshold(t).run()),
+    "greedyColoring" ->
+      ((g, t) => g.greedyColoring.setHashMode("md5").setSmallGraphThreshold(t).run()))
+  private val undirectedBuilders =
+    Set("Louvain", "TwoConnectivity", "MaximalIndependentSet", "GreedyColoring")
+  // The Luby tails need every vertex id, so above t vertex rows they go
+  // distributed. Their distributed rounds never retire a null vertex id
+  // (the anti-joins do not match it), so they skip the fromEdges graph,
+  // whose null endpoint is a vertex.
+  private val luby = Set("maximalIndependentSet", "greedyColoring")
 
   /** Each run's tail (threshold t) against threshold 0 on `g`, and
-   * whether its own gate took the tail (an ineligible gate posts no
-   * decision; 2-connectivity's distributed body runs CC's gate). */
-  private def undirectedMismatches(g: GraphFrame, tail: Boolean,
-      t: Long = 100000L): Seq[String] =
-    undirectedRuns.flatMap { case (name, run) =>
+   * whether its own gate took the tail (`tail(name)`: Some(taken), None
+   * for an ineligible gate, which posts no decision; 2-connectivity's
+   * distributed body runs CC's gate). */
+  private def undirectedMismatches(g: GraphFrame, tail: String => Option[Boolean],
+      t: Long = 100000L, skip: Set[String] = Set.empty): Seq[String] =
+    undirectedRuns.filterNot(r => skip(r._1)).flatMap { case (name, run) =>
       val o = observed(canon(run(g, t)))
-      val own = o.decisions.filter(d => d.builder == "Louvain" || d.builder == "TwoConnectivity")
-      if (own.map(_.tail) != (if (tail) Seq(true) else Nil))
-        Some(s"$name: decisions ${o.decisions}, expected tail = $tail")
+      val own = o.decisions.filter(d => undirectedBuilders(d.builder))
+      if (own.map(_.tail) != tail(name).toSeq)
+        Some(s"$name: decisions ${o.decisions}, expected tail = ${tail(name)}")
       else if (o.result != canon(run(g, 0L))) Some(s"$name: tail != distributed")
       else None
     }
@@ -142,9 +154,12 @@ class TailParitySpec extends TestBase with TailCases with SparkEvents {
     // more vertex rows than t = the 14 edge rows: 2-connectivity's tail
     // then roots at the vertex-table endpoints and joins its readouts back
     val isolated = v.union((1 to 20).map(i => s"i$i").toDF("id"))
-    val failures = (Seq("joined" -> GraphFrame(v, e), "fromEdges" -> GraphFrame.fromEdges(e))
-      .flatMap { case (name, g) => undirectedMismatches(g, tail = true).map(m => s"$name $m") }) ++
-      undirectedMismatches(GraphFrame(isolated, e), tail = true, t = 14L).map(m => s"isolated $m")
+    val failures =
+      undirectedMismatches(GraphFrame(v, e), tail = _ => Some(true)).map(m => s"joined $m") ++
+      undirectedMismatches(GraphFrame.fromEdges(e), tail = _ => Some(true), skip = luby)
+        .map(m => s"fromEdges $m") ++
+      undirectedMismatches(GraphFrame(isolated, e), tail = n => Some(!luby(n)), t = 14L)
+        .map(m => s"isolated $m")
     assert(failures.isEmpty, failures.mkString("; "))
   }
 
@@ -156,7 +171,9 @@ class TailParitySpec extends TestBase with TailCases with SparkEvents {
     val e = Seq((-0.0, 0.0), (nan, nan), (-0.0, 1.0), (0.0, 1.0), (1.0, 2.0), (2.0, 0.0),
       (2.0, 3.0)).toDF("src", "dst")
     val failures = Seq("joined" -> GraphFrame(v, e), "fromEdges" -> GraphFrame.fromEdges(e))
-      .flatMap { case (name, g) => undirectedMismatches(g, tail = false).map(m => s"$name $m") }
+      .flatMap { case (name, g) =>
+        undirectedMismatches(g, tail = _ => None).map(m => s"$name $m")
+      }
     assert(failures.isEmpty, failures.mkString("; "))
   }
 
@@ -181,6 +198,33 @@ class TailParitySpec extends TestBase with TailCases with SparkEvents {
         else None
       }
       check(n, tail = true) ++ check(n - 1, tail = false)
+    }
+    assert(failures.isEmpty, failures.mkString("; "))
+  }
+
+  // A tail that needs every vertex id reads at most t of them. With more
+  // vertex rows than t = the edge row count, the tails of MIS, greedy
+  // coloring and the path centralities go distributed, and every tail
+  // still gives its distributed result.
+  test("every driver tail with more vertex rows than its threshold == distributed") {
+    val v = friends.vertices.unionByName(
+      (1 to 5).map(i => (s"i$i", s"Isolated $i", i)).toDF("id", "name", "age"))
+    // the builders whose tails need every vertex id, by case-name prefix
+    val needAllIds = Map("maximalIndependentSet" -> "MaximalIndependentSet",
+      "greedyColoring" -> "GreedyColoring", "betweenness" -> "Betweenness",
+      "closeness" -> "Closeness", "eccentricity" -> "Eccentricity")
+    val failures = tailCases.flatMap { c =>
+      val e = tailEdges(c.edgeCols)
+      val g = GraphFrame(v, e)
+      val t = e.count()
+      assert(v.count() > t)
+      val o = observed(canon(c.run(g, t)))
+      val builder = needAllIds.collectFirst { case (p, b) if c.name.startsWith(p) => b }
+      val own = o.decisions.filter(d => builder.contains(d.builder))
+      if (builder.isDefined && own.map(d => (d.tail, d.rowsRead <= t)) != Seq((false, true)))
+        Some(s"${c.name} at $t: decisions ${o.decisions}, expected one distributed decision")
+      else if (o.result != canon(c.run(g, 0L))) Some(s"${c.name} at $t: tail != distributed")
+      else None
     }
     assert(failures.isEmpty, failures.mkString("; "))
   }
