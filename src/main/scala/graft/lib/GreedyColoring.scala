@@ -29,7 +29,8 @@ import graft.GraphFrame
  * bounded driver loop, same tail pattern as [[Hits]]/[[Betweenness]]
  * (docs/THRESHOLDS.md).
  *
- * Returns vertices + `color: int` (isolated vertices take color 0).
+ * Returns vertices + `color: int` (isolated vertices take color 0, a null
+ * id none).
  */
 class GreedyColoring(g: GraphFrame) extends LocalTail {
   import GraphFrame.{ID, SRC, DST}
@@ -77,7 +78,9 @@ class GreedyColoring(g: GraphFrame) extends LocalTail {
       val (c, Seq(n)) = mgr.keepObserved(df, Seq(count(lit(1))))
       (c, n.asInstanceOf[Long])
     }
-    var (uncolored, left) = keep(g.vertices.select(ID))
+    // a null id joins no edge and no anti-join retires it: it stays
+    // uncolored (null color) without entering a pool
+    var (uncolored, left) = keep(g.vertices.select(ID).filter(col(ID).isNotNull))
     val colorFrames = mutable.ArrayBuffer.empty[DataFrame]
 
     // hash-only priority, deliberately WITHOUT an id tie-break: a winner
@@ -163,6 +166,7 @@ class GreedyColoring(g: GraphFrame) extends LocalTail {
       color += 1
     }
     for (v <- uncolored) colorOf(v) = -1
-    lg.joinBack(ids.map(v => Row(v, colorOf(v))), Seq(LocalTail.Out("color", IntegerType, lit(0))))
+    lg.joinBack(ids.map(v => Row(v, colorOf(v))),
+      Seq(LocalTail.Out("color", IntegerType, lit(null))))
   }
 }

@@ -52,7 +52,9 @@ class MaximalIndependentSet(g: GraphFrame) extends LocalTail {
       val (c, Seq(n)) = mgr.cycleObserved(df, round, Seq(count(lit(1))))
       (c, n.asInstanceOf[Long])
     }
-    var (remaining, left) = cut(g.vertices.select(ID), 0)
+    // a null id joins no edge and no anti-join retires it: it never
+    // enters the pool (the final semi-join drops it anyway)
+    var (remaining, left) = cut(g.vertices.select(ID).filter(col(ID).isNotNull), 0)
     val undP = mgr.persistOnly(g.edges
       .filter(col(SRC) =!= col(DST))
       .select(least(col(SRC), col(DST)).as(SRC), greatest(col(SRC), col(DST)).as(DST))

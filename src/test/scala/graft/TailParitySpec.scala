@@ -126,9 +126,7 @@ class TailParitySpec extends TestBase with TailCases with SparkEvents {
   private val undirectedBuilders =
     Set("Louvain", "TwoConnectivity", "MaximalIndependentSet", "GreedyColoring")
   // The Luby tails need every vertex id, so above t vertex rows they go
-  // distributed. Their distributed rounds never retire a null vertex id
-  // (the anti-joins do not match it), so they skip the fromEdges graph,
-  // whose null endpoint is a vertex.
+  // distributed.
   private val luby = Set("maximalIndependentSet", "greedyColoring")
 
   /** Each run's tail (threshold t) against threshold 0 on `g`, and
@@ -136,8 +134,8 @@ class TailParitySpec extends TestBase with TailCases with SparkEvents {
    * for an ineligible gate, which posts no decision; 2-connectivity's
    * distributed body runs CC's gate). */
   private def undirectedMismatches(g: GraphFrame, tail: String => Option[Boolean],
-      t: Long = 100000L, skip: Set[String] = Set.empty): Seq[String] =
-    undirectedRuns.filterNot(r => skip(r._1)).flatMap { case (name, run) =>
+      t: Long = 100000L): Seq[String] =
+    undirectedRuns.flatMap { case (name, run) =>
       val o = observed(canon(run(g, t)))
       val own = o.decisions.filter(d => undirectedBuilders(d.builder))
       if (own.map(_.tail) != tail(name).toSeq)
@@ -156,7 +154,7 @@ class TailParitySpec extends TestBase with TailCases with SparkEvents {
     val isolated = v.union((1 to 20).map(i => s"i$i").toDF("id"))
     val failures =
       undirectedMismatches(GraphFrame(v, e), tail = _ => Some(true)).map(m => s"joined $m") ++
-      undirectedMismatches(GraphFrame.fromEdges(e), tail = _ => Some(true), skip = luby)
+      undirectedMismatches(GraphFrame.fromEdges(e), tail = _ => Some(true))
         .map(m => s"fromEdges $m") ++
       undirectedMismatches(GraphFrame(isolated, e), tail = n => Some(!luby(n)), t = 14L)
         .map(m => s"isolated $m")
