@@ -137,11 +137,7 @@ class GreedyColoring(g: GraphFrame) extends LocalTail {
    * pure function of the graph value. */
   private def runLocal(lg: LocalGraph, ord: Ordering[Any]): DataFrame = {
     val ids = lg.vertexIds().get
-    val adj = mutable.HashMap.empty[Any, mutable.ArrayBuffer[Any]]
-    for ((s, d) <- lg.undirected(ord)) {
-      adj.getOrElseUpdate(s, mutable.ArrayBuffer.empty) += d
-      adj.getOrElseUpdate(d, mutable.ArrayBuffer.empty) += s
-    }
+    val adj = LocalGraph.neighbors(lg.undirected(ord))
     def h(v: Any, color: Int, round: Int): String =
       java.security.MessageDigest.getInstance("MD5")
         .digest(s"${String.valueOf(v)}|$seedV|$color|$round".getBytes("UTF-8"))

@@ -159,8 +159,7 @@ private[lib] class LocalGraph(g: GraphFrame, t: Long, schema: StructType,
   import GraphFrame.ID
 
   private val idType = g.vertices.schema(ID).dataType
-  private def frame(rs: Array[Row]): DataFrame =
-    g.spark.createDataFrame(java.util.Arrays.asList(rs: _*), schema)
+  private def frame: DataFrame = g.spark.createDataFrame(java.util.Arrays.asList(rows: _*), schema)
   private val Seq(srcCol, dstCol) = schema.take(2).map(f => col(GraphFrame.quoteName(f.name)))
 
   /** `(src, dst)` pairs from the first two columns, null-free and sorted
@@ -207,7 +206,7 @@ private[lib] class LocalGraph(g: GraphFrame, t: Long, schema: StructType,
    * one cast projection of their local relation (no Spark job). */
   protected lazy val endpoints: Array[Any] =
     (if (schema.take(2).forall(_.dataType == idType)) rows.iterator
-      else frame(rows).select(srcCol.cast(idType), dstCol.cast(idType)).collect().iterator)
+      else frame.select(srcCol.cast(idType), dstCol.cast(idType)).collect().iterator)
       .flatMap(r => Iterator(r.get(0), r.get(1))).toArray.distinct
 
   /** The vertex-table ids among the endpoints, sorted by string form. On
@@ -219,7 +218,7 @@ private[lib] class LocalGraph(g: GraphFrame, t: Long, schema: StructType,
     val ids =
       if (g.edgeEndpointsComplete) endpoints.filter(_ != null)
       else {
-        val e = frame(rows)
+        val e = frame
         g.vertices.select(col(ID)).join(broadcast(e.select(srcCol.as(ID))
           .union(e.select(dstCol.as(ID)))), Seq(ID), "left_semi").collect().map(_.get(0))
       }
@@ -283,6 +282,17 @@ private[lib] class LocalGraph(g: GraphFrame, t: Long, schema: StructType,
 }
 
 private[lib] object LocalGraph {
+  /** The neighbor lists of undirected `pairs` ([[LocalGraph.undirected]]):
+   * each pair listed under both ends, in pair order. */
+  def neighbors(pairs: Array[(Any, Any)]): mutable.HashMap[Any, mutable.ArrayBuffer[Any]] = {
+    val adj = mutable.HashMap.empty[Any, mutable.ArrayBuffer[Any]]
+    pairs.foreach { case (a, b) =>
+      adj.getOrElseUpdate(a, mutable.ArrayBuffer.empty) += b
+      adj.getOrElseUpdate(b, mutable.ArrayBuffer.empty) += a
+    }
+    adj
+  }
+
   /** The local graph of a probe collected as typed edges rather than Rows
    * (connected components' Long edges): no rows, and `ends`, the edges'
    * distinct endpoints in the vertex id type, null included, as its

@@ -105,11 +105,7 @@ class MaximalIndependentSet(g: GraphFrame) extends LocalTail {
   private def runLocal(lg: LocalGraph, ord: Ordering[Any]): DataFrame = {
     import scala.collection.mutable
     val ids = lg.vertexIds().get
-    val adj = mutable.HashMap.empty[Any, mutable.ArrayBuffer[Any]]
-    for ((s, d) <- lg.undirected(ord)) {
-      adj.getOrElseUpdate(s, mutable.ArrayBuffer.empty) += d
-      adj.getOrElseUpdate(d, mutable.ArrayBuffer.empty) += s
-    }
+    val adj = LocalGraph.neighbors(lg.undirected(ord))
     def h(v: Any, round: Int): String =
       java.security.MessageDigest.getInstance("MD5")
         .digest(s"${String.valueOf(v)}|$seedV|$round".getBytes("UTF-8"))

@@ -122,11 +122,7 @@ class TwoConnectivity(g: GraphFrame) extends LocalTail {
     // every vertex row's id (no job on a fromEdges graph, else one bounded
     // collect); above t vertex rows, the vertex-table endpoints
     val roots = lg.vertexIds().getOrElse(lg.vids)
-    val adj = mutable.HashMap.empty[Any, mutable.ArrayBuffer[Any]]
-    edges.foreach { case (a, b) =>
-      adj.getOrElseUpdate(a, mutable.ArrayBuffer.empty) += b
-      adj.getOrElseUpdate(b, mutable.ArrayBuffer.empty) += a
-    }
+    val adj = LocalGraph.neighbors(edges)
     val disc = mutable.HashMap.empty[Any, Int]
     val low = mutable.HashMap.empty[Any, Int]
     val parent = mutable.HashMap.empty[Any, Any]
